@@ -6,13 +6,17 @@ a per-language stats table assembled by folding full-outer joins on
 ``lang`` over one count-frame per dataset (J4, :157), an ``en-*`` rollup
 row appended via groupBy().sum() + union (A4+U2, :163-171).
 
-Scale notes: exact ``distinct().count()`` on an unbounded column is a
-full shuffle of that column; ``approx_count_distinct`` (HyperLogLog++,
-map-side combinable) is offered for the 100 TB path. The fold of
-full-outer joins is fine here because each input is already one row per
-language (#langs ~ 125): every join is broadcastable. We keep the fold
-for parity but also provide the idiomatic single-shuffle alternative
-(union + pivot).
+Two equivalent forms of the per-language table exist. The J4 fold
+(:func:`stats_table`) is kept for reference parity and backs the
+registry's fold row; the transform pipeline prints the single-shuffle
+tag + union + pivot (:func:`stats_table_pivot`, SURVEY §1 allows
+either). Likewise the per-dataset counts are one tagged union and ONE
+``groupBy(dataset)`` aggregation for any number of datasets
+(:func:`datasets_counts`), not one aggregation per dataset.
+
+Scale notes: exact ``countDistinct`` on an unbounded column is a full
+shuffle of that column. The fold of full-outer joins is fine because
+each input is already one row per language (#langs ~ 125).
 """
 
 from __future__ import annotations
@@ -23,21 +27,37 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dataset_counts(df: DataFrame, approx: bool = False) -> dict[str, int]:
-    """triples / distinct nodes / distinct predicates (A5+A6)."""
-    if approx:
-        row = df.agg(
-            F.count(F.lit(1)).alias("triples"),
-            F.approx_count_distinct("s").alias("nodes"),
-            F.approx_count_distinct("p").alias("predicates"),
-        ).collect()[0]
-    else:
-        row = df.agg(
+def datasets_counts(frames: dict[str, DataFrame]) -> dict[str, dict[str, int]]:
+    """triples / distinct nodes / distinct predicates (A5+A6) of every
+    frame in ``frames``, keyed by its name, from ONE aggregation: each
+    frame's ``(s, p)`` is tagged with its name, the tagged frames are
+    unioned and a single ``groupBy(dataset)`` computes all three counts
+    — one shuffle for any number of datasets instead of one aggregation
+    each. A dataset with no rows reads 0/0/0; one frame may be bound to
+    several names (each name counts it in full)."""
+    tag = "__dataset"
+    tagged = [
+        df.select(F.lit(name).alias(tag), "s", "p") for name, df in frames.items()
+    ]
+    rows = (
+        reduce(DataFrame.unionByName, tagged)
+        .groupBy(tag)
+        .agg(
             F.count(F.lit(1)).alias("triples"),
             F.countDistinct("s").alias("nodes"),
             F.countDistinct("p").alias("predicates"),
-        ).collect()[0]
-    return {"triples": row["triples"], "nodes": row["nodes"], "predicates": row["predicates"]}
+        )
+        .collect()
+    )
+    counts = {name: {"triples": 0, "nodes": 0, "predicates": 0} for name in frames}
+    for r in rows:
+        counts[r[tag]] = {k: r[k] for k in ("triples", "nodes", "predicates")}
+    return counts
+
+
+def dataset_counts(df: DataFrame) -> dict[str, int]:
+    """:func:`datasets_counts` of one frame."""
+    return datasets_counts({"": df})[""]
 
 
 def counts_per_group(df: DataFrame, group_col: str, count_name: str) -> DataFrame:
@@ -132,20 +152,21 @@ def per_lang_stats_tables(
     frames: dict[str, DataFrame], group_col: str = "lang"
 ) -> tuple[DataFrame, DataFrame]:
     """The reference flagship's per-language x per-dataset count tables
-    (DbpediaDgraphSparkApp.scala:155-179): the J4 full-outer fold over
-    per-dataset counts, split into
+    (DbpediaDgraphSparkApp.scala:155-179): the per-dataset counts as
+    ONE tag + union + pivot (:func:`stats_table_pivot`, equal to the
+    reference's J4 full-outer fold), split into
 
     - the MAIN table: all non-``en-*`` languages plus ONE ``en-*``
       rollup row (groupBy().sum() over the pseudo-language rows, U2),
       ordered by language;
     - the EN-STAR table: the individual ``en-*`` rows, ordered.
 
-    Both inputs to the union come from one cached fold, so the fact
+    Both inputs to the union come from one cached pivot, so the fact
     frames are scanned once per dataset regardless of how many tables
     are printed."""
     from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
-    tbl = stats_table(frames, group_col).cache()
+    tbl = stats_table_pivot(frames, group_col).cache()
     num_cols = [c for c in tbl.columns if c != group_col]
     en_star = tbl.where(F.col(group_col).startswith("en-"))
     rolled = (
@@ -158,7 +179,7 @@ def per_lang_stats_tables(
         .unionByName(rolled)
         .orderBy(group_col)
     )
-    # both outputs carry the fold's cache handle so a caller can free
+    # both outputs carry the pivot's cache handle so a caller can free
     # it (cachectl.release) — an internal-only .cache() is unreleasable
     return (
         tag_persisted(main, tbl),

@@ -41,6 +41,7 @@ from dgraph_dbpedia_spark.functions.rdf import (
     typed_triples,
 )
 from dgraph_dbpedia_spark.functions.schema_gen import full_schema, schema_line
+from dgraph_dbpedia_spark.operators.cachectl import persisted_frames, release
 from dgraph_dbpedia_spark.operators.topk import top_k_per_group
 from dgraph_dbpedia_spark.sources.parquet import read_triples_parquet
 from dgraph_dbpedia_spark.sources.writers import write_partitioned_by
@@ -549,295 +550,313 @@ def transform(
     topk, predicate_datatypes, schema_derived, dim_caches = infobox_dims(
         all_infobox, cfg.top_infobox_properties_per_lang
     )
-    if topk is not None:
-        infobox_triples = filter_by_topk(all_infobox, topk)
-    else:
-        infobox_triples = all_infobox
+    schema = None
+    retained: dict[str, DataFrame] = {}
+    stats_tables = None
+    try:
+        if topk is not None:
+            infobox_triples = filter_by_topk(all_infobox, topk)
+        else:
+            infobox_triples = all_infobox
 
-    if cfg.print_stats:
-        # per-dataset counts + the per-language x per-dataset tables with
-        # the en-* rollup (DbpediaDgraphSparkApp.scala:139-179)
-        from dgraph_dbpedia_spark.operators.stats import (
-            dataset_counts,
-            per_lang_stats_tables,
-        )
-
-        stats_frames = {
-            "labels": label_triples,
-            "interlanguage_links": interlang_triples,
-            "page_links": page_links_triples,
-            "article_categories": category_triples,
-            "skos_categories": skos_triples,
-            "geo_coordinates": geo_triples,
-            "infobox_properties": all_infobox,
-        }
-        if cfg.top_infobox_properties_per_lang:
-            k = cfg.top_infobox_properties_per_lang
-            stats_frames[f"top {k} infobox_properties"] = infobox_triples
-        stats_counts: dict[str, int] = {}
-        for name, frame in stats_frames.items():
-            c = dataset_counts(frame)
-            stats_counts[name] = c["triples"]
-            print(
-                f"{name}: {c['triples']:,} triples, {c['nodes']:,} nodes, "
-                f"{c['predicates']:,} predicates"
+        if cfg.print_stats:
+            # per-dataset counts + the per-language x per-dataset tables with
+            # the en-* rollup (DbpediaDgraphSparkApp.scala:139-179): built
+            # here, computed beside the sinks (see the pool below), printed
+            # once the pool has resolved
+            from dgraph_dbpedia_spark.operators.stats import (
+                datasets_counts,
+                per_lang_stats_tables,
             )
-        main_table, en_star_table = per_lang_stats_tables(stats_frames)
-        from dgraph_dbpedia_spark.operators.cachectl import release
 
-        try:
+            stats_frames = {
+                "labels": label_triples,
+                "interlanguage_links": interlang_triples,
+                "page_links": page_links_triples,
+                "article_categories": category_triples,
+                "skos_categories": skos_triples,
+                "geo_coordinates": geo_triples,
+                "infobox_properties": all_infobox,
+            }
+            if cfg.top_infobox_properties_per_lang:
+                k = cfg.top_infobox_properties_per_lang
+                stats_frames[f"top {k} infobox_properties"] = infobox_triples
+            stats_tables = per_lang_stats_tables(stats_frames)
+
+        typed = typed_triples(infobox_triples)
+
+        infobox = clean_infobox(typed, predicate_datatypes, cfg.externalise_uris)
+        labels = clean_labels(label_triples, cfg)
+        interlang = clean_uri_pairs(interlang_triples, cfg)
+        page_links = clean_uri_pairs(page_links_triples, cfg)
+        categories = clean_uri_pairs(category_triples, cfg)
+        skos = clean_skos(skos_triples, cfg)
+        geo = clean_geo(geo_triples, cfg)
+
+        schema = full_schema(
+            spark, infobox_triples, predicate_datatypes,
+            cfg.remove_language_tags, cfg.externalise_uris,
+            derived=schema_derived,
+        ).cache()
+        # materialize the cached dimensions (topk, predicate_datatypes,
+        # schema) once, before concurrent writers race to compute them.
+        # Measured-and-rejected variants (do not re-try without re-measuring):
+        #  - overlapping this materialization with the dim-independent sinks
+        #    stretched the dims critical path ~40% under contention (21.2s
+        #    vs 19.3s total at 60k bench subjects);
+        #  - persisting the typed infobox frame for its four consumers lost
+        #    to Catalyst column pruning — the cache materializes all columns
+        #    while each uncached consumer reads a 2-column pruned subset
+        #    (22.6s vs 19.3s);
+        #  - deriving types.rdf from in-memory frames instead of the gzip
+        #    read-back recomputed every cleaned frame after unpersist and
+        #    doubled total wall-clock (40.6s).
+        schema.count()
+
+        # every sink below except types.rdf is an independent job — submit
+        # them from a driver-side thread pool so Spark interleaves their
+        # stages under the FAIR scheduler (the sampling/commit phases of one
+        # write leave executors idle for the others); results are identical
+        # to the reference's serial loop
+        from concurrent.futures import ThreadPoolExecutor
+
+        frames = [
+            ("labels", labels),
+            ("infobox_properties", infobox),
+            ("interlanguage_links", interlang),
+            ("page_links", page_links),
+            ("article_categories", categories),
+            ("skos_categories", skos),
+            ("geo_coordinates", geo),
+        ]
+
+        # when types.rdf is requested, the cleaned frames are persisted UP
+        # FRONT so the types derivation reads the same cache the sinks fill —
+        # not the gzip read-back (gzip text is non-splittable, so at scale
+        # the read-back caps the types stage's parallelism at file count and
+        # decompresses every output a second time). Persisting eagerly also
+        # lets the types job run CONCURRENTLY with the sinks under FAIR
+        # scheduling instead of as a serial tail (r1: types+external_ids
+        # were a 22 s tail after the last sink at 600k bench subjects); a
+        # partition both jobs race to compute is computed at most twice and
+        # cached once — benign. The earlier attempt lost by unpersisting
+        # before types ran (VERDICT r1); handles are released only after
+        # every future resolves.
+        from pyspark import StorageLevel
+
+        types_future = None
+
+        # Pool width is the concurrency dial for the sink phase: fewer
+        # workers = staggered waves (less cache/shuffle-memory contention,
+        # more idle executors between commits); more workers = no job ever
+        # waits for a slot. Measured at the 84M-triple scale
+        # (BENCH_SCALE.md r6 sweep): 5 workers beat 11 by ~35% (149s -> 110s
+        # transform) — with 11 concurrent sinks the retained frames' cache
+        # partitions thrash in and out of the unified-memory pool, and every
+        # sink pays re-computation; two staggered waves keep the working set
+        # resident. At 600k subjects the difference is within noise, so the
+        # scale-measured value is the default.
+        sink_workers = int(os.environ.get("SPARK_GRAFT_SINK_WORKERS", "5"))
+        import threading
+
+        sink_counts_done = threading.Semaphore(0)
+        # +1 thread when types runs: the types job PARKS on the latch below
+        # until every sink count has resolved, so it must not occupy one of
+        # the sink_workers slots while parked. A wider rework (every job
+        # gets a thread immediately, heavy writes bounded by a semaphore)
+        # was MEASURED WORSE same-session (best 50.6 s vs 30.8 s at 600k
+        # subjects, r17): eight simultaneous count jobs slow each other
+        # (external_ids:count 16.9 -> 33.5 s) and the types distinct lands
+        # mid-write-wave, racing five gzip sorts for task slots
+        # (types:count 6.6 -> 21.9 s). The pool-width gate keeps count
+        # waves and write waves naturally staggered; see OPTIMIZATION_r17.md.
+        # +1 thread when the stats are printed, for the same reason: the
+        # stats job starts at once instead of waiting for a sink slot.
+        with ThreadPoolExecutor(
+            max_workers=sink_workers
+            + (1 if cfg.write_types else 0)
+            + (1 if cfg.print_stats else 0)
+        ) as pool:
+            stats_future = None
+            if cfg.print_stats:
+                # the stats are two small executions (the fused
+                # per-dataset counts, the pivot cache's materialization)
+                # off the critical path: beside the sinks they fill task
+                # slots the sinks' sampling/commit phases leave idle.
+                # Nothing is printed until the pool resolves, so stdout
+                # keeps the reference's order.
+                def _stats() -> dict[str, dict[str, int]]:
+                    counts = datasets_counts(stats_frames)
+                    for c in persisted_frames(stats_tables[0]):
+                        c.count()
+                    return counts
+
+                stats_future = pool.submit(_stats)
+            # Scheduling (r17 rework of the r14 longest-job-first scheme):
+            # the SINK COUNT jobs are the cache materializers — 7
+            # independent jobs racing nothing — and the types
+            # union-distinct (which reads every retained frame) is DELAYED
+            # until all seven counts have resolved, so it scans warm
+            # DISK_ONLY blocks instead of racing the sinks partition-by-
+            # partition for the first materialization (the r16 "computed
+            # at most twice, cached once" window: racing tasks park on the
+            # cache's per-block write locks, holding task slots the
+            # materializing job needs — phase-profiled 44.8 s types:count
+            # in the r17 session's machine state, of which only ~6 s is
+            # the distinct itself; see OPTIMIZATION_r17.md). external_ids
+            # is independent of everything (it scans parquet, not the
+            # caches) and starts immediately alongside the counts.
+            if cfg.write_types:
+                # DISK_ONLY for the retained cleaned frames (r6 sweep,
+                # BENCH_SCALE.md): at 84M triples it matches MEMORY_AND_DISK
+                # +35% win from staggered sinks while halving memory spill
+                # (10.8 -> 4.4 GB) — the frames are each read a handful of
+                # times by sequential sinks, so page-cache-backed local disk
+                # serves them as fast as the unified-memory cache WITHOUT
+                # evicting the sinks' shuffle/sort working memory. The 100 TB
+                # translation: cache cold, sink-phase intermediates on local
+                # disk; keep executor memory for execution.
+                _lvl = getattr(
+                    StorageLevel,
+                    os.environ.get("SPARK_GRAFT_RETAIN_LEVEL", "DISK_ONLY"),
+                )
+                retained = {
+                    name: frame.persist(_lvl) for name, frame in frames
+                }
+                # the written files' content = invalid_predicate_filter(pre-
+                # write frame), so filtering the retained frames is value-
+                # identical to the reference's read-the-rdf-back derivation
+                # (DbpediaDgraphSparkApp.scala:409-440) without the gzip
+                # re-scan. article_categories SUBJECTS are articles too
+                # (:419 — previously missing, ADVICE r1); its objects are
+                # the Category nodes.
+                pre = {n: invalid_predicate_filter(f) for n, f in retained.items()}
+                articles = [
+                    pre[n].select("s", "lang")
+                    for n in ("labels", "infobox_properties", "interlanguage_links",
+                              "page_links", "article_categories", "geo_coordinates")
+                ] + [pre["interlanguage_links"].select(F.col("o").alias("s"), "lang")]
+                types = type_triples(
+                    articles,
+                    pre["article_categories"].select(F.col("o").alias("s"), "lang"),
+                    pre["skos_categories"].select("s", "lang"),
+                )
+                n_sinks = len(frames)
+
+                def _types_after_counts() -> DataFrame:
+                    # park until every sink's count job has materialized its
+                    # retained cache (write_rdf releases the semaphore from
+                    # a finally, so a failed sink still unblocks this); then
+                    # the union-distinct runs over warm DISK_ONLY blocks
+                    for _ in range(n_sinks):
+                        sink_counts_done.acquire()
+                    return write_rdf(spark, types, f"{out}/types.rdf")
+
+                types_future = pool.submit(_types_after_counts)
+            xid_future = None
+            if cfg.externalise_uris:
+                # NOTE (reference parity): infobox URI-typed OBJECTS are
+                # blank-node-rewritten by clean_infobox but deliberately NOT
+                # in this list — the reference's externalIds takes only
+                # infoboxTriples.select($"s") (DbpediaDgraphSparkApp.scala:
+                # 374-389), so those blank nodes carry no <xid> there either;
+                # we mirror that exactly rather than "fix" the upstream.
+                #
+                # r16 (guide §2.3 project-before-union / §6): the four
+                # datasets contributing BOTH endpoints used to appear as
+                # two single-column branches each — two scans per dataset.
+                # _both_ends emits (s, lang) and (o-as-s, lang) from ONE
+                # scan via a 2-row inline; the union multiset (and so the
+                # distinct) is identical, and the xid job reads each
+                # parquet dataset once instead of twice — at 100 TB that
+                # halves the external-id pass's input I/O.
+                xid_inputs = [
+                    label_triples.select("s", "lang"),
+                    infobox_triples.select("s", "lang"),
+                    _both_ends(interlang_triples),
+                    _both_ends(page_links_triples),
+                    _both_ends(category_triples),
+                    _both_ends(
+                        skos_triples,
+                        o_when=F.col("p").isin(SKOS_RELATED, SKOS_BROADER),
+                    ),
+                    spark.createDataFrame([(SKOS_CONCEPT, "any")], ["s", "lang"]),
+                    geo_triples.select("s", "lang"),
+                ]
+                xid_future = pool.submit(
+                    write_rdf, spark, external_id_triples(xid_inputs),
+                    f"{out}/external_ids.rdf",
+                )
+            # plain sinks next, in descending expected size (infobox /
+            # page_links dominate real DBpedia dumps and the bench corpus)
+            # so no large job lands behind a small one in the queue
+            by_name = dict(frames)
+            sink_order = _ordered_sink_names(by_name)
+            futures = {
+                name: pool.submit(
+                    write_rdf,
+                    spark,
+                    retained[name] if cfg.write_types else by_name[name],
+                    f"{out}/{name}.rdf",
+                    not cfg.write_types,
+                    sink_counts_done.release if cfg.write_types else None,
+                )
+                for name in sink_order
+            }
+            schema_futures = [
+                pool.submit(write_schema, schema, f"{out}/schema.dgraph", False),
+                pool.submit(write_schema, schema, f"{out}/schema.indexed.dgraph", True),
+            ]
+            outputs: dict[str, DataFrame] = {n: f.result() for n, f in futures.items()}
+            for f in schema_futures:
+                f.result()
+            if xid_future is not None:
+                outputs["external_ids"] = xid_future.result()
+
+        if types_future is not None:
+            outputs["types"] = types_future.result()
+
+        if cfg.print_stats:
+            stats_counts = stats_future.result()
+            for name, c in stats_counts.items():
+                print(
+                    f"{name}: {c['triples']:,} triples, {c['nodes']:,} nodes, "
+                    f"{c['predicates']:,} predicates"
+                )
             print()
             print("Triples per languages and dataset:")
+            main_table, en_star_table = stats_tables
             main_table.show(1000, truncate=False)
             en_star_table.show(1000, truncate=False)
-        finally:
-            # the shows fully materialize both tables; release the
-            # shared fold cache even if a show raises (the curate.py
-            # must-not-outlive-the-failure rule)
-            release(main_table)
-
-    typed = typed_triples(infobox_triples)
-
-    infobox = clean_infobox(typed, predicate_datatypes, cfg.externalise_uris)
-    labels = clean_labels(label_triples, cfg)
-    interlang = clean_uri_pairs(interlang_triples, cfg)
-    page_links = clean_uri_pairs(page_links_triples, cfg)
-    categories = clean_uri_pairs(category_triples, cfg)
-    skos = clean_skos(skos_triples, cfg)
-    geo = clean_geo(geo_triples, cfg)
-
-    schema = full_schema(
-        spark, infobox_triples, predicate_datatypes,
-        cfg.remove_language_tags, cfg.externalise_uris,
-        derived=schema_derived,
-    ).cache()
-    # materialize the cached dimensions (topk, predicate_datatypes,
-    # schema) once, before concurrent writers race to compute them.
-    # Measured-and-rejected variants (do not re-try without re-measuring):
-    #  - overlapping this materialization with the dim-independent sinks
-    #    stretched the dims critical path ~40% under contention (21.2s
-    #    vs 19.3s total at 60k bench subjects);
-    #  - persisting the typed infobox frame for its four consumers lost
-    #    to Catalyst column pruning — the cache materializes all columns
-    #    while each uncached consumer reads a 2-column pruned subset
-    #    (22.6s vs 19.3s);
-    #  - deriving types.rdf from in-memory frames instead of the gzip
-    #    read-back recomputed every cleaned frame after unpersist and
-    #    doubled total wall-clock (40.6s).
-    schema.count()
-
-    # every sink below except types.rdf is an independent job — submit
-    # them from a driver-side thread pool so Spark interleaves their
-    # stages under the FAIR scheduler (the sampling/commit phases of one
-    # write leave executors idle for the others); results are identical
-    # to the reference's serial loop
-    from concurrent.futures import ThreadPoolExecutor
-
-    frames = [
-        ("labels", labels),
-        ("infobox_properties", infobox),
-        ("interlanguage_links", interlang),
-        ("page_links", page_links),
-        ("article_categories", categories),
-        ("skos_categories", skos),
-        ("geo_coordinates", geo),
-    ]
-
-    # when types.rdf is requested, the cleaned frames are persisted UP
-    # FRONT so the types derivation reads the same cache the sinks fill —
-    # not the gzip read-back (gzip text is non-splittable, so at scale
-    # the read-back caps the types stage's parallelism at file count and
-    # decompresses every output a second time). Persisting eagerly also
-    # lets the types job run CONCURRENTLY with the sinks under FAIR
-    # scheduling instead of as a serial tail (r1: types+external_ids
-    # were a 22 s tail after the last sink at 600k bench subjects); a
-    # partition both jobs race to compute is computed at most twice and
-    # cached once — benign. The earlier attempt lost by unpersisting
-    # before types ran (VERDICT r1); handles are released only after
-    # every future resolves.
-    from pyspark import StorageLevel
-
-    retained: dict[str, DataFrame] = {}
-    types_future = None
-
-    # Pool width is the concurrency dial for the sink phase: fewer
-    # workers = staggered waves (less cache/shuffle-memory contention,
-    # more idle executors between commits); more workers = no job ever
-    # waits for a slot. Measured at the 84M-triple scale
-    # (BENCH_SCALE.md r6 sweep): 5 workers beat 11 by ~35% (149s -> 110s
-    # transform) — with 11 concurrent sinks the retained frames' cache
-    # partitions thrash in and out of the unified-memory pool, and every
-    # sink pays re-computation; two staggered waves keep the working set
-    # resident. At 600k subjects the difference is within noise, so the
-    # scale-measured value is the default.
-    sink_workers = int(os.environ.get("SPARK_GRAFT_SINK_WORKERS", "5"))
-    import threading
-
-    sink_counts_done = threading.Semaphore(0)
-    # +1 thread when types runs: the types job PARKS on the latch below
-    # until every sink count has resolved, so it must not occupy one of
-    # the sink_workers slots while parked. A wider rework (every job
-    # gets a thread immediately, heavy writes bounded by a semaphore)
-    # was MEASURED WORSE same-session (best 50.6 s vs 30.8 s at 600k
-    # subjects, r17): eight simultaneous count jobs slow each other
-    # (external_ids:count 16.9 -> 33.5 s) and the types distinct lands
-    # mid-write-wave, racing five gzip sorts for task slots
-    # (types:count 6.6 -> 21.9 s). The pool-width gate keeps count
-    # waves and write waves naturally staggered; see OPTIMIZATION_r17.md.
-    with ThreadPoolExecutor(
-        max_workers=sink_workers + (1 if cfg.write_types else 0)
-    ) as pool:
-        # Scheduling (r17 rework of the r14 longest-job-first scheme):
-        # the SINK COUNT jobs are the cache materializers — 7
-        # independent jobs racing nothing — and the types
-        # union-distinct (which reads every retained frame) is DELAYED
-        # until all seven counts have resolved, so it scans warm
-        # DISK_ONLY blocks instead of racing the sinks partition-by-
-        # partition for the first materialization (the r16 "computed
-        # at most twice, cached once" window: racing tasks park on the
-        # cache's per-block write locks, holding task slots the
-        # materializing job needs — phase-profiled 44.8 s types:count
-        # in the r17 session's machine state, of which only ~6 s is
-        # the distinct itself; see OPTIMIZATION_r17.md). external_ids
-        # is independent of everything (it scans parquet, not the
-        # caches) and starts immediately alongside the counts.
-        if cfg.write_types:
-            # DISK_ONLY for the retained cleaned frames (r6 sweep,
-            # BENCH_SCALE.md): at 84M triples it matches MEMORY_AND_DISK
-            # +35% win from staggered sinks while halving memory spill
-            # (10.8 -> 4.4 GB) — the frames are each read a handful of
-            # times by sequential sinks, so page-cache-backed local disk
-            # serves them as fast as the unified-memory cache WITHOUT
-            # evicting the sinks' shuffle/sort working memory. The 100 TB
-            # translation: cache cold, sink-phase intermediates on local
-            # disk; keep executor memory for execution.
-            _lvl = getattr(
-                StorageLevel,
-                os.environ.get("SPARK_GRAFT_RETAIN_LEVEL", "DISK_ONLY"),
+            # reference denominator is the top-k-FILTERED infobox count
+            # (DbpediaDgraphSparkApp.scala:449), not the raw input count.
+            # Reuse the count the stats job already computed for exactly
+            # this frame — re-running it here was a second full scan +
+            # semi-join over the largest dataset at the end of the
+            # pipeline.
+            k = cfg.top_infobox_properties_per_lang
+            denom_key = f"top {k} infobox_properties" if k else "infobox_properties"
+            coverage = outputs["infobox_properties"].count() * 100 // max(
+                stats_counts[denom_key]["triples"], 1
             )
-            retained = {
-                name: frame.persist(_lvl) for name, frame in frames
-            }
-            # the written files' content = invalid_predicate_filter(pre-
-            # write frame), so filtering the retained frames is value-
-            # identical to the reference's read-the-rdf-back derivation
-            # (DbpediaDgraphSparkApp.scala:409-440) without the gzip
-            # re-scan. article_categories SUBJECTS are articles too
-            # (:419 — previously missing, ADVICE r1); its objects are
-            # the Category nodes.
-            pre = {n: invalid_predicate_filter(f) for n, f in retained.items()}
-            articles = [
-                pre[n].select("s", "lang")
-                for n in ("labels", "infobox_properties", "interlanguage_links",
-                          "page_links", "article_categories", "geo_coordinates")
-            ] + [pre["interlanguage_links"].select(F.col("o").alias("s"), "lang")]
-            types = type_triples(
-                articles,
-                pre["article_categories"].select(F.col("o").alias("s"), "lang"),
-                pre["skos_categories"].select("s", "lang"),
-            )
-            n_sinks = len(frames)
+            print(f"cleaned-up infoboxes cover {coverage}% of original rows")
+            from dgraph_dbpedia_spark.observability import collect_spill_metrics
 
-            def _types_after_counts() -> DataFrame:
-                # park until every sink's count job has materialized its
-                # retained cache (write_rdf releases the semaphore from
-                # a finally, so a failed sink still unblocks this); then
-                # the union-distinct runs over warm DISK_ONLY blocks
-                for _ in range(n_sinks):
-                    sink_counts_done.acquire()
-                return write_rdf(spark, types, f"{out}/types.rdf")
+            print(collect_spill_metrics(spark).report())
 
-            types_future = pool.submit(_types_after_counts)
-        xid_future = None
-        if cfg.externalise_uris:
-            # NOTE (reference parity): infobox URI-typed OBJECTS are
-            # blank-node-rewritten by clean_infobox but deliberately NOT
-            # in this list — the reference's externalIds takes only
-            # infoboxTriples.select($"s") (DbpediaDgraphSparkApp.scala:
-            # 374-389), so those blank nodes carry no <xid> there either;
-            # we mirror that exactly rather than "fix" the upstream.
-            #
-            # r16 (guide §2.3 project-before-union / §6): the four
-            # datasets contributing BOTH endpoints used to appear as
-            # two single-column branches each — two scans per dataset.
-            # _both_ends emits (s, lang) and (o-as-s, lang) from ONE
-            # scan via a 2-row inline; the union multiset (and so the
-            # distinct) is identical, and the xid job reads each
-            # parquet dataset once instead of twice — at 100 TB that
-            # halves the external-id pass's input I/O.
-            xid_inputs = [
-                label_triples.select("s", "lang"),
-                infobox_triples.select("s", "lang"),
-                _both_ends(interlang_triples),
-                _both_ends(page_links_triples),
-                _both_ends(category_triples),
-                _both_ends(
-                    skos_triples,
-                    o_when=F.col("p").isin(SKOS_RELATED, SKOS_BROADER),
-                ),
-                spark.createDataFrame([(SKOS_CONCEPT, "any")], ["s", "lang"]),
-                geo_triples.select("s", "lang"),
-            ]
-            xid_future = pool.submit(
-                write_rdf, spark, external_id_triples(xid_inputs),
-                f"{out}/external_ids.rdf",
-            )
-        # plain sinks next, in descending expected size (infobox /
-        # page_links dominate real DBpedia dumps and the bench corpus)
-        # so no large job lands behind a small one in the queue
-        by_name = dict(frames)
-        sink_order = _ordered_sink_names(by_name)
-        futures = {
-            name: pool.submit(
-                write_rdf,
-                spark,
-                retained[name] if cfg.write_types else by_name[name],
-                f"{out}/{name}.rdf",
-                not cfg.write_types,
-                sink_counts_done.release if cfg.write_types else None,
-            )
-            for name in sink_order
-        }
-        schema_futures = [
-            pool.submit(write_schema, schema, f"{out}/schema.dgraph", False),
-            pool.submit(write_schema, schema, f"{out}/schema.indexed.dgraph", True),
-        ]
-        outputs: dict[str, DataFrame] = {n: f.result() for n, f in futures.items()}
-        for f in schema_futures:
-            f.result()
-        if xid_future is not None:
-            outputs["external_ids"] = xid_future.result()
-
-    if types_future is not None:
-        outputs["types"] = types_future.result()
-        for p in retained.values():
-            p.unpersist()
-
-    if cfg.print_stats:
-        # reference denominator is the top-k-FILTERED infobox count
-        # (DbpediaDgraphSparkApp.scala:449), not the raw input count.
-        # Reuse the count the stats loop above already computed for
-        # exactly this frame — re-running it here was a second full
-        # scan + semi-join over the largest dataset at the end of the
-        # pipeline.
-        k = cfg.top_infobox_properties_per_lang
-        denom_key = f"top {k} infobox_properties" if k else "infobox_properties"
-        coverage = outputs["infobox_properties"].count() * 100 // max(
-            stats_counts[denom_key], 1
-        )
-        print(f"cleaned-up infoboxes cover {coverage}% of original rows")
-        from dgraph_dbpedia_spark.observability import collect_spill_metrics
-
-        print(collect_spill_metrics(spark).report())
-
-    # release the dimension caches (cube / topk / predicate_datatypes
-    # from infobox_dims, plus the schema frame): every consumer — the
-    # sinks, the schema writers, the stats — has resolved by here, and
-    # a long-lived session calling transform() repeatedly must not
-    # accumulate one cached dim set per call (the retained sink frames
-    # already get this treatment above)
-    for c in dim_caches:
-        c.unpersist()
-    schema.unpersist()
-
-    return outputs
+        return outputs
+    finally:
+        # one release point for every cache transform() holds: the stats
+        # pivot, the retained sink frames, the dimension caches (cube /
+        # topk / predicate_datatypes from infobox_dims) and the schema
+        # frame. On success every consumer has resolved by here; on
+        # failure a long-lived session calling transform() repeatedly
+        # must not keep one cache set per failed call either.
+        if stats_tables is not None:
+            release(stats_tables[0])
+        for c in retained.values():
+            c.unpersist()
+        for c in dim_caches:
+            c.unpersist()
+        if schema is not None:
+            schema.unpersist()

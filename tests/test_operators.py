@@ -9,6 +9,7 @@ from dgraph_dbpedia_spark.operators.majority import (
 )
 from dgraph_dbpedia_spark.operators.stats import (
     dataset_counts,
+    datasets_counts,
     rollup_group,
     stats_table,
     stats_table_pivot,
@@ -65,6 +66,56 @@ def test_dataset_counts(spark):
     )
     c = dataset_counts(df)
     assert c == {"triples": 3, "nodes": 2, "predicates": 2}
+
+
+def test_datasets_counts_equals_per_frame_counts(spark):
+    """The fused aggregation equals one dataset_counts per frame on the
+    edge inputs: an empty frame (0/0/0), NULL s/p (counted as triples,
+    not as distinct values), and one source frame bound to two names —
+    the shape of transform's infobox_properties / top-k pair."""
+    schema = "s string, p string, o string, lang string"
+    empty = spark.createDataFrame([], schema)
+    nulls = spark.createDataFrame(
+        [("s1", None, "o", "en"), (None, "p1", "o", "en"), (None, None, "o", "de"),
+         ("s1", "p1", "o", "de")],
+        schema,
+    )
+    shared = spark.createDataFrame(
+        [("s1", "p1", "o", "en"), ("s1", "p2", "o", "en"), ("s2", "p1", "o", "de")],
+        schema,
+    )
+    frames = {"empty": empty, "nulls": nulls, "shared": shared,
+              "shared again": shared.where(F.col("lang") == "en"), "same": shared}
+    fused = datasets_counts(frames)
+    assert list(fused) == list(frames)
+    assert fused == {name: dataset_counts(df) for name, df in frames.items()}
+    assert fused["empty"] == {"triples": 0, "nodes": 0, "predicates": 0}
+    assert fused["nulls"] == {"triples": 4, "nodes": 1, "predicates": 1}
+    assert fused["same"] == fused["shared"] == {"triples": 3, "nodes": 2, "predicates": 2}
+    assert fused["shared again"] == {"triples": 2, "nodes": 1, "predicates": 2}
+
+
+def test_datasets_counts_job_count(spark):
+    """Work counter: the counts of transform's eight stats datasets are
+    ONE aggregation (<= 3 Spark jobs under AQE: two shuffle map stages
+    and the result stage), where one dataset_counts per frame submits
+    3 jobs per frame (24)."""
+    sc = spark.sparkContext
+    frames = {
+        f"d{i}": spark.createDataFrame(
+            [(f"s{j % 5}", f"p{j % 3}", "o", "en") for j in range(3 * i)],
+            "s string, p string, o string, lang string",
+        )
+        for i in range(8)
+    }
+    sc.setJobGroup("test_datasets_counts_job_count", "fused stats counts")
+    try:
+        datasets_counts(frames)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_datasets_counts_job_count")
+    assert 1 <= len(jobs) <= 3
 
 
 def test_stats_table_fold_and_pivot_agree(spark):

@@ -283,6 +283,84 @@ def test_transform_schedule_independent(spark, pipeline_dirs, tmp_path, monkeypa
         assert a.exceptAll(b).count() == 0, ds
 
 
+# transform's printed stats on the fixture corpus with the CLI's
+# reference flags, app-wide spill line dropped; captured from the serial
+# per-dataset-count / join-fold implementation the fused one replaced
+GOLDEN_STATS = (
+    'labels: 140 triples, 120 nodes, 1 predicates\n'
+    'interlanguage_links: 119 triples, 88 nodes, 1 predicates\n'
+    'page_links: 228 triples, 120 nodes, 1 predicates\n'
+    'article_categories: 120 triples, 120 nodes, 1 predicates\n'
+    'skos_categories: 54 triples, 16 nodes, 4 predicates\n'
+    'geo_coordinates: 60 triples, 60 nodes, 1 predicates\n'
+    'infobox_properties: 596 triples, 120 nodes, 33 predicates\n'
+    'top 100 infobox_properties: 596 triples, 120 nodes, 33 predicates\n'
+    '\n'
+    'Triples per languages and dataset:\n'
+    '+----+------+-------------------+----------+------------------+---------------+---------------+------------------+--------------------------+\n'
+    '|lang|labels|interlanguage_links|page_links|article_categories|skos_categories|geo_coordinates|infobox_properties|top 100 infobox_properties|\n'
+    '+----+------+-------------------+----------+------------------+---------------+---------------+------------------+--------------------------+\n'
+    '|de  |40    |38                 |66        |40                |27             |20             |192               |192                       |\n'
+    '|en  |40    |39                 |74        |40                |27             |20             |192               |192                       |\n'
+    '|en-*|20    |0                  |0         |0                 |0              |0              |20                |20                        |\n'
+    '|vi  |40    |42                 |88        |40                |0              |20             |192               |192                       |\n'
+    '+----+------+-------------------+----------+------------------+---------------+---------------+------------------+--------------------------+\n'
+    '\n'
+    '+-----+------+-------------------+----------+------------------+---------------+---------------+------------------+--------------------------+\n'
+    '|lang |labels|interlanguage_links|page_links|article_categories|skos_categories|geo_coordinates|infobox_properties|top 100 infobox_properties|\n'
+    '+-----+------+-------------------+----------+------------------+---------------+---------------+------------------+--------------------------+\n'
+    '|en-de|10    |0                  |0         |0                 |0              |0              |10                |10                        |\n'
+    '|en-vi|10    |0                  |0         |0                 |0              |0              |10                |10                        |\n'
+    '+-----+------+-------------------+----------+------------------+---------------+---------------+------------------+--------------------------+\n'
+    '\n'
+    'cleaned-up infoboxes cover 84% of original rows\n'
+)
+
+
+def _cli_reference_cfg() -> TransformConfig:
+    return TransformConfig(
+        write_types=True,
+        externalise_uris=True,
+        remove_language_tags=True,
+        top_infobox_properties_per_lang=100,
+        print_stats=True,
+    )
+
+
+def test_transform_printed_stats_golden(spark, pipeline_dirs, tmp_path, capsys):
+    """The stats text transform prints by default (the CLI's path) is
+    byte-identical to the serial implementation's: the fused counts,
+    the pivot table and printing after the sink pool change nothing a
+    reader of stdout can see."""
+    _, parquet, _, _, _ = pipeline_dirs
+    capsys.readouterr()
+    transform(spark, str(parquet), str(tmp_path / "rdf_stats"), cfg=_cli_reference_cfg())
+    printed = capsys.readouterr().out
+    assert printed.splitlines()[-1].startswith("memory spill:")
+    kept = "".join(
+        line for line in printed.splitlines(True) if not line.startswith("memory spill:")
+    )
+    assert kept == GOLDEN_STATS
+
+
+def test_transform_stats_failure_releases_caches(spark, pipeline_dirs, tmp_path, monkeypatch):
+    """Fault injection: a raise in the stats job propagates out of
+    transform, and no cache transform persisted (stats pivot, retained
+    sink frames, dimension caches, schema) outlives the call."""
+    from dgraph_dbpedia_spark.operators import stats
+
+    def boom(frames):
+        raise RuntimeError("injected stats failure")
+
+    _, parquet, _, _, _ = pipeline_dirs
+    monkeypatch.setattr(stats, "datasets_counts", boom)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="injected stats failure"):
+        transform(spark, str(parquet), str(tmp_path / "rdf_fail"), cfg=_cli_reference_cfg())
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert after <= before
+
+
 def test_curate_corpus_every_stage_fires(spark):
     """End-to-end curation composition: each planted doc exercises one
     stage — gopher kill (too short), exact-dup kill (identical text,
