@@ -34,123 +34,6 @@ import __spark_entry__ as entry_mod
 from dgraph_dbpedia_spark.session import build_session
 
 
-#: Healthy quiet-machine band for the canary metrics, recorded AS DATA
-#: in the artifact (VERDICT r13 #4) so an arbiter doesn't need prose.
-#: Re-measured 2026-08-17 (r16): the sandbox kernel now MASKS AVX from
-#: CPUID (/proc/cpuinfo flags end at sse2), so OpenBLAS runs its SSE
-#: kernels and the 1-thread matmul reads ~12-13 GFLOPS on a machine
-#: whose JVM, pure-Python and Spark throughput are UNCHANGED (same-hour
-#: evidence: py_mops 6.0-7.3 inside the old band, the fixed 200M-row
-#: Spark canary 0.31 s vs 0.314 s in BENCH_r15, and the transform
-#: pipeline measuring a best-ever-tying 23.0 s). Prior bands for the
-#: record: 45.2-52.2 GFLOPS (2026-08-16), 53-57 (r13) at 5.8-6.7 /
-#: 7.5-8 M py-ops/s. The gflops floor is a BLAS-kernel-selection
-#: signal now, not a clock signal — the band is re-pinned to the
-#: no-AVX surface so a healthy box stops reading as throttled.
-#: r17 re-pin: the sandbox rebooted twice more and AVX/AVX2/AVX-512
-#: are BACK in CPUID, so OpenBLAS runs its AVX kernels again and a
-#: healthy box reads 50-57 GFLOPS (r13-era values) at 6.9-7.8
-#: py_mops. The box now OSCILLATES on multi-minute periods (one
-#: mid-session sample: 27.7 GFLOPS / 5.44 py_mops recovering to
-#: 53.0 / 7.44 within the same bench run) — the band describes the
-#: healthy windows; a mid-oscillation end canary correctly discounts
-#: via health_ratio. Prior bands for the record: [10.5, 13.5] /
-#: [5.4, 7.5] (2026-08-17, no-AVX surface, r16), 45.2-52.2 GFLOPS
-#: (2026-08-16), 53-57 (r13) at 5.8-6.7 / 7.5-8 M py-ops/s.
-HEALTHY_BAND = {
-    "gflops_1t": [45.0, 57.0],
-    "py_mops": [6.5, 8.0],
-    "measured": "2026-08-18 (restored-AVX CPUID surface, r17; 8 "
-                "healthy-window samples across the session + one "
-                "excluded mid-oscillation sample 27.7/5.44)",
-}
-
-#: Most recent DIRECT healthy-canary measurement of the transform
-#: pipeline (VERDICT r14 #4): the linear health-ratio scaling in
-#: gate_estimate_healthy_sec overestimates ~2x at deep throttle
-#: (driver r14 artifact: ratio 0.389 -> estimate 10.4 s vs 22.1 s
-#: measured directly inside the healthy band). Floor the estimate at
-#: this number so an arbiter reading only the JSON can't conclude a
-#: better-than-measured gate. Shipped as data in the artifact.
-LAST_DIRECT_HEALTHY = {
-    # r17 re-measurement on the r17 transform code (types-count latch:
-    # sink counts materialize the DISK_ONLY caches, the types
-    # union-distinct waits and reads warm blocks): best 20.405 s =
-    # 823 k triples/s from the in-bench pipeline leg (the same
-    # tools/pipeline_bench.py the direct runs use, fresh subprocess
-    # JVM, warm-up excluded, best of 4: [33.792, 27.918, 65.548,
-    # 20.405]) with the bench END canary — the pipeline section runs
-    # last — at 56.89 GFLOPS / 7.82 py_mops, squarely inside the
-    # restored-AVX band. Same-session standalone 5-iter direct runs
-    # landed in degraded oscillation windows (bests 22.386 / 23.475 /
-    # 28.032; the 22.386 run's samples [28.5, 26.3, 24.4, 22.4, 25.0]
-    # are the session's tightest standalone spread) and are recorded
-    # here so the floor's provenance is complete. Prior floors for the
-    # record: 21.352 (2026-08-17, r16 xid-one-scan code, 5-iter
-    # direct at no-AVX canary 13.3/6.6), 27.795 (2026-08-16, r15
-    # code).
-    "transform_sec": 20.405,
-    "sf": 0.1,
-    "canary": {"gflops_1t": 56.89, "py_mops": 7.82},
-    "measured": "2026-08-18 (r17, in-bench pipeline_bench subprocess, "
-                "4 iters warm-up excluded; standalone direct runs "
-                "same session: 23.475 / 28.032 in degraded windows)",
-    "best_direct_healthy_sec": 20.405,
-    # code identity at measurement time (VERDICT r15 #3): the floor is
-    # a measurement of THIS transform code via transform_code_hash();
-    # when the current hash differs the clamp is stale and
-    # canary_verdict falls back to the unclamped estimate with
-    # gate_floor_stale flagged. The hash surface covers the full
-    # perf-relevant tree (ADVICE r16); the value below is the hash of
-    # the types-latch transform code the 20.405 s floor measured —
-    # re-pinning the hash alone is not a floor refresh.
-    # Re-pinned without a floor refresh once, for the fused stats
-    # prelude (datasets_counts + pivot beside the sinks, caches
-    # released in one finally): the floor is measured through
-    # tools/pipeline_bench.py, which runs ingest and transform with
-    # print_stats=False, and on that path the change submits the same
-    # jobs in the same order (previous hash b749c1ebe97b).
-    "code_hash": "13af1a4ac1b3",
-}
-
-
-def transform_code_hash() -> str:
-    """Content hash of the transform-pipeline code the
-    LAST_DIRECT_HEALTHY floor measured (VERDICT r15 #3). ADVICE r16:
-    the r16 two-file hash (plans/transform.py + sources/writers.py)
-    missed perf-relevant surface — transform wall-clock also depends on
-    the source layer (parquet reader, ttl parse reused by the RDF
-    read-back), the session confs (GC, memory, shuffle partitions,
-    gzip level), and the operator/function modules transform imports.
-    Hash that full surface so a stale floor self-documents instead of
-    silently misrepresenting new code."""
-    import hashlib
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    rels = [
-        "dgraph_dbpedia_spark/plans/transform.py",
-        "dgraph_dbpedia_spark/session.py",
-        "dgraph_dbpedia_spark/model.py",
-        "dgraph_dbpedia_spark/functions/rdf.py",
-        "dgraph_dbpedia_spark/functions/schema_gen.py",
-        "dgraph_dbpedia_spark/functions/hashing.py",
-        "dgraph_dbpedia_spark/operators/topk.py",
-        "dgraph_dbpedia_spark/operators/stats.py",
-        "dgraph_dbpedia_spark/operators/cachectl.py",
-    ]
-    src_dir = os.path.join(root, "dgraph_dbpedia_spark", "sources")
-    rels += sorted(
-        f"dgraph_dbpedia_spark/sources/{f}"
-        for f in os.listdir(src_dir)
-        if f.endswith(".py")
-    )
-    for rel in rels:
-        with open(os.path.join(root, rel), "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:12]
-
-
 def machine_canary() -> dict[str, float]:
     """Fixed machine-state probe (VERDICT r12 #4): a single-threaded
     512x512 numpy matmul (GFLOPS) and a pure-Python xorshift loop
@@ -159,9 +42,8 @@ def machine_canary() -> dict[str, float]:
     suite's thread pools. Recorded at bench start AND end: a sandbox
     CPU-throttled run (BENCH_SCALE r12 documented monotone afternoon
     degradation) now self-documents in the artifact instead of being
-    narrated. Healthy band: see HEALTHY_BAND (data, not prose). A
-    canary failure is recorded as {'error': ...} rather than aborting
-    the bench before a single measurement (ADVICE r13)."""
+    narrated. A canary failure is recorded as {'error': ...} rather
+    than aborting the bench before a single measurement (ADVICE r13)."""
     code = (
         "import time\n"
         "import numpy as np\n"
@@ -201,66 +83,8 @@ def machine_canary() -> dict[str, float]:
         # IndexError: a zero-exit subprocess with EMPTY stdout makes
         # splitlines()[-1] raise outside the original tuple (ADVICE r14)
         # a transient canary failure must not abort the bench before a
-        # single measurement is taken (ADVICE r13); an errored canary
-        # also can't prove health, so canary_verdict treats it as
-        # unknown rather than healthy
+        # single measurement is taken (ADVICE r13)
         return {"error": f"{type(e).__name__}: {e}"}
-
-
-def canary_verdict(
-    canary: dict, transform_sec: float | None, sf: float | None = None
-) -> dict:
-    """Machine-readable adjudication of the canary readings (VERDICT
-    r13 #4): the measured healthy band, a computed ``throttled`` flag
-    (end canary below 60% of the band floor on either metric — the
-    r13 driver run ended at 2.86 py_mops vs floor 5.8, which this flag
-    would have caught), and ``gate_estimate_healthy_sec`` — transform
-    wall-clock scaled by the end-canary health ratio, explicitly
-    labeled an ESTIMATE. The END canary is the one that matters for
-    the transform gate: the pipeline section runs last in the bench,
-    so its machine state is the end state, not the start state."""
-    out: dict = {"healthy_band": HEALTHY_BAND}
-    end = canary.get("end", {})
-    if "error" in end or not all(k in end for k in ("gflops_1t", "py_mops")):
-        out["throttled"] = None
-        out["note"] = "end canary unavailable; cannot adjudicate"
-        return out
-    floors = {k: HEALTHY_BAND[k][0] for k in ("gflops_1t", "py_mops")}
-    mids = {
-        k: (HEALTHY_BAND[k][0] + HEALTHY_BAND[k][1]) / 2
-        for k in ("gflops_1t", "py_mops")
-    }
-    out["throttled"] = any(end[k] < 0.6 * floors[k] for k in floors)
-    # health ratio: geometric mean of the two end-canary metrics vs the
-    # band midpoint, capped at 1.0 (a fast machine doesn't discount)
-    ratio = min(
-        1.0, (end["gflops_1t"] / mids["gflops_1t"] * end["py_mops"] / mids["py_mops"]) ** 0.5
-    )
-    out["health_ratio_end"] = round(ratio, 3)
-    if transform_sec:
-        est = transform_sec * ratio
-        # clamp (VERDICT r14 #4): linear scaling overestimates health
-        # ~2x at deep throttle — never publish an estimate below the
-        # most recent DIRECT healthy measurement of the same pipeline
-        out["last_direct_healthy"] = LAST_DIRECT_HEALTHY
-        # the floor is an sf0.1 measurement of a SPECIFIC transform
-        # code state: it applies only at exactly that sf (ADVICE r15 —
-        # the old `sf is None` arm would wrong-scale-clamp a caller
-        # omitting sf) and only while the transform code is unchanged
-        # since the measurement (VERDICT r15 #3)
-        stale = LAST_DIRECT_HEALTHY.get("code_hash") != transform_code_hash()
-        out["gate_floor_stale"] = stale
-        floor = (
-            LAST_DIRECT_HEALTHY["transform_sec"]
-            if sf == LAST_DIRECT_HEALTHY["sf"] and not stale
-            else 0.0
-        )
-        out["gate_estimate_healthy_sec"] = round(max(est, floor), 3)
-        out["gate_estimate_unclamped_sec"] = round(est, 3)
-        out["gate_estimate_is_estimate"] = True
-        if ratio < 0.5 or (stale and ratio < 1.0):
-            out["gate_estimate_low_confidence"] = True
-    return out
 
 
 def bench_pipelines(sf: float) -> dict[str, float]:
@@ -449,7 +273,6 @@ def main() -> None:
         "end": canary_end,
         "spark_range_200m_32p_sec": spark_canary_sec,
     }
-    canary.update(canary_verdict(canary, pipelines.get("transform_sec"), sf))
 
     total = round(sum(timings.values()), 3)
     detail = {

@@ -291,7 +291,8 @@ def _minhash_lanes_arrow(k: int):
     """Vectorized twin of the signature lanes: the k Carter-Wegman
     multiply-add-mod passes and the per-lane min run in numpy inside an
     Arrow batch (shingle md5 hashing stays JVM-native upstream).
-    Integer arithmetic under 2^62 — bit-identical to the native fold."""
+    Integer arithmetic under 2^62 — bit-identical to the native
+    reference fold :func:`_signatures_from_hashed`."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
@@ -324,7 +325,6 @@ def minhash_signatures(
     w: int = 3,
     k: int = 16,
     fast: bool = False,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """k-minimum-hash signature per document: ``sig[i] = min over
     shingles of lane_i(h(shingle))``. Returns ``(id, sig: array<bigint>)``.
@@ -335,23 +335,19 @@ def minhash_signatures(
     is a multiply+add+mod over the hashed-shingle array, not another
     digest pass. ``a_i < p`` and ``h mod p < p`` keep every product
     under 2^62, so the arithmetic is int64-exact in Spark AND DuckDB
-    (which errors on BIGINT overflow rather than wrapping).
-
-    ``use_arrow=True`` (default) runs the k lane passes as one numpy
-    kernel per Arrow batch instead of k interpreted array traversals;
-    bit-identical (integer math), pinned in tests. ``False`` keeps the
-    all-native plan (the oracle surface).
+    (which errors on BIGINT overflow rather than wrapping). The k lane
+    passes run as one numpy kernel per Arrow batch
+    (:func:`_minhash_lanes_arrow`) instead of k interpreted array
+    traversals.
     """
-    sh = _hashed_shingled(df, text_col, id_col, w, fast)
-    if use_arrow:
-        return sh.select(
-            F.col(id_col), _minhash_lanes_arrow(k)(F.col("sh")).alias("sig")
-        )
-    return _signatures_from_hashed(sh, id_col, k)
+    return _sigs_from_hashed(
+        _hashed_shingled(df, text_col, id_col, w, fast), id_col, k
+    )
 
 
 def _signatures_from_hashed(sh: DataFrame, id_col: str, k: int) -> DataFrame:
-    """Signature lanes over pre-hashed shingles ``(id, sh: array<bigint>)``.
+    """Native reference of :func:`_minhash_lanes_arrow`: signature lanes
+    over pre-hashed shingles ``(id, sh: array<bigint>)``.
 
     Closure capture, NOT default args, in the lambdas: pyspark counts
     lambda params to decide between (x) and (x, index) variants."""
@@ -423,16 +419,12 @@ def minhash_lsh_candidates(
     )
 
 
-def _sigs_from_hashed(
-    sh: DataFrame, id_col: str, k: int, use_arrow: bool
-) -> DataFrame:
-    """``(id, sig)`` from a hashed-shingle frame, selecting the Arrow
-    lane kernel or the native fold (bit-identical by construction)."""
-    if use_arrow:
-        return sh.select(
-            F.col(id_col), _minhash_lanes_arrow(k)(F.col("sh")).alias("sig")
-        )
-    return _signatures_from_hashed(sh, id_col, k)
+def _sigs_from_hashed(sh: DataFrame, id_col: str, k: int) -> DataFrame:
+    """``(id, sig)`` from a hashed-shingle frame through the Arrow lane
+    kernel."""
+    return sh.select(
+        F.col(id_col), _minhash_lanes_arrow(k)(F.col("sh")).alias("sig")
+    )
 
 
 def minhash_dedup_pairs(
@@ -444,19 +436,17 @@ def minhash_dedup_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     fast: bool = False,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pipeline: signatures -> banded candidates ->
     exact-Jaccard verification of candidates only. Returns
     ``(a, b, jaccard)`` pairs above threshold. ``fast=True`` -> seeded
-    xxhash64 everywhere (production path, not oracle-checkable);
-    ``use_arrow`` selects the vectorized (bit-identical) lane kernel."""
+    xxhash64 everywhere (production path, not oracle-checkable)."""
     from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     rows_per_band = k // bands
     # ONE shingle-hashing pass feeds signatures AND the verify step
     sh = _hashed_shingled(df, text_col, id_col, w, fast).persist()
-    sigs = _sigs_from_hashed(sh, id_col, k, use_arrow)
+    sigs = _sigs_from_hashed(sh, id_col, k)
     cands = minhash_lsh_candidates(sigs, id_col, bands, rows_per_band, fast)
     sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
@@ -479,8 +469,9 @@ def _simhash_fold_arrow(n_bits: int = N_SIMHASH_BITS):
     """Vectorized twin of the native vote fold: token hashes (computed
     JVM-side — md5 stays native) fold to the fingerprint in numpy inside
     an Arrow batch. Integer arithmetic, so bit-IDENTICAL to the native
-    fold by construction (no float-order caveat like the hyperplane
-    sketch). Returns a Column-producing pandas UDF."""
+    reference fold :func:`_simhash_fold_native` by construction (no
+    float-order caveat like the hyperplane sketch). Returns a
+    Column-producing pandas UDF."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
@@ -502,28 +493,35 @@ def _simhash_fold_arrow(n_bits: int = N_SIMHASH_BITS):
     return pandas_udf(fold, LongType())
 
 
+def _token_hashes(
+    df: DataFrame, text_col: str, id_col: str, fast: bool
+) -> DataFrame:
+    """``(id, hs)``: the cross-engine hash of every whitespace token."""
+    hs = F.transform(tokens(F.col(text_col)), lambda t: hash64(t, fast=fast))
+    return df.select(F.col(id_col), hs.alias("hs"))
+
+
 def simhash(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     fast: bool = False,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """60-bit SimHash per document over whitespace tokens: bit b is set
     iff the sum over tokens of (+-1 by token-hash bit b) is positive.
     Returns ``(id, simhash: bigint)``. Per-row only — no shuffle.
 
-    ``use_arrow=True`` (default) runs the vote fold as a numpy kernel in
-    an Arrow batch (the interpreted higher-order fold walks tokens x 60
-    bits in the expression interpreter); results are bit-identical —
-    integer math — so the oracle contract is unaffected. ``False`` keeps
-    the all-native plan."""
-    hs = F.transform(tokens(F.col(text_col)), lambda t: hash64(t, fast=fast))
-    df = df.select(F.col(id_col), hs.alias("hs"))
+    The vote fold runs as a numpy kernel in an Arrow batch
+    (:func:`_simhash_fold_arrow`; the interpreted higher-order fold
+    walks tokens x 60 bits in the expression interpreter); results are
+    bit-identical — integer math — so the oracle contract is
+    unaffected."""
+    return _token_hashes(df, text_col, id_col, fast).select(
+        F.col(id_col), _simhash_fold_arrow()(F.col("hs")).alias("simhash")
+    )
 
-    if use_arrow:
-        return df.select(
-            F.col(id_col), _simhash_fold_arrow()(F.col("hs")).alias("simhash")
-        )
 
+def _simhash_fold_native(hashed: DataFrame, id_col: str) -> DataFrame:
+    """Native reference of :func:`_simhash_fold_arrow` over a
+    :func:`_token_hashes` frame: ``(id, hs)`` -> ``(id, simhash)``."""
     # single fold over the token-hash array accumulating all 60 bit
     # votes at once (vote[b] += bit(h,b) ? +1 : -1), then pack votes>0
     # into the fingerprint. The naive form — one F.aggregate per bit —
@@ -550,7 +548,7 @@ def simhash(
             0L, (acc, x) -> acc + x
         )"""
     )
-    return df.select(F.col(id_col), votes.alias("votes")).select(
+    return hashed.select(F.col(id_col), votes.alias("votes")).select(
         F.col(id_col), pack.alias("simhash")
     )
 
@@ -1509,7 +1507,6 @@ def dedup_increment(
     bands: int = 4,
     threshold: float = 0.5,
     fast: bool = False,
-    use_arrow: bool = True,
     **cluster_kwargs,
 ) -> DataFrame:
     """Incremental corpus dedup — the production shape of a GROWING
@@ -1543,11 +1540,11 @@ def dedup_increment(
     sh_e = _hashed_shingled(existing, text_col, id_col, w, fast).persist()
     sh_b = _hashed_shingled(batch, text_col, id_col, w, fast).persist()
     bk_e = _lsh_buckets(
-        _sigs_from_hashed(sh_e, id_col, k, use_arrow),
+        _sigs_from_hashed(sh_e, id_col, k),
         id_col, bands, rows_per_band, fast,
     )
     bk_b = _lsh_buckets(
-        _sigs_from_hashed(sh_b, id_col, k, use_arrow),
+        _sigs_from_hashed(sh_b, id_col, k),
         id_col, bands, rows_per_band, fast,
     ).persist()
 
@@ -1640,7 +1637,6 @@ def minhash_join(
     bands: int = 4,
     threshold: float = 0.5,
     fast: bool = False,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Fuzzy similarity JOIN across two corpora: every ``(a, b,
     jaccard)`` with ``a`` from ``left``, ``b`` from ``right`` and exact
@@ -1659,11 +1655,11 @@ def minhash_join(
     sh_l = _hashed_shingled(left, text_col, id_col, w, fast).persist()
     sh_r = _hashed_shingled(right, text_col, id_col, w, fast).persist()
     bk_l = _lsh_buckets(
-        _sigs_from_hashed(sh_l, id_col, k, use_arrow),
+        _sigs_from_hashed(sh_l, id_col, k),
         id_col, bands, rows_per_band, fast,
     )
     bk_r = _lsh_buckets(
-        _sigs_from_hashed(sh_r, id_col, k, use_arrow),
+        _sigs_from_hashed(sh_r, id_col, k),
         id_col, bands, rows_per_band, fast,
     )
     cands = (
@@ -2024,7 +2020,6 @@ def split_leakage_report(
     bands: int = 4,
     threshold: float = 0.5,
     seed: int = 1,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Cross-split near-dup LEAKAGE audit: split the corpus with
     :func:`..sampling.split_corpus`'s deterministic id-hash coin, find
@@ -2063,7 +2058,6 @@ def split_leakage_report(
         k=k,
         bands=bands,
         threshold=threshold,
-        use_arrow=use_arrow,
     )
     splits = split_corpus(df, fractions, id_col=id_col, seed=seed).select(
         F.col(id_col),

@@ -89,7 +89,6 @@ def pq_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_decimals: int = 4,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Train the ``m`` per-subspace codebooks. Returns ``(j, cid, c)``
     — ``m * k_sub`` bounded rows (subspace ``j`` in 0..m-1, sub-
@@ -117,20 +116,18 @@ def pq_train(
     tie-break — and therefore every trained value — is bit-identical
     to the per-subspace form the DuckDB oracle replays).
 
-    ``use_arrow=True`` (default) swaps each iteration's assignment
-    projection for :func:`encode_codes_arrow` — the SAME pinned
-    kernel the encode path runs, fed from a bounded per-iteration
-    driver read of the just-checkpointed ``m x k_sub`` codebook frame
-    (the ivf_train Arrow-lane pattern). The interpreted per-row HOF
-    fold is ``n x m x k_sub x dims/m`` multiply-adds per iteration —
-    the measured training wall at production codebook widths
-    (BENCH_SCALE r12: RQ's full-dim fold at k_sub=256 made no
-    progress in 20 minutes at 200k vectors; the kernel's matmul form
-    is the difference between "trainable on a sample" and "not").
-    Assignments are bit-equal to the native fold (pinned: codebooks
-    from both lanes compare exactly), so trained values — and the
-    DuckDB replay — are unchanged. ``use_arrow=False`` remains the
-    JVM-only oracle surface."""
+    Each iteration's assignment runs :func:`encode_codes_arrow` — the
+    SAME pinned kernel the encode path runs, fed from a bounded
+    per-iteration driver read of the just-checkpointed ``m x k_sub``
+    codebook frame (the ivf_train pattern). The interpreted per-row
+    HOF fold is ``n x m x k_sub x dims/m`` multiply-adds per iteration
+    — the measured training wall at production codebook widths
+    (BENCH_SCALE r12: RQ's full-dim fold at k_sub=256 made no progress
+    in 20 minutes at 200k vectors; the kernel's matmul form is the
+    difference between "trainable on a sample" and "not").
+    Assignments are bit-equal to the native reference fold
+    (:func:`_pq_encode_native`, pinned in tests), so trained values —
+    and the DuckDB replay — match the fold's."""
     from pyspark.sql import Window
 
     from dgraph_dbpedia_spark.operators.cachectl import (
@@ -177,15 +174,12 @@ def pq_train(
         .localCheckpoint()
     )
     last_cp = cent
-    # loud seed validation, BOTH lanes (one bounded m x k_sub read of
-    # the frame just checkpointed — the Arrow lane re-reads it per
-    # iteration anyway): a NULL, short, or over-long vector among the
-    # k_sub lowest ids would otherwise train a DEGENERATE codebook —
-    # silently on the native fold (NULL-distance centroid or a
-    # dims-prefix of a wider vector), as an opaque width error inside
-    # _collect_codebooks on the Arrow lane (r12 review: the lanes
-    # must stay a pure physical swap, and a poisoned seed is caller
-    # error either way)
+    # loud seed validation (one bounded m x k_sub read of the frame
+    # just checkpointed — each iteration re-reads it anyway): a NULL,
+    # short, or over-long vector among the k_sub lowest ids would
+    # otherwise train a DEGENERATE codebook — an opaque width error
+    # inside _collect_codebooks, or a dims-prefix of a wider vector
+    # (r12 review: a poisoned seed is caller error)
     seed_rows = cent.collect()
     if not seed_rows:
         raise ValueError(
@@ -201,61 +195,28 @@ def pq_train(
             )
     cent = cent.select("j", "cid", "c")
 
-    # closure factory, NOT `lambda s, jj=j` (the two-param HOF arity
-    # trap — see pq_encode's native lane)
-    def match_j(jj: int):
-        return lambda s: s["j"] == jj
-
     for _ in range(n_iter):
         # ONE corpus pass for all m subspace assignments, emitted
-        # through the inline(array(struct)) barrier so
-        # InferFiltersFromGenerate can't duplicate the m broadcast
-        # folds into a pushed-down size() filter
-        if use_arrow:
-            # per-iteration bounded collect of the m x k_sub frame
-            # just checkpointed (an X6 read, never a corpus job);
-            # the codes column binds in its OWN select so the m
-            # get()s below reference ONE Arrow eval, not m
-            # CollapseProject-duplicated kernel runs
-            enc = encode_codes_arrow(_collect_codebooks(cent, m, sub))
-            asg = e.select(
-                "_v", enc(F.col("_v")).alias("_codes")
-            ).select(
-                F.inline(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(j).alias("j"),
-                                F.get("_codes", j).alias("cid"),
-                                F.slice("_v", j * sub + 1, sub).alias(
-                                    "sv"
-                                ),
-                            )
-                            for j in range(m)
-                        ]
-                    )
+        # through the inline(array(struct)) barrier. Per-iteration
+        # bounded collect of the m x k_sub frame just checkpointed (an
+        # X6 read, never a corpus job); the codes column binds in its
+        # OWN select so the m get()s below reference ONE Arrow eval,
+        # not m CollapseProject-duplicated kernel runs
+        enc = encode_codes_arrow(_collect_codebooks(cent, m, sub))
+        asg = e.select("_v", enc(F.col("_v")).alias("_codes")).select(
+            F.inline(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(j).alias("j"),
+                            F.get("_codes", j).alias("cid"),
+                            F.slice("_v", j * sub + 1, sub).alias("sv"),
+                        )
+                        for j in range(m)
+                    ]
                 )
             )
-        else:
-            asg = e.crossJoin(F.broadcast(_codebook_row(cent))).select(
-                F.inline(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(j).alias("j"),
-                                _nearest_l2(
-                                    F.slice("_v", j * sub + 1, sub),
-                                    F.filter(F.col("_cb"), match_j(j)),
-                                )["cid"].alias("cid"),
-                                F.slice("_v", j * sub + 1, sub).alias(
-                                    "sv"
-                                ),
-                            )
-                            for j in range(m)
-                        ]
-                    )
-                )
-            )
+        )
         means = (
             asg.select("j", "cid", F.posexplode("sv").alias("pos", "val"))
             .groupBy("j", "cid", "pos")
@@ -424,7 +385,8 @@ def encode_codes_arrow(cmats):
     scale PQ exists for (VERDICT r11 #2). Same memory shape and
     pattern as ``nearest_centroid_arrow``
     (``operators/similarity.py``), and the same bit-equality posture
-    (pinned equal to the native fold on real data by pytest; the FP
+    (pinned equal to the native reference :func:`_pq_encode_native` on
+    real data by pytest; the FP
     summation path differs from the JVM fold only in the negligible
     round-6 boundary regime its docstring documents — tiny negative
     distances from cancellation are clamped to 0.0 so a self-match
@@ -494,7 +456,6 @@ def pq_encode(
     m: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Encode every vector as its ``m`` nearest sub-centroid ids.
     Returns ``(id, codes: array<int>)`` (dense 0..k_sub-1 values —
@@ -504,26 +465,35 @@ def pq_encode(
     :func:`..similarity.ivf_assign` cid and partition by it for the
     full IVF-PQ layout).
 
-    SHUFFLE-FREE over the corpus either way — a single projection
-    between scan and output (the :func:`..similarity.ivf_assign`
-    posture):
-
-    - ``use_arrow=True`` (default): the bounded codebook frame is
-      collected driver-side (an X6 read, m x k_sub rows) and each
-      subspace encodes as one norm-expansion matmul per Arrow batch
-      (:func:`encode_codes_arrow`, ``(batch, k_sub)`` working set) —
-      the interpreted ``m x k_sub x dims/m`` higher-order fold per row
-      is the measured encode cost at 200k vectors (BENCH_SCALE r11).
-      Pinned equal to the native fold by pytest.
-    - ``use_arrow=False``: the JVM-only oracle surface — the broadcast
-      codebook row + per-subspace ``_nearest_l2`` fold."""
+    SHUFFLE-FREE over the corpus — a single projection between scan
+    and output (the :func:`..similarity.ivf_assign` posture): the
+    bounded codebook frame is collected driver-side (an X6 read, m x
+    k_sub rows) and each subspace encodes as one norm-expansion matmul
+    per Arrow batch (:func:`encode_codes_arrow`, ``(batch, k_sub)``
+    working set) — the interpreted ``m x k_sub x dims/m`` higher-order
+    fold per row is the measured encode cost at 200k vectors
+    (BENCH_SCALE r11). Pinned equal to :func:`_pq_encode_native` by
+    pytest."""
     sub = _validate_pq(dims, m, 1)
-    if use_arrow:
-        enc = encode_codes_arrow(_collect_codebooks(codebooks, m, sub))
-        return df.select(
-            F.col(id_col),
-            enc(F.col(vec_col).cast("array<double>")).alias("codes"),
-        )
+    enc = encode_codes_arrow(_collect_codebooks(codebooks, m, sub))
+    return df.select(
+        F.col(id_col),
+        enc(F.col(vec_col).cast("array<double>")).alias("codes"),
+    )
+
+
+def _pq_encode_native(
+    df: DataFrame,
+    codebooks: DataFrame,
+    dims: int,
+    m: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Native reference of :func:`pq_encode` (same contract), kept so
+    tests can pin :func:`encode_codes_arrow` against it: the broadcast
+    codebook row + per-subspace ``_nearest_l2`` fold."""
+    sub = _validate_pq(dims, m, 1)
     v = F.col("_v")
 
     # closure factory, NOT `lambda s, jj=j`: a two-parameter lambda is
@@ -895,7 +865,6 @@ def pq_reconstruction_error_report(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-label PQ reconstruction-error audit (r15): the round-6
     cosine loss between each vector and its PQ decode — the
@@ -908,12 +877,11 @@ def pq_reconstruction_error_report(
     (:func:`..similarity._recon_error_report`, ONE definition of the
     error fold).
 
-    Codes come from the SAME encode lanes the serve path materializes
-    (:func:`encode_codes_arrow` kernel / the native ``_nearest_l2``
-    fold — both pinned bit-equal by the pq test suite), and the
-    decode is a LITERAL codebook lookup: the bounded ``m x k_sub``
-    codebook frame is collected once (an X6 read, same as the arrow
-    encode lane) and each subspace's reconstruction is
+    Codes come from the SAME encode kernel the serve path materializes
+    (:func:`encode_codes_arrow`, pinned bit-equal to the native fold
+    by the pq test suite), and the decode is a LITERAL codebook
+    lookup: the bounded ``m x k_sub`` codebook frame is collected once
+    (an X6 read, shared with the encode matrices) and each subspace's reconstruction is
     ``element_at(<literal centroid array>, code + 1)`` — a scan-fused
     projection, so the corpus is never joined or shuffled; the only
     shuffle is the bounded per-label aggregate.
@@ -928,35 +896,14 @@ def pq_reconstruction_error_report(
         F.col(label_col).alias("_lab"),
     )
     # ONE bounded collect serves the encode matrices AND the decode
-    # literals (ADVICE r15: previously collected twice); the dense-cid
-    # contract is asserted in pure Python for BOTH lanes BEFORE the
-    # literal decode below could silently mis-index a sparse codebook
-    # (ADVICE r16: numpy enters only on the Arrow lane that needs the
-    # matrices — the native lane stays importable without it)
+    # literals (ADVICE r15: previously collected twice); the gather
+    # asserts the dense-cid contract BEFORE the literal decode below
+    # could silently mis-index a sparse codebook
     cb_rows = _collect_codebook_rows(codebooks)
-    _dense_codebook_entries(cb_rows, m, sub)
-    if use_arrow:
-        enc = encode_codes_arrow(
-            _collect_codebooks(codebooks, m, sub, rows=cb_rows)
-        )
-        coded = base.withColumn("_codes", enc(F.col("_v")))
-    else:
-
-        def match_j(jj: int):
-            return lambda s: s["j"] == jj
-
-        nearest = [
-            _nearest_l2(
-                F.slice(F.col("_v"), j * sub + 1, sub),
-                F.filter(F.col("_cb"), match_j(j)),
-            )["cid"]
-            for j in range(m)
-        ]
-        coded = base.crossJoin(
-            F.broadcast(_codebook_row(codebooks))
-        ).select(
-            F.col(id_col), "_v", "_lab", F.array(*nearest).alias("_codes")
-        )
+    enc = encode_codes_arrow(
+        _collect_codebooks(codebooks, m, sub, rows=cb_rows)
+    )
+    coded = base.withColumn("_codes", enc(F.col("_v")))
     # literal decode: dense cids 0..k_sub-1 index the sorted centroid
     # literals directly (the pq_train contract, asserted above) —
     # reuses the one collected codebook, no second driver job

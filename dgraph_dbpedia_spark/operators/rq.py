@@ -38,13 +38,15 @@ never assumed; the deployed contract is shortlist-for-exact-re-rank
 from __future__ import annotations
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dgraph_dbpedia_spark.operators.pq import (
+    _collect_codebooks,
     _exact_rerank,
     _nearest_l2,
     _validate_shortlist,
+    encode_codes_arrow,
     pq_train,
 )
 from dgraph_dbpedia_spark.operators.similarity import _dot
@@ -129,6 +131,28 @@ def _winning_c():
     )["c"]
 
 
+def _stage_code(cb: DataFrame, dims: int, vec: Column) -> Column:
+    """``vec``'s nearest centroid id in the stage codebook ``cb``
+    (``cid, c`` rows): rq_train's between-stage residual assignment.
+
+    A single-stage Arrow encode against the just-trained (checkpointed,
+    bounded) codebook: one bounded driver read + one matmul kernel
+    instead of the full-dim ``n x k_sub`` HOF fold. Width mask: the
+    residual is a zip_with over the FULL vector (no slicing), whose
+    native nearest-centroid fold NULL-pads a vector LONGER than dims
+    -> d NULL -> cid 0, while the encode kernel would prefix-encode
+    it. Masking non-dims-width vectors to NULL reproduces the fold's
+    code-0 class for them (shorter/NULL rows already land there).
+    Pinned equal to the first code of :func:`_rq_encode_native`."""
+    enc = encode_codes_arrow(
+        _collect_codebooks(
+            cb.select(F.lit(0).alias("j"), "cid", "c"), 1, dims
+        )
+    )
+    masked = F.when(F.size(vec) == F.lit(dims), vec)
+    return F.get(enc(masked), 0)
+
+
 def rq_train(
     df: DataFrame,
     dims: int,
@@ -138,7 +162,6 @@ def rq_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_decimals: int = 4,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Train the ``n_levels`` stage codebooks greedily (the standard
     RQ recipe: stage ``l`` k-means the residuals stage ``l-1`` left).
@@ -154,20 +177,19 @@ def rq_train(
     materialized frame instead of re-deriving ``l`` stages of
     residuals per pass).
 
-    ``use_arrow=True`` (default) routes BOTH per-row L2 assignments
-    through the pinned :func:`..pq.encode_codes_arrow` kernel: the
-    stage Lloyd iterations (via ``pq_train(use_arrow=True)``) and the
-    between-stage residual assignment (an ``m=1`` single-stage encode
-    against the just-trained codebook; the winning centroid is still
-    picked natively from the broadcast stage row by the returned cid,
-    and the residual subtraction stays the exact native ``zip_with``).
-    RQ's native full-dim fold is the package's worst interpreted
-    assignment — ``n x k_sub x dims`` HOF multiply-adds per pass made
-    k_sub=256 training unrunnable at 200k vectors (BENCH_SCALE r12) —
-    while assignments stay bit-equal (pinned: both-lane codebooks
-    compare exactly), so trained values and the DuckDB replay are
-    unchanged. ``use_arrow=False`` remains the JVM-only oracle
-    surface."""
+    BOTH per-row L2 assignments run the pinned
+    :func:`..pq.encode_codes_arrow` kernel: the stage Lloyd iterations
+    (via :func:`..pq.pq_train`) and the between-stage residual
+    assignment (an ``m=1`` single-stage encode against the
+    just-trained codebook; the winning centroid is picked natively
+    from the broadcast stage row by the returned cid, and the residual
+    subtraction stays the exact native ``zip_with``). RQ's native
+    full-dim fold is the package's worst interpreted assignment —
+    ``n x k_sub x dims`` HOF multiply-adds per pass made k_sub=256
+    training unrunnable at 200k vectors (BENCH_SCALE r12) — while the
+    kernel's assignments stay bit-equal to it (pinned against
+    :func:`..pq._pq_encode_native`), so trained values and the DuckDB
+    replay match the fold's."""
     from dgraph_dbpedia_spark.operators.cachectl import (
         release_local_checkpoint,
     )
@@ -188,80 +210,27 @@ def rq_train(
             id_col=id_col,
             vec_col="_rv",
             round_decimals=round_decimals,
-            use_arrow=use_arrow,
         ).select(F.lit(lvl).alias("lvl"), "cid", "c")
         out = cb if out is None else out.unionByName(cb)
         if lvl < n_levels - 1:
             stage = _stage_row(cb, lvl)
-            if use_arrow:
-                # single-stage Arrow encode against the just-trained
-                # (checkpointed, bounded) codebook: one bounded
-                # driver read + one matmul kernel instead of the
-                # full-dim n x k_sub HOF fold. The cid binds in its
-                # OWN select (CollapseProject) and the winning
-                # centroid/residual stay native — identical values
-                # either lane.
-                from dgraph_dbpedia_spark.operators.pq import (
-                    _collect_codebooks,
-                    encode_codes_arrow,
-                )
-
-                enc = encode_codes_arrow(
-                    _collect_codebooks(
-                        cb.select(F.lit(0).alias("j"), "cid", "c"),
-                        1,
-                        dims,
-                    )
-                )
-                # width mask: the native residual fold zip_withs the
-                # FULL vector (no slicing), so a vector LONGER than
-                # dims NULL-pads the centroid side -> d NULL -> cid 0,
-                # while the encode kernel would prefix-encode it.
-                # Masking non-dims-width vectors to NULL reproduces
-                # the kernel's code-0 class for them (shorter/NULL
-                # rows already land there in both lanes).
-                masked = F.when(
-                    F.size("_rv") == F.lit(dims), F.col("_rv")
-                )
-                asg = cur.select(
-                    F.col(id_col),
-                    F.col("_rv"),
-                    F.get(enc(masked), 0).alias("_c0"),
-                ).crossJoin(F.broadcast(stage))
-                win = F.get(
-                    F.filter(
-                        F.col("_cent"),
-                        lambda s: s["cid"] == F.col("_c0"),
-                    ),
-                    0,
-                )["c"]
-                cur = asg.select(
-                    F.col(id_col),
-                    F.zip_with("_rv", win, lambda a, b: a - b).alias(
-                        "_rv"
-                    ),
-                ).localCheckpoint()
-            else:
-                # nearest bound in its OWN select (the CollapseProject
-                # trap); _nearest_l2's sorted struct carries only
-                # (d, cid), so the winning centroid VECTOR is picked
-                # from the bounded broadcast list in the next select
-                # (an O(k) filter per row — cids are unique, exactly
-                # one match)
-                asg = cur.crossJoin(F.broadcast(stage)).select(
-                    F.col(id_col),
-                    F.col("_rv"),
-                    F.col("_cent"),
-                    _nearest_l2(F.col("_rv"), F.col("_cent")).alias(
-                        "_b"
-                    ),
-                )
-                cur = asg.select(
-                    F.col(id_col),
-                    F.zip_with(
-                        "_rv", _winning_c(), lambda a, b: a - b
-                    ).alias("_rv"),
-                ).localCheckpoint()
+            # the cid binds in its OWN select (CollapseProject) and the
+            # winning centroid/residual stay native
+            asg = cur.select(
+                F.col(id_col),
+                F.col("_rv"),
+                _stage_code(cb, dims, F.col("_rv")).alias("_c0"),
+            ).crossJoin(F.broadcast(stage))
+            win = F.get(
+                F.filter(
+                    F.col("_cent"), lambda s: s["cid"] == F.col("_c0")
+                ),
+                0,
+            )["c"]
+            cur = asg.select(
+                F.col(id_col),
+                F.zip_with("_rv", win, lambda a, b: a - b).alias("_rv"),
+            ).localCheckpoint()
             cps.append(cur)
     # stage residual checkpoints are only read while the NEXT stage
     # trains, and `out` is built solely from pq_train's own
@@ -290,7 +259,8 @@ def rq_codes_arrow(cmats):
     ranks by the native finite < inf < NaN tier rule via
     :func:`..pq._l2_codes_np` (code 0 against a finite codebook; RQ
     uses the FULL vector, so one bad component degrades the whole
-    row, unlike PQ's per-subspace containment)."""
+    row, unlike PQ's per-subspace containment). Native reference:
+    :func:`_rq_encode_native`."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
@@ -395,35 +365,41 @@ def rq_encode(
     n_levels: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Greedy RQ encoding: per stage, the nearest centroid of the
     running residual (round-6 L2 asc, cid asc). Returns ``(id, codes:
     array<int>)`` with ``codes[l]`` the stage-``l`` dense cid —
-    SHUFFLE-FREE over the corpus either way (the pq_encode posture):
-
-    - ``use_arrow=True`` (default): the validated bounded codebook
-      frame is collected driver-side and both stages encode as one
-      norm-expansion matmul per Arrow batch (:func:`rq_codes_arrow`)
-      — the interpreted full-dim ``k_sub``-centroid fold per row per
-      stage is the measured encode cost at the 200k/k_sub=256 scale
-      point. Pinned bit-equal to the native lane by pytest.
-    - ``use_arrow=False``: the JVM-only oracle surface — one
-      projection per stage against ONE broadcast codebook row,
-      residuals carried as generated columns between binds (each
-      stage's nearest bound in its own select — the CollapseProject
-      trap)."""
+    SHUFFLE-FREE over the corpus (the pq_encode posture): the
+    validated bounded codebook frame is collected driver-side and
+    both stages encode as one norm-expansion matmul per Arrow batch
+    (:func:`rq_codes_arrow`) — the interpreted full-dim
+    ``k_sub``-centroid fold per row per stage is the measured encode
+    cost at the 200k/k_sub=256 scale point. Pinned bit-equal to
+    :func:`_rq_encode_native` by pytest."""
     _rq_validate(dims, k_sub=1, n_levels=n_levels)
-    if use_arrow:
-        # the gather validates (ONE bounded collect, not
-        # validate-then-collect — r12 review)
-        enc = rq_codes_arrow(
-            _collect_rq_codebooks(codebooks, dims, n_levels)
-        )
-        return df.select(
-            F.col(id_col),
-            enc(F.col(vec_col).cast("array<double>")).alias("codes"),
-        )
+    # the gather validates (ONE bounded collect, not
+    # validate-then-collect — r12 review)
+    enc = rq_codes_arrow(_collect_rq_codebooks(codebooks, dims, n_levels))
+    return df.select(
+        F.col(id_col),
+        enc(F.col(vec_col).cast("array<double>")).alias("codes"),
+    )
+
+
+def _rq_encode_native(
+    df: DataFrame,
+    codebooks: DataFrame,
+    dims: int,
+    n_levels: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Native reference of :func:`rq_encode` (same contract), kept so
+    tests can pin :func:`rq_codes_arrow` against it: one projection
+    per stage against ONE broadcast codebook row, residuals carried as
+    generated columns between binds (each stage's nearest bound in its
+    own select — the CollapseProject trap)."""
+    _rq_validate(dims, k_sub=1, n_levels=n_levels)
     _validate_rq_codebooks(codebooks, dims, n_levels)
     cur = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_rv")

@@ -779,7 +779,6 @@ def cluster_balanced_sample(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 1,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Diversity-balanced subsampling over an embedding column: assign
     every row to its nearest centroid (cosine — the package's IVF
@@ -796,8 +795,8 @@ def cluster_balanced_sample(
     Returns ``(id, cid)`` — sampled ids with their cluster, smallest
     ``hash(id, seed)`` first within each cluster, ties by id.
 
-    100 TB shape: assignment is a shuffle-free projection (broadcast
-    centroids / Arrow matmul lane); the only shuffle is the
+    100 TB shape: assignment is a shuffle-free projection (bounded
+    centroids in an Arrow matmul kernel); the only shuffle is the
     per-cluster rank window on ``cid`` — and the coin is a pure
     function of the id, so the sample is stable under repartitioning,
     engine and run (the :func:`weighted_sample` determinism
@@ -818,7 +817,7 @@ def cluster_balanced_sample(
         if n_clusters < 1:
             raise ValueError(f"n_clusters must be >= 1, got {n_clusters}")
         centroids = ivf_seed_centroids(e, n_clusters, id_col, "_e")
-    asg = ivf_assign(e, centroids, id_col, "_e", use_arrow=use_arrow)
+    asg = ivf_assign(e, centroids, id_col, "_e")
     h = hash64(F.col(id_col).cast("string"), seed=seed)
     w = Window.partitionBy("cid").orderBy(h.asc(), F.col(id_col).asc())
     return (

@@ -109,8 +109,8 @@ def hyperplane_signs_arrow(n_planes: int, dims: int):
     Bit-compatibility: numpy's dot may re-associate the float sum vs the
     native sequential fold; a sign flip needs a projection within ~1e-13
     of zero, which for the md5-derived planes has negligible probability
-    (pinned equality asserted in tests/test_similarity.py). The native
-    version remains the oracle surface.
+    (pinned equality asserted in tests/test_similarity.py against the
+    native :func:`hyperplane_signs`, kept as its reference fold).
 
     Returns a ``Column``-producing callable: ``hyperplane_signs_arrow(
     8, 64)(F.col("e"))``."""
@@ -135,12 +135,6 @@ def hyperplane_signs_arrow(n_planes: int, dims: int):
         return pd.Series((bits @ weights).astype(np.int64))
 
     return pandas_udf(sketch_batch, LongType())
-
-
-def _bucket_col(vec: Column, n_planes: int, dims: int, use_arrow: bool) -> Column:
-    if use_arrow:
-        return hyperplane_signs_arrow(n_planes, dims)(vec)
-    return hyperplane_signs(vec, n_planes, dims)
 
 
 def hyperplane_signs(vec: Column, n_planes: int, dims: int) -> Column:
@@ -230,12 +224,11 @@ def lsh_bucketed_topk(
     query_col: str = "q",
     n_planes: int = 8,
     dims: int = 64,
-    use_arrow: bool = True,
     n_probes: int = 1,
 ) -> DataFrame:
     """ANN: restrict the exact re-rank to vectors sharing the query's
     LSH bucket(s). Recall < 1 by construction; raise ``n_probes``
-    (query-directed multi-probe, arrow path only) or lower ``n_planes``
+    (query-directed multi-probe) or lower ``n_planes``
     for recall, the reverse for cost. Measured on planted-neighbor data
     (clustered vectors, the regime where ANN is meaningful — the
     driver's synthetic embeddings are isotropic random, where NO
@@ -244,40 +237,25 @@ def lsh_bucketed_topk(
     scanning ~7% of the corpus
     (tests/test_similarity.py::test_lsh_multiprobe_recall).
 
-    ``use_arrow=True`` (default) computes the corpus-side sketch with
-    the vectorized numpy kernel AND resolves the (bounded, 1-row) query
-    vector driver-side: its probe sequence becomes a literal FILTER on
-    the corpus sketch — no join, no second Python stage — and the query
-    vector a literal array in the scoring expression. The sequential
-    per-element float fold of the native plan is preserved exactly
-    (repr round-trips doubles), so results match the all-native path
-    bit-for-bit. ``False`` keeps the all-native expression plan (the
-    JVM-only oracle surface; single-probe only)."""
+    The corpus-side sketch runs as the vectorized numpy kernel
+    (:func:`hyperplane_signs_arrow`) and the (bounded, 1-row) query
+    vector resolves driver-side: its probe sequence becomes a literal
+    FILTER on the corpus sketch — no join, no second Python stage — and
+    the query vector a literal array in the native scoring expression
+    (repr round-trips doubles, so the sequential per-element float fold
+    is unchanged)."""
     cand = df.select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("e"),
-        _bucket_col(
-            F.col(vec_col).cast("array<double>"), n_planes, dims, use_arrow
+        hyperplane_signs_arrow(n_planes, dims)(
+            F.col(vec_col).cast("array<double>")
         ).alias("bucket"),
     )
-    if use_arrow:
-        q_vec = [float(x) for x in query.select(query_col).first()[0]]
-        buckets = probe_buckets(q_vec, n_planes, dims, n_probes)
-        q_lit = F.expr("array(" + ",".join(repr(v) + "D" for v in q_vec) + ")")
-        scored = cand.where(F.col("bucket").isin(buckets)).select(
-            F.col(id_col), F.round(cosine(F.col("e"), q_lit), 4).alias("sim")
-        )
-        return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
-    if n_probes != 1:
-        raise ValueError("multi-probe requires use_arrow=True")
-    q = query.select(
-        F.col(query_col).cast("array<double>").alias("q"),
-        _bucket_col(
-            F.col(query_col).cast("array<double>"), n_planes, dims, use_arrow
-        ).alias("bucket"),
-    )
-    scored = cand.join(F.broadcast(q), "bucket").select(
-        F.col(id_col), F.round(cosine("e", "q"), 4).alias("sim")
+    q_vec = [float(x) for x in query.select(query_col).first()[0]]
+    buckets = probe_buckets(q_vec, n_planes, dims, n_probes)
+    q_lit = F.expr("array(" + ",".join(repr(v) + "D" for v in q_vec) + ")")
+    scored = cand.where(F.col("bucket").isin(buckets)).select(
+        F.col(id_col), F.round(cosine(F.col("e"), q_lit), 4).alias("sim")
     )
     return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
@@ -292,7 +270,6 @@ def lsh_bucketed_topk_many(
     query_col: str = "q",
     n_planes: int = 8,
     dims: int = 64,
-    use_arrow: bool = True,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch-query ANN: N query vectors against the corpus in ONE plan —
@@ -322,7 +299,6 @@ def lsh_bucketed_topk_many(
         vec_col="__v",
         n_planes=n_planes,
         dims=dims,
-        use_arrow=use_arrow,
         broadcast_a=broadcast_queries,
     )
     return out.select(
@@ -438,8 +414,8 @@ def nearest_centroid_arrow(cids, cmat, cid_type, round_decimals: int = 6):
     batch instead of the interpreted n x k higher-order fold — the
     measured dominant cost of the semantic-dedup / IVF family
     (BENCH_SCALE.md r9 k-dial table). Same pattern and bit-equality
-    contract as :func:`hyperplane_signs_arrow`; the native fold remains
-    the JVM-only oracle surface.
+    contract as :func:`hyperplane_signs_arrow`; its native reference
+    is :func:`_ivf_assign_native`.
 
     Returns a pandas UDF ``vec -> struct(cid, nv, sim)`` where ``cid``
     is the nearest centroid (round-``round_decimals`` HALF_UP cosine
@@ -554,8 +530,8 @@ def pair_cosine_arrow(round_decimals: int = 6, normalized: bool = False):
     per pair; with pair counts ~n^2/k this is the dominant cost of the
     pair stage at low k (BENCH_SCALE.md r10). Same bit-equality
     contract as :func:`nearest_centroid_arrow` (HALF_UP rounding via
-    :func:`_round_half_up_np`; the native fold stays the oracle
-    surface). NULL contract matches ``try_divide`` + null-propagation:
+    :func:`_round_half_up_np`; native reference
+    :func:`_pair_cosine_native`). NULL contract matches ``try_divide`` + null-propagation:
     a NULL vector or zero/NULL norm product yields NULL (which every
     caller's ``sim >= threshold`` filter drops), never NaN.
 
@@ -650,6 +626,19 @@ def pair_cosine_arrow(round_decimals: int = 6, normalized: bool = False):
     return pandas_udf(score, DoubleType())
 
 
+def _pair_cosine_native(
+    ea: str, eb: str, na: str | None, nb: str | None, round_decimals: int = 6
+) -> Column:
+    """Native reference of :func:`pair_cosine_arrow` over column names:
+    ``round(try_divide(dot(ea, eb), na * nb), d)``, or ``round(dot(ea,
+    eb), d)`` when ``na``/``nb`` are None (the ``normalized`` form)."""
+    if na is None:
+        return F.round(_dot(ea, eb), round_decimals)
+    return F.round(
+        F.try_divide(_dot(ea, eb), F.col(na) * F.col(nb)), round_decimals
+    )
+
+
 def _nearest_sorted(vec: Column, nv: Column) -> Column:
     """``_cent`` scored against ``vec``: array of ``(negsim, cid)``
     structs sorted ascending, i.e. best centroid first (sim desc, cid
@@ -680,7 +669,6 @@ def ivf_assign(
     vec_col: str = "e",
     norm_col: str | None = None,
     sim_col: str | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid by cosine (the IVF
     inverted lists). Deterministic tie-break: round(sim, 6) desc, then
@@ -690,34 +678,40 @@ def ivf_assign(
     cids (never a crash — a data-dependent raise is unacceptable
     mid-job at scale).
 
-    SHUFFLE-FREE over the corpus either way — a single projection
-    between scan and output, no Exchange of ``df``:
+    SHUFFLE-FREE over the corpus — a single projection between scan
+    and output, no Exchange of ``df``: the bounded centroid frame is
+    collected driver-side (an X6 bounded read, n_centroids rows) and
+    the n x k scoring runs as one numpy matrix product per Arrow batch
+    (:func:`nearest_centroid_arrow`) — the interpreted higher-order
+    fold was the measured dominant cost of the semantic/IVF family
+    (BENCH_SCALE.md r9). Pinned equal to the native reference
+    (:func:`_ivf_assign_native`) on real data by pytest;
+    boundary-tolerance caveat in :func:`_round_half_up_np`."""
+    cids, cmat, cid_type = _collect_centroids(centroids)
+    st = nearest_centroid_arrow(cids, cmat, cid_type)(
+        F.col(vec_col).cast("array<double>")
+    )
+    sel = [F.col(id_col), F.col(vec_col), F.col("_a")["cid"].alias("cid")]
+    if norm_col is not None:
+        sel.append(F.col("_a")["nv"].alias(norm_col))
+    if sim_col is not None:
+        sel.append(F.col("_a")["sim"].alias(sim_col))
+    return df.withColumn("_a", st).select(*sel)
 
-    - ``use_arrow=True`` (default): the bounded centroid frame is
-      collected driver-side (an X6 bounded read, n_centroids rows) and
-      the n x k scoring runs as one numpy matrix product per Arrow
-      batch (:func:`nearest_centroid_arrow`) — the interpreted
-      higher-order fold was the measured dominant cost of the
-      semantic/IVF family (BENCH_SCALE.md r9). Pinned equal to the
-      native fold on real data by pytest; boundary-tolerance caveat in
-      :func:`_round_half_up_np`.
-    - ``use_arrow=False``: the JVM-only oracle surface — the centroid
-      set folds to one array-of-structs row (:func:`_centroid_row`),
-      broadcast, and the nearest centroid is
-      ``array_sort(transform(...))[0]``. (The pre-r8 crossJoin +
-      row_number() materialized |df| x |centroids| rows and shuffled
-      them by vector id — the dominant IVF-build cost at scale.)"""
-    if use_arrow:
-        cids, cmat, cid_type = _collect_centroids(centroids)
-        st = nearest_centroid_arrow(cids, cmat, cid_type)(
-            F.col(vec_col).cast("array<double>")
-        )
-        sel = [F.col(id_col), F.col(vec_col), F.col("_a")["cid"].alias("cid")]
-        if norm_col is not None:
-            sel.append(F.col("_a")["nv"].alias(norm_col))
-        if sim_col is not None:
-            sel.append(F.col("_a")["sim"].alias(sim_col))
-        return df.withColumn("_a", st).select(*sel)
+
+def _ivf_assign_native(
+    df: DataFrame,
+    centroids: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "e",
+    norm_col: str | None = None,
+    sim_col: str | None = None,
+) -> DataFrame:
+    """Native reference of :func:`ivf_assign` (same contract), kept so
+    tests can pin :func:`nearest_centroid_arrow` against it: the
+    centroid set folds to one array-of-structs row
+    (:func:`_centroid_row`), broadcast, and the nearest centroid is
+    ``array_sort(transform(...))[0]``."""
     v = F.col("_v")
     nv = F.col("_nv")
     # F.get (0-based) yields NULL on an empty array; element_at(arr, 1)
@@ -843,7 +837,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 2,
     centroids: DataFrame | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: deterministic seed centroids (the
     ``n_centroids`` lowest-id vectors), one-pass nearest-centroid
@@ -870,14 +863,13 @@ def ivf_topk(
     build-once half of the serve path (see :func:`ivf_topk_served` for
     the other half, probing materialized inverted lists).
 
-    ``use_arrow=True`` (default) runs the corpus-side assignment as
-    the numpy Arrow kernel (:func:`nearest_centroid_arrow`) with the
-    centroids and the (bounded, 1-row) query resolved driver-side —
-    the probe list becomes a literal filter on the assigned cid and the
-    query a literal array in the native re-rank expression, exactly the
-    :func:`lsh_bucketed_topk` arrow pattern. ``False`` keeps the
-    all-native single-broadcast-row plan (the JVM-only oracle
-    surface)."""
+    The corpus-side assignment runs as the numpy Arrow kernel
+    (:func:`nearest_centroid_arrow`) with the centroids and the
+    (bounded, 1-row) query resolved driver-side — the probe list
+    becomes a literal filter on the assigned cid and the query a
+    literal array in the native re-rank expression, exactly the
+    :func:`lsh_bucketed_topk` pattern. A query that cannot be resolved
+    driver-side runs the all-native plan (:func:`_ivf_topk_native`)."""
     e = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("e"))
     if centroids is None:
         centroids = ivf_seed_centroids(e, n_centroids, id_col=id_col, vec_col="e")
@@ -885,50 +877,60 @@ def ivf_topk(
         centroids = centroids.select(
             "cid", F.col("c").cast("array<double>").alias("c")
         )
-    if use_arrow:
-        # the arrow lane resolves the query driver-side, which only
-        # makes sense for ONE well-formed finite vector: anything else
-        # (empty/multi-row frame, NULL vector, NULL/NaN/inf component —
-        # 'nanD' would not even parse as a literal) falls back to the
-        # native plan below, which returns the identical result the
-        # caller would get with use_arrow=False instead of a
-        # data-dependent driver raise
-        import math
+    # the query resolves driver-side, which only makes sense for ONE
+    # well-formed finite vector: anything else (empty/multi-row frame,
+    # NULL vector, NULL/NaN/inf component — 'nanD' would not even parse
+    # as a literal) falls back to the native plan instead of a
+    # data-dependent driver raise
+    q_rows = query.select(query_col).limit(2).collect()
+    q_vec = None
+    if len(q_rows) == 1 and q_rows[0][0] is not None:
+        vec = [None if x is None else float(x) for x in q_rows[0][0]]
+        # len > 0: all() over an EMPTY vector is vacuously true, but
+        # the native plan scores an empty query as -2.0 vs every
+        # centroid (probes non-empty, sims NULL) — only the fallback
+        # reproduces that
+        if len(vec) > 0 and all(
+            v is not None and math.isfinite(v) for v in vec
+        ):
+            q_vec = vec
+    if q_vec is None:
+        return _ivf_topk_native(
+            e, centroids, query, k, id_col, query_col, n_probe
+        )
+    cids, cmat, cid_type = _collect_centroids(centroids)
+    probes = _probe_cids_py(q_vec, cids, cmat, n_probe)
+    if not probes:
+        return e.where(F.lit(False)).select(
+            F.col(id_col), F.lit(None).cast("double").alias("sim")
+        )
+    q_lit = F.expr("array(" + ",".join(repr(v) + "D" for v in q_vec) + ")")
+    st = nearest_centroid_arrow(cids, cmat, cid_type)(F.col("e"))
+    scored = (
+        e.withColumn("_a", st)
+        # filter on the assigned cid BEFORE the re-rank projection:
+        # the native cosine runs on only ~n_probe/n_centroids of the
+        # rows
+        .where(F.col("_a")["cid"].isin(probes))
+        .select(F.col(id_col), F.round(cosine("e", q_lit), 4).alias("sim"))
+    )
+    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
-        q_rows = query.select(query_col).limit(2).collect()
-        q_vec = None
-        if len(q_rows) == 1 and q_rows[0][0] is not None:
-            vec = [None if x is None else float(x) for x in q_rows[0][0]]
-            # len > 0: all() over an EMPTY vector is vacuously true,
-            # but the native plan scores an empty query as -2.0 vs
-            # every centroid (probes non-empty, sims NULL) — only the
-            # fallback reproduces that
-            if len(vec) > 0 and all(
-                v is not None and math.isfinite(v) for v in vec
-            ):
-                q_vec = vec
-        if q_vec is not None:
-            cids, cmat, cid_type = _collect_centroids(centroids)
-            probes = _probe_cids_py(q_vec, cids, cmat, n_probe)
-            if not probes:
-                return e.where(F.lit(False)).select(
-                    F.col(id_col), F.lit(None).cast("double").alias("sim")
-                )
-            q_lit = F.expr(
-                "array(" + ",".join(repr(v) + "D" for v in q_vec) + ")"
-            )
-            st = nearest_centroid_arrow(cids, cmat, cid_type)(F.col("e"))
-            scored = (
-                e.withColumn("_a", st)
-                # filter on the assigned cid BEFORE the re-rank
-                # projection: the native cosine runs on only
-                # ~n_probe/n_centroids of the rows
-                .where(F.col("_a")["cid"].isin(probes))
-                .select(
-                    F.col(id_col), F.round(cosine("e", q_lit), 4).alias("sim")
-                )
-            )
-            return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+
+def _ivf_topk_native(
+    e: DataFrame,
+    centroids: DataFrame,
+    query: DataFrame,
+    k: int,
+    id_col: str,
+    query_col: str,
+    n_probe: int,
+) -> DataFrame:
+    """All-native :func:`ivf_topk` plan over the cast ``(id, e)`` frame
+    and ``(cid, c)`` centroids — the fallback for a query the driver
+    cannot resolve to one finite vector: the centroid array, the query
+    and its probe list ride ONE broadcast row, so assignment, probe
+    filtering and the exact re-rank fuse into one projection."""
     q = query.select(F.col(query_col).cast("array<double>").alias("q"))
     # one broadcast row: centroid array + query + its probe-list cids
     probes = F.transform(
@@ -958,7 +960,6 @@ def ivf_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_decimals: int = 4,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Lloyd k-means refinement of the deterministic seed centroids —
     the build-time upgrade over :func:`ivf_seed_centroids` (lowest-id
@@ -988,7 +989,7 @@ def ivf_train(
     full corpus-aggregation plan, with superseded checkpoints released
     deterministically."""
     e = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("e"))
-    # arrow lane: the per-iteration centroid collect reads the
+    # the per-iteration centroid collect (ivf_assign) reads the
     # 8-row localCheckpoint just made — a bounded X6 read, not a
     # corpus job
     return _lloyd_refine(
@@ -998,9 +999,7 @@ def ivf_train(
         round_decimals,
         id_col,
         "e",
-        lambda e_, c_: ivf_assign(
-            e_, c_, id_col=id_col, vec_col="e", use_arrow=use_arrow
-        ),
+        lambda e_, c_: ivf_assign(e_, c_, id_col=id_col, vec_col="e"),
     )
 
 
@@ -1655,7 +1654,6 @@ def cosine_near_dup_pairs(
     threshold: float = 0.95,
     n_planes: int = 8,
     dims: int = 64,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """All pairs with cosine >= threshold, LSH-bucketed: only vectors in
     the same bucket are compared (high-cosine pairs land together with
@@ -1689,20 +1687,17 @@ def cosine_near_dup_pairs(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("e"),
         _norm(F.col(vec_col).cast("array<double>")).alias("n"),
-        _bucket_col(
-            F.col(vec_col).cast("array<double>"), n_planes, dims, use_arrow
+        hyperplane_signs_arrow(n_planes, dims)(
+            F.col(vec_col).cast("array<double>")
         ).alias("bucket"),
     ).persist()
     a = sk.select(F.col(id_col).alias("a"), F.col("e").alias("ea"), F.col("n").alias("na"), "bucket")
     b = sk.select(F.col(id_col).alias("b"), F.col("e").alias("eb"), F.col("n").alias("nb"), "bucket")
-    # arrow lane scores pairs with one einsum per batch (see
-    # semantic_dedup_pairs); the native fold is the oracle surface
-    if use_arrow:
-        sim = pair_cosine_arrow(4)(
-            F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
-        )
-    else:
-        sim = F.round(F.try_divide(_dot("ea", "eb"), F.col("na") * F.col("nb")), 4)
+    # pairs score with one einsum per Arrow batch (see
+    # semantic_dedup_pairs)
+    sim = pair_cosine_arrow(4)(
+        F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
+    )
     out = (
         a.join(b, "bucket")
         .where(F.col("a") < F.col("b"))
@@ -1724,7 +1719,6 @@ def semantic_decontaminate(
     dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination by EMBEDDING similarity — the
     semantic sibling of the n-gram :func:`..dedup.decontaminate`:
@@ -1778,7 +1772,7 @@ def semantic_decontaminate(
         # full projection fold must run once per row, not per band)
         sig = frame.select(
             "*",
-            _bucket_col(F.col("_v"), total, dims, use_arrow).alias("_sig"),
+            hyperplane_signs_arrow(total, dims)(F.col("_v")).alias("_sig"),
         )
         return sig.select(
             *frame.columns,
@@ -1810,14 +1804,9 @@ def semantic_decontaminate(
             _norm(F.col(vec_col).cast("array<double>")).alias("_bn"),
         )
     ).withColumnRenamed("_v", "_bv")
-    if use_arrow:
-        sim = pair_cosine_arrow(4)(
-            F.col("_v"), F.col("_bv"), F.col("_n"), F.col("_bn")
-        )
-    else:
-        sim = F.round(
-            F.try_divide(_dot("_v", "_bv"), F.col("_n") * F.col("_bn")), 4
-        )
+    sim = pair_cosine_arrow(4)(
+        F.col("_v"), F.col("_bv"), F.col("_n"), F.col("_bn")
+    )
     hits = (
         ce.join(F.broadcast(be), ["_band", "_key"])
         .where(sim >= F.lit(threshold))
@@ -1834,7 +1823,6 @@ def semantic_dedup_pairs(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
     normalized: bool = False,
 ) -> DataFrame:
     """Within-cluster semantic near-duplicate pairs — the SemDeDup
@@ -1869,7 +1857,7 @@ def semantic_dedup_pairs(
     from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     sk, out = _semantic_sk_pairs(
-        df, threshold, centroids, n_centroids, id_col, vec_col, use_arrow,
+        df, threshold, centroids, n_centroids, id_col, vec_col,
         normalized=normalized,
     )
     return tag_persisted(out, sk)
@@ -1882,7 +1870,6 @@ def _semantic_sk_pairs(
     n_centroids: int,
     id_col: str,
     vec_col: str,
-    use_arrow: bool,
     sim_col: str | None = None,
     normalized: bool = False,
 ):
@@ -1924,7 +1911,7 @@ def _semantic_sk_pairs(
     sk = ivf_assign(
         e, centroids, id_col=id_col, vec_col="_e",
         norm_col=None if normalized else "_n",
-        sim_col=sim_col, use_arrow=use_arrow,
+        sim_col=sim_col,
     ).persist()
     a = sk.select(
         F.col(id_col).alias("a"),
@@ -1938,24 +1925,18 @@ def _semantic_sk_pairs(
         *([] if normalized else [F.col("_n").alias("nb")]),
         "cid",
     )
-    # pair scoring: the arrow lane swaps the interpreted O(dims) fold
-    # per candidate pair for one einsum per Arrow batch (pair counts
-    # are ~n^2/k — the dominant stage cost at low k, BENCH_SCALE.md
-    # r10); the native fold stays the oracle surface. normalized:
-    # plain dot, no norm columns, no divide (see docstring contract)
-    if use_arrow and normalized:
+    # pair scoring: one einsum per Arrow batch instead of an
+    # interpreted O(dims) fold per candidate pair (pair counts are
+    # ~n^2/k — the dominant stage cost at low k, BENCH_SCALE.md r10).
+    # normalized: plain dot, no norm columns, no divide (see docstring
+    # contract)
+    if normalized:
         sim = pair_cosine_arrow(6, normalized=True)(
             F.col("ea"), F.col("eb")
         )
-    elif use_arrow:
+    else:
         sim = pair_cosine_arrow(6)(
             F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
-        )
-    elif normalized:
-        sim = F.round(_dot("ea", "eb"), 6)
-    else:
-        sim = F.round(
-            F.try_divide(_dot("ea", "eb"), F.col("na") * F.col("nb")), 6
         )
     out = (
         a.join(b, "cid")
@@ -1976,7 +1957,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep: str = "min_id",
-    use_arrow: bool = True,
     normalized: bool = False,
     **cluster_kwargs,
 ) -> DataFrame:
@@ -2017,7 +1997,7 @@ def semantic_dedup(
             f"keep must be 'min_id' or 'low_centroid_sim', got {keep!r}"
         )
     sk, pairs = _semantic_sk_pairs(
-        df, threshold, centroids, n_centroids, id_col, vec_col, use_arrow,
+        df, threshold, centroids, n_centroids, id_col, vec_col,
         sim_col="_csim" if keep == "low_centroid_sim" else None,
         normalized=normalized,
     )
@@ -2074,7 +2054,6 @@ def ann_join(
     n_planes: int = 8,
     dims: int = 64,
     min_sim: float | None = None,
-    use_arrow: bool = True,
     broadcast_a: bool = False,
     max_sim: float | None = None,
     exclude_same: str | None = None,
@@ -2123,20 +2102,15 @@ def ann_join(
             F.col(id_col).alias(out),
             v.alias(e),
             _norm(v).alias(n),
-            _bucket_col(v, n_planes, dims, use_arrow).alias("bucket"),
+            hyperplane_signs_arrow(n_planes, dims)(v).alias("bucket"),
         ]
         if exclude_same is not None:
             cols.append(F.col(exclude_same).alias(f"_x{out}"))
         return df.select(*cols)
 
-    if use_arrow:
-        sim = pair_cosine_arrow(4)(
-            F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
-        )
-    else:
-        sim = F.round(
-            F.try_divide(_dot("ea", "eb"), F.col("na") * F.col("nb")), 4
-        )
+    sim = pair_cosine_arrow(4)(
+        F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
+    )
     a_sk = sketch(df_a, "a", "ea", "na")
     if broadcast_a:
         # the batch-probe regime: a small a-side (queries) rides a
@@ -2176,7 +2150,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     n_planes: int = 8,
     dims: int = 64,
-    use_arrow: bool = True,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for embedding-model training (the
@@ -2214,7 +2187,6 @@ def hard_negatives(
         min_sim=lo,
         max_sim=hi,
         exclude_same=exclude_same,
-        use_arrow=use_arrow,
         broadcast_a=broadcast_queries,
     )
     return out.select(
@@ -2269,7 +2241,6 @@ def ivf_update_report(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Index-maintenance audit for an IVF index absorbing a new vector
     batch WITHOUT retraining: assign the incoming vectors to the
@@ -2288,8 +2259,7 @@ def ivf_update_report(
     0/1 long, not boolean.
 
     100 TB shape: two shuffle-free assignment projections (the
-    centroid set is a bounded X6 collect on the Arrow lane / one
-    broadcast row on the native lane), two map-side-combinable count
+    centroid set is a bounded X6 collect), two map-side-combinable count
     aggregations over cid (k-row outputs), and a k-row spine join —
     the corpus is scanned once per side, nothing corpus-sized
     shuffles or collects. ``centroids=None`` seeds from ``existing``
@@ -2314,10 +2284,7 @@ def ivf_update_report(
 
     def _sizes(df: DataFrame, out: str) -> DataFrame:
         return (
-            ivf_assign(
-                df, cents, id_col=id_col, vec_col=vec_col,
-                use_arrow=use_arrow,
-            )
+            ivf_assign(df, cents, id_col=id_col, vec_col=vec_col)
             .groupBy("cid")
             .agg(F.count(F.lit(1)).alias(out))
         )
@@ -2430,57 +2397,6 @@ def embedding_drift(
     return tag_persisted(out, per)
 
 
-def jl_project_arrow(out_dims: int, dims: int, round_decimals: int = 6):
-    """Vectorized production twin of :func:`jl_project`'s native fold:
-    ONE ``(batch x dims) @ (dims x out_dims)`` matrix product per Arrow
-    batch (the :func:`hyperplane_signs_arrow` pattern), components
-    rounded HALF-UP to ``round_decimals`` with -0.0 folded. NULL or
-    non-``dims``-wide rows yield NULL (the native lane's degenerate-row
-    convention), handled by masking so one ragged row never forces the
-    whole batch onto an object-dtype slow path.
-
-    Bit-compatibility: numpy's dot re-associates the float sum vs the
-    native sequential fold — the house bridge posture (engines agree
-    except within ~1e-11 of a round-6 boundary; pinned equality on the
-    test corpus in tests/test_similarity.py). The native lane remains
-    the oracle surface.
-
-    Returns a ``Column``-producing callable."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    planes_t = (
-        np.asarray(plane_values(out_dims, dims), dtype=np.float64)
-        .reshape(out_dims, dims)
-        .T.copy()
-    )
-    scale = float(math.sqrt(3.0 / out_dims))
-
-    def project_batch(emb: pd.Series) -> pd.Series:
-        import numpy as np  # noqa: F811 — resolve inside the worker
-
-        vals = emb.tolist()
-        ok = np.fromiter(
-            (v is not None and len(v) == dims for v in vals),
-            dtype=bool,
-            count=len(vals),
-        )
-        out: list = [None] * len(vals)
-        if ok.any():
-            mat = np.asarray(
-                [vals[i] for i in np.nonzero(ok)[0]], dtype=np.float64
-            )
-            proj = _round_half_up_np(
-                scale * (mat @ planes_t), round_decimals
-            ) + 0.0
-            for row, i in zip(proj, np.nonzero(ok)[0]):
-                out[int(i)] = row.tolist()
-        return pd.Series(out, dtype="object")
-
-    return pandas_udf(project_batch, ArrayType(DoubleType()))
-
-
 def jl_project(
     df: DataFrame,
     out_dims: int,
@@ -2488,7 +2404,6 @@ def jl_project(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_decimals: int = 6,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection: map each ``dims``-wide
     vector to ``out_dims`` components ``round(sqrt(3 / out_dims) *
@@ -2516,26 +2431,11 @@ def jl_project(
     literal (``out_dims * dims`` doubles — 1k doubles at 64->16; keep
     shapes modest or hoist to a broadcast join at e.g. 768->256).
     Components round to ``round_decimals`` and fold -0.0 so both
-    engines serve bit-equal projections.
-
-    ``use_arrow=True`` swaps the per-component native folds for ONE
-    numpy matmul per Arrow batch (:func:`jl_project_arrow`): measured
-    2.3x at the 200k x (64->16) scale point (tools/scale_jl.py —
-    272k vs 118k vecs/s; the fold is only ~1k flops/row at this
-    shape, so Arrow's margin GROWS with out_dims x dims), bit-equal
-    on the measured corpora. The native lane stays the oracle
-    surface."""
+    engines serve bit-equal projections."""
     if out_dims < 1:
         raise ValueError(f"out_dims must be >= 1, got {out_dims}")
     if dims < 1:
         raise ValueError(f"dims must be >= 1, got {dims}")
-    if use_arrow:
-        return df.select(
-            F.col(id_col),
-            jl_project_arrow(out_dims, dims, round_decimals)(
-                F.col(vec_col).cast("array<double>")
-            ).alias("e"),
-        )
     scale = float(math.sqrt(3.0 / out_dims))
     planes = _plane_literal(out_dims, dims)
     v = F.col("_v")
@@ -2582,7 +2482,6 @@ def jl_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_col: str = "q",
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Approximate cosine top-k in the :func:`jl_project` space: project
     corpus and query with the SAME deterministic plane matrix, then
@@ -2624,13 +2523,7 @@ def jl_topk(
             f"jl_topk expects exactly one query vector, got {got} "
             "— one call per query"
         )
-    proj = jl_project(
-        df, out_dims, dims, id_col=id_col, vec_col=vec_col,
-        use_arrow=use_arrow,
-    )
-    # the 1-row query always projects on the native lane (no Arrow
-    # batch to amortize, and it keeps the scored sims on the oracle
-    # surface whenever the corpus-side rounding agrees)
+    proj = jl_project(df, out_dims, dims, id_col=id_col, vec_col=vec_col)
     qdf = df.sparkSession.createDataFrame(
         [(0, [float(x) for x in qrows[0][0]])],
         schema="__qid bigint, __qv array<double>",
@@ -2653,7 +2546,6 @@ def jl_rerank_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_col: str = "q",
-    use_arrow: bool = False,
 ) -> DataFrame:
     """The two-stage contract :func:`jl_topk` deploys under (the
     :func:`..pq.pq_rerank_topk` shape): the JL-projected space
@@ -2684,7 +2576,6 @@ def jl_rerank_topk(
         id_col=id_col,
         vec_col=vec_col,
         query_col=query_col,
-        use_arrow=use_arrow,
     )
     cand = df.join(
         F.broadcast(shortlist.select(id_col)), id_col, "left_semi"
@@ -2756,14 +2647,13 @@ def _knn_majority(
     k: int,
     candidate_pairs: DataFrame | None,
     round_decimals: int,
-    use_arrow: bool,
     carry: list[str],
 ) -> DataFrame:
     """ONE definition of the k-NN vote chain shared by
     :func:`knn_label_noise_report` and :func:`knn_classify` (the
     rank/vote rules cannot silently desynchronize): score the
-    candidate pairs (round-``round_decimals`` cosine; Arrow einsum
-    lane or the native fold — bit-equal, pinned), keep each query's
+    candidate pairs (round-``round_decimals`` cosine through the
+    :func:`pair_cosine_arrow` einsum kernel), keep each query's
     top-``k`` (sim desc, nid asc; NULL sims excluded — a zero-norm/
     NULL vector must not claim a rank slot, and Spark/DuckDB disagree
     on where NULLs sort under DESC), then the per-query majority vote
@@ -2793,15 +2683,9 @@ def _knn_majority(
             .join(a, "_qid")
             .join(b, "_nid")
         )
-    if use_arrow:
-        sim = pair_cosine_arrow(round_decimals)(
-            F.col("_qv"), F.col("_nv"), F.col("_qn"), F.col("_nn")
-        )
-    else:
-        sim = F.round(
-            F.try_divide(_dot("_qv", "_nv"), F.col("_qn") * F.col("_nn")),
-            round_decimals,
-        )
+    sim = pair_cosine_arrow(round_decimals)(
+        F.col("_qv"), F.col("_nv"), F.col("_qn"), F.col("_nn")
+    )
     w_rank = Window.partitionBy("_qid").orderBy(
         F.col("_sim").desc(), F.col("_nid").asc()
     )
@@ -2962,7 +2846,6 @@ def knn_label_noise_report(
     candidate_pairs: DataFrame | None = None,
     block_assign: DataFrame | None = None,
     round_decimals: int = 6,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-label k-NN label-noise audit (the confident-learning /
     cleanlab screen, Northcutt et al. 2021): each labeled vector's
@@ -2989,14 +2872,12 @@ def knn_label_noise_report(
     partial-aggregable label-key counts — nothing corpus-sized
     shuffles beyond the pair set itself.
 
-    ``use_arrow=True`` (default) scores the pairs through the pinned
-    :func:`pair_cosine_arrow` kernel (one einsum per Arrow batch —
-    the interpreted per-pair fold measured 117 s on the 4M exact
-    pairs at the 2k-vector bench point, the package's slow-path
-    class); ``use_arrow=False`` is the JVM-only oracle surface, both
-    lanes ``round(try_divide(dot, na * nb), round_decimals)`` with
-    norms precomputed per side (bit-equal, pinned in
-    tests/test_similarity.py).
+    Pairs score through the pinned :func:`pair_cosine_arrow` kernel
+    (one einsum per Arrow batch — the interpreted per-pair fold
+    measured 117 s on the 4M exact pairs at the 2k-vector bench
+    point, the package's slow-path class):
+    ``round(try_divide(dot, na * nb), round_decimals)`` with norms
+    precomputed per side.
 
     ``block_assign`` (an ``(id, cid)`` frame, mutually exclusive with
     ``candidate_pairs``) is the same-block candidate structure in its
@@ -3030,8 +2911,7 @@ def knn_label_noise_report(
             F.col(label_col).alias("_nlab"),
         ).withColumn("_nn", _norm(F.col("_nv")))
         maj = _knn_majority(
-            a, b, k, candidate_pairs, round_decimals, use_arrow,
-            carry=["_qlab"],
+            a, b, k, candidate_pairs, round_decimals, carry=["_qlab"],
         )
     return maj.groupBy(F.col("_qlab").alias(label_col)).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -3057,7 +2937,6 @@ def knn_classify(
     label_col: str = "label",
     candidate_pairs: DataFrame | None = None,
     round_decimals: int = 6,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Semi-supervised k-NN labeling: each unlabeled vector takes the
     majority label of its ``k`` nearest LABELED neighbors — the
@@ -3092,7 +2971,7 @@ def knn_classify(
         F.col(label_col).alias("_nlab"),
     ).withColumn("_nn", _norm(F.col("_nv")))
     maj = _knn_majority(
-        a, b, k, candidate_pairs, round_decimals, use_arrow, carry=[]
+        a, b, k, candidate_pairs, round_decimals, carry=[]
     )
     return maj.select(
         F.col("_qid").alias(id_col),

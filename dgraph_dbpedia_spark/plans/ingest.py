@@ -65,6 +65,10 @@ def load_dataset(
     return reduce(DataFrame.unionByName, frames)
 
 
+#: concurrent per-dataset ingest jobs
+INGEST_WORKERS = 4
+
+
 def ingest(
     spark: SparkSession,
     root: str,
@@ -72,10 +76,10 @@ def ingest(
     languages: list[str] | None = None,
     datasets: list[str] | None = None,
     print_stats: bool = True,
-    parallelism: int = 4,
 ) -> list[IngestResult]:
     """Per-dataset jobs are independent (separate inputs, separate output
-    trees), so they are submitted from a small driver-side thread pool:
+    trees), so they are submitted from a small driver-side thread pool
+    (``INGEST_WORKERS`` wide):
     Spark's scheduler interleaves their stages and keeps executors busy
     while any one job is in its sampling/commit phases. The reference
     runs datasets serially (DbpediaToParquetSparkApp.scala:71-95); the
@@ -104,9 +108,7 @@ def ingest(
             result.stats = dataset_counts(read_triples_parquet(spark, parquet_path))
         return result
 
-    if parallelism <= 1:
-        return [run(d) for d in datasets]
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=parallelism) as pool:
+    with ThreadPoolExecutor(max_workers=INGEST_WORKERS) as pool:
         return list(pool.map(run, datasets))

@@ -420,8 +420,10 @@ def write_rdf(
     ``on_counted`` (optional, no-arg) fires as soon as this sink's
     count job has resolved — transform() uses it to release the types
     job only after every retained cache is materialized (r17); it is
-    invoked exactly once, from a ``finally`` if the count raises, so a
-    failing sink can never leave the waiter hanging."""
+    invoked exactly once — right after the count, or from the outer
+    ``finally`` if anything before it raises (filter construction, the
+    count itself) — so a failing sink can never leave the waiter
+    hanging."""
     from pyspark import StorageLevel
 
     if persist:
@@ -439,12 +441,10 @@ def write_rdf(
         # and crash the read-back on the missing partition column —
         # and would size n_parts from rows that never reach the sink
         filtered = invalid_predicate_filter(df)
-        try:
-            n = filtered.count()
-        finally:
-            if on_counted is not None:
-                on_counted()
-                on_counted = None
+        n = filtered.count()
+        if on_counted is not None:
+            on_counted()
+            on_counted = None
         if not n:
             # honor overwrite semantics on the empty path too: a rerun
             # into the same out dir must not leave a PREVIOUS run's
@@ -470,6 +470,8 @@ def write_rdf(
                 path=path,
             )
     finally:
+        if on_counted is not None:
+            on_counted()
         if persist:
             df.unpersist()
     return read_rdf(spark, path)
@@ -745,8 +747,9 @@ def transform(
 
                 def _types_after_counts() -> DataFrame:
                     # park until every sink's count job has materialized its
-                    # retained cache (write_rdf releases the semaphore from
-                    # a finally, so a failed sink still unblocks this); then
+                    # retained cache (write_rdf releases the semaphore exactly
+                    # once, on any failure too, so a failed sink still
+                    # unblocks this); then
                     # the union-distinct runs over warm DISK_ONLY blocks
                     for _ in range(n_sinks):
                         sink_counts_done.acquire()

@@ -64,9 +64,3 @@ def write_partitioned_by(
     for k, v in (options or {}).items():
         writer = writer.option(k, v)
     writer.format(fmt).save(path)
-
-
-def write_single_file(df: DataFrame, path: str, fmt: str = "text", mode: str = "overwrite") -> None:
-    """coalesce(1) sink for one-file outputs like schema files (S7,
-    DbpediaDgraphSparkApp.scala:330)."""
-    df.coalesce(1).write.mode(mode).format(fmt).save(path)

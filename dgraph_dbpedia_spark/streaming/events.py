@@ -573,15 +573,13 @@ def tag_embeddings_stream(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Stream-compatible semantic tagging: attach the nearest-centroid
     ``cid`` and its round-6 cosine ``sim`` to every row — the
     ingest-time topic routing / cluster labeling step of a streaming
     curation pipeline. The assignment is a STATELESS projection
     (:func:`..operators.similarity.ivf_assign` — bounded centroids
-    collected once into the Arrow kernel's closure, or the broadcast
-    fold on the native lane), so the IDENTICAL call works on a
+    collected once into the Arrow kernel's closure), so the IDENTICAL call works on a
     ``readStream`` frame in append mode with no state store and no
     watermark, and on a batch frame (the twin the oracle checks —
     the stream==batch equality is pinned by pytest).
@@ -590,7 +588,5 @@ def tag_embeddings_stream(
     projection; nothing accumulates. Returns ``(id, cid, sim)``."""
     from dgraph_dbpedia_spark.operators.similarity import ivf_assign
 
-    out = ivf_assign(
-        df, centroids, id_col, vec_col, sim_col="sim", use_arrow=use_arrow
-    )
+    out = ivf_assign(df, centroids, id_col, vec_col, sim_col="sim")
     return out.select(F.col(id_col), F.col("cid"), F.col("sim"))

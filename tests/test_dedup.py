@@ -67,22 +67,36 @@ def test_ngram_jaccard_hot_shingle_cap_prunes(spark):
 
 def test_minhash_arrow_pinned_equal_to_native(spark):
     """The numpy lane kernel is integer math — signatures must equal the
-    native higher-order fold exactly on real data."""
+    native higher-order reference fold exactly on real data."""
+    from dgraph_dbpedia_spark.operators.dedup import (
+        _hashed_shingled,
+        _minhash_lanes_arrow,
+        _signatures_from_hashed,
+    )
+
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    nat = minhash_signatures(docs, use_arrow=False).withColumnRenamed("sig", "n")
-    arr = minhash_signatures(docs, use_arrow=True).withColumnRenamed("sig", "a")
+    sh = _hashed_shingled(docs, "text", "doc_id", 3, False)
+    nat = _signatures_from_hashed(sh, "doc_id", 16).withColumnRenamed("sig", "n")
+    arr = sh.select("doc_id", _minhash_lanes_arrow(16)(F.col("sh")).alias("a"))
     diff = nat.join(arr, "doc_id").where(F.col("n") != F.col("a")).count()
-    assert diff == 0
+    assert diff == 0 and arr.count() == docs.count()
 
 
 def test_simhash_arrow_pinned_equal_to_native(spark):
     """The numpy vote fold is integer math — it must equal the native
-    higher-order fold exactly on real data."""
+    higher-order reference fold exactly on real data."""
+    from dgraph_dbpedia_spark.operators.dedup import (
+        _simhash_fold_arrow,
+        _simhash_fold_native,
+        _token_hashes,
+    )
+
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    nat = simhash(docs, use_arrow=False).withColumnRenamed("simhash", "n")
-    arr = simhash(docs, use_arrow=True).withColumnRenamed("simhash", "a")
+    hs = _token_hashes(docs, "text", "doc_id", False)
+    nat = _simhash_fold_native(hs, "doc_id").withColumnRenamed("simhash", "n")
+    arr = hs.select("doc_id", _simhash_fold_arrow()(F.col("hs")).alias("a"))
     diff = nat.join(arr, "doc_id").where(F.col("n") != F.col("a")).count()
-    assert diff == 0
+    assert diff == 0 and arr.count() == docs.count()
 
 
 def test_ngram_jaccard_release_unpersists(spark, docs):
@@ -132,14 +146,13 @@ def test_simhash_near_dup_pairs(spark, docs):
 
 
 def test_no_python_udf_in_plans(spark, docs):
-    # simhash/minhash default to Arrow kernels (vectorized, bit-equal);
-    # use_arrow=False must stay fully native — and nothing may ever use
-    # row-at-a-time Python
-    for df in (minhash_signatures(docs, use_arrow=False),
-               simhash(docs, use_arrow=False),
-               ngram_jaccard_pairs(docs, threshold=0.1)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # simhash/minhash run Arrow kernels (vectorized, bit-equal to their
+    # native references); shingle Jaccard stays fully native — and
+    # nothing may ever use row-at-a-time Python
+    plan = ngram_jaccard_pairs(
+        docs, threshold=0.1
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     for df in (simhash(docs), minhash_signatures(docs)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan  # Arrow-batched only

@@ -361,6 +361,84 @@ def test_transform_stats_failure_releases_caches(spark, pipeline_dirs, tmp_path,
     assert after <= before
 
 
+@pytest.mark.parametrize("fault", ["filter", "count", "write", "types"])
+def test_transform_sink_failure_raises_promptly(
+    spark, pipeline_dirs, tmp_path, monkeypatch, fault
+):
+    """Fault injection into the sink pool: the labels sink raises while
+    building its predicate filter, in its count job or in its write —
+    or the types job raises. transform must re-raise within a bounded
+    time (the types job parks on the sink-count latch, so a sink that
+    fails before releasing it used to hang the pool exit forever) and
+    leave no cache it persisted behind."""
+    import threading
+
+    from dgraph_dbpedia_spark.plans import transform as transform_mod
+
+    target = "types.rdf" if fault == "types" else "labels.rdf"
+    message = f"injected {fault} failure"
+    sink = threading.local()  # each sink runs write_rdf on its own thread
+    real_write_rdf = transform_mod.write_rdf
+    real_filter = transform_mod.invalid_predicate_filter
+    real_write = transform_mod.write_partitioned_by
+
+    class FailingCount:
+        def __init__(self, df):
+            self._df = df
+
+        def count(self):
+            raise RuntimeError(message)
+
+        def __getattr__(self, name):
+            return getattr(self._df, name)
+
+    def write_rdf(spark_, df, path, *args, **kwargs):
+        sink.path = path
+        if fault == "types" and path.endswith(target):
+            raise RuntimeError(message)
+        return real_write_rdf(spark_, df, path, *args, **kwargs)
+
+    def invalid_predicate_filter(df):
+        out = real_filter(df)
+        if getattr(sink, "path", "").endswith(target):
+            if fault == "filter":
+                raise RuntimeError(message)
+            if fault == "count":
+                return FailingCount(out)
+        return out
+
+    def write_partitioned_by(df, *args, path, **kwargs):
+        if fault == "write" and path.endswith(target):
+            raise RuntimeError(message)
+        return real_write(df, *args, path=path, **kwargs)
+
+    monkeypatch.setattr(transform_mod, "write_rdf", write_rdf)
+    monkeypatch.setattr(
+        transform_mod, "invalid_predicate_filter", invalid_predicate_filter
+    )
+    monkeypatch.setattr(transform_mod, "write_partitioned_by", write_partitioned_by)
+    _, parquet, _, _, _ = pipeline_dirs
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    raised = []
+
+    def run():
+        try:
+            transform(
+                spark, str(parquet), str(tmp_path / f"rdf_{fault}"),
+                cfg=_cli_reference_cfg(),
+            )
+        except BaseException as e:  # noqa: BLE001 — handed to the test
+            raised.append(e)
+
+    runner = threading.Thread(target=run, daemon=True)
+    runner.start()
+    runner.join(120)
+    assert not runner.is_alive(), f"transform hung after an {message}"
+    assert raised and message in str(raised[0]), raised
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert after <= before
+
+
 def test_curate_corpus_every_stage_fires(spark):
     """End-to-end curation composition: each planted doc exercises one
     stage — gopher kill (too short), exact-dup kill (identical text,

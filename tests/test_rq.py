@@ -1,7 +1,5 @@
 """Residual quantization (operators/rq.py)."""
 
-import struct
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,24 +141,24 @@ def test_rq_validates_and_degenerates(spark, emb):
 
 def test_rq_encode_arrow_pinned_equal_to_native(spark, emb):
     """The Arrow greedy-encode kernel must reproduce the native
-    two-stage fold's codes exactly on real data; NULL and
+    two-stage reference fold's codes exactly on real data; NULL and
     width-mismatched vectors take code 0 at every stage on both
-    lanes (RQ uses the FULL vector, so unlike PQ an over-long vector
-    is a mismatch, not a truncation)."""
-    from dgraph_dbpedia_spark.operators.rq import rq_encode, rq_train
+    (RQ uses the FULL vector, so unlike PQ an over-long vector is a
+    mismatch, not a truncation)."""
+    from dgraph_dbpedia_spark.operators.rq import (
+        _rq_encode_native,
+        rq_encode,
+        rq_train,
+    )
 
     cb = rq_train(emb, dims=64, k_sub=16, n_levels=2, n_iter=1)
     nat = {
         r["vec_id"]: r["codes"]
-        for r in rq_encode(
-            emb, cb, dims=64, n_levels=2, use_arrow=False
-        ).collect()
+        for r in _rq_encode_native(emb, cb, dims=64, n_levels=2).collect()
     }
     arr = {
         r["vec_id"]: r["codes"]
-        for r in rq_encode(
-            emb, cb, dims=64, n_levels=2, use_arrow=True
-        ).collect()
+        for r in rq_encode(emb, cb, dims=64, n_levels=2).collect()
     }
     assert nat == arr and len(nat) == emb.count()
     first = emb.orderBy("vec_id").first()["embedding"]
@@ -175,15 +173,11 @@ def test_rq_encode_arrow_pinned_equal_to_native(spark, emb):
     )
     dn = {
         r["vec_id"]: r["codes"]
-        for r in rq_encode(
-            deg, cb, dims=64, n_levels=2, use_arrow=False
-        ).collect()
+        for r in _rq_encode_native(deg, cb, dims=64, n_levels=2).collect()
     }
     da = {
         r["vec_id"]: r["codes"]
-        for r in rq_encode(
-            deg, cb, dims=64, n_levels=2, use_arrow=True
-        ).collect()
+        for r in rq_encode(deg, cb, dims=64, n_levels=2).collect()
     }
     assert dn == da
     assert dn[1] == dn[2] == dn[3] == dn[4] == [0, 0]
@@ -193,8 +187,13 @@ def test_rq_encode_nonfinite_takes_code_zero_both_lanes(spark, emb):
     """inf/NaN components: the native fold yields inf/NaN distances
     against every centroid and ties to cid 0; the Arrow kernel's
     norm expansion would produce inf - inf = NaN and let argmin pick
-    an arbitrary column — both lanes must emit [0, 0]."""
-    from dgraph_dbpedia_spark.operators.rq import rq_encode, rq_train
+    an arbitrary column — kernel and native reference must both emit
+    [0, 0]."""
+    from dgraph_dbpedia_spark.operators.rq import (
+        _rq_encode_native,
+        rq_encode,
+        rq_train,
+    )
 
     cb = rq_train(emb, dims=64, k_sub=8, n_levels=2, n_iter=1)
     first = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
@@ -206,23 +205,38 @@ def test_rq_encode_nonfinite_takes_code_zero_both_lanes(spark, emb):
         [(1, inf_v), (2, nan_v)],
         "vec_id long, embedding array<double>",
     )
-    for lane in (False, True):
+    for encode in (_rq_encode_native, rq_encode):
         got = {
             r["vec_id"]: r["codes"]
-            for r in rq_encode(
-                deg, cb, dims=64, n_levels=2, use_arrow=lane
-            ).collect()
+            for r in encode(deg, cb, dims=64, n_levels=2).collect()
         }
-        assert got[1] == [0, 0] and got[2] == [0, 0], f"arrow={lane}"
+        assert got[1] == [0, 0] and got[2] == [0, 0], encode.__name__
 
 
 def test_rq_train_arrow_pinned_equal_to_native(spark, emb):
-    """rq_train's Arrow lane (stage Lloyds AND the between-stage
-    residual assignment) must yield BIT-IDENTICAL stage codebooks to
-    the native full-dim fold — including degenerate rows (NULL /
-    short / LONGER-than-dims / non-finite), which the residual lane's
-    width mask pins to the native code-0 class."""
-    from dgraph_dbpedia_spark.operators.rq import rq_train
+    """rq_train assigns through encode_codes_arrow (the stage Lloyds
+    and the width-masked between-stage residual assignment), so its
+    stage codebooks equal the native full-dim fold's when the kernels
+    encode the training corpus exactly like their native references
+    against the trained stage codebooks — pinned here with degenerate
+    rows (NULL / short / LONGER-than-dims / non-finite) mixed in. The
+    NaN row drives the cid-0 mean to NaN, so every check runs against
+    a poisoned codebook: the Lloyd assignment (m=1 pq encode), the
+    residual assignment rq_train itself runs (``_stage_code``, whose
+    width mask sends the over-wide row to the fold's cid 0 instead of
+    prefix-encoding it) and the greedy two-stage encode."""
+    import math
+
+    from dgraph_dbpedia_spark.operators.pq import (
+        _pq_encode_native,
+        pq_encode,
+    )
+    from dgraph_dbpedia_spark.operators.rq import (
+        _rq_encode_native,
+        _stage_code,
+        rq_encode,
+        rq_train,
+    )
 
     deg = spark.createDataFrame(
         [
@@ -236,41 +250,35 @@ def test_rq_train_arrow_pinned_equal_to_native(spark, emb):
     corpus = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).unionByName(deg)
-    key = lambda r: (r["lvl"], r["cid"])  # noqa: E731
-    # IEEE bit patterns, not ==: the NaN row legitimately drives the
-    # cid-0 mean to NaN in BOTH lanes, and NaN != NaN would fail an
-    # equality check on a bit-identical codebook
-    bits = lambda rows: [  # noqa: E731
-        (r["lvl"], r["cid"], [struct.pack(">d", x) for x in r["c"]])
-        for r in rows
-    ]
-    nat = bits(
-        sorted(
-            rq_train(
-                corpus,
-                dims=64,
-                k_sub=8,
-                n_levels=2,
-                n_iter=2,
-                use_arrow=False,
-            ).collect(),
-            key=key,
-        )
+    cb = rq_train(
+        corpus, dims=64, k_sub=8, n_levels=2, n_iter=2
+    ).localCheckpoint()
+    assert any(not math.isfinite(x) for r in cb.collect() for x in r["c"])
+
+    def codes(frame):
+        return {r["vec_id"]: r["codes"] for r in frame.collect()}
+
+    stage0 = cb.where("lvl = 0").select(F.lit(0).alias("j"), "cid", "c")
+    assert codes(_pq_encode_native(corpus, stage0, dims=64, m=1)) == codes(
+        pq_encode(corpus, stage0, dims=64, m=1)
     )
-    arr = bits(
-        sorted(
-            rq_train(
-                corpus,
-                dims=64,
-                k_sub=8,
-                n_levels=2,
-                n_iter=2,
-                use_arrow=True,
-            ).collect(),
-            key=key,
-        )
+    residual_asg = {
+        r["vec_id"]: r["c0"]
+        for r in corpus.select(
+            "vec_id",
+            _stage_code(cb.where("lvl = 0"), 64, F.col("embedding")).alias(
+                "c0"
+            ),
+        ).collect()
+    }
+    first = codes(
+        _rq_encode_native(corpus, cb.where("lvl = 0"), dims=64, n_levels=1)
     )
-    assert nat == arr
+    assert residual_asg == {k: v[0] for k, v in first.items()}
+    assert residual_asg[90_003] == 0
+    nat = codes(_rq_encode_native(corpus, cb, dims=64, n_levels=2))
+    assert nat == codes(rq_encode(corpus, cb, dims=64, n_levels=2))
+    assert nat[90_001] == nat[90_002] == nat[90_003] == [0, 0]
 
 
 def test_rq_ivf_served_prunes_and_finds_twin(spark, emb, tmp_path):

@@ -385,9 +385,8 @@ def test_lsh_multiprobe_recall(spark):
 
 def test_lsh_single_probe_subset_of_multiprobe(spark):
     """n_probes=1 candidates are a subset of n_probes=4's (the probe
-    sequence only ever widens), and the native path rejects multi-probe."""
+    sequence only ever widens)."""
     import numpy as np
-    import pytest
 
     from dgraph_dbpedia_spark.operators.similarity import lsh_bucketed_topk
 
@@ -402,8 +401,6 @@ def test_lsh_single_probe_subset_of_multiprobe(spark):
     one = {r[0] for r in lsh_bucketed_topk(corpus, q, k=200, n_probes=1).collect()}
     four = {r[0] for r in lsh_bucketed_topk(corpus, q, k=200, n_probes=4).collect()}
     assert one <= four
-    with pytest.raises(ValueError, match="multi-probe"):
-        lsh_bucketed_topk(corpus, q, k=5, use_arrow=False, n_probes=2)
 
 
 def test_cosine_topk_arrow_query_col_and_zero_norm(spark):
@@ -764,6 +761,7 @@ def test_nearest_centroid_arrow_pinned_equal_to_native(spark):
     cosine within ~1e-11 of a HALF_UP tie; asserting zero mismatches
     on the full sf0.001 table pins it, the hyperplane-twin pattern)."""
     from dgraph_dbpedia_spark.operators.similarity import (
+        _ivf_assign_native,
         ivf_assign,
         ivf_seed_centroids,
     )
@@ -773,11 +771,11 @@ def test_nearest_centroid_arrow_pinned_equal_to_native(spark):
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     cent = ivf_seed_centroids(e, 16)
-    nat = ivf_assign(
-        e, cent, norm_col="nv", sim_col="sim", use_arrow=False
+    nat = _ivf_assign_native(
+        e, cent, norm_col="nv", sim_col="sim"
     ).select("vec_id", "cid", "nv", "sim")
     arr = ivf_assign(
-        e, cent, norm_col="nv", sim_col="sim", use_arrow=True
+        e, cent, norm_col="nv", sim_col="sim"
     ).select("vec_id", "cid", "nv", "sim")
     mism = (
         nat.alias("n")
@@ -794,12 +792,14 @@ def test_nearest_centroid_arrow_pinned_equal_to_native(spark):
 
 
 def test_ivf_assign_arrow_empty_and_null_contracts(spark, vectors):
-    """Arrow lane edge contracts match the native fold: empty centroid
-    frame -> NULL cid/sim with real norms; a NULL vector -> lowest cid,
-    sim -2.0, NULL norm; a zero-norm vector -> lowest cid, sim -2.0,
-    norm 0."""
-    from pyspark.sql.types import DoubleType
-    from dgraph_dbpedia_spark.operators.similarity import ivf_assign
+    """The Arrow kernel's edge contracts match the native reference
+    fold: empty centroid frame -> NULL cid/sim with real norms; a NULL
+    vector -> lowest cid, sim -2.0, NULL norm; a zero-norm vector ->
+    lowest cid, sim -2.0, norm 0."""
+    from dgraph_dbpedia_spark.operators.similarity import (
+        _ivf_assign_native,
+        ivf_assign,
+    )
 
     e = vectors.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
@@ -807,9 +807,10 @@ def test_ivf_assign_arrow_empty_and_null_contracts(spark, vectors):
     empty_cent = spark.createDataFrame(
         [], "cid long, c array<double>"
     )
-    out = ivf_assign(e, empty_cent, sim_col="sim", use_arrow=True).collect()
-    assert len(out) == 5
-    assert all(r["cid"] is None and r["sim"] is None for r in out)
+    for assign in (ivf_assign, _ivf_assign_native):
+        out = assign(e, empty_cent, sim_col="sim").collect()
+        assert len(out) == 5
+        assert all(r["cid"] is None and r["sim"] is None for r in out)
 
     weird = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [0.0, 0.0])],
@@ -818,11 +819,11 @@ def test_ivf_assign_arrow_empty_and_null_contracts(spark, vectors):
     cent = spark.createDataFrame(
         [(10, [1.0, 0.0]), (20, [0.0, 1.0])], "cid long, c array<double>"
     )
-    for use_arrow in (True, False):
+    for assign in (ivf_assign, _ivf_assign_native):
         got = {
             r["vec_id"]: r
-            for r in ivf_assign(
-                weird, cent, norm_col="nv", sim_col="sim", use_arrow=use_arrow
+            for r in assign(
+                weird, cent, norm_col="nv", sim_col="sim"
             ).collect()
         }
         assert got[1]["cid"] == 10 and got[1]["sim"] == 1.0
@@ -832,19 +833,31 @@ def test_ivf_assign_arrow_empty_and_null_contracts(spark, vectors):
         assert got[3]["nv"] == 0.0
 
 
+def _ivf_topk_native_plan(vectors, q, k, n_centroids, n_probe):
+    """ivf_topk's all-native fallback plan over the seed centroids."""
+    from dgraph_dbpedia_spark.operators.similarity import (
+        _ivf_topk_native,
+        ivf_seed_centroids,
+    )
+
+    e = vectors.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+    cent = ivf_seed_centroids(e, n_centroids, vec_col="e")
+    return _ivf_topk_native(e, cent, q, k, "vec_id", "q", n_probe)
+
+
 def test_ivf_topk_arrow_matches_native(spark, vectors, query):
     """The arrow ivf_topk plan (driver-side probes + arrow assignment +
     literal-query re-rank) returns exactly the native plan's rows."""
     from dgraph_dbpedia_spark.operators.similarity import ivf_topk
 
     for n_probe in (1, 2):
-        nat = ivf_topk(
-            vectors, query, k=5, n_centroids=2, n_probe=n_probe,
-            use_arrow=False,
+        nat = _ivf_topk_native_plan(
+            vectors, query, k=5, n_centroids=2, n_probe=n_probe
         ).collect()
         arr = ivf_topk(
-            vectors, query, k=5, n_centroids=2, n_probe=n_probe,
-            use_arrow=True,
+            vectors, query, k=5, n_centroids=2, n_probe=n_probe
         ).collect()
         assert [(r["vec_id"], r["sim"]) for r in nat] == [
             (r["vec_id"], r["sim"]) for r in arr
@@ -956,32 +969,48 @@ def test_quantized_served_partition_prunes(spark, vectors, query, tmp_path):
 def test_pair_cosine_arrow_pinned_equal_to_native(spark):
     """The einsum pair-scoring kernel must reproduce the native fold's
     round-6 pair sims on real data (zero mismatches over every
-    within-cluster candidate pair of sf0.001 — the assign-kernel
-    pinning pattern applied to the pair stage)."""
-    from dgraph_dbpedia_spark.operators.cachectl import release
+    within-cluster candidate pair of sf0.001 — the semantic_dedup_pairs
+    pair stage — the assign-kernel pinning pattern)."""
     from dgraph_dbpedia_spark.operators.similarity import (
-        semantic_dedup_pairs,
+        _pair_cosine_native,
+        ivf_assign,
+        ivf_seed_centroids,
+        pair_cosine_arrow,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    nat = semantic_dedup_pairs(
-        emb, threshold=-1.0, n_centroids=8, use_arrow=False
+    e = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("_e")
     )
-    arr = semantic_dedup_pairs(
-        emb, threshold=-1.0, n_centroids=8, use_arrow=True
+    sk = ivf_assign(
+        e, ivf_seed_centroids(e, 8, vec_col="_e"), vec_col="_e",
+        norm_col="_n",
+    ).localCheckpoint()
+    pairs = (
+        sk.select(
+            F.col("vec_id").alias("a"), F.col("_e").alias("ea"),
+            F.col("_n").alias("na"), "cid",
+        )
+        .join(
+            sk.select(
+                F.col("vec_id").alias("b"), F.col("_e").alias("eb"),
+                F.col("_n").alias("nb"), "cid",
+            ),
+            "cid",
+        )
+        .where(F.col("a") < F.col("b"))
+        .select(
+            pair_cosine_arrow(6)("ea", "eb", "na", "nb").alias("sim_a"),
+            _pair_cosine_native("ea", "eb", "na", "nb", 6).alias("sim_n"),
+        )
     )
-    n = nat.withColumnRenamed("sim", "sim_n")
-    a = arr.withColumnRenamed("sim", "sim_a")
-    joined = n.join(a, ["a", "b"], "full_outer")
-    mism = joined.where(
+    mism = pairs.where(
         F.col("sim_n").isNull()
         | F.col("sim_a").isNull()
         | (F.abs(F.col("sim_n") - F.col("sim_a")) > 1e-9)
     ).count()
     assert mism == 0
-    assert nat.count() == arr.count() > 0
-    release(nat)
-    release(arr)
+    assert pairs.count() > 0
 
 
 def test_pair_cosine_arrow_null_contract(spark):
@@ -1010,9 +1039,10 @@ def test_pair_cosine_arrow_ragged_contract(spark):
     (np.asarray inhomogeneous-shape ValueError — ADVICE r10): the
     kernel substitutes zeros and forces NULL sim, exactly what the
     native zip_with fold produces (NULL-pad -> NULL dot -> try_divide
-    NULL). Both lanes checked row-by-row on the same frame."""
+    NULL). Kernel and native reference checked row-by-row on the same
+    frame."""
     from dgraph_dbpedia_spark.operators.similarity import (
-        _dot,
+        _pair_cosine_native,
         pair_cosine_arrow,
     )
 
@@ -1039,10 +1069,7 @@ def test_pair_cosine_arrow_ragged_contract(spark):
     native = {
         r["id"]: r["sim"]
         for r in df.select(
-            "id",
-            F.round(
-                F.try_divide(_dot("ea", "eb"), F.col("na") * F.col("nb")), 6
-            ).alias("sim"),
+            "id", _pair_cosine_native("ea", "eb", "na", "nb", 6).alias("sim")
         ).collect()
     }
     assert arrow == native
@@ -1053,13 +1080,14 @@ def test_pair_cosine_arrow_ragged_contract(spark):
 
 def test_semantic_dedup_pairs_normalized_fast_path(spark):
     """normalized=True over normalize_embeddings output: (1) the arrow
-    dot kernel equals the native round(dot) lane exactly, (2) both
-    agree with the full-cosine path to the unit-norm rounding margin
+    dot kernel equals the native round(dot) reference on every pair,
+    (2) both agree with the full-cosine path to the unit-norm rounding margin
     (components are round-6, so the true norm is 1 +- ~1e-6 — the dot
     and the cosine may differ by that much, never more), and (3) the
     pair-stage plan ships NO norm columns."""
     from dgraph_dbpedia_spark.operators.cachectl import release
     from dgraph_dbpedia_spark.operators.similarity import (
+        _pair_cosine_native,
         normalize_embeddings,
         semantic_dedup_pairs,
     )
@@ -1067,13 +1095,21 @@ def test_semantic_dedup_pairs_normalized_fast_path(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     unit = normalize_embeddings(emb).withColumnRenamed("e", "embedding")
     kw = dict(threshold=-1.0, n_centroids=8)
-    fast = semantic_dedup_pairs(unit, use_arrow=True, normalized=True, **kw)
-    nat = semantic_dedup_pairs(unit, use_arrow=False, normalized=True, **kw)
-    full = semantic_dedup_pairs(unit, use_arrow=True, normalized=False, **kw)
+    fast = semantic_dedup_pairs(unit, normalized=True, **kw)
+    full = semantic_dedup_pairs(unit, normalized=False, **kw)
+    vec = unit.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    nat = (
+        fast.select("a", "b")
+        .join(vec.select(F.col("vec_id").alias("a"), F.col("v").alias("ea")), "a")
+        .join(vec.select(F.col("vec_id").alias("b"), F.col("v").alias("eb")), "b")
+        .select("a", "b", _pair_cosine_native("ea", "eb", None, None, 6).alias("sim"))
+    )
     fa = {(r["a"], r["b"]): r["sim"] for r in fast.collect()}
     na = {(r["a"], r["b"]): r["sim"] for r in nat.collect()}
     fu = {(r["a"], r["b"]): r["sim"] for r in full.collect()}
-    for f in (fast, nat, full):
+    for f in (fast, full):
         release(f)
     assert fa and fa.keys() == na.keys() == fu.keys()
     for k, v in fa.items():
@@ -1085,6 +1121,46 @@ def test_semantic_dedup_pairs_normalized_fast_path(spark):
     # internal _n attribute — that is the input, not the pair stage)
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "na#" not in plan and "nb#" not in plan
+
+
+def test_semantic_dedup_pairs_normalized_scores_pairs_twice(spark):
+    """Plan pin of the normalized pair stage: exactly TWO pair-score
+    evaluations — the lower one scores every candidate pair and feeds
+    the ``sim >= threshold`` filter, the upper one re-scores only the
+    survivors for the output column. A third evaluation (or a lost
+    filter) fails here; removing the duplicate is a plan change, not
+    a refactor."""
+    import re
+
+    from dgraph_dbpedia_spark.operators.cachectl import release
+    from dgraph_dbpedia_spark.operators.similarity import (
+        semantic_dedup_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, 0.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    out = semantic_dedup_pairs(
+        df, threshold=0.4, n_centroids=2, normalized=True
+    )
+    lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
+    score = [
+        i for i, ln in enumerate(lines)
+        if "ArrowEvalPython [score_dot(" in ln
+    ]
+    filt = [
+        i for i, ln in enumerate(lines)
+        if "Filter (" in ln and ">= 0.4)" in ln
+    ]
+    assert len(score) == 2 and len(filt) == 1, lines
+    upper, lower = score
+    assert upper < filt[0] < lower
+    # the filter reads the LOWER evaluation's output attribute
+    lower_out = re.search(r"\], \[(pythonUDF\d+#\d+)\]", lines[lower])
+    assert lower_out and lower_out.group(1) in lines[filt[0]]
+    assert len(out.collect()) > 0
+    release(out)
 
 
 def test_quantized_served_many_prunes_and_matches_single(
@@ -1156,8 +1232,11 @@ def test_quantized_served_many_prunes_and_matches_single(
 def test_ivf_assign_arrow_tolerates_ragged_vectors(spark):
     """A dimension-mismatched (or empty) vector must not abort the job
     (the native zip_with pads with NULL -> sim -2.0 -> lowest cid, true
-    norm kept): the arrow lane must reproduce exactly that."""
-    from dgraph_dbpedia_spark.operators.similarity import ivf_assign
+    norm kept): the arrow kernel must reproduce exactly that."""
+    from dgraph_dbpedia_spark.operators.similarity import (
+        _ivf_assign_native,
+        ivf_assign,
+    )
 
     weird = spark.createDataFrame(
         [
@@ -1171,13 +1250,10 @@ def test_ivf_assign_arrow_tolerates_ragged_vectors(spark):
     cent = spark.createDataFrame(
         [(10, [1.0, 0.0]), (20, [0.0, 1.0])], "cid long, c array<double>"
     )
-    for use_arrow in (True, False):
+    for assign in (ivf_assign, _ivf_assign_native):
         got = {
             r["vec_id"]: r
-            for r in ivf_assign(
-                weird, cent, norm_col="nv", sim_col="sim",
-                use_arrow=use_arrow,
-            ).collect()
+            for r in assign(weird, cent, norm_col="nv", sim_col="sim").collect()
         }
         assert got[1]["cid"] == 10 and got[1]["sim"] == 1.0
         for vid, nrm in ((2, 1.0), (3, (1 + 9) ** 0.5), (4, 0.0)):
@@ -1186,9 +1262,9 @@ def test_ivf_assign_arrow_tolerates_ragged_vectors(spark):
 
 
 def test_ivf_topk_arrow_falls_back_on_degenerate_query(spark, vectors):
-    """The arrow lane resolves the query driver-side, so a NULL vector
-    or a multi-row query frame must FALL BACK to the native plan
-    (identical results to use_arrow=False), never raise."""
+    """ivf_topk resolves the query driver-side, so a NULL vector or a
+    multi-row query frame must FALL BACK to the native plan (identical
+    results to _ivf_topk_native called directly), never raise."""
     from dgraph_dbpedia_spark.operators.similarity import ivf_topk
 
     null_q = spark.createDataFrame([(None,)], "q array<double>")
@@ -1201,12 +1277,10 @@ def test_ivf_topk_arrow_falls_back_on_degenerate_query(spark, vectors):
             F.col("embedding").alias("q")
         ),  # multi-row
     ):
-        nat = ivf_topk(
-            vectors, q, k=3, n_centroids=2, n_probe=1, use_arrow=False
+        nat = _ivf_topk_native_plan(
+            vectors, q, k=3, n_centroids=2, n_probe=1
         ).collect()
-        arr = ivf_topk(
-            vectors, q, k=3, n_centroids=2, n_probe=1, use_arrow=True
-        ).collect()
+        arr = ivf_topk(vectors, q, k=3, n_centroids=2, n_probe=1).collect()
         assert [(r["vec_id"], r["sim"]) for r in nat] == [
             (r["vec_id"], r["sim"]) for r in arr
         ]
@@ -1255,8 +1329,8 @@ def test_normalize_embeddings_truncation_and_norms(spark):
 def test_ann_join_bulk_retrieval(spark):
     """Cross-corpus ANN join: an identical twin in df_b ranks 1 at sim
     1.0; ranks are 1..<=k per a-vector ordered (sim desc, b asc);
-    min_sim prunes; arrow and native lanes agree; no persisted
-    handles (each sketch feeds one branch)."""
+    min_sim prunes; no persisted handles (each sketch feeds one
+    branch)."""
     from dgraph_dbpedia_spark.operators.cachectl import persisted_frames
     from dgraph_dbpedia_spark.operators.similarity import ann_join
 
@@ -1293,16 +1367,6 @@ def test_ann_join_bulk_retrieval(spark):
     got = sorted((r["a"], r["b"]) for r in strict.collect())
     assert got == [(1, 10), (2, 12)]
 
-    nat = sorted(
-        (r["a"], r["b"], r["sim"], r["rnk"])
-        for r in ann_join(a, b, k=2, n_planes=4, dims=4, use_arrow=False).collect()
-    )
-    arr = sorted(
-        (r["a"], r["b"], r["sim"], r["rnk"])
-        for r in ann_join(a, b, k=2, n_planes=4, dims=4, use_arrow=True).collect()
-    )
-    assert nat == arr
-
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="k must be"):
@@ -1311,8 +1375,7 @@ def test_ann_join_bulk_retrieval(spark):
 
 def test_semantic_decontaminate_drops_planted_leak(spark):
     """A corpus row identical to a benchmark row must be dropped; a
-    far row survives with all original columns; arrow and native
-    lanes agree."""
+    far row survives with all original columns."""
     from dgraph_dbpedia_spark.operators.similarity import (
         semantic_decontaminate,
     )
@@ -1335,11 +1398,6 @@ def test_semantic_decontaminate_drops_planted_leak(spark):
     kept_ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
     assert 9000 not in kept_ids
     assert len(kept_ids) >= corpus.count() - 5  # only near-exact drops
-    nat = semantic_decontaminate(
-        corpus, bench, threshold=0.99, n_planes=4, n_bands=8, dims=64,
-        use_arrow=False,
-    )
-    assert {r["vec_id"] for r in nat.select("vec_id").collect()} == kept_ids
     # NEAR-duplicate leak (paraphrase class): one perturbed component
     # -> cosine just under 1.0; the OR-amplified bands must still
     # catch it (miss probability ~(1 - p^4)^8 with p ~ 0.99 — the
@@ -1601,47 +1659,6 @@ def test_jl_rerank_topk_twin_and_recall(spark):
         jl_rerank_topk(emb, q, k=0)
 
 
-def test_jl_project_arrow_lane_matches_native(spark):
-    """The Arrow matmul lane projects the sf0.001 corpus bit-equal to
-    the native fold lane (the house bridge posture — this corpus sits
-    nowhere near a round-6 boundary), and handles NULL / ragged rows
-    with the same NULL-out convention without derailing the batch."""
-    from dgraph_dbpedia_spark.operators.similarity import jl_project
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    )
-    nat = {
-        r["vec_id"]: r["e"]
-        for r in jl_project(emb, 16, 64).collect()
-    }
-    arr = {
-        r["vec_id"]: r["e"]
-        for r in jl_project(emb, 16, 64, use_arrow=True).collect()
-    }
-    assert nat == arr and len(nat) == emb.count()
-
-    ragged = spark.createDataFrame(
-        [
-            (0, [1.0, 2.0, 3.0, 4.0]),
-            (1, None),
-            (2, [1.0]),
-            (3, [0.5, -0.5, 0.25, -0.25]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    nat2 = {
-        r["vec_id"]: r["e"] for r in jl_project(ragged, 2, 4).collect()
-    }
-    arr2 = {
-        r["vec_id"]: r["e"]
-        for r in jl_project(ragged, 2, 4, use_arrow=True).collect()
-    }
-    assert nat2 == arr2
-    assert nat2[1] is None and nat2[2] is None
-    assert nat2[0] is not None and nat2[3] is not None
-
-
 def test_embedding_outliers_hand_computed(spark):
     """Centroid = round-6 per-position group mean; each row scores the
     round-4 cosine to its OWN group's centroid; NULL/empty vectors
@@ -1763,17 +1780,15 @@ def test_ivf_update_report_hand_computed(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    for use_arrow in (True, False):
-        got = {
-            r["cid"]: r
-            for r in ivf_update_report(
-                ex, nw, n_centroids=2, split_factor=2.0,
-                use_arrow=use_arrow,
-            ).collect()
-        }
-        assert (got[0]["n_old"], got[0]["n_new"], got[0]["n_total"]) == (3, 2, 5)
-        assert (got[1]["n_old"], got[1]["n_new"], got[1]["n_total"]) == (1, 1, 2)
-        assert got[0]["needs_split"] == 0 and got[1]["needs_split"] == 0
+    got = {
+        r["cid"]: r
+        for r in ivf_update_report(
+            ex, nw, n_centroids=2, split_factor=2.0
+        ).collect()
+    }
+    assert (got[0]["n_old"], got[0]["n_new"], got[0]["n_total"]) == (3, 2, 5)
+    assert (got[1]["n_old"], got[1]["n_new"], got[1]["n_total"]) == (1, 1, 2)
+    assert got[0]["needs_split"] == 0 and got[1]["needs_split"] == 0
     flagged = {
         r["cid"]: r["needs_split"]
         for r in ivf_update_report(
@@ -1950,40 +1965,43 @@ def test_knn_label_noise_k_validation(spark):
 
 
 def test_knn_label_noise_arrow_native_bit_equal(spark):
-    """The Arrow pair-cosine lane and the native fold produce the
-    IDENTICAL report on the real sf0.001 embeddings — in exact mode
-    AND in the blocked candidate_pairs mode (the registered row's
-    shape). The native lane is the oracle surface; this pin is what
-    lets the row default to use_arrow=True."""
-    from dgraph_dbpedia_spark.operators.similarity import (
-        ivf_assign,
-        ivf_seed_centroids,
-        knn_label_noise_report,
-    )
-
+    """The pair-cosine kernel the k-NN audit scores with equals its
+    native reference on EVERY exact-mode pair of the real sf0.001
+    embeddings (the registered row's shape) — bit-for-bit, NULL sims
+    included, so the rank and vote downstream see identical input."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    lab = emb.where(F.col("label").isNotNull())
+    side = lambda i, v: lab.select(  # noqa: E731
+        F.col("vec_id").alias(i), F.col("embedding").cast("array<double>").alias(v)
+    )
+    mism, n = _knn_pair_kernel_mismatches(side("_qid", "_qv"), side("_nid", "_nv"))
+    assert mism == 0 and n > 0
 
-    def norm(df):
-        return sorted(tuple(r) for r in df.collect())
 
-    assert norm(knn_label_noise_report(emb, k=5, use_arrow=True)) == norm(
-        knn_label_noise_report(emb, k=5, use_arrow=False)
+def _knn_pair_kernel_mismatches(a, b):
+    """Pairs of ``a`` x ``b`` (the k-NN pair lane's ``(_qid, _qv,
+    _qn)`` / ``(_nid, _nv, _nn)`` sides, self-pairs excluded) whose
+    round-6 pair-cosine kernel sim differs from the native reference —
+    bit-for-bit, NULLs included — and the number of pairs checked."""
+    from dgraph_dbpedia_spark.operators.similarity import (
+        _norm,
+        _pair_cosine_native,
+        pair_cosine_arrow,
     )
-    e = emb.where(F.col("vec_id") > 0).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    asg = ivf_assign(e, ivf_seed_centroids(e, 8, vec_col="e"), vec_col="e")
-    pairs = (
-        asg.select(F.col("vec_id").alias("qid"), "cid")
-        .join(asg.select(F.col("vec_id").alias("nid"), "cid"), "cid")
-        .drop("cid")
-    )
-    assert norm(
-        knn_label_noise_report(emb, k=5, candidate_pairs=pairs, use_arrow=True)
-    ) == norm(
-        knn_label_noise_report(
-            emb, k=5, candidate_pairs=pairs, use_arrow=False
+
+    a = a.withColumn("_qn", _norm(F.col("_qv")))
+    b = b.withColumn("_nn", _norm(F.col("_nv")))
+    scored = (
+        a.crossJoin(b)
+        .where(F.col("_qid") != F.col("_nid"))
+        .select(
+            pair_cosine_arrow(6)("_qv", "_nv", "_qn", "_nn").alias("arr"),
+            _pair_cosine_native("_qv", "_nv", "_qn", "_nn", 6).alias("nat"),
         )
+    )
+    return (
+        scored.where(~F.col("arr").eqNullSafe(F.col("nat"))).count(),
+        scored.count(),
     )
 
 
@@ -2022,20 +2040,21 @@ def test_knn_classify_hand_computed(spark):
 
 
 def test_knn_classify_arrow_native_bit_equal(spark):
-    """Arrow and native lanes produce the identical propagation on
-    the real sf0.001 embeddings (the registered row's shape)."""
-    from dgraph_dbpedia_spark.operators.similarity import knn_classify
-
+    """The pair-cosine kernel equals its native reference on every
+    query x gold pair of the registered knn_classify row's shape."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") % 5 == 0)
-    g = emb.where(F.col("vec_id") % 5 != 0)
-
-    def norm(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert norm(knn_classify(q, g, k=5, use_arrow=True)) == norm(
-        knn_classify(q, g, k=5, use_arrow=False)
+    q = emb.where(F.col("vec_id") % 5 == 0).select(
+        F.col("vec_id").alias("_qid"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
     )
+    g = emb.where(
+        (F.col("vec_id") % 5 != 0) & F.col("label").isNotNull()
+    ).select(
+        F.col("vec_id").alias("_nid"),
+        F.col("embedding").cast("array<double>").alias("_nv"),
+    )
+    mism, n = _knn_pair_kernel_mismatches(q, g)
+    assert mism == 0 and n > 0
 
 
 def test_knn_classify_no_voters_absent(spark):
@@ -2059,8 +2078,8 @@ def test_knn_classify_no_voters_absent(spark):
 def test_knn_label_noise_block_lane_equals_pair_lane(spark):
     """The block kernel (one matmul per cid group, vectors cross
     Arrow once) produces the IDENTICAL report as the cid equi-join
-    pair lane on the real sf0.001 embeddings — same blocking, both
-    Arrow and native pair lanes. This pin is what lets the scale tool
+    pair lane on the real sf0.001 embeddings — same blocking. This
+    pin is what lets the scale tool
     and large-corpus callers use block_assign."""
     from dgraph_dbpedia_spark.operators.similarity import (
         ivf_assign,
@@ -2088,11 +2107,6 @@ def test_knn_label_noise_block_lane_equals_pair_lane(spark):
     )
     assert via_blocks == norm(
         knn_label_noise_report(emb, k=5, candidate_pairs=pairs)
-    )
-    assert via_blocks == norm(
-        knn_label_noise_report(
-            emb, k=5, candidate_pairs=pairs, use_arrow=False
-        )
     )
 
 

@@ -110,14 +110,16 @@ def main() -> None:
             e, threshold=0.95, n_centroids=n_centroids,
             id_col="doc_id", vec_col="e",
         )
+        pairs = pairs_lazy.localCheckpoint()
         # r17 (VERDICT r16 #5): dump the pairs plan so the within-
         # cluster equi-join shape is checkable at the scale point
-        # (stderr, keeps the one-line-JSON stdout contract)
+        # (stderr, keeps the one-line-JSON stdout contract). Dumped
+        # AFTER the checkpoint ran it, so AQE reports the final plan
+        # (isFinalPlan=true), not the pre-execution one
         print(
             pairs_lazy._jdf.queryExecution().executedPlan().toString(),
             file=sys.stderr,
         )
-        pairs = pairs_lazy.localCheckpoint()
     else:
         n_centroids = None
         pairs = cosine_near_dup_pairs(
