@@ -1726,8 +1726,7 @@ def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language document-length distribution (exact percentile;
-    approx_percentile is the sketch path at 100 TB)."""
+    """Per-language document-length distribution (exact percentile)."""
     from dgraph_dbpedia_spark.operators.stats import percentile_stats
 
     return percentile_stats(_t(spark, sf_dir, "documents"), ["lang"], "n_chars")
@@ -2967,9 +2966,7 @@ def _q_corpus_diff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_token_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r13: per-source token-count percentile audit — exact
     nearest-rank (rational rank arithmetic, no interpolation), the
-    pre-chunking length report. The exact lane is registered; the
-    operator's ``approx=True`` t-digest lane is the sort-free 100 TB
-    path (pinned within-bounds by pytest, not oracle-replayable)."""
+    pre-chunking length report."""
     from dgraph_dbpedia_spark.operators.textstats import token_percentiles
 
     return token_percentiles(_t(spark, sf_dir, "documents"))

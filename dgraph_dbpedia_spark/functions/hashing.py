@@ -8,9 +8,9 @@ in every engine. Seeded families come from suffixing the input with
 ``#<seed>``.
 
 Scale note: md5 is ~2-3x slower than xxhash64 per call but both are
-memory-bandwidth-trivial next to the shuffle these operators feed;
-stay with md5 for verifiability. All functions are native Catalyst
-expressions — no Python UDFs.
+memory-bandwidth-trivial next to the shuffle these operators feed, so
+md5 is the only hash: it is the one DuckDB and :func:`hash64_py` can
+replay. All functions are native Catalyst expressions — no Python UDFs.
 """
 
 from __future__ import annotations
@@ -19,15 +19,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def hash64(col: Column, seed: int | None = None, fast: bool = False) -> Column:
-    """Deterministic 60-bit integer hash of a string column.
-
-    ``fast=True`` switches to Spark's built-in xxhash64 (codegen'd,
-    ~3-5x cheaper per call) — the production path for 100 TB runs where
-    cross-engine oracle checks don't apply. Same int64 column type, so
-    every downstream plan shape is identical."""
-    if fast:
-        return F.xxhash64(col, F.lit(seed or 0))
+def hash64(col: Column, seed: int | None = None) -> Column:
+    """Deterministic 60-bit integer hash of a string column (md5, first
+    15 hex chars); :func:`hash64_sql` and :func:`hash64_py` are its
+    DuckDB and host-side twins."""
     if seed is not None:
         col = F.concat(col, F.lit(f"#{seed}"))
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
@@ -110,12 +105,13 @@ def _rotl60(x: Column) -> Column:
     return F.shiftleft(x.bitwiseAND(F.lit(_M53)), 7) + F.shiftrightunsigned(x, 53)
 
 
-def token_hashes(toks: Column, fast: bool = False) -> Column:
+def token_hashes(toks: Column) -> Column:
     """Per-token 60-bit hashes (one digest per token — the only byte
-    hashing in the rolling-shingle path). The &MASK60 is a no-op for the
-    md5 path (already < 2^60) but folds the fast xxhash64 path's full
-    signed-64 range into the same non-negative domain."""
-    return F.transform(toks, lambda t: hash64(t, fast=fast).bitwiseAND(F.lit(MASK60)))
+    hashing in the rolling-shingle path). The &MASK60 pins every token
+    hash to the non-negative 60-bit domain the rotate-xor fold needs;
+    md5's 15 hex chars already sit there, and the mask is part of every
+    hashed plan and of :func:`token_hashes_sql`."""
+    return F.transform(toks, lambda t: hash64(t).bitwiseAND(F.lit(MASK60)))
 
 
 def positional_shingle_hashes(toks_h: Column, w: int) -> Column:
@@ -146,7 +142,7 @@ def rolling_shingle_hashes(toks_h: Column, w: int) -> Column:
 
 
 def token_hashes_sql(toks_expr: str) -> str:
-    """DuckDB twin of :func:`token_hashes` (md5 path). Built on
+    """DuckDB twin of :func:`token_hashes`, mask included. Built on
     :func:`hash64_sql` so the digest recipe has exactly one
     definition per engine."""
     return f"list_transform({toks_expr}, t -> {hash64_sql('t')} & {MASK60})"

@@ -26,8 +26,6 @@ discrimination and everything to skew).
 
 from __future__ import annotations
 
-from typing import Callable
-
 import pandas as pd  # module-level: pandas_udf type hints must resolve
 
 from pyspark.sql import Column, DataFrame, Observation
@@ -93,9 +91,7 @@ def exact_dedup(
     return df.groupBy(F.md5(text).alias("fp")).agg(rep)
 
 
-def _hashed_shingled(
-    df: DataFrame, text_col: str, id_col: str, w: int, fast: bool = False
-) -> DataFrame:
+def _hashed_shingled(df: DataFrame, text_col: str, id_col: str, w: int) -> DataFrame:
     """Shingle sets as int64 hashes: 8-byte join/intersect keys instead
     of multi-word strings. Distinctness is preserved (60-bit hashes;
     collision probability is negligible at any realistic doc size),
@@ -119,7 +115,7 @@ def _hashed_shingled(
     it (and the barrier's own inferred filter constant-folds:
     size(array(struct)) = 1)."""
     toks_h = df.select(
-        F.col(id_col), token_hashes(tokens(F.col(text_col)), fast=fast).alias("th")
+        F.col(id_col), token_hashes(tokens(F.col(text_col))).alias("th")
     )
     return toks_h.select(
         F.col(id_col),
@@ -136,15 +132,13 @@ def ngram_jaccard_pairs(
     w: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
-    fast: bool = False,
 ) -> DataFrame:
     """All pairs (a < b) with shingle-set Jaccard >= threshold.
 
     Sparse plan: explode distinct shingles, self-equi-join on the
     shingle, count joint shingles per pair (= intersection size), then
     ``|A ∪ B| = |A| + |B| - |A ∩ B|``. Only documents sharing at least
-    one shingle ever meet. ``fast=True`` -> xxhash64 shingle keys
-    (production path, not oracle-checkable).
+    one shingle ever meet.
 
     ``max_shingle_freq`` (default 1000) drops shingles shared by more
     than N documents BEFORE the self-join: a stop-phrase shingle at
@@ -164,7 +158,7 @@ def ngram_jaccard_pairs(
     from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     counts, persisted = _ngram_pair_counts(
-        df, text_col, id_col, w, max_shingle_freq, fast
+        df, text_col, id_col, w, max_shingle_freq
     )
     out = (
         counts.withColumn(
@@ -185,7 +179,6 @@ def _ngram_pair_counts(
     id_col: str,
     w: int,
     max_shingle_freq: int | None,
-    fast: bool,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Shared sparse pair-count skeleton of the shingle-overlap family:
     ``(a, b, inter, na, nb)`` for every pair (a < b) sharing at least
@@ -194,7 +187,7 @@ def _ngram_pair_counts(
     # persist: the shingled frame feeds four plan branches (two join
     # sides + two size lookups); without it Catalyst recomputes the
     # shingling per branch (no cross-branch subplan sharing, SURVEY §4)
-    sh = _hashed_shingled(df, text_col, id_col, w, fast).persist()
+    sh = _hashed_shingled(df, text_col, id_col, w).persist()
     exploded = sh.select(F.col(id_col), F.explode("sh").alias("shingle"))
     if max_shingle_freq is not None:
         # drop degenerate stop-shingles: they blow up the join and carry
@@ -232,7 +225,6 @@ def ngram_containment_pairs(
     w: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
-    fast: bool = False,
 ) -> DataFrame:
     """ASYMMETRIC shingle containment — the subsumption detector
     Jaccard structurally cannot be: a short quote fully embedded in a
@@ -253,7 +245,7 @@ def ngram_containment_pairs(
     from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     counts, persisted = _ngram_pair_counts(
-        df, text_col, id_col, w, max_shingle_freq, fast
+        df, text_col, id_col, w, max_shingle_freq
     )
     ca = F.round(F.col("inter") / F.col("na"), 6)
     cb = F.round(F.col("inter") / F.col("nb"), 6)
@@ -324,16 +316,14 @@ def minhash_signatures(
     id_col: str = "doc_id",
     w: int = 3,
     k: int = 16,
-    fast: bool = False,
 ) -> DataFrame:
     """k-minimum-hash signature per document: ``sig[i] = min over
     shingles of lane_i(h(shingle))``. Returns ``(id, sig: array<bigint>)``.
 
-    Entirely per-row (no shuffle): ONE strong hash per shingle (md5, or
-    xxhash64 with ``fast=True``), then k Carter-Wegman universal-hash
-    lanes ``(a_i * (h mod p) + b_i) mod p`` with p = 2^31-1 — each lane
-    is a multiply+add+mod over the hashed-shingle array, not another
-    digest pass. ``a_i < p`` and ``h mod p < p`` keep every product
+    Entirely per-row (no shuffle): ONE strong hash per shingle (md5),
+    then k Carter-Wegman universal-hash lanes ``(a_i * (h mod p) +
+    b_i) mod p`` with p = 2^31-1 — each lane is a multiply+add+mod
+    over the hashed-shingle array, not another digest pass. ``a_i < p`` and ``h mod p < p`` keep every product
     under 2^62, so the arithmetic is int64-exact in Spark AND DuckDB
     (which errors on BIGINT overflow rather than wrapping). The k lane
     passes run as one numpy kernel per Arrow batch
@@ -341,7 +331,7 @@ def minhash_signatures(
     traversals.
     """
     return _sigs_from_hashed(
-        _hashed_shingled(df, text_col, id_col, w, fast), id_col, k
+        _hashed_shingled(df, text_col, id_col, w), id_col, k
     )
 
 
@@ -370,7 +360,6 @@ def _lsh_buckets(
     id_col: str,
     bands: int,
     rows_per_band: int,
-    fast: bool = False,
 ) -> DataFrame:
     """Explode a signature frame into its ``(id, band, bucket)`` LSH
     bucket memberships — the shared banding step of the within-corpus
@@ -385,7 +374,6 @@ def _lsh_buckets(
                         for r in range(rows_per_band)
                     ],
                 ),
-                fast=fast,
             )
             for b in range(bands)
         ]
@@ -400,7 +388,6 @@ def minhash_lsh_candidates(
     id_col: str = "doc_id",
     bands: int = 4,
     rows_per_band: int = 4,
-    fast: bool = False,
 ) -> DataFrame:
     """LSH banding: documents agreeing on all rows of any band become a
     candidate pair. Returns distinct ``(a, b)`` with a < b.
@@ -408,7 +395,7 @@ def minhash_lsh_candidates(
     One explode (doc x bands) + one groupBy-join on (band, bucket-hash):
     shuffle volume = #docs * #bands, never O(n^2).
     """
-    buckets = _lsh_buckets(signatures, id_col, bands, rows_per_band, fast)
+    buckets = _lsh_buckets(signatures, id_col, bands, rows_per_band)
     a = buckets.select(F.col(id_col).alias("a"), "band", "bucket")
     b = buckets.select(F.col(id_col).alias("b"), "band", "bucket")
     return (
@@ -435,19 +422,17 @@ def minhash_dedup_pairs(
     k: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    fast: bool = False,
 ) -> DataFrame:
     """MinHash+LSH near-dup pipeline: signatures -> banded candidates ->
     exact-Jaccard verification of candidates only. Returns
-    ``(a, b, jaccard)`` pairs above threshold. ``fast=True`` -> seeded
-    xxhash64 everywhere (production path, not oracle-checkable)."""
+    ``(a, b, jaccard)`` pairs above threshold."""
     from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     rows_per_band = k // bands
     # ONE shingle-hashing pass feeds signatures AND the verify step
-    sh = _hashed_shingled(df, text_col, id_col, w, fast).persist()
+    sh = _hashed_shingled(df, text_col, id_col, w).persist()
     sigs = _sigs_from_hashed(sh, id_col, k)
-    cands = minhash_lsh_candidates(sigs, id_col, bands, rows_per_band, fast)
+    cands = minhash_lsh_candidates(sigs, id_col, bands, rows_per_band)
     sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -493,17 +478,14 @@ def _simhash_fold_arrow(n_bits: int = N_SIMHASH_BITS):
     return pandas_udf(fold, LongType())
 
 
-def _token_hashes(
-    df: DataFrame, text_col: str, id_col: str, fast: bool
-) -> DataFrame:
+def _token_hashes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """``(id, hs)``: the cross-engine hash of every whitespace token."""
-    hs = F.transform(tokens(F.col(text_col)), lambda t: hash64(t, fast=fast))
+    hs = F.transform(tokens(F.col(text_col)), lambda t: hash64(t))
     return df.select(F.col(id_col), hs.alias("hs"))
 
 
 def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    fast: bool = False,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """60-bit SimHash per document over whitespace tokens: bit b is set
     iff the sum over tokens of (+-1 by token-hash bit b) is positive.
@@ -514,7 +496,7 @@ def simhash(
     walks tokens x 60 bits in the expression interpreter); results are
     bit-identical — integer math — so the oracle contract is
     unaffected."""
-    return _token_hashes(df, text_col, id_col, fast).select(
+    return _token_hashes(df, text_col, id_col).select(
         F.col(id_col), _simhash_fold_arrow()(F.col("hs")).alias("simhash")
     )
 
@@ -617,7 +599,6 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    fast: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= max_hamming.
 
@@ -638,7 +619,7 @@ def simhash_near_dup_pairs(
         raise ValueError(
             f"max_hamming must be in [0, 3], got {max_hamming}"
         )
-    sh = simhash(df, text_col, id_col, fast).persist()
+    sh = simhash(df, text_col, id_col).persist()
     out = simhash_banded_pairs(sh, id_col, max_hamming)
     return tag_persisted(out, sh)
 
@@ -1060,8 +1041,6 @@ def dedup_corpus(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    clusterer: Callable[..., DataFrame] | None = None,
-    **cluster_kwargs,
 ) -> DataFrame:
     """End-to-end corpus dedup: keep exactly ONE representative (the
     min-id member) per connected near-duplicate cluster, all original
@@ -1070,34 +1049,28 @@ def dedup_corpus(
 
     This is the transitive-closure-correct version of
     :func:`near_dup_filter` (greedy pairwise keep-lowest under-deletes
-    on chains): components come from the clusterer, then a
+    on chains): components come from :func:`dedup_clusters_star`, then a
     broadcast-able left-semi join keeps the docs whose id IS their
     cluster id. Singletons are their own cluster, so untouched docs
     always survive.
 
-    ``clusterer`` selects the component algorithm (default
-    :func:`dedup_clusters_star` — r17, VERDICT r16 #3: the star
-    contraction's O(log^2 n) round bound beat label propagation's
-    diameter-linear rounds on every composed row measured at sf0.1
-    (curation_pipeline 15.96 -> 11.31 s, pretraining_prep 11.57 ->
-    7.89 s, dedup_increment 5.07 -> 3.92 s best-of-3 warm; the
-    standalone dedup_corpus / semantic_dedup rows flat within noise),
-    never lost, and converges on ANY diameter where propagation
-    raises past ``max_iter`` — output proven identical on every
-    affected row, see OPTIMIZATION_r17.md. Pass
-    :func:`dedup_clusters` to get propagation back);
-    ``cluster_kwargs`` (``max_iter``, ``checkpoint_every``) pass
-    through to it.
+    Star contraction, with its defaults, is the one component
+    algorithm (r17, VERDICT r16 #3): its O(log^2 n) round bound beat
+    label propagation's diameter-linear rounds on every composed row
+    measured at sf0.1 (curation_pipeline 15.96 -> 11.31 s,
+    pretraining_prep 11.57 -> 7.89 s, dedup_increment 5.07 -> 3.92 s
+    best-of-3 warm; the standalone dedup_corpus / semantic_dedup rows
+    flat within noise), never lost, and converges on any diameter where
+    propagation raises past ``max_iter`` — output proven identical on
+    every affected row, see OPTIMIZATION_r17.md.
 
     ``docs`` must be deterministic under re-evaluation (the
     :func:`dedup_clusters` contract): the result scans ``docs`` lazily
     in both the completion join and the representative semi-join
     instead of materializing the corpus. Wrap a nondeterministic
     source in ``localCheckpoint()`` first."""
-    if clusterer is None:
-        clusterer = dedup_clusters_star
-    clusters = clusterer(
-        docs.select(F.col(id_col)), pairs, id_col=id_col, **cluster_kwargs
+    clusters = dedup_clusters_star(
+        docs.select(F.col(id_col)), pairs, id_col=id_col
     )
     reps = clusters.where(F.col("cluster_id") == F.col(id_col)).select(id_col)
     return docs.join(reps, id_col, "left_semi")
@@ -1201,7 +1174,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    fast: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination: drop every training document that
     shares at least one ``w``-token shingle with the benchmark/eval set
@@ -1218,7 +1190,7 @@ def decontaminate(
     shuffle carries (id, shingle-hash) pairs only.
     """
     flagged = contaminated_ids(
-        docs, benchmark, w, text_col, id_col, bench_text_col, fast
+        docs, benchmark, w, text_col, id_col, bench_text_col
     )
     return docs.join(flagged, id_col, "left_anti")
 
@@ -1230,7 +1202,6 @@ def contaminated_ids(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    fast: bool = False,
     bench_broadcast_cap: int | None = 20_000_000,
 ) -> DataFrame:
     """Ids of documents sharing >=1 ``w``-token shingle with the
@@ -1255,7 +1226,7 @@ def contaminated_ids(
     bench_sh = (
         _hashed_shingled(
             benchmark.select(F.lit(0).alias("__bid"), F.col(bench_text_col)),
-            bench_text_col, "__bid", w, fast=fast,
+            bench_text_col, "__bid", w,
         )
         .select(F.explode("sh").alias("h"))
         .distinct()
@@ -1264,7 +1235,7 @@ def contaminated_ids(
         right = F.broadcast(bench_sh)
     else:
         right = bench_sh
-    corpus_sh = _hashed_shingled(docs, text_col, id_col, w, fast=fast).select(
+    corpus_sh = _hashed_shingled(docs, text_col, id_col, w).select(
         F.col(id_col), F.explode("sh").alias("h")
     )
     return corpus_sh.join(right, "h", "left_semi").select(id_col).distinct()
@@ -1278,7 +1249,6 @@ def contamination_report(
     id_col: str = "doc_id",
     bench_id_col: str = "doc_id",
     bench_text_col: str = "text",
-    fast: bool = False,
     bench_broadcast_cap: int | None = 20_000_000,
 ) -> DataFrame:
     """Per-benchmark-item contamination audit — the report a curation
@@ -1308,13 +1278,13 @@ def contamination_report(
         benchmark.select(
             F.col(bench_id_col).alias("__bid"), F.col(bench_text_col)
         ),
-        bench_text_col, "__bid", w, fast=fast,
+        bench_text_col, "__bid", w,
     ).select(F.col("__bid"), F.explode("sh").alias("h"))
     if bench_broadcast_cap is None or bench_sh.count() <= bench_broadcast_cap:
         right = F.broadcast(bench_sh)
     else:
         right = bench_sh
-    corpus_sh = _hashed_shingled(docs, text_col, id_col, w, fast=fast).select(
+    corpus_sh = _hashed_shingled(docs, text_col, id_col, w).select(
         F.col(id_col), F.explode("sh").alias("h")
     )
     return (
@@ -1335,7 +1305,6 @@ def ngram_novelty(
     text_col: str = "text",
     id_col: str = "doc_id",
     ref_text_col: str = "text",
-    fast: bool = False,
     ref_broadcast_cap: int | None = 20_000_000,
 ) -> DataFrame:
     """Per-document novelty vs a reference corpus — the memorization /
@@ -1362,7 +1331,7 @@ def ngram_novelty(
     ref_sh = (
         _hashed_shingled(
             reference.select(F.lit(0).alias("__rid"), F.col(ref_text_col)),
-            ref_text_col, "__rid", w, fast=fast,
+            ref_text_col, "__rid", w,
         )
         .select(F.explode("sh").alias("h"))
         .distinct()
@@ -1372,7 +1341,7 @@ def ngram_novelty(
         right = F.broadcast(ref_sh)
     else:
         right = ref_sh
-    corpus_sh = _hashed_shingled(docs, text_col, id_col, w, fast=fast).select(
+    corpus_sh = _hashed_shingled(docs, text_col, id_col, w).select(
         F.col(id_col), F.explode("sh").alias("h")
     )
     return (
@@ -1506,8 +1475,6 @@ def dedup_increment(
     k: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    fast: bool = False,
-    **cluster_kwargs,
 ) -> DataFrame:
     """Incremental corpus dedup — the production shape of a GROWING
     corpus: dedup a new ``batch`` against an already-deduped
@@ -1537,15 +1504,15 @@ def dedup_increment(
     from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     rows_per_band = k // bands
-    sh_e = _hashed_shingled(existing, text_col, id_col, w, fast).persist()
-    sh_b = _hashed_shingled(batch, text_col, id_col, w, fast).persist()
+    sh_e = _hashed_shingled(existing, text_col, id_col, w).persist()
+    sh_b = _hashed_shingled(batch, text_col, id_col, w).persist()
     bk_e = _lsh_buckets(
         _sigs_from_hashed(sh_e, id_col, k),
-        id_col, bands, rows_per_band, fast,
+        id_col, bands, rows_per_band,
     )
     bk_b = _lsh_buckets(
         _sigs_from_hashed(sh_b, id_col, k),
-        id_col, bands, rows_per_band, fast,
+        id_col, bands, rows_per_band,
     ).persist()
 
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1615,10 +1582,9 @@ def dedup_increment(
         .select("a", "b")
     )
     try:
-        out = dedup_corpus(clean, bpairs, id_col=id_col, **cluster_kwargs)
+        out = dedup_corpus(clean, bpairs, id_col=id_col)
     except Exception:
-        # the eager clusterer raised (e.g. diameter > max_iter, the
-        # documented retry-with-star condition): there is no result to
+        # the eager component step raised: there is no result to
         # carry the release handles, so drop the caches here — the
         # same leak semantic_dedup's finally fixes
         for f in (sh_e, sh_b, bk_b, killed):
@@ -1636,7 +1602,6 @@ def minhash_join(
     k: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    fast: bool = False,
 ) -> DataFrame:
     """Fuzzy similarity JOIN across two corpora: every ``(a, b,
     jaccard)`` with ``a`` from ``left``, ``b`` from ``right`` and exact
@@ -1652,15 +1617,15 @@ def minhash_join(
     from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     rows_per_band = k // bands
-    sh_l = _hashed_shingled(left, text_col, id_col, w, fast).persist()
-    sh_r = _hashed_shingled(right, text_col, id_col, w, fast).persist()
+    sh_l = _hashed_shingled(left, text_col, id_col, w).persist()
+    sh_r = _hashed_shingled(right, text_col, id_col, w).persist()
     bk_l = _lsh_buckets(
         _sigs_from_hashed(sh_l, id_col, k),
-        id_col, bands, rows_per_band, fast,
+        id_col, bands, rows_per_band,
     )
     bk_r = _lsh_buckets(
         _sigs_from_hashed(sh_r, id_col, k),
-        id_col, bands, rows_per_band, fast,
+        id_col, bands, rows_per_band,
     )
     cands = (
         bk_l.select(F.col(id_col).alias("a"), "band", "bucket")
@@ -1692,7 +1657,6 @@ def strip_duplicated_spans(
     L: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fast: bool = False,
     sep: str = " ",
 ) -> DataFrame:
     """ExactSubstr-style SPAN dedup at token-window granularity (Lee et
@@ -1739,7 +1703,7 @@ def strip_duplicated_spans(
         F.col(id_col),
         tokens(F.col(text_col)).alias("__toks"),
     ).persist()
-    th = token_hashes(F.col("__toks"), fast=fast)
+    th = token_hashes(F.col("__toks"))
     warr = F.when(
         F.size("__th") >= L,
         F.transform(
@@ -1811,7 +1775,6 @@ def winnow_fingerprints(
     w: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fast: bool = False,
     tie: str = "left",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
@@ -1851,7 +1814,7 @@ def winnow_fingerprints(
     joins (hot-key cap applies there, not here).
     """
     return (
-        _winnow_selected(docs, k, w, text_col, id_col, fast, tie)
+        _winnow_selected(docs, k, w, text_col, id_col, tie)
         .select(F.col(id_col), F.explode("__fps").alias("__s"))
         .select(
             F.col(id_col),
@@ -1867,7 +1830,6 @@ def _winnow_selected(
     w: int,
     text_col: str,
     id_col: str,
-    fast: bool,
     tie: str = "left",
 ) -> DataFrame:
     """Shared winnowing core: ``(id_col, __fps)`` where ``__fps`` is the
@@ -1903,7 +1865,7 @@ def _winnow_selected(
     return (
         docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
         .select(
-            F.col(id_col), token_hashes(F.col("__toks"), fast=fast).alias("__th")
+            F.col(id_col), token_hashes(F.col("__toks")).alias("__th")
         )
         .select(
             F.col(id_col),
@@ -1923,7 +1885,6 @@ def winnow_matches(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_fp_freq: int | None = 1000,
-    fast: bool = False,
 ) -> DataFrame:
     """LOCAL overlap detection on winnowing fingerprints (the matching
     half of Schleimer et al. 2003 — the MOSS shape): pairs ``(a, b,
@@ -1963,7 +1924,7 @@ def winnow_matches(
             F.transform(F.col("__fps"), lambda s: s["h"]), 0
         )
         return (
-            _winnow_selected(df, k, w, text_col, id_col, fast)
+            _winnow_selected(df, k, w, text_col, id_col)
             .select(F.col(id_col).alias(out), F.array_distinct(sets).alias("__set"))
             .select(F.col(out), F.explode("__set").alias("fp"))
         )

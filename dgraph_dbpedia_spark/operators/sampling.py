@@ -13,8 +13,7 @@ with md5.
 Scale shape: one shuffle on the strata columns; the window is a
 rank-truncation so state per stratum is O(1) beyond the sort. For
 very hot strata, note the sort is within-stratum — salt only helps if
-a single stratum exceeds a task's spill budget, at which point
-``fast=True`` (xxhash64) also removes the md5 cost.
+a single stratum exceeds a task's spill budget.
 """
 
 from __future__ import annotations
@@ -32,7 +31,6 @@ def stratified_sample(
     strata_cols: Sequence[str],
     n_per_stratum: int,
     id_col: str,
-    fast: bool = False,
 ) -> DataFrame:
     """Keep the ``n_per_stratum`` rows with the smallest
     ``hash(id_col)`` inside each stratum (ties broken by id). Columns
@@ -42,7 +40,7 @@ def stratified_sample(
     rn = "__rn"
     while rn in df.columns:
         rn = "_" + rn
-    h = hash64(F.col(id_col).cast("string"), fast=fast)
+    h = hash64(F.col(id_col).cast("string"))
     w = Window.partitionBy(*strata_cols).orderBy(h.asc(), F.col(id_col).asc())
     return (
         df.withColumn(rn, F.row_number().over(w))
@@ -73,8 +71,7 @@ def pack_offsets(
     running sum); shard count is the parallelism dial — packing is
     embarrassingly parallel across shards, and determinism comes from
     the (shard, doc_id) sort, not from input order. The md5-derived
-    shard hash is cross-engine checkable; swap ``fast=True``-style
-    xxhash in production exactly as the dedup operators do.
+    shard hash is cross-engine checkable.
     """
     # same loud guard range_count_join applies to radius: a zero/negative
     # divisor would otherwise yield silent NULL pack/shard ids via
@@ -728,7 +725,6 @@ def epoch_shuffle(
     epoch: int,
     n_shards: int = 4,
     id_col: str = "doc_id",
-    fast: bool = False,
 ) -> DataFrame:
     """Deterministic epoch shuffling for training-data delivery: every
     epoch induces a DIFFERENT but fully reproducible permutation of the
@@ -743,8 +739,7 @@ def epoch_shuffle(
     100 TB shape: ONE shuffle (the per-shard ordered window);
     ``n_shards`` is the parallelism dial exactly as in
     :func:`pack_offsets` — the global order is (shard, pos), so no
-    single-partition global sort ever happens. ``fast=True`` swaps in
-    xxhash64 off the oracle path."""
+    single-partition global sort ever happens."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     # loud, not silent: withColumn would overwrite caller data (the
@@ -759,7 +754,7 @@ def epoch_shuffle(
     hcol = "__h"
     while hcol in df.columns:
         hcol = "_" + hcol
-    h = hash64(F.col(id_col).cast("string"), seed=epoch, fast=fast)
+    h = hash64(F.col(id_col).cast("string"), seed=epoch)
     w = Window.partitionBy("shard").orderBy(
         F.col(hcol).asc(), F.col(id_col).asc()
     )

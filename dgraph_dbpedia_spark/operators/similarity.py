@@ -1958,13 +1958,13 @@ def semantic_dedup(
     vec_col: str = "embedding",
     keep: str = "min_id",
     normalized: bool = False,
-    **cluster_kwargs,
 ) -> DataFrame:
     """End-to-end semantic dedup: keep ONE representative per connected
     component of the within-cluster near-dup pair graph, all original
     columns preserved. Singletons and sub-threshold vectors always
-    survive. ``cluster_kwargs`` (``clusterer``, ``max_iter``, ...) pass
-    through to the component algorithm.
+    survive. Components come from
+    :func:`dgraph_dbpedia_spark.operators.dedup.dedup_clusters_star`
+    under both ``keep`` policies.
 
     ``keep`` selects the representative:
 
@@ -2001,35 +2001,22 @@ def semantic_dedup(
         sim_col="_csim" if keep == "low_centroid_sim" else None,
         normalized=normalized,
     )
-    # the clusterer eagerly materializes the component labels into a
-    # checkpoint-rooted frame, so the assignment cache can be released
-    # as soon as the representative set is pinned; finally: a
-    # non-convergence RuntimeError (reachable only with an explicit
-    # tiny max_iter or clusterer=dedup_clusters on a long-diameter
-    # graph — the r17 star default converges on any diameter) must not
-    # leave the corpus-sized assignment cache alive past the failure
+    # the star contraction eagerly materializes the component labels
+    # into a checkpoint-rooted frame, so the assignment cache can be
+    # released as soon as the representative set is pinned; finally: a
+    # failure in the component step must not leave the corpus-sized
+    # assignment cache alive past it
     try:
         if keep == "min_id":
-            out = dedup_corpus(
-                df, pairs.select("a", "b"), id_col=id_col, **cluster_kwargs
-            )
+            out = dedup_corpus(df, pairs.select("a", "b"), id_col=id_col)
         else:
-            # same r17 default as dedup_corpus (measured flat-to-better
-            # and output-identical on the keep_far row; a split default
-            # between the two lanes would be a trap)
-            clusterer = (
-                cluster_kwargs.pop("clusterer", None) or dedup_clusters_star
-            )
-            clusters = clusterer(
-                df.select(F.col(id_col)),
-                pairs.select("a", "b"),
-                id_col=id_col,
-                **cluster_kwargs,
+            clusters = dedup_clusters_star(
+                df.select(F.col(id_col)), pairs.select("a", "b"), id_col=id_col
             )
             # one id per component; localCheckpoint pins the selection
             # (bounded by #components — the same scale class as the
-            # clusterer's own checkpoints) so the assignment cache can
-            # be dropped before the result is consumed
+            # star contraction's own checkpoints) so the assignment
+            # cache can be dropped before the result is consumed
             reps = (
                 clusters.join(sk.select(F.col(id_col), "_csim"), id_col)
                 .groupBy("cluster_id")

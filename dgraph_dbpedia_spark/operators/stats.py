@@ -218,18 +218,14 @@ def percentile_stats(
     value_col: str,
     ps: list[float] = (0.5, 0.9, 0.99),
     names: list[str] | None = None,
-    approx: bool = False,
 ) -> DataFrame:
     """Per-group value-distribution percentiles — the corpus profiling
     step (document length / token count / score distributions) that
     gates curation thresholds.
 
-    Exact mode uses ``percentile`` (linear interpolation at
-    ``p*(n-1)``, matching SQL ``quantile_cont``); ``approx=True``
-    switches to ``approx_percentile`` (t-digest-style sketch,
-    map-side combinable) — the 100 TB path: the exact aggregate buffers
-    each group's values, the sketch is constant-space per group and
-    needs only the one groupBy shuffle of partial sketches.
+    Uses the exact ``percentile`` aggregate (linear interpolation at
+    ``p*(n-1)``, matching SQL ``quantile_cont``), so the DuckDB oracle
+    replays it; the aggregate buffers each group's values.
 
     Returns one row per group with a rounded double column per
     percentile (default names ``p50, p90, p99``).
@@ -247,11 +243,7 @@ def percentile_stats(
         raise ValueError(
             f"percentile names collide with group columns: {sorted(clash)}"
         )
-    agg = (
-        F.percentile_approx(value_col, list(ps), 10_000)
-        if approx
-        else F.percentile(value_col, F.array(*[F.lit(p) for p in ps]))
-    )
+    agg = F.percentile(value_col, F.array(*[F.lit(p) for p in ps]))
     # collision-proof temp alias (same hazard ADVICE r5 flagged for a
     # fixed "__rn" in stratified_sample)
     tmp = "__ps"

@@ -724,7 +724,6 @@ def perplexity_buckets(
     id_col: str = "doc_id",
     group_col: str | None = "lang",
     smoothing: float = 1.0,
-    exact: bool = True,
 ) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al., LREC 2020 §4.3:
     rank each language's documents by LM perplexity, split into
@@ -736,17 +735,11 @@ def perplexity_buckets(
     Zero-token documents (NULL bits) always land in the LAST bucket —
     explicitly, not via engine-specific NULL ordering.
 
-    ``exact=True`` uses ``ntile`` over a per-group window — exact
+    Buckets come from ``ntile`` over a per-group window — exact
     quantiles, deterministic (ties broken by id), DuckDB-replayable;
     its sort is per-group, so at corpus scale one giant language is a
-    hot window partition. ``exact=False`` is the 100 TB path: per-group
-    boundaries from ``percentile_approx`` (one partially-aggregable
-    pass, output bounded by groups x quantiles) broadcast back and
-    applied as a narrow comparison — no global sort, at the price of
-    approximate boundaries (sketch-based, engine-specific: pytest
-    asserts bucket monotonicity and sizes, not an oracle hash). The
-    result carries unigram_logprob's model release handle
-    (cachectl.release after materializing)."""
+    hot window partition. The result carries unigram_logprob's model
+    release handle (cachectl.release after materializing)."""
     from pyspark.sql import Window
 
     from dgraph_dbpedia_spark.operators.cachectl import (
@@ -758,74 +751,30 @@ def perplexity_buckets(
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
     scored = unigram_logprob(df, text_col, id_col, smoothing)
     gcols = [group_col] if group_col is not None else []
-    # persisted: base feeds two branches in the exact path (ranked +
-    # nulls union) and two in the approx path (bounds aggregate + the
-    # bucket projection) — unpersisted, the corpus-wide token scoring
-    # would re-run per branch (the unigram_logprob docstring's
-    # no-cross-branch-sharing rule). Rides the result's release handle.
+    # persisted: base feeds two branches (ranked + nulls union) —
+    # unpersisted, the corpus-wide token scoring would re-run per
+    # branch (the unigram_logprob docstring's no-cross-branch-sharing
+    # rule). Rides the result's release handle.
     base = (
         df.select(F.col(id_col), *[F.col(c) for c in gcols])
         .join(scored, id_col)
         .persist()
     )
-    if exact:
-        w = Window.partitionBy(
-            *[F.col(c) for c in gcols]
-        ).orderBy(F.col("bits_per_token").asc(), F.col(id_col).asc())
-        # NULL bits are excluded from the ntile ranking entirely and
-        # pinned to the last bucket: engines disagree on NULL sort
-        # position (Spark NULLS FIRST vs DuckDB NULLS LAST on ASC),
-        # and a null doc inside the ntile would also shift every
-        # other bucket boundary by engine
-        ranked = base.where(F.col("bits_per_token").isNotNull()).withColumn(
-            "bucket", F.ntile(n_buckets).over(w)
-        )
-        nulls = base.where(F.col("bits_per_token").isNull()).withColumn(
-            "bucket", F.lit(n_buckets)
-        )
-        out = ranked.unionByName(nulls)
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = (
-            base.where(F.col("bits_per_token").isNotNull())
-            .groupBy(*[F.col(c) for c in gcols])
-            .agg(
-                F.percentile_approx(
-                    "bits_per_token", qs, 10_000
-                ).alias("__bounds")
-            )
-        )
-        if gcols:
-            # LEFT join, null-safe on the group key: a NULL group (its
-            # own group under groupBy) and a group whose every doc has
-            # NULL bits (no bounds row at all) must still reach the
-            # bucket projection — the NULL-bits WHEN branch pins those
-            # docs to the last bucket, same as the exact path
-            b = bounds.select(
-                F.col(gcols[0]).alias("__bg"), F.col("__bounds")
-            )
-            joined = base.join(
-                F.broadcast(b),
-                base[gcols[0]].eqNullSafe(b["__bg"]),
-                "left",
-            ).drop("__bg")
-        else:
-            joined = base.crossJoin(F.broadcast(bounds))
-        # bucket = 1 + #boundaries strictly below the score; NULL
-        # scores -> last bucket (same contract as the exact path)
-        bucket = F.when(
-            F.col("bits_per_token").isNull(), F.lit(n_buckets)
-        ).otherwise(
-            F.lit(1)
-            + F.aggregate(
-                F.col("__bounds"),
-                F.lit(0),
-                lambda acc, bnd: acc
-                + F.when(F.col("bits_per_token") > bnd, 1).otherwise(0),
-            )
-        )
-        out = joined.withColumn("bucket", bucket).drop("__bounds")
-    out = out.select(
+    w = Window.partitionBy(
+        *[F.col(c) for c in gcols]
+    ).orderBy(F.col("bits_per_token").asc(), F.col(id_col).asc())
+    # NULL bits are excluded from the ntile ranking entirely and
+    # pinned to the last bucket: engines disagree on NULL sort
+    # position (Spark NULLS FIRST vs DuckDB NULLS LAST on ASC),
+    # and a null doc inside the ntile would also shift every
+    # other bucket boundary by engine
+    ranked = base.where(F.col("bits_per_token").isNotNull()).withColumn(
+        "bucket", F.ntile(n_buckets).over(w)
+    )
+    nulls = base.where(F.col("bits_per_token").isNull()).withColumn(
+        "bucket", F.lit(n_buckets)
+    )
+    out = ranked.unionByName(nulls).select(
         F.col(id_col), *gcols, "n_tokens", "bits_per_token", "bucket"
     )
     return tag_persisted(out, base, *persisted_frames(scored))
@@ -1137,7 +1086,6 @@ def token_percentiles(
     text_col: str = "text",
     id_col: str = "doc_id",
     percentiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    approx: bool = False,
 ) -> DataFrame:
     """Per-group token-count percentile report — the corpus audit a
     curation pipeline runs before setting chunk/pack budgets: how long
@@ -1151,7 +1099,7 @@ def token_percentiles(
     (:func:`..textclean.trim_length_outliers` applies the same rank
     rule as a filter).
 
-    Exact semantics (the oracle-replayable default): the p-th
+    Exact semantics (oracle-replayable): the p-th
     percentile is the DISCRETE value at rank ``ceil(p * n)`` of the
     group's token counts sorted ``(n_tokens, id)`` — the nearest-rank
     definition, with the rank computed in EXACT RATIONAL arithmetic
@@ -1167,13 +1115,9 @@ def token_percentiles(
     — Spark's window orders NULLS FIRST where the DuckDB oracle
     orders NULLS LAST (r13 review).
 
-    100 TB shape: the exact path is one shuffle on ``group_col`` plus
-    a per-group sort (rank window) — correct but sort-bound when one
-    source holds billions of docs. ``approx=True`` is the production
-    path at that scale: a single partial-aggregable pass through
-    ``percentile_approx`` (t-digest sketch, no sort, map-side
-    combinable), same output columns, approximate values — NOT
-    oracle-replayable, so the registered row pins the exact lane."""
+    100 TB shape: one shuffle on ``group_col`` plus a per-group sort
+    (rank window) — correct but sort-bound when one source holds
+    billions of docs."""
     if not percentiles or any(not 0.0 < p <= 1.0 for p in percentiles):
         raise ValueError(
             f"percentiles must be in (0, 1], got {percentiles}"
@@ -1183,20 +1127,6 @@ def token_percentiles(
         s = f"{p * 100:g}".replace(".", "_")
         return f"p{s}_tokens"
 
-    if approx:
-        counts = df.select(
-            F.col(group_col),
-            F.size(tokens(F.col(text_col))).alias("n_tokens"),
-        ).where(F.col("n_tokens").isNotNull())
-        return counts.groupBy(group_col).agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.max("n_tokens").alias("max_tokens"),
-            *[
-                F.percentile_approx("n_tokens", p).alias(_pname(p))
-                for p in percentiles
-            ],
-        )
     ranked = ranked_token_counts(df, group_col, text_col, id_col)
     return (
         ranked.groupBy("__g")

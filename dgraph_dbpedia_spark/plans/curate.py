@@ -38,15 +38,13 @@ def curate_corpus(
     decontaminate_w: int = 13,
     alpha: float | None = None,
     seed: int = 2,
-    **cluster_kwargs,
 ) -> DataFrame:
     """Run the full curation chain over ``docs``; returns the surviving
     rows with all original columns. ``benchmark`` (optional) enables
     the decontamination stage; ``alpha`` (optional) enables the final
     per-``lang_col`` temperature resampling. ``gopher_kwargs`` override
     the quality-gate thresholds; ``w``/``k``/``bands``/
-    ``near_dup_threshold`` parameterize the MinHash stage and
-    ``cluster_kwargs`` pass through to its component clusterer.
+    ``near_dup_threshold`` parameterize the MinHash stage.
 
     Cache scope: the quality-gate id set AND the post-exact-dedup
     corpus are persisted — gk feeds both branches of s2's plan (the
@@ -55,8 +53,8 @@ def curate_corpus(
     completion join and the representative semi-join. The result
     carries both handles (release via
     :func:`dgraph_dbpedia_spark.operators.cachectl.release` after
-    materializing); on a clusterer failure they are released before
-    the re-raise. The MinHash pair frame's own handles are released
+    materializing); on a component-step failure they are released
+    before the re-raise. The MinHash pair frame's own handles are released
     internally once the (eager) component step has consumed them."""
     from dgraph_dbpedia_spark.operators.cachectl import release, tag_persisted
     from dgraph_dbpedia_spark.operators.dedup import (
@@ -99,14 +97,12 @@ def curate_corpus(
         threshold=near_dup_threshold,
     )
     try:
-        s3 = dedup_corpus(
-            s2, pairs.select("a", "b"), id_col=id_col, **cluster_kwargs
-        )
+        s3 = dedup_corpus(s2, pairs.select("a", "b"), id_col=id_col)
     except BaseException:
-        # the clusterer raised (e.g. the documented max_iter
-        # non-convergence): there is no result to carry the handles,
-        # and s2/gk were already materialized by the eager component
-        # step — they must not outlive the failure in a shared session
+        # the component step raised: there is no result to carry the
+        # handles, and s2/gk were already materialized by the eager
+        # component step — they must not outlive the failure in a
+        # shared session
         s2.unpersist()
         gk.unpersist()
         raise

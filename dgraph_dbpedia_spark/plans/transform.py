@@ -22,7 +22,6 @@ reference's ``when(flag).call(f)`` fluent steps are plain Python ``if``
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from functools import reduce
 
@@ -366,34 +365,18 @@ def type_triples(article_frames: list[DataFrame], category_objects: DataFrame,
 #: B/triple on the synthetic corpus is md5-blank-node entropy — so the
 #: only goals here are file size at scale and parallelism at small
 #: scale.)
-ROWS_PER_RDF_FILE = int(os.environ.get("SPARK_GRAFT_ROWS_PER_FILE", 2_000_000))
+ROWS_PER_RDF_FILE = 2_000_000
 
-#: sink-pool submission order for the seven dataset frames: LONGEST
-#: JOB FIRST — descending expected size (infobox/page_links dominate
-#: real DBpedia dumps and the bench corpus), so no large job lands
-#: behind a small one in the queue (profiled r14: cold 38.7 -> 32.0 s
-#: at 600k bench subjects; don't re-shuffle without re-profiling via
-#: tools/profile_transform.py)
-SINK_ORDER = (
-    "infobox_properties", "page_links", "interlanguage_links",
-    "labels", "article_categories", "geo_coordinates",
-    "skos_categories",
-)
-
-
-def _ordered_sink_names(by_name: dict[str, DataFrame]) -> tuple[str, ...]:
-    """Validate the hand-ordered :data:`SINK_ORDER` tuple against the
-    frames actually built by :func:`transform` (VERDICT r14 #5 /
-    ADVICE r14): a dataset added to ``frames`` but not to the tuple
-    would otherwise silently never get its ``.rdf`` sink written (the
-    futures dict would just omit it). Loud, not silent."""
-    if set(SINK_ORDER) != set(by_name):
-        raise AssertionError(
-            "SINK_ORDER out of sync with transform's frames list: "
-            f"unordered={sorted(set(by_name) - set(SINK_ORDER))} "
-            f"unknown={sorted(set(SINK_ORDER) - set(by_name))}"
-        )
-    return SINK_ORDER
+#: width of transform's sink pool — the concurrency dial for the sink
+#: phase: fewer workers = staggered waves (less cache/shuffle-memory
+#: contention, more idle executors between commits); more workers = no
+#: job ever waits for a slot. Measured at the 84M-triple scale
+#: (BENCH_SCALE.md r6 sweep): 5 workers beat 11 by ~35% (149s -> 110s
+#: transform) — with 11 concurrent sinks the retained frames' cache
+#: partitions thrash in and out of the unified-memory pool, and every
+#: sink pays re-computation; two staggered waves keep the working set
+#: resident. At 600k subjects the difference is within noise.
+SINK_WORKERS = 5
 
 
 def write_rdf(
@@ -620,17 +603,25 @@ def transform(
         # stages under the FAIR scheduler (the sampling/commit phases of one
         # write leave executors idle for the others); results are identical
         # to the reference's serial loop
-        from concurrent.futures import ThreadPoolExecutor
+        import threading
+        from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
+        # the dataset sinks in submission order: LONGEST JOB FIRST —
+        # descending expected size (infobox/page_links dominate real
+        # DBpedia dumps and the bench corpus), so no large job lands
+        # behind a small one in the queue (profiled r14: cold 38.7 ->
+        # 32.0 s at 600k bench subjects; don't re-shuffle without
+        # re-profiling via tools/profile_transform.py)
         frames = [
-            ("labels", labels),
             ("infobox_properties", infobox),
-            ("interlanguage_links", interlang),
             ("page_links", page_links),
+            ("interlanguage_links", interlang),
+            ("labels", labels),
             ("article_categories", categories),
-            ("skos_categories", skos),
             ("geo_coordinates", geo),
+            ("skos_categories", skos),
         ]
+        n_sinks = len(frames)
 
         # when types.rdf is requested, the cleaned frames are persisted UP
         # FRONT so the types derivation reads the same cache the sinks fill —
@@ -647,24 +638,13 @@ def transform(
         from pyspark import StorageLevel
 
         types_future = None
-
-        # Pool width is the concurrency dial for the sink phase: fewer
-        # workers = staggered waves (less cache/shuffle-memory contention,
-        # more idle executors between commits); more workers = no job ever
-        # waits for a slot. Measured at the 84M-triple scale
-        # (BENCH_SCALE.md r6 sweep): 5 workers beat 11 by ~35% (149s -> 110s
-        # transform) — with 11 concurrent sinks the retained frames' cache
-        # partitions thrash in and out of the unified-memory pool, and every
-        # sink pays re-computation; two staggered waves keep the working set
-        # resident. At 600k subjects the difference is within noise, so the
-        # scale-measured value is the default.
-        sink_workers = int(os.environ.get("SPARK_GRAFT_SINK_WORKERS", "5"))
-        import threading
-
         sink_counts_done = threading.Semaphore(0)
+        # set when any pool job fails: the parked types job then returns
+        # without writing (see the fail-fast block after the submissions)
+        abort = threading.Event()
         # +1 thread when types runs: the types job PARKS on the latch below
         # until every sink count has resolved, so it must not occupy one of
-        # the sink_workers slots while parked. A wider rework (every job
+        # the SINK_WORKERS slots while parked. A wider rework (every job
         # gets a thread immediately, heavy writes bounded by a semaphore)
         # was MEASURED WORSE same-session (best 50.6 s vs 30.8 s at 600k
         # subjects, r17): eight simultaneous count jobs slow each other
@@ -675,7 +655,7 @@ def transform(
         # +1 thread when the stats are printed, for the same reason: the
         # stats job starts at once instead of waiting for a sink slot.
         with ThreadPoolExecutor(
-            max_workers=sink_workers
+            max_workers=SINK_WORKERS
             + (1 if cfg.write_types else 0)
             + (1 if cfg.print_stats else 0)
         ) as pool:
@@ -718,12 +698,9 @@ def transform(
                 # evicting the sinks' shuffle/sort working memory. The 100 TB
                 # translation: cache cold, sink-phase intermediates on local
                 # disk; keep executor memory for execution.
-                _lvl = getattr(
-                    StorageLevel,
-                    os.environ.get("SPARK_GRAFT_RETAIN_LEVEL", "DISK_ONLY"),
-                )
                 retained = {
-                    name: frame.persist(_lvl) for name, frame in frames
+                    name: frame.persist(StorageLevel.DISK_ONLY)
+                    for name, frame in frames
                 }
                 # the written files' content = invalid_predicate_filter(pre-
                 # write frame), so filtering the retained frames is value-
@@ -743,16 +720,17 @@ def transform(
                     pre["article_categories"].select(F.col("o").alias("s"), "lang"),
                     pre["skos_categories"].select("s", "lang"),
                 )
-                n_sinks = len(frames)
 
-                def _types_after_counts() -> DataFrame:
+                def _types_after_counts() -> DataFrame | None:
                     # park until every sink's count job has materialized its
                     # retained cache (write_rdf releases the semaphore exactly
                     # once, on any failure too, so a failed sink still
-                    # unblocks this); then
-                    # the union-distinct runs over warm DISK_ONLY blocks
+                    # unblocks this); then the union-distinct runs over warm
+                    # DISK_ONLY blocks — unless a pool job failed meanwhile
                     for _ in range(n_sinks):
                         sink_counts_done.acquire()
+                    if abort.is_set():
+                        return None
                     return write_rdf(spark, types, f"{out}/types.rdf")
 
                 types_future = pool.submit(_types_after_counts)
@@ -790,26 +768,46 @@ def transform(
                     write_rdf, spark, external_id_triples(xid_inputs),
                     f"{out}/external_ids.rdf",
                 )
-            # plain sinks next, in descending expected size (infobox /
-            # page_links dominate real DBpedia dumps and the bench corpus)
-            # so no large job lands behind a small one in the queue
-            by_name = dict(frames)
-            sink_order = _ordered_sink_names(by_name)
+            # plain sinks next, longest job first (the order of frames)
             futures = {
                 name: pool.submit(
                     write_rdf,
                     spark,
-                    retained[name] if cfg.write_types else by_name[name],
+                    retained[name] if cfg.write_types else frame,
                     f"{out}/{name}.rdf",
                     not cfg.write_types,
                     sink_counts_done.release if cfg.write_types else None,
                 )
-                for name in sink_order
+                for name, frame in frames
             }
             schema_futures = [
                 pool.submit(write_schema, schema, f"{out}/schema.dgraph", False),
                 pool.submit(write_schema, schema, f"{out}/schema.indexed.dgraph", True),
             ]
+            # fail fast: on the first failed job, cancel every job that
+            # has not started, let the parked types job return without
+            # writing, and re-raise — left to the pool's exit, every
+            # queued sink, both schema writes and the types job would run
+            # before the error surfaced. Jobs already running finish (the
+            # pool's exit waits for them) before the caches are released
+            # below.
+            submitted = [
+                f
+                for f in (
+                    stats_future, types_future, xid_future,
+                    *futures.values(), *schema_futures,
+                )
+                if f is not None
+            ]
+            done, _ = wait(submitted, return_when=FIRST_EXCEPTION)
+            failed = [f for f in submitted if f in done and f.exception()]
+            if failed:
+                abort.set()
+                for f in submitted:
+                    f.cancel()
+                for _ in range(n_sinks):
+                    sink_counts_done.release()
+                failed[0].result()
             outputs: dict[str, DataFrame] = {n: f.result() for n, f in futures.items()}
             for f in schema_futures:
                 f.result()

@@ -437,7 +437,6 @@ def stream_near_dup_batch(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    fast: bool = False,
 ) -> DataFrame:
     """Micro-batch NEAR-duplicate filter for document streams — the
     ``foreachBatch`` body of a streaming near-dup pipeline.
@@ -489,7 +488,7 @@ def stream_near_dup_batch(
     # the batch fingerprints feed the state join, both within-batch
     # pair sides (via the anti-join view), and the state append — ONE
     # simhash fold per micro-batch, cached for all four consumers
-    sh = simhash(batch, text_col, id_col, fast).persist()
+    sh = simhash(batch, text_col, id_col).persist()
     dup_ids = None
     try:
         try:

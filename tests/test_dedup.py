@@ -75,7 +75,7 @@ def test_minhash_arrow_pinned_equal_to_native(spark):
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sh = _hashed_shingled(docs, "text", "doc_id", 3, False)
+    sh = _hashed_shingled(docs, "text", "doc_id", 3)
     nat = _signatures_from_hashed(sh, "doc_id", 16).withColumnRenamed("sig", "n")
     arr = sh.select("doc_id", _minhash_lanes_arrow(16)(F.col("sh")).alias("a"))
     diff = nat.join(arr, "doc_id").where(F.col("n") != F.col("a")).count()
@@ -92,7 +92,7 @@ def test_simhash_arrow_pinned_equal_to_native(spark):
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    hs = _token_hashes(docs, "text", "doc_id", False)
+    hs = _token_hashes(docs, "text", "doc_id")
     nat = _simhash_fold_native(hs, "doc_id").withColumnRenamed("simhash", "n")
     arr = hs.select("doc_id", _simhash_fold_arrow()(F.col("hs")).alias("a"))
     diff = nat.join(arr, "doc_id").where(F.col("n") != F.col("a")).count()
@@ -156,38 +156,6 @@ def test_no_python_udf_in_plans(spark, docs):
     for df in (simhash(docs), minhash_signatures(docs)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan  # Arrow-batched only
-
-
-def test_fast_hash_variants_same_shape_and_dups(spark):
-    """fast=True (xxhash64 production path) keeps plan shape and still
-    finds the obvious near-duplicate pair; values differ from the md5
-    oracle family by design."""
-    from dgraph_dbpedia_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        ngram_jaccard_pairs,
-        simhash,
-    )
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog today"),
-        (2, "the quick brown fox jumps over the lazy dog tonight"),
-        (3, "completely different text about spark query engines"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    mh = minhash_dedup_pairs(df, w=3, k=16, bands=8, threshold=0.3, fast=True)
-    assert [(r["a"], r["b"]) for r in mh.collect()] == [(1, 2)]
-    assert mh.schema.simpleString() == "struct<a:bigint,b:bigint,jaccard:double>"
-
-    nj = ngram_jaccard_pairs(df, w=3, threshold=0.3, fast=True)
-    assert [(r["a"], r["b"]) for r in nj.collect()] == [(1, 2)]
-
-    sh1 = {r["doc_id"]: r["simhash"] for r in simhash(df, fast=True).collect()}
-    sh2 = {r["doc_id"]: r["simhash"] for r in simhash(df, fast=True).collect()}
-    assert sh1 == sh2  # deterministic across runs
-    # near-dup docs agree on most bits, the unrelated doc doesn't
-    ham = lambda a, b: bin(a ^ b).count("1")
-    assert ham(sh1[1], sh1[2]) < ham(sh1[1], sh1[3])
 
 
 def test_decontaminate_removes_overlapping_docs(spark):
@@ -453,18 +421,10 @@ def test_dedup_corpus_transitive_chain(spark):
 
 
 def test_dedup_corpus_clusterer_passthrough(spark):
-    """The clusterer/kwargs passthrough reaches the component step: an
-    explicitly-passed star clusterer collapses a chain whose diameter
-    exceeds the propagation clusterer's default max_iter, and an
-    explicit tiny max_iter raises (the r17 star default also enforces
-    its round bound) — proving the kwargs are forwarded, not
-    dropped."""
-    import pytest
-
-    from dgraph_dbpedia_spark.operators.dedup import (
-        dedup_clusters_star,
-        dedup_corpus,
-    )
+    """dedup_corpus's component step is the star contraction: it
+    collapses a chain whose diameter exceeds label propagation's
+    default max_iter."""
+    from dgraph_dbpedia_spark.operators.dedup import dedup_corpus
 
     n = 30  # chain 0-1-...-29: diameter 29 > dedup_clusters default 25
     docs = spark.createDataFrame(
@@ -473,10 +433,8 @@ def test_dedup_corpus_clusterer_passthrough(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["a", "b"]
     )
-    out = dedup_corpus(docs, pairs, clusterer=dedup_clusters_star)
+    out = dedup_corpus(docs, pairs)
     assert sorted(r["doc_id"] for r in out.collect()) == [0]
-    with pytest.raises(RuntimeError):
-        dedup_corpus(docs, pairs, max_iter=2).collect()
 
 
 def test_dedup_report_histogram(spark):
@@ -542,6 +500,78 @@ def test_dedup_increment_killed_doc_does_not_bridge(spark):
     out = dedup_increment(existing, batch, w=3, k=16, bands=16, threshold=0.3)
     assert sorted(r["doc_id"] for r in out.collect()) == [101]
     release(out)
+
+
+@pytest.mark.parametrize(
+    "composite",
+    [
+        "curate_corpus",
+        "dedup_increment",
+        "semantic_dedup_min_id",
+        "semantic_dedup_low_centroid_sim",
+    ],
+)
+def test_dedup_composites_release_caches_on_component_failure(
+    spark, monkeypatch, composite
+):
+    """Fault injection into the component step of each composite that
+    calls the star contraction: the injected clusterer first
+    materializes its inputs (as the real, eager one does), then raises.
+    The error must propagate unchanged, and every cache the composite
+    persisted must be released — no persisted RDD outlives the call."""
+    from dgraph_dbpedia_spark.operators import dedup
+
+    message = f"injected component failure in {composite}"
+
+    def failing_star(docs, pairs, id_col="doc_id"):
+        docs.count()
+        pairs.count()
+        raise RuntimeError(message)
+
+    monkeypatch.setattr(dedup, "dedup_clusters_star", failing_star)
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(1, "en", text), (2, "en", text.replace("kappa", "lambda")),
+         (3, "en", "one two three four five six seven eight nine ten")],
+        ["doc_id", "lang", "text"],
+    )
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.01]), (2, [1.0, 0.02]), (3, [0.01, 1.0])],
+        ["vec_id", "embedding"],
+    )
+    cent = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (20, [0.0, 1.0])], ["cid", "c"]
+    )
+
+    def run():
+        if composite == "curate_corpus":
+            from dgraph_dbpedia_spark.plans.curate import curate_corpus
+
+            return curate_corpus(
+                docs,
+                gopher_kwargs=dict(
+                    min_words=5, max_words=1000, min_mean_word_len=1.0,
+                    max_mean_word_len=20.0, min_alpha_word_ratio=0.0,
+                    min_stopwords=0,
+                ),
+                near_dup_threshold=0.5,
+                w=3,
+            )
+        if composite == "dedup_increment":
+            return dedup.dedup_increment(
+                docs.where("doc_id = 3"), docs.where("doc_id < 3"),
+                w=3, k=16, bands=8, threshold=0.5,
+            )
+        from dgraph_dbpedia_spark.operators.similarity import semantic_dedup
+
+        keep = composite.removeprefix("semantic_dedup_")
+        return semantic_dedup(emb, threshold=0.999, centroids=cent, keep=keep)
+
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match=message):
+        run()
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert after <= before
 
 
 def test_minhash_join_cross_corpus(spark):

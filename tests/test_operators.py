@@ -148,10 +148,6 @@ def test_percentile_stats_exact_and_approx(spark):
     assert out["a"]["p50"] == 5.5
     assert out["a"]["p90"] == 9.1
     assert out["b"]["p50"] == 100.0
-    # approx path: same schema, values within sketch tolerance
-    ap = {r["g"]: r for r in percentile_stats(df, ["g"], "v", approx=True).collect()}
-    assert set(ap) == {"a", "b"}
-    assert abs(ap["a"]["p50"] - 5.5) <= 1.0
 
     import pytest as _pytest
 

@@ -261,8 +261,10 @@ def test_transform_schedule_independent(spark, pipeline_dirs, tmp_path, monkeypa
     (fully serial) run produces the same line sets as the module
     fixture's concurrent run — guards the r6 wave-scheduling work
     against any ordering-dependent nondeterminism."""
+    from dgraph_dbpedia_spark.plans import transform as transform_mod
+
     _, parquet, out, _, _ = pipeline_dirs
-    monkeypatch.setenv("SPARK_GRAFT_SINK_WORKERS", "1")
+    monkeypatch.setattr(transform_mod, "SINK_WORKERS", 1)
     out2 = tmp_path / "rdf_serial"
     transform(
         spark,
@@ -435,6 +437,70 @@ def test_transform_sink_failure_raises_promptly(
     runner.join(120)
     assert not runner.is_alive(), f"transform hung after an {message}"
     assert raised and message in str(raised[0]), raised
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert after <= before
+
+
+def test_transform_sink_failure_aborts_queued_work(
+    spark, pipeline_dirs, tmp_path, monkeypatch
+):
+    """Fault injection on a one-worker sink pool: the first sink
+    (infobox_properties) raises in its count job. transform must
+    re-raise at once — the sinks still queued behind it never run
+    (skos_categories, submitted last, writes nothing), the parked types
+    job returns without writing — and leave no persisted cache."""
+    import threading
+
+    from dgraph_dbpedia_spark.plans import transform as transform_mod
+
+    message = "injected infobox_properties count failure"
+    sink = threading.local()  # each sink runs write_rdf on its own thread
+    real_write_rdf = transform_mod.write_rdf
+    real_filter = transform_mod.invalid_predicate_filter
+
+    class FailingCount:
+        def __init__(self, df):
+            self._df = df
+
+        def count(self):
+            raise RuntimeError(message)
+
+        def __getattr__(self, name):
+            return getattr(self._df, name)
+
+    def write_rdf(spark_, df, path, *args, **kwargs):
+        sink.path = path
+        return real_write_rdf(spark_, df, path, *args, **kwargs)
+
+    def invalid_predicate_filter(df):
+        out = real_filter(df)
+        if getattr(sink, "path", "").endswith("infobox_properties.rdf"):
+            return FailingCount(out)
+        return out
+
+    monkeypatch.setattr(transform_mod, "SINK_WORKERS", 1)
+    monkeypatch.setattr(transform_mod, "write_rdf", write_rdf)
+    monkeypatch.setattr(
+        transform_mod, "invalid_predicate_filter", invalid_predicate_filter
+    )
+    _, parquet, _, _, _ = pipeline_dirs
+    out = tmp_path / "rdf_abort"
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    raised = []
+
+    def run():
+        try:
+            transform(spark, str(parquet), str(out), cfg=_cli_reference_cfg())
+        except BaseException as e:  # noqa: BLE001 — handed to the test
+            raised.append(e)
+
+    runner = threading.Thread(target=run, daemon=True)
+    runner.start()
+    runner.join(120)
+    assert not runner.is_alive(), f"transform hung after an {message}"
+    assert raised and message in str(raised[0]), raised
+    assert not (out / "skos_categories.rdf").exists()
+    assert not (out / "types.rdf").exists()
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     assert after <= before
 

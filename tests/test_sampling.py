@@ -30,13 +30,6 @@ def test_deterministic_under_repartition(spark):
     assert a == b and len(a) == 21
 
 
-def test_fast_path_same_quota(spark):
-    rows = [(i, "g%d" % (i % 2)) for i in range(100)]
-    df = spark.createDataFrame(rows, ["id", "g"])
-    out = stratified_sample(df, ["g"], 5, "id", fast=True)
-    assert out.count() == 10
-
-
 def test_temp_column_collision_survives(spark):
     """An input column literally named __rn must pass through unchanged
     (ADVICE r5: the fixed temp name used to clobber and drop it)."""

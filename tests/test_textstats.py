@@ -334,40 +334,10 @@ def test_perplexity_buckets_exact(spark):
     assert sizes == {1: 2, 2: 2, 3: 1}
 
 
-def test_perplexity_buckets_approx_monotone(spark):
-    """The percentile_approx scale path: buckets are monotone in
-    bits_per_token within each group (no global sort in the plan), and
-    NULL-bits docs still pin to the last bucket."""
-    from dgraph_dbpedia_spark.operators.cachectl import release
-    from dgraph_dbpedia_spark.operators.textstats import perplexity_buckets
-
-    words = ["alpha", "beta", "gamma", "delta", "echo"]
-    rows = []
-    for i in range(40):
-        # doc i repeats a common word i%5 and adds i rare tokens
-        toks = [words[i % 5]] * 5 + [f"rare{i}_{j}" for j in range(i % 7)]
-        rows.append((i, "en", " ".join(toks)))
-    rows.append((99, "en", ""))
-    df = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
-    out = perplexity_buckets(df, n_buckets=4, group_col="lang", exact=False)
-    rowsc = out.collect()
-    release(out)
-    got = sorted(
-        (r["bits_per_token"], r["bucket"])
-        for r in rowsc
-        if r["bits_per_token"] is not None
-    )
-    buckets = [b for _, b in got]
-    assert buckets == sorted(buckets)  # monotone in surprisal
-    assert 1 <= min(buckets) and max(buckets) <= 4
-    null_rows = [r for r in rowsc if r["bits_per_token"] is None]
-    assert len(null_rows) == 1 and null_rows[0]["bucket"] == 4
-
-
 def test_perplexity_buckets_approx_keeps_null_groups(spark):
-    """The approx path must not silently drop NULL-group rows or groups
-    whose every doc has NULL bits (no bounds row): null-safe LEFT join,
-    NULL-bits docs pinned to the last bucket like the exact path."""
+    """perplexity_buckets must not silently drop NULL-group rows or
+    groups whose every doc has NULL bits: NULL-bits docs pin to the
+    last bucket."""
     from dgraph_dbpedia_spark.operators.cachectl import release
     from dgraph_dbpedia_spark.operators.textstats import perplexity_buckets
 
@@ -378,15 +348,12 @@ def test_perplexity_buckets_approx_keeps_null_groups(spark):
         (4, "xx", ""),  # group whose only doc has NULL bits
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    for exact in (True, False):
-        out = perplexity_buckets(
-            df, n_buckets=2, group_col="lang", exact=exact
-        )
-        got = {r["doc_id"]: r for r in out.collect()}
-        release(out)
-        assert set(got) == {1, 2, 3, 4}, f"exact={exact} dropped rows"
-        assert got[4]["bucket"] == 2 and got[4]["bits_per_token"] is None
-        assert got[3]["bucket"] is not None
+    out = perplexity_buckets(df, n_buckets=2, group_col="lang")
+    got = {r["doc_id"]: r for r in out.collect()}
+    release(out)
+    assert set(got) == {1, 2, 3, 4}
+    assert got[4]["bucket"] == 2 and got[4]["bits_per_token"] is None
+    assert got[3]["bucket"] is not None
 
 
 def test_corpus_divergence_jsd(spark):
@@ -633,17 +600,11 @@ def test_token_percentiles_rational_rank_not_double_ceil(spark):
 
 
 def test_token_percentiles_approx_lane_and_validation(spark):
-    """approx=True keeps the schema and lands within the sketch's
-    tolerance on a smooth distribution; bad percentiles raise."""
+    """Percentiles outside (0, 1] raise."""
     from dgraph_dbpedia_spark.operators.textstats import token_percentiles
 
     rows = [(i, "s", " ".join(["w"] * (i % 50 + 1))) for i in range(500)]
     df = spark.createDataFrame(rows, ["doc_id", "source", "text"])
-    exact = token_percentiles(df).collect()[0]
-    approx = token_percentiles(df, approx=True).collect()[0]
-    assert approx.asDict().keys() == exact.asDict().keys()
-    for c in ("p50_tokens", "p90_tokens", "p99_tokens"):
-        assert abs(approx[c] - exact[c]) <= 2
     with pytest.raises(ValueError, match="percentiles"):
         token_percentiles(df, percentiles=(0.0,))
     with pytest.raises(ValueError, match="percentiles"):
