@@ -1,4 +1,5 @@
-"""Execution metrics reporting — spill and memory observability.
+"""Execution metrics: named pipeline phases, per-phase counters, and
+spill/memory totals.
 
 Parity with the reference's SparkListener metrics (X5,
 DbpediaDgraphSparkApp.scala:79-90,450): it accumulates
@@ -6,21 +7,150 @@ DbpediaDgraphSparkApp.scala:79-90,450): it accumulates
 execution memory, then prints them at the end of the run.
 
 PySpark cannot subclass a JVM SparkListener without a py4j callback
-server, so the primary path reads the driver's ``AppStatusStore``
-directly over py4j (``sc.statusStore.stageList``) — the same store the
-UI and REST API serve from, populated by the always-on
-AppStatusListener, so it works with ``spark.ui.enabled=false`` (the
-default session). The REST API (/api/v1/applications/{id}/stages)
-remains as a fallback when the UI happens to be enabled.
+server, so the readers here query the driver's ``AppStatusStore`` over
+py4j — the store the UI and REST API serve from, populated by the
+always-on AppStatusListener, so it works with ``spark.ui.enabled=false``
+(the default session). The store is read only when a reader is called;
+a pipeline run pays just :func:`phase`'s local-property calls.
+
+Phases. The pipelines name every job they submit with :func:`phase`
+(the Spark job group): ``ingest.<dataset>``; ``transform.head``,
+``transform.<sink>.count`` / ``transform.<sink>.write`` for each of the
+seven dataset sinks plus ``types`` and ``external_ids``,
+``transform.schema``, ``transform.schema_indexed``, ``transform.stats``
+and ``transform.tail``. Operators stay unlabelled, so a caller's own
+job group holds for them. :func:`mark` and :func:`phase_counters`
+attribute the work between two points to those names.
 """
 
 from __future__ import annotations
 
 import json
-import urllib.request
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
+
+_JOB_PROPERTIES = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+_BATCH = 256  # status-store entries fetched per py4j round trip
+
+
+@contextmanager
+def phase(spark: SparkSession, name: str):
+    """Run the block's Spark jobs under job group and description
+    ``name``. Job groups are thread-local: every thread that submits
+    jobs enters its own phase. The previous values are restored on exit,
+    also when the block raises."""
+    sc = spark.sparkContext
+    saved = [(key, sc.getLocalProperty(key)) for key in _JOB_PROPERTIES]
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        for key, value in saved:
+            sc.setLocalProperty(key, value)  # None removes the property
+
+
+@dataclass(frozen=True)
+class Mark:
+    """The newest stage and job ids in the status store at one point."""
+
+    stage: int
+    job: int
+
+
+@dataclass
+class PhaseCounters:
+    """Work of one job group in a window. ``wall_s`` runs from its first
+    job's submission to its last job's completion."""
+
+    jobs: int = 0
+    tasks: int = 0
+    cpu_s: float = 0.0  # executor CPU
+    shuffle_write_bytes: int = 0
+    spill_bytes: int = 0  # disk bytes spilled
+    wall_s: float = 0.0
+
+
+class _StatusStore:
+    """Reads of the session's status store as JSON (Spark's own Jackson
+    mapper, as its REST API uses), a batch of entries per py4j round
+    trip. The listener bus is drained first, so every job and stage that
+    has ended is in the store."""
+
+    KINDS = {"stage": ("StageDataWrapper", "stageId"), "job": ("JobDataWrapper", "jobId")}
+
+    def __init__(self, spark: SparkSession) -> None:
+        from py4j.java_gateway import get_java_class
+
+        jvm = spark.sparkContext._jvm
+        jsc = spark.sparkContext._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        self._kv = jsc.statusStore().store()
+        self._cls = {k: get_java_class(getattr(jvm.org.apache.spark.status, w))
+                     for k, (w, _) in self.KINDS.items()}
+        self._mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+        self._mapper.registerModule(jvm.com.fasterxml.jackson.module.scala.DefaultScalaModule())
+        self._to_seq = jvm.org.apache.spark.status.KVUtils.viewToSeq
+
+    def _read(self, kind: str, skip: int, n: int) -> list[dict]:
+        view = self._kv.view(self._cls[kind]).reverse().skip(skip).max(n)
+        return json.loads(self._mapper.writeValueAsString(self._to_seq(view)))
+
+    def top(self, kind: str) -> int:
+        """The newest id of ``kind``, -1 when there is none."""
+        rows = self._read(kind, 0, 1)
+        return rows[0]["info"][self.KINDS[kind][1]] if rows else -1
+
+    def newest(self, kind: str, after: int = -1) -> list[dict]:
+        """Entries of ``kind`` whose id is above ``after``, newest first
+        (retried stage attempts share their stage's id)."""
+        key = self.KINDS[kind][1]
+        out: list[dict] = []
+        while True:
+            batch = self._read(kind, len(out), _BATCH)
+            for entry in batch:
+                if entry["info"][key] <= after:
+                    return out
+                out.append(entry)
+            if len(batch) < _BATCH:
+                return out
+
+
+def mark(spark: SparkSession) -> Mark:
+    """The point :func:`phase_counters` counts from."""
+    store = _StatusStore(spark)
+    return Mark(store.top("stage"), store.top("job"))
+
+
+def phase_counters(spark: SparkSession, since: Mark) -> dict[str | None, PhaseCounters]:
+    """Per job group, the jobs submitted after ``since`` and the work of
+    their stages; jobs outside any group count under ``None``. A stage
+    belongs to the first job that lists it, the one that ran it."""
+    store = _StatusStore(spark)
+    jobs = store.newest("job", since.job)
+    group = {j["info"]["jobId"]: j["info"]["jobGroup"] for j in jobs}
+    out: dict[str | None, PhaseCounters] = {}
+    spans: dict[str | None, tuple[int, int]] = {}
+    for j in jobs:
+        info = j["info"]
+        c = out.setdefault(info["jobGroup"], PhaseCounters())
+        c.jobs += 1
+        start, end = spans.get(info["jobGroup"], (info["submissionTime"], 0))
+        spans[info["jobGroup"]] = (
+            min(start, info["submissionTime"]),
+            max(end, info["completionTime"] or 0),
+        )
+    for w in store.newest("stage", since.stage):
+        s = w["info"]
+        c = out.setdefault(group.get(min(w["jobIds"], default=-1)), PhaseCounters())
+        c.tasks += s["numCompleteTasks"] + s["numFailedTasks"] + s["numKilledTasks"]
+        c.cpu_s += s["executorCpuTime"] / 1e9
+        c.shuffle_write_bytes += s["shuffleWriteBytes"]
+        c.spill_bytes += s["diskBytesSpilled"]
+    for name, (start, end) in spans.items():
+        out[name].wall_s = max(end - start, 0) / 1e3
+    return out
 
 
 @dataclass
@@ -42,54 +172,13 @@ class SpillMetrics:
 
 
 def collect_spill_metrics(spark: SparkSession) -> SpillMetrics:
-    """Aggregate spill/peak-memory across all stages of the current
-    application. Reads the JVM AppStatusStore via py4j (works with the
-    UI disabled); falls back to the monitoring REST API if the store
-    isn't reachable but a UI is."""
-    try:
-        return _from_status_store(spark)
-    except Exception:  # noqa: BLE001 — py4j surface varies across versions
-        return _from_rest(spark)
-
-
-def _from_status_store(spark: SparkSession) -> SpillMetrics:
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    # stageList(statuses, details, withSummaries, quantiles, taskStatus):
-    # empty statuses list = all stages, no task details/summaries
-    stages = store.stageList(
-        sc._jvm.java.util.ArrayList(),
-        False,
-        False,
-        sc._gateway.new_array(sc._jvm.double, 0),
-        sc._jvm.java.util.ArrayList(),
-    )
+    """Spill and peak execution memory summed over every stage of the
+    application the status store retains."""
     m = SpillMetrics()
-    it = stages.iterator()
-    while it.hasNext():
-        s = it.next()
-        m.memory_bytes_spilled += s.memoryBytesSpilled()
-        m.disk_bytes_spilled += s.diskBytesSpilled()
-        m.peak_execution_memory = max(
-            m.peak_execution_memory, s.peakExecutionMemory()
-        )
-        m.stages += 1
-    return m
-
-
-def _from_rest(spark: SparkSession) -> SpillMetrics:
-    ui_url = spark.sparkContext.uiWebUrl
-    if not ui_url:
-        return SpillMetrics()
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui_url}/api/v1/applications/{app_id}/stages") as r:
-        stages = json.load(r)
-    m = SpillMetrics()
-    for s in stages:
-        m.memory_bytes_spilled += s.get("memoryBytesSpilled", 0)
-        m.disk_bytes_spilled += s.get("diskBytesSpilled", 0)
-        m.peak_execution_memory = max(
-            m.peak_execution_memory, s.get("peakExecutionMemory", 0)
-        )
+    for w in _StatusStore(spark).newest("stage"):
+        s = w["info"]
+        m.memory_bytes_spilled += s["memoryBytesSpilled"]
+        m.disk_bytes_spilled += s["diskBytesSpilled"]
+        m.peak_execution_memory = max(m.peak_execution_memory, s["peakExecutionMemory"])
         m.stages += 1
     return m

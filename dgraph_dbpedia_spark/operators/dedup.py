@@ -641,7 +641,6 @@ def dedup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 25,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph: assign every
     document the MINIMUM doc id reachable through pairs — the cluster
@@ -686,23 +685,13 @@ def dedup_clusters(
     Beyond", SoCC'14), which contracts chains in O(log^2 n) rounds —
     the documented upgrade path if a corpus ever trips the cap.
 
-    Per-round lineage control (``checkpoint_every``): the default of 1
-    eagerly ``localCheckpoint``-s every round — ONE job per round (the
-    convergence count rides the checkpoint materialization as an
+    Every round is eagerly ``localCheckpoint``-ed — ONE job per round
+    (the convergence count rides the checkpoint materialization as an
     ``observe()`` metric) and each round plans against a depth-1
-    lineage. Measured same-session at sf0.1 (BENCH_SCALE.md r8):
-    2.7 s vs 3.6-4.1 s for the r7 persist-per-round +
-    checkpoint-every-8 scheme — the materialization job it saved was
-    cheaper than the growing join-tree re-planning it paid.
-    ``checkpoint_every > 1`` restores the persist scheme (checkpoint
-    every N rounds; 0 = only at exit) — kept only as an escape hatch.
-    The r8 hypothesis that it wins for labels too large to
-    double-materialize was REFUTED by the r9 scale A/B
-    (BENCH_SCALE.md): on a diameter-9 chain graph the persist scheme
-    re-plans a join tree that grows with every un-truncated round
-    (~20x slower at 100k nodes: 99-110 s vs 5-13 s eager), while the
-    eager scheme handled 2M nodes in ~11 s. Lineage growth — not frame
-    size — is the dominant cost at every measured scale.
+    lineage. Measured same-session at sf0.1 (BENCH_SCALE.md r8): 2.7 s
+    vs 3.6-4.1 s for the r7 persist-per-round + checkpoint-every-8
+    scheme, and at scale (r9, diameter-9 chain graph) ~20x faster at
+    100k nodes — lineage growth, not frame size, is the dominant cost.
     """
     # undirected: propagate labels both ways along every pair
     edges = (
@@ -735,7 +724,6 @@ def dedup_clusters(
     from dgraph_dbpedia_spark.operators.cachectl import release_local_checkpoint
 
     changed = -1
-    live = None  # the current round's persisted frame
     # the newest checkpointed frame; once a NEWER checkpoint has
     # materialized nothing can read it again, so its blocks are freed
     # deterministically (DataFrame.unpersist does not reach them, and
@@ -746,7 +734,7 @@ def dedup_clusters(
     # that converges in exactly max_iter rounds is accepted, not raised
     # on (a round-6 review catch: the confirmation round used to eat one
     # slot of the budget)
-    for i in range(max_iter + 1):
+    for _ in range(max_iter + 1):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src")
@@ -767,67 +755,38 @@ def dedup_clusters(
             new_min.alias("new_label"),
             (new_min < F.col("label")).alias("chg"),
         )
-        if checkpoint_every == 1:
-            # eager checkpoint per round, ONE job per round: the
-            # convergence count rides the checkpoint materialization as
-            # an observe() metric (a CollectMetrics node costs nothing
-            # extra), and every round plans against a depth-1 lineage —
-            # this beat both persist+count (growing plans) and
-            # checkpoint+separate-count (two jobs) in the r8 A/Bs
-            obs = Observation()
-            with_flag = with_flag.observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.col("chg").cast("long")), F.lit(0)
-                ).alias("changed"),
-            ).localCheckpoint()
-            changed = int(obs.get["changed"])
-            if last_cp is not None:
-                release_local_checkpoint(last_cp)
-            last_cp = with_flag
-        else:
-            with_flag = with_flag.persist()
-            # count() materializes the persist AND answers convergence
-            # in the same job; only then is the previous round's cache
-            # safe to drop (the join above read from it)
-            changed = with_flag.where(F.col("chg")).count()
-            if live is not None:
-                live.unpersist()
-            live = with_flag
+        # eager checkpoint per round, ONE job per round: the convergence
+        # count rides the checkpoint materialization as an observe()
+        # metric (a CollectMetrics node costs nothing extra), and every
+        # round plans against a depth-1 lineage — this beat both
+        # persist+count (growing plans) and checkpoint+separate-count
+        # (two jobs) in the r8 A/Bs
+        obs = Observation()
+        with_flag = with_flag.observe(
+            obs,
+            F.coalesce(
+                F.sum(F.col("chg").cast("long")), F.lit(0)
+            ).alias("changed"),
+        ).localCheckpoint()
+        changed = int(obs.get["changed"])
+        release_local_checkpoint(last_cp)
+        last_cp = with_flag
         labels = with_flag.select("id", F.col("new_label").alias("label"))
-        if checkpoint_every > 1 and (i + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint()
-            live.unpersist()
-            live = None
-            if last_cp is not None:
-                release_local_checkpoint(last_cp)
-            last_cp = labels
         if changed == 0:
             break
     edges.unpersist()
     if changed != 0:
-        if live is not None:
-            live.unpersist()
-        if last_cp is not None:
-            release_local_checkpoint(last_cp)
+        release_local_checkpoint(last_cp)
         raise RuntimeError(
             f"dedup_clusters did not converge in {max_iter} rounds "
             f"({changed} labels still changing): component diameter "
             "exceeds max_iter — raise it, or switch to a "
             "large-star/small-star contraction for chain-shaped graphs"
         )
-    if live is not None:
-        # decouple the touched labels from the per-round cache before
-        # releasing it; when labels is already checkpoint-rooted (live
-        # is None) they are backed by last_cp itself — no extra
-        # materialization, and last_cp must stay alive for the caller
-        labels = labels.localCheckpoint()
-        live.unpersist()
-        if last_cp is not None:
-            release_local_checkpoint(last_cp)
     # singleton completion: docs that never appeared in a pair label
-    # themselves. labels is checkpoint-rooted on every path, so the
-    # name-based join cannot hit self-join ambiguity with doc_ids.
+    # themselves. labels is backed by last_cp, which stays alive for the
+    # caller; being checkpoint-rooted, the name-based join cannot hit
+    # self-join ambiguity with doc_ids.
     return doc_ids.join(
         labels.withColumnRenamed("label", "__label"), ["id"], "left"
     ).select(
@@ -841,7 +800,6 @@ def dedup_clusters_star(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 50,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -905,17 +863,12 @@ def dedup_clusters_star(
     def checksum_metrics() -> tuple[Column, Column]:
         # ONE definition of the order-insensitive edge-set checksum
         # (count + coalesced bit_xor of xxhash64(u, v)), consumed by
-        # the persist-path aggregate AND both observe() sites — the
-        # eager/persist convergence comparison stays bit-identical by
-        # construction
+        # both observe() sites — the round-0 and per-round values stay
+        # comparable by construction
         return (
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
         )
-
-    def checksum(e: DataFrame) -> tuple:
-        row = e.agg(*checksum_metrics()).collect()[0]
-        return (row["n"], row["h"])
 
     # restrict edges to ids actually present in docs: label propagation
     # inherently ignores out-of-docs pair ids (labels exist only for doc
@@ -940,12 +893,11 @@ def dedup_clusters_star(
     converged = False
     from dgraph_dbpedia_spark.operators.cachectl import release_local_checkpoint
 
-    live = None  # the current round's persisted edge set
     last_cp = edges  # newest checkpointed frame; freed once superseded
-    # checkpoint_every=1 (default): eager localCheckpoint per round,
-    # ONE job per round (the convergence checksum rides the checkpoint
-    # job as observe() metrics), and every round plans against a
-    # depth-1 lineage. Measured (same-session A/Bs, sf0.1,
+    # eager localCheckpoint per round, ONE job per round (the
+    # convergence checksum rides the checkpoint job as observe()
+    # metrics), and every round plans against a depth-1 lineage.
+    # Measured (same-session A/Bs, sf0.1,
     # BENCH_SCALE.md r8): 2.86s fused vs 3.07s checkpoint+separate-scan
     # vs 3.92-3.96s for the r7 persist+sparse-checkpoint scheme at any
     # cadence (4/8/never) — the persist scheme LOST because each
@@ -957,66 +909,28 @@ def dedup_clusters_star(
     # several times, so the un-truncated logical tree grows
     # EXPONENTIALLY in rounds-since-checkpoint — on a diameter-9 chain
     # graph the persist scheme failed to finish 10k nodes in 9 min
-    # while eager did 2M nodes in ~11 s. checkpoint_every>1 (persist
-    # every N rounds; 0 = only at exit) remains only as an
-    # escape hatch for few-round regimes; never use it on graphs that
-    # need more than ~4 rounds.
-    for i in range(max_iter):
+    # while eager did 2M nodes in ~11 s.
+    for _ in range(max_iter):
         contracted = canon(small_star(large_star(edges)))
-        if checkpoint_every == 1:
-            # per-round eager checkpoint, ONE job per round: the
-            # convergence checksum rides the checkpoint materialization
-            # as observe() metrics, and every round plans against a
-            # lineage of depth one
-            obs = Observation()
-            new_edges = contracted.observe(
-                obs, *checksum_metrics()
-            ).localCheckpoint()
-            got = obs.get
-            cur = (got["n"], got["h"])
-            if last_cp is not None:
-                release_local_checkpoint(last_cp)
-            last_cp = new_edges
-            edges = new_edges
-        else:
-            new_edges = contracted.persist()
-            cur = checksum(new_edges)
-            if live is not None:
-                live.unpersist()
-            live = new_edges
-            edges = new_edges
+        obs = Observation()
+        edges = contracted.observe(obs, *checksum_metrics()).localCheckpoint()
+        got = obs.get
+        cur = (got["n"], got["h"])
+        release_local_checkpoint(last_cp)
+        last_cp = edges
         if cur == prev:
             converged = True
             break
         prev = cur
-        if checkpoint_every > 1 and (i + 1) % checkpoint_every == 0:
-            edges = edges.localCheckpoint()
-            live.unpersist()
-            live = None
-            if last_cp is not None:
-                release_local_checkpoint(last_cp)
-            last_cp = edges
     if not converged and max_iter > 0:
-        # raise BEFORE the exit compaction: the failure path must not
-        # pay a full localCheckpoint materialization job first
-        if live is not None:
-            live.unpersist()
-        if last_cp is not None:
-            release_local_checkpoint(last_cp)
+        release_local_checkpoint(last_cp)
         raise RuntimeError(
             f"dedup_clusters_star did not converge in {max_iter} rounds — "
             "this exceeds the O(log^2 n) bound for any realistic graph; "
             "the input pair set is likely unbounded or adversarial"
         )
-    if live is not None:
-        # persist mode: decouple the result from the round cache, then
-        # free both the cache and the superseded checkpoint. In eager
-        # mode edges IS last_cp and stays alive backing the result.
-        edges = edges.localCheckpoint()
-        live.unpersist()
-        if last_cp is not None:
-            release_local_checkpoint(last_cp)
-    # converged edge set = star forest: u (child, u>v) -> v (root).
+    # converged edge set = star forest: u (child, u>v) -> v (root);
+    # edges IS last_cp and stays alive backing the result.
     # Roots and singletons label themselves. Name-based equi-join: the
     # edges now share lineage with docs (via the id restriction), so a
     # frame-qualified condition like docs[id] == roots["u"] can

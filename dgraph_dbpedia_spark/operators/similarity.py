@@ -270,7 +270,6 @@ def lsh_bucketed_topk_many(
     query_col: str = "q",
     n_planes: int = 8,
     dims: int = 64,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch-query ANN: N query vectors against the corpus in ONE plan —
     an adapter over :func:`ann_join`'s core (ONE definition of the
@@ -282,11 +281,9 @@ def lsh_bucketed_topk_many(
     The common training-pipeline shape (N queries x corpus) that the
     single-query :func:`lsh_bucketed_topk` can't express. Scale shape:
     shuffle is bounded by bucket-collision pairs, never |q| x |corpus|;
-    with ``broadcast_queries=True`` (queries fit on one executor) the
-    query sketch is broadcast and the only shuffle is the final
-    window's partition-by-qid, sized |candidates|. For a huge query
-    side set it ``False`` to get a plain hash equi-join on
-    ``bucket``."""
+    the query sketch is broadcast (queries fit on one executor), so the
+    only shuffle is the final window's partition-by-qid, sized
+    |candidates|."""
     a = queries.select(
         F.col(qid_col).alias("__vid"), F.col(query_col).alias("__v")
     )
@@ -299,7 +296,7 @@ def lsh_bucketed_topk_many(
         vec_col="__v",
         n_planes=n_planes,
         dims=dims,
-        broadcast_a=broadcast_queries,
+        broadcast_a=True,
     )
     return out.select(
         F.col("a").alias(qid_col), F.col("b").alias(id_col), "sim"
@@ -2137,7 +2134,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     n_planes: int = 8,
     dims: int = 64,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for embedding-model training (the
     DPR/Contriever data-prep step): for every query vector, the
@@ -2157,10 +2153,10 @@ def hard_negatives(
 
     100 TB shape: inherits ann_join's (one narrow sketch projection
     per side, ONE bucket equi-join — never |Q| x |C| — and a per-query
-    window over candidates only); ``broadcast_queries`` (default, the
+    window over candidates only); the query side is broadcast (the
     usual regime: queries are a training batch, the corpus is the
-    lake) makes the bucket join itself broadcast so the only shuffle
-    is the final window."""
+    lake), so the bucket join itself is a broadcast and the only
+    shuffle is the final window."""
     if not lo < hi:
         raise ValueError(f"need lo < hi, got lo={lo} hi={hi}")
     out = ann_join(
@@ -2174,7 +2170,7 @@ def hard_negatives(
         min_sim=lo,
         max_sim=hi,
         exclude_same=exclude_same,
-        broadcast_a=broadcast_queries,
+        broadcast_a=True,
     )
     return out.select(
         F.col("a").alias("query_id"),

@@ -307,7 +307,6 @@ def frequent_ngrams(
     k: int = 20,
     text_col: str = "text",
     id_col: str = "doc_id",
-    distinct_per_doc: bool = True,
     min_count: int = 2,
 ) -> DataFrame:
     """Top-k most frequent token n-grams across the corpus — the
@@ -315,9 +314,8 @@ def frequent_ngrams(
     / ``max_shingle_freq`` tuning. Returns ``(ngram, n_docs)`` ordered by
     count desc (ties broken by ngram asc, so top-k is deterministic).
 
-    ``distinct_per_doc=True`` (default) counts DOCUMENT frequency (an
-    n-gram repeated inside one doc counts once — the boilerplate
-    signal); ``False`` counts raw occurrences. Documents shorter than
+    Counts DOCUMENT frequency (an n-gram repeated inside one doc counts
+    once — the boilerplate signal). Documents shorter than
     ``n`` tokens contribute ONE whole-text pseudo-n-gram (the package's
     shingle convention — short boilerplate like a bare "Login" doc
     still surfaces, but note it ranks among the true n-grams).
@@ -331,12 +329,12 @@ def frequent_ngrams(
     (TakeOrdered keeps k per partition)."""
     toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
     n_sh = F.greatest(F.size("toks") - (n - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.concat_ws(" ", F.slice("toks", i, n)),
+    grams = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), n_sh),
+            lambda i: F.concat_ws(" ", F.slice("toks", i, n)),
+        )
     )
-    if distinct_per_doc:
-        grams = F.array_distinct(grams)
     # inline(array(struct)) barrier: exploding a non-foldable computed
     # array trips InferFiltersFromGenerate into re-deriving the whole
     # gram expression inside a pushed filter (the 15x trap measured on

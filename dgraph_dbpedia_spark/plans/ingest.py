@@ -20,6 +20,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dgraph_dbpedia_spark.observability import phase
 from dgraph_dbpedia_spark.sources.ttl import read_ttl
 from dgraph_dbpedia_spark.sources.writers import write_partitioned_by
 from dgraph_dbpedia_spark.sources import catalog
@@ -83,30 +84,32 @@ def ingest(
     Spark's scheduler interleaves their stages and keeps executors busy
     while any one job is in its sampling/commit phases. The reference
     runs datasets serially (DbpediaToParquetSparkApp.scala:71-95); the
-    result is identical, only the job submission overlaps."""
+    result is identical, only the job submission overlaps. Each
+    dataset's jobs run as phase ``ingest.<dataset>``."""
     languages = languages or catalog.list_languages(root)
     datasets = datasets or catalog.list_datasets(root)
     datasets = [d for d in datasets if not d.endswith("_en_uris")]
 
     def run(dataset: str) -> IngestResult:
-        df = load_dataset(spark, root, dataset, languages)
-        parquet_path = os.path.join(out, f"{dataset}.parquet")
-        write_partitioned_by(
-            df,
-            partition_cols=["lang"],
-            more_file_cols=["s"],
-            sort_cols=["p", "o"],
-            path=parquet_path,
-        )
-        result = IngestResult(dataset, parquet_path)
-        if print_stats:
-            # read back through the schema-aware reader: a dataset with
-            # zero rows under the selected languages writes a
-            # _SUCCESS-only dir, where schema inference would raise
-            from dgraph_dbpedia_spark.sources.parquet import read_triples_parquet
+        with phase(spark, f"ingest.{dataset}"):
+            df = load_dataset(spark, root, dataset, languages)
+            parquet_path = os.path.join(out, f"{dataset}.parquet")
+            write_partitioned_by(
+                df,
+                partition_cols=["lang"],
+                more_file_cols=["s"],
+                sort_cols=["p", "o"],
+                path=parquet_path,
+            )
+            result = IngestResult(dataset, parquet_path)
+            if print_stats:
+                # read back through the schema-aware reader: a dataset with
+                # zero rows under the selected languages writes a
+                # _SUCCESS-only dir, where schema inference would raise
+                from dgraph_dbpedia_spark.sources.parquet import read_triples_parquet
 
-            result.stats = dataset_counts(read_triples_parquet(spark, parquet_path))
-        return result
+                result.stats = dataset_counts(read_triples_parquet(spark, parquet_path))
+            return result
 
     from concurrent.futures import ThreadPoolExecutor
 

@@ -22,6 +22,7 @@ reference's ``when(flag).call(f)`` fluent steps are plain Python ``if``
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from functools import reduce
 
@@ -40,6 +41,7 @@ from dgraph_dbpedia_spark.functions.rdf import (
     typed_triples,
 )
 from dgraph_dbpedia_spark.functions.schema_gen import full_schema, schema_line
+from dgraph_dbpedia_spark.observability import collect_spill_metrics, phase
 from dgraph_dbpedia_spark.operators.cachectl import persisted_frames, release
 from dgraph_dbpedia_spark.operators.topk import top_k_per_group
 from dgraph_dbpedia_spark.sources.parquet import read_triples_parquet
@@ -406,9 +408,14 @@ def write_rdf(
     invoked exactly once — right after the count, or from the outer
     ``finally`` if anything before it raises (filter construction, the
     count itself) — so a failing sink can never leave the waiter
-    hanging."""
+    hanging.
+
+    The sink's jobs run as phases ``transform.<sink>.count`` and
+    ``transform.<sink>.write``, ``<sink>`` being the name of ``path``
+    without its ``.rdf`` suffix."""
     from pyspark import StorageLevel
 
+    sink = f"transform.{os.path.basename(path).removesuffix('.rdf')}"
     if persist:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -424,34 +431,36 @@ def write_rdf(
         # and crash the read-back on the missing partition column —
         # and would size n_parts from rows that never reach the sink
         filtered = invalid_predicate_filter(df)
-        n = filtered.count()
+        with phase(spark, f"{sink}.count"):
+            n = filtered.count()
         if on_counted is not None:
             on_counted()
             on_counted = None
-        if not n:
-            # honor overwrite semantics on the empty path too: a rerun
-            # into the same out dir must not leave a PREVIOUS run's
-            # files to be read back as this run's (empty) result
-            from dgraph_dbpedia_spark.sources.parquet import fs_delete
+        with phase(spark, f"{sink}.write"):
+            if not n:
+                # honor overwrite semantics on the empty path too: a rerun
+                # into the same out dir must not leave a PREVIOUS run's
+                # files to be read back as this run's (empty) result
+                from dgraph_dbpedia_spark.sources.parquet import fs_delete
 
-            fs_delete(spark, path)
-        if n:
-            parallel = spark.sparkContext.defaultParallelism
-            n_parts = max(
-                -(-n // ROWS_PER_RDF_FILE),
-                min(parallel, -(-n // 5_000)),
-            )
-            write_partitioned_by(
-                filtered,
-                partition_cols=["lang"],
-                more_file_cols=["p", "s"],
-                sort_cols=["o"],
-                n_partitions=n_parts,
-                projection=[rdf_line(F.col("s"), F.col("p"), F.col("o")).alias("line")],
-                fmt="text",
-                options={"compression": "gzip"},
-                path=path,
-            )
+                fs_delete(spark, path)
+            if n:
+                parallel = spark.sparkContext.defaultParallelism
+                n_parts = max(
+                    -(-n // ROWS_PER_RDF_FILE),
+                    min(parallel, -(-n // 5_000)),
+                )
+                write_partitioned_by(
+                    filtered,
+                    partition_cols=["lang"],
+                    more_file_cols=["p", "s"],
+                    sort_cols=["o"],
+                    n_partitions=n_parts,
+                    projection=[rdf_line(F.col("s"), F.col("p"), F.col("o")).alias("line")],
+                    fmt="text",
+                    options={"compression": "gzip"},
+                    path=path,
+                )
     finally:
         if on_counted is not None:
             on_counted()
@@ -487,17 +496,19 @@ def write_schema(df: DataFrame, path: str, indexed: bool) -> None:
     the partitioned write, so each (dataset, lang) dir holds exactly ONE
     part-file (S7/X3). Mirrored here with ``coalesce_to=1`` — the schema
     is O(#predicates) rows at any data scale, one task is the right
-    plan; the in-task sort keeps lines ordered inside each file."""
-    write_partitioned_by(
-        invalid_predicate_filter(df),
-        partition_cols=["dataset", "lang"],
-        more_file_cols=["p"],
-        sort_cols=[],
-        projection=[schema_line(indexed).alias("line")],
-        fmt="text",
-        path=path,
-        coalesce_to=1,
-    )
+    plan; the in-task sort keeps lines ordered inside each file. Runs as
+    phase ``transform.schema_indexed`` or ``transform.schema``."""
+    with phase(df.sparkSession, "transform.schema_indexed" if indexed else "transform.schema"):
+        write_partitioned_by(
+            invalid_predicate_filter(df),
+            partition_cols=["dataset", "lang"],
+            more_file_cols=["p"],
+            sort_cols=[],
+            projection=[schema_line(indexed).alias("line")],
+            fmt="text",
+            path=path,
+            coalesce_to=1,
+        )
 
 
 def transform(
@@ -515,88 +526,92 @@ def transform(
     # partitions (DbpediaDgraphSparkApp.scala:457-472)
     languages = get_languages(languages)
 
-    label_triples = read_triples_parquet(spark, f"{path}/labels.parquet", languages)
-    all_infobox = read_triples_parquet(spark, f"{path}/infobox_properties.parquet", languages)
-    all_interlang = read_triples_parquet(spark, f"{path}/interlanguage_links.parquet", languages)
-
-    object_langs = languages or [
-        r["lang"] for r in all_interlang.select("lang").distinct().collect()
-    ]
-    interlang_triples = filter_interlang_objects(all_interlang, object_langs)
-    page_links_triples = read_triples_parquet(spark, f"{path}/page_links.parquet", languages)
-    category_triples = read_triples_parquet(spark, f"{path}/article_categories.parquet", languages)
-    skos_triples = read_triples_parquet(spark, f"{path}/skos_categories.parquet", languages)
-    geo_triples = read_triples_parquet(spark, f"{path}/geo_coordinates.parquet", languages).where(
-        F.col("p") == GEORSS_POINT
-    )
-
-    # one fact-table scan feeds all three infobox dimensions (top-k set,
-    # majority datatypes, schema pairs); see infobox_dims
-    topk, predicate_datatypes, schema_derived, dim_caches = infobox_dims(
-        all_infobox, cfg.top_infobox_properties_per_lang
-    )
     schema = None
     retained: dict[str, DataFrame] = {}
     stats_tables = None
+    dim_caches: list[DataFrame] = []
     try:
-        if topk is not None:
-            infobox_triples = filter_by_topk(all_infobox, topk)
-        else:
-            infobox_triples = all_infobox
+        # the head: everything the driver thread runs before the sink pool
+        with phase(spark, "transform.head"):
+            def read(dataset: str) -> DataFrame:
+                return read_triples_parquet(spark, f"{path}/{dataset}.parquet", languages)
 
-        if cfg.print_stats:
-            # per-dataset counts + the per-language x per-dataset tables with
-            # the en-* rollup (DbpediaDgraphSparkApp.scala:139-179): built
-            # here, computed beside the sinks (see the pool below), printed
-            # once the pool has resolved
-            from dgraph_dbpedia_spark.operators.stats import (
-                datasets_counts,
-                per_lang_stats_tables,
+            label_triples = read("labels")
+            all_infobox = read("infobox_properties")
+            all_interlang = read("interlanguage_links")
+
+            object_langs = languages or [
+                r["lang"] for r in all_interlang.select("lang").distinct().collect()
+            ]
+            interlang_triples = filter_interlang_objects(all_interlang, object_langs)
+            page_links_triples = read("page_links")
+            category_triples = read("article_categories")
+            skos_triples = read("skos_categories")
+            geo_triples = read("geo_coordinates").where(F.col("p") == GEORSS_POINT)
+
+            # one fact-table scan feeds all three infobox dimensions (top-k set,
+            # majority datatypes, schema pairs); see infobox_dims
+            topk, predicate_datatypes, schema_derived, dim_caches = infobox_dims(
+                all_infobox, cfg.top_infobox_properties_per_lang
             )
+            if topk is not None:
+                infobox_triples = filter_by_topk(all_infobox, topk)
+            else:
+                infobox_triples = all_infobox
 
-            stats_frames = {
-                "labels": label_triples,
-                "interlanguage_links": interlang_triples,
-                "page_links": page_links_triples,
-                "article_categories": category_triples,
-                "skos_categories": skos_triples,
-                "geo_coordinates": geo_triples,
-                "infobox_properties": all_infobox,
-            }
-            if cfg.top_infobox_properties_per_lang:
-                k = cfg.top_infobox_properties_per_lang
-                stats_frames[f"top {k} infobox_properties"] = infobox_triples
-            stats_tables = per_lang_stats_tables(stats_frames)
+            if cfg.print_stats:
+                # per-dataset counts + the per-language x per-dataset tables with
+                # the en-* rollup (DbpediaDgraphSparkApp.scala:139-179): built
+                # here, computed beside the sinks (see the pool below), printed
+                # once the pool has resolved
+                from dgraph_dbpedia_spark.operators.stats import (
+                    datasets_counts,
+                    per_lang_stats_tables,
+                )
 
-        typed = typed_triples(infobox_triples)
+                stats_frames = {
+                    "labels": label_triples,
+                    "interlanguage_links": interlang_triples,
+                    "page_links": page_links_triples,
+                    "article_categories": category_triples,
+                    "skos_categories": skos_triples,
+                    "geo_coordinates": geo_triples,
+                    "infobox_properties": all_infobox,
+                }
+                if cfg.top_infobox_properties_per_lang:
+                    k = cfg.top_infobox_properties_per_lang
+                    stats_frames[f"top {k} infobox_properties"] = infobox_triples
+                stats_tables = per_lang_stats_tables(stats_frames)
 
-        infobox = clean_infobox(typed, predicate_datatypes, cfg.externalise_uris)
-        labels = clean_labels(label_triples, cfg)
-        interlang = clean_uri_pairs(interlang_triples, cfg)
-        page_links = clean_uri_pairs(page_links_triples, cfg)
-        categories = clean_uri_pairs(category_triples, cfg)
-        skos = clean_skos(skos_triples, cfg)
-        geo = clean_geo(geo_triples, cfg)
+            typed = typed_triples(infobox_triples)
 
-        schema = full_schema(
-            spark, infobox_triples, predicate_datatypes,
-            cfg.remove_language_tags, cfg.externalise_uris,
-            derived=schema_derived,
-        ).cache()
-        # materialize the cached dimensions (topk, predicate_datatypes,
-        # schema) once, before concurrent writers race to compute them.
-        # Measured-and-rejected variants (do not re-try without re-measuring):
-        #  - overlapping this materialization with the dim-independent sinks
-        #    stretched the dims critical path ~40% under contention (21.2s
-        #    vs 19.3s total at 60k bench subjects);
-        #  - persisting the typed infobox frame for its four consumers lost
-        #    to Catalyst column pruning — the cache materializes all columns
-        #    while each uncached consumer reads a 2-column pruned subset
-        #    (22.6s vs 19.3s);
-        #  - deriving types.rdf from in-memory frames instead of the gzip
-        #    read-back recomputed every cleaned frame after unpersist and
-        #    doubled total wall-clock (40.6s).
-        schema.count()
+            infobox = clean_infobox(typed, predicate_datatypes, cfg.externalise_uris)
+            labels = clean_labels(label_triples, cfg)
+            interlang = clean_uri_pairs(interlang_triples, cfg)
+            page_links = clean_uri_pairs(page_links_triples, cfg)
+            categories = clean_uri_pairs(category_triples, cfg)
+            skos = clean_skos(skos_triples, cfg)
+            geo = clean_geo(geo_triples, cfg)
+
+            schema = full_schema(
+                spark, infobox_triples, predicate_datatypes,
+                cfg.remove_language_tags, cfg.externalise_uris,
+                derived=schema_derived,
+            ).cache()
+            # materialize the cached dimensions (topk, predicate_datatypes,
+            # schema) once, before concurrent writers race to compute them.
+            # Measured-and-rejected variants (do not re-try without re-measuring):
+            #  - overlapping this materialization with the dim-independent sinks
+            #    stretched the dims critical path ~40% under contention (21.2s
+            #    vs 19.3s total at 60k bench subjects);
+            #  - persisting the typed infobox frame for its four consumers lost
+            #    to Catalyst column pruning — the cache materializes all columns
+            #    while each uncached consumer reads a 2-column pruned subset
+            #    (22.6s vs 19.3s);
+            #  - deriving types.rdf from in-memory frames instead of the gzip
+            #    read-back recomputed every cleaned frame after unpersist and
+            #    doubled total wall-clock (40.6s).
+            schema.count()
 
         # every sink below except types.rdf is an independent job — submit
         # them from a driver-side thread pool so Spark interleaves their
@@ -668,9 +683,10 @@ def transform(
                 # Nothing is printed until the pool resolves, so stdout
                 # keeps the reference's order.
                 def _stats() -> dict[str, dict[str, int]]:
-                    counts = datasets_counts(stats_frames)
-                    for c in persisted_frames(stats_tables[0]):
-                        c.count()
+                    with phase(spark, "transform.stats"):
+                        counts = datasets_counts(stats_frames)
+                        for c in persisted_frames(stats_tables[0]):
+                            c.count()
                     return counts
 
                 stats_future = pool.submit(_stats)
@@ -818,32 +834,31 @@ def transform(
             outputs["types"] = types_future.result()
 
         if cfg.print_stats:
-            stats_counts = stats_future.result()
-            for name, c in stats_counts.items():
-                print(
-                    f"{name}: {c['triples']:,} triples, {c['nodes']:,} nodes, "
-                    f"{c['predicates']:,} predicates"
+            with phase(spark, "transform.tail"):
+                stats_counts = stats_future.result()
+                for name, c in stats_counts.items():
+                    print(
+                        f"{name}: {c['triples']:,} triples, {c['nodes']:,} nodes, "
+                        f"{c['predicates']:,} predicates"
+                    )
+                print()
+                print("Triples per languages and dataset:")
+                main_table, en_star_table = stats_tables
+                main_table.show(1000, truncate=False)
+                en_star_table.show(1000, truncate=False)
+                # reference denominator is the top-k-FILTERED infobox count
+                # (DbpediaDgraphSparkApp.scala:449), not the raw input count.
+                # Reuse the count the stats job already computed for exactly
+                # this frame — re-running it here was a second full scan +
+                # semi-join over the largest dataset at the end of the
+                # pipeline.
+                k = cfg.top_infobox_properties_per_lang
+                denom_key = f"top {k} infobox_properties" if k else "infobox_properties"
+                coverage = outputs["infobox_properties"].count() * 100 // max(
+                    stats_counts[denom_key]["triples"], 1
                 )
-            print()
-            print("Triples per languages and dataset:")
-            main_table, en_star_table = stats_tables
-            main_table.show(1000, truncate=False)
-            en_star_table.show(1000, truncate=False)
-            # reference denominator is the top-k-FILTERED infobox count
-            # (DbpediaDgraphSparkApp.scala:449), not the raw input count.
-            # Reuse the count the stats job already computed for exactly
-            # this frame — re-running it here was a second full scan +
-            # semi-join over the largest dataset at the end of the
-            # pipeline.
-            k = cfg.top_infobox_properties_per_lang
-            denom_key = f"top {k} infobox_properties" if k else "infobox_properties"
-            coverage = outputs["infobox_properties"].count() * 100 // max(
-                stats_counts[denom_key]["triples"], 1
-            )
-            print(f"cleaned-up infoboxes cover {coverage}% of original rows")
-            from dgraph_dbpedia_spark.observability import collect_spill_metrics
-
-            print(collect_spill_metrics(spark).report())
+                print(f"cleaned-up infoboxes cover {coverage}% of original rows")
+                print(collect_spill_metrics(spark).report())
 
         return outputs
     finally:

@@ -25,9 +25,7 @@ def build_session(
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(cpus, 8))
-    )
+    shuffle_partitions = shuffle_partitions or max(cpus, 8)
 
     builder = (
         SparkSession.builder.master(master)
@@ -55,23 +53,14 @@ def build_session(
         # 20.9s / 804k triples/s / 28.4 B/triple vs DEFAULT_COMPRESSION
         # 26.2s / 642k/s / 26.2 B/triple — +25% throughput for +8%
         # bytes, the right trade for CPU-bound 100 TB sinks (the .gz
-        # format is identical; only the ratio changes). Env-overridable
-        # back to DEFAULT_COMPRESSION when footprint wins.
-        .config(
-            "spark.hadoop.zlib.compress.level",
-            os.environ.get("SPARK_GRAFT_GZIP_LEVEL", "BEST_SPEED"),
-        )
-        # scan-split size: the default intentionally matches Spark's
-        # built-in 128 MB — smaller splits were MEASURED WORSE at scale
-        # (32 MB: 2x slower at 168M triples, BENCH_SCALE.md — more scan
-        # tasks means more concurrent sort streams per heap). The setting
-        # exists only as an override hook for memory-constrained
-        # clusters, where halved spill may win; re-measure at the target
-        # scale before changing it.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
-        )
+        # format is identical; only the ratio changes)
+        .config("spark.hadoop.zlib.compress.level", "BEST_SPEED")
+        # scan-split size: intentionally Spark's built-in 128 MB —
+        # smaller splits were MEASURED WORSE at scale (32 MB: 2x slower
+        # at 168M triples, BENCH_SCALE.md — more scan tasks means more
+        # concurrent sort streams per heap); re-measure at the target
+        # scale before changing it
+        .config("spark.sql.files.maxPartitionBytes", "134217728")
         # local mode: the driver heap IS the executor heap. History: with
         # retained frames cached in the unified pool (pre-r6), 12g +
         # spill beat larger heaps (24g lost to full-GC pauses). After the
@@ -90,10 +79,7 @@ def build_session(
         # concurrent cycles pay off for latency, not these bulk jobs.
         # Only effective when this process launches the JVM (CLI,
         # tools/pipeline_bench.py) — a pre-existing JVM keeps its GC
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
-        )
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

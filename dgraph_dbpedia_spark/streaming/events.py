@@ -306,19 +306,16 @@ def dedup_events(
 
 
 def enrich_events(
-    events: DataFrame, dim: DataFrame, on: str, how: str = "left",
-    broadcast: bool = True,
+    events: DataFrame, dim: DataFrame, on: str, how: str = "left"
 ) -> DataFrame:
     """Stream-static enrichment join: each micro-batch of the stream
     joins the static dimension as a broadcast hash join (no stream-side
     shuffle, no state store — stream-static inner/left joins are
     stateless). The identical call works on a batch frame (the twin
-    the oracle checks). ``broadcast=True`` is a HARD hint — right for
-    genuine dimensions; pass ``False`` for a dim above the broadcast
-    limit (~8 GB / driver memory) so Spark can fall back to a shuffled
-    join instead of failing the build."""
-    d = F.broadcast(dim) if broadcast else dim
-    return events.join(d, on, how)
+    the oracle checks). The broadcast is a HARD hint — right for
+    genuine dimensions; a dim above the broadcast limit (~8 GB / driver
+    memory) fails the build."""
+    return events.join(F.broadcast(dim), on, how)
 
 
 def interval_join(

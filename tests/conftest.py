@@ -10,8 +10,6 @@ def spark():
     spark = build_session(
         app_name="dgraph_dbpedia_spark-tests",
         shuffle_partitions=8,
-        # UI on so the observability module's REST metrics are testable
-        extra_conf={"spark.ui.enabled": "true"},
     )
     yield spark
     spark.stop()

@@ -212,8 +212,7 @@ def test_bm25_batch_validates_input(spark):
 
 
 def test_frequent_ngrams_doc_frequency_and_determinism(spark):
-    """Top-k n-grams: document frequency by default (in-doc repeats
-    count once), raw occurrences with distinct_per_doc=False,
+    """Top-k n-grams: document frequency (in-doc repeats count once),
     min_count prunes singletons, and the (count desc, ngram asc)
     tie-break makes the top-k deterministic."""
     from dgraph_dbpedia_spark.operators.textstats import frequent_ngrams
@@ -229,9 +228,6 @@ def test_frequent_ngrams_doc_frequency_and_determinism(spark):
     got = [(r["ngram"], r["n_docs"]) for r in frequent_ngrams(docs, n=3, k=5).collect()]
     assert got[0] == (boiler, 3)
     assert all(c >= 2 for _, c in got)
-    raw = {r["ngram"]: r["n_docs"] for r in
-           frequent_ngrams(docs, n=3, k=5, distinct_per_doc=False).collect()}
-    assert raw[boiler] == 4  # doc 3 contributes twice
     # deterministic ordering within equal counts
     counts = [c for _, c in got]
     assert counts == sorted(counts, reverse=True)

@@ -1,0 +1,84 @@
+"""Every engine name a script in ``tools/`` imports, or reaches through a
+module alias (``T.write_rdf``), still exists — so deleting or renaming
+engine code breaks here instead of silently rotting a tool. Spark-free:
+it imports modules and starts no session."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import pathlib
+
+import pytest
+
+TOOLS = sorted((pathlib.Path(__file__).resolve().parents[1] / "tools").glob("*.py"))
+ENGINE = ("dgraph_dbpedia_spark", "__spark_entry__")
+
+
+def _is_engine(module: str | None) -> bool:
+    return module is not None and module.split(".")[0] in ENGINE
+
+
+def _resolve(path: str):
+    """The object a dotted engine path names: the longest importable
+    module prefix, then attributes. Raises if any part is gone."""
+    parts = path.split(".")
+    for i in range(len(parts), 0, -1):
+        try:
+            obj = importlib.import_module(".".join(parts[:i]))
+        except ImportError:
+            continue
+        for attr in parts[i:]:
+            obj = getattr(obj, attr)
+        return obj
+    raise ImportError(path)
+
+
+def engine_refs(source: str) -> list[str]:
+    """The dotted path of every engine name the source imports, or reads
+    or sets through an alias (``T.write_rdf``)."""
+    tree = ast.parse(source)
+    refs: list[str] = []
+    aliases: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if _is_engine(a.name) and a.asname:
+                    aliases[a.asname] = a.name
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and _is_engine(node.module):
+            for a in node.names:
+                refs.append(f"{node.module}.{a.name}")
+                aliases[a.asname or a.name] = f"{node.module}.{a.name}"
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+            target = aliases.get(node.value.id)
+            if target is not None:
+                refs.append(f"{target}.{node.attr}")
+    return refs
+
+
+def test_engine_refs_sees_imports_and_alias_attributes():
+    src = (
+        "import __spark_entry__ as m\n"
+        "from dgraph_dbpedia_spark.plans import transform as T\n"
+        "def f():\n"
+        "    from dgraph_dbpedia_spark.session import build_session\n"
+        "    return T.write_rdf, m.entry, build_session\n"
+    )
+    assert sorted(engine_refs(src)) == [
+        "__spark_entry__.entry",
+        "dgraph_dbpedia_spark.plans.transform",
+        "dgraph_dbpedia_spark.plans.transform.write_rdf",
+        "dgraph_dbpedia_spark.session.build_session",
+    ]
+
+
+@pytest.mark.parametrize("tool", TOOLS, ids=lambda p: p.name)
+def test_tool_engine_names_exist(tool):
+    missing = []
+    for path in engine_refs(tool.read_text()):
+        try:
+            _resolve(path)
+        except (ImportError, AttributeError):
+            missing.append(path)
+    assert not missing, f"{tool.name} uses names the engine no longer has: {missing}"

@@ -1,94 +1,54 @@
-"""Phase-level wall-clock breakdown of the transform pipeline at bench
-scale. Wraps the sink functions with timers (per-sink start/stop on the
-pool threads) to show where transform_sec goes.
+"""Per-phase breakdown of the transform pipeline: generates the bench
+corpus, ingests it, runs one untimed warm-up transform, then prints the
+phase counters (``observability.phase_counters``) of each timed run.
 
 Usage: python tools/profile_transform.py [n_subjects] [--iters N]
-
-``--iters N`` (default 1, r16): one untimed warm-up transform, then N
-timed runs; the spans of the BEST run are reported. A single cold run
-is machine-state-dominated (r16: 98 s cold vs 23-26 s warm on the
-same binary the same hour) — the pipeline bench damps this with
-warm-up + best-of-4, and profiles must be damped the same way to be
-comparable across sessions.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
+import shutil
 import sys
 import tempfile
-import shutil
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dgraph_dbpedia_spark.session import build_session
-from dgraph_dbpedia_spark.benchgen import generate_ttl_corpus, LANGS
-from dgraph_dbpedia_spark.plans.ingest import ingest
+from dgraph_dbpedia_spark.benchgen import LANGS, generate_ttl_corpus
+from dgraph_dbpedia_spark.observability import mark, phase_counters
 from dgraph_dbpedia_spark.plans import transform as T
+from dgraph_dbpedia_spark.plans.ingest import ingest
+from dgraph_dbpedia_spark.session import build_session
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    iters = 1
-    if "--iters" in argv:
-        i = argv.index("--iters")
-        iters = int(argv[i + 1])
-        argv = argv[:i] + argv[i + 2:]
-    n_subjects = int(argv[0]) if argv else 60_000
+    ap = argparse.ArgumentParser()
+    ap.add_argument("n_subjects", nargs="?", type=int, default=60_000)
+    ap.add_argument("--iters", type=int, default=1)
+    args = ap.parse_args()
     spark = build_session(app_name="profile-transform")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="sparkgraft-prof-")
-    spans: list[tuple[str, float, float]] = []
-    t0 = [0.0]
-
-    real_write_rdf, real_write_schema = T.write_rdf, T.write_schema
-
-    def timed_write_rdf(spark, df, path, *args, **kwargs):
-        s = time.perf_counter() - t0[0]
-        out = real_write_rdf(spark, df, path, *args, **kwargs)
-        e = time.perf_counter() - t0[0]
-        spans.append((os.path.basename(path), s, e))
-        return out
-
-    def timed_write_schema(df, path, indexed):
-        s = time.perf_counter() - t0[0]
-        real_write_schema(df, path, indexed)
-        e = time.perf_counter() - t0[0]
-        spans.append((os.path.basename(path), s, e))
-
-    T.write_rdf = timed_write_rdf
-    T.write_schema = timed_write_schema
-
+    cfg = T.TransformConfig(
+        write_types=True, externalise_uris=True, remove_language_tags=True,
+        top_infobox_properties_per_lang=100, print_stats=False,
+    )
     try:
-        generate_ttl_corpus(spark, f"{work}/ttl", n_subjects)
+        generate_ttl_corpus(spark, f"{work}/ttl", args.n_subjects)
         ingest(spark, f"{work}/ttl", f"{work}/parquet", print_stats=False)
-
-        cfg = T.TransformConfig(
-            write_types=True, externalise_uris=True,
-            remove_language_tags=True,
-            top_infobox_properties_per_lang=100, print_stats=False,
-        )
-        best: tuple[float, list] | None = None
-        runs = ([False] if iters == 1 else [False] + [True] * iters)
-        for timed in runs:
-            spans.clear()
-            t0[0] = time.perf_counter()
-            T.transform(spark, f"{work}/parquet", f"{work}/rdf",
-                        languages=list(LANGS), cfg=cfg)
-            total = time.perf_counter() - t0[0]
-            label = "timed" if timed or iters == 1 else "warm-up"
-            print(f"run ({label}): {total:.2f}s")
-            if (timed or iters == 1) and (best is None or total < best[0]):
-                best = (total, list(spans))
-        total, best_spans = best
-        print(f"TOTAL transform: {total:.2f}s  (subjects={n_subjects}, "
-              f"best of {max(iters, 1)} after "
-              f"{'1 warm-up' if iters > 1 else 'no warm-up'})")
-        for name, s, e in sorted(best_spans, key=lambda x: x[1]):
-            print(f"  {name:28s} start={s:6.2f}  end={e:6.2f}  dur={e - s:6.2f}")
+        for run in range(args.iters + 1):
+            since = mark(spark)
+            T.transform(spark, f"{work}/parquet", f"{work}/rdf", languages=list(LANGS), cfg=cfg)
+            if run == 0:
+                continue  # warm-up
+            print(f"run {run} (subjects={args.n_subjects})")
+            print(f"  {'phase':36s} {'jobs':>5s} {'tasks':>6s} {'wall_s':>7s} {'cpu_s':>7s} "
+                  f"{'shuffle_MB':>10s} {'spill_MB':>8s}")
+            for name, c in sorted(phase_counters(spark, since).items(), key=lambda kv: str(kv[0])):
+                print(f"  {str(name):36s} {c.jobs:5d} {c.tasks:6d} {c.wall_s:7.2f} {c.cpu_s:7.2f} "
+                      f"{c.shuffle_write_bytes / 2**20:10.1f} {c.spill_bytes / 2**20:8.1f}")
     finally:
-        T.write_rdf, T.write_schema = real_write_rdf, real_write_schema
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()
 

@@ -10,10 +10,11 @@ Usage: python tools/scale_ann_join.py [n_a] [n_b] [dims] [n_planes]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
