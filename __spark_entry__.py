@@ -23,7 +23,6 @@ from dgraph_dbpedia_spark.operators.majority import (
     filter_to_majority,
     majority_value_per_group,
 )
-from dgraph_dbpedia_spark.operators.stats import stats_table
 from dgraph_dbpedia_spark.functions.rdf import (
     blank_node,
     extract_datatype,
@@ -81,6 +80,9 @@ def _q_majority_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Backs the group_counts and salted_group_counts rows (one
+    contract): map-side partial aggregation already spreads a hot
+    key's rows before the shuffle."""
     li = _t(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n")
@@ -139,14 +141,6 @@ def _q_multi_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_items"),
         )
     )
-
-
-def _q_stats_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    frames = {
-        f"src{i}": docs.where(F.col("source") == f"src{i}") for i in range(3)
-    }
-    return stats_table(frames, "lang")
 
 
 def _q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,6 +246,8 @@ def _q_union_fold_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_stats_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The J4 per-lang x per-source count table as one tag + union +
+    pivot; backs the stats_pivot and stats_full_outer_fold rows."""
     from dgraph_dbpedia_spark.operators.stats import stats_table_pivot
 
     docs = _t(spark, sf_dir, "documents")
@@ -306,7 +302,8 @@ def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal: backward as-of join — each click event attaches the
     latest purchase by the same user at-or-before it, within a 1-hour
     tolerance (union + sorted-window fill-forward; one shuffle, no row
-    explosion — see operators/temporal.asof_join)."""
+    explosion — see operators/temporal.asof_join). Backs the asof_join
+    and asof_join_salted rows, which share one oracle."""
     from dgraph_dbpedia_spark.operators.temporal import asof_join
     from dgraph_dbpedia_spark.streaming.events import epoch_seconds
 
@@ -323,37 +320,6 @@ def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = asof_join(
         left, right, ["user_id"], "ts_s", ["m_id", "value"], tolerance=3600
-    )
-    return out.select(
-        "event_id", "user_id", "ts_s",
-        F.col("matched_m_id").alias("matched_id"),
-        F.col("matched_value").alias("matched_value"),
-        F.col("matched_lag").alias("lag_s"),
-    )
-
-
-def _q_asof_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The skew-hardened as-of variant (salt_hot_keys=8: per-key
-    timeline range-split into 8 window slices + carry-in boundary
-    merge) — MUST produce the identical result, checked against the
-    same lateral-subquery oracle as ``asof_join``."""
-    from dgraph_dbpedia_spark.operators.temporal import asof_join
-    from dgraph_dbpedia_spark.streaming.events import epoch_seconds
-
-    ev = _t(spark, sf_dir, "events")
-    ev = ev.select(
-        "event_id", "user_id", "event_type", "value",
-        epoch_seconds(ev).alias("ts_s"),
-    )
-    left = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts_s"
-    )
-    right = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("m_id"), "user_id", "value", "ts_s"
-    )
-    out = asof_join(
-        left, right, ["user_id"], "ts_s", ["m_id", "value"],
-        tolerance=3600, salt_hot_keys=8,
     )
     return out.select(
         "event_id", "user_id", "ts_s",
@@ -796,14 +762,14 @@ def _q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs / n_dropped per cluster size."""
     from dgraph_dbpedia_spark.operators.cachectl import release
     from dgraph_dbpedia_spark.operators.dedup import (
-        dedup_clusters,
+        dedup_clusters_star,
         dedup_report,
         minhash_dedup_pairs,
     )
 
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
-    clusters = dedup_clusters(docs.select("doc_id"), pairs)
+    clusters = dedup_clusters_star(docs.select("doc_id"), pairs)
     release(pairs)
     return dedup_report(clusters)
 
@@ -1692,15 +1658,6 @@ def _q_near_dup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_filter(docs, pairs).select("doc_id", "lang", "source")
 
 
-def _q_salted_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe two-stage aggregation; result identical to a plain
-    group count (the salt is physical only)."""
-    from dgraph_dbpedia_spark.operators.stats import salted_group_count
-
-    li = _t(spark, sf_dir, "lineitem")
-    return salted_group_count(li, ["l_returnflag", "l_linestatus"])
-
-
 def _q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.textstats import language_id
 
@@ -2320,14 +2277,23 @@ def _q_rq_rerank_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_knn_label_noise_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r14: the SAME blocked label-noise audit as
-    knn_label_noise_report, executed through the block kernel
-    (block_assign= — one applyInPandas matmul per cid block, vectors
-    cross Arrow once) instead of the cid equi-join pair lane. Values
-    are identical by construction (pinned bit-equal in
-    tests/test_similarity.py; 22x at the 50k scale point, BENCH_SCALE
-    r14), so the two rows share ONE oracle — this row puts the scale
-    lane itself under the driver's gate."""
+    """r14: the confident-learning label-noise screen (Northcutt et
+    al. 2021) over the labeled embedding corpus, in its BLOCKED scale
+    shape: candidate neighbors are the served IVF index's same-cid
+    lists (16 lists -> n^2/16 pairs; the exact O(n^2) form measured
+    117 s at the 2k-vector bench point and is the sample-only mode),
+    scored by the block kernel (block_assign= — one applyInPandas
+    matmul per cid block, vectors cross Arrow once; pinned bit-equal
+    to the cid equi-join pair lane in tests/test_similarity.py, 22x
+    at the 50k scale point, BENCH_SCALE r14). Within each block,
+    every vector's 5 nearest labeled neighbors (round-6 cosine desc,
+    id asc, NULL sims excluded) vote (count desc, label asc); per
+    label, how many rows' own label loses the vote. vec 0 is the
+    held-out query of the index build and so is not audited. Backs
+    both the knn_label_noise_report and knn_label_noise_blocked rows,
+    which share one oracle: it replays the seed-centroid cid
+    assignment, the same-cid pair set, pair scores, rank, vote and
+    the per-label fold."""
     from dgraph_dbpedia_spark.operators.similarity import (
         knn_label_noise_report,
     )
@@ -2339,37 +2305,6 @@ def _q_knn_label_noise_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_knn_label_noise_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r14: the confident-learning label-noise screen (Northcutt et
-    al. 2021) over the labeled embedding corpus, in its BLOCKED scale
-    shape: candidate pairs are the served IVF index's same-cid lists
-    (16 lists -> n^2/16 pairs; the exact O(n^2) form measured 117 s
-    at the 2k-vector bench point and is the sample-only mode), scored
-    through the pinned Arrow pair-cosine kernel; at corpus scale the
-    same blocking runs as the block kernel (block_assign= — pinned
-    value-identical, 22x at the 50k point, BENCH_SCALE r14). Within
-    each block,
-    every vector's 5 nearest labeled neighbors (round-6 cosine desc,
-    id asc, NULL sims excluded) vote (count desc, label asc); per
-    label, how many rows' own label loses the vote. vec 0 is the
-    held-out query of the index build and so is not audited. Oracle
-    replays the seed-centroid cid assignment, the same-cid pair set,
-    pair scores, rank, vote and the per-label fold."""
-    from dgraph_dbpedia_spark.operators.similarity import (
-        knn_label_noise_report,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    assigned, _ = _served_ivf_index(spark, sf_dir)
-    asg = assigned.select("vec_id", "cid")
-    pairs = (
-        asg.select(F.col("vec_id").alias("qid"), "cid")
-        .join(asg.select(F.col("vec_id").alias("nid"), "cid"), "cid")
-        .drop("cid")
-    )
-    return knn_label_noise_report(emb, k=5, candidate_pairs=pairs)
-
-
 def _q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r14, de-quadratized r15 (VERDICT r14 #1): semi-supervised k-NN
     label propagation — every 5th vector plays the unlabeled corpus
@@ -2379,7 +2314,7 @@ def _q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_label_noise_report). The registered row is the BLOCKED form:
     candidate pairs are the served IVF index's same-cid lists with
     the gold/query split applied inside the blocked pair set (the
-    same n^2/n_lists blocking as _q_knn_label_noise_report — the
+    same n^2/n_lists blocking as _q_knn_label_noise_blocked — the
     exact gold x query crossJoin it replaces was the bench's #1
     slowest row and quadratic in corpus size; exact mode remains the
     operator's sample-only default per its docstring). vec 0 is the
@@ -2695,31 +2630,12 @@ def _q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hash_sample(docs, rate_num=32)
 
 
-def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the MinHash near-dup graph: every doc
-    labeled with the min doc_id reachable through pairs (iterative
-    min-label propagation; oracled by a DuckDB recursive CTE)."""
-    from dgraph_dbpedia_spark.operators.cachectl import release
-    from dgraph_dbpedia_spark.operators.dedup import (
-        dedup_clusters,
-        minhash_dedup_pairs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
-    out = dedup_clusters(docs, pairs)
-    # dedup_clusters materialized the edge set; the pair sketch cache is
-    # no longer needed by the returned (checkpoint-rooted) frame
-    release(pairs)
-    return out
-
-
 def _q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same component labeling as ``dedup_clusters`` via large-star /
-    small-star contraction (Kiveris et al. SoCC'14) — the O(log^2 n)
-    round-count scale path for long-diameter graphs. Shares the
-    recursive-CTE oracle with ``dedup_clusters`` (identical output
-    contract)."""
+    """Connected components over the MinHash near-dup graph: every doc
+    labeled with the min doc_id reachable through pairs, by large-star
+    / small-star contraction (Kiveris et al. SoCC'14, O(log^2 n)
+    rounds at any diameter). Backs both the dedup_clusters and
+    dedup_clusters_star rows, which share one recursive-CTE oracle."""
     from dgraph_dbpedia_spark.operators.cachectl import release
     from dgraph_dbpedia_spark.operators.dedup import (
         dedup_clusters_star,
@@ -3284,7 +3200,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rq_topk_served": _q_rq_topk_served,
     "rq_ivf_topk_served": _q_rq_ivf_topk_served,
     "rq_rerank_topk_served": _q_rq_rerank_topk_served,
-    "knn_label_noise_report": _q_knn_label_noise_report,
+    "knn_label_noise_report": _q_knn_label_noise_blocked,
     "knn_label_noise_blocked": _q_knn_label_noise_blocked,
     "knn_classify": _q_knn_classify,
     "split_leakage_report": _q_split_leakage_report,
@@ -3402,9 +3318,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "extract_datatype": _q_extract_datatype,
     "typed_cleanup": _q_typed_cleanup,
     "asof_join": _q_asof_join,
-    "asof_join_salted": _q_asof_join_salted,
+    "asof_join_salted": _q_asof_join,
     "stratified_sample": _q_stratified_sample,
-    "dedup_clusters": _q_dedup_clusters,
+    "dedup_clusters": _q_dedup_clusters_star,
     "dedup_clusters_star": _q_dedup_clusters_star,
     # promoted from the r5 tail — first-ever driver rows
     "union_distinct": _q_union_distinct,
@@ -3421,7 +3337,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "topk_semi_join": _q_topk_semi_join,
     "majority_props_per_event_type": _q_majority_props,
     "majority_semi_join": _q_majority_semi_join,
-    "stats_full_outer_fold": _q_stats_fold,
+    "stats_full_outer_fold": _q_stats_pivot,
     "geo_geojson": _q_geo_geojson,
     "ttl_parse": _q_ttl_parse,
     "window_tumbling": _q_window_tumbling,
@@ -3433,7 +3349,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "cosine_topk": _q_cosine_topk,
     "simhash": _q_simhash,
     "simhash_near_dup": _q_simhash_near_dup,
-    "salted_group_counts": _q_salted_group_counts,
+    "salted_group_counts": _q_group_counts,
     "token_counts_bpe": _q_token_counts_bpe,
     "lsh_ann_topk": _q_lsh_ann_topk,
     "lsh_ann_topk_batch": _q_lsh_ann_topk_batch,

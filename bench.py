@@ -177,7 +177,7 @@ def main() -> None:
     # silently-dead warm-up would corrupt the timings it exists for.
     from dgraph_dbpedia_spark.operators.cachectl import release
     from dgraph_dbpedia_spark.operators.dedup import (
-        dedup_clusters,
+        dedup_clusters_star,
         ngram_jaccard_pairs,
     )
 
@@ -206,7 +206,7 @@ def main() -> None:
     # it is independent of the shingle warm-up above.
     _nodes = spark.range(4).selectExpr("id AS doc_id")
     _pairs = spark.range(3).selectExpr("id AS a", "id + 1 AS b")
-    dedup_clusters(_nodes, _pairs).write.format("noop").mode(
+    dedup_clusters_star(_nodes, _pairs).write.format("noop").mode(
         "overwrite"
     ).save()
 

@@ -9,8 +9,8 @@ Extension surface beyond the reference (SURVEY §7.8): the operators a
 - MinHash+LSH: k-seed signature -> banding -> bucket equi-join for
   candidates -> exact Jaccard verify on candidates only
 - SimHash:    60-bit sign fingerprint + banded hamming candidates
-- components: iterative min-label propagation (diameter-bound) and
-  large-star/small-star contraction (O(log^2 n), diameter-free)
+- components: large-star/small-star contraction (O(log^2 n) rounds,
+  diameter-free)
 - decontamination: w-gram overlap semi-join against a benchmark set
 
 Hashing uses the cross-engine md5 scheme (functions/hashing.py) so
@@ -636,16 +636,17 @@ def near_dup_filter(
     return df.join(losers, id_col, "left_anti")
 
 
-def dedup_clusters(
+def dedup_clusters_star(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 25,
+    max_iter: int = 50,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph: assign every
     document the MINIMUM doc id reachable through pairs — the cluster
     representative. Returns ``(doc_id, cluster_id)`` for ALL docs
-    (singletons map to themselves).
+    (singletons map to themselves); pair ids absent from ``docs`` are
+    ignored.
 
     This is the end-step ``near_dup_filter`` approximates greedily: the
     pairwise keep-lowest rule under-deletes on transitive chains
@@ -653,176 +654,31 @@ def dedup_clusters(
     content); component labeling deletes exactly one survivor per
     connected group.
 
-    Algorithm: iterative min-label propagation over the TOUCHED node
-    set only (nodes appearing in at least one pair); untouched docs
-    never enter the loop and are completed as self-labeled singletons
-    by one final left-join (r9 — at a ~1% near-dup rate the per-round
-    frame shrinks ~100x vs looping over the whole corpus). CONTRACT:
-    ``docs`` must be deterministic under re-evaluation (any scan,
-    filter, or join is; an unseeded ``.sample()`` / unordered
-    ``.limit()`` is not) — the returned frame lazily re-scans ``docs``
-    in the completion join rather than re-materializing the full
-    corpus, which is the point of the touched-universe design; labels
-    themselves are checkpoint-rooted. Wrap a nondeterministic source
-    in ``localCheckpoint()`` before calling. Per round,
-    one edges-by-labels equi-join plus a groupBy-min — both shuffles
-    are on the doc-id key, so AQE coalesces them and skew is bounded
-    by max component degree. Rounds = graph DIAMETER, and LSH-banded near-dup
-    graphs are quasi-cliques (banding links every pair that shares a
-    bucket), so 2-4 rounds in practice; ``max_iter`` guards
-    pathological chains and raises ``RuntimeError`` LOUDLY if labels
-    have not converged when it is hit — returning partial components
-    would silently under-merge clusters. ``localCheckpoint`` truncates
-    the lineage per round — without it the plan doubles each iteration
-    and round 15+ spends longer planning than executing. Convergence is
-    detected with a per-round 1-row aggregate (count of changed
-    labels), the standard driver-side loop of iterative Spark
-    algorithms — not a driver-collect of data.
-
-    Rounds scale with component DIAMETER, so a pathological long-chain
-    graph (diameter > max_iter) needs the large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14), which contracts chains in O(log^2 n) rounds —
-    the documented upgrade path if a corpus ever trips the cap.
-
-    Every round is eagerly ``localCheckpoint``-ed — ONE job per round
-    (the convergence count rides the checkpoint materialization as an
-    ``observe()`` metric) and each round plans against a depth-1
-    lineage. Measured same-session at sf0.1 (BENCH_SCALE.md r8): 2.7 s
-    vs 3.6-4.1 s for the r7 persist-per-round + checkpoint-every-8
-    scheme, and at scale (r9, diameter-9 chain graph) ~20x faster at
-    100k nodes — lineage growth, not frame size, is the dominant cost.
-    """
-    # undirected: propagate labels both ways along every pair
-    edges = (
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    edges.count()
-    # label universe: only nodes that appear in a pair AND in docs can
-    # ever change label — singletons re-enter via the completion join
-    # at the end (dedup_clusters_star's root-completion pattern). This
-    # shrinks every round's join/agg/checkpoint from |docs| rows to
-    # |touched| rows: at a near-dup rate of ~1%, ~100x less shuffled
-    # data per round at corpus scale. The touched set is small, so AQE
-    # turns the restriction semi-join into a broadcast — one docs scan,
-    # no docs shuffle. Out-of-docs pair ids stay inert exactly as
-    # before: they never get a label row, so edges touching them
-    # propagate nothing (the same contract dedup_clusters_star enforces
-    # by semi-joining its edge set against docs).
-    touched = edges.select(F.col("src").alias("id")).distinct()
-    doc_ids = docs.select(F.col(id_col).alias("id"))
-    labels = (
-        doc_ids.join(touched, "id", "left_semi")
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
-    )
-    if max_iter < 0:
-        raise ValueError("max_iter must be >= 0")
-    from dgraph_dbpedia_spark.operators.cachectl import release_local_checkpoint
-
-    changed = -1
-    # the newest checkpointed frame; once a NEWER checkpoint has
-    # materialized nothing can read it again, so its blocks are freed
-    # deterministically (DataFrame.unpersist does not reach them, and
-    # waiting for driver GC would hold every round's frame at once)
-    last_cp = labels
-    # max_iter bounds the number of LABEL-CHANGING rounds (the diameter
-    # bound); the +1 is the zero-change confirmation round, so a graph
-    # that converges in exactly max_iter rounds is accepted, not raised
-    # on (a round-6 review catch: the confirmation round used to eat one
-    # slot of the budget)
-    for _ in range(max_iter + 1):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        # the per-row changed flag rides along in the SAME pass, so the
-        # convergence check is a scan-count of the cached result — not
-        # the extra join-per-round it used to be (one fewer shuffle per
-        # iteration; the flag column is projected away before the next
-        # round's join)
-        new_min = F.least(
-            F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-        )
-        with_flag = labels.join(
-            neighbor_min, labels["id"] == neighbor_min["src"], "left"
-        ).select(
-            "id",
-            new_min.alias("new_label"),
-            (new_min < F.col("label")).alias("chg"),
-        )
-        # eager checkpoint per round, ONE job per round: the convergence
-        # count rides the checkpoint materialization as an observe()
-        # metric (a CollectMetrics node costs nothing extra), and every
-        # round plans against a depth-1 lineage — this beat both
-        # persist+count (growing plans) and checkpoint+separate-count
-        # (two jobs) in the r8 A/Bs
-        obs = Observation()
-        with_flag = with_flag.observe(
-            obs,
-            F.coalesce(
-                F.sum(F.col("chg").cast("long")), F.lit(0)
-            ).alias("changed"),
-        ).localCheckpoint()
-        changed = int(obs.get["changed"])
-        release_local_checkpoint(last_cp)
-        last_cp = with_flag
-        labels = with_flag.select("id", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        release_local_checkpoint(last_cp)
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): component diameter "
-            "exceeds max_iter — raise it, or switch to a "
-            "large-star/small-star contraction for chain-shaped graphs"
-        )
-    # singleton completion: docs that never appeared in a pair label
-    # themselves. labels is backed by last_cp, which stays alive for the
-    # caller; being checkpoint-rooted, the name-based join cannot hit
-    # self-join ambiguity with doc_ids.
-    return doc_ids.join(
-        labels.withColumnRenamed("label", "__label"), ["id"], "left"
-    ).select(
-        F.col("id").alias(id_col),
-        F.coalesce(F.col("__label"), F.col("id")).alias("cluster_id"),
-    )
-
-
-def dedup_clusters_star(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the scale path for graphs whose DIAMETER
-    exceeds what :func:`dedup_clusters`'s per-round label propagation
-    can cover. Rounds are O(log^2 n) regardless of diameter: each
+    Algorithm: alternating large-star / small-star contraction
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14). Rounds are O(log^2 n) regardless of diameter: each
     large-star hangs every node off the minimum of its neighborhood,
     halving chain lengths, and each small-star flattens the resulting
-    forests toward their roots. Same output contract as
-    ``dedup_clusters``: ``(doc_id, cluster_id)`` for ALL docs, with
-    ``cluster_id`` = min doc id in the component.
+    forests toward their roots. Per round: two groupBy-min
+    aggregations and two equi-joins, all keyed on node id.
+    ``localCheckpoint`` truncates lineage per round. Convergence is
+    detected by an order-insensitive edge-set checksum (count +
+    bit_xor of xxhash64(u,v)) — one aggregate pass instead of a
+    subtract-join; a false positive needs a colliding 64-bit hash XOR
+    across rounds, vanishingly unlikely and bounded by ``max_iter`` +
+    the star invariant (a converged edge set is precisely the
+    child->root star forest, which the final join consumes directly).
+    ``max_iter`` counts rounds including the one that confirms
+    convergence; hitting a positive ``max_iter`` raises
+    ``RuntimeError`` rather than returning partial components that
+    would silently under-merge clusters.
 
-    Per round: two groupBy-min aggregations and two equi-joins, all
-    keyed on node id — the same shuffle shape as one label-propagation
-    round, so the win is purely in ROUND COUNT on long-chain graphs
-    (log vs linear in diameter). ``localCheckpoint`` truncates lineage
-    per round. Convergence is detected by an order-insensitive edge-set
-    checksum (count + bit_xor of xxhash64(u,v)) — one aggregate pass
-    instead of a subtract-join; a false positive needs a colliding
-    64-bit hash XOR across rounds, vanishingly unlikely and bounded by
-    ``max_iter`` + the star invariant (a converged edge set is
-    precisely the child->root star forest, which the final join
-    consumes directly).
+    CONTRACT: ``docs`` must be deterministic under re-evaluation (any
+    scan, filter, or join is; an unseeded ``.sample()`` / unordered
+    ``.limit()`` is not) — the returned frame lazily re-scans ``docs``
+    in the completion join rather than re-materializing the corpus;
+    the edge set itself is checkpoint-rooted. Wrap a nondeterministic
+    source in ``localCheckpoint()`` before calling.
     """
     def canon(e: DataFrame) -> DataFrame:
         # undirected edge set, one canonical (u > v) row per pair
@@ -870,11 +726,9 @@ def dedup_clusters_star(
             F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
         )
 
-    # restrict edges to ids actually present in docs: label propagation
-    # inherently ignores out-of-docs pair ids (labels exist only for doc
-    # rows), so the star contraction must too, or a stale pair set
-    # referencing a dropped doc could root a component at a non-doc id
-    # and the two operators' "identical contract" would diverge
+    # restrict edges to ids actually present in docs, or a stale pair
+    # set referencing a dropped doc could root a component at a
+    # non-doc id
 
     ids = docs.select(F.col(id_col).alias("u")).distinct()
     obs0 = Observation()
@@ -968,9 +822,9 @@ def dedup_corpus(
     cluster id. Singletons are their own cluster, so untouched docs
     always survive.
 
-    Star contraction, with its defaults, is the one component
-    algorithm (r17, VERDICT r16 #3): its O(log^2 n) round bound beat
-    label propagation's diameter-linear rounds on every composed row
+    Star contraction is the one component algorithm (r17, VERDICT
+    r16 #3): its O(log^2 n) round bound beat the retired label
+    propagation's diameter-linear rounds on every composed row
     measured at sf0.1 (curation_pipeline 15.96 -> 11.31 s,
     pretraining_prep 11.57 -> 7.89 s, dedup_increment 5.07 -> 3.92 s
     best-of-3 warm; the standalone dedup_corpus / semantic_dedup rows
@@ -979,7 +833,7 @@ def dedup_corpus(
     every affected row, see OPTIMIZATION_r17.md.
 
     ``docs`` must be deterministic under re-evaluation (the
-    :func:`dedup_clusters` contract): the result scans ``docs`` lazily
+    :func:`dedup_clusters_star` contract): the result scans ``docs`` lazily
     in both the completion join and the representative semi-join
     instead of materializing the corpus. Wrap a nondeterministic
     source in ``localCheckpoint()`` first."""
@@ -1350,11 +1204,11 @@ def pair_recall_audit(
 
 def dedup_report(clusters: DataFrame) -> DataFrame:
     """Cluster-size histogram of a ``(id, cluster_id)`` component
-    labeling (:func:`dedup_clusters` / :func:`dedup_clusters_star`
-    output): one row per cluster SIZE with the number of clusters of
-    that size, the docs they hold, and the docs a min-id dedup would
-    drop — the before/after report every curation run wants next to
-    its dedup pass (duplicate rate = sum(n_dropped) / sum(n_docs)).
+    labeling (:func:`dedup_clusters_star` output): one row per cluster
+    SIZE with the number of clusters of that size, the docs they hold,
+    and the docs a min-id dedup would drop — the before/after report
+    every curation run wants next to its dedup pass (duplicate rate =
+    sum(n_dropped) / sum(n_docs)).
 
     100 TB shape: two partially-aggregable groupBys (docs ->
     cluster sizes -> histogram), both map-side combinable; the output

@@ -37,10 +37,9 @@ def filter_to_majority(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    dim: DataFrame | None = None,
 ) -> DataFrame:
     """Keep only rows matching their group's majority value (J1)."""
-    if dim is None:
-        dim = majority_value_per_group(df, group_cols, value_col)
-    dim = dim.select(*group_cols, value_col)
+    dim = majority_value_per_group(df, group_cols, value_col).select(
+        *group_cols, value_col
+    )
     return df.join(F.broadcast(dim), [*group_cols, value_col], "left_semi")

@@ -11,15 +11,17 @@ Catalyst expression form. Batch size rides
 whatever the upstream frame had (no shuffle is introduced).
 
 The actual codecs (PIL/ffmpeg/librosa) are NOT in this container, so
-the decode kernels self-gate on importability: ``use_real_decoder``
-defaults to ``None`` = auto — each task probes for the codec library
-INSIDE the kernel (executors need not match the driver's environment)
-and upgrades itself to the real decoder when present, else falls back
-to a deterministic fake derived from the md5 of the bytes. ``True``
-forces the real codec (``NotImplementedError`` where it is missing),
-``False`` pins the fake — the fake stays the DuckDB-oracle surface
-either way. ``pil_module`` / ``decoder`` allow dependency injection
-(cloudpickle ships test doubles by value into workers).
+:func:`decode_image_meta` self-gates on importability: its
+``use_real_decoder`` defaults to ``None`` = auto — each task probes for
+PIL INSIDE the kernel (executors need not match the driver's
+environment) and upgrades itself to the real decoder when present,
+else falls back to a deterministic fake derived from the md5 of the
+bytes. ``True`` forces the real codec (``NotImplementedError`` where it
+is missing), ``False`` pins the fake — the fake stays the DuckDB-oracle
+surface either way. :func:`frame_sample` and :func:`embed_binary` run
+their md5 fakes unless a ``decoder`` is injected; ``pil_module`` /
+``decoder`` allow dependency injection (cloudpickle ships test doubles
+by value into workers).
 """
 
 from __future__ import annotations
@@ -169,16 +171,14 @@ def frame_sample(
     id_col: str = "id",
     content_col: str = "content",
     every_n_bytes: int = 64,
-    use_real_decoder: bool | None = None,
     decoder=None,
 ) -> DataFrame:
     """Video frame sampling: emits one row per sampled 'frame'. The
     default kernel chunks at a byte stride (deterministic, the oracle
     surface) — it demonstrates the 1-to-N mapInPandas shape a real
     ffmpeg-based sampler has. ``decoder`` injects a real sampler:
-    ``decoder(bytes) -> list[(frame_idx, frame_hash)]``; with
-    ``use_real_decoder=True`` and no decoder, NotImplementedError (no
-    video codec ships in this environment to auto-probe for)."""
+    ``decoder(bytes) -> list[(frame_idx, frame_hash)]`` (no video
+    codec ships in this environment to auto-probe for)."""
 
     if every_n_bytes < 1:
         raise ValueError(
@@ -187,10 +187,6 @@ def frame_sample(
         )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if use_real_decoder and decoder is None:
-            raise NotImplementedError(
-                "video codec not available in this environment"
-            )
         for pdf in batches:
             ids, idxs, hashes = [], [], []
             if decoder is not None:
@@ -226,15 +222,14 @@ def embed_binary(
     id_col: str = "id",
     content_col: str = "content",
     dims: int = 8,
-    use_real_decoder: bool | None = None,
     decoder=None,
 ) -> DataFrame:
     """Feature extraction: binary -> float vector. Default kernel is an
     md5-seeded deterministic fake (the oracle surface); ``decoder``
     injects a real model: ``decoder(bytes) -> list[float]`` of length
-    ``dims``. ``use_real_decoder=True`` with no decoder raises (no
-    model runtime ships in this environment to auto-probe for). Output
-    feeds the similarity operators (operators/similarity.py)."""
+    ``dims`` (no model runtime ships in this environment to auto-probe
+    for). Output feeds the similarity operators
+    (operators/similarity.py)."""
     if decoder is None and not 1 <= dims <= 16:
         raise ValueError(
             f"the fake kernel draws from a 16-byte md5 digest: dims must "
@@ -249,10 +244,6 @@ def embed_binary(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if use_real_decoder and decoder is None:
-            raise NotImplementedError(
-                "model runtime not available in this environment"
-            )
         for pdf in batches:
             cells = _clean_cells(pdf[id_col], pdf[content_col])
             vecs = []

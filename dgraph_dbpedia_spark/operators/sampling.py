@@ -606,7 +606,7 @@ def dsir_logratio(
     # tokens — would make the totals NULL and every score silently
     # NULL, so dsir_sample would return an empty sample
     # indistinguishable from "nothing qualified". Raise loudly instead
-    # (the dedup_clusters non-convergence convention).
+    # (the dedup_clusters_star non-convergence convention).
     if tm.count() == 0:
         tm.unpersist()
         rm.unpersist()

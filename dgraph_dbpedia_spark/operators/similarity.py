@@ -103,8 +103,8 @@ def hyperplane_signs_arrow(n_planes: int, dims: int):
     """Vectorized production twin of :func:`hyperplane_signs`: the
     projection matrix product runs as numpy inside an Arrow-batched
     pandas UDF (``(batch x dims) @ (dims x n_planes)``) instead of
-    interpreted nested higher-order aggregates — the same pattern as
-    :func:`cosine_topk_arrow`, ~10-100x the interpreter throughput.
+    interpreted nested higher-order aggregates, ~10-100x the
+    interpreter throughput.
 
     Bit-compatibility: numpy's dot may re-associate the float sum vs the
     native sequential fold; a sign flip needs a projection within ~1e-13
@@ -301,56 +301,6 @@ def lsh_bucketed_topk_many(
     return out.select(
         F.col("a").alias(qid_col), F.col("b").alias(id_col), "sim"
     )
-
-
-def cosine_topk_arrow(
-    df: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "q",
-) -> DataFrame:
-    """Production twin of :func:`cosine_topk`: the scoring loop runs as
-    an Arrow-batched pandas UDF (numpy matrix-vector product per batch)
-    instead of interpreted higher-order array expressions — the
-    vectorized path for wide embeddings at 100 TB, at the price of one
-    Python stage (so not part of the JVM-only oracle surface).
-
-    Same contract and tie-break as cosine_topk; results match to float
-    rounding. Zero-norm vectors yield NULL (ranked last), exactly like
-    the native twin's divide-by-zero — NaN would sort FIRST under desc
-    ordering and pollute every top-k."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    q_vec = [float(x) for x in query.select(query_col).first()[0]]
-
-    def score_batch(emb: pd.Series) -> pd.Series:
-        q = np.asarray(q_vec, dtype=np.float64)
-        qn = np.sqrt(q @ q)
-        mat = np.asarray(emb.tolist(), dtype=np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1)) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            # HALF_UP like F.round (np.round is half-even — a tie
-            # would order differently than the JVM twin), same helper
-            # as every other arrow kernel in this module
-            sims = _round_half_up_np((mat @ q) / norms, 4)
-        # nullable Float64: NaN/inf from zero norms become NULL in the
-        # Arrow transfer, matching the JVM twin's NULL-on-div-by-zero
-        out = pd.array(sims, dtype="Float64")
-        out[~np.isfinite(sims)] = pd.NA
-        return pd.Series(out)
-
-    # real class objects (not string hints) in the signature: pyspark
-    # resolves the eval type by inspecting the annotations
-    score = pandas_udf(score_batch, DoubleType())
-
-    scored = df.select(
-        F.col(id_col), score(F.col(vec_col).cast("array<double>")).alias("sim")
-    )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
 
 def _centroid_row(centroids: DataFrame) -> DataFrame:
@@ -1094,7 +1044,7 @@ def ivf_topk_served(
 ) -> DataFrame:
     """Serve-path IVF probe against a MATERIALIZED index: ``assigned``
     is :func:`ivf_assign` output ``(id, vec, cid)`` written out once —
-    partitioned or bucketed by ``cid`` (:mod:`..sources.bucketed`) —
+    partitioned or bucketed by ``cid`` (``bucketBy`` + ``saveAsTable``) —
     and ``centroids`` is the bounded ``(cid, c)`` frame it was built
     with. Per query: score the query against the centroid fold, collect
     the ``n_probe`` probe cids (a BOUNDED driver read — n_probe ints
@@ -1954,7 +1904,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep: str = "min_id",
-    normalized: bool = False,
 ) -> DataFrame:
     """End-to-end semantic dedup: keep ONE representative per connected
     component of the within-cluster near-dup pair graph, all original
@@ -1978,12 +1927,7 @@ def semantic_dedup(
       nothing extra at scale: the sim is exposed from the SAME
       assignment pass that builds the pairs, and representative
       selection is one partially-aggregable ``min(struct(sim, id))``
-      per component.
-
-    ``normalized=True`` declares the input unit-norm
-    (:func:`normalize_embeddings` output) — the pair stage scores by
-    plain dot with no norm columns and no divide (see
-    :func:`_semantic_sk_pairs`)."""
+      per component."""
     from dgraph_dbpedia_spark.operators.dedup import (
         dedup_clusters_star,
         dedup_corpus,
@@ -1996,7 +1940,6 @@ def semantic_dedup(
     sk, pairs = _semantic_sk_pairs(
         df, threshold, centroids, n_centroids, id_col, vec_col,
         sim_col="_csim" if keep == "low_centroid_sim" else None,
-        normalized=normalized,
     )
     # the star contraction eagerly materializes the component labels
     # into a checkpoint-rooted frame, so the assignment cache can be

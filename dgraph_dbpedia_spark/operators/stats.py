@@ -6,17 +6,15 @@ a per-language stats table assembled by folding full-outer joins on
 ``lang`` over one count-frame per dataset (J4, :157), an ``en-*`` rollup
 row appended via groupBy().sum() + union (A4+U2, :163-171).
 
-Two equivalent forms of the per-language table exist. The J4 fold
-(:func:`stats_table`) is kept for reference parity and backs the
-registry's fold row; the transform pipeline prints the single-shuffle
-tag + union + pivot (:func:`stats_table_pivot`, SURVEY §1 allows
-either). Likewise the per-dataset counts are one tagged union and ONE
-``groupBy(dataset)`` aggregation for any number of datasets
-(:func:`datasets_counts`), not one aggregation per dataset.
+The per-language table is built as ONE tag + union + pivot
+(:func:`stats_table_pivot`), which yields the J4 fold's table in a
+single shuffle (SURVEY §1 allows either form). Likewise the
+per-dataset counts are one tagged union and ONE ``groupBy(dataset)``
+aggregation for any number of datasets (:func:`datasets_counts`), not
+one aggregation per dataset.
 
 Scale notes: exact ``countDistinct`` on an unbounded column is a full
-shuffle of that column. The fold of full-outer joins is fine because
-each input is already one row per language (#langs ~ 125).
+shuffle of that column.
 """
 
 from __future__ import annotations
@@ -66,42 +64,12 @@ def counts_per_group(df: DataFrame, group_col: str, count_name: str) -> DataFram
     return df.groupBy(group_col).agg(F.count(F.lit(1)).alias(count_name))
 
 
-def stats_table(frames: dict[str, DataFrame], group_col: str = "lang") -> DataFrame:
-    """Fold full-outer joins on ``group_col`` over per-dataset count
-    frames (J4, DbpediaDgraphSparkApp.scala:157). Inputs are one row per
-    group, so each join stays broadcast-sized regardless of fact scale."""
-    counted = [counts_per_group(df, group_col, name) for name, df in frames.items()]
-
-    def outer(a: DataFrame, b: DataFrame) -> DataFrame:
-        # null-SAFE key equality: a USING full-outer never matches NULL
-        # keys, so a NULL group present in two datasets would yield two
-        # half-empty rows here while stats_table_pivot's groupBy merges
-        # them — the two documented-equivalent forms must agree. The
-        # right key is RENAMED before the expression join: per-dataset
-        # count frames routinely derive from ONE source frame, and
-        # attribute references (a[col] / b[col]) into shared lineage
-        # trip Spark's ambiguous-self-join check
-        rk = "__rk"
-        while rk in a.columns or rk in b.columns:
-            rk = "_" + rk
-        bb = b.withColumnRenamed(group_col, rk)
-        keep = [c for c in bb.columns if c != rk]
-        return (
-            a.join(bb, F.col(group_col).eqNullSafe(F.col(rk)), "full_outer")
-            .select(
-                F.coalesce(F.col(group_col), F.col(rk)).alias(group_col),
-                *[F.col(c) for c in a.columns if c != group_col],
-                *[F.col(c) for c in keep],
-            )
-        )
-
-    joined = reduce(outer, counted)
-    return joined.na.fill(0)
-
-
 def stats_table_pivot(frames: dict[str, DataFrame], group_col: str = "lang") -> DataFrame:
-    """Single-shuffle alternative to the join fold: tag + union + pivot.
-    Preferred at scale when the number of datasets grows."""
+    """Per-group x per-dataset row counts, missing cells 0: the table
+    the reference builds by folding full-outer joins on ``group_col``
+    over one count frame per dataset (J4), computed as tag + union +
+    pivot — one shuffle however many datasets there are. A NULL group
+    is one row, counted across every dataset."""
     tagged = [
         df.select(F.col(group_col), F.lit(name).alias("__dataset"))
         for name, df in frames.items()
@@ -185,31 +153,6 @@ def per_lang_stats_tables(
         tag_persisted(main, tbl),
         tag_persisted(en_star.orderBy(group_col), tbl),
     )
-
-
-def salted_group_count(
-    df: DataFrame, keys: list[str], n_salts: int = 32, count_col: str = "n"
-) -> DataFrame:
-    """Two-stage skew-safe group count: pre-aggregate on (keys, salt)
-    with a uniform random-ish salt derived from the whole row, then
-    sum the partials per key. Identical result to
-    ``groupBy(keys).count()``; the difference is physical — a hot key's
-    rows spread over ``n_salts`` reducers in stage one instead of
-    landing on a single task.
-
-    For plain counts Spark's map-side partial aggregation usually makes
-    this unnecessary (SURVEY §4); it is the template for skewed
-    aggregations whose partials are NOT map-side combinable
-    (collect_set, exact distinct counts per key) and documents the
-    salting lever the 100 TB posture calls for.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
-    partial = (
-        df.withColumn("__salt", salt)
-        .groupBy(*keys, "__salt")
-        .agg(F.count(F.lit(1)).alias("__partial"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__partial").alias(count_col))
 
 
 def percentile_stats(

@@ -40,7 +40,6 @@ def asof_join(
     order_col: str | None = None,
     tolerance: int | None = None,
     prefix: str = "matched_",
-    salt_hot_keys: int | None = None,
 ) -> DataFrame:
     """For each left row, attach the payload of the LATEST right row
     with the same ``keys`` and ``right.ts <= left.ts`` (inclusive;
@@ -61,22 +60,6 @@ def asof_join(
     ``tolerance`` (same units as ``ts_col``): matches older than
     ``left.ts - tolerance`` are nulled out — the "don't join across a
     session gap" guard every feature-store as-of join needs.
-
-    ``salt_hot_keys=N`` — the skew escape hatch. The default plan puts
-    each key's full timeline in ONE window task; a pathologically hot
-    key (one user = half the rows) serializes into a single sort. With
-    ``N`` set, ``ts_col`` (which must then be numeric) is range-split
-    into N equal slices and the fill-forward window runs per
-    ``(key, slice)`` — N-way parallel even for a single-key frame. A
-    slice's leading left rows find their match through a CARRY-IN: the
-    latest right row of every earlier slice, computed as a per-slice
-    ``max(struct(ts, ord, match))`` aggregate (same (ts, ord) order the
-    window uses) folded over the slice index — at most N rows per key,
-    so the boundary pass is never itself skewed. Identical output;
-    price is a second shuffle of the unioned frame (join with the
-    carry map on ``(keys, slice)``) plus a 1-row min/max aggregate to
-    place the slice boundaries. Worth it only when a key is hot enough
-    to blow a task's sort budget.
     """
     order_col = order_col or payload_cols[0]
     match_struct = F.struct(
@@ -102,67 +85,14 @@ def asof_join(
     )
     u = l.unionByName(r, allowMissingColumns=True)
 
-    def _fill_forward(df: DataFrame, part_cols: list[str]):
-        w = (
-            Window.partitionBy(*part_cols)
-            .orderBy(F.col(ts_col).asc(), F.col("__side").asc(), F.col("__ord").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return F.last("__match", ignorenulls=True).over(w)
-
-    if salt_hot_keys is None:
-        # compute the window BEFORE dropping right rows — filtering
-        # first would hide the right side from the window frame
-        out = u.withColumn("__m", _fill_forward(u, keys))
-    else:
-        # the salted path slices on integer `div` arithmetic, so it
-        # requires an integral ts (the unsalted path accepts any
-        # orderable numeric). Fail loudly instead of emitting a long
-        # literal like `123.5L` that dies at SQL analysis.
-        ts_type = dict(u.dtypes)[ts_col]
-        if ts_type not in ("tinyint", "smallint", "int", "bigint"):
-            raise TypeError(
-                f"salt_hot_keys requires an integral ts column; {ts_col} "
-                f"is {ts_type} — cast to epoch integers first or use the "
-                "unsalted path"
-            )
-        # bounded 1-row aggregate: slice boundaries for the range split
-        lo, hi = u.agg(F.min(ts_col), F.max(ts_col)).first()
-        width = max(1, ((hi or 0) - (lo or 0)) // salt_hot_keys + 1)
-        u = u.withColumn(
-            "__slice", F.expr(f"({ts_col} - {lo or 0}L) div {width}L")
-        )
-        in_slice = _fill_forward(u, [*keys, "__slice"])
-        # equal ts => equal slice, so every right row in an earlier
-        # slice satisfies ts < any left ts of this slice: the carry-in
-        # is unconditionally valid, and an in-slice match (ts >= slice
-        # start) always beats it — coalesce, not a comparison.
-        best = F.max(
-            F.struct(F.col(ts_col).alias("__ts"), "__ord", "__match")
-        ).alias("__best")
-        slice_last = (
-            u.where(F.col("__side") == 0).groupBy(*keys, "__slice").agg(best)
-        )
-        w_prev = (
-            Window.partitionBy(*keys)
-            .orderBy("__slice")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry = (
-            u.select(*keys, "__slice")
-            .distinct()
-            .join(slice_last, [*keys, "__slice"], "left")
-            .select(
-                *keys, "__slice", F.max("__best").over(w_prev).alias("__carry")
-            )
-        )
-        out = (
-            u.withColumn("__in_slice", in_slice)
-            .join(carry, [*keys, "__slice"], "left")
-            .withColumn(
-                "__m", F.coalesce(F.col("__in_slice"), F.col("__carry")["__match"])
-            )
-        )
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(F.col(ts_col).asc(), F.col("__side").asc(), F.col("__ord").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # compute the window BEFORE dropping right rows — filtering first
+    # would hide the right side from the window frame
+    out = u.withColumn("__m", F.last("__match", ignorenulls=True).over(w))
     matched = F.col("__m")
     if tolerance is not None:
         matched = F.when(

@@ -45,15 +45,9 @@ def filter_to_top_k(
     group_cols: list[str],
     value_col: str,
     k: int,
-    dim: DataFrame | None = None,
 ) -> DataFrame:
-    """Keep only rows whose value is in the group's top-k (J2 semi-join).
-
-    ``dim`` lets callers reuse / remap a precomputed top-k dimension (the
-    reference remaps ``en-*`` langs onto the ``en`` top-k before this
-    join, DbpediaDgraphSparkApp.scala:133-135).
-    """
-    if dim is None:
-        dim = top_k_per_group(df, group_cols, value_col, k)
-    dim = dim.select(*group_cols, value_col)
+    """Keep only rows whose value is in the group's top-k (J2 semi-join)."""
+    dim = top_k_per_group(df, group_cols, value_col, k).select(
+        *group_cols, value_col
+    )
     return df.join(F.broadcast(dim), [*group_cols, value_col], "left_semi")

@@ -50,8 +50,9 @@ def corpus_diff(
     100 TB shape: content hashes are narrow per-side projections
     (scan-speed, 8-byte hash instead of the text through the join);
     ONE id-keyed full-outer shuffle join; no UDFs, no collects. Both
-    sides shuffle-partition by the same id key, so a bucketed layout
-    (sources/bucketed.py) makes the join Exchange-free."""
+    sides shuffle-partition by the same id key, so a catalog table
+    bucketed by id (``bucketBy`` + ``saveAsTable``) makes the join
+    Exchange-free."""
     def side(df: DataFrame, h: str) -> DataFrame:
         return df.select(
             F.col(id_col).alias("_id"),

@@ -467,14 +467,13 @@ def stream_near_dup_batch(
     Scale shape: state grows by survivors only and is read once per
     batch; the cross join is banded; within-batch work is
     micro-batch-sized."""
-    from pyspark.errors import AnalysisException
-
     from dgraph_dbpedia_spark.operators.dedup import (
         _simhash_chunks,
         near_dup_filter,
         simhash,
         simhash_banded_pairs,
     )
+    from dgraph_dbpedia_spark.sources.parquet import fs_exists
 
     if not 0 <= max_hamming <= 3:  # the 4-band pigeonhole bound;
         # validate before marking any persist
@@ -488,35 +487,12 @@ def stream_near_dup_batch(
     sh = simhash(batch, text_col, id_col).persist()
     dup_ids = None
     try:
-        try:
+        # no state table yet = the first micro-batch; an EXISTING state
+        # that cannot be read fails the batch loudly in the read, or
+        # near-dups of registered docs would silently reach both the
+        # sink and the state table
+        if fs_exists(spark, state_dir):
             state = spark.read.parquet(state_dir)
-            has_state = True
-        except AnalysisException as e:
-            # ONLY path-not-found (the first micro-batch) may be
-            # swallowed — a corrupt/unreadable EXISTING state must fail
-            # the batch loudly, or near-dups of registered docs would
-            # silently reach both the sink and the state table. Match
-            # the stable error CLASS first (getCondition, falling back
-            # to the deprecated getErrorClass); the message substrings
-            # are only a last resort for builds predating error classes
-            cond = None
-            for attr in ("getCondition", "getErrorClass"):
-                fn = getattr(e, attr, None)
-                if fn is not None:
-                    try:
-                        cond = fn()
-                    except Exception:
-                        cond = None
-                    if cond:
-                        break
-            msg = str(e)
-            if cond != "PATH_NOT_FOUND" and not (
-                cond is None
-                and ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg)
-            ):
-                raise
-            has_state = False
-        if has_state:
             bb = sh.select(
                 F.col(id_col),
                 F.col("simhash"),

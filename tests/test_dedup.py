@@ -198,38 +198,16 @@ def test_decontaminate_short_doc_whole_text_shingle(spark):
     assert flagged == {1}
 
 
-def test_dedup_clusters_converges_in_exactly_max_iter(spark):
-    """A chain needing exactly max_iter change-rounds must be accepted
-    (the confirmation round doesn't consume the budget), and max_iter=0
-    works on edgeless graphs."""
-    from dgraph_dbpedia_spark.operators.dedup import dedup_clusters
-
-    docs = spark.createDataFrame([(i,) for i in range(4)], ["doc_id"])
-    chain = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["a", "b"])
-    out = {r["doc_id"]: r["cluster_id"]
-           for r in dedup_clusters(docs, chain, max_iter=3).collect()}
-    assert out == {0: 0, 1: 0, 2: 0, 3: 0}
-    empty_pairs = spark.createDataFrame([], "a long, b long")
-    out0 = {r["doc_id"]: r["cluster_id"]
-            for r in dedup_clusters(docs, empty_pairs, max_iter=0).collect()}
-    assert out0 == {i: i for i in range(4)}
-
-
 def test_dedup_clusters_star_ignores_non_doc_pair_ids(spark):
     """Stale pairs referencing ids absent from docs must not leak into
-    cluster ids (matches label propagation's behavior)."""
-    from dgraph_dbpedia_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-    )
+    cluster ids."""
+    from dgraph_dbpedia_spark.operators.dedup import dedup_clusters_star
 
     docs = spark.createDataFrame([(5,), (7,)], ["doc_id"])
     pairs = spark.createDataFrame([(5, 7), (1, 5)], ["a", "b"])  # 1 not a doc
     star = {r["doc_id"]: r["cluster_id"]
             for r in dedup_clusters_star(docs, pairs).collect()}
-    prop = {r["doc_id"]: r["cluster_id"]
-            for r in dedup_clusters(docs, pairs).collect()}
-    assert star == prop == {5: 5, 7: 5}
+    assert star == {5: 5, 7: 5}
 
 
 def _cached_rdd_ids(spark) -> set[int]:
@@ -261,23 +239,19 @@ def test_release_local_checkpoint_frees_blocks(spark):
 
 def test_dedup_clusters_rounds_release_checkpoints(spark):
     """Eager per-round checkpointing must not accumulate one cached
-    frame per round: a 10-node chain runs ~9 label-propagation rounds
-    (and several star rounds), yet at most the final result-backing
-    checkpoint may remain cached afterwards."""
-    from dgraph_dbpedia_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-    )
+    frame per round: a 10-node chain runs several star rounds, yet at
+    most the final result-backing checkpoint may remain cached
+    afterwards."""
+    from dgraph_dbpedia_spark.operators.dedup import dedup_clusters_star
 
     docs = spark.createDataFrame([(i,) for i in range(10)], ["doc_id"])
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["a", "b"]
     )
-    for op in (dedup_clusters, dedup_clusters_star):
-        before = _n_cached_rdds(spark)
-        out = op(docs, chain)
-        assert {r["cluster_id"] for r in out.collect()} == {0}
-        assert _n_cached_rdds(spark) - before <= 1, op.__name__
+    before = _n_cached_rdds(spark)
+    out = dedup_clusters_star(docs, chain)
+    assert {r["cluster_id"] for r in out.collect()} == {0}
+    assert _n_cached_rdds(spark) - before <= 1
 
 
 def test_rolling_shingle_hash_duckdb_bit_equal(spark):
@@ -422,11 +396,10 @@ def test_dedup_corpus_transitive_chain(spark):
 
 def test_dedup_corpus_clusterer_passthrough(spark):
     """dedup_corpus's component step is the star contraction: it
-    collapses a chain whose diameter exceeds label propagation's
-    default max_iter."""
+    collapses a long chain to one survivor."""
     from dgraph_dbpedia_spark.operators.dedup import dedup_corpus
 
-    n = 30  # chain 0-1-...-29: diameter 29 > dedup_clusters default 25
+    n = 30  # chain 0-1-...-29: diameter 29
     docs = spark.createDataFrame(
         [(i, f"text {i}") for i in range(n)], ["doc_id", "text"]
     )

@@ -11,7 +11,6 @@ from dgraph_dbpedia_spark.operators.stats import (
     dataset_counts,
     datasets_counts,
     rollup_group,
-    stats_table,
     stats_table_pivot,
 )
 
@@ -119,13 +118,13 @@ def test_datasets_counts_job_count(spark):
 
 
 def test_stats_table_fold_and_pivot_agree(spark):
+    """The pivot yields the J4 full-outer fold's table: every group of
+    any dataset, a missing cell reads 0."""
     a = spark.createDataFrame([("en",), ("en",), ("de",)], ["lang"])
     b = spark.createDataFrame([("en",), ("vi",)], ["lang"])
-    fold = stats_table({"a": a, "b": b})
     piv = stats_table_pivot({"a": a, "b": b})
-    fold_rows = {r["lang"]: (r["a"], r["b"]) for r in fold.collect()}
     piv_rows = {r["lang"]: (r["a"], r["b"]) for r in piv.collect()}
-    assert fold_rows == piv_rows == {"en": (2, 1), "de": (1, 0), "vi": (0, 1)}
+    assert piv_rows == {"en": (2, 1), "de": (1, 0), "vi": (0, 1)}
 
 
 def test_rollup_group(spark):
@@ -165,23 +164,15 @@ def test_percentile_stats_name_rounding(spark):
 
 def test_stats_table_null_group_merges_like_pivot(spark):
     """A NULL group key present in several datasets must merge into ONE
-    row (null-safe fold), agreeing with the pivot form."""
-    from dgraph_dbpedia_spark.operators.stats import (
-        stats_table,
-        stats_table_pivot,
-    )
-
+    row (the null-safe J4 fold's result)."""
     a = spark.createDataFrame([("en",), (None,)], "lang string")
     b = spark.createDataFrame([(None,), (None,)], "lang string")
     frames = {"d1": a, "d2": b}
-    fold = {r["lang"]: (r["d1"], r["d2"]) for r in stats_table(frames).collect()}
     piv = {
         r["lang"]: (r["d1"], r["d2"])
         for r in stats_table_pivot(frames).collect()
     }
-    assert fold == piv
-    assert fold[None] == (1, 2)
-    assert fold["en"] == (1, 0)
+    assert piv == {None: (1, 2), "en": (1, 0)}
 
 
 def test_rollup_group_empty_pred_and_float_columns(spark):

@@ -306,23 +306,6 @@ def test_near_dup_pairs_release_unpersists(spark, vectors):
     assert release(out) == 0  # idempotent
 
 
-def test_cosine_topk_arrow_matches_jvm(spark):
-    """The Arrow/numpy production variant returns the same ranking and
-    (rounded) sims as the JVM-native brute-force path on sf0.001."""
-    from dgraph_dbpedia_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_arrow,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
-    cand = emb.where(F.col("vec_id") > 0)
-    jvm = cosine_topk(cand, q, k=10).collect()
-    arrow = cosine_topk_arrow(cand, q, k=10).collect()
-    assert [r["vec_id"] for r in arrow] == [r["vec_id"] for r in jvm]
-    assert all(abs(a["sim"] - j["sim"]) < 1e-4 for a, j in zip(arrow, jvm))
-
-
 def test_probe_buckets_sequence_properties():
     """Multi-probe sequence: starts at the query's own bucket, unique
     buckets, correct length, and the first perturbation flips exactly
@@ -403,13 +386,10 @@ def test_lsh_single_probe_subset_of_multiprobe(spark):
     assert one <= four
 
 
-def test_cosine_topk_arrow_query_col_and_zero_norm(spark):
-    """The arrow twin must honor query_col on multi-column query frames
-    and rank zero-norm vectors last (NULL), like the native twin."""
-    from dgraph_dbpedia_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_arrow,
-    )
+def test_cosine_topk_query_col_and_zero_norm(spark):
+    """cosine_topk must honor query_col on multi-column query frames
+    and rank zero-norm vectors last (NULL sim)."""
+    from dgraph_dbpedia_spark.operators.similarity import cosine_topk
 
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],
@@ -418,12 +398,10 @@ def test_cosine_topk_arrow_query_col_and_zero_norm(spark):
     query = spark.createDataFrame(
         [(99, [1.0, 0.0])], ["qid", "q"]  # vector NOT the first column
     )
-    got = cosine_topk_arrow(emb, query, k=3, query_col="q").collect()
-    want = cosine_topk(emb, query, k=3, query_col="q").collect()
-    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in want]
-    # zero-norm vector is last with NULL sim on both paths
-    assert got[-1]["vec_id"] == 3 and got[-1]["sim"] is None
-    assert want[-1]["sim"] is None
+    got = cosine_topk(emb, query, k=3, query_col="q").collect()
+    assert [r["vec_id"] for r in got] == [1, 2, 3]
+    assert got[0]["sim"] == 1.0
+    assert got[-1]["sim"] is None
 
 
 def test_sessionize_stream_honors_gap(spark, tmp_path):

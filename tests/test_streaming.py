@@ -428,6 +428,24 @@ def test_stream_near_dup_batch_state(spark, tmp_path):
     assert sorted(r["doc_id"] for r in reg.collect()) == [1, 3, 11]
 
 
+def test_stream_near_dup_batch_unreadable_state_raises(spark, tmp_path):
+    """Only a MISSING state dir means the first micro-batch: an existing
+    state that is not a Parquet table must fail the batch, not be
+    treated as empty (near-dups of registered docs would pass)."""
+    from dgraph_dbpedia_spark.streaming.events import stream_near_dup_batch
+
+    state = tmp_path / "state"
+    state.mkdir()
+    (state / "part-00000.parquet").write_bytes(b"not a parquet file")
+    batch = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog today")],
+        ["doc_id", "text"],
+    )
+    with pytest.raises(Exception, match="(?i)parquet"):
+        stream_near_dup_batch(batch, str(state)).collect()
+    assert [f.name for f in state.iterdir()] == ["part-00000.parquet"]
+
+
 def test_stream_near_dup_foreach_batch_end_to_end(spark, tmp_path):
     """Wired into writeStream.foreachBatch over two single-file
     micro-batches: sink receives exactly the survivors the manual

@@ -133,33 +133,6 @@ def test_range_count_matches_brute_force(spark):
         assert got[pid] == want, (pid, k, ts)
 
 
-def test_asof_salted_matches_unsalted_on_hot_key(spark):
-    """Skew hatch: one user owns 50% of all rows (both sides). The
-    range-sliced salted plan must return byte-identical results to the
-    single-window plan — including slice-boundary rows whose match
-    lives in an earlier slice, tie-breaks, and tolerance nulling."""
-    hot_l = [(i, "hot", 10 * i) for i in range(200)]
-    cold_l = [(1000 + i, "u%d" % (i % 37), 10 * i + 3) for i in range(200)]
-    # right rows at uneven times; duplicates at one ts to exercise the
-    # order_col tie-break across a slice boundary
-    hot_r = [(i, "hot", float(i), 40 * i + 5) for i in range(50)]
-    hot_r += [(900, "hot", 9.0, 205), (901, "hot", 9.5, 205)]
-    cold_r = [(2000 + i, "u%d" % (i % 37), float(i), 10 * i) for i in range(50)]
-    left = spark.createDataFrame(hot_l + cold_l, ["event_id", "k", "ts"])
-    right = spark.createDataFrame(hot_r + cold_r, ["m_id", "k", "val", "ts"])
-
-    def run(**kw):
-        out = asof_join(left, right, ["k"], "ts", ["m_id", "val"], **kw)
-        return sorted(tuple(r) for r in out.collect())
-
-    for kw in [{}, {"tolerance": 100}]:
-        plain = run(**kw)
-        salted = run(salt_hot_keys=8, **kw)
-        assert salted == plain
-    # degenerate slicing (more slices than the ts range) still correct
-    assert run(salt_hot_keys=1000) == run()
-
-
 def test_asof_plan_single_shuffle_no_join(spark):
     """The as-of encoding must stay a union + window: no join operator,
     one exchange on the keys (the 100 TB no-explosion guarantee)."""
@@ -169,18 +142,6 @@ def test_asof_plan_single_shuffle_no_join(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_asof_salted_rejects_non_integral_ts(spark):
-    from dgraph_dbpedia_spark.operators.temporal import asof_join
-
-    left = spark.createDataFrame([(1, 1.5)], ["k", "ts"])
-    right = spark.createDataFrame([(1, 1.0, "x")], ["k", "ts", "v"])
-    import pytest as _pytest
-
-    with _pytest.raises(TypeError, match="integral ts"):
-        asof_join(left, right, ["k"], "ts", payload_cols=["v"],
-                  salt_hot_keys=4).collect()
 
 
 def test_asof_join_null_keys_never_match(spark):

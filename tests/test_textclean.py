@@ -3,7 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dgraph_dbpedia_spark.operators.dedup import dedup_clusters
+from dgraph_dbpedia_spark.operators.dedup import dedup_clusters_star
 from dgraph_dbpedia_spark.operators.textclean import (
     clean_text,
     hash_sample,
@@ -73,20 +73,23 @@ def test_dedup_clusters_transitive_chain(spark):
     pairs = spark.createDataFrame(
         [(1, 4), (4, 6), (2, 3)], ["a", "b"]
     )
-    out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(docs, pairs).collect()}
+    out = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup_clusters_star(docs, pairs).collect()
+    }
     assert out[1] == out[4] == out[6] == 1
     assert out[2] == out[3] == 2
     assert out[5] == 5 and out[7] == 7  # singletons label themselves
 
 
 def test_dedup_clusters_long_chain_converges(spark):
-    """Path graph 0-1-2-...-9: worst-case diameter for min-label
-    propagation; must still converge inside max_iter."""
+    """Path graph 0-1-2-...-9 (diameter 9) must converge inside
+    max_iter."""
     docs = spark.createDataFrame([(i,) for i in range(10)], ["doc_id"])
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["a", "b"]
     )
-    out = dedup_clusters(docs, pairs, max_iter=15)
+    out = dedup_clusters_star(docs, pairs, max_iter=15)
     assert set(r["cluster_id"] for r in out.collect()) == {0}
 
 
@@ -98,32 +101,28 @@ def test_dedup_clusters_cap_fails_loud(spark):
     docs = spark.createDataFrame([(i,) for i in range(12)], ["doc_id"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(11)], ["a", "b"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(docs, pairs, max_iter=2)
+        dedup_clusters_star(docs, pairs, max_iter=1)
 
 
-def test_dedup_clusters_star_matches_label_prop(spark):
-    """Star contraction and label propagation must agree on a mixed
-    graph: two multi-node components + singletons."""
-    from dgraph_dbpedia_spark.operators.dedup import dedup_clusters_star
-
+def test_dedup_clusters_star_mixed_graph(spark):
+    """Star contraction on a mixed graph: multi-node components of
+    different shapes, each labeled with its min id, plus singletons."""
     docs = spark.createDataFrame([(i,) for i in range(1, 12)], ["doc_id"])
     pairs = spark.createDataFrame(
         [(1, 4), (4, 6), (2, 3), (3, 9), (9, 10), (7, 8)], ["a", "b"]
     )
-    lp = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(docs, pairs).collect()}
     st = {
         r["doc_id"]: r["cluster_id"]
         for r in dedup_clusters_star(docs, pairs).collect()
     }
-    assert lp == st
+    assert st == {
+        1: 1, 4: 1, 6: 1, 2: 2, 3: 2, 9: 2, 10: 2, 7: 7, 8: 7, 5: 5, 11: 11,
+    }
 
 
 def test_dedup_clusters_star_long_chain_log_rounds(spark):
-    """Path graph of 200 nodes: diameter 199 — label propagation at
-    max_iter=25 would raise; star contraction must finish in <=12
-    alternation rounds (O(log^2 n) bound)."""
-    from dgraph_dbpedia_spark.operators.dedup import dedup_clusters_star
-
+    """Path graph of 200 nodes (diameter 199): star contraction must
+    finish in <=12 alternation rounds (O(log^2 n) bound)."""
     n = 200
     docs = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["a", "b"])

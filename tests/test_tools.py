@@ -1,7 +1,9 @@
-"""Every engine name a script in ``tools/`` imports, or reaches through a
-module alias (``T.write_rdf``), still exists — so deleting or renaming
-engine code breaks here instead of silently rotting a tool. Spark-free:
-it imports modules and starts no session."""
+"""Every engine name a script in ``tools/``, ``bench.py`` or
+``__spark_entry__.py`` imports, or reaches through a module alias
+(``T.write_rdf``), still exists — so deleting or renaming engine code
+breaks here instead of silently rotting a script. Function-local
+imports count too: they otherwise fail only when that function runs.
+Spark-free: it imports modules and starts no session."""
 
 from __future__ import annotations
 
@@ -11,7 +13,12 @@ import pathlib
 
 import pytest
 
-TOOLS = sorted((pathlib.Path(__file__).resolve().parents[1] / "tools").glob("*.py"))
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+SCRIPTS = [
+    *sorted((ROOT / "tools").glob("*.py")),
+    ROOT / "bench.py",
+    ROOT / "__spark_entry__.py",
+]
 ENGINE = ("dgraph_dbpedia_spark", "__spark_entry__")
 
 
@@ -73,7 +80,7 @@ def test_engine_refs_sees_imports_and_alias_attributes():
     ]
 
 
-@pytest.mark.parametrize("tool", TOOLS, ids=lambda p: p.name)
+@pytest.mark.parametrize("tool", SCRIPTS, ids=lambda p: p.name)
 def test_tool_engine_names_exist(tool):
     missing = []
     for path in engine_refs(tool.read_text()):
