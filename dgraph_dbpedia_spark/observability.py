@@ -21,6 +21,12 @@ seven dataset sinks plus ``types`` and ``external_ids``,
 and ``transform.tail``. Operators stay unlabelled, so a caller's own
 job group holds for them. :func:`mark` and :func:`phase_counters`
 attribute the work between two points to those names.
+
+Compiles. :func:`codegen_compiles` counts the generated classes
+(whole-stage code and expression projections) the JVM has compiled.
+Its difference across a pass is a work counter that does not move with
+machine state: a warm pass over plans already compiled adds ~nothing
+(see ``session.CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -151,6 +157,16 @@ def phase_counters(spark: SparkSession, since: Mark) -> dict[str | None, PhaseCo
     for name, (start, end) in spans.items():
         out[name].wall_s = max(end - start, 0) / 1e3
     return out
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled so far (Janino compilations, Spark's
+    ``CodegenMetrics``); a lookup that hits the generated-code cache does
+    not count. The count is JVM-wide: it spans every session and thread
+    of the process and is not attributed to phases or job groups — take
+    the difference across a window that runs nothing else."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
 
 
 @dataclass

@@ -669,9 +669,10 @@ def dedup_clusters_star(
     the star invariant (a converged edge set is precisely the
     child->root star forest, which the final join consumes directly).
     ``max_iter`` counts rounds including the one that confirms
-    convergence; hitting a positive ``max_iter`` raises
-    ``RuntimeError`` rather than returning partial components that
-    would silently under-merge clusters.
+    convergence; hitting it raises ``RuntimeError`` rather than
+    returning partial components that would silently under-merge
+    clusters, and ``max_iter < 1`` (no round, so one-hop labels)
+    raises ``ValueError``.
 
     CONTRACT: ``docs`` must be deterministic under re-evaluation (any
     scan, filter, or join is; an unseeded ``.sample()`` / unordered
@@ -680,6 +681,9 @@ def dedup_clusters_star(
     the edge set itself is checkpoint-rooted. Wrap a nondeterministic
     source in ``localCheckpoint()`` before calling.
     """
+    if max_iter < 1:
+        raise ValueError(f"dedup_clusters_star needs max_iter >= 1, got {max_iter}")
+
     def canon(e: DataFrame) -> DataFrame:
         # undirected edge set, one canonical (u > v) row per pair
         return (
@@ -776,7 +780,7 @@ def dedup_clusters_star(
             converged = True
             break
         prev = cur
-    if not converged and max_iter > 0:
+    if not converged:
         release_local_checkpoint(last_cp)
         raise RuntimeError(
             f"dedup_clusters_star did not converge in {max_iter} rounds — "

@@ -387,11 +387,13 @@ def write_rdf(
     path: str,
     persist: bool = True,
     on_counted=None,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Partitioned sorted gzip text sink for RDF lines (S6,
     DbpediaDgraphSparkApp.scala:496-516): partition dirs by ``lang``,
     file-split by ``(p, s)``, in-file sort by ``o``, projection to the
-    N-Triples line at write time. Returns the read-back frame.
+    N-Triples line at write time. Returns the read-back frame and the
+    number of lines written (the sink's count job, so a caller needs no
+    re-read of the gzip files to count them).
 
     The frame is persisted for the duration of the sink because three
     actions consume it — the isEmpty guard (P12), the range
@@ -466,7 +468,7 @@ def write_rdf(
             on_counted()
         if persist:
             df.unpersist()
-    return read_rdf(spark, path)
+    return read_rdf(spark, path), n
 
 
 def read_rdf(spark: SparkSession, path: str) -> DataFrame:
@@ -603,7 +605,9 @@ def transform(
             # Measured-and-rejected variants (do not re-try without re-measuring):
             #  - overlapping this materialization with the dim-independent sinks
             #    stretched the dims critical path ~40% under contention (21.2s
-            #    vs 19.3s total at 60k bench subjects);
+            #    vs 19.3s total at 60k bench subjects), and gave no gain on
+            #    warm passes that no longer recompile their generated code
+            #    either (9.8/9.2s vs 9.2/8.6s, perfbench corpus, 4 vCPUs);
             #  - persisting the typed infobox frame for its four consumers lost
             #    to Catalyst column pruning — the cache materializes all columns
             #    while each uncached consumer reads a 2-column pruned subset
@@ -737,7 +741,7 @@ def transform(
                     pre["skos_categories"].select("s", "lang"),
                 )
 
-                def _types_after_counts() -> DataFrame | None:
+                def _types_after_counts() -> tuple[DataFrame, int] | None:
                     # park until every sink's count job has materialized its
                     # retained cache (write_rdf releases the semaphore exactly
                     # once, on any failure too, so a failed sink still
@@ -824,14 +828,15 @@ def transform(
                 for _ in range(n_sinks):
                     sink_counts_done.release()
                 failed[0].result()
-            outputs: dict[str, DataFrame] = {n: f.result() for n, f in futures.items()}
+            written = {n: f.result() for n, f in futures.items()}
+            outputs: dict[str, DataFrame] = {n: frame for n, (frame, _) in written.items()}
             for f in schema_futures:
                 f.result()
             if xid_future is not None:
-                outputs["external_ids"] = xid_future.result()
+                outputs["external_ids"] = xid_future.result()[0]
 
         if types_future is not None:
-            outputs["types"] = types_future.result()
+            outputs["types"] = types_future.result()[0]
 
         if cfg.print_stats:
             with phase(spark, "transform.tail"):
@@ -851,10 +856,11 @@ def transform(
                 # Reuse the count the stats job already computed for exactly
                 # this frame — re-running it here was a second full scan +
                 # semi-join over the largest dataset at the end of the
-                # pipeline.
+                # pipeline. The numerator is the sink's count of the lines
+                # it wrote, so the gzip files are not read back for it.
                 k = cfg.top_infobox_properties_per_lang
                 denom_key = f"top {k} infobox_properties" if k else "infobox_properties"
-                coverage = outputs["infobox_properties"].count() * 100 // max(
+                coverage = written["infobox_properties"][1] * 100 // max(
                     stats_counts[denom_key]["triples"], 1
                 )
                 print(f"cleaned-up infoboxes cover {coverage}% of original rows")

@@ -16,6 +16,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Entries of Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``,
+#: default 100). A pass compiles a few hundred distinct classes, so at 100
+#: every class is evicted before the next pass can reuse it and a warm
+#: pass compiles as much as a cold one. Measured with
+#: ``observability.codegen_compiles`` on 4 vCPUs, 2g driver (perfbench:
+#: pipeline = ingest + transform of 5k subjects, registry = 14 rows at
+#: sf0.01), classes compiled per warm pass, 100 -> 1000 entries: pipeline
+#: 321 -> 0-4 (cold 327 / 313), registry 342-426 -> 10-52. Medians of
+#: alternating runs: registry (10 pairs) 0.995 -> 1.168 rows/s, pipeline
+#: (6 pairs) 7480 -> 8749 triples/s, CPU per item -13% / -14%. Plans and
+#: outputs are unchanged.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def build_session(
     app_name: str = "dgraph_dbpedia_spark",
@@ -80,6 +93,11 @@ def build_session(
         # Only effective when this process launches the JVM (CLI,
         # tools/pipeline_bench.py) — a pre-existing JVM keeps its GC
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        # keep every class a pass generates compiled (CODEGEN_CACHE_ENTRIES).
+        # A static SQL conf: the cache is sized once per JVM, so this is
+        # only effective when this process builds the first session — a
+        # pre-existing session keeps its cache
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

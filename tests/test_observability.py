@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dgraph_dbpedia_spark.observability import (
+    codegen_compiles,
     collect_spill_metrics,
     mark,
     phase,
@@ -29,6 +30,20 @@ def test_spill_metrics_from_status_store(spark):
     assert m.stages > 0
     assert m.memory_bytes_spilled >= 0
     assert "GB" in m.report()
+
+
+def test_codegen_compiles_counts_compiles_not_cache_hits(spark):
+    """A plan no other test runs (its integer literals are inlined into
+    the generated code) compiles at least one class; running it again
+    finds every class in the generated-code cache and compiles none."""
+
+    def run() -> int:
+        before = codegen_compiles(spark)
+        spark.range(64).selectExpr("id * 7919 + 104729 AS v").agg(F.sum("v")).collect()
+        return codegen_compiles(spark) - before
+
+    assert run() >= 1
+    assert run() == 0
 
 
 def test_phase_names_jobs_and_restores_caller_group(spark):

@@ -234,9 +234,11 @@ def test_write_rdf_empty_frame_clears_stale_output(spark, tmp_path):
     full = spark.createDataFrame(
         [("<a>", "<p>", "<b>", "en")], ["s", "p", "o", "lang"]
     )
-    assert write_rdf(spark, full, out).count() == 1
+    frame, n = write_rdf(spark, full, out)
+    assert n == frame.count() == 1
     empty = spark.createDataFrame([], TRIPLE_SCHEMA)
-    assert write_rdf(spark, empty, out).count() == 0
+    frame, n = write_rdf(spark, empty, out)
+    assert n == frame.count() == 0
 
 
 def test_write_rdf_all_rows_filtered_reads_back_empty(spark, tmp_path):
@@ -251,15 +253,15 @@ def test_write_rdf_all_rows_filtered_reads_back_empty(spark, tmp_path):
     good = spark.createDataFrame(
         [("<s>", "<p>", "<o>", "en")], ["s", "p", "o", "lang"]
     )
-    out1 = write_rdf(spark, good, path)
-    assert out1.count() == 1  # a previous run left real files
+    out1, n1 = write_rdf(spark, good, path)
+    assert n1 == out1.count() == 1  # a previous run left real files
 
     bad = spark.createDataFrame(
         [("<s>", "<p@bad>", "<o>", "en"), ("<s2>", "<p~bad>", "<o2>", "en")],
         ["s", "p", "o", "lang"],
     )
-    out2 = write_rdf(spark, bad, path)
-    assert out2.count() == 0  # no crash, AND the old files are gone
+    out2, n2 = write_rdf(spark, bad, path)
+    assert n2 == out2.count() == 0  # no crash, AND the old files are gone
     assert read_rdf(spark, path).count() == 0
 
 

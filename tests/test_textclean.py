@@ -104,6 +104,19 @@ def test_dedup_clusters_cap_fails_loud(spark):
         dedup_clusters_star(docs, pairs, max_iter=1)
 
 
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_dedup_clusters_star_rejects_no_rounds(spark, max_iter):
+    """max_iter < 1 runs no contraction round: on the chain 0-1-2-3 that
+    would return one-hop labels ({2: 1, 3: 2}) as if they were the
+    components. It must raise instead; max_iter=15 labels the chain 0."""
+    docs = spark.createDataFrame([(i,) for i in range(4)], ["doc_id"])
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["a", "b"])
+    with pytest.raises(ValueError, match="max_iter >= 1"):
+        dedup_clusters_star(docs, pairs, max_iter=max_iter)
+    out = dedup_clusters_star(docs, pairs, max_iter=15)
+    assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == {0: 0, 1: 0, 2: 0, 3: 0}
+
+
 def test_dedup_clusters_star_mixed_graph(spark):
     """Star contraction on a mixed graph: multi-node components of
     different shapes, each labeled with its min id, plus singletons."""

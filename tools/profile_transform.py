@@ -1,6 +1,8 @@
 """Per-phase breakdown of the transform pipeline: generates the bench
 corpus, ingests it, runs one untimed warm-up transform, then prints the
-phase counters (``observability.phase_counters``) of each timed run.
+phase counters (``observability.phase_counters``) of each timed run. For
+every run, the warm-up included, it prints the JVM-wide count of
+generated classes compiled (``observability.codegen_compiles``).
 
 Usage: python tools/profile_transform.py [n_subjects] [--iters N]
 """
@@ -16,7 +18,7 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dgraph_dbpedia_spark.benchgen import LANGS, generate_ttl_corpus
-from dgraph_dbpedia_spark.observability import mark, phase_counters
+from dgraph_dbpedia_spark.observability import codegen_compiles, mark, phase_counters
 from dgraph_dbpedia_spark.plans import transform as T
 from dgraph_dbpedia_spark.plans.ingest import ingest
 from dgraph_dbpedia_spark.session import build_session
@@ -38,11 +40,13 @@ def main() -> None:
         generate_ttl_corpus(spark, f"{work}/ttl", args.n_subjects)
         ingest(spark, f"{work}/ttl", f"{work}/parquet", print_stats=False)
         for run in range(args.iters + 1):
-            since = mark(spark)
+            since, compiles = mark(spark), codegen_compiles(spark)
             T.transform(spark, f"{work}/parquet", f"{work}/rdf", languages=list(LANGS), cfg=cfg)
+            label = f"run {run}" if run else "warm-up"
+            print(f"{label} (subjects={args.n_subjects}, "
+                  f"classes compiled={codegen_compiles(spark) - compiles})")
             if run == 0:
-                continue  # warm-up
-            print(f"run {run} (subjects={args.n_subjects})")
+                continue
             print(f"  {'phase':36s} {'jobs':>5s} {'tasks':>6s} {'wall_s':>7s} {'cpu_s':>7s} "
                   f"{'shuffle_MB':>10s} {'spill_MB':>8s}")
             for name, c in sorted(phase_counters(spark, since).items(), key=lambda kv: str(kv[0])):
