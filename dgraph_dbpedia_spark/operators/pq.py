@@ -14,12 +14,12 @@ quantization half; composing with the package's IVF serve path
 
 Engine mapping (all JVM-native, oracle-replayable):
 
-- training reuses the package's deterministic Lloyd discipline
-  (:func:`..similarity.ivf_train`): lowest-id seeds, per-iteration
-  round-``nd`` means, empty clusters keep their previous centroid —
-  but assigns by ROUND-6 L2 DISTANCE (PQ reconstructs magnitudes;
-  cosine assignment would collapse every scaled copy of a direction
-  into one code);
+- training runs the package's ONE deterministic Lloyd loop
+  (:func:`..similarity._lloyd_refine`, which ``ivf_train`` also runs):
+  lowest-id seeds, per-iteration round-``nd`` means, empty clusters
+  keep their previous centroid — but assigns by ROUND-6 L2 DISTANCE
+  (PQ reconstructs magnitudes; cosine assignment would collapse every
+  scaled copy of a direction into one code);
 - encoding is a pure projection against ONE broadcast codebook row;
 - ADC scoring is a pure projection against ONE broadcast per-query
   table row — the only shuffle anywhere is training's bounded
@@ -36,7 +36,11 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dgraph_dbpedia_spark.operators.similarity import _dot
+from dgraph_dbpedia_spark.operators.similarity import (
+    _capped_collect,
+    _dot,
+    _lloyd_refine,
+)
 
 
 def _l2_sq(a: Column | str, b: Column | str) -> Column:
@@ -105,14 +109,12 @@ def pq_train(
     over the scan, all ``m`` round-6 L2 broadcast folds in one task),
     and the means are ONE partially aggregable ``(j, cid, pos)``
     shuffle bounded by ``m x k_sub x dims/m`` rows per map partition.
-    The r11 version ran ``m`` independent
-    :func:`..similarity._lloyd_refine` loops — ``m`` corpus scans per
-    iteration (24.4 s at the 200k x 64d / m=8 scale point); at 100 TB
-    the fuse divides training's corpus reads by ``m`` (VERDICT r11
-    #4). Seed rule, rounded means, empty-cluster coalesce and the
-    per-iteration localCheckpoint/release choreography are unchanged
-    from ``_lloyd_refine``; training runs on DENSE cids from the start
-    (dense rank preserves seed-id order, so every L2-asc/cid-asc
+    The iteration is the package's ONE Lloyd loop
+    (:func:`..similarity._lloyd_refine`, keyed by ``(j, cid)``: rounded
+    means, empty-cluster coalesce, per-iteration localCheckpoint and
+    release), with the fused assignment passed in. Seeds and their
+    width validation stay here; training runs on DENSE cids from the
+    start (dense rank preserves seed-id order, so every L2-asc/cid-asc
     tie-break — and therefore every trained value — is bit-identical
     to the per-subspace form the DuckDB oracle replays).
 
@@ -130,10 +132,6 @@ def pq_train(
     and the DuckDB replay — match the fold's."""
     from pyspark.sql import Window
 
-    from dgraph_dbpedia_spark.operators.cachectl import (
-        release_local_checkpoint,
-    )
-
     sub = _validate_pq(dims, m, k_sub)
     e = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
@@ -141,7 +139,7 @@ def pq_train(
     # fused seeds: ONE lowest-k_sub-ids scan (the ivf_seed_centroids
     # rule applied once, not per subspace); dense cid = seed-id rank.
     # The Window is over the k_sub-row limit, not the corpus.
-    cent = (
+    seeds = (
         e.orderBy(id_col)
         .limit(k_sub)
         .select(
@@ -173,14 +171,13 @@ def pq_train(
         .select("j", "cid", "c", "w")
         .localCheckpoint()
     )
-    last_cp = cent
     # loud seed validation (one bounded m x k_sub read of the frame
     # just checkpointed — each iteration re-reads it anyway): a NULL,
     # short, or over-long vector among the k_sub lowest ids would
     # otherwise train a DEGENERATE codebook — an opaque width error
-    # inside _collect_codebooks, or a dims-prefix of a wider vector
+    # inside _read_codebooks, or a dims-prefix of a wider vector
     # (r12 review: a poisoned seed is caller error)
-    seed_rows = cent.collect()
+    seed_rows = seeds.collect()
     if not seed_rows:
         raise ValueError(
             "pq_train: empty corpus — no vectors to seed centroids"
@@ -193,17 +190,18 @@ def pq_train(
                 f"{r['w']}) — the lowest-id seed vectors must be "
                 f"complete {dims}-dim vectors"
             )
-    cent = cent.select("j", "cid", "c")
 
-    for _ in range(n_iter):
+    def assign(cent: DataFrame) -> DataFrame:
         # ONE corpus pass for all m subspace assignments, emitted
         # through the inline(array(struct)) barrier. Per-iteration
         # bounded collect of the m x k_sub frame just checkpointed (an
         # X6 read, never a corpus job); the codes column binds in its
         # OWN select so the m get()s below reference ONE Arrow eval,
         # not m CollapseProject-duplicated kernel runs
-        enc = encode_codes_arrow(_collect_codebooks(cent, m, sub))
-        asg = e.select("_v", enc(F.col("_v")).alias("_codes")).select(
+        enc = encode_codes_arrow(
+            _read_codebooks(cent, "j", m, sub, "subspace")
+        )
+        return e.select("_v", enc(F.col("_v")).alias("_codes")).select(
             F.inline(
                 F.array(
                     *[
@@ -217,28 +215,10 @@ def pq_train(
                 )
             )
         )
-        means = (
-            asg.select("j", "cid", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("j", "cid", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("j", "cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    # + 0.0 folds IEEE negative zero to +0.0 (engines
-                    # disagree on round(-0.00001, 4)'s sign bit)
-                    lambda s: F.round(s["m"], round_decimals) + F.lit(0.0),
-                ).alias("c2")
-            )
-        )
-        cent = (
-            cent.join(means, ["j", "cid"], "left")
-            .select("j", "cid", F.coalesce("c2", "c").alias("c"))
-            .localCheckpoint()
-        )
-        release_local_checkpoint(last_cp)
-        last_cp = cent
-    return cent
+
+    return _lloyd_refine(
+        seeds, ["j", "cid"], n_iter, round_decimals, "sv", assign
+    )
 
 
 def _codebook_row(codebooks: DataFrame) -> DataFrame:
@@ -250,61 +230,54 @@ def _codebook_row(codebooks: DataFrame) -> DataFrame:
     )
 
 
-def _collect_codebook_rows(codebooks: DataFrame):
-    """ONE bounded driver read (X6) of the ``(j, cid, c)`` codebook
-    frame — shared by the Arrow encode lane's matrices and the literal
-    decode (ADVICE r15: the reconstruction report used to collect the
-    same bounded frame twice)."""
-    return codebooks.select(
-        "j", "cid", F.col("c").cast("array<double>").alias("c")
-    ).collect()
-
-
-def _dense_codebook_entries(rows, m: int, sub: int) -> list[list[list[float]]]:
-    """Pure-Python dense-cid validation of collected codebook rows
-    (ADVICE r16: the native lane of the reconstruction report needs the
-    contract check, not numpy): per subspace ``j`` in 0..m-1, the sorted
-    centroid lists with cids asserted dense 0..k_sub-1 and width ``sub``.
-    Shared by both encode lanes; numpy matrices are built from the
-    result only on the Arrow lane (:func:`_collect_codebooks`)."""
-    per_j: dict[int, list] = {}
-    for r in rows:
-        per_j.setdefault(r["j"], []).append((r["cid"], list(r["c"])))
-    if sorted(per_j) != list(range(m)):
-        raise ValueError(
-            f"codebooks must cover subspaces 0..{m - 1}, got {sorted(per_j)}"
-        )
-    out = []
-    for j in range(m):
-        ent = sorted(per_j[j])
-        if [cid for cid, _ in ent] != list(range(len(ent))):
-            raise ValueError(
-                f"subspace {j} cids must be dense 0..k_sub-1"
-            )
-        for _, c in ent:
-            if len(c) != sub:
-                raise ValueError(
-                    f"subspace {j} centroid width {len(c)} != {sub}"
-                )
-        out.append([c for _, c in ent])
-    return out
-
-
-def _collect_codebooks(codebooks: DataFrame, m: int, sub: int, rows=None):
-    """Bounded driver read (the X6 pattern) of the ``(j, cid, c)``
-    codebook frame for the Arrow encode lane: per subspace, a
-    ``(k_sub, sub)`` numpy matrix with rows in DENSE cid order (so
-    ``argmin``'s first-min tie equals the native L2-asc-cid-asc
-    rule). ``rows`` substitutes an already-collected
-    :func:`_collect_codebook_rows` result."""
+def _read_codebooks(
+    codebooks: DataFrame, key: str, n_keys: int, width: int, noun: str
+):
+    """THE codebook reader of the PQ/RQ quantizers: ONE capped driver
+    read (:func:`..similarity._capped_collect`) of a ``(key, cid, c)``
+    frame — ``key`` is ``j`` (PQ subspace) or ``lvl`` (RQ stage),
+    ``noun`` names it in errors — then the contract the positional ADC
+    tables and the Arrow kernels rely on, checked on the collected rows
+    so a mismatched frame raises LOUDLY instead of emitting silent NULL
+    codes or sims: keys cover exactly ``0..n_keys-1``, cids are dense
+    ``0..k_sub-1`` with the same ``k_sub`` for every key, and every
+    centroid is ``width`` wide. Returns per key a ``(k_sub, width)``
+    float64 matrix with rows in dense cid order (``argmin``'s first-min
+    tie equals the native L2-asc/cid-asc rule; ``.tolist()`` gives the
+    collected doubles back for literal decodes)."""
     import numpy as np
 
-    if rows is None:
-        rows = _collect_codebook_rows(codebooks)
-    return [
-        np.asarray(cents, dtype=np.float64)
-        for cents in _dense_codebook_entries(rows, m, sub)
-    ]
+    rows = _capped_collect(
+        codebooks.select(
+            key, "cid", F.col("c").cast("array<double>").alias("c")
+        ),
+        "codebooks",
+    )
+    per: dict[int, list] = {}
+    for r in rows:
+        per.setdefault(r[key], []).append((r["cid"], r["c"]))
+    if sorted(per) != list(range(n_keys)):
+        raise ValueError(
+            f"codebooks must cover {noun}s 0..{n_keys - 1}, got "
+            f"{sorted(per)}"
+        )
+    k_sub = len(per[0])
+    out = []
+    for k in range(n_keys):
+        ent = sorted(per[k], key=lambda t: t[0])
+        if [cid for cid, _ in ent] != list(range(k_sub)):
+            raise ValueError(
+                f"{noun} {k} cids must be dense 0..{k_sub - 1} (the "
+                "trainers emit dense cids)"
+            )
+        for cid, c in ent:
+            w = None if c is None else len(c)
+            if w != width:
+                raise ValueError(
+                    f"{noun} {k} cid {cid} centroid width {w} != {width}"
+                )
+        out.append(np.asarray([c for _, c in ent], dtype=np.float64))
+    return out
 
 
 def _l2_codes_np(Xj, C, cnorm):
@@ -475,7 +448,9 @@ def pq_encode(
     (BENCH_SCALE r11). Pinned equal to :func:`_pq_encode_native` by
     pytest."""
     sub = _validate_pq(dims, m, 1)
-    enc = encode_codes_arrow(_collect_codebooks(codebooks, m, sub))
+    enc = encode_codes_arrow(
+        _read_codebooks(codebooks, "j", m, sub, "subspace")
+    )
     return df.select(
         F.col(id_col),
         enc(F.col(vec_col).cast("array<double>")).alias("codes"),
@@ -569,41 +544,11 @@ def pq_topk(
     # SORTED by (j, cid) so entry (j, code) sits at position
     # j * k_sub + code: for every (j, cid), dq = q_j . c and
     # cc = ||c||^2; plus ||q|| — computed once, not per corpus row.
-    # k_sub comes from the bounded codebook frame (m * k_sub rows —
-    # an X6-sized read, never a corpus action). The positional layout
-    # silently assumes DENSE cids 0..k_sub-1 per subspace — a
-    # hand-built or pre-dense-layout codebook frame would otherwise
-    # pass a bare row-count guard and yield silently wrong/NULL sims,
-    # so density is validated here exactly like the Arrow encode
-    # lane's _collect_codebooks (ADVICE r11). The collect is BOUNDED
-    # (the _probe_single limit-before-validate discipline): a
-    # corpus-sized frame passed as codebooks by mistake must raise,
-    # not OOM the driver first.
-    _CB_CAP = 1 << 20  # far above any real m * k_sub; tiny vs a corpus
-    cid_rows = codebooks.select("j", "cid").limit(_CB_CAP + 1).collect()
-    if len(cid_rows) > _CB_CAP:
-        raise ValueError(
-            f"codebooks frame exceeds {_CB_CAP} rows — expected the "
-            "bounded m * k_sub codebook frame (was the codes frame "
-            "passed by mistake?)"
-        )
-    per_j: dict[int, list] = {}
-    for r in cid_rows:
-        per_j.setdefault(r["j"], []).append(r["cid"])
-    if not cid_rows or len(cid_rows) % m or sorted(per_j) != list(range(m)):
-        raise ValueError(
-            f"codebooks must hold m * k_sub rows covering subspaces "
-            f"0..{m - 1} (m={m}), got {len(cid_rows)} rows over "
-            f"subspaces {sorted(per_j)}"
-        )
-    k_sub = len(cid_rows) // m
-    for j in range(m):
-        if sorted(per_j[j]) != list(range(k_sub)):
-            raise ValueError(
-                f"subspace {j} cids must be dense 0..{k_sub - 1} for "
-                "the positional ADC lookup (pq_train emits dense "
-                f"cids); got {sorted(per_j[j])[:8]}..."
-            )
+    # The positional layout assumes DENSE cids 0..k_sub-1 of width sub
+    # per subspace — a hand-built codebook frame would otherwise yield
+    # silently wrong/NULL sims, so the shared capped reader validates
+    # it (and yields k_sub) before anything runs.
+    k_sub = len(_read_codebooks(codebooks, "j", m, sub, "subspace")[0])
     tab = (
         codebooks.crossJoin(F.broadcast(q))
         .select(
@@ -896,28 +841,17 @@ def pq_reconstruction_error_report(
         F.col(label_col).alias("_lab"),
     )
     # ONE bounded collect serves the encode matrices AND the decode
-    # literals (ADVICE r15: previously collected twice); the gather
+    # literals (ADVICE r15: previously collected twice); the reader
     # asserts the dense-cid contract BEFORE the literal decode below
     # could silently mis-index a sparse codebook
-    cb_rows = _collect_codebook_rows(codebooks)
-    enc = encode_codes_arrow(
-        _collect_codebooks(codebooks, m, sub, rows=cb_rows)
-    )
-    coded = base.withColumn("_codes", enc(F.col("_v")))
-    # literal decode: dense cids 0..k_sub-1 index the sorted centroid
-    # literals directly (the pq_train contract, asserted above) —
-    # reuses the one collected codebook, no second driver job
-    by_j: dict[int, dict[int, list[float]]] = {}
-    for r in cb_rows:
-        by_j.setdefault(r["j"], {})[r["cid"]] = [float(x) for x in r["c"]]
+    cmats = _read_codebooks(codebooks, "j", m, sub, "subspace")
+    coded = base.withColumn("_codes", encode_codes_arrow(cmats)(F.col("_v")))
 
+    # literal decode: dense cids 0..k_sub-1 index the centroid literals
+    # directly — reuses the one collected codebook, no second driver job
     def cb_lit(j: int):
-        cents = by_j[j]
         return F.array(
-            *[
-                F.array(*[F.lit(x) for x in cents[cid]])
-                for cid in sorted(cents)
-            ]
+            *[F.array(*[F.lit(x) for x in c]) for c in cmats[j].tolist()]
         )
 
     vhat = F.concat(

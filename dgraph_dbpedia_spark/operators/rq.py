@@ -42,9 +42,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dgraph_dbpedia_spark.operators.pq import (
-    _collect_codebooks,
     _exact_rerank,
     _nearest_l2,
+    _read_codebooks,
     _validate_shortlist,
     encode_codes_arrow,
     pq_train,
@@ -74,50 +74,6 @@ def _stage_row(codebooks: DataFrame, lvl: int) -> DataFrame:
     )
 
 
-def _validate_rq_codebooks(
-    codebooks: DataFrame, dims: int, n_levels: int
-) -> int:
-    """Bounded validation read (the pq_topk discipline, shared by
-    encode and serve so a mismatched frame raises LOUDLY instead of
-    emitting silent NULL codes/sims): stages must cover exactly
-    0..n_levels-1, cids must be dense 0..k_sub-1 per stage, and every
-    centroid must be ``dims`` wide. Returns ``k_sub``. The collect is
-    capped so a corpus frame passed by mistake raises before it can
-    OOM the driver."""
-    _CB_CAP = 1 << 20
-    rows = (
-        codebooks.select("lvl", "cid", F.size("c").alias("w"))
-        .limit(_CB_CAP + 1)
-        .collect()
-    )
-    if len(rows) > _CB_CAP:
-        raise ValueError(
-            f"codebooks frame exceeds {_CB_CAP} rows — expected the "
-            "bounded n_levels * k_sub codebook frame"
-        )
-    per: dict[int, list] = {}
-    for r in rows:
-        per.setdefault(r["lvl"], []).append(r["cid"])
-        if r["w"] != dims:
-            raise ValueError(
-                f"stage {r['lvl']} centroid width {r['w']} != dims "
-                f"{dims}"
-            )
-    if sorted(per) != list(range(n_levels)):
-        raise ValueError(
-            f"codebooks must cover stages 0..{n_levels - 1}, got "
-            f"{sorted(per)}"
-        )
-    k_sub = len(per[0])
-    for lvl in range(n_levels):
-        if sorted(per[lvl]) != list(range(k_sub)):
-            raise ValueError(
-                f"stage {lvl} cids must be dense 0..{k_sub - 1} "
-                "(rq_train emits dense cids)"
-            )
-    return k_sub
-
-
 def _winning_c():
     """The winning centroid's vector, picked from the bound ``_cent``
     broadcast list by the bound ``_b`` struct's cid (both must already
@@ -145,8 +101,9 @@ def _stage_code(cb: DataFrame, dims: int, vec: Column) -> Column:
     code-0 class for them (shorter/NULL rows already land there).
     Pinned equal to the first code of :func:`_rq_encode_native`."""
     enc = encode_codes_arrow(
-        _collect_codebooks(
-            cb.select(F.lit(0).alias("j"), "cid", "c"), 1, dims
+        _read_codebooks(
+            cb.select(F.lit(0).alias("lvl"), "cid", "c"), "lvl", 1, dims,
+            "stage",
         )
     )
     masked = F.when(F.size(vec) == F.lit(dims), vec)
@@ -306,58 +263,6 @@ def rq_codes_arrow(cmats):
     return pandas_udf(enc, ArrayType(IntegerType()))
 
 
-def _collect_rq_codebooks(codebooks: DataFrame, dims: int, n_levels: int):
-    """ONE bounded driver read serving BOTH the validation and the
-    Arrow gather (the r12 review flagged a validate-then-collect
-    double read): coverage, density and width checked on the collected
-    rows, then per-stage ``(k_sub, dims)`` matrices in dense cid order
-    (argmin's first-min tie equals the native L2-asc/cid-asc rule).
-    Near-twin of pq's ``_collect_codebooks`` — kept separate because
-    the stage column and the full-dim width contract differ, but any
-    fix to one should be checked against the other."""
-    import numpy as np
-
-    _CB_CAP = 1 << 20
-    rows = (
-        codebooks.select(
-            "lvl", "cid", F.col("c").cast("array<double>").alias("c")
-        )
-        .limit(_CB_CAP + 1)
-        .collect()
-    )
-    if len(rows) > _CB_CAP:
-        raise ValueError(
-            f"codebooks frame exceeds {_CB_CAP} rows — expected the "
-            "bounded n_levels * k_sub codebook frame"
-        )
-    per: dict[int, list] = {}
-    for r in rows:
-        per.setdefault(r["lvl"], []).append((r["cid"], list(r["c"])))
-        if len(r["c"]) != dims:
-            raise ValueError(
-                f"stage {r['lvl']} centroid width {len(r['c'])} != "
-                f"dims {dims}"
-            )
-    if sorted(per) != list(range(n_levels)):
-        raise ValueError(
-            f"codebooks must cover stages 0..{n_levels - 1}, got "
-            f"{sorted(per)}"
-        )
-    k_sub = len(per[0])
-    for lvl in range(n_levels):
-        if sorted(c for c, _ in per[lvl]) != list(range(k_sub)):
-            raise ValueError(
-                f"stage {lvl} cids must be dense 0..{k_sub - 1} "
-                "(rq_train emits dense cids)"
-            )
-    return [
-        np.asarray(
-            [c for _, c in sorted(per[lvl])], dtype=np.float64
-        )
-        for lvl in range(n_levels)
-    ]
-
-
 def rq_encode(
     df: DataFrame,
     codebooks: DataFrame,
@@ -377,9 +282,11 @@ def rq_encode(
     cost at the 200k/k_sub=256 scale point. Pinned bit-equal to
     :func:`_rq_encode_native` by pytest."""
     _rq_validate(dims, k_sub=1, n_levels=n_levels)
-    # the gather validates (ONE bounded collect, not
+    # the reader validates (ONE bounded collect, not
     # validate-then-collect — r12 review)
-    enc = rq_codes_arrow(_collect_rq_codebooks(codebooks, dims, n_levels))
+    enc = rq_codes_arrow(
+        _read_codebooks(codebooks, "lvl", n_levels, dims, "stage")
+    )
     return df.select(
         F.col(id_col),
         enc(F.col(vec_col).cast("array<double>")).alias("codes"),
@@ -400,7 +307,7 @@ def _rq_encode_native(
     generated columns between binds (each stage's nearest bound in its
     own select — the CollapseProject trap)."""
     _rq_validate(dims, k_sub=1, n_levels=n_levels)
-    _validate_rq_codebooks(codebooks, dims, n_levels)
+    _read_codebooks(codebooks, "lvl", n_levels, dims, "stage")
     cur = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_rv")
     )
@@ -458,7 +365,7 @@ def rq_topk(
     # shared bounded validation (coverage, density, centroid width):
     # rq_topk serves the 2-stage layout — deeper chains compose as
     # shortlist + exact re-rank anyway
-    k_sub = _validate_rq_codebooks(codebooks, dims, n_levels=2)
+    k_sub = len(_read_codebooks(codebooks, "lvl", 2, dims, "stage")[0])
     q = query.select(F.col(query_col).cast("array<double>").alias("qv"))
     probe = q.limit(2).collect()
     if len(probe) > 1:

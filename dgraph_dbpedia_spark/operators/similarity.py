@@ -339,17 +339,36 @@ def _round_half_up_np(x, decimals: int):
     )
 
 
+#: row cap of every driver read of a centroid or codebook frame — far
+#: above any real n_centroids or m * k_sub, tiny against a corpus
+CENTROID_ROW_CAP = 1 << 20
+
+
+def _capped_collect(frame: DataFrame, what: str) -> list:
+    """THE bounded driver read (the X6 pattern) of a centroid or
+    codebook frame: ``limit(cap + 1)`` before the collect, so a corpus
+    frame passed by mistake raises instead of OOMing the driver. Every
+    IVF, PQ and RQ reader goes through here."""
+    rows = frame.limit(CENTROID_ROW_CAP + 1).collect()
+    if len(rows) > CENTROID_ROW_CAP:
+        raise ValueError(
+            f"{what} frame exceeds {CENTROID_ROW_CAP} rows — expected a "
+            "bounded centroid/codebook frame (was a corpus frame passed "
+            "by mistake?)"
+        )
+    return rows
+
+
 def _collect_centroids(centroids: DataFrame):
-    """Bounded driver read (the X6 pattern) of a ``(cid, c)`` centroid
-    frame for the Arrow assignment lane: ``(cids, matrix, cid_type)``
-    sorted by cid ascending — the order that makes ``np.argmax``'s
-    first-max tie-break equal ``_nearest_sorted``'s (sim desc, cid asc).
-    Centroid frames are bounded by construction (n_centroids rows), so
-    this is a probe-list-sized collect, never a data collect."""
+    """Bounded driver read (:func:`_capped_collect`) of a ``(cid, c)``
+    centroid frame for the Arrow assignment lane: ``(cids, matrix,
+    cid_type)`` sorted by cid ascending — the order that makes
+    ``np.argmax``'s first-max tie-break equal ``_nearest_sorted``'s
+    (sim desc, cid asc)."""
     cast = centroids.select(
         "cid", F.col("c").cast("array<double>").alias("c")
     )
-    rows = sorted(cast.collect(), key=lambda r: r["cid"])
+    rows = sorted(_capped_collect(cast, "centroids"), key=lambda r: r["cid"])
     cids = [r["cid"] for r in rows]
     cmat = [list(r["c"]) for r in rows]
     return cids, cmat, cast.schema["cid"].dataType
@@ -914,7 +933,8 @@ def ivf_train(
     imbalance and raise recall at the same ``n_probe``). Returns
     ``(cid, c)`` with ``cid`` keeping the seed identity.
 
-    Per iteration, two scale-safe passes:
+    Per iteration of the shared loop (:func:`_lloyd_refine`, keyed by
+    ``cid``), two scale-safe passes:
 
     1. assignment — :func:`ivf_assign`'s broadcast centroid fold, a
        pure projection over the corpus scan (no shuffle of ``df``);
@@ -936,49 +956,52 @@ def ivf_train(
     full corpus-aggregation plan, with superseded checkpoints released
     deterministically."""
     e = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("e"))
+    seeds = ivf_seed_centroids(e, n_centroids, id_col=id_col, vec_col="e")
     # the per-iteration centroid collect (ivf_assign) reads the
     # 8-row localCheckpoint just made — a bounded X6 read, not a
     # corpus job
     return _lloyd_refine(
-        e,
-        n_centroids,
+        seeds.localCheckpoint(),
+        ["cid"],
         n_iter,
         round_decimals,
-        id_col,
         "e",
-        lambda e_, c_: ivf_assign(e_, c_, id_col=id_col, vec_col="e"),
+        lambda c_: ivf_assign(e, c_, id_col=id_col, vec_col="e"),
     )
 
 
 def _lloyd_refine(
-    e: DataFrame,
-    n_centroids: int,
+    seeds: DataFrame,
+    keys: list[str],
     n_iter: int,
     round_decimals: int,
-    id_col: str,
     vec_col: str,
     assign,
 ) -> DataFrame:
-    """The ONE deterministic Lloyd loop (seed rule, partially
-    aggregable rounded means, empty-cluster coalesce, per-iteration
-    localCheckpoint with deterministic release) shared by
-    :func:`ivf_train` (cosine assignment) and the product-quantization
-    subspace trainer (L2 assignment — ``operators.pq``). ``assign(e,
-    cent)`` returns a frame carrying ``vec_col`` and ``cid``; the loop
-    owns everything else, so the delicate checkpoint-release
-    choreography exists exactly once."""
+    """The ONE deterministic Lloyd loop, run by :func:`ivf_train`
+    (``keys=["cid"]``, cosine assignment) and ``operators.pq.pq_train``
+    (``keys=["j", "cid"]``, fused L2 assignment of all ``m`` subspaces;
+    RQ trains each stage through it). ``seeds`` is the caller's
+    localCheckpoint-ed seed frame carrying ``keys`` and ``c`` (the seed
+    rule and its validation are the caller's contract); the loop takes
+    ownership of that checkpoint. ``assign(cent)`` returns a frame
+    carrying ``keys`` and ``vec_col``, the vectors each centroid
+    averages. The loop owns the rest: the partially aggregable rounded
+    ``(keys, pos)`` means, the empty-cluster ``coalesce`` (a centroid
+    whose list goes empty keeps its position) and the per-iteration
+    localCheckpoint with deterministic release, so that choreography
+    exists exactly once."""
     from dgraph_dbpedia_spark.operators.cachectl import release_local_checkpoint
 
-    cent = ivf_seed_centroids(e, n_centroids, id_col=id_col, vec_col=vec_col)
-    cent = cent.localCheckpoint()
-    last_cp = cent
+    cent = seeds.select(*keys, "c")
+    last_cp = seeds
     for _ in range(n_iter):
-        asg = assign(e, cent)
+        asg = assign(cent)
         means = (
-            asg.select("cid", F.posexplode(vec_col).alias("pos", "val"))
-            .groupBy("cid", "pos")
+            asg.select(*keys, F.posexplode(vec_col).alias("pos", "val"))
+            .groupBy(*keys, "pos")
             .agg(F.avg("val").alias("m"))
-            .groupBy("cid")
+            .groupBy(*keys)
             .agg(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("pos", "m"))),
@@ -989,8 +1012,8 @@ def _lloyd_refine(
             )
         )
         cent = (
-            cent.join(means, "cid", "left")
-            .select("cid", F.coalesce("c2", "c").alias("c"))
+            cent.join(means, keys, "left")
+            .select(*keys, F.coalesce("c2", "c").alias("c"))
             .localCheckpoint()
         )
         release_local_checkpoint(last_cp)

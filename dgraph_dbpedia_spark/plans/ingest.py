@@ -111,7 +111,21 @@ def ingest(
                 result.stats = dataset_counts(read_triples_parquet(spark, parquet_path))
             return result
 
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
     with ThreadPoolExecutor(max_workers=INGEST_WORKERS) as pool:
-        return list(pool.map(run, datasets))
+        futures = [pool.submit(run, d) for d in datasets]
+        # fail fast (transform's shape): on the first failed dataset,
+        # cancel every dataset that has not started and re-raise — left
+        # to the pool's exit, every queued dataset would be written and
+        # read back before the error surfaced. Datasets already running
+        # finish (the pool's exit waits for them); their Spark jobs are
+        # not cancelled, and a failed dataset's partial output is left
+        # as the writer left it.
+        done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures if f in done and f.exception()]
+        if failed:
+            for f in futures:
+                f.cancel()
+            failed[0].result()
+        return [f.result() for f in futures]

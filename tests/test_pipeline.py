@@ -505,6 +505,72 @@ def test_transform_sink_failure_aborts_queued_work(
     assert after <= before
 
 
+def test_ingest_write_failure_aborts_queued_datasets(
+    spark, pipeline_dirs, tmp_path, monkeypatch
+):
+    """Fault injection on a two-worker ingest pool: the labels write
+    raises while the first dataset's write is still running. ingest
+    must re-raise at once — the datasets still queued never start (no
+    output dir; the one the free worker may pick up before the cancel
+    is exempt, as in transform's twin test) — and leave the caller's
+    job group as it was. Waiting for results in submission order
+    instead would let the free worker run every queued dataset until
+    the first one finished: here, a queued dataset's start is what
+    unblocks the first write."""
+    import threading
+
+    from dgraph_dbpedia_spark.plans import ingest as ingest_mod
+
+    message = "injected labels write failure"
+    first, queued = "infobox_properties", ["page_links", "skos_categories",
+                                           "geo_coordinates"]
+    started, late_start = [], threading.Event()
+    real_load, real_write = ingest_mod.load_dataset, ingest_mod.write_partitioned_by
+
+    def load_dataset(spark_, root_, dataset, *args, **kwargs):
+        started.append(dataset)
+        if dataset in queued[1:]:
+            late_start.set()
+        return real_load(spark_, root_, dataset, *args, **kwargs)
+
+    def write_partitioned_by(df, *args, path, **kwargs):
+        if path.endswith("labels.parquet"):
+            raise RuntimeError(message)
+        if path.endswith(f"{first}.parquet"):
+            late_start.wait(5)
+        return real_write(df, *args, path=path, **kwargs)
+
+    monkeypatch.setattr(ingest_mod, "INGEST_WORKERS", 2)
+    monkeypatch.setattr(ingest_mod, "load_dataset", load_dataset)
+    monkeypatch.setattr(ingest_mod, "write_partitioned_by", write_partitioned_by)
+    out = tmp_path / "parquet_fail"
+    sc = spark.sparkContext
+    raised, group = [], []
+
+    def run():
+        sc.setJobGroup("caller", "caller")
+        try:
+            ingest(spark, str(pipeline_dirs[0]), str(out),
+                   datasets=[first, "labels", *queued])
+        except BaseException as e:  # noqa: BLE001 — handed to the test
+            raised.append(e)
+        finally:
+            group.append(sc.getLocalProperty("spark.jobGroup.id"))
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    runner = threading.Thread(target=run, daemon=True)
+    runner.start()
+    runner.join(120)
+    assert not runner.is_alive(), f"ingest hung after an {message}"
+    assert raised and message in str(raised[0]), raised
+    assert group == ["caller"]
+    assert not set(started) & set(queued[1:]), started
+    for dataset in queued[1:]:
+        assert not (out / f"{dataset}.parquet").exists(), dataset
+
+
 def test_curate_corpus_every_stage_fires(spark):
     """End-to-end curation composition: each planted doc exercises one
     stage — gopher kill (too short), exact-dup kill (identical text,

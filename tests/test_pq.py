@@ -525,3 +525,66 @@ def test_pq_recon_error_lanes_equal_and_exact_on_grid(spark):
     assert rep and all(
         r["max_err"] == 0.0 and r["mean_err"] == 0.0 for r in rep
     )
+
+
+# ---------------------------------------------------------------------------
+# one row cap for every centroid and codebook read
+
+
+def test_every_centroid_and_codebook_read_is_capped(spark, monkeypatch):
+    """Every IVF/PQ/RQ driver read of a centroid or codebook frame goes
+    through the one capped collect: with the cap at 8, a 9-row frame
+    raises ValueError in each public reader instead of reaching the
+    driver whole — the trainers' per-iteration and between-stage reads
+    included."""
+    from dgraph_dbpedia_spark.operators import similarity
+    from dgraph_dbpedia_spark.operators.pq import (
+        pq_encode,
+        pq_reconstruction_error_report,
+        pq_topk,
+        pq_train,
+    )
+    from dgraph_dbpedia_spark.operators.rq import rq_encode, rq_topk, rq_train
+    from dgraph_dbpedia_spark.operators.similarity import (
+        ivf_assign,
+        ivf_topk,
+        ivf_train,
+    )
+
+    monkeypatch.setattr(similarity, "CENTROID_ROW_CAP", 8)
+    vecs = [[float(i), float(i % 3), 1.0, float(-i)] for i in range(12)]
+    corpus = spark.createDataFrame(
+        [(i, v, f"l{i % 2}") for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>, label string",
+    )
+    q = corpus.where("vec_id = 1").select(F.col("embedding").alias("q"))
+    codes = spark.createDataFrame(
+        [(1, [0, 0])], "vec_id long, codes array<int>"
+    )
+    nine = [(cid, vecs[cid]) for cid in range(9)]
+    pq_cb = spark.createDataFrame(
+        [(0, cid, v) for cid, v in nine], "j int, cid int, c array<double>"
+    )
+    rq_cb = spark.createDataFrame(
+        [(cid // 3, cid % 3, v) for cid, v in nine],
+        "lvl int, cid int, c array<double>",
+    )
+    cent = spark.createDataFrame(nine, "cid long, c array<double>")
+    readers = {
+        "pq_encode": lambda: pq_encode(corpus, pq_cb, dims=4, m=1),
+        "pq_topk": lambda: pq_topk(codes, pq_cb, q, dims=4, m=1),
+        "pq_reconstruction_error_report": (
+            lambda: pq_reconstruction_error_report(corpus, pq_cb, dims=4, m=1)
+        ),
+        "pq_train": lambda: pq_train(corpus, dims=4, m=1, k_sub=9, n_iter=1),
+        "rq_encode": lambda: rq_encode(corpus, rq_cb, dims=4, n_levels=3),
+        "rq_topk": lambda: rq_topk(codes, rq_cb, q, dims=4),
+        "rq_train": lambda: rq_train(corpus, dims=4, k_sub=9, n_iter=0),
+        "ivf_assign": lambda: ivf_assign(corpus, cent, vec_col="embedding"),
+        "ivf_topk": lambda: ivf_topk(corpus, q, centroids=cent),
+        "ivf_train": lambda: ivf_train(corpus, n_centroids=9, n_iter=1),
+    }
+    for name, read in readers.items():
+        with pytest.raises(ValueError, match="exceeds 8 rows"):
+            read()
+            pytest.fail(f"{name} read a 9-row frame past the cap")

@@ -1,8 +1,8 @@
-"""Dump `.explain("formatted")` for named registry rows to files —
-the before/after plan evidence the optimization rounds commit under
-plans/r<N>/.
+"""Dump `.explain("formatted")` for registry rows to files — the
+before/after plan evidence: dump both sides of a change and diff the
+two directories. With no query names, every registry row is dumped.
 
-Usage: python tools/dump_plans.py <out_dir> <suffix> <query> [query ...]
+Usage: python tools/dump_plans.py <out_dir> <suffix> [query ...]
 (sf via $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.001; writes
 <out_dir>/<query>_<suffix>.txt)
 """
@@ -19,7 +19,8 @@ from dgraph_dbpedia_spark.session import build_session
 
 
 def main() -> None:
-    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or list(entry_mod.QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     os.makedirs(out_dir, exist_ok=True)
     spark = build_session(app_name="dump-plans")

@@ -3,8 +3,7 @@ no-cluster-structure worst case), one planted identical twin per
 query. Measures train / encode / ADC-serve wall-clock, bytes per
 vector of the code table vs the float table, twin recall over
 ``n_queries`` probes (rank-1, top-100 shortlist, and rank-1 through
-the exact re-rank composition), and a same-session A/B of the fused
-one-pass-per-iteration trainer vs the r11 per-subspace loop.
+the exact re-rank composition).
 
 Recall is scored over a served corpus that EXCLUDES the query ids
 (ADVICE r11): with the queries left in, the query's own row carries
@@ -29,45 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from dgraph_dbpedia_spark.session import build_session
-
-
-def train_per_subspace(df, dims: int, m: int, k_sub: int, n_iter: int):
-    """The r11 pq_train shape — m independent `_lloyd_refine` loops,
-    i.e. m corpus scans per iteration — kept HERE as the A/B baseline
-    for the fused trainer (VERDICT r11 #4). Bit-equal output by the
-    shared seed/tie/rounding contract."""
-    from pyspark.sql import Window
-
-    from dgraph_dbpedia_spark.operators.pq import _nearest_l2
-    from dgraph_dbpedia_spark.operators.similarity import _lloyd_refine
-
-    sub = dims // m
-    v = F.col("embedding").cast("array<double>")
-    out = None
-    for j in range(m):
-        e = df.select(
-            F.col("vec_id"), F.slice(v, j * sub + 1, sub).alias("v")
-        )
-
-        def assign(e_, cent):
-            row = cent.agg(
-                F.collect_list(F.struct(F.col("cid"), F.col("c"))).alias(
-                    "_cent"
-                )
-            )
-            return e_.crossJoin(F.broadcast(row)).select(
-                F.col("vec_id"),
-                F.col("v"),
-                _nearest_l2(F.col("v"), F.col("_cent"))["cid"].alias("cid"),
-            )
-
-        cent = _lloyd_refine(e, k_sub, n_iter, 4, "vec_id", "v", assign)
-        dense = cent.withColumn(
-            "cid", F.row_number().over(Window.orderBy("cid")) - F.lit(1)
-        )
-        tagged = dense.select(F.lit(j).alias("j"), "cid", "c")
-        out = tagged if out is None else out.unionByName(tagged)
-    return out
 
 
 def main() -> None:
@@ -112,32 +72,13 @@ def main() -> None:
     )
     corpus = base.unionByName(twins).localCheckpoint()
 
-    # same-session A/B: the r11 per-subspace loop (m corpus scans per
-    # iteration) vs the fused one-pass trainer — outputs must agree
-    # row-for-row (same seed/tie/rounding contract). Symmetric timing:
-    # an untimed warm-up run first (JIT/codegen/page cache — the r12
-    # first cut timed the baseline cold and the fused arm warm, and
-    # included a collect() in only the baseline's window), then each
-    # arm timed as train + localCheckpoint materialization only, with
-    # the equality collects OUTSIDE both windows.
+    # an untimed warm-up run first (JIT/codegen/page cache), then
+    # training timed as train + localCheckpoint materialization only
     pq_train(corpus, dims=dims, m=m, k_sub=k_sub, n_iter=1).localCheckpoint()
-
-    t0 = time.perf_counter()
-    cb_old = train_per_subspace(
-        corpus, dims, m, k_sub, n_iter=1
-    ).localCheckpoint()
-    train_old_s = round(time.perf_counter() - t0, 3)
-
     t0 = time.perf_counter()
     cb = pq_train(corpus, dims=dims, m=m, k_sub=k_sub, n_iter=1)
     cb = cb.localCheckpoint()  # materialize: training is the timed unit
     train_s = round(time.perf_counter() - t0, 3)
-    if sorted(map(tuple, cb.collect())) != sorted(
-        map(tuple, cb_old.collect())
-    ):
-        raise AssertionError(
-            "fused trainer diverged from the per-subspace baseline"
-        )
 
     work = tempfile.mkdtemp(prefix="sparkgraft-pq-")
     t0 = time.perf_counter()
@@ -202,8 +143,6 @@ def main() -> None:
                 "m": m,
                 "k_sub": k_sub,
                 "train_sec": train_s,
-                "train_per_subspace_sec": train_old_s,
-                "train_fuse_speedup_x": round(train_old_s / train_s, 2),
                 "encode_sec": encode_s,
                 "encode_vecs_per_sec": round((n + n_queries) / encode_s),
                 "serve_sec_total": serve_s,
