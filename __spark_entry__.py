@@ -2801,7 +2801,7 @@ def _q_text_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors tagged with the nearest of the 8 lowest-id seed centroids
     (the stream-compatible stateless assignment) — the mixture-balance
     grouping step with no embedding model in the loop."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
+    from dgraph_dbpedia_spark.operators.cachectl import CacheScope
     from dgraph_dbpedia_spark.operators.similarity import (
         ivf_seed_centroids,
     )
@@ -2811,21 +2811,20 @@ def _q_text_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.streaming.events import tag_embeddings_stream
 
     docs = _t(spark, sf_dir, "documents")
-    # persisted: the centroid collect (eager, at DataFrame construction
-    # on the Arrow lane) and the tag job both consume the EXPENSIVE
-    # derived frame — without the persist the hashing-trick
-    # aggregation runs twice per execution (r12 review); re-tagged so
-    # the harness release() frees it
-    emb = (
-        hashed_doc_embeddings(docs, dims=64)
-        .where(F.col("e").isNotNull())
-        .persist()
-    )
-    cents = ivf_seed_centroids(emb, 8, id_col="doc_id", vec_col="e")
-    return tag_persisted(
-        tag_embeddings_stream(emb, cents, id_col="doc_id", vec_col="e"),
-        emb,
-    )
+    with CacheScope() as scope:
+        # persisted: the centroid collect (eager, at DataFrame
+        # construction on the Arrow lane) and the tag job both consume
+        # the EXPENSIVE derived frame — without the persist the
+        # hashing-trick aggregation runs twice per execution (r12
+        # review); handed to the result so the harness release() frees it
+        emb = scope.persist(
+            hashed_doc_embeddings(docs, dims=64).where(F.col("e").isNotNull())
+        )
+        cents = ivf_seed_centroids(emb, 8, id_col="doc_id", vec_col="e")
+        return scope.hand(
+            tag_embeddings_stream(emb, cents, id_col="doc_id", vec_col="e"),
+            emb,
+        )
 
 
 def _q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,8 +16,6 @@ boundary.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,25 +126,20 @@ def infobox_predicate_schema_from_pairs(
 
 def full_schema(
     spark: SparkSession,
-    infobox_triples: DataFrame,
-    predicate_datatypes: DataFrame,
+    derived: DataFrame,
     remove_language_tags: bool = False,
     externalise_uris: bool = False,
-    derived: DataFrame | None = None,
 ) -> DataFrame:
     """Static ∪ data-derived ∪ (optional xid), deduped and sorted for a
     deterministic schema file (DbpediaDgraphSparkApp.scala:290-330).
 
-    ``derived`` substitutes a precomputed data-derived frame (see
-    :func:`infobox_predicate_schema_from_pairs`) so pipelines that
-    already hold the (lang, p, t) count cube skip the fact-table scan."""
-    frames = [
-        static_predicate_schema(spark, remove_language_tags),
+    ``derived`` is the data-derived frame, built from the (lang, p, t)
+    count cube by :func:`infobox_predicate_schema_from_pairs` (equal to
+    :func:`infobox_predicate_schema` over the fact table, without its
+    scan)."""
+    schema = static_predicate_schema(spark, remove_language_tags).unionByName(
         derived
-        if derived is not None
-        else infobox_predicate_schema(infobox_triples, predicate_datatypes),
-    ]
-    schema = reduce(DataFrame.unionByName, frames).distinct()
+    ).distinct()
     if externalise_uris:
         schema = schema.unionByName(spark.createDataFrame([XID_PREDICATE], SCHEMA_COLS))
     return schema.orderBy(*SCHEMA_COLS)

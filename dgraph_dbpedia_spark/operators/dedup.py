@@ -37,6 +37,7 @@ from dgraph_dbpedia_spark.functions.hashing import (
     token_hashes,
     tokens,
 )
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope, persisted_frames
 
 
 def exact_dedup(
@@ -155,25 +156,26 @@ def ngram_jaccard_pairs(
     :func:`dgraph_dbpedia_spark.operators.cachectl.release` after
     materializing.
     """
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    counts, persisted = _ngram_pair_counts(
-        df, text_col, id_col, w, max_shingle_freq
-    )
-    out = (
-        counts.withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ),
+    with CacheScope() as scope:
+        counts, persisted = _ngram_pair_counts(
+            scope, df, text_col, id_col, w, max_shingle_freq
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    return tag_persisted(out, *persisted)
+        out = (
+            counts.withColumn(
+                "jaccard",
+                F.round(
+                    F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")),
+                    6,
+                ),
+            )
+            .where(F.col("jaccard") >= threshold)
+            .select("a", "b", "jaccard")
+        )
+        return scope.hand(out, *persisted)
 
 
 def _ngram_pair_counts(
+    scope: CacheScope,
     df: DataFrame,
     text_col: str,
     id_col: str,
@@ -182,12 +184,12 @@ def _ngram_pair_counts(
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Shared sparse pair-count skeleton of the shingle-overlap family:
     ``(a, b, inter, na, nb)`` for every pair (a < b) sharing at least
-    one (capped) shingle, plus the persisted handles the caller must
-    tag onto its result."""
+    one (capped) shingle, plus the frames it persisted through
+    ``scope`` (the caller hands them to its result)."""
     # persist: the shingled frame feeds four plan branches (two join
     # sides + two size lookups); without it Catalyst recomputes the
     # shingling per branch (no cross-branch subplan sharing, SURVEY §4)
-    sh = _hashed_shingled(df, text_col, id_col, w).persist()
+    sh = scope.persist(_hashed_shingled(df, text_col, id_col, w))
     exploded = sh.select(F.col(id_col), F.explode("sh").alias("shingle"))
     if max_shingle_freq is not None:
         # drop degenerate stop-shingles: they blow up the join and carry
@@ -198,7 +200,7 @@ def _ngram_pair_counts(
             .where(F.col("count") <= max_shingle_freq)
             .select("shingle")
         )
-        exploded = exploded.join(rare, "shingle", "left_semi").persist()
+        exploded = scope.persist(exploded.join(rare, "shingle", "left_semi"))
     # set sizes from the SAME (possibly capped) universe as the
     # intersection — shingles are distinct per doc, so the exploded row
     # count per id is the set size
@@ -242,23 +244,22 @@ def ngram_containment_pairs(
     sharing a shingle ever meet, sizes come from the SAME capped
     universe as the intersection, and the result carries the persisted
     handles for cachectl release."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    counts, persisted = _ngram_pair_counts(
-        df, text_col, id_col, w, max_shingle_freq
-    )
     ca = F.round(F.col("inter") / F.col("na"), 6)
     cb = F.round(F.col("inter") / F.col("nb"), 6)
-    out = (
-        counts.withColumn("containment_a", ca)
-        .withColumn("containment_b", cb)
-        .where(
-            F.greatest(F.col("containment_a"), F.col("containment_b"))
-            >= threshold
+    with CacheScope() as scope:
+        counts, persisted = _ngram_pair_counts(
+            scope, df, text_col, id_col, w, max_shingle_freq
         )
-        .select("a", "b", "inter", "containment_a", "containment_b")
-    )
-    return tag_persisted(out, *persisted)
+        out = (
+            counts.withColumn("containment_a", ca)
+            .withColumn("containment_b", cb)
+            .where(
+                F.greatest(F.col("containment_a"), F.col("containment_b"))
+                >= threshold
+            )
+            .select("a", "b", "inter", "containment_a", "containment_b")
+        )
+        return scope.hand(out, *persisted)
 
 
 MERSENNE31 = (1 << 31) - 1
@@ -426,25 +427,24 @@ def minhash_dedup_pairs(
     """MinHash+LSH near-dup pipeline: signatures -> banded candidates ->
     exact-Jaccard verification of candidates only. Returns
     ``(a, b, jaccard)`` pairs above threshold."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
     rows_per_band = k // bands
-    # ONE shingle-hashing pass feeds signatures AND the verify step
-    sh = _hashed_shingled(df, text_col, id_col, w).persist()
-    sigs = _sigs_from_hashed(sh, id_col, k)
-    cands = minhash_lsh_candidates(sigs, id_col, bands, rows_per_band)
-    sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    out = (
-        cands.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    return tag_persisted(out, sh)
+    with CacheScope() as scope:
+        # ONE shingle-hashing pass feeds signatures AND the verify step
+        sh = scope.persist(_hashed_shingled(df, text_col, id_col, w))
+        sigs = _sigs_from_hashed(sh, id_col, k)
+        cands = minhash_lsh_candidates(sigs, id_col, bands, rows_per_band)
+        sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
+        sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
+        out = (
+            cands.join(sa, "a")
+            .join(sb, "b")
+            .withColumn("jaccard", F.round(inter / union, 6))
+            .where(F.col("jaccard") >= threshold)
+            .select("a", "b", "jaccard")
+        )
+        return scope.hand(out, sh)
 
 
 N_SIMHASH_BITS = 60  # fits the cross-engine 15-hex-char hash
@@ -613,15 +613,13 @@ def simhash_near_dup_pairs(
     simhash fold per side (no cross-branch subplan sharing, SURVEY §4).
     The result carries the handle — release via cachectl.release.
     """
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
     if not 0 <= max_hamming <= 3:  # validate BEFORE marking any persist
         raise ValueError(
             f"max_hamming must be in [0, 3], got {max_hamming}"
         )
-    sh = simhash(df, text_col, id_col).persist()
-    out = simhash_banded_pairs(sh, id_col, max_hamming)
-    return tag_persisted(out, sh)
+    with CacheScope() as scope:
+        sh = scope.persist(simhash(df, text_col, id_col))
+        return scope.hand(simhash_banded_pairs(sh, id_col, max_hamming), sh)
 
 
 def near_dup_filter(
@@ -736,59 +734,56 @@ def dedup_clusters_star(
 
     ids = docs.select(F.col(id_col).alias("u")).distinct()
     obs0 = Observation()
-    edges = (
-        canon(pairs.select(F.col("a").alias("u"), F.col("b").alias("v")))
-        .join(ids, "u", "left_semi")
-        .join(ids.withColumnRenamed("u", "v"), "v", "left_semi")
-        # USING-joins move the join key first — restore (u, v) order,
-        # the loop's unions are positional
-        .select("u", "v")
-        .observe(obs0, *checksum_metrics())
-        .localCheckpoint()
-    )
-    got0 = obs0.get
-    prev = (got0["n"], got0["h"])
-    converged = False
-    from dgraph_dbpedia_spark.operators.cachectl import release_local_checkpoint
-
-    last_cp = edges  # newest checkpointed frame; freed once superseded
-    # eager localCheckpoint per round, ONE job per round (the
-    # convergence checksum rides the checkpoint job as observe()
-    # metrics), and every round plans against a depth-1 lineage.
-    # Measured (same-session A/Bs, sf0.1,
-    # BENCH_SCALE.md r8): 2.86s fused vs 3.07s checkpoint+separate-scan
-    # vs 3.92-3.96s for the r7 persist+sparse-checkpoint scheme at any
-    # cadence (4/8/never) — the persist scheme LOST because each
-    # un-truncated round re-plans a growing join tree, and that
-    # planning cost exceeds the extra materialization of the small
-    # contracted edge set. The r8 hypothesis that the trade reverses
-    # for frames too large to double-materialize was REFUTED at scale
-    # (BENCH_SCALE.md r9): each star round references the edge frame
-    # several times, so the un-truncated logical tree grows
-    # EXPONENTIALLY in rounds-since-checkpoint — on a diameter-9 chain
-    # graph the persist scheme failed to finish 10k nodes in 9 min
-    # while eager did 2M nodes in ~11 s.
-    for _ in range(max_iter):
-        contracted = canon(small_star(large_star(edges)))
-        obs = Observation()
-        edges = contracted.observe(obs, *checksum_metrics()).localCheckpoint()
-        got = obs.get
-        cur = (got["n"], got["h"])
-        release_local_checkpoint(last_cp)
-        last_cp = edges
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        release_local_checkpoint(last_cp)
-        raise RuntimeError(
-            f"dedup_clusters_star did not converge in {max_iter} rounds — "
-            "this exceeds the O(log^2 n) bound for any realistic graph; "
-            "the input pair set is likely unbounded or adversarial"
+    with CacheScope() as scope:
+        edges = scope.checkpoint(
+            canon(pairs.select(F.col("a").alias("u"), F.col("b").alias("v")))
+            .join(ids, "u", "left_semi")
+            .join(ids.withColumnRenamed("u", "v"), "v", "left_semi")
+            # USING-joins move the join key first — restore (u, v) order,
+            # the loop's unions are positional
+            .select("u", "v")
+            .observe(obs0, *checksum_metrics())
         )
-    # converged edge set = star forest: u (child, u>v) -> v (root);
-    # edges IS last_cp and stays alive backing the result.
+        got0 = obs0.get
+        prev = (got0["n"], got0["h"])
+        # eager localCheckpoint per round, ONE job per round (the
+        # convergence checksum rides the checkpoint job as observe()
+        # metrics), and every round plans against a depth-1 lineage.
+        # Measured (same-session A/Bs, sf0.1,
+        # BENCH_SCALE.md r8): 2.86s fused vs 3.07s checkpoint+separate-scan
+        # vs 3.92-3.96s for the r7 persist+sparse-checkpoint scheme at any
+        # cadence (4/8/never) — the persist scheme LOST because each
+        # un-truncated round re-plans a growing join tree, and that
+        # planning cost exceeds the extra materialization of the small
+        # contracted edge set. The r8 hypothesis that the trade reverses
+        # for frames too large to double-materialize was REFUTED at scale
+        # (BENCH_SCALE.md r9): each star round references the edge frame
+        # several times, so the un-truncated logical tree grows
+        # EXPONENTIALLY in rounds-since-checkpoint — on a diameter-9 chain
+        # graph the persist scheme failed to finish 10k nodes in 9 min
+        # while eager did 2M nodes in ~11 s.
+        for _ in range(max_iter):
+            contracted = canon(small_star(large_star(edges)))
+            obs = Observation()
+            superseded = edges
+            edges = scope.checkpoint(
+                contracted.observe(obs, *checksum_metrics())
+            )
+            got = obs.get
+            cur = (got["n"], got["h"])
+            scope.free(superseded)
+            if cur == prev:
+                break
+            prev = cur
+        else:
+            raise RuntimeError(
+                f"dedup_clusters_star did not converge in {max_iter} rounds — "
+                "this exceeds the O(log^2 n) bound for any realistic graph; "
+                "the input pair set is likely unbounded or adversarial"
+            )
+        # the converged edge set = star forest, u (child, u>v) -> v
+        # (root), backs the result
+        scope.keep(edges)
     # Roots and singletons label themselves. Name-based equi-join: the
     # edges now share lineage with docs (via the id restriction), so a
     # frame-qualified condition like docs[id] == roots["u"] can
@@ -888,55 +883,53 @@ def paragraph_dedup(
     UDFs, no collect."""
     import re as _re
 
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
     pattern = sep_regex if sep_regex is not None else _re.escape(sep)
-    # persisted: the paragraph frame feeds BOTH the first-occurrence
-    # aggregate and the semi-join probe side — without it the
-    # split/explode/md5 of the whole corpus runs twice (no cross-branch
-    # subplan sharing; same rationale as the shingle persist above).
-    # The result carries the handle — release via cachectl after
-    # materializing.
-    paras = (
-        docs.select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), pattern)).alias(
-                "pos", "para"
-            ),
+    with CacheScope() as scope:
+        # persisted: the paragraph frame feeds BOTH the first-occurrence
+        # aggregate and the semi-join probe side — without it the
+        # split/explode/md5 of the whole corpus runs twice (no
+        # cross-branch subplan sharing; same rationale as the shingle
+        # persist above). The result carries the handle.
+        paras = scope.persist(
+            docs.select(
+                F.col(id_col),
+                F.posexplode(F.split(F.col(text_col), pattern)).alias(
+                    "pos", "para"
+                ),
+            )
+            .where(F.trim("para") != "")
+            .select(
+                F.col(id_col), "pos", "para", F.md5(F.col("para")).alias("fp")
+            )
         )
-        .where(F.trim("para") != "")
-        .select(
-            F.col(id_col), "pos", "para", F.md5(F.col("para")).alias("fp")
+        firsts = paras.groupBy("fp").agg(
+            F.min(F.struct(F.col(id_col), F.col("pos"))).alias("first")
         )
-        .persist()
-    )
-    firsts = paras.groupBy("fp").agg(
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("first")
-    )
-    kept = paras.join(
-        firsts,
-        (paras["fp"] == firsts["fp"])
-        & (paras[id_col] == firsts["first"][id_col])
-        & (paras["pos"] == firsts["first"]["pos"]),
-        "left_semi",
-    )
-    rebuilt = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda s: s["para"],
-            ),
-            sep,
-        ).alias(text_col)
-    )
-    out = (
-        docs.select(F.col(id_col))
-        .join(rebuilt, id_col, "left")
-        .select(
-            F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
+        kept = paras.join(
+            firsts,
+            (paras["fp"] == firsts["fp"])
+            & (paras[id_col] == firsts["first"][id_col])
+            & (paras["pos"] == firsts["first"]["pos"]),
+            "left_semi",
         )
-    )
-    return tag_persisted(out, paras)
+        rebuilt = kept.groupBy(id_col).agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "para"))),
+                    lambda s: s["para"],
+                ),
+                sep,
+            ).alias(text_col)
+        )
+        out = (
+            docs.select(F.col(id_col))
+            .join(rebuilt, id_col, "left")
+            .select(
+                F.col(id_col),
+                F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
+            )
+        )
+        return scope.hand(out, paras)
 
 
 def decontaminate(
@@ -1273,96 +1266,88 @@ def dedup_increment(
     sides. The result carries the persisted handles — release with
     :func:`dgraph_dbpedia_spark.operators.cachectl.release` after
     materializing."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    rows_per_band = k // bands
-    sh_e = _hashed_shingled(existing, text_col, id_col, w).persist()
-    sh_b = _hashed_shingled(batch, text_col, id_col, w).persist()
-    bk_e = _lsh_buckets(
-        _sigs_from_hashed(sh_e, id_col, k),
-        id_col, bands, rows_per_band,
-    )
-    bk_b = _lsh_buckets(
-        _sigs_from_hashed(sh_b, id_col, k),
-        id_col, bands, rows_per_band,
-    ).persist()
-
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jacc = F.round(inter / union, 6)
-
-    # step 1: banded cross candidates, exact-Jaccard verified
-    cross = (
-        bk_b.select(F.col(id_col).alias("a"), "band", "bucket")
-        .join(bk_e.select(F.col(id_col).alias("b"), "band", "bucket"),
-              ["band", "bucket"])
-        .select("a", "b")
-        .distinct()
-    )
-    # persisted: ``clean`` (anti-join against killed) is re-evaluated by
-    # every downstream consumer — the component loop's label universe,
-    # its completion join, and the final representative semi-join.
-    # Without the cache each re-evaluation replays the cross-kill join
-    # (measured: the tail went 4.5 s -> ~2 s at sf0.1); killed is a
-    # bounded id set (matched batch docs), far smaller than the batch.
-    killed = (
-        cross.join(
-            sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
-            "a",
+    with CacheScope() as scope:
+        rows_per_band = k // bands
+        sh_e = scope.persist(_hashed_shingled(existing, text_col, id_col, w))
+        sh_b = scope.persist(_hashed_shingled(batch, text_col, id_col, w))
+        bk_e = _lsh_buckets(
+            _sigs_from_hashed(sh_e, id_col, k),
+            id_col, bands, rows_per_band,
         )
-        .join(
-            sh_e.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
-            "b",
+        bk_b = scope.persist(
+            _lsh_buckets(
+                _sigs_from_hashed(sh_b, id_col, k),
+                id_col, bands, rows_per_band,
+            )
         )
-        .where(jacc >= threshold)
-        .select("a")
-        .distinct()
-        .persist()
-    )
-    clean = batch.join(
-        killed.withColumnRenamed("a", id_col), id_col, "left_anti"
-    )
 
-    # step 2: within-batch pairs from the SAME buckets/shingles;
-    # restricting endpoints to clean docs afterwards equals computing
-    # pairs on clean directly (pair membership is pairwise)
-    bcand = (
-        bk_b.select(F.col(id_col).alias("a"), "band", "bucket")
-        .join(bk_b.select(F.col(id_col).alias("b"), "band", "bucket"),
-              ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    clean_ids = clean.select(F.col(id_col))
-    # clean-endpoint restriction BEFORE the exact-Jaccard verify: on a
-    # heavily-overlapping re-ingest most candidates touch a killed doc,
-    # and intersecting their full shingle arrays only to discard the
-    # pair afterwards is pure waste (killed/clean are already known)
-    bpairs = (
-        bcand.join(clean_ids.withColumnRenamed(id_col, "a"), "a", "left_semi")
-        .join(clean_ids.withColumnRenamed(id_col, "b"), "b", "left_semi")
-        .join(
-            sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
-            "a",
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size("sh_a") + F.size("sh_b") - inter
+        jacc = F.round(inter / union, 6)
+
+        # step 1: banded cross candidates, exact-Jaccard verified
+        cross = (
+            bk_b.select(F.col(id_col).alias("a"), "band", "bucket")
+            .join(bk_e.select(F.col(id_col).alias("b"), "band", "bucket"),
+                  ["band", "bucket"])
+            .select("a", "b")
+            .distinct()
         )
-        .join(
-            sh_b.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
-            "b",
+        # persisted: ``clean`` (anti-join against killed) is re-evaluated by
+        # every downstream consumer — the component loop's label universe,
+        # its completion join, and the final representative semi-join.
+        # Without the cache each re-evaluation replays the cross-kill join
+        # (measured: the tail went 4.5 s -> ~2 s at sf0.1); killed is a
+        # bounded id set (matched batch docs), far smaller than the batch.
+        killed = scope.persist(
+            cross.join(
+                sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
+                "a",
+            )
+            .join(
+                sh_e.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
+                "b",
+            )
+            .where(jacc >= threshold)
+            .select("a")
+            .distinct()
         )
-        .where(jacc >= threshold)
-        .select("a", "b")
-    )
-    try:
+        clean = batch.join(
+            killed.withColumnRenamed("a", id_col), id_col, "left_anti"
+        )
+
+        # step 2: within-batch pairs from the SAME buckets/shingles;
+        # restricting endpoints to clean docs afterwards equals computing
+        # pairs on clean directly (pair membership is pairwise)
+        bcand = (
+            bk_b.select(F.col(id_col).alias("a"), "band", "bucket")
+            .join(bk_b.select(F.col(id_col).alias("b"), "band", "bucket"),
+                  ["band", "bucket"])
+            .where(F.col("a") < F.col("b"))
+            .select("a", "b")
+            .distinct()
+        )
+        clean_ids = clean.select(F.col(id_col))
+        # clean-endpoint restriction BEFORE the exact-Jaccard verify: on a
+        # heavily-overlapping re-ingest most candidates touch a killed doc,
+        # and intersecting their full shingle arrays only to discard the
+        # pair afterwards is pure waste (killed/clean are already known)
+        bpairs = (
+            bcand.join(clean_ids.withColumnRenamed(id_col, "a"), "a", "left_semi")
+            .join(clean_ids.withColumnRenamed(id_col, "b"), "b", "left_semi")
+            .join(
+                sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
+                "a",
+            )
+            .join(
+                sh_b.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
+                "b",
+            )
+            .where(jacc >= threshold)
+            .select("a", "b")
+        )
         out = dedup_corpus(clean, bpairs, id_col=id_col)
-    except Exception:
-        # the eager component step raised: there is no result to
-        # carry the release handles, so drop the caches here — the
-        # same leak semantic_dedup's finally fixes
-        for f in (sh_e, sh_b, bk_b, killed):
-            f.unpersist()
-        raise
-    return tag_persisted(out, sh_e, sh_b, bk_b, killed)
+        return scope.hand(out, sh_e, sh_b, bk_b, killed)
 
 
 def minhash_join(
@@ -1386,42 +1371,41 @@ def minhash_join(
     |left| x |right| is never materialized. One shingle pass per side
     feeds signatures and the verify; both are persisted (each feeds
     banding + verify) and ride the result's release handle."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    rows_per_band = k // bands
-    sh_l = _hashed_shingled(left, text_col, id_col, w).persist()
-    sh_r = _hashed_shingled(right, text_col, id_col, w).persist()
-    bk_l = _lsh_buckets(
-        _sigs_from_hashed(sh_l, id_col, k),
-        id_col, bands, rows_per_band,
-    )
-    bk_r = _lsh_buckets(
-        _sigs_from_hashed(sh_r, id_col, k),
-        id_col, bands, rows_per_band,
-    )
-    cands = (
-        bk_l.select(F.col(id_col).alias("a"), "band", "bucket")
-        .join(bk_r.select(F.col(id_col).alias("b"), "band", "bucket"),
-              ["band", "bucket"])
-        .select("a", "b")
-        .distinct()
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    out = (
-        cands.join(
-            sh_l.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
-            "a",
+    with CacheScope() as scope:
+        rows_per_band = k // bands
+        sh_l = scope.persist(_hashed_shingled(left, text_col, id_col, w))
+        sh_r = scope.persist(_hashed_shingled(right, text_col, id_col, w))
+        bk_l = _lsh_buckets(
+            _sigs_from_hashed(sh_l, id_col, k),
+            id_col, bands, rows_per_band,
         )
-        .join(
-            sh_r.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
-            "b",
+        bk_r = _lsh_buckets(
+            _sigs_from_hashed(sh_r, id_col, k),
+            id_col, bands, rows_per_band,
         )
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-    return tag_persisted(out, sh_l, sh_r)
+        cands = (
+            bk_l.select(F.col(id_col).alias("a"), "band", "bucket")
+            .join(bk_r.select(F.col(id_col).alias("b"), "band", "bucket"),
+                  ["band", "bucket"])
+            .select("a", "b")
+            .distinct()
+        )
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size("sh_a") + F.size("sh_b") - inter
+        out = (
+            cands.join(
+                sh_l.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
+                "a",
+            )
+            .join(
+                sh_r.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
+                "b",
+            )
+            .withColumn("jaccard", F.round(inter / union, 6))
+            .where(F.col("jaccard") >= threshold)
+            .select("a", "b", "jaccard")
+        )
+        return scope.hand(out, sh_l, sh_r)
 
 
 def strip_duplicated_spans(
@@ -1467,78 +1451,77 @@ def strip_duplicated_spans(
     frame's persist handle (it feeds windows AND reassembly) — release
     via cachectl after materializing."""
     from dgraph_dbpedia_spark.functions.hashing import _rotl60
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     if L < 2:
         raise ValueError(f"L must be >= 2, got {L}")
-    base = docs.select(
-        F.col(id_col),
-        tokens(F.col(text_col)).alias("__toks"),
-    ).persist()
-    th = token_hashes(F.col("__toks"))
-    warr = F.when(
-        F.size("__th") >= L,
-        F.transform(
-            F.sequence(F.lit(1), F.size("__th") - (L - 1)),
-            lambda i: F.aggregate(
-                F.slice(F.col("__th"), i, L),
-                F.lit(0).cast("bigint"),
-                lambda acc, t: _rotl60(acc).bitwiseXOR(t),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    # two-step select binds __th before the per-window lambda (the
-    # CollapseProject trap), then the inline barrier materializes the
-    # window array before any generate sees it
-    wins = (
-        base.select(F.col(id_col), th.alias("__th"))
-        .select(
-            F.col(id_col),
-            F.inline(F.array(F.struct(warr.alias("wh")))),
+    with CacheScope() as scope:
+        base = scope.persist(
+            docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
         )
-        .select(F.col(id_col), F.posexplode("wh").alias("p", "g"))
-    )
-    firsts = wins.groupBy("g").agg(
-        F.min(F.struct(F.col(id_col), F.col("p"))).alias("f")
-    )
-    dupw = (
-        wins.join(firsts, "g")
-        .where(
-            ~(
-                (F.col(id_col) == F.col("f")[id_col])
-                & (F.col("p") == F.col("f")["p"])
+        th = token_hashes(F.col("__toks"))
+        warr = F.when(
+            F.size("__th") >= L,
+            F.transform(
+                F.sequence(F.lit(1), F.size("__th") - (L - 1)),
+                lambda i: F.aggregate(
+                    F.slice(F.col("__th"), i, L),
+                    F.lit(0).cast("bigint"),
+                    lambda acc, t: _rotl60(acc).bitwiseXOR(t),
+                ),
+            ),
+        ).otherwise(F.array().cast("array<bigint>"))
+        # two-step select binds __th before the per-window lambda (the
+        # CollapseProject trap), then the inline barrier materializes the
+        # window array before any generate sees it
+        wins = (
+            base.select(F.col(id_col), th.alias("__th"))
+            .select(
+                F.col(id_col),
+                F.inline(F.array(F.struct(warr.alias("wh")))),
+            )
+            .select(F.col(id_col), F.posexplode("wh").alias("p", "g"))
+        )
+        firsts = wins.groupBy("g").agg(
+            F.min(F.struct(F.col(id_col), F.col("p"))).alias("f")
+        )
+        dupw = (
+            wins.join(firsts, "g")
+            .where(
+                ~(
+                    (F.col(id_col) == F.col("f")[id_col])
+                    & (F.col("p") == F.col("f")["p"])
+                )
+            )
+            .select(F.col(id_col), F.col("p"))
+        )
+        # window at 0-based explode position p covers 1-based token
+        # positions p+1 .. p+L
+        covered = dupw.select(
+            F.col(id_col),
+            F.explode(F.sequence(F.col("p") + 1, F.col("p") + L)).alias("tp"),
+        ).distinct()
+        tokrows = base.select(
+            F.col(id_col), F.posexplode("__toks").alias("tp0", "tok")
+        ).select(F.col(id_col), (F.col("tp0") + 1).alias("tp"), F.col("tok"))
+        kept = tokrows.join(covered, [id_col, "tp"], "left_anti")
+        rebuilt = kept.groupBy(id_col).agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("tp", "tok"))),
+                    lambda s: s["tok"],
+                ),
+                sep,
+            ).alias(text_col)
+        )
+        out = (
+            docs.select(F.col(id_col))
+            .join(rebuilt, id_col, "left")
+            .select(
+                F.col(id_col),
+                F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
             )
         )
-        .select(F.col(id_col), F.col("p"))
-    )
-    # window at 0-based explode position p covers 1-based token
-    # positions p+1 .. p+L
-    covered = dupw.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.col("p") + 1, F.col("p") + L)).alias("tp"),
-    ).distinct()
-    tokrows = base.select(
-        F.col(id_col), F.posexplode("__toks").alias("tp0", "tok")
-    ).select(F.col(id_col), (F.col("tp0") + 1).alias("tp"), F.col("tok"))
-    kept = tokrows.join(covered, [id_col, "tp"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("tp", "tok"))),
-                lambda s: s["tok"],
-            ),
-            sep,
-        ).alias(text_col)
-    )
-    out = (
-        docs.select(F.col(id_col))
-        .join(rebuilt, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
-        )
-    )
-    return tag_persisted(out, base)
+        return scope.hand(out, base)
 
 
 def winnow_fingerprints(
@@ -1689,7 +1672,6 @@ def winnow_matches(
     doc frequency over BOTH sides, so within mode (each doc once) and
     ``winnow_matches(df, df)`` (each doc twice) can diverge on
     fingerprints whose doc frequency exceeds ``max_fp_freq / 2``."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
 
     def fp_rows(df: DataFrame, out: str) -> DataFrame:
         sets = F.array_remove(
@@ -1702,45 +1684,46 @@ def winnow_matches(
         )
 
     within = df_b is None
-    # persist when any frame feeds more than one plan branch: always in
-    # within mode (the a-frame IS the b-frame, plus the optional
-    # frequency count); cross-mode only under the cap — uncapped, each
-    # frame feeds exactly one branch and caching it is pure overhead
-    if within:
-        fa0 = fp_rows(df_a, "a").persist()
-        fb0 = fa0.withColumnRenamed("a", "b")
-        handles = [fa0]
-        # the doc frequency of a fingerprint is its a-side frequency
-        freq_src = fa0.select("fp")
-    elif max_fp_freq is not None:
-        fa0 = fp_rows(df_a, "a").persist()
-        fb0 = fp_rows(df_b, "b").persist()
-        handles = [fa0, fb0]  # the ORIGINALS, not the semi-joined rebinds
-        freq_src = fa0.select("fp").unionByName(fb0.select("fp"))
-    else:
-        fa0 = fp_rows(df_a, "a")
-        fb0 = fp_rows(df_b, "b")
-        handles = []
-        freq_src = None
-    fa, fb = fa0, fb0
-    if max_fp_freq is not None:
-        freq = (
-            freq_src.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") <= max_fp_freq)
-            .select("fp")
+    with CacheScope() as scope:
+        # persist when any frame feeds more than one plan branch: always in
+        # within mode (the a-frame IS the b-frame, plus the optional
+        # frequency count); cross-mode only under the cap — uncapped, each
+        # frame feeds exactly one branch and caching it is pure overhead
+        if within:
+            fa0 = scope.persist(fp_rows(df_a, "a"))
+            fb0 = fa0.withColumnRenamed("a", "b")
+            handles = [fa0]
+            # the doc frequency of a fingerprint is its a-side frequency
+            freq_src = fa0.select("fp")
+        elif max_fp_freq is not None:
+            fa0 = scope.persist(fp_rows(df_a, "a"))
+            fb0 = scope.persist(fp_rows(df_b, "b"))
+            handles = [fa0, fb0]  # the ORIGINALS, not the semi-joined rebinds
+            freq_src = fa0.select("fp").unionByName(fb0.select("fp"))
+        else:
+            fa0 = fp_rows(df_a, "a")
+            fb0 = fp_rows(df_b, "b")
+            handles = []
+            freq_src = None
+        fa, fb = fa0, fb0
+        if max_fp_freq is not None:
+            freq = (
+                freq_src.groupBy("fp")
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .where(F.col("__n") <= max_fp_freq)
+                .select("fp")
+            )
+            fa = fa0.join(freq, "fp", "left_semi")
+            fb = fb0.join(freq, "fp", "left_semi")
+        joined = fa.join(fb, "fp")
+        if within:
+            joined = joined.where(F.col("a") < F.col("b"))
+        out = (
+            joined.groupBy("a", "b")
+            .agg(F.count(F.lit(1)).alias("n_shared"))
+            .where(F.col("n_shared") >= min_shared)
         )
-        fa = fa0.join(freq, "fp", "left_semi")
-        fb = fb0.join(freq, "fp", "left_semi")
-    joined = fa.join(fb, "fp")
-    if within:
-        joined = joined.where(F.col("a") < F.col("b"))
-    out = (
-        joined.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
-    return tag_persisted(out, *handles)
+        return scope.hand(out, *handles)
 
 
 def split_leakage_report(
@@ -1777,54 +1760,51 @@ def split_leakage_report(
     shuffle joins on the PAIR volume, not the corpus); the pair set
     itself is the banded-join skeleton that already bounds every
     minhash row. The report is a |splits|^2-row aggregate."""
-    from dgraph_dbpedia_spark.operators.cachectl import (
-        persisted_frames,
-        tag_persisted,
-    )
     from dgraph_dbpedia_spark.operators.sampling import split_corpus
 
-    pairs = minhash_dedup_pairs(
-        df,
-        text_col=text_col,
-        id_col=id_col,
-        w=w,
-        k=k,
-        bands=bands,
-        threshold=threshold,
-    )
-    splits = split_corpus(df, fractions, id_col=id_col, seed=seed).select(
-        F.col(id_col),
-        F.coalesce(F.col("split"), F.lit("holdout")).alias("split"),
-    )
-    labeled = (
-        pairs.join(
-            splits.select(
-                F.col(id_col).alias("a"), F.col("split").alias("_sa")
-            ),
-            "a",
+    with CacheScope() as scope:
+        pairs = minhash_dedup_pairs(
+            df,
+            text_col=text_col,
+            id_col=id_col,
+            w=w,
+            k=k,
+            bands=bands,
+            threshold=threshold,
         )
-        .join(
-            splits.select(
-                F.col(id_col).alias("b"), F.col("split").alias("_sb")
-            ),
-            "b",
+        splits = split_corpus(df, fractions, id_col=id_col, seed=seed).select(
+            F.col(id_col),
+            F.coalesce(F.col("split"), F.lit("holdout")).alias("split"),
         )
-        .where(F.col("_sa") != F.col("_sb"))
-    )
-    swap = F.col("_sa") > F.col("_sb")
-    normalized = labeled.select(
-        F.when(swap, F.col("_sb")).otherwise(F.col("_sa")).alias("split_a"),
-        F.when(swap, F.col("_sa")).otherwise(F.col("_sb")).alias("split_b"),
-        F.when(swap, F.col("b")).otherwise(F.col("a")).alias("_da"),
-        F.when(swap, F.col("a")).otherwise(F.col("b")).alias("_db"),
-        "jaccard",
-    )
-    out = normalized.groupBy("split_a", "split_b").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.countDistinct("_da").cast("long").alias("n_docs_a"),
-        F.countDistinct("_db").cast("long").alias("n_docs_b"),
-        F.max("jaccard").alias("max_jaccard"),
-    )
-    # transfer the inner pair op's persisted handles (the shared
-    # shingle frame), not the unpersisted pairs frame itself
-    return tag_persisted(out, *persisted_frames(pairs))
+        labeled = (
+            pairs.join(
+                splits.select(
+                    F.col(id_col).alias("a"), F.col("split").alias("_sa")
+                ),
+                "a",
+            )
+            .join(
+                splits.select(
+                    F.col(id_col).alias("b"), F.col("split").alias("_sb")
+                ),
+                "b",
+            )
+            .where(F.col("_sa") != F.col("_sb"))
+        )
+        swap = F.col("_sa") > F.col("_sb")
+        normalized = labeled.select(
+            F.when(swap, F.col("_sb")).otherwise(F.col("_sa")).alias("split_a"),
+            F.when(swap, F.col("_sa")).otherwise(F.col("_sb")).alias("split_b"),
+            F.when(swap, F.col("b")).otherwise(F.col("a")).alias("_da"),
+            F.when(swap, F.col("a")).otherwise(F.col("b")).alias("_db"),
+            "jaccard",
+        )
+        out = normalized.groupBy("split_a", "split_b").agg(
+            F.count(F.lit(1)).cast("long").alias("n_pairs"),
+            F.countDistinct("_da").cast("long").alias("n_docs_a"),
+            F.countDistinct("_db").cast("long").alias("n_docs_b"),
+            F.max("jaccard").alias("max_jaccard"),
+        )
+        # transfer the inner pair op's persisted handles (the shared
+        # shingle frame), not the unpersisted pairs frame itself
+        return scope.hand(out, *persisted_frames(pairs))

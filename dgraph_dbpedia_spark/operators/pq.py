@@ -36,6 +36,7 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope
 from dgraph_dbpedia_spark.operators.similarity import (
     _capped_collect,
     _dot,
@@ -136,89 +137,89 @@ def pq_train(
     e = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    # fused seeds: ONE lowest-k_sub-ids scan (the ivf_seed_centroids
-    # rule applied once, not per subspace); dense cid = seed-id rank.
-    # The Window is over the k_sub-row limit, not the corpus.
-    seeds = (
-        e.orderBy(id_col)
-        .limit(k_sub)
-        .select(
-            (
-                F.row_number().over(Window.orderBy(id_col)) - F.lit(1)
-            ).alias("cid"),
-            "_v",
+    with CacheScope() as scope:
+        # fused seeds: ONE lowest-k_sub-ids scan (the ivf_seed_centroids
+        # rule applied once, not per subspace); dense cid = seed-id rank.
+        # The Window is over the k_sub-row limit, not the corpus.
+        seeds = scope.checkpoint(
+            e.orderBy(id_col)
+            .limit(k_sub)
+            .select(
+                (
+                    F.row_number().over(Window.orderBy(id_col)) - F.lit(1)
+                ).alias("cid"),
+                "_v",
+            )
+            .select(
+                "cid",
+                # w = the SOURCE vector's full width, carried beside every
+                # slice: a slice-only check cannot tell a 2*dims-wide
+                # vector (whose every slice is still sub-wide) from a
+                # complete one (r12 review — the guard must reject BOTH
+                # directions of width mismatch)
+                F.inline(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(j).alias("j"),
+                                F.slice("_v", j * sub + 1, sub).alias("c"),
+                                F.size("_v").alias("w"),
+                            )
+                            for j in range(m)
+                        ]
+                    )
+                ),
+            )
+            .select("j", "cid", "c", "w")
         )
-        .select(
-            "cid",
-            # w = the SOURCE vector's full width, carried beside every
-            # slice: a slice-only check cannot tell a 2*dims-wide
-            # vector (whose every slice is still sub-wide) from a
-            # complete one (r12 review — the guard must reject BOTH
-            # directions of width mismatch)
-            F.inline(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.slice("_v", j * sub + 1, sub).alias("c"),
-                            F.size("_v").alias("w"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ),
-        )
-        .select("j", "cid", "c", "w")
-        .localCheckpoint()
-    )
-    # loud seed validation (one bounded m x k_sub read of the frame
-    # just checkpointed — each iteration re-reads it anyway): a NULL,
-    # short, or over-long vector among the k_sub lowest ids would
-    # otherwise train a DEGENERATE codebook — an opaque width error
-    # inside _read_codebooks, or a dims-prefix of a wider vector
-    # (r12 review: a poisoned seed is caller error)
-    seed_rows = seeds.collect()
-    if not seed_rows:
-        raise ValueError(
-            "pq_train: empty corpus — no vectors to seed centroids"
-        )
-    for r in seed_rows:
-        if r["c"] is None or len(r["c"]) != sub or r["w"] != dims:
+        # loud seed validation (one bounded m x k_sub read of the frame
+        # just checkpointed — each iteration re-reads it anyway): a NULL,
+        # short, or over-long vector among the k_sub lowest ids would
+        # otherwise train a DEGENERATE codebook — an opaque width error
+        # inside _read_codebooks, or a dims-prefix of a wider vector
+        # (r12 review: a poisoned seed is caller error)
+        seed_rows = seeds.collect()
+        if not seed_rows:
             raise ValueError(
-                f"pq_train: seed (j={r['j']}, cid={r['cid']}) comes "
-                f"from a NULL or non-{dims}-wide vector (width "
-                f"{r['w']}) — the lowest-id seed vectors must be "
-                f"complete {dims}-dim vectors"
+                "pq_train: empty corpus — no vectors to seed centroids"
             )
+        for r in seed_rows:
+            if r["c"] is None or len(r["c"]) != sub or r["w"] != dims:
+                raise ValueError(
+                    f"pq_train: seed (j={r['j']}, cid={r['cid']}) comes "
+                    f"from a NULL or non-{dims}-wide vector (width "
+                    f"{r['w']}) — the lowest-id seed vectors must be "
+                    f"complete {dims}-dim vectors"
+                )
 
-    def assign(cent: DataFrame) -> DataFrame:
-        # ONE corpus pass for all m subspace assignments, emitted
-        # through the inline(array(struct)) barrier. Per-iteration
-        # bounded collect of the m x k_sub frame just checkpointed (an
-        # X6 read, never a corpus job); the codes column binds in its
-        # OWN select so the m get()s below reference ONE Arrow eval,
-        # not m CollapseProject-duplicated kernel runs
-        enc = encode_codes_arrow(
-            _read_codebooks(cent, "j", m, sub, "subspace")
-        )
-        return e.select("_v", enc(F.col("_v")).alias("_codes")).select(
-            F.inline(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.get("_codes", j).alias("cid"),
-                            F.slice("_v", j * sub + 1, sub).alias("sv"),
-                        )
-                        for j in range(m)
-                    ]
+        def assign(cent: DataFrame) -> DataFrame:
+            # ONE corpus pass for all m subspace assignments, emitted
+            # through the inline(array(struct)) barrier. Per-iteration
+            # bounded collect of the m x k_sub frame just checkpointed (an
+            # X6 read, never a corpus job); the codes column binds in its
+            # OWN select so the m get()s below reference ONE Arrow eval,
+            # not m CollapseProject-duplicated kernel runs
+            enc = encode_codes_arrow(
+                _read_codebooks(cent, "j", m, sub, "subspace")
+            )
+            return e.select("_v", enc(F.col("_v")).alias("_codes")).select(
+                F.inline(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(j).alias("j"),
+                                F.get("_codes", j).alias("cid"),
+                                F.slice("_v", j * sub + 1, sub).alias("sv"),
+                            )
+                            for j in range(m)
+                        ]
+                    )
                 )
             )
-        )
 
-    return _lloyd_refine(
-        seeds, ["j", "cid"], n_iter, round_decimals, "sv", assign
-    )
+        return _lloyd_refine(
+            scope, seeds, ["j", "cid"], n_iter, round_decimals, "sv", assign
+        )
 
 
 def _codebook_row(codebooks: DataFrame) -> DataFrame:

@@ -41,6 +41,7 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope
 from dgraph_dbpedia_spark.operators.pq import (
     _exact_rerank,
     _nearest_l2,
@@ -147,57 +148,50 @@ def rq_train(
     kernel's assignments stay bit-equal to it (pinned against
     :func:`..pq._pq_encode_native`), so trained values and the DuckDB
     replay match the fold's."""
-    from dgraph_dbpedia_spark.operators.cachectl import (
-        release_local_checkpoint,
-    )
-
     _rq_validate(dims, k_sub, n_levels)
     cur = df.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_rv")
     )
     out: DataFrame | None = None
-    cps: list[DataFrame] = []
-    for lvl in range(n_levels):
-        cb = pq_train(
-            cur,
-            dims,
-            m=1,
-            k_sub=k_sub,
-            n_iter=n_iter,
-            id_col=id_col,
-            vec_col="_rv",
-            round_decimals=round_decimals,
-        ).select(F.lit(lvl).alias("lvl"), "cid", "c")
-        out = cb if out is None else out.unionByName(cb)
-        if lvl < n_levels - 1:
-            stage = _stage_row(cb, lvl)
-            # the cid binds in its OWN select (CollapseProject) and the
-            # winning centroid/residual stay native
-            asg = cur.select(
-                F.col(id_col),
-                F.col("_rv"),
-                _stage_code(cb, dims, F.col("_rv")).alias("_c0"),
-            ).crossJoin(F.broadcast(stage))
-            win = F.get(
-                F.filter(
-                    F.col("_cent"), lambda s: s["cid"] == F.col("_c0")
-                ),
-                0,
-            )["c"]
-            cur = asg.select(
-                F.col(id_col),
-                F.zip_with("_rv", win, lambda a, b: a - b).alias("_rv"),
-            ).localCheckpoint()
-            cps.append(cur)
     # stage residual checkpoints are only read while the NEXT stage
     # trains, and `out` is built solely from pq_train's own
-    # checkpointed (lineage-free) frames — so EVERY residual
-    # checkpoint is garbage by now; free them all (the r12 review
-    # caught a cps[:-1] slice here stranding one corpus-sized frame
-    # per training run)
-    for cp in cps:
-        release_local_checkpoint(cp)
-    return out
+    # checkpointed (lineage-free) frames — so the scope frees EVERY
+    # residual checkpoint when training ends
+    with CacheScope() as scope:
+        for lvl in range(n_levels):
+            cb = pq_train(
+                cur,
+                dims,
+                m=1,
+                k_sub=k_sub,
+                n_iter=n_iter,
+                id_col=id_col,
+                vec_col="_rv",
+                round_decimals=round_decimals,
+            ).select(F.lit(lvl).alias("lvl"), "cid", "c")
+            out = cb if out is None else out.unionByName(cb)
+            if lvl < n_levels - 1:
+                stage = _stage_row(cb, lvl)
+                # the cid binds in its OWN select (CollapseProject) and the
+                # winning centroid/residual stay native
+                asg = cur.select(
+                    F.col(id_col),
+                    F.col("_rv"),
+                    _stage_code(cb, dims, F.col("_rv")).alias("_c0"),
+                ).crossJoin(F.broadcast(stage))
+                win = F.get(
+                    F.filter(
+                        F.col("_cent"), lambda s: s["cid"] == F.col("_c0")
+                    ),
+                    0,
+                )["c"]
+                cur = scope.checkpoint(
+                    asg.select(
+                        F.col(id_col),
+                        F.zip_with("_rv", win, lambda a, b: a - b).alias("_rv"),
+                    )
+                )
+        return out
 
 
 def rq_codes_arrow(cmats):

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dgraph_dbpedia_spark.functions.hashing import hash64, tokens
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope, persisted_frames
 
 
 def stratified_sample(
@@ -586,84 +587,81 @@ def dsir_logratio(
     SORTED per-feature ratios sequentially (unigram_logprob's
     determinism rule: float addition is non-associative, so the rounded
     4th decimal must not depend on row order)."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
     if smoothing <= 0:
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
     tf = _dsir_feats(target, text_col, id_col, buckets)
     rf = _dsir_feats(raw, text_col, id_col, buckets)
-    # persisted: each model feeds its totals aggregate AND the merged
-    # frame (no cross-branch subplan sharing — unpersisted, the
-    # corpus-wide tokenize+hash+explode+groupBy would re-run per
-    # branch, two redundant full passes at scale). Both are bounded by
-    # ``buckets`` rows and ride the result's release handle.
-    tm = tf.groupBy("b").agg(F.count(F.lit(1)).alias("ct")).persist()
-    rm = rf.groupBy("b").agg(F.count(F.lit(1)).alias("cr")).persist()
-    # eager degeneracy check on the (persisted, so not recomputed)
-    # target model: an empty target — no docs, or none with >= 2
-    # tokens — would make the totals NULL and every score silently
-    # NULL, so dsir_sample would return an empty sample
-    # indistinguishable from "nothing qualified". Raise loudly instead
-    # (the dedup_clusters_star non-convergence convention).
-    if tm.count() == 0:
-        tm.unpersist()
-        rm.unpersist()
-        raise ValueError(
-            "dsir_logratio: the target corpus produced zero bigram "
-            "features (empty, or every doc has < 2 tokens) — no "
-            "importance model can be fit"
+    with CacheScope() as scope:
+        # persisted: each model feeds its totals aggregate AND the merged
+        # frame (no cross-branch subplan sharing — unpersisted, the
+        # corpus-wide tokenize+hash+explode+groupBy would re-run per
+        # branch, two redundant full passes at scale). Both are bounded by
+        # ``buckets`` rows and ride the result's release handle.
+        tm = scope.persist(tf.groupBy("b").agg(F.count(F.lit(1)).alias("ct")))
+        rm = scope.persist(rf.groupBy("b").agg(F.count(F.lit(1)).alias("cr")))
+        # eager degeneracy check on the (persisted, so not recomputed)
+        # target model: an empty target — no docs, or none with >= 2
+        # tokens — would make the totals NULL and every score silently
+        # NULL, so dsir_sample would return an empty sample
+        # indistinguishable from "nothing qualified". Raise loudly instead
+        # (the dedup_clusters_star non-convergence convention).
+        if tm.count() == 0:
+            raise ValueError(
+                "dsir_logratio: the target corpus produced zero bigram "
+                "features (empty, or every doc has < 2 tokens) — no "
+                "importance model can be fit"
+            )
+        # one bounded model frame: full outer on the bucket id (a feature
+        # may occur in only one corpus), totals via a broadcast 1-row
+        # crossJoin (X6), per-bucket log ratio precomputed once
+        scal = (
+            tm.agg(F.sum("ct").alias("__tt"))
+            .crossJoin(rm.agg(F.sum("cr").alias("__tr")))
         )
-    # one bounded model frame: full outer on the bucket id (a feature
-    # may occur in only one corpus), totals via a broadcast 1-row
-    # crossJoin (X6), per-bucket log ratio precomputed once
-    scal = (
-        tm.agg(F.sum("ct").alias("__tt"))
-        .crossJoin(rm.agg(F.sum("cr").alias("__tr")))
-    )
-    s = float(smoothing)
-    merged = (
-        tm.join(rm, "b", "full_outer")
-        .select(
-            "b",
-            F.coalesce("ct", F.lit(0)).alias("ct"),
-            F.coalesce("cr", F.lit(0)).alias("cr"),
+        s = float(smoothing)
+        merged = (
+            tm.join(rm, "b", "full_outer")
+            .select(
+                "b",
+                F.coalesce("ct", F.lit(0)).alias("ct"),
+                F.coalesce("cr", F.lit(0)).alias("cr"),
+            )
+            .crossJoin(F.broadcast(scal))
+            .select(
+                "b",
+                (
+                    F.log((F.col("ct") + s) / (F.col("__tt") + s * buckets))
+                    - F.log((F.col("cr") + s) / (F.col("__tr") + s * buckets))
+                ).alias("lr"),
+            )
         )
-        .crossJoin(F.broadcast(scal))
-        .select(
-            "b",
-            (
-                F.log((F.col("ct") + s) / (F.col("__tt") + s * buckets))
-                - F.log((F.col("cr") + s) / (F.col("__tr") + s * buckets))
-            ).alias("lr"),
+        scored = (
+            rf.join(F.broadcast(merged), "b")
+            .groupBy(id_col)
+            .agg(
+                F.count(F.lit(1)).alias("n_feats"),
+                F.sort_array(F.collect_list("lr")).alias("__lrs"),
+            )
+            .select(
+                F.col(id_col),
+                F.col("n_feats"),
+                F.round(
+                    F.aggregate("__lrs", F.lit(0.0), lambda a, x: a + x), 4
+                ).alias("log_ratio"),
+            )
         )
-    )
-    scored = (
-        rf.join(F.broadcast(merged), "b")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_feats"),
-            F.sort_array(F.collect_list("lr")).alias("__lrs"),
+        out = (
+            raw.select(F.col(id_col))
+            .join(scored, id_col, "left")
+            .select(
+                F.col(id_col),
+                F.coalesce("n_feats", F.lit(0)).alias("n_feats"),
+                F.col("log_ratio"),
+            )
         )
-        .select(
-            F.col(id_col),
-            F.col("n_feats"),
-            F.round(
-                F.aggregate("__lrs", F.lit(0.0), lambda a, x: a + x), 4
-            ).alias("log_ratio"),
-        )
-    )
-    out = (
-        raw.select(F.col(id_col))
-        .join(scored, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_feats", F.lit(0)).alias("n_feats"),
-            F.col("log_ratio"),
-        )
-    )
-    return tag_persisted(out, tm, rm)
+        return scope.hand(out, tm, rm)
 
 
 def dsir_sample(
@@ -693,31 +691,27 @@ def dsir_sample(
     Scale shape: scoring as :func:`dsir_logratio` (bounded broadcast
     model), then ONE TakeOrdered bounded by ``n`` — no global sort
     materialization."""
-    from dgraph_dbpedia_spark.operators.cachectl import (
-        persisted_frames,
-        tag_persisted,
-    )
-
     if n <= 0:
         raise ValueError(f"n must be positive, got {n}")
-    # keep a reference to the TAGGED frame: the release handles live as
-    # a Python attribute on that exact object, and .where() returns a
-    # new object without them
-    scored = dsir_logratio(raw, target, text_col, id_col, buckets, smoothing)
-    scores = scored.where(F.col("log_ratio").isNotNull())
-    u = (
-        F.pmod(hash64(F.col(id_col).cast("string"), seed=seed), F.lit(1_000_000))
-        + F.lit(0.5)
-    ) / 1_000_000.0
-    gumbel = -F.log(-F.log(u))
-    keyed = scores.select(
-        F.col(id_col),
-        F.round(F.col("log_ratio") + gumbel, 6).alias("__key"),
-    )
-    picked = keyed.orderBy(F.col("__key").desc(), F.col(id_col)).limit(n)
-    out = raw.join(picked.select(id_col), id_col, "left_semi")
-    # the scoring frame's model caches ride through to the caller
-    return tag_persisted(out, *persisted_frames(scored))
+    with CacheScope() as scope:
+        # keep a reference to the TAGGED frame: the release handles live as
+        # a Python attribute on that exact object, and .where() returns a
+        # new object without them
+        scored = dsir_logratio(raw, target, text_col, id_col, buckets, smoothing)
+        scores = scored.where(F.col("log_ratio").isNotNull())
+        u = (
+            F.pmod(hash64(F.col(id_col).cast("string"), seed=seed), F.lit(1_000_000))
+            + F.lit(0.5)
+        ) / 1_000_000.0
+        gumbel = -F.log(-F.log(u))
+        keyed = scores.select(
+            F.col(id_col),
+            F.round(F.col("log_ratio") + gumbel, 6).alias("__key"),
+        )
+        picked = keyed.orderBy(F.col("__key").desc(), F.col(id_col)).limit(n)
+        out = raw.join(picked.select(id_col), id_col, "left_semi")
+        # the scoring frame's model caches ride through to the caller
+        return scope.hand(out, *persisted_frames(scored))
 
 
 def epoch_shuffle(

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dgraph_dbpedia_spark.functions.hashing import hash64
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope
 
 
 def _dot(a: Column | str, b: Column | str) -> Column:
@@ -960,17 +961,20 @@ def ivf_train(
     # the per-iteration centroid collect (ivf_assign) reads the
     # 8-row localCheckpoint just made — a bounded X6 read, not a
     # corpus job
-    return _lloyd_refine(
-        seeds.localCheckpoint(),
-        ["cid"],
-        n_iter,
-        round_decimals,
-        "e",
-        lambda c_: ivf_assign(e, c_, id_col=id_col, vec_col="e"),
-    )
+    with CacheScope() as scope:
+        return _lloyd_refine(
+            scope,
+            scope.checkpoint(seeds),
+            ["cid"],
+            n_iter,
+            round_decimals,
+            "e",
+            lambda c_: ivf_assign(e, c_, id_col=id_col, vec_col="e"),
+        )
 
 
 def _lloyd_refine(
+    scope: CacheScope,
     seeds: DataFrame,
     keys: list[str],
     n_iter: int,
@@ -981,18 +985,17 @@ def _lloyd_refine(
     """The ONE deterministic Lloyd loop, run by :func:`ivf_train`
     (``keys=["cid"]``, cosine assignment) and ``operators.pq.pq_train``
     (``keys=["j", "cid"]``, fused L2 assignment of all ``m`` subspaces;
-    RQ trains each stage through it). ``seeds`` is the caller's
-    localCheckpoint-ed seed frame carrying ``keys`` and ``c`` (the seed
-    rule and its validation are the caller's contract); the loop takes
-    ownership of that checkpoint. ``assign(cent)`` returns a frame
-    carrying ``keys`` and ``vec_col``, the vectors each centroid
-    averages. The loop owns the rest: the partially aggregable rounded
-    ``(keys, pos)`` means, the empty-cluster ``coalesce`` (a centroid
-    whose list goes empty keeps its position) and the per-iteration
-    localCheckpoint with deterministic release, so that choreography
-    exists exactly once."""
-    from dgraph_dbpedia_spark.operators.cachectl import release_local_checkpoint
-
+    RQ trains each stage through it). ``seeds`` is the seed frame
+    carrying ``keys`` and ``c``, checkpointed through the caller's
+    ``scope`` (the seed rule and its validation are the caller's
+    contract). ``assign(cent)`` returns a frame carrying ``keys`` and
+    ``vec_col``, the vectors each centroid averages. The loop owns the
+    rest: the partially aggregable rounded ``(keys, pos)`` means, the
+    empty-cluster ``coalesce`` (a centroid whose list goes empty keeps
+    its position) and the per-iteration localCheckpoint, each freed
+    through ``scope`` once the next one exists, so that choreography
+    exists exactly once. The last checkpoint backs the returned
+    centroids; a raise leaves ``scope`` to free the live one."""
     cent = seeds.select(*keys, "c")
     last_cp = seeds
     for _ in range(n_iter):
@@ -1011,13 +1014,14 @@ def _lloyd_refine(
                 ).alias("c2")
             )
         )
-        cent = (
-            cent.join(means, keys, "left")
-            .select(*keys, F.coalesce("c2", "c").alias("c"))
-            .localCheckpoint()
+        cent = scope.checkpoint(
+            cent.join(means, keys, "left").select(
+                *keys, F.coalesce("c2", "c").alias("c")
+            )
         )
-        release_local_checkpoint(last_cp)
+        scope.free(last_cp)
         last_cp = cent
+    scope.keep(last_cp)
     return cent
 
 
@@ -1121,28 +1125,29 @@ def _probe_many(
     (sample, limit without order) re-executed per consumer could
     otherwise probe cids absent from the collected union, silently
     dropping those queries' candidates. The checkpoint is bounded by
-    the max_queries cap applied first; its blocks are GC-released by
-    the ContextCleaner once the result frame is dropped. The collect
-    is bounded (X6): qids + probe cids only, capped by max_queries."""
+    the max_queries cap applied first; it backs the result, so its
+    blocks are GC-released by the ContextCleaner once the result frame
+    is dropped (freed at once when the cap raises). The collect is
+    bounded (X6): qids + probe cids only, capped by max_queries."""
     probes = F.transform(
         F.slice(_nearest_sorted(F.col("q"), _norm("q")), 1, n_probe),
         lambda s: s["cid"],
     )
-    qp = (
-        q.crossJoin(F.broadcast(_centroid_row(centroids)))
-        .select(F.col(qid_col), F.col("q"), probes.alias("_probes"))
-        .limit(max_queries + 1)
-        .localCheckpoint()
-    )
-    probe_rows = qp.select(qid_col, "_probes").collect()
-    if len(probe_rows) > max_queries:
-        raise ValueError(
-            f"batch probe got more than max_queries={max_queries} "
-            "query vectors — the per-query probe collect is bounded by "
-            "contract; split the batch or raise max_queries explicitly"
+    with CacheScope() as scope:
+        qp = scope.checkpoint(
+            q.crossJoin(F.broadcast(_centroid_row(centroids)))
+            .select(F.col(qid_col), F.col("q"), probes.alias("_probes"))
+            .limit(max_queries + 1)
         )
-    union_cids = sorted({c for r in probe_rows for c in r["_probes"]})
-    return qp, union_cids
+        probe_rows = qp.select(qid_col, "_probes").collect()
+        if len(probe_rows) > max_queries:
+            raise ValueError(
+                f"batch probe got more than max_queries={max_queries} "
+                "query vectors — the per-query probe collect is bounded by "
+                "contract; split the batch or raise max_queries explicitly"
+            )
+        union_cids = sorted({c for r in probe_rows for c in r["_probes"]})
+        return scope.keep(qp), union_cids
 
 
 def ivf_topk_served_many(
@@ -1645,39 +1650,40 @@ def cosine_near_dup_pairs(
     :func:`dgraph_dbpedia_spark.operators.cachectl.release` after
     materializing (long-lived sessions would otherwise accumulate
     cached partitions)."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    # norms precomputed per VECTOR (n rows), not per pair (~n^2/buckets
-    # rows): inside the bucket join only the dot product remains —
-    # higher-order array aggregates run interpreted, so halving the
-    # per-pair array passes matters
-    # persisted: the sketch feeds both self-join sides — without it the
-    # sign/norm computation runs twice (no cross-branch subplan sharing)
-    sk = df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("e"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("n"),
-        hyperplane_signs_arrow(n_planes, dims)(
-            F.col(vec_col).cast("array<double>")
-        ).alias("bucket"),
-    ).persist()
-    a = sk.select(F.col(id_col).alias("a"), F.col("e").alias("ea"), F.col("n").alias("na"), "bucket")
-    b = sk.select(F.col(id_col).alias("b"), F.col("e").alias("eb"), F.col("n").alias("nb"), "bucket")
-    # pairs score with one einsum per Arrow batch (see
-    # semantic_dedup_pairs)
-    sim = pair_cosine_arrow(4)(
-        F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
-    )
-    out = (
-        a.join(b, "bucket")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", sim.alias("sim"))
-        .where(F.col("sim") >= threshold)
-        # no distinct: each vector has exactly ONE bucket, so the
-        # bucket self-join emits every (a, b) pair at most once — a
-        # distinct here would be a full extra shuffle of the output
-    )
-    return tag_persisted(out, sk)
+    with CacheScope() as scope:
+        # norms precomputed per VECTOR (n rows), not per pair (~n^2/buckets
+        # rows): inside the bucket join only the dot product remains —
+        # higher-order array aggregates run interpreted, so halving the
+        # per-pair array passes matters
+        # persisted: the sketch feeds both self-join sides — without it the
+        # sign/norm computation runs twice (no cross-branch subplan sharing)
+        sk = scope.persist(
+            df.select(
+                F.col(id_col),
+                F.col(vec_col).cast("array<double>").alias("e"),
+                _norm(F.col(vec_col).cast("array<double>")).alias("n"),
+                hyperplane_signs_arrow(n_planes, dims)(
+                    F.col(vec_col).cast("array<double>")
+                ).alias("bucket"),
+            )
+        )
+        a = sk.select(F.col(id_col).alias("a"), F.col("e").alias("ea"), F.col("n").alias("na"), "bucket")
+        b = sk.select(F.col(id_col).alias("b"), F.col("e").alias("eb"), F.col("n").alias("nb"), "bucket")
+        # pairs score with one einsum per Arrow batch (see
+        # semantic_dedup_pairs)
+        sim = pair_cosine_arrow(4)(
+            F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
+        )
+        out = (
+            a.join(b, "bucket")
+            .where(F.col("a") < F.col("b"))
+            .select("a", "b", sim.alias("sim"))
+            .where(F.col("sim") >= threshold)
+            # no distinct: each vector has exactly ONE bucket, so the
+            # bucket self-join emits every (a, b) pair at most once — a
+            # distinct here would be a full extra shuffle of the output
+        )
+        return scope.hand(out, sk)
 
 
 def semantic_decontaminate(
@@ -1824,16 +1830,16 @@ def semantic_dedup_pairs(
     plain dot — no norm columns through the cid shuffle, no divide on
     any of the ~n^2/k candidate pairs (see
     :func:`_semantic_sk_pairs`)."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    sk, out = _semantic_sk_pairs(
-        df, threshold, centroids, n_centroids, id_col, vec_col,
-        normalized=normalized,
-    )
-    return tag_persisted(out, sk)
+    with CacheScope() as scope:
+        sk, out = _semantic_sk_pairs(
+            scope, df, threshold, centroids, n_centroids, id_col, vec_col,
+            normalized=normalized,
+        )
+        return scope.hand(out, sk)
 
 
 def _semantic_sk_pairs(
+    scope: CacheScope,
     df: DataFrame,
     threshold: float,
     centroids: DataFrame | None,
@@ -1849,7 +1855,7 @@ def _semantic_sk_pairs(
     vector's rounded cosine to its assigned centroid on the assignment
     frame (the ``keep='low_centroid_sim'`` policy needs it — one
     assignment pass serves pairs AND representative selection). The
-    caller owns the persisted handle.
+    assignment frame is persisted through the caller's ``scope``.
 
     ``normalized=True``: the input vectors are unit-norm
     (:func:`normalize_embeddings` output) — pair cosine degenerates to
@@ -1878,11 +1884,13 @@ def _semantic_sk_pairs(
     # persisted: assignment + norm feed both self-join sides — without
     # it the centroid scoring runs twice (no cross-branch sharing).
     # norm_col reuses the norm the assignment already computed.
-    sk = ivf_assign(
-        e, centroids, id_col=id_col, vec_col="_e",
-        norm_col=None if normalized else "_n",
-        sim_col=sim_col,
-    ).persist()
+    sk = scope.persist(
+        ivf_assign(
+            e, centroids, id_col=id_col, vec_col="_e",
+            norm_col=None if normalized else "_n",
+            sim_col=sim_col,
+        )
+    )
     a = sk.select(
         F.col(id_col).alias("a"),
         F.col("_e").alias("ea"),
@@ -1960,39 +1968,30 @@ def semantic_dedup(
         raise ValueError(
             f"keep must be 'min_id' or 'low_centroid_sim', got {keep!r}"
         )
-    sk, pairs = _semantic_sk_pairs(
-        df, threshold, centroids, n_centroids, id_col, vec_col,
-        sim_col="_csim" if keep == "low_centroid_sim" else None,
-    )
     # the star contraction eagerly materializes the component labels
-    # into a checkpoint-rooted frame, so the assignment cache can be
-    # released as soon as the representative set is pinned; finally: a
-    # failure in the component step must not leave the corpus-sized
-    # assignment cache alive past it
-    try:
+    # into a checkpoint-rooted frame, so the scope frees the assignment
+    # cache as soon as the representative set is pinned
+    with CacheScope() as scope:
+        sk, pairs = _semantic_sk_pairs(
+            scope, df, threshold, centroids, n_centroids, id_col, vec_col,
+            sim_col="_csim" if keep == "low_centroid_sim" else None,
+        )
         if keep == "min_id":
-            out = dedup_corpus(df, pairs.select("a", "b"), id_col=id_col)
-        else:
-            clusters = dedup_clusters_star(
-                df.select(F.col(id_col)), pairs.select("a", "b"), id_col=id_col
-            )
-            # one id per component; localCheckpoint pins the selection
-            # (bounded by #components — the same scale class as the
-            # star contraction's own checkpoints) so the assignment
-            # cache can be dropped before the result is consumed
-            reps = (
-                clusters.join(sk.select(F.col(id_col), "_csim"), id_col)
-                .groupBy("cluster_id")
-                .agg(
-                    F.min(F.struct(F.col("_csim"), F.col(id_col))).alias("_m")
-                )
-                .select(F.col("_m")[id_col].alias(id_col))
-                .localCheckpoint()
-            )
-            out = df.join(reps, id_col, "left_semi")
-    finally:
-        sk.unpersist()
-    return out
+            return dedup_corpus(df, pairs.select("a", "b"), id_col=id_col)
+        clusters = dedup_clusters_star(
+            df.select(F.col(id_col)), pairs.select("a", "b"), id_col=id_col
+        )
+        # one id per component; localCheckpoint pins the selection
+        # (bounded by #components — the same scale class as the star
+        # contraction's own checkpoints) so the assignment cache can be
+        # dropped before the result is consumed
+        reps = scope.checkpoint(
+            clusters.join(sk.select(F.col(id_col), "_csim"), id_col)
+            .groupBy("cluster_id")
+            .agg(F.min(F.struct(F.col("_csim"), F.col(id_col))).alias("_m"))
+            .select(F.col("_m")[id_col].alias(id_col))
+        )
+        return df.join(scope.keep(reps), id_col, "left_semi")
 
 
 def ann_join(
@@ -2147,14 +2146,14 @@ def hard_negatives(
 
 
 def _group_centroids(
-    df: DataFrame, group_col: str, vec_col: str, mean_decimals: int
+    scope: CacheScope, df: DataFrame, group_col: str, vec_col: str, mean_decimals: int
 ) -> tuple[DataFrame, DataFrame]:
     """Shared centroid pipeline for :func:`embedding_drift` and
     :func:`embedding_outliers` (r12 review: ONE definition of the
     Lloyd-rule rounding / -0.0 fold / persist discipline): returns
-    ``(per, gm)`` where ``per`` is the PERSISTED partial-aggregable
-    ``(_g, pos, s, c)`` frame (caller must ride it on the result's
-    release handle) and ``gm`` the bounded ``(_g, _gm)`` per-group
+    ``(per, gm)`` where ``per`` is the partial-aggregable ``(_g, pos,
+    s, c)`` frame, persisted through ``scope`` (the caller hands it to
+    its result), and ``gm`` the bounded ``(_g, _gm)`` per-group
     centroid frame with round-``mean_decimals`` -0.0-folded
     components."""
     g = F.col(group_col)
@@ -2164,10 +2163,10 @@ def _group_centroids(
             "pos", "v"
         ),
     )
-    per = (
-        ex.groupBy("_g", "pos")
-        .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-        .persist()
+    per = scope.persist(
+        ex.groupBy("_g", "pos").agg(
+            F.sum("v").alias("s"), F.count(F.lit(1)).alias("c")
+        )
     )
     gm = per.groupBy("_g").agg(
         F.transform(
@@ -2311,39 +2310,38 @@ def embedding_drift(
     NULL/empty vectors count toward nothing; ragged widths contribute
     to the positions they have (mean per (group, pos) divides by that
     position's own count)."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    per, gm = _group_centroids(df, group_col, vec_col, mean_decimals)
-    rnd = lambda col: F.round(col, mean_decimals) + F.lit(0.0)  # noqa: E731
-    glob = (
-        per.groupBy("pos")
-        .agg((F.sum("s") / F.sum("c")).alias("m"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda st: rnd(st["m"]),
-            ).alias("_glob")
+    with CacheScope() as scope:
+        per, gm = _group_centroids(scope, df, group_col, vec_col, mean_decimals)
+        rnd = lambda col: F.round(col, mean_decimals) + F.lit(0.0)  # noqa: E731
+        glob = (
+            per.groupBy("pos")
+            .agg((F.sum("s") / F.sum("c")).alias("m"))
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda st: rnd(st["m"]),
+                ).alias("_glob")
+            )
         )
-    )
-    # n = the pos-0 count already sitting in the persisted per-group
-    # frame (every non-empty vector emits pos 0) — a separate count
-    # scan would double the operator's one corpus pass (r12 review)
-    counts = per.where(F.col("pos") == 0).select(
-        "_g", F.col("c").alias("n")
-    )
-    out = (
-        gm.join(counts, "_g")
-        .crossJoin(F.broadcast(glob))
-        .select(
-            F.col("_g").alias(group_col),
-            "n",
-            F.round(_norm("_gm"), round_decimals).alias("mean_norm"),
-            F.round(cosine("_gm", "_glob"), round_decimals).alias(
-                "cos_to_global"
-            ),
+        # n = the pos-0 count already sitting in the persisted per-group
+        # frame (every non-empty vector emits pos 0) — a separate count
+        # scan would double the operator's one corpus pass (r12 review)
+        counts = per.where(F.col("pos") == 0).select(
+            "_g", F.col("c").alias("n")
         )
-    )
-    return tag_persisted(out, per)
+        out = (
+            gm.join(counts, "_g")
+            .crossJoin(F.broadcast(glob))
+            .select(
+                F.col("_g").alias(group_col),
+                "n",
+                F.round(_norm("_gm"), round_decimals).alias("mean_norm"),
+                F.round(cosine("_gm", "_glob"), round_decimals).alias(
+                    "cos_to_global"
+                ),
+            )
+        )
+        return scope.hand(out, per)
 
 
 def jl_project(
@@ -2569,25 +2567,24 @@ def embedding_outliers(
     rows per map partition; the bounded groups x dims centroid frame
     broadcast-joins back, so scoring is a second NARROW corpus pass —
     no corpus-sized shuffle anywhere."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    per, gm = _group_centroids(df, group_col, vec_col, mean_decimals)
-    out = (
-        df.select(
-            F.col(id_col),
-            F.col(group_col).alias("_g"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
+    with CacheScope() as scope:
+        per, gm = _group_centroids(scope, df, group_col, vec_col, mean_decimals)
+        out = (
+            df.select(
+                F.col(id_col),
+                F.col(group_col).alias("_g"),
+                F.col(vec_col).cast("array<double>").alias("_v"),
+            )
+            .join(F.broadcast(gm), "_g", "left")
+            .select(
+                F.col(id_col),
+                F.col("_g").alias(group_col),
+                F.round(cosine("_v", "_gm"), round_decimals).alias(
+                    "sim_to_centroid"
+                ),
+            )
         )
-        .join(F.broadcast(gm), "_g", "left")
-        .select(
-            F.col(id_col),
-            F.col("_g").alias(group_col),
-            F.round(cosine("_v", "_gm"), round_decimals).alias(
-                "sim_to_centroid"
-            ),
-        )
-    )
-    return tag_persisted(out, per)
+        return scope.hand(out, per)
 
 
 def _knn_majority(

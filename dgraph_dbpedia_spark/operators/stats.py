@@ -24,6 +24,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope
+
 
 def datasets_counts(frames: dict[str, DataFrame]) -> dict[str, dict[str, int]]:
     """triples / distinct nodes / distinct predicates (A5+A6) of every
@@ -132,27 +134,26 @@ def per_lang_stats_tables(
     Both inputs to the union come from one cached pivot, so the fact
     frames are scanned once per dataset regardless of how many tables
     are printed."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
-    tbl = stats_table_pivot(frames, group_col).cache()
-    num_cols = [c for c in tbl.columns if c != group_col]
-    en_star = tbl.where(F.col(group_col).startswith("en-"))
-    rolled = (
-        en_star.withColumn(group_col, F.lit("en-*"))
-        .groupBy(group_col)
-        .agg(*[F.sum(c).alias(c) for c in num_cols])
-    )
-    main = (
-        tbl.where(~F.col(group_col).startswith("en-"))
-        .unionByName(rolled)
-        .orderBy(group_col)
-    )
-    # both outputs carry the pivot's cache handle so a caller can free
-    # it (cachectl.release) — an internal-only .cache() is unreleasable
-    return (
-        tag_persisted(main, tbl),
-        tag_persisted(en_star.orderBy(group_col), tbl),
-    )
+    with CacheScope() as scope:
+        tbl = scope.persist(stats_table_pivot(frames, group_col))
+        num_cols = [c for c in tbl.columns if c != group_col]
+        en_star = tbl.where(F.col(group_col).startswith("en-"))
+        rolled = (
+            en_star.withColumn(group_col, F.lit("en-*"))
+            .groupBy(group_col)
+            .agg(*[F.sum(c).alias(c) for c in num_cols])
+        )
+        main = (
+            tbl.where(~F.col(group_col).startswith("en-"))
+            .unionByName(rolled)
+            .orderBy(group_col)
+        )
+        # both outputs carry the pivot's cache handle so a caller can free
+        # it (cachectl.release)
+        return (
+            scope.hand(main, tbl),
+            scope.hand(en_star.orderBy(group_col), tbl),
+        )
 
 
 def percentile_stats(

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope
+
 
 def asof_join(
     left: DataFrame,
@@ -268,7 +270,6 @@ def funnel_counts(
     round AND its own count, so the first k-1 are persisted (the last
     has one consumer) — release via cachectl after materializing.
     The step counts union k single-row aggregates (tiny)."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
     from dgraph_dbpedia_spark.streaming.events import epoch_seconds
 
     if not steps:
@@ -281,31 +282,31 @@ def funnel_counts(
             F.col(type_col).alias("t"),
         ).alias("__k"),
     )
-    handles = []
-    prev = None
-    step_rows = []
-    for i, s in enumerate(steps, start=1):
-        f = e.where(F.col("__t") == s)
-        if prev is not None:
-            f = f.join(prev, user_col).where(F.col("__k") > F.col("__pk"))
-        anchor = f.groupBy(user_col).agg(F.min("__k").alias("__pk"))
-        if i < len(steps):
-            # the last step's anchor feeds ONLY its own count — the
-            # conditional-persist rule (persist = >1 consumer)
-            anchor = anchor.persist()
-            handles.append(anchor)
-        step_rows.append(
-            anchor.agg(
-                F.lit(i).alias("step"),
-                F.lit(s).alias("step_name"),
-                F.count(F.lit(1)).alias("n_users"),
+    with CacheScope() as scope:
+        handles = []
+        prev = None
+        step_rows = []
+        for i, s in enumerate(steps, start=1):
+            f = e.where(F.col("__t") == s)
+            if prev is not None:
+                f = f.join(prev, user_col).where(F.col("__k") > F.col("__pk"))
+            anchor = f.groupBy(user_col).agg(F.min("__k").alias("__pk"))
+            if i < len(steps):
+                # the last step's anchor feeds ONLY its own count — the
+                # conditional-persist rule (persist = >1 consumer)
+                handles.append(scope.persist(anchor))
+            step_rows.append(
+                anchor.agg(
+                    F.lit(i).alias("step"),
+                    F.lit(s).alias("step_name"),
+                    F.count(F.lit(1)).alias("n_users"),
+                )
             )
-        )
-        prev = anchor
-    out = step_rows[0]
-    for r in step_rows[1:]:
-        out = out.unionByName(r)
-    return tag_persisted(out, *handles)
+            prev = anchor
+        out = step_rows[0]
+        for r in step_rows[1:]:
+            out = out.unionByName(r)
+        return scope.hand(out, *handles)
 
 
 def retention_cohorts(

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dgraph_dbpedia_spark.functions.hashing import hash64, tokens
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope, persisted_frames
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic.
 # Deliberately small and public-knowledge; the operator's contract is
@@ -389,43 +390,40 @@ def tfidf_topk_terms(
         raise ValueError(f"min_df must be >= 1, got {min_df}")
     from pyspark.sql import Window
 
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
     base = df.select(
         F.col(id_col),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
     )
-    tf = (
-        base.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
-    dfc = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
-    if min_df > 1:
-        dfc = dfc.where(F.col("__df") >= min_df)
-    n = df.groupBy().agg(F.count(F.lit(1)).alias("__n"))
-    score = F.round(
-        F.col("tf")
-        * (
-            F.log((F.lit(1) + F.col("__n")) / (F.lit(1) + F.col("__df")))
-            + F.lit(1.0)
-        ),
-        round_decimals,
-    )
-    scored = (
-        tf.join(dfc, "term")
-        .crossJoin(F.broadcast(n))
-        .select(F.col(id_col), "term", score.alias("score"))
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
-    out = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-    return tag_persisted(out, tf)
+    with CacheScope() as scope:
+        tf = scope.persist(
+            base.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+        )
+        dfc = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
+        if min_df > 1:
+            dfc = dfc.where(F.col("__df") >= min_df)
+        n = df.groupBy().agg(F.count(F.lit(1)).alias("__n"))
+        score = F.round(
+            F.col("tf")
+            * (
+                F.log((F.lit(1) + F.col("__n")) / (F.lit(1) + F.col("__df")))
+                + F.lit(1.0)
+            ),
+            round_decimals,
+        )
+        scored = (
+            tf.join(dfc, "term")
+            .crossJoin(F.broadcast(n))
+            .select(F.col(id_col), "term", score.alias("score"))
+        )
+        w = Window.partitionBy(id_col).orderBy(
+            F.col("score").desc(), F.col("term").asc()
+        )
+        out = (
+            scored.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") <= k)
+            .drop("__rn")
+        )
+        return scope.hand(out, tf)
 
 
 def gopher_quality_filter(
@@ -669,50 +667,49 @@ def unigram_logprob(
     avg sums in post-shuffle row order, and float addition is
     non-associative, so the rounded 4th decimal could flip between
     runs or versus the oracle's own summation order."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
     if smoothing <= 0:
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     toked = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
     )
-    model = toked.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).persist()
-    scalars = model.agg(
-        F.sum("c").alias("__total"), F.count(F.lit(1)).alias("__vocab")
-    )
-    bits = -F.log2(
-        (F.col("c") + F.lit(float(smoothing)))
-        / (F.col("__total") + F.lit(float(smoothing)) * F.col("__vocab"))
-    )
-    scored = (
-        toked.join(model, "tok")
-        .crossJoin(F.broadcast(scalars))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sort_array(F.collect_list(bits)).alias("__bits"),
+    with CacheScope() as scope:
+        model = scope.persist(toked.groupBy("tok").agg(F.count(F.lit(1)).alias("c")))
+        scalars = model.agg(
+            F.sum("c").alias("__total"), F.count(F.lit(1)).alias("__vocab")
         )
-        .select(
-            F.col(id_col),
-            F.col("n_tokens"),
-            F.round(
-                F.aggregate("__bits", F.lit(0.0), lambda a, x: a + x)
-                / F.col("n_tokens"),
-                4,
-            ).alias("bits_per_token"),
+        bits = -F.log2(
+            (F.col("c") + F.lit(float(smoothing)))
+            / (F.col("__total") + F.lit(float(smoothing)) * F.col("__vocab"))
         )
-    )
-    # left join: documents with zero tokens still get a row
-    out = (
-        df.select(F.col(id_col))
-        .join(scored, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
-            F.col("bits_per_token"),
+        scored = (
+            toked.join(model, "tok")
+            .crossJoin(F.broadcast(scalars))
+            .groupBy(id_col)
+            .agg(
+                F.count(F.lit(1)).alias("n_tokens"),
+                F.sort_array(F.collect_list(bits)).alias("__bits"),
+            )
+            .select(
+                F.col(id_col),
+                F.col("n_tokens"),
+                F.round(
+                    F.aggregate("__bits", F.lit(0.0), lambda a, x: a + x)
+                    / F.col("n_tokens"),
+                    4,
+                ).alias("bits_per_token"),
+            )
         )
-    )
-    return tag_persisted(out, model)
+        # left join: documents with zero tokens still get a row
+        out = (
+            df.select(F.col(id_col))
+            .join(scored, id_col, "left")
+            .select(
+                F.col(id_col),
+                F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
+                F.col("bits_per_token"),
+            )
+        )
+        return scope.hand(out, model)
 
 
 def perplexity_buckets(
@@ -740,42 +737,36 @@ def perplexity_buckets(
     release handle (cachectl.release after materializing)."""
     from pyspark.sql import Window
 
-    from dgraph_dbpedia_spark.operators.cachectl import (
-        persisted_frames,
-        tag_persisted,
-    )
-
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    scored = unigram_logprob(df, text_col, id_col, smoothing)
-    gcols = [group_col] if group_col is not None else []
-    # persisted: base feeds two branches (ranked + nulls union) —
-    # unpersisted, the corpus-wide token scoring would re-run per
-    # branch (the unigram_logprob docstring's no-cross-branch-sharing
-    # rule). Rides the result's release handle.
-    base = (
-        df.select(F.col(id_col), *[F.col(c) for c in gcols])
-        .join(scored, id_col)
-        .persist()
-    )
-    w = Window.partitionBy(
-        *[F.col(c) for c in gcols]
-    ).orderBy(F.col("bits_per_token").asc(), F.col(id_col).asc())
-    # NULL bits are excluded from the ntile ranking entirely and
-    # pinned to the last bucket: engines disagree on NULL sort
-    # position (Spark NULLS FIRST vs DuckDB NULLS LAST on ASC),
-    # and a null doc inside the ntile would also shift every
-    # other bucket boundary by engine
-    ranked = base.where(F.col("bits_per_token").isNotNull()).withColumn(
-        "bucket", F.ntile(n_buckets).over(w)
-    )
-    nulls = base.where(F.col("bits_per_token").isNull()).withColumn(
-        "bucket", F.lit(n_buckets)
-    )
-    out = ranked.unionByName(nulls).select(
-        F.col(id_col), *gcols, "n_tokens", "bits_per_token", "bucket"
-    )
-    return tag_persisted(out, base, *persisted_frames(scored))
+    with CacheScope() as scope:
+        scored = unigram_logprob(df, text_col, id_col, smoothing)
+        gcols = [group_col] if group_col is not None else []
+        # persisted: base feeds two branches (ranked + nulls union) —
+        # unpersisted, the corpus-wide token scoring would re-run per
+        # branch (the unigram_logprob docstring's no-cross-branch-sharing
+        # rule). Rides the result's release handle.
+        base = scope.persist(
+            df.select(F.col(id_col), *[F.col(c) for c in gcols]).join(scored, id_col)
+        )
+        w = Window.partitionBy(
+            *[F.col(c) for c in gcols]
+        ).orderBy(F.col("bits_per_token").asc(), F.col(id_col).asc())
+        # NULL bits are excluded from the ntile ranking entirely and
+        # pinned to the last bucket: engines disagree on NULL sort
+        # position (Spark NULLS FIRST vs DuckDB NULLS LAST on ASC),
+        # and a null doc inside the ntile would also shift every
+        # other bucket boundary by engine
+        ranked = base.where(F.col("bits_per_token").isNotNull()).withColumn(
+            "bucket", F.ntile(n_buckets).over(w)
+        )
+        nulls = base.where(F.col("bits_per_token").isNull()).withColumn(
+            "bucket", F.lit(n_buckets)
+        )
+        out = ranked.unionByName(nulls).select(
+            F.col(id_col), *gcols, "n_tokens", "bits_per_token", "bucket"
+        )
+        return scope.hand(out, base, *persisted_frames(scored))
 
 
 def bigram_logprob(
@@ -815,8 +806,6 @@ def bigram_logprob(
     sequentially (unigram_logprob's rule — float addition is
     non-associative, so the rounded 4th decimal must not depend on
     row order)."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
     if smoothing <= 0:
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     if not 0.0 <= lam <= 1.0:
@@ -844,56 +833,56 @@ def bigram_logprob(
         .select(F.col(id_col), F.explode("__grams").alias("g"))
         .select(F.col(id_col), F.col("g.u").alias("u"), F.col("g.w").alias("w"))
     )
-    m1 = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c1"))
-        .persist()
-    )
-    m2 = (
-        events.groupBy("u", "w").agg(F.count(F.lit(1)).alias("c2")).persist()
-    )
-    ctx = m2.groupBy("u").agg(F.sum("c2").alias("cu"))
-    scalars = m1.agg(
-        F.sum("c1").alias("__total"), F.count(F.lit(1)).alias("__vocab")
-    )
-    k = F.lit(float(smoothing))
-    p2 = (F.col("c2") + k) / (F.col("cu") + k * F.col("__vocab"))
-    p1 = (F.col("c1") + k) / (F.col("__total") + k * F.col("__vocab"))
-    bits = -F.log2(F.lit(float(lam)) * p2 + F.lit(1.0 - float(lam)) * p1)
-    scored = (
-        events.join(m2, ["u", "w"])
-        .join(ctx, "u")
-        # joined on a renamed-key projection, not events["w"] == m1["tok"]
-        # (column references from a frame already consumed by prior
-        # joins are the ambiguous-reference trap)
-        .join(m1.select(F.col("tok").alias("w"), "c1"), "w")
-        .crossJoin(F.broadcast(scalars))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sort_array(F.collect_list(bits)).alias("__bits"),
+    with CacheScope() as scope:
+        m1 = scope.persist(
+            df.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("c1"))
         )
-        .select(
-            F.col(id_col),
-            F.col("n_bigrams"),
-            F.round(
-                F.aggregate("__bits", F.lit(0.0), lambda a, x: a + x)
-                / F.col("n_bigrams"),
-                4,
-            ).alias("bits_per_bigram"),
+        m2 = scope.persist(
+            events.groupBy("u", "w").agg(F.count(F.lit(1)).alias("c2"))
         )
-    )
-    out = (
-        df.select(F.col(id_col))
-        .join(scored, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-            F.col("bits_per_bigram"),
+        ctx = m2.groupBy("u").agg(F.sum("c2").alias("cu"))
+        scalars = m1.agg(
+            F.sum("c1").alias("__total"), F.count(F.lit(1)).alias("__vocab")
         )
-    )
-    return tag_persisted(out, m1, m2)
+        k = F.lit(float(smoothing))
+        p2 = (F.col("c2") + k) / (F.col("cu") + k * F.col("__vocab"))
+        p1 = (F.col("c1") + k) / (F.col("__total") + k * F.col("__vocab"))
+        bits = -F.log2(F.lit(float(lam)) * p2 + F.lit(1.0 - float(lam)) * p1)
+        scored = (
+            events.join(m2, ["u", "w"])
+            .join(ctx, "u")
+            # joined on a renamed-key projection, not events["w"] == m1["tok"]
+            # (column references from a frame already consumed by prior
+            # joins are the ambiguous-reference trap)
+            .join(m1.select(F.col("tok").alias("w"), "c1"), "w")
+            .crossJoin(F.broadcast(scalars))
+            .groupBy(id_col)
+            .agg(
+                F.count(F.lit(1)).alias("n_bigrams"),
+                F.sort_array(F.collect_list(bits)).alias("__bits"),
+            )
+            .select(
+                F.col(id_col),
+                F.col("n_bigrams"),
+                F.round(
+                    F.aggregate("__bits", F.lit(0.0), lambda a, x: a + x)
+                    / F.col("n_bigrams"),
+                    4,
+                ).alias("bits_per_bigram"),
+            )
+        )
+        out = (
+            df.select(F.col(id_col))
+            .join(scored, id_col, "left")
+            .select(
+                F.col(id_col),
+                F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
+                F.col("bits_per_bigram"),
+            )
+        )
+        return scope.hand(out, m1, m2)
 
 
 def corpus_divergence(
@@ -943,8 +932,6 @@ def corpus_divergence(
     round(…, 4) while the decimal accumulator cannot overflow: per-term
     magnitude is bounded by ~0.54 (max of |p log2(p/m)| + the q twin),
     so even a 1e12-token vocab sums to < 1e24 « 1e38."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
-
     def counts(df: DataFrame, alias: str) -> DataFrame:
         return (
             df.select(F.explode(tokens(F.col(text_col))).alias("tok"))
@@ -952,51 +939,51 @@ def corpus_divergence(
             .agg(F.count(F.lit(1)).alias(alias))
         )
 
-    j = (
-        counts(df_a, "__ca")
-        .join(counts(df_b, "__cb"), "tok", "full_outer")
-        .select(
-            "tok",
-            F.coalesce("__ca", F.lit(0)).alias("__ca"),
-            F.coalesce("__cb", F.lit(0)).alias("__cb"),
+    with CacheScope() as scope:
+        j = scope.persist(
+            counts(df_a, "__ca")
+            .join(counts(df_b, "__cb"), "tok", "full_outer")
+            .select(
+                "tok",
+                F.coalesce("__ca", F.lit(0)).alias("__ca"),
+                F.coalesce("__cb", F.lit(0)).alias("__cb"),
+            )
         )
-        .persist()
-    )
-    tot = j.agg(
-        F.sum("__ca").alias("__ta"), F.sum("__cb").alias("__tb")
-    )
-    # greatest(…, 1): an all-empty side would otherwise hit ANSI
-    # division-by-zero INSIDE the other side's when-branch (m references
-    # p); with the guard an empty side degenerates to jsd_bits = 0.5
-    # (its KL term vanishes) — documented, not an error
-    p = F.col("__ca") / F.greatest(F.col("__ta"), F.lit(1))
-    q = F.col("__cb") / F.greatest(F.col("__tb"), F.lit(1))
-    m = (p + q) / 2
-    term = F.when(F.col("__ca") > 0, p * F.log2(p / m)).otherwise(
-        F.lit(0.0)
-    ) + F.when(F.col("__cb") > 0, q * F.log2(q / m)).otherwise(F.lit(0.0))
-    # order-independent reduction: quantize each term to the 1e-12
-    # grid (F.round with no scale = HALF_UP to integer, same as
-    # DuckDB's round-half-away), sum as exact decimal(38,0) integers,
-    # divide/round ONCE at the end — see the docstring's determinism
-    # contract (oracle replays the same quantization)
-    term_fp = F.round(term * F.lit(1e12)).cast("decimal(38,0)")
-    out = (
-        j.crossJoin(F.broadcast(tot))
-        .agg(
-            F.first("__ta").alias("n_tokens_a"),
-            F.first("__tb").alias("n_tokens_b"),
-            F.sum((F.col("__ca") > 0).cast("long")).alias("vocab_a"),
-            F.sum((F.col("__cb") > 0).cast("long")).alias("vocab_b"),
-            F.sum(
-                ((F.col("__ca") > 0) & (F.col("__cb") > 0)).cast("long")
-            ).alias("vocab_shared"),
-            F.round(
-                F.sum(term_fp).cast("double") / F.lit(2e12), 4
-            ).alias("jsd_bits"),
+        tot = j.agg(
+            F.sum("__ca").alias("__ta"), F.sum("__cb").alias("__tb")
         )
-    )
-    return tag_persisted(out, j)
+        # greatest(…, 1): an all-empty side would otherwise hit ANSI
+        # division-by-zero INSIDE the other side's when-branch (m references
+        # p); with the guard an empty side degenerates to jsd_bits = 0.5
+        # (its KL term vanishes) — documented, not an error
+        p = F.col("__ca") / F.greatest(F.col("__ta"), F.lit(1))
+        q = F.col("__cb") / F.greatest(F.col("__tb"), F.lit(1))
+        m = (p + q) / 2
+        term = F.when(F.col("__ca") > 0, p * F.log2(p / m)).otherwise(
+            F.lit(0.0)
+        ) + F.when(F.col("__cb") > 0, q * F.log2(q / m)).otherwise(F.lit(0.0))
+        # order-independent reduction: quantize each term to the 1e-12
+        # grid (F.round with no scale = HALF_UP to integer, same as
+        # DuckDB's round-half-away), sum as exact decimal(38,0) integers,
+        # divide/round ONCE at the end — see the docstring's determinism
+        # contract (oracle replays the same quantization)
+        term_fp = F.round(term * F.lit(1e12)).cast("decimal(38,0)")
+        out = (
+            j.crossJoin(F.broadcast(tot))
+            .agg(
+                F.first("__ta").alias("n_tokens_a"),
+                F.first("__tb").alias("n_tokens_b"),
+                F.sum((F.col("__ca") > 0).cast("long")).alias("vocab_a"),
+                F.sum((F.col("__cb") > 0).cast("long")).alias("vocab_b"),
+                F.sum(
+                    ((F.col("__ca") > 0) & (F.col("__cb") > 0)).cast("long")
+                ).alias("vocab_shared"),
+                F.round(
+                    F.sum(term_fp).cast("double") / F.lit(2e12), 4
+                ).alias("jsd_bits"),
+            )
+        )
+        return scope.hand(out, j)
 
 
 def hashed_doc_embeddings(

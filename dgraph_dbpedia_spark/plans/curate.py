@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope, persisted_frames
+
 
 def curate_corpus(
     docs: DataFrame,
@@ -53,10 +55,9 @@ def curate_corpus(
     completion join and the representative semi-join. The result
     carries both handles (release via
     :func:`dgraph_dbpedia_spark.operators.cachectl.release` after
-    materializing); on a component-step failure they are released
-    before the re-raise. The MinHash pair frame's own handles are released
-    internally once the (eager) component step has consumed them."""
-    from dgraph_dbpedia_spark.operators.cachectl import release, tag_persisted
+    materializing). The MinHash pair frame's own handles are freed as
+    soon as the (eager) component step has consumed them; if any stage
+    raises, the cache scope frees every cache the call made."""
     from dgraph_dbpedia_spark.operators.dedup import (
         decontaminate,
         dedup_corpus,
@@ -66,56 +67,40 @@ def curate_corpus(
     from dgraph_dbpedia_spark.operators.sampling import temperature_sample
     from dgraph_dbpedia_spark.operators.textstats import gopher_quality_filter
 
-    # 1. quality gate — narrow projection, most selective, runs first.
-    # gk is PERSISTED (id-only, far smaller than the corpus): it feeds
-    # both branches of s2's plan — the exact_dedup aggregate's s1 AND
-    # the survivor semi-join's s1 — and without the cache the
-    # tokenize-heavy gate would evaluate twice when s2 first
-    # materializes (inside s2's own plan, where s2's persist cannot
-    # help).
-    gk = (
-        gopher_quality_filter(
-            docs, text_col=text_col, id_col=id_col, **(gopher_kwargs or {})
+    with CacheScope() as scope:
+        # 1. quality gate — narrow projection, most selective, runs
+        # first. gk is PERSISTED (id-only, far smaller than the corpus):
+        # it feeds both branches of s2's plan — the exact_dedup
+        # aggregate's s1 AND the survivor semi-join's s1 — and without
+        # the cache the tokenize-heavy gate would evaluate twice when s2
+        # first materializes (inside s2's own plan, where s2's persist
+        # cannot help).
+        gk = scope.persist(
+            gopher_quality_filter(
+                docs, text_col=text_col, id_col=id_col, **(gopher_kwargs or {})
+            )
+            .where(F.col("keep"))
+            .select(F.col(id_col))
         )
-        .where(F.col("keep"))
-        .select(F.col(id_col))
-        .persist()
-    )
-    s1 = docs.join(gk, id_col, "left_semi")
+        s1 = docs.join(gk, id_col, "left_semi")
 
-    # 2. exact dedup — min-id representative per distinct text (one
-    # groupBy on the md5 hash), then keep those rows
-    reps = exact_dedup(s1, text_col=text_col, id_col=id_col).select(
-        F.col(id_col)
-    )
-    s2 = s1.join(reps, id_col, "left_semi").persist()
+        # 2. exact dedup — min-id representative per distinct text (one
+        # groupBy on the md5 hash), then keep those rows
+        reps = exact_dedup(s1, text_col=text_col, id_col=id_col).select(
+            F.col(id_col)
+        )
+        s2 = scope.persist(s1.join(reps, id_col, "left_semi"))
 
-    # 3. near-dup dedup — banded MinHash pairs + connected-component
-    # min-id survivors over the exact-deduped corpus
-    pairs = minhash_dedup_pairs(
-        s2, text_col=text_col, id_col=id_col, w=w, k=k, bands=bands,
-        threshold=near_dup_threshold,
-    )
-    try:
+        # 3. near-dup dedup — banded MinHash pairs + connected-component
+        # min-id survivors over the exact-deduped corpus; the component
+        # step runs eagerly, so the pair caches are dead weight after it
+        pairs = minhash_dedup_pairs(
+            s2, text_col=text_col, id_col=id_col, w=w, k=k, bands=bands,
+            threshold=near_dup_threshold,
+        )
         s3 = dedup_corpus(s2, pairs.select("a", "b"), id_col=id_col)
-    except BaseException:
-        # the component step raised: there is no result to carry the
-        # handles, and s2/gk were already materialized by the eager
-        # component step — they must not outlive the failure in a
-        # shared session
-        s2.unpersist()
-        gk.unpersist()
-        raise
-    finally:
-        # the component step ran eagerly inside dedup_corpus (or
-        # raised); either way the pair caches are dead weight now
-        release(pairs)
+        scope.free(*persisted_frames(pairs))
 
-    # stages 4-5 can also raise before the handles transfer to the
-    # result (e.g. a benchmark frame missing text_col fails eager
-    # analysis inside decontaminate) — the same must-not-outlive rule
-    # as the stage-3 guard above
-    try:
         # 4. benchmark decontamination — w-gram hash semi-join kill
         s4 = (
             decontaminate(
@@ -135,11 +120,7 @@ def curate_corpus(
             if alpha is not None
             else s4
         )
-    except BaseException:
-        s2.unpersist()
-        gk.unpersist()
-        raise
-    return tag_persisted(s5, s2, gk)
+        return scope.hand(s5, s2, gk)
 
 
 def pretraining_prep(
@@ -186,10 +167,6 @@ def pretraining_prep(
     shuffle of the train chunks, ``n_shards`` the parallelism dial,
     exactly :func:`~dgraph_dbpedia_spark.operators.sampling.
     epoch_shuffle`'s documented shape."""
-    from dgraph_dbpedia_spark.operators.cachectl import (
-        persisted_frames,
-        tag_persisted,
-    )
     from dgraph_dbpedia_spark.operators.sampling import (
         chunk_documents,
         epoch_shuffle,
@@ -219,21 +196,15 @@ def pretraining_prep(
     )
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    curated = curate_corpus(
-        docs,
-        benchmark=benchmark,
-        text_col=text_col,
-        id_col=id_col,
-        lang_col=lang_col,
-        **curate_kwargs,
-    )
-    # the post-curate stages can still raise before the handles
-    # transfer to the result (an unexpected schema, an epoch_shuffle
-    # column clash) — curate's eagerly-materialized s2/gk caches must
-    # not outlive the failure in a shared session (the curate_corpus
-    # stage-4/5 must-not-outlive rule, applied to the composition)
-    keyed = None
-    try:
+    with CacheScope() as scope:
+        curated = curate_corpus(
+            docs,
+            benchmark=benchmark,
+            text_col=text_col,
+            id_col=id_col,
+            lang_col=lang_col,
+            **curate_kwargs,
+        )
         chunks = chunk_documents(
             curated,
             chunk_tokens=chunk_tokens,
@@ -255,12 +226,14 @@ def pretraining_prep(
         # executes twice, once per branch (no cross-branch subplan
         # sharing — the _semantic_sk_pairs rule). The handle rides the
         # result with curate's.
-        keyed = tagged.withColumn(
-            ck,
-            F.concat_ws(
-                "#", F.col(id_col).cast("string"), F.col("chunk_idx")
-            ),
-        ).persist()
+        keyed = scope.persist(
+            tagged.withColumn(
+                ck,
+                F.concat_ws(
+                    "#", F.col(id_col).cast("string"), F.col("chunk_idx")
+                ),
+            )
+        )
         train = epoch_shuffle(
             keyed.where(F.col("split") == "train"),
             epoch=epoch,
@@ -278,10 +251,4 @@ def pretraining_prep(
             F.col(id_col), "chunk_idx", "n_tokens", "split", "shard",
             "pos",
         )
-    except BaseException:
-        if keyed is not None:
-            keyed.unpersist()
-        for f in persisted_frames(curated):
-            f.unpersist()
-        raise
-    return tag_persisted(out, keyed, *persisted_frames(curated))
+        return scope.hand(out, keyed, *persisted_frames(curated))

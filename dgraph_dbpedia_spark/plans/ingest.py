@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dgraph_dbpedia_spark.observability import phase
+from dgraph_dbpedia_spark.sources.parquet import fs_delete, fs_exists, read_triples_parquet
 from dgraph_dbpedia_spark.sources.ttl import read_ttl
 from dgraph_dbpedia_spark.sources.writers import write_partitioned_by
 from dgraph_dbpedia_spark.sources import catalog
@@ -44,8 +45,6 @@ def load_dataset(
     """Union of all languages' ttl files for one dataset, with the
     conditional en_uris union (U1+U3,
     DbpediaToParquetSparkApp.scala:73-84)."""
-    from dgraph_dbpedia_spark.sources.parquet import fs_exists
-
     frames: list[DataFrame] = []
     for lang in languages:
         path = catalog.dataset_path(root, lang, dataset, ext)
@@ -91,25 +90,31 @@ def ingest(
     datasets = [d for d in datasets if not d.endswith("_en_uris")]
 
     def run(dataset: str) -> IngestResult:
-        with phase(spark, f"ingest.{dataset}"):
-            df = load_dataset(spark, root, dataset, languages)
-            parquet_path = os.path.join(out, f"{dataset}.parquet")
-            write_partitioned_by(
-                df,
-                partition_cols=["lang"],
-                more_file_cols=["s"],
-                sort_cols=["p", "o"],
-                path=parquet_path,
-            )
-            result = IngestResult(dataset, parquet_path)
-            if print_stats:
-                # read back through the schema-aware reader: a dataset with
-                # zero rows under the selected languages writes a
-                # _SUCCESS-only dir, where schema inference would raise
-                from dgraph_dbpedia_spark.sources.parquet import read_triples_parquet
-
-                result.stats = dataset_counts(read_triples_parquet(spark, parquet_path))
-            return result
+        parquet_path = os.path.join(out, f"{dataset}.parquet")
+        try:
+            with phase(spark, f"ingest.{dataset}"):
+                df = load_dataset(spark, root, dataset, languages)
+                write_partitioned_by(
+                    df,
+                    partition_cols=["lang"],
+                    more_file_cols=["s"],
+                    sort_cols=["p", "o"],
+                    path=parquet_path,
+                )
+                result = IngestResult(dataset, parquet_path)
+                if print_stats:
+                    # read back through the schema-aware reader: a dataset
+                    # with zero rows under the selected languages writes a
+                    # _SUCCESS-only dir, where schema inference would raise
+                    result.stats = dataset_counts(
+                        read_triples_parquet(spark, parquet_path)
+                    )
+                return result
+        except BaseException:
+            # a failed dataset leaves no table behind (partial, or a
+            # previous run's) that a later transform could read as whole
+            fs_delete(spark, parquet_path)
+            raise
 
     from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
@@ -120,8 +125,7 @@ def ingest(
         # to the pool's exit, every queued dataset would be written and
         # read back before the error surfaced. Datasets already running
         # finish (the pool's exit waits for them); their Spark jobs are
-        # not cancelled, and a failed dataset's partial output is left
-        # as the writer left it.
+        # not cancelled. The failed dataset's output is deleted (run).
         done, _ = wait(futures, return_when=FIRST_EXCEPTION)
         failed = [f for f in futures if f in done and f.exception()]
         if failed:

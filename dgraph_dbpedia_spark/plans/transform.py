@@ -42,7 +42,7 @@ from dgraph_dbpedia_spark.functions.rdf import (
 )
 from dgraph_dbpedia_spark.functions.schema_gen import full_schema, schema_line
 from dgraph_dbpedia_spark.observability import collect_spill_metrics, phase
-from dgraph_dbpedia_spark.operators.cachectl import persisted_frames, release
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope, persisted_frames
 from dgraph_dbpedia_spark.operators.topk import top_k_per_group
 from dgraph_dbpedia_spark.sources.parquet import read_triples_parquet
 from dgraph_dbpedia_spark.sources.writers import write_partitioned_by
@@ -102,14 +102,13 @@ def top_k_infobox(
     ``en`` top-k set (W1+J2, DbpediaDgraphSparkApp.scala:121-137).
 
     Returns (filtered triples, topk dimension)."""
-    topk = (
-        top_k_per_group(
-            df.where(~F.col("lang").contains("-")), ["lang"], "p", k
+    with CacheScope() as scope:
+        topk = scope.persist(
+            top_k_per_group(
+                df.where(~F.col("lang").contains("-")), ["lang"], "p", k
+            ).select("p", "lang")
         )
-        .select("p", "lang")
-        .cache()
-    )
-    return filter_by_topk(df, topk), topk
+        return filter_by_topk(df, topk), scope.keep(topk)
 
 
 def filter_by_topk(df: DataFrame, topk: DataFrame) -> DataFrame:
@@ -153,54 +152,52 @@ def infobox_dims(
     """
     from pyspark.sql import Window
 
-    cube = (
-        typed_triples(all_infobox)
-        .groupBy("lang", "p", "t")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .cache()
-    )
-    topk = None
-    fcube = cube
-    if k:
-        # counts per (lang, p) over non-pseudo langs = sum of cube rows;
-        # tie-break (count desc, p asc) matches top_k_per_group
-        w = Window.partitionBy("lang").orderBy(
-            F.col("count").desc(), F.col("p").asc()
-        )
-        topk = (
-            cube.where(~F.col("lang").contains("-"))
-            .groupBy("lang", "p")
-            .agg(F.sum("count").alias("count"))
-            .withColumn("__rank", F.row_number().over(w))
-            .where(F.col("__rank") <= k)
-            .select("p", "lang")
-            .cache()
-        )
-        # the reference filters fact rows by (p, en-*-remapped lang) ∈
-        # top-k; the same semi-join on the cube keeps exactly the
-        # (lang, p, t) strata those rows form
-        fcube = filter_by_topk(cube, topk)
-    wm = Window.partitionBy("p").orderBy(F.col("count").desc(), F.col("t").asc())
-    predicate_datatypes = (
-        fcube.groupBy("p", "t")
-        .agg(F.sum("count").alias("count"))
-        .withColumn("__rank", F.row_number().over(wm))
-        .where(F.col("__rank") == 1)
-        .select("p", "t")
-        .cache()
-    )
     from dgraph_dbpedia_spark.functions.schema_gen import (
         infobox_predicate_schema_from_pairs,
     )
 
-    pairs = fcube.select("p", remap_en_lang(F.col("lang")).alias("lang")).distinct()
-    schema_derived = infobox_predicate_schema_from_pairs(pairs, predicate_datatypes)
-    # every cached frame, including the internal cube (otherwise
-    # unreachable by the caller): transform() releases them at the
-    # end — a long-lived session would otherwise accumulate one
-    # dim-cache set per transform() call
-    caches = [cube, predicate_datatypes] + ([topk] if topk is not None else [])
-    return topk, predicate_datatypes, schema_derived, caches
+    with CacheScope() as scope:
+        cube = scope.persist(
+            typed_triples(all_infobox)
+            .groupBy("lang", "p", "t")
+            .agg(F.count(F.lit(1)).alias("count"))
+        )
+        topk = None
+        fcube = cube
+        if k:
+            # counts per (lang, p) over non-pseudo langs = sum of cube rows;
+            # tie-break (count desc, p asc) matches top_k_per_group
+            w = Window.partitionBy("lang").orderBy(
+                F.col("count").desc(), F.col("p").asc()
+            )
+            topk = scope.persist(
+                cube.where(~F.col("lang").contains("-"))
+                .groupBy("lang", "p")
+                .agg(F.sum("count").alias("count"))
+                .withColumn("__rank", F.row_number().over(w))
+                .where(F.col("__rank") <= k)
+                .select("p", "lang")
+            )
+            # the reference filters fact rows by (p, en-*-remapped lang) ∈
+            # top-k; the same semi-join on the cube keeps exactly the
+            # (lang, p, t) strata those rows form
+            fcube = filter_by_topk(cube, topk)
+        wm = Window.partitionBy("p").orderBy(F.col("count").desc(), F.col("t").asc())
+        predicate_datatypes = scope.persist(
+            fcube.groupBy("p", "t")
+            .agg(F.sum("count").alias("count"))
+            .withColumn("__rank", F.row_number().over(wm))
+            .where(F.col("__rank") == 1)
+            .select("p", "t")
+        )
+        pairs = fcube.select("p", remap_en_lang(F.col("lang")).alias("lang")).distinct()
+        schema_derived = infobox_predicate_schema_from_pairs(pairs, predicate_datatypes)
+        # every cached frame, including the internal cube (otherwise
+        # unreachable by the caller), goes to the caller: transform()'s
+        # scope frees them at the end — a long-lived session would
+        # otherwise accumulate one dim-cache set per transform() call
+        caches = [cube, predicate_datatypes] + ([topk] if topk is not None else [])
+        return topk, predicate_datatypes, schema_derived, [scope.keep(c) for c in caches]
 
 
 def clean_infobox(
@@ -418,56 +415,55 @@ def write_rdf(
     from pyspark import StorageLevel
 
     sink = f"transform.{os.path.basename(path).removesuffix('.rdf')}"
-    if persist:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # count doubles as the isEmpty guard (P12) and the file-sizing
-        # input. Partition rule: enough tasks to keep the cluster busy on
-        # small sinks (up to defaultParallelism, but never <5k rows per
-        # task — a 100-row frame gets 1 task, not 32 empty files), and
-        # at least ceil(n / ROWS_PER_RDF_FILE) so huge sinks split into
-        # right-sized gzip files instead of 32 giant ones.
-        # count the FILTERED frame: counting df itself would let a
-        # frame whose every row fails the predicate filter slip past
-        # the empty guard, write a _SUCCESS-only dir (no lang= parts)
-        # and crash the read-back on the missing partition column —
-        # and would size n_parts from rows that never reach the sink
-        filtered = invalid_predicate_filter(df)
-        with phase(spark, f"{sink}.count"):
-            n = filtered.count()
-        if on_counted is not None:
-            on_counted()
-            on_counted = None
-        with phase(spark, f"{sink}.write"):
-            if not n:
-                # honor overwrite semantics on the empty path too: a rerun
-                # into the same out dir must not leave a PREVIOUS run's
-                # files to be read back as this run's (empty) result
-                from dgraph_dbpedia_spark.sources.parquet import fs_delete
-
-                fs_delete(spark, path)
-            if n:
-                parallel = spark.sparkContext.defaultParallelism
-                n_parts = max(
-                    -(-n // ROWS_PER_RDF_FILE),
-                    min(parallel, -(-n // 5_000)),
-                )
-                write_partitioned_by(
-                    filtered,
-                    partition_cols=["lang"],
-                    more_file_cols=["p", "s"],
-                    sort_cols=["o"],
-                    n_partitions=n_parts,
-                    projection=[rdf_line(F.col("s"), F.col("p"), F.col("o")).alias("line")],
-                    fmt="text",
-                    options={"compression": "gzip"},
-                    path=path,
-                )
-    finally:
-        if on_counted is not None:
-            on_counted()
+    with CacheScope() as scope:
         if persist:
-            df.unpersist()
+            df = scope.persist(df, StorageLevel.MEMORY_AND_DISK)
+        try:
+            # count doubles as the isEmpty guard (P12) and the file-sizing
+            # input. Partition rule: enough tasks to keep the cluster busy on
+            # small sinks (up to defaultParallelism, but never <5k rows per
+            # task — a 100-row frame gets 1 task, not 32 empty files), and
+            # at least ceil(n / ROWS_PER_RDF_FILE) so huge sinks split into
+            # right-sized gzip files instead of 32 giant ones.
+            # count the FILTERED frame: counting df itself would let a
+            # frame whose every row fails the predicate filter slip past
+            # the empty guard, write a _SUCCESS-only dir (no lang= parts)
+            # and crash the read-back on the missing partition column —
+            # and would size n_parts from rows that never reach the sink
+            filtered = invalid_predicate_filter(df)
+            with phase(spark, f"{sink}.count"):
+                n = filtered.count()
+            if on_counted is not None:
+                on_counted()
+                on_counted = None
+            with phase(spark, f"{sink}.write"):
+                if not n:
+                    # honor overwrite semantics on the empty path too: a rerun
+                    # into the same out dir must not leave a PREVIOUS run's
+                    # files to be read back as this run's (empty) result
+                    from dgraph_dbpedia_spark.sources.parquet import fs_delete
+
+                    fs_delete(spark, path)
+                if n:
+                    parallel = spark.sparkContext.defaultParallelism
+                    n_parts = max(
+                        -(-n // ROWS_PER_RDF_FILE),
+                        min(parallel, -(-n // 5_000)),
+                    )
+                    write_partitioned_by(
+                        filtered,
+                        partition_cols=["lang"],
+                        more_file_cols=["p", "s"],
+                        sort_cols=["o"],
+                        n_partitions=n_parts,
+                        projection=[rdf_line(F.col("s"), F.col("p"), F.col("o")).alias("line")],
+                        fmt="text",
+                        options={"compression": "gzip"},
+                        path=path,
+                    )
+        finally:
+            if on_counted is not None:
+                on_counted()
     return read_rdf(spark, path), n
 
 
@@ -528,11 +524,13 @@ def transform(
     # partitions (DbpediaDgraphSparkApp.scala:457-472)
     languages = get_languages(languages)
 
-    schema = None
-    retained: dict[str, DataFrame] = {}
-    stats_tables = None
-    dim_caches: list[DataFrame] = []
-    try:
+    # the one owner of every cache transform() holds: the dimension
+    # caches (cube / topk / predicate_datatypes from infobox_dims), the
+    # stats pivot, the schema frame and the retained sink frames. On
+    # success every consumer has resolved when it exits; on failure a
+    # long-lived session calling transform() repeatedly must not keep
+    # one cache set per failed call either.
+    with CacheScope() as scope:
         # the head: everything the driver thread runs before the sink pool
         with phase(spark, "transform.head"):
             def read(dataset: str) -> DataFrame:
@@ -556,6 +554,7 @@ def transform(
             topk, predicate_datatypes, schema_derived, dim_caches = infobox_dims(
                 all_infobox, cfg.top_infobox_properties_per_lang
             )
+            scope.adopt(*dim_caches)
             if topk is not None:
                 infobox_triples = filter_by_topk(all_infobox, topk)
             else:
@@ -584,6 +583,7 @@ def transform(
                     k = cfg.top_infobox_properties_per_lang
                     stats_frames[f"top {k} infobox_properties"] = infobox_triples
                 stats_tables = per_lang_stats_tables(stats_frames)
+                scope.adopt(*persisted_frames(stats_tables[0]))
 
             typed = typed_triples(infobox_triples)
 
@@ -595,11 +595,12 @@ def transform(
             skos = clean_skos(skos_triples, cfg)
             geo = clean_geo(geo_triples, cfg)
 
-            schema = full_schema(
-                spark, infobox_triples, predicate_datatypes,
-                cfg.remove_language_tags, cfg.externalise_uris,
-                derived=schema_derived,
-            ).cache()
+            schema = scope.persist(
+                full_schema(
+                    spark, schema_derived, cfg.remove_language_tags,
+                    cfg.externalise_uris,
+                )
+            )
             # materialize the cached dimensions (topk, predicate_datatypes,
             # schema) once, before concurrent writers race to compute them.
             # Measured-and-rejected variants (do not re-try without re-measuring):
@@ -719,7 +720,7 @@ def transform(
                 # translation: cache cold, sink-phase intermediates on local
                 # disk; keep executor memory for execution.
                 retained = {
-                    name: frame.persist(StorageLevel.DISK_ONLY)
+                    name: scope.persist(frame, StorageLevel.DISK_ONLY)
                     for name, frame in frames
                 }
                 # the written files' content = invalid_predicate_filter(pre-
@@ -867,18 +868,3 @@ def transform(
                 print(collect_spill_metrics(spark).report())
 
         return outputs
-    finally:
-        # one release point for every cache transform() holds: the stats
-        # pivot, the retained sink frames, the dimension caches (cube /
-        # topk / predicate_datatypes from infobox_dims) and the schema
-        # frame. On success every consumer has resolved by here; on
-        # failure a long-lived session calling transform() repeatedly
-        # must not keep one cache set per failed call either.
-        if stats_tables is not None:
-            release(stats_tables[0])
-        for c in retained.values():
-            c.unpersist()
-        for c in dim_caches:
-            c.unpersist()
-        if schema is not None:
-            schema.unpersist()

@@ -77,18 +77,13 @@ def split_corrupt(
     (cachectl). Set ``cache=False`` when only the clean half will be
     read and the corpus is too large to pin — then query ``bad`` only
     with at least one data column in the plan."""
-    from dgraph_dbpedia_spark.operators.cachectl import tag_persisted
+    from dgraph_dbpedia_spark.operators.cachectl import CacheScope
 
-    handles = []
-    if cache:
-        df = df.persist()
-        handles = [df]
-    clean = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.where(F.col(corrupt_col).isNotNull()).select(corrupt_col)
-    return (
-        tag_persisted(clean, *handles),
-        tag_persisted(bad, *handles),
-    )
+    with CacheScope() as scope:
+        handles = [scope.persist(df)] if cache else []
+        clean = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
+        bad = df.where(F.col(corrupt_col).isNotNull()).select(corrupt_col)
+        return scope.hand(clean, *handles), scope.hand(bad, *handles)
 
 
 def write_jsonl(df: DataFrame, path: str, n_files: int | None = None) -> None:

@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dgraph_dbpedia_spark.operators.cachectl import CacheScope
+
 # the driver's events.parquet schema (ts is TIMESTAMP without timezone)
 EVENTS_SCHEMA = T.StructType(
     [
@@ -484,9 +486,8 @@ def stream_near_dup_batch(
     # the batch fingerprints feed the state join, both within-batch
     # pair sides (via the anti-join view), and the state append — ONE
     # simhash fold per micro-batch, cached for all four consumers
-    sh = simhash(batch, text_col, id_col).persist()
-    dup_ids = None
-    try:
+    with CacheScope() as scope:
+        sh = scope.persist(simhash(batch, text_col, id_col))
         # no state table yet = the first micro-batch; an EXISTING state
         # that cannot be read fails the batch loudly in the read, or
         # near-dups of registered docs would silently reach both the
@@ -508,7 +509,7 @@ def stream_near_dup_batch(
             )
             # persisted: dup_ids gates the survivor rows AND both pair
             # sides — uncached it would replay the state join per branch
-            dup_ids = (
+            dup_ids = scope.persist(
                 bb.join(sb, ["chunk", "val"])
                 .where(
                     F.bit_count(F.col("simhash").bitwiseXOR(F.col("sim_s")))
@@ -516,7 +517,6 @@ def stream_near_dup_batch(
                 )
                 .select(F.col(id_col))
                 .distinct()
-                .persist()
             )
             clean = batch.join(dup_ids, id_col, "left_anti")
             clean_sh = sh.join(dup_ids, id_col, "left_anti")
@@ -524,20 +524,17 @@ def stream_near_dup_batch(
             clean = batch
             clean_sh = sh
         pairs = simhash_banded_pairs(clean_sh, id_col, max_hamming)
-        survivors = near_dup_filter(clean, pairs, id_col).localCheckpoint()
+        survivors = scope.checkpoint(near_dup_filter(clean, pairs, id_col))
         (
             sh.join(survivors.select(F.col(id_col)), id_col, "left_semi")
             .select(F.col(id_col), F.col("simhash"))
             .write.mode("append")
             .parquet(state_dir)
         )
-        return survivors
-    finally:
-        # exception-safe: a failed localCheckpoint/state write on a
-        # retried micro-batch must not leak a cached frame per attempt
-        sh.unpersist()
-        if dup_ids is not None:
-            dup_ids.unpersist()
+        # survivors back the returned frame; on a failed state write
+        # the scope frees them with the caches, so a retried
+        # micro-batch leaks nothing per attempt
+        return scope.keep(survivors)
 
 
 def tag_embeddings_stream(

@@ -571,6 +571,74 @@ def test_ingest_write_failure_aborts_queued_datasets(
         assert not (out / f"{dataset}.parquet").exists(), dataset
 
 
+@pytest.mark.parametrize("fault", ["read", "stats"])
+def test_ingest_failed_dataset_leaves_no_table(
+    spark, pipeline_dirs, tmp_path, monkeypatch, fault
+):
+    """Fault injection on a one-worker ingest pool: the labels dataset
+    fails in its ttl read or in its stats read-back. ingest re-raises
+    within a bounded time, the datasets queued behind it never start
+    (the one the worker may pick up before the cancel is exempt), the
+    dataset that finished keeps its table, and the failed dataset
+    leaves no ``labels.parquet`` — neither a partial write nor the
+    stale table of an earlier run (planted here) that a later transform
+    would read as whole."""
+    import threading
+
+    from dgraph_dbpedia_spark.plans import ingest as ingest_mod
+
+    message = f"injected labels {fault} failure"
+    first, queued = "infobox_properties", ["page_links", "geo_coordinates",
+                                           "skos_categories"]
+    started, counted = [], []
+    real_load, real_read = ingest_mod.load_dataset, ingest_mod.read_ttl
+    real_counts = ingest_mod.dataset_counts
+
+    def load_dataset(spark_, root_, dataset, *args, **kwargs):
+        started.append(dataset)
+        return real_load(spark_, root_, dataset, *args, **kwargs)
+
+    def read_ttl(spark_, path, *args, **kwargs):
+        if fault == "read" and "labels" in os.path.basename(path):
+            raise RuntimeError(message)
+        return real_read(spark_, path, *args, **kwargs)
+
+    def dataset_counts(df):
+        counted.append(df)
+        # one worker: the second read-back is the labels dataset's
+        if fault == "stats" and len(counted) == 2:
+            raise RuntimeError(message)
+        return real_counts(df)
+
+    monkeypatch.setattr(ingest_mod, "INGEST_WORKERS", 1)
+    monkeypatch.setattr(ingest_mod, "load_dataset", load_dataset)
+    monkeypatch.setattr(ingest_mod, "read_ttl", read_ttl)
+    monkeypatch.setattr(ingest_mod, "dataset_counts", dataset_counts)
+    out = tmp_path / f"parquet_{fault}"
+    (out / "labels.parquet" / "lang=de").mkdir(parents=True)
+    (out / "labels.parquet" / "lang=de" / "part-0.parquet").write_bytes(b"stale")
+    raised = []
+
+    def run():
+        try:
+            ingest(spark, str(pipeline_dirs[0]), str(out),
+                   datasets=[first, "labels", *queued])
+        except BaseException as e:  # noqa: BLE001 — handed to the test
+            raised.append(e)
+
+    runner = threading.Thread(target=run, daemon=True)
+    runner.start()
+    runner.join(120)
+    assert not runner.is_alive(), f"ingest hung after an {message}"
+    assert raised and message in str(raised[0]), raised
+    assert started[:2] == [first, "labels"]
+    assert not set(started) & set(queued[1:]), started
+    assert (out / f"{first}.parquet" / "_SUCCESS").exists()
+    assert not (out / "labels.parquet").exists()
+    for dataset in queued[1:]:
+        assert not (out / f"{dataset}.parquet").exists(), dataset
+
+
 def test_curate_corpus_every_stage_fires(spark):
     """End-to-end curation composition: each planted doc exercises one
     stage — gopher kill (too short), exact-dup kill (identical text,

@@ -89,3 +89,57 @@ def test_tool_engine_names_exist(tool):
         except (ImportError, AttributeError):
             missing.append(path)
     assert not missing, f"{tool.name} uses names the engine no longer has: {missing}"
+
+
+def _load_tool(name: str):
+    """A ``tools/`` script as a module (its top level runs; no session)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(name, ROOT / "tools" / f"{name}.py")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_tool_sibling_imports_exist():
+    """A tool's import of another script in ``tools/`` (``from benchgen
+    import ...``, resolved from the script's own directory when it runs)
+    names a name that script defines."""
+    local = {p.stem for p in (ROOT / "tools").glob("*.py")}
+    missing = [
+        f"{tool.name}: {node.module}.{a.name}"
+        for tool in SCRIPTS
+        for node in ast.walk(ast.parse(tool.read_text()))
+        if isinstance(node, ast.ImportFrom) and node.level == 0 and node.module in local
+        for a in node.names
+        if not hasattr(_load_tool(node.module), a.name)
+    ]
+    assert not missing, missing
+
+
+def test_dump_plans_normalizes_run_ids():
+    """Plans that differ only in expression ids, plan ids, RDD ids and
+    PySpark lambda-variable suffixes normalize to the same text; a real
+    plan difference survives."""
+    dump_plans = _load_tool("dump_plans")
+    a = (
+        "Project [transform(e#12, lambdafunction((lambda x_55#301 + 1.0D), "
+        "lambda x_55#301, false)) AS t#40]\n"
+        "+- Exchange hashpartitioning(cid#7L, 8), ENSURE_REQUIREMENTS, [plan_id=113]\n"
+        "   +- Scan ExistingRDD[u#3L,v#4L] MapPartitionsRDD[45] at localCheckpoint\n"
+    )
+    b = (
+        "Project [transform(e#99, lambdafunction((lambda x_86#512 + 1.0D), "
+        "lambda x_86#512, false)) AS t#130]\n"
+        "+- Exchange hashpartitioning(cid#71L, 8), ENSURE_REQUIREMENTS, [plan_id=7]\n"
+        "   +- Scan ExistingRDD[u#31L,v#32L] MapPartitionsRDD[3] at localCheckpoint\n"
+    )
+    assert dump_plans.normalize_plan(a) == dump_plans.normalize_plan(b)
+    assert dump_plans.normalize_plan(a) == (
+        "Project [transform(e#N, lambdafunction((lambda x_N#N + 1.0D), "
+        "lambda x_N#N, false)) AS t#N]\n"
+        "+- Exchange hashpartitioning(cid#NL, 8), ENSURE_REQUIREMENTS, [plan_id=N]\n"
+        "   +- Scan ExistingRDD[u#NL,v#NL] MapPartitionsRDD[N] at localCheckpoint\n"
+    )
+    c = a.replace("hashpartitioning(cid#7L, 8)", "hashpartitioning(cid#7L, 16)")
+    assert dump_plans.normalize_plan(c) != dump_plans.normalize_plan(a)

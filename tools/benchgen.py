@@ -6,9 +6,12 @@ layout; triple grammar per SPARK.md:57-62) at an arbitrary subject
 count, entirely with DataFrame expressions — ``spark.range`` + string
 concat, no driver-side loops — so generation itself scales to any size.
 
-Used by bench.py to measure end-to-end ingest (.ttl -> parquet) and
-transform (parquet -> RDF) throughput in triples/s, the unit BASELINE.md
-publishes for the reference (300k/400k triples/s on 8 cores).
+Used by ``tools/pipeline_bench.py`` (bench.py's pipeline section) and
+``tools/profile_transform.py`` to measure end-to-end ingest (.ttl ->
+parquet) and transform (parquet -> RDF) throughput in triples/s, the
+unit BASELINE.md publishes for the reference (300k/400k triples/s on 8
+cores). It lives beside them, outside the engine package; run as
+scripts, they import it as ``benchgen``.
 
 Each "file" is a directory of text parts under the ``.ttl`` name; the
 ingest reader (``spark.read.text``) and the driver-side catalog

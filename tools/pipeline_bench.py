@@ -30,7 +30,7 @@ def bench_pipelines(spark, sf: float) -> dict[str, float]:
     """Ingest and transform wall-clock + triples/s on a generated
     corpus. Corpus generation and the throughput-denominator counts run
     outside the timed windows."""
-    from dgraph_dbpedia_spark.benchgen import generate_ttl_corpus, LANGS
+    from benchgen import LANGS, generate_ttl_corpus
     from dgraph_dbpedia_spark.plans.ingest import ingest
     from dgraph_dbpedia_spark.plans.transform import TransformConfig, transform
 

@@ -17,7 +17,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dgraph_dbpedia_spark.benchgen import LANGS, generate_ttl_corpus
+from benchgen import LANGS, generate_ttl_corpus
 from dgraph_dbpedia_spark.observability import codegen_compiles, mark, phase_counters
 from dgraph_dbpedia_spark.plans import transform as T
 from dgraph_dbpedia_spark.plans.ingest import ingest
