@@ -254,7 +254,7 @@ def _q_stats_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = {
         f"src{i}": docs.where(F.col("source") == f"src{i}") for i in range(3)
     }
-    return stats_table_pivot(frames, "lang")
+    return stats_table_pivot(frames)
 
 
 def _q_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -738,7 +738,7 @@ def _q_minhash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_join(
         docs.where(F.col("doc_id") % 4 == 0),
         docs.where(F.col("doc_id") % 4 != 0),
-        w=3, k=16, bands=4, threshold=0.4,
+        bands=4, threshold=0.4,
     )
 
 
@@ -752,7 +752,7 @@ def _q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = docs.where(F.col("doc_id") % 4 != 0)
     batch = docs.where(F.col("doc_id") % 4 == 0)
     return dedup_increment(
-        existing, batch, w=3, k=16, bands=4, threshold=0.4
+        existing, batch, bands=4, threshold=0.4
     ).select("doc_id", "lang", "source")
 
 
@@ -924,7 +924,7 @@ def _q_pq_ivf_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, cb, coarse = _served_pq_index(spark, sf_dir)
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return pq_ivf_topk_served(
-        codes, cb, coarse, q, dims=64, m=4, k=5, n_probe=2
+        codes, cb, coarse, q, dims=64, k=5
     )
 
 
@@ -947,10 +947,8 @@ def _q_pq_ivf_rerank_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") > 0),
         q,
         dims=64,
-        m=4,
         k=5,
         shortlist_n=50,
-        n_probe=2,
     )
 
 
@@ -1220,7 +1218,7 @@ def _q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.slice(_toks(F.col("text")), 1, 6), " ").alias("text"),
     )
     u = docs.select("doc_id", "text").unionByName(prefixes)
-    return ngram_containment_pairs(u, w=3, threshold=0.9)
+    return ngram_containment_pairs(u, threshold=0.9)
 
 
 def _q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1359,7 +1357,6 @@ def _q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_novelty(
         docs.where(F.col("doc_id") % 50 != 0),
         docs.where(F.col("doc_id") % 50 == 0),
-        w=3,
     )
 
 
@@ -1408,7 +1405,7 @@ def _q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return token_budget_sample(
-        docs, budget_tokens=600, group_col="source", seed=1
+        docs, budget_tokens=600, seed=1
     ).select("doc_id", "lang", "source", "n_tokens")
 
 
@@ -1540,7 +1537,7 @@ def _q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # no release here: the suite-wide policy (see bench.py) is to let
     # results carry their handles and clearCache at suite boundaries
-    return perplexity_buckets(docs, n_buckets=3, group_col="lang")
+    return perplexity_buckets(docs, n_buckets=3)
 
 
 def _q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1572,7 +1569,7 @@ def _q_frequent_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic tie-break on the ngram string."""
     from dgraph_dbpedia_spark.operators.textstats import frequent_ngrams
 
-    return frequent_ngrams(_t(spark, sf_dir, "documents"), n=3, k=20)
+    return frequent_ngrams(_t(spark, sf_dir, "documents"), k=20)
 
 
 def _q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1608,14 +1605,14 @@ def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cap would be a hot-key join explosion at corpus scale. No
     # shingle reaches 1000 docs at oracle SF, so the DuckDB SQL needs no
     # mirroring frequency filter.
-    return ngram_jaccard_pairs(docs, w=3, threshold=0.4, max_shingle_freq=1000)
+    return ngram_jaccard_pairs(docs, threshold=0.4, max_shingle_freq=1000)
 
 
 def _q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.dedup import minhash_signatures
 
     docs = _t(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs, w=3, k=16)
+    sigs = minhash_signatures(docs)
     return sigs.select(
         "doc_id", *[F.col("sig").getItem(i).alias(f"sig_{i:02d}") for i in range(16)]
     )
@@ -1821,7 +1818,7 @@ def _q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.similarity import embedding_drift
 
     emb = _t(spark, sf_dir, "embeddings")
-    return embedding_drift(emb, group_col="label")
+    return embedding_drift(emb)
 
 
 def _q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1929,7 +1926,7 @@ def _q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.streaming.events import interval_join
 
     events = _t(spark, sf_dir, "events")
-    return interval_join(events, events, "click", "view", 1800)
+    return interval_join(events, events)
 
 
 def _q_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1940,7 +1937,7 @@ def _q_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.streaming.events import interval_join_outer
 
     events = _t(spark, sf_dir, "events")
-    return interval_join_outer(events, events, "click", "view", 1800)
+    return interval_join_outer(events, events)
 
 
 def _q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2094,7 +2091,7 @@ def _build_ivf_index_atomic(e, root: str) -> None:
         asg = spark.read.parquet(f"{staging}/assigned").select("vec_id", "cid")
         quantize_embeddings(
             e, spark.read.parquet(f"{staging}/scales"),
-            id_col="vec_id", vec_col="e",
+            vec_col="e",
         ).join(asg, "vec_id").write.mode("overwrite").partitionBy(
             "cid"
         ).parquet(f"{staging}/quantized")
@@ -2248,7 +2245,7 @@ def _q_rq_ivf_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, centroids = _served_ivf_index(spark, sf_dir)
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return rq_ivf_topk_served(
-        codes, rcb, centroids, q, dims=64, k=5, n_probe=2
+        codes, rcb, centroids, q, dims=64, k=5
     )
 
 
@@ -2360,9 +2357,6 @@ def _q_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return split_leakage_report(
         docs,
         {"train": 0.8, "val": 0.1, "test": 0.1},
-        w=3,
-        k=16,
-        bands=4,
         threshold=0.4,
     )
 
@@ -2519,10 +2513,10 @@ def _q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = os.path.join(scratch, "state")
     try:
         s1 = stream_near_dup_batch(
-            docs.where(F.col("doc_id") % 2 == 0), state, max_hamming=3
+            docs.where(F.col("doc_id") % 2 == 0), state
         )
         s2 = stream_near_dup_batch(
-            docs.where(F.col("doc_id") % 2 == 1), state, max_hamming=3
+            docs.where(F.col("doc_id") % 2 == 1), state
         )
         return s1.unionByName(s2).select("doc_id", "lang", "source")
     finally:
@@ -2562,7 +2556,7 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.multimodal import attach_binary, frame_sample
 
     docs = _t(spark, sf_dir, "documents").withColumnRenamed("doc_id", "id")
-    return frame_sample(attach_binary(docs), every_n_bytes=64)
+    return frame_sample(attach_binary(docs))
 
 
 def _q_embed_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2618,7 +2612,7 @@ def _q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.textclean import repetition_score
 
-    return repetition_score(_t(spark, sf_dir, "documents"), n=3)
+    return repetition_score(_t(spark, sf_dir, "documents"))
 
 
 def _q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2835,7 +2829,7 @@ def _q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    return embedding_outliers(emb, group_col="label")
+    return embedding_outliers(emb)
 
 
 def _q_classifier_training_set(
@@ -2924,7 +2918,6 @@ def _q_category_shift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return category_shift_report(
         docs.where(F.col("doc_id") % 2 == 0),
         docs.where(F.col("doc_id") % 3 != 0),
-        group_col="source",
     )
 
 
@@ -3028,7 +3021,7 @@ def _q_source_mixture_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return source_mixture_report(
-        _t(spark, sf_dir, "documents"), group_col="source", alpha=0.5
+        _t(spark, sf_dir, "documents"), alpha=0.5
     )
 
 
@@ -3088,7 +3081,7 @@ def _q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     truth = ngram_jaccard_pairs(
-        docs, w=3, threshold=0.4, max_shingle_freq=1000
+        docs, threshold=0.4, max_shingle_freq=1000
     )
     cands = minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
     # the two pair frames carry their persisted shingle handles (the

@@ -181,7 +181,7 @@ def main() -> None:
         ngram_jaccard_pairs,
     )
 
-    _w = ngram_jaccard_pairs(_warm.limit(64), w=3, threshold=0.9)
+    _w = ngram_jaccard_pairs(_warm.limit(64), threshold=0.9)
     _w.write.format("noop").mode("overwrite").save()
     release(_w)
 

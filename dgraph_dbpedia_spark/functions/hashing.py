@@ -28,10 +28,8 @@ def hash64(col: Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def hash64_sql(expr: str, seed: int | None = None) -> str:
+def hash64_sql(expr: str) -> str:
     """DuckDB equivalent of :func:`hash64` for oracle queries."""
-    if seed is not None:
-        expr = f"({expr} || '#{seed}')"
     return f"('0x' || substring(md5({expr}), 1, 15))::BIGINT"
 
 

@@ -128,9 +128,6 @@ def _hashed_shingled(df: DataFrame, text_col: str, id_col: str, w: int) -> DataF
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
 ) -> DataFrame:
@@ -155,10 +152,11 @@ def ngram_jaccard_pairs(
     The result carries its persisted shingle-frame handle — release with
     :func:`dgraph_dbpedia_spark.operators.cachectl.release` after
     materializing.
-    """
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     with CacheScope() as scope:
         counts, persisted = _ngram_pair_counts(
-            scope, df, text_col, id_col, w, max_shingle_freq
+            scope, df, "text", "doc_id", 3, max_shingle_freq
         )
         out = (
             counts.withColumn(
@@ -220,14 +218,7 @@ def _ngram_pair_counts(
     return counts, persisted
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    threshold: float = 0.8,
-    max_shingle_freq: int | None = 1000,
-) -> DataFrame:
+def ngram_containment_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """ASYMMETRIC shingle containment — the subsumption detector
     Jaccard structurally cannot be: a short quote fully embedded in a
     long document has near-zero Jaccard (the union is huge) but
@@ -243,12 +234,14 @@ def ngram_containment_pairs(
     :func:`ngram_jaccard_pairs` (shared skeleton): only documents
     sharing a shingle ever meet, sizes come from the SAME capped
     universe as the intersection, and the result carries the persisted
-    handles for cachectl release."""
+    handles for cachectl release.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     ca = F.round(F.col("inter") / F.col("na"), 6)
     cb = F.round(F.col("inter") / F.col("nb"), 6)
     with CacheScope() as scope:
         counts, persisted = _ngram_pair_counts(
-            scope, df, text_col, id_col, w, max_shingle_freq
+            scope, df, "text", "doc_id", 3, 1000
         )
         out = (
             counts.withColumn("containment_a", ca)
@@ -311,13 +304,7 @@ def _minhash_lanes_arrow(k: int):
     return pandas_udf(lanes, ArrayType(LongType()))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    k: int = 16,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """k-minimum-hash signature per document: ``sig[i] = min over
     shingles of lane_i(h(shingle))``. Returns ``(id, sig: array<bigint>)``.
 
@@ -330,9 +317,10 @@ def minhash_signatures(
     passes run as one numpy kernel per Arrow batch
     (:func:`_minhash_lanes_arrow`) instead of k interpreted array
     traversals.
-    """
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     return _sigs_from_hashed(
-        _hashed_shingled(df, text_col, id_col, w), id_col, k
+        _hashed_shingled(df, "text", "doc_id", 3), "doc_id", 16
     )
 
 
@@ -450,7 +438,7 @@ def minhash_dedup_pairs(
 N_SIMHASH_BITS = 60  # fits the cross-engine 15-hex-char hash
 
 
-def _simhash_fold_arrow(n_bits: int = N_SIMHASH_BITS):
+def _simhash_fold_arrow():
     """Vectorized twin of the native vote fold: token hashes (computed
     JVM-side — md5 stays native) fold to the fingerprint in numpy inside
     an Arrow batch. Integer arithmetic, so bit-IDENTICAL to the native
@@ -465,7 +453,7 @@ def _simhash_fold_arrow(n_bits: int = N_SIMHASH_BITS):
         import numpy as np  # noqa: F811
         import pandas as pd
 
-        shifts = np.arange(n_bits, dtype=np.int64)
+        shifts = np.arange(N_SIMHASH_BITS, dtype=np.int64)
         out = np.zeros(len(hs), dtype=np.int64)
         for i, arr in enumerate(hs):
             h = np.asarray(arr, dtype=np.int64)
@@ -484,9 +472,7 @@ def _token_hashes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(F.col(id_col), hs.alias("hs"))
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """60-bit SimHash per document over whitespace tokens: bit b is set
     iff the sum over tokens of (+-1 by token-hash bit b) is positive.
     Returns ``(id, simhash: bigint)``. Per-row only — no shuffle.
@@ -495,9 +481,11 @@ def simhash(
     (:func:`_simhash_fold_arrow`; the interpreted higher-order fold
     walks tokens x 60 bits in the expression interpreter); results are
     bit-identical — integer math — so the oracle contract is
-    unaffected."""
-    return _token_hashes(df, text_col, id_col).select(
-        F.col(id_col), _simhash_fold_arrow()(F.col("hs")).alias("simhash")
+    unaffected.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    return _token_hashes(df, "text", "doc_id").select(
+        F.col("doc_id"), _simhash_fold_arrow()(F.col("hs")).alias("simhash")
     )
 
 
@@ -548,11 +536,7 @@ def _simhash_chunks(sim: Column) -> Column:
     )
 
 
-def simhash_banded_pairs(
-    fingerprints: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_banded_pairs(fingerprints: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs from a precomputed ``(id, simhash)`` frame —
     banding on the 4 x 15-bit chunks, hamming verify on bucket
     collisions only. Callers that already hold fingerprints
@@ -563,7 +547,9 @@ def simhash_banded_pairs(
     ``max_hamming`` must be <= 3: the pigeonhole guarantee (some chunk
     agrees exactly) only holds for 3 differing bits over 4 chunks — a
     larger radius would SILENTLY lose pairs whose diff bits span all
-    four chunks, so it raises instead."""
+    four chunks, so it raises instead.
+
+    Fixed columns: id ``doc_id``."""
     if not 0 <= max_hamming <= 3:
         raise ValueError(
             f"max_hamming must be in [0, 3] (4-band pigeonhole bound), "
@@ -571,15 +557,15 @@ def simhash_banded_pairs(
             "scheme, not a larger radius on this one"
         )
     buckets = fingerprints.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("simhash"),
         F.posexplode(_simhash_chunks(F.col("simhash"))).alias("chunk", "val"),
     )
     a = buckets.select(
-        F.col(id_col).alias("a"), F.col("simhash").alias("sim_a"), "chunk", "val"
+        F.col("doc_id").alias("a"), F.col("simhash").alias("sim_a"), "chunk", "val"
     )
     b = buckets.select(
-        F.col(id_col).alias("b"), F.col("simhash").alias("sim_b"), "chunk", "val"
+        F.col("doc_id").alias("b"), F.col("simhash").alias("sim_b"), "chunk", "val"
     )
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     # hamming filter BEFORE the dedup-distinct: the filter is a cheap
@@ -594,12 +580,7 @@ def simhash_banded_pairs(
     )
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_near_dup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= max_hamming.
 
     Banding on 4 x 15-bit chunks: any pair within hamming 3 of 60 bits
@@ -612,26 +593,27 @@ def simhash_near_dup_pairs(
     self-join, and without the persist Catalyst recomputes the full
     simhash fold per side (no cross-branch subplan sharing, SURVEY §4).
     The result carries the handle — release via cachectl.release.
-    """
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if not 0 <= max_hamming <= 3:  # validate BEFORE marking any persist
         raise ValueError(
             f"max_hamming must be in [0, 3], got {max_hamming}"
         )
     with CacheScope() as scope:
-        sh = scope.persist(simhash(df, text_col, id_col))
-        return scope.hand(simhash_banded_pairs(sh, id_col, max_hamming), sh)
+        sh = scope.persist(simhash(df))
+        return scope.hand(simhash_banded_pairs(sh, max_hamming), sh)
 
 
-def near_dup_filter(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def near_dup_filter(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Corpus-level dedup step: given near-dup ``(a, b)`` pairs with
     a < b, drop every document that appears as the higher id of a pair
     (greedy keep-the-canonical-representative). One broadcast-able
     anti-join — the operation a training-data pipeline actually runs
-    after candidate generation."""
-    losers = pairs.select(F.col("b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    after candidate generation.
+
+    Fixed columns: id ``doc_id``."""
+    losers = pairs.select(F.col("b").alias("doc_id")).distinct()
+    return df.join(losers, "doc_id", "left_anti")
 
 
 def dedup_clusters_star(
@@ -843,13 +825,7 @@ def dedup_corpus(
     return docs.join(reps, id_col, "left_semi")
 
 
-def paragraph_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n\n",
-    sep_regex: str | None = None,
-) -> DataFrame:
+def paragraph_dedup(docs: DataFrame, sep: str = "\n\n") -> DataFrame:
     """Cross-corpus paragraph-level exact dedup (the C4-style rule):
     every repeated paragraph keeps only its FIRST occurrence — lowest
     ``(doc_id, position)`` corpus-wide — and each document is
@@ -863,9 +839,7 @@ def paragraph_dedup(
     that differ only outside the boilerplate, paragraph-level removes
     exactly the repeats.
 
-    ``sep_regex`` overrides the split pattern when the display
-    separator differs from the split rule; when omitted, ``sep`` is
-    regex-ESCAPED before reaching the splitter, so a separator like
+    ``sep`` is regex-ESCAPED before reaching the splitter, so a separator like
     ``"..."`` or ``"* * *"`` splits on the literal characters (an
     unescaped pass-through would shred every doc — dot matches
     anything — and diverge from the literal-split oracle).
@@ -880,10 +854,12 @@ def paragraph_dedup(
     formulation would hot-key exactly on the paragraphs this operator
     exists to remove). Reassembly is one groupBy(id) of the surviving
     paragraphs. Two shuffles total (fp, id), both on bounded keys; no
-    UDFs, no collect."""
+    UDFs, no collect.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     import re as _re
 
-    pattern = sep_regex if sep_regex is not None else _re.escape(sep)
+    pattern = _re.escape(sep)
     with CacheScope() as scope:
         # persisted: the paragraph frame feeds BOTH the first-occurrence
         # aggregate and the semi-join probe side — without it the
@@ -892,41 +868,41 @@ def paragraph_dedup(
         # persist above). The result carries the handle.
         paras = scope.persist(
             docs.select(
-                F.col(id_col),
-                F.posexplode(F.split(F.col(text_col), pattern)).alias(
+                F.col("doc_id"),
+                F.posexplode(F.split(F.col("text"), pattern)).alias(
                     "pos", "para"
                 ),
             )
             .where(F.trim("para") != "")
             .select(
-                F.col(id_col), "pos", "para", F.md5(F.col("para")).alias("fp")
+                F.col("doc_id"), "pos", "para", F.md5(F.col("para")).alias("fp")
             )
         )
         firsts = paras.groupBy("fp").agg(
-            F.min(F.struct(F.col(id_col), F.col("pos"))).alias("first")
+            F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("first")
         )
         kept = paras.join(
             firsts,
             (paras["fp"] == firsts["fp"])
-            & (paras[id_col] == firsts["first"][id_col])
+            & (paras["doc_id"] == firsts["first"]["doc_id"])
             & (paras["pos"] == firsts["first"]["pos"]),
             "left_semi",
         )
-        rebuilt = kept.groupBy(id_col).agg(
+        rebuilt = kept.groupBy("doc_id").agg(
             F.array_join(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("pos", "para"))),
                     lambda s: s["para"],
                 ),
                 sep,
-            ).alias(text_col)
+            ).alias("text")
         )
         out = (
-            docs.select(F.col(id_col))
-            .join(rebuilt, id_col, "left")
+            docs.select(F.col("doc_id"))
+            .join(rebuilt, "doc_id", "left")
             .select(
-                F.col(id_col),
-                F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
+                F.col("doc_id"),
+                F.coalesce(F.col("text"), F.lit("")).alias("text"),
             )
         )
         return scope.hand(out, paras)
@@ -967,7 +943,6 @@ def contaminated_ids(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    bench_broadcast_cap: int | None = 20_000_000,
 ) -> DataFrame:
     """Ids of documents sharing >=1 ``w``-token shingle with the
     benchmark set (see :func:`decontaminate`). Output: ``(doc_id,)``
@@ -977,17 +952,15 @@ def contaminated_ids(
     are small by construction, and the hint keeps the exploded corpus
     from ever shuffling on ``h``) — but an unexpectedly large benchmark
     must degrade to a shuffle join, not a driver/executor OOM from a
-    forced broadcast. ``bench_broadcast_cap`` is that gate: the hash
+    forced broadcast. A 20 000 000-hash cap is that gate: the hash
     set is counted up front (an eager job over the SMALL side only —
     the one place this function touches the cluster at construction
-    time), and the hint applies only at or below the cap (default 2e7
+    time), and the hint applies only at or below the cap (2e7
     hashes ~ 160 MB of int64s). The gated path computes the benchmark
     shingle set twice (once for the count, once inside the join) —
     deliberately NOT persisted: the recompute is bounded by the eval
     set's size while a persist handle that every caller must remember
-    to release is a leak in a shared session. ``None`` skips the count
-    and always broadcasts (the pre-r9 behavior, zero eager work, for
-    callers that know their eval set)."""
+    to release is a leak in a shared session."""
     bench_sh = (
         _hashed_shingled(
             benchmark.select(F.lit(0).alias("__bid"), F.col(bench_text_col)),
@@ -996,7 +969,7 @@ def contaminated_ids(
         .select(F.explode("sh").alias("h"))
         .distinct()
     )
-    if bench_broadcast_cap is None or bench_sh.count() <= bench_broadcast_cap:
+    if bench_sh.count() <= 20_000_000:
         right = F.broadcast(bench_sh)
     else:
         right = bench_sh
@@ -1010,11 +983,6 @@ def contamination_report(
     docs: DataFrame,
     benchmark: DataFrame,
     w: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    bench_broadcast_cap: int | None = 20_000_000,
 ) -> DataFrame:
     """Per-benchmark-item contamination audit — the report a curation
     run wants NEXT TO :func:`decontaminate`'s filter: for each
@@ -1033,48 +1001,42 @@ def contamination_report(
     note the broadcast side here is the per-(bench_id, hash) PAIR
     frame, strictly larger than the distinct hash set
     ``contaminated_ids`` ships, so it gets the same
-    ``bench_broadcast_cap`` OOM-degrade gate (counted up front on the
+    20 000 000-row OOM-degrade gate (counted up front on the
     SMALL side only; above the cap the join degrades to a shuffle
-    join, never a forced-broadcast OOM; ``None`` skips the count and
-    always broadcasts). Both counts are count-distinct over the
+    join, never a forced-broadcast OOM). Both counts are count-distinct over the
     joined (bench_id, doc/hash) pairs, a partial-aggregable shuffle
-    bounded by the collision volume, never the corpus."""
+    bounded by the collision volume, never the corpus.
+
+    Fixed columns: benchmark id ``doc_id``, benchmark text ``text``, id
+    ``doc_id``, text ``text``."""
     bench_sh = _hashed_shingled(
         benchmark.select(
-            F.col(bench_id_col).alias("__bid"), F.col(bench_text_col)
+            F.col("doc_id").alias("__bid"), F.col("text")
         ),
-        bench_text_col, "__bid", w,
+        "text", "__bid", w,
     ).select(F.col("__bid"), F.explode("sh").alias("h"))
-    if bench_broadcast_cap is None or bench_sh.count() <= bench_broadcast_cap:
+    if bench_sh.count() <= 20_000_000:
         right = F.broadcast(bench_sh)
     else:
         right = bench_sh
-    corpus_sh = _hashed_shingled(docs, text_col, id_col, w).select(
-        F.col(id_col), F.explode("sh").alias("h")
+    corpus_sh = _hashed_shingled(docs, "text", "doc_id", w).select(
+        F.col("doc_id"), F.explode("sh").alias("h")
     )
     return (
         corpus_sh.join(right, "h")
         .groupBy("__bid")
         .agg(
-            F.count_distinct(F.col(id_col)).alias("n_docs"),
+            F.count_distinct(F.col("doc_id")).alias("n_docs"),
             F.count_distinct(F.col("h")).alias("n_shingles"),
         )
         .select(F.col("__bid").alias("bench_id"), "n_docs", "n_shingles")
     )
 
 
-def ngram_novelty(
-    docs: DataFrame,
-    reference: DataFrame,
-    w: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ref_text_col: str = "text",
-    ref_broadcast_cap: int | None = 20_000_000,
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame, reference: DataFrame) -> DataFrame:
     """Per-document novelty vs a reference corpus — the memorization /
     freshness score of data curation: ``novel_ratio`` is the fraction
-    of the document's DISTINCT ``w``-token shingles absent from the
+    of the document's DISTINCT 3-token shingles absent from the
     reference's shingle set (1.0 = fully novel, 0.0 = every shingle
     already in the reference — verbatim-memorization risk, or stale
     re-crawl content when the reference is a previous snapshot).
@@ -1089,29 +1051,32 @@ def ngram_novelty(
     100 TB shape: the :func:`contaminated_ids` layout — the
     reference's distinct shingle hashes join the exploded corpus
     shingles on an 8-byte key (broadcast at or below
-    ``ref_broadcast_cap`` distinct hashes, counted up front on the
+    20 000 000 distinct hashes, counted up front on the
     SMALL side only; shuffle join above it, never a forced-broadcast
     OOM); one partial-aggregable per-doc count pair; integer counts
-    so the rounded ratio is order-independent by construction."""
+    so the rounded ratio is order-independent by construction.
+
+    Fixed columns: id ``doc_id``, reference text ``text``, text
+    ``text``."""
     ref_sh = (
         _hashed_shingled(
-            reference.select(F.lit(0).alias("__rid"), F.col(ref_text_col)),
-            ref_text_col, "__rid", w,
+            reference.select(F.lit(0).alias("__rid"), F.col("text")),
+            "text", "__rid", 3,
         )
         .select(F.explode("sh").alias("h"))
         .distinct()
         .withColumn("__seen", F.lit(1))
     )
-    if ref_broadcast_cap is None or ref_sh.count() <= ref_broadcast_cap:
+    if ref_sh.count() <= 20_000_000:
         right = F.broadcast(ref_sh)
     else:
         right = ref_sh
-    corpus_sh = _hashed_shingled(docs, text_col, id_col, w).select(
-        F.col(id_col), F.explode("sh").alias("h")
+    corpus_sh = _hashed_shingled(docs, "text", "doc_id", 3).select(
+        F.col("doc_id"), F.explode("sh").alias("h")
     )
     return (
         corpus_sh.join(right, "h", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_wgrams"),
             F.sum(
@@ -1119,7 +1084,7 @@ def ngram_novelty(
             ).alias("__novel"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_wgrams"),
             F.round(F.col("__novel") / F.col("n_wgrams"), 4).alias(
                 "novel_ratio"
@@ -1128,12 +1093,7 @@ def ngram_novelty(
     )
 
 
-def pair_recall_audit(
-    truth: DataFrame,
-    candidates: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-) -> DataFrame:
+def pair_recall_audit(truth: DataFrame, candidates: DataFrame) -> DataFrame:
     """Candidate-pair quality audit (r15): how much of an exact
     ground-truth pair set a cheaper candidate generator recovers —
     the banding-config check a dedup rollout runs on a sample before
@@ -1165,12 +1125,14 @@ def pair_recall_audit(
     100 TB shape: the audit is meant for a SAMPLE (the exact truth
     side is quadratic-ish to produce by nature); the plan itself is
     two narrow dedups + one pair-key equi-join + a global aggregate —
-    everything partial-aggregable, nothing collected."""
+    everything partial-aggregable, nothing collected.
+
+    Fixed columns: pair side a ``a``, pair side b ``b``."""
     t = truth.select(
-        F.col(a_col).alias("_a"), F.col(b_col).alias("_b")
+        F.col("a").alias("_a"), F.col("b").alias("_b")
     ).dropDuplicates(["_a", "_b"])
     c = candidates.select(
-        F.col(a_col).alias("_a"), F.col(b_col).alias("_b")
+        F.col("a").alias("_a"), F.col("b").alias("_b")
     ).dropDuplicates(["_a", "_b"])
     joined = t.withColumn("_t", F.lit(1)).join(
         c.withColumn("_c", F.lit(1)), ["_a", "_b"], "full_outer"
@@ -1234,10 +1196,6 @@ def dedup_report(clusters: DataFrame) -> DataFrame:
 def dedup_increment(
     existing: DataFrame,
     batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    k: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -1265,19 +1223,21 @@ def dedup_increment(
     persisted because it feeds the cross join and both self-join
     sides. The result carries the persisted handles — release with
     :func:`dgraph_dbpedia_spark.operators.cachectl.release` after
-    materializing."""
+    materializing.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     with CacheScope() as scope:
-        rows_per_band = k // bands
-        sh_e = scope.persist(_hashed_shingled(existing, text_col, id_col, w))
-        sh_b = scope.persist(_hashed_shingled(batch, text_col, id_col, w))
+        rows_per_band = 16 // bands
+        sh_e = scope.persist(_hashed_shingled(existing, "text", "doc_id", 3))
+        sh_b = scope.persist(_hashed_shingled(batch, "text", "doc_id", 3))
         bk_e = _lsh_buckets(
-            _sigs_from_hashed(sh_e, id_col, k),
-            id_col, bands, rows_per_band,
+            _sigs_from_hashed(sh_e, "doc_id", 16),
+            "doc_id", bands, rows_per_band,
         )
         bk_b = scope.persist(
             _lsh_buckets(
-                _sigs_from_hashed(sh_b, id_col, k),
-                id_col, bands, rows_per_band,
+                _sigs_from_hashed(sh_b, "doc_id", 16),
+                "doc_id", bands, rows_per_band,
             )
         )
 
@@ -1287,8 +1247,8 @@ def dedup_increment(
 
         # step 1: banded cross candidates, exact-Jaccard verified
         cross = (
-            bk_b.select(F.col(id_col).alias("a"), "band", "bucket")
-            .join(bk_e.select(F.col(id_col).alias("b"), "band", "bucket"),
+            bk_b.select(F.col("doc_id").alias("a"), "band", "bucket")
+            .join(bk_e.select(F.col("doc_id").alias("b"), "band", "bucket"),
                   ["band", "bucket"])
             .select("a", "b")
             .distinct()
@@ -1301,11 +1261,11 @@ def dedup_increment(
         # bounded id set (matched batch docs), far smaller than the batch.
         killed = scope.persist(
             cross.join(
-                sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
+                sh_b.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a")),
                 "a",
             )
             .join(
-                sh_e.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
+                sh_e.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b")),
                 "b",
             )
             .where(jacc >= threshold)
@@ -1313,50 +1273,46 @@ def dedup_increment(
             .distinct()
         )
         clean = batch.join(
-            killed.withColumnRenamed("a", id_col), id_col, "left_anti"
+            killed.withColumnRenamed("a", "doc_id"), "doc_id", "left_anti"
         )
 
         # step 2: within-batch pairs from the SAME buckets/shingles;
         # restricting endpoints to clean docs afterwards equals computing
         # pairs on clean directly (pair membership is pairwise)
         bcand = (
-            bk_b.select(F.col(id_col).alias("a"), "band", "bucket")
-            .join(bk_b.select(F.col(id_col).alias("b"), "band", "bucket"),
+            bk_b.select(F.col("doc_id").alias("a"), "band", "bucket")
+            .join(bk_b.select(F.col("doc_id").alias("b"), "band", "bucket"),
                   ["band", "bucket"])
             .where(F.col("a") < F.col("b"))
             .select("a", "b")
             .distinct()
         )
-        clean_ids = clean.select(F.col(id_col))
+        clean_ids = clean.select(F.col("doc_id"))
         # clean-endpoint restriction BEFORE the exact-Jaccard verify: on a
         # heavily-overlapping re-ingest most candidates touch a killed doc,
         # and intersecting their full shingle arrays only to discard the
         # pair afterwards is pure waste (killed/clean are already known)
         bpairs = (
-            bcand.join(clean_ids.withColumnRenamed(id_col, "a"), "a", "left_semi")
-            .join(clean_ids.withColumnRenamed(id_col, "b"), "b", "left_semi")
+            bcand.join(clean_ids.withColumnRenamed("doc_id", "a"), "a", "left_semi")
+            .join(clean_ids.withColumnRenamed("doc_id", "b"), "b", "left_semi")
             .join(
-                sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
+                sh_b.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a")),
                 "a",
             )
             .join(
-                sh_b.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
+                sh_b.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b")),
                 "b",
             )
             .where(jacc >= threshold)
             .select("a", "b")
         )
-        out = dedup_corpus(clean, bpairs, id_col=id_col)
+        out = dedup_corpus(clean, bpairs, id_col="doc_id")
         return scope.hand(out, sh_e, sh_b, bk_b, killed)
 
 
 def minhash_join(
     left: DataFrame,
     right: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    k: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -1370,22 +1326,24 @@ def minhash_join(
     (band, bucket) equi-join, exact verify on candidates only —
     |left| x |right| is never materialized. One shingle pass per side
     feeds signatures and the verify; both are persisted (each feeds
-    banding + verify) and ride the result's release handle."""
+    banding + verify) and ride the result's release handle.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     with CacheScope() as scope:
-        rows_per_band = k // bands
-        sh_l = scope.persist(_hashed_shingled(left, text_col, id_col, w))
-        sh_r = scope.persist(_hashed_shingled(right, text_col, id_col, w))
+        rows_per_band = 16 // bands
+        sh_l = scope.persist(_hashed_shingled(left, "text", "doc_id", 3))
+        sh_r = scope.persist(_hashed_shingled(right, "text", "doc_id", 3))
         bk_l = _lsh_buckets(
-            _sigs_from_hashed(sh_l, id_col, k),
-            id_col, bands, rows_per_band,
+            _sigs_from_hashed(sh_l, "doc_id", 16),
+            "doc_id", bands, rows_per_band,
         )
         bk_r = _lsh_buckets(
-            _sigs_from_hashed(sh_r, id_col, k),
-            id_col, bands, rows_per_band,
+            _sigs_from_hashed(sh_r, "doc_id", 16),
+            "doc_id", bands, rows_per_band,
         )
         cands = (
-            bk_l.select(F.col(id_col).alias("a"), "band", "bucket")
-            .join(bk_r.select(F.col(id_col).alias("b"), "band", "bucket"),
+            bk_l.select(F.col("doc_id").alias("a"), "band", "bucket")
+            .join(bk_r.select(F.col("doc_id").alias("b"), "band", "bucket"),
                   ["band", "bucket"])
             .select("a", "b")
             .distinct()
@@ -1394,11 +1352,11 @@ def minhash_join(
         union = F.size("sh_a") + F.size("sh_b") - inter
         out = (
             cands.join(
-                sh_l.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a")),
+                sh_l.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a")),
                 "a",
             )
             .join(
-                sh_r.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b")),
+                sh_r.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b")),
                 "b",
             )
             .withColumn("jaccard", F.round(inter / union, 6))
@@ -1408,13 +1366,7 @@ def minhash_join(
         return scope.hand(out, sh_l, sh_r)
 
 
-def strip_duplicated_spans(
-    docs: DataFrame,
-    L: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = " ",
-) -> DataFrame:
+def strip_duplicated_spans(docs: DataFrame, L: int = 8) -> DataFrame:
     """ExactSubstr-style SPAN dedup at token-window granularity (Lee et
     al., "Deduplicating Training Data Makes Language Models Better",
     ACL 2022, arXiv:2107.06499 — the suffix-array pass, re-expressed
@@ -1425,7 +1377,7 @@ def strip_duplicated_spans(
     tokens in order. Document-level dedup never fires on a boilerplate
     license block pasted into millions of otherwise-distinct docs —
     this removes exactly the repeated span. Returns ``(id, text)`` for
-    ALL input documents, whitespace-NORMALIZED (tokens ``sep``-joined;
+    ALL input documents, whitespace-NORMALIZED (tokens joined by one space;
     token-level surgery cannot preserve the original whitespace).
     Documents shorter than ``L`` tokens emit no windows and come back
     intact (modulo normalization); a fully-duplicated doc returns as
@@ -1449,14 +1401,16 @@ def strip_duplicated_spans(
     cannot re-derive the fold inside a pushed filter (the measured 15x
     trap, see :func:`_hashed_shingled`). The result carries the token
     frame's persist handle (it feeds windows AND reassembly) — release
-    via cachectl after materializing."""
+    via cachectl after materializing.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     from dgraph_dbpedia_spark.functions.hashing import _rotl60
 
     if L < 2:
         raise ValueError(f"L must be >= 2, got {L}")
     with CacheScope() as scope:
         base = scope.persist(
-            docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+            docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
         )
         th = token_hashes(F.col("__toks"))
         warr = F.when(
@@ -1474,51 +1428,51 @@ def strip_duplicated_spans(
         # CollapseProject trap), then the inline barrier materializes the
         # window array before any generate sees it
         wins = (
-            base.select(F.col(id_col), th.alias("__th"))
+            base.select(F.col("doc_id"), th.alias("__th"))
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.inline(F.array(F.struct(warr.alias("wh")))),
             )
-            .select(F.col(id_col), F.posexplode("wh").alias("p", "g"))
+            .select(F.col("doc_id"), F.posexplode("wh").alias("p", "g"))
         )
         firsts = wins.groupBy("g").agg(
-            F.min(F.struct(F.col(id_col), F.col("p"))).alias("f")
+            F.min(F.struct(F.col("doc_id"), F.col("p"))).alias("f")
         )
         dupw = (
             wins.join(firsts, "g")
             .where(
                 ~(
-                    (F.col(id_col) == F.col("f")[id_col])
+                    (F.col("doc_id") == F.col("f")["doc_id"])
                     & (F.col("p") == F.col("f")["p"])
                 )
             )
-            .select(F.col(id_col), F.col("p"))
+            .select(F.col("doc_id"), F.col("p"))
         )
         # window at 0-based explode position p covers 1-based token
         # positions p+1 .. p+L
         covered = dupw.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(F.sequence(F.col("p") + 1, F.col("p") + L)).alias("tp"),
         ).distinct()
         tokrows = base.select(
-            F.col(id_col), F.posexplode("__toks").alias("tp0", "tok")
-        ).select(F.col(id_col), (F.col("tp0") + 1).alias("tp"), F.col("tok"))
-        kept = tokrows.join(covered, [id_col, "tp"], "left_anti")
-        rebuilt = kept.groupBy(id_col).agg(
+            F.col("doc_id"), F.posexplode("__toks").alias("tp0", "tok")
+        ).select(F.col("doc_id"), (F.col("tp0") + 1).alias("tp"), F.col("tok"))
+        kept = tokrows.join(covered, ["doc_id", "tp"], "left_anti")
+        rebuilt = kept.groupBy("doc_id").agg(
             F.array_join(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("tp", "tok"))),
                     lambda s: s["tok"],
                 ),
-                sep,
-            ).alias(text_col)
+                " ",
+            ).alias("text")
         )
         out = (
-            docs.select(F.col(id_col))
-            .join(rebuilt, id_col, "left")
+            docs.select(F.col("doc_id"))
+            .join(rebuilt, "doc_id", "left")
             .select(
-                F.col(id_col),
-                F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
+                F.col("doc_id"),
+                F.coalesce(F.col("text"), F.lit("")).alias("text"),
             )
         )
         return scope.hand(out, base)
@@ -1528,8 +1482,6 @@ def winnow_fingerprints(
     docs: DataFrame,
     k: int = 5,
     w: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     tie: str = "left",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
@@ -1550,7 +1502,7 @@ def winnow_fingerprints(
     a sparse (~2/(w+1) the density of full shingling), position-aware
     index for plagiarism-style matching and local near-dup detection.
 
-    Returns exploded rows ``(id_col, pos, fp)`` where ``pos`` is the
+    Returns exploded rows ``(doc_id, pos, fp)`` where ``pos`` is the
     1-based token position the selected shingle starts at. Documents
     with fewer than ``w`` shingles select their single global minimum;
     shorter-than-``k`` docs follow the shingle convention (one
@@ -1567,12 +1519,13 @@ def winnow_fingerprints(
     Per-doc cost is O(shingles x w) struct comparisons, JVM-side.
     Downstream matching equi-joins on ``fp`` exactly like the shingle
     joins (hot-key cap applies there, not here).
-    """
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     return (
-        _winnow_selected(docs, k, w, text_col, id_col, tie)
-        .select(F.col(id_col), F.explode("__fps").alias("__s"))
+        _winnow_selected(docs, k, w, "text", "doc_id", tie)
+        .select(F.col("doc_id"), F.explode("__fps").alias("__s"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.abs(F.col("__s.pos")).alias("pos"),
             F.col("__s.h").alias("fp"),
         )
@@ -1637,8 +1590,6 @@ def winnow_matches(
     k: int = 5,
     w: int = 4,
     min_shared: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_fp_freq: int | None = 1000,
 ) -> DataFrame:
     """LOCAL overlap detection on winnowing fingerprints (the matching
@@ -1671,15 +1622,17 @@ def winnow_matches(
     cachectl after materializing. NOTE the cap counts a fingerprint's
     doc frequency over BOTH sides, so within mode (each doc once) and
     ``winnow_matches(df, df)`` (each doc twice) can diverge on
-    fingerprints whose doc frequency exceeds ``max_fp_freq / 2``."""
+    fingerprints whose doc frequency exceeds ``max_fp_freq / 2``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
 
     def fp_rows(df: DataFrame, out: str) -> DataFrame:
         sets = F.array_remove(
             F.transform(F.col("__fps"), lambda s: s["h"]), 0
         )
         return (
-            _winnow_selected(df, k, w, text_col, id_col)
-            .select(F.col(id_col).alias(out), F.array_distinct(sets).alias("__set"))
+            _winnow_selected(df, k, w, "text", "doc_id")
+            .select(F.col("doc_id").alias(out), F.array_distinct(sets).alias("__set"))
             .select(F.col(out), F.explode("__set").alias("fp"))
         )
 
@@ -1729,13 +1682,7 @@ def winnow_matches(
 def split_leakage_report(
     df: DataFrame,
     fractions: dict[str, float],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    k: int = 16,
-    bands: int = 4,
     threshold: float = 0.5,
-    seed: int = 1,
 ) -> DataFrame:
     """Cross-split near-dup LEAKAGE audit: split the corpus with
     :func:`..sampling.split_corpus`'s deterministic id-hash coin, find
@@ -1759,33 +1706,35 @@ def split_leakage_report(
     the split labels join the pair set by id (two broadcast-able or
     shuffle joins on the PAIR volume, not the corpus); the pair set
     itself is the banded-join skeleton that already bounds every
-    minhash row. The report is a |splits|^2-row aggregate."""
+    minhash row. The report is a |splits|^2-row aggregate.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     from dgraph_dbpedia_spark.operators.sampling import split_corpus
 
     with CacheScope() as scope:
         pairs = minhash_dedup_pairs(
             df,
-            text_col=text_col,
-            id_col=id_col,
-            w=w,
-            k=k,
-            bands=bands,
+            text_col="text",
+            id_col="doc_id",
+            w=3,
+            k=16,
+            bands=4,
             threshold=threshold,
         )
-        splits = split_corpus(df, fractions, id_col=id_col, seed=seed).select(
-            F.col(id_col),
+        splits = split_corpus(df, fractions, id_col="doc_id", seed=1).select(
+            F.col("doc_id"),
             F.coalesce(F.col("split"), F.lit("holdout")).alias("split"),
         )
         labeled = (
             pairs.join(
                 splits.select(
-                    F.col(id_col).alias("a"), F.col("split").alias("_sa")
+                    F.col("doc_id").alias("a"), F.col("split").alias("_sa")
                 ),
                 "a",
             )
             .join(
                 splits.select(
-                    F.col(id_col).alias("b"), F.col("split").alias("_sb")
+                    F.col("doc_id").alias("b"), F.col("split").alias("_sb")
                 ),
                 "b",
             )

@@ -26,20 +26,17 @@ def rrf_fuse(
     rankings: Sequence[DataFrame],
     k: int = 60,
     group_cols: Sequence[str] = ("query_id",),
-    id_col: str = "doc_id",
-    score_col: str = "score",
     topn: int | None = None,
-    round_decimals: int = 6,
 ) -> DataFrame:
     """Fuse per-group ranked lists by Reciprocal Rank Fusion.
 
-    Every frame in ``rankings`` carries ``(*group_cols, id_col,
-    score_col)`` — one row per (group, candidate) with that arm's
+    Every frame in ``rankings`` carries ``(*group_cols, doc_id,
+    score)`` — one row per (group, candidate) with that arm's
     score (each arm's own scale; scales never mix). Ranks are derived
-    deterministically PER ARM: ``score_col`` descending, ``id_col``
+    deterministically PER ARM: ``score`` descending, ``doc_id``
     ascending on ties — the same tie rule the package's top-k
     emitters use, so fusing their output is rank-stable. Returns
-    ``(*group_cols, id_col, rrf_score)``; ``topn`` keeps the best
+    ``(*group_cols, doc_id, rrf_score)``; ``topn`` keeps the best
     ``topn`` per group (rrf_score desc, id asc).
 
     Float determinism: each arm contributes at most ONE reciprocal
@@ -53,17 +50,18 @@ def rrf_fuse(
     produced them), the union + one groupBy on (group, id) is
     partial-aggregable, and the optional per-group top-n is a window
     over the already-fused lists. No corpus-sized frame is touched.
-    """
+
+    Fixed columns: id ``doc_id``, score ``score``."""
     if not rankings:
         raise ValueError("rankings must be a non-empty sequence of frames")
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     gcols = list(group_cols)
-    keys = gcols + [id_col]
+    keys = gcols + ["doc_id"]
     tagged: DataFrame | None = None
     for i, r in enumerate(rankings):
         w = Window.partitionBy(*gcols).orderBy(
-            F.col(score_col).desc(), F.col(id_col).asc()
+            F.col("score").desc(), F.col("doc_id").asc()
         )
         t = r.select(
             *keys,
@@ -90,13 +88,13 @@ def rrf_fuse(
     for i in range(1, len(rankings)):
         score = score + F.coalesce(F.col(f"_rrf_{i}"), F.lit(0.0))
     out = per.select(
-        *keys, F.round(score, round_decimals).alias("rrf_score")
+        *keys, F.round(score, 6).alias("rrf_score")
     )
     if topn is not None:
         if topn < 1:
             raise ValueError(f"topn must be >= 1, got {topn}")
         wf = Window.partitionBy(*gcols).orderBy(
-            F.col("rrf_score").desc(), F.col(id_col).asc()
+            F.col("rrf_score").desc(), F.col("doc_id").asc()
         )
         out = (
             out.withColumn("_rn", F.row_number().over(wf))
@@ -113,9 +111,6 @@ def mmr_rerank(
     lambda_: float = 0.5,
     shortlist_n: int = 50,
     candidates: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "q",
 ) -> DataFrame:
     """Maximal Marginal Relevance re-rank (Carbonell & Goldstein,
     SIGIR 1998): pick ``k`` results from a relevance shortlist
@@ -162,7 +157,10 @@ def mmr_rerank(
     <= 10_000 — the probe-list X6 pattern, never a data collect):
     inherently sequential, trivially small, exactly what a serving
     node computes per request. No iterative Spark jobs are launched
-    for it."""
+    for it.
+
+    Fixed columns: id ``vec_id``, query vector ``q``, vector
+    ``embedding``."""
     from dgraph_dbpedia_spark.operators.similarity import (
         _round_half_up_np,
         cosine,
@@ -189,18 +187,18 @@ def mmr_rerank(
         StructType,
     )
 
-    q = query.select(F.col(query_col).cast("array<double>").alias("q"))
+    q = query.select(F.col("q").cast("array<double>").alias("q"))
     probe = q.limit(2).collect()
     if len(probe) > 1:
         raise ValueError(
             "mmr_rerank expects exactly one query vector, got a "
             "multi-row query frame"
         )
-    id_type = df.schema[id_col].dataType
+    id_type = df.schema["vec_id"].dataType
     ret = StructType(
         [
             StructField("rank", IntegerType()),
-            StructField(id_col, id_type),
+            StructField("vec_id", id_type),
             StructField("rel", DoubleType()),
             StructField("mmr", DoubleType()),
         ]
@@ -211,12 +209,12 @@ def mmr_rerank(
     if candidates is None:
         short = (
             df.select(
-                F.col(id_col),
-                F.col(vec_col).cast("array<double>").alias("e"),
+                F.col("vec_id"),
+                F.col("embedding").cast("array<double>").alias("e"),
             )
             .crossJoin(F.broadcast(q))
             .select(
-                F.col(id_col),
+                F.col("vec_id"),
                 "e",
                 F.round(cosine("e", "q"), 4).alias("rel"),
             )
@@ -227,22 +225,22 @@ def mmr_rerank(
             # candidates from the shortlist (r12 review; the 41cbf67
             # NaN-tops-the-k class)
             .where(F.col("rel").isNotNull() & ~F.isnan("rel"))
-            .orderBy(F.col("rel").desc(), F.col(id_col))
+            .orderBy(F.col("rel").desc(), F.col("vec_id"))
             .limit(shortlist_n)
         )
     else:
         cand = (
-            candidates.select(F.col(id_col), F.col("sim").alias("rel"))
+            candidates.select(F.col("vec_id"), F.col("sim").alias("rel"))
             .where(
                 F.col("rel").isNotNull()
                 & ~F.isnan(F.col("rel").cast("double"))
             )
-            .orderBy(F.col("rel").desc(), F.col(id_col))
+            .orderBy(F.col("rel").desc(), F.col("vec_id"))
             .limit(shortlist_n)
         )
-        short = df.join(F.broadcast(cand), id_col).select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("e"),
+        short = df.join(F.broadcast(cand), "vec_id").select(
+            F.col("vec_id"),
+            F.col("embedding").cast("array<double>").alias("e"),
             "rel",
         )
     import math
@@ -252,11 +250,11 @@ def mmr_rerank(
     # vectorized argmax below never sees it
     rows = sorted(
         (r for r in short.collect() if math.isfinite(r["rel"])),
-        key=lambda r: (-r["rel"], r[id_col]),
+        key=lambda r: (-r["rel"], r["vec_id"]),
     )
     if not rows:
         return spark.createDataFrame([], ret)
-    ids = [r[id_col] for r in rows]
+    ids = [r["vec_id"] for r in rows]
     rel = np.asarray([float(r["rel"]) for r in rows])
     n = len(ids)
     # per-width vector groups (the pair_cosine_arrow ragged rule: a
@@ -332,25 +330,17 @@ def mmr_rerank(
     return spark.createDataFrame(out, ret)
 
 
-def rank_overlap(
-    reference: DataFrame,
-    candidate: DataFrame,
-    k: int = 10,
-    group_cols: Sequence[str] = ("query_id",),
-    id_col: str = "doc_id",
-    score_col: str = "score",
-    round_decimals: int = 4,
-) -> DataFrame:
+def rank_overlap(reference: DataFrame, candidate: DataFrame, k: int = 10) -> DataFrame:
     """Per-group recall@k of a candidate ranking against a reference
     ranking — the evaluation loop every approximate-retrieval
     deployment runs (FAISS-style recall audits: exact arm as truth,
-    served ANN arm under test). Both inputs carry ``(*group_cols,
-    id_col, score_col)``; each is independently cut to its top-``k``
+    served ANN arm under test). Both inputs carry ``(query_id,
+    doc_id, score)``; each is independently cut to its top-``k``
     per group by the package's deterministic rank rule (score desc,
     id asc — the same order every top-k emitter here uses, so feeding
-    an arm's output back in is rank-stable). Returns ``(*group_cols,
+    an arm's output back in is rank-stable). Returns ``(query_id,
     n_ref, n_common, recall)`` with ``recall = round(n_common /
-    n_ref, round_decimals)``.
+    n_ref, 4)``.
 
     The REFERENCE is the spine: groups it lacks don't appear (no
     truth, no recall); a group the candidate lacks reports recall 0.
@@ -360,11 +350,13 @@ def rank_overlap(
     100 TB shape: inputs are top-k lists (tiny by construction — the
     corpora that produced them never enter); two per-group rank
     windows, ONE (group, id) equi-join, one partial-aggregable
-    count pair. Safe to run over millions of query groups."""
+    count pair. Safe to run over millions of query groups.
+
+    Fixed columns: id ``doc_id``, score ``score``, group ``query_id``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    gcols = list(group_cols)
-    keys = gcols + [id_col]
+    gcols = ["query_id"]
+    keys = gcols + ["doc_id"]
 
     def topk(df: DataFrame) -> DataFrame:
         # rank over DISTINCT ids at their best score: a doc retrieved
@@ -374,15 +366,15 @@ def rank_overlap(
         # slots (the 41cbf67 NaN-tops-the-k class — NaN sorts above
         # every real score under desc)
         w = Window.partitionBy(*gcols).orderBy(
-            F.col("_s").desc(), F.col(id_col).asc()
+            F.col("_s").desc(), F.col("doc_id").asc()
         )
         return (
             df.where(
-                F.col(score_col).isNotNull()
-                & ~F.isnan(F.col(score_col).cast("double"))
+                F.col("score").isNotNull()
+                & ~F.isnan(F.col("score").cast("double"))
             )
             .groupBy(*keys)
-            .agg(F.max(score_col).alias("_s"))
+            .agg(F.max("score").alias("_s"))
             .select(*keys, F.row_number().over(w).alias("_rn"))
             .where(F.col("_rn") <= k)
             .drop("_rn")
@@ -402,7 +394,7 @@ def rank_overlap(
             "n_ref",
             "n_common",
             F.round(
-                F.col("n_common") / F.col("n_ref"), round_decimals
+                F.col("n_common") / F.col("n_ref"), 4
             ).alias("recall"),
         )
     )

@@ -54,11 +54,13 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def attach_binary(df: DataFrame, text_col: str = "text", out_col: str = "content") -> DataFrame:
+def attach_binary(df: DataFrame) -> DataFrame:
     """Test/demo helper: materialize an opaque binary column (UTF-8
     bytes of a text column). Real pipelines read binary straight from
-    Parquet/object storage."""
-    return df.withColumn(out_col, F.encode(F.col(text_col), "UTF-8"))
+    Parquet/object storage.
+
+    Fixed columns: output ``content``, text ``text``."""
+    return df.withColumn("content", F.encode(F.col("text"), "UTF-8"))
 
 
 def _clean_cells(ids, blobs):
@@ -95,8 +97,6 @@ def _try_import_pil():
 
 def decode_image_meta(
     df: DataFrame,
-    id_col: str = "id",
-    content_col: str = "content",
     use_real_decoder: bool | None = None,
     pil_module=None,
 ) -> DataFrame:
@@ -113,7 +113,9 @@ def decode_image_meta(
     (corrupt or non-image bytes — a certainty in a 100 TB crawl) falls
     back to the deterministic fake for THAT ROW with
     ``format='fake/deterministic'`` instead of failing the task; a
-    poisoned cell must never cost a 10k-row Arrow batch or the job."""
+    poisoned cell must never cost a 10k-row Arrow batch or the job.
+
+    Fixed columns: content ``content``, id ``id``."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         image_mod = pil_module if pil_module is not None else _try_import_pil()
@@ -140,7 +142,7 @@ def decode_image_meta(
             # failure the per-row robustness contract forbids. A NULL
             # blob reports NULL metadata (n_bytes 0), NOT fake dims —
             # a sentinel would cluster every missing image together
-            cells = _clean_cells(pdf[id_col], pdf[content_col])
+            cells = _clean_cells(pdf["id"], pdf["content"])
             rows = [
                 (None, None, "null/missing") if b is None else one(b)
                 for _, b in cells
@@ -161,36 +163,26 @@ def decode_image_meta(
                 }
             )
 
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
+    return df.select(F.col("id"), F.col("content")).mapInPandas(
         kernel, IMAGE_META_SCHEMA
     )
 
 
-def frame_sample(
-    df: DataFrame,
-    id_col: str = "id",
-    content_col: str = "content",
-    every_n_bytes: int = 64,
-    decoder=None,
-) -> DataFrame:
+def frame_sample(df: DataFrame, decoder=None) -> DataFrame:
     """Video frame sampling: emits one row per sampled 'frame'. The
     default kernel chunks at a byte stride (deterministic, the oracle
     surface) — it demonstrates the 1-to-N mapInPandas shape a real
     ffmpeg-based sampler has. ``decoder`` injects a real sampler:
     ``decoder(bytes) -> list[(frame_idx, frame_hash)]`` (no video
-    codec ships in this environment to auto-probe for)."""
+    codec ships in this environment to auto-probe for).
 
-    if every_n_bytes < 1:
-        raise ValueError(
-            f"every_n_bytes must be >= 1, got {every_n_bytes} (0 crashes "
-            "the executor's range(); negatives silently emit no frames)"
-        )
+    Fixed columns: content ``content``, id ``id``."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, hashes = [], [], []
             if decoder is not None:
-                for vid, b in _clean_cells(pdf[id_col], pdf[content_col]):
+                for vid, b in _clean_cells(pdf["id"], pdf["content"]):
                     if b is None:
                         continue  # a missing video samples no frames
                     for idx, fh in decoder(b):
@@ -201,35 +193,31 @@ def frame_sample(
                     {"id": ids, "frame_idx": idxs, "frame_hash": hashes}
                 )
                 continue
-            for vid, b in _clean_cells(pdf[id_col], pdf[content_col]):
+            for vid, b in _clean_cells(pdf["id"], pdf["content"]):
                 if b is None:
                     continue  # a missing video samples no frames
                 data = b
-                for i, off in enumerate(range(0, max(len(data), 1), every_n_bytes)):
-                    chunk = data[off : off + every_n_bytes]
+                for i, off in enumerate(range(0, max(len(data), 1), 64)):
+                    chunk = data[off : off + 64]
                     ids.append(int(vid))
                     idxs.append(i)
                     hashes.append(int(hashlib.md5(chunk).hexdigest()[:15], 16))
             yield pd.DataFrame({"id": ids, "frame_idx": idxs, "frame_hash": hashes})
 
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
+    return df.select(F.col("id"), F.col("content")).mapInPandas(
         kernel, FRAME_SCHEMA
     )
 
 
-def embed_binary(
-    df: DataFrame,
-    id_col: str = "id",
-    content_col: str = "content",
-    dims: int = 8,
-    decoder=None,
-) -> DataFrame:
+def embed_binary(df: DataFrame, dims: int = 8, decoder=None) -> DataFrame:
     """Feature extraction: binary -> float vector. Default kernel is an
     md5-seeded deterministic fake (the oracle surface); ``decoder``
     injects a real model: ``decoder(bytes) -> list[float]`` of length
     ``dims`` (no model runtime ships in this environment to auto-probe
     for). Output feeds the similarity operators
-    (operators/similarity.py)."""
+    (operators/similarity.py).
+
+    Fixed columns: content ``content``, id ``id``."""
     if decoder is None and not 1 <= dims <= 16:
         raise ValueError(
             f"the fake kernel draws from a 16-byte md5 digest: dims must "
@@ -245,7 +233,7 @@ def embed_binary(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cells = _clean_cells(pdf[id_col], pdf[content_col])
+            cells = _clean_cells(pdf["id"], pdf["content"])
             vecs = []
             for _, b in cells:
                 if b is None:
@@ -271,4 +259,4 @@ def embed_binary(
                 }
             )
 
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(kernel, out_schema)
+    return df.select(F.col("id"), F.col("content")).mapInPandas(kernel, out_schema)

@@ -91,15 +91,13 @@ def pq_train(
     m: int = 4,
     k_sub: int = 16,
     n_iter: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_decimals: int = 4,
 ) -> DataFrame:
     """Train the ``m`` per-subspace codebooks. Returns ``(j, cid, c)``
     — ``m * k_sub`` bounded rows (subspace ``j`` in 0..m-1, sub-
     centroid id ``cid`` DENSE in 0..k_sub-1 (the seed rows' id-rank —
     codes fit a uint8 at k_sub <= 256, the production layout), ``c`` the
-    ``dims/m``-dim centroid, components rounded to ``round_decimals``
+    ``dims/m``-dim centroid, components rounded to 4 decimals
     so the whole training run is bit-reproducible across engines and
     partitionings — the ivf_train contract).
 
@@ -130,23 +128,25 @@ def pq_train(
     difference between "trainable on a sample" and "not").
     Assignments are bit-equal to the native reference fold
     (:func:`_pq_encode_native`, pinned in tests), so trained values —
-    and the DuckDB replay — match the fold's."""
+    and the DuckDB replay — match the fold's.
+
+    Fixed columns: id ``vec_id``."""
     from pyspark.sql import Window
 
     sub = _validate_pq(dims, m, k_sub)
     e = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+        F.col("vec_id"), F.col(vec_col).cast("array<double>").alias("_v")
     )
     with CacheScope() as scope:
         # fused seeds: ONE lowest-k_sub-ids scan (the ivf_seed_centroids
         # rule applied once, not per subspace); dense cid = seed-id rank.
         # The Window is over the k_sub-row limit, not the corpus.
         seeds = scope.checkpoint(
-            e.orderBy(id_col)
+            e.orderBy("vec_id")
             .limit(k_sub)
             .select(
                 (
-                    F.row_number().over(Window.orderBy(id_col)) - F.lit(1)
+                    F.row_number().over(Window.orderBy("vec_id")) - F.lit(1)
                 ).alias("cid"),
                 "_v",
             )
@@ -218,7 +218,7 @@ def pq_train(
             )
 
         return _lloyd_refine(
-            scope, seeds, ["j", "cid"], n_iter, round_decimals, "sv", assign
+            scope, seeds, ["j", "cid"], n_iter, 4, "sv", assign
         )
 
 
@@ -428,7 +428,6 @@ def pq_encode(
     codebooks: DataFrame,
     dims: int,
     m: int = 4,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode every vector as its ``m`` nearest sub-centroid ids.
@@ -447,13 +446,15 @@ def pq_encode(
     working set) — the interpreted ``m x k_sub x dims/m`` higher-order
     fold per row is the measured encode cost at 200k vectors
     (BENCH_SCALE r11). Pinned equal to :func:`_pq_encode_native` by
-    pytest."""
+    pytest.
+
+    Fixed columns: id ``vec_id``."""
     sub = _validate_pq(dims, m, 1)
     enc = encode_codes_arrow(
         _read_codebooks(codebooks, "j", m, sub, "subspace")
     )
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         enc(F.col(vec_col).cast("array<double>")).alias("codes"),
     )
 
@@ -463,12 +464,12 @@ def _pq_encode_native(
     codebooks: DataFrame,
     dims: int,
     m: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Native reference of :func:`pq_encode` (same contract), kept so
     tests can pin :func:`encode_codes_arrow` against it: the broadcast
-    codebook row + per-subspace ``_nearest_l2`` fold."""
+    codebook row + per-subspace ``_nearest_l2`` fold.
+
+    Fixed columns: id ``vec_id``, vector ``embedding``."""
     sub = _validate_pq(dims, m, 1)
     v = F.col("_v")
 
@@ -487,10 +488,10 @@ def _pq_encode_native(
     ]
     return (
         df.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+            F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_v")
         )
         .crossJoin(F.broadcast(_codebook_row(codebooks)))
-        .select(F.col(id_col), F.array(*nearest).alias("codes"))
+        .select(F.col("vec_id"), F.array(*nearest).alias("codes"))
     )
 
 
@@ -501,16 +502,12 @@ def pq_topk(
     dims: int,
     m: int = 4,
     k: int = 10,
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
-    query_col: str = "q",
-    round_decimals: int = 4,
 ) -> DataFrame:
     """ADC top-k over a PQ-encoded corpus: ONE broadcast row carries
     the per-(subspace, centroid) table ``(q_j . c, ||c||^2)`` plus the
     query norm — each corpus row's score is ``m`` array lookups and a
     fixed-order fold, never a float-vector read. Returns ``(id, sim)``
-    with ``sim`` the round-``round_decimals`` ADC cosine
+    with ``sim`` the round-4 ADC cosine
     (reconstruction dot over reconstruction norm x query norm; a code
     missing from the codebook — a foreign-codebook probe — yields NULL
     sim, never a crash). Top-k is TakeOrdered (sim desc, id asc).
@@ -519,11 +516,13 @@ def pq_topk(
     reads ``m`` bytes-ish per vector instead of ``4 x dims``, and
     pre-filtering it by an IVF cid list (the
     ``quantized_ivf_topk_served`` pattern) partition-prunes before
-    even that."""
+    even that.
+
+    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     sub = _validate_pq(dims, m, 1)
-    q = query.select(F.col(query_col).cast("array<double>").alias("qv"))
+    q = query.select(F.col("q").cast("array<double>").alias("qv"))
     # one-row validation BEFORE anything runs (the _probe_single
     # discipline): a multi-row query frame would interleave every
     # query's (j, cid, dq) entries into ONE collect_list table in
@@ -539,7 +538,7 @@ def pq_topk(
         )
     if not probe:
         return codes_df.where(F.lit(False)).select(
-            F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     # the per-query ADC table as ONE broadcast row, laid out FLAT and
     # SORTED by (j, cid) so entry (j, code) sits at position
@@ -578,7 +577,7 @@ def pq_topk(
     lookups = [
         F.get(
             F.col("_tab"),
-            F.lit(j * k_sub) + F.get(F.col(codes_col), j),
+            F.lit(j * k_sub) + F.get(F.col("codes"), j),
         )
         for j in range(m)
     ]
@@ -586,10 +585,10 @@ def pq_topk(
     # reference it — inlined, every lookup's array filter would run
     # twice (the CollapseProject duplicate-eval trap)
     with_lk = (
-        codes_df.select(F.col(id_col), F.col(codes_col))
+        codes_df.select(F.col("vec_id"), F.col("codes"))
         .crossJoin(F.broadcast(tab))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.array(*lookups).alias("_lk"),
             F.col("_qn"),
         )
@@ -601,11 +600,11 @@ def pq_topk(
         F.col("_lk"), F.lit(0.0), lambda acc, s: acc + s["cc"]
     )
     sim = F.round(
-        F.try_divide(adc, F.sqrt(recon) * F.col("_qn")), round_decimals
+        F.try_divide(adc, F.sqrt(recon) * F.col("_qn")), 4
     )
     return (
-        with_lk.select(F.col(id_col), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
+        with_lk.select(F.col("vec_id"), sim.alias("sim"))
+        .orderBy(F.col("sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -656,10 +655,6 @@ def pq_rerank_topk(
     m: int = 4,
     k: int = 10,
     shortlist_n: int = 100,
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
-    vec_col: str = "embedding",
-    query_col: str = "q",
 ) -> DataFrame:
     """The two-stage contract PQ actually deploys (VERDICT r11 #3 —
     Jegou et al.'s IVFADC + re-ranking refinement): ADC over the
@@ -679,7 +674,10 @@ def pq_rerank_topk(
     partition-pruned point read, never a full scan shuffle. Stage 2's
     exact scoring runs on ``shortlist_n`` rows (:func:`_exact_rerank`
     — round-4 + id tie-break). Empty query frame degenerates to an
-    empty result through both stages (each stage's own contract)."""
+    empty result through both stages (each stage's own contract).
+
+    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``,
+    vector ``embedding``."""
     _validate_shortlist(shortlist_n, k)
     shortlist = pq_topk(
         codes_df,
@@ -688,12 +686,9 @@ def pq_rerank_topk(
         dims=dims,
         m=m,
         k=shortlist_n,
-        id_col=id_col,
-        codes_col=codes_col,
-        query_col=query_col,
     )
     return _exact_rerank(
-        shortlist, vectors_df, query, k, id_col, vec_col, query_col
+        shortlist, vectors_df, query, k, "vec_id", "embedding", "q"
     )
 
 
@@ -704,19 +699,13 @@ def pq_ivf_rerank_topk_served(
     vectors_df: DataFrame,
     query: DataFrame,
     dims: int,
-    m: int = 4,
     k: int = 10,
     shortlist_n: int = 100,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
-    vec_col: str = "embedding",
-    query_col: str = "q",
 ) -> DataFrame:
     """The COMPLETE production ANN serve path — all three pruning
     levers composed: coarse IVF probe partition-prunes the code lists
-    (``n_probe/k_coarse`` of the corpus), ADC scores only ``m``
-    bytes-ish per surviving vector (:func:`pq_ivf_topk_served` as the
+    (2 of ``k_coarse`` lists), ADC scores only 4
+    code bytes per surviving vector (:func:`pq_ivf_topk_served` as the
     shortlist stage), and ONLY the ``shortlist_n`` shortlisted ids'
     float vectors are read back for the exact cosine top-``k``
     (:func:`pq_rerank_topk`'s stage 2). This is FAISS's
@@ -725,9 +714,12 @@ def pq_ivf_rerank_topk_served(
 
     ``vectors_df`` is the float (or int8-dequantized) vector table the
     re-rank reads back from — at scale, partitioned/bucketed by
-    ``id_col`` so the broadcast semi-join on the bounded shortlist is
+    ``vec_id`` so the broadcast semi-join on the bounded shortlist is
     a point read. Empty query/centroids degenerate to an empty result
-    through every stage."""
+    through every stage.
+
+    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``,
+    vector ``embedding``."""
     _validate_shortlist(shortlist_n, k)
     shortlist = pq_ivf_topk_served(
         codes,
@@ -735,15 +727,10 @@ def pq_ivf_rerank_topk_served(
         coarse_centroids,
         query,
         dims=dims,
-        m=m,
         k=shortlist_n,
-        n_probe=n_probe,
-        id_col=id_col,
-        codes_col=codes_col,
-        query_col=query_col,
     )
     return _exact_rerank(
-        shortlist, vectors_df, query, k, id_col, vec_col, query_col
+        shortlist, vectors_df, query, k, "vec_id", "embedding", "q"
     )
 
 
@@ -753,12 +740,7 @@ def pq_ivf_topk_served(
     coarse_centroids: DataFrame,
     query: DataFrame,
     dims: int,
-    m: int = 4,
     k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
-    query_col: str = "q",
 ) -> DataFrame:
     """The full FAISS-style IVF-PQ serve path: coarse IVF probe over
     the bounded float centroids (cosine, the package's standard probe
@@ -769,25 +751,27 @@ def pq_ivf_topk_served(
     ``codes`` is the materialized ``(id, codes, cid)`` frame — encode
     with :func:`pq_encode`, attach the coarse cid from
     :func:`..similarity.ivf_assign`, write partitioned by ``cid``
-    (the ``quantized_ivf_topk_served`` v3 layout with ``m`` code
+    (the ``quantized_ivf_topk_served`` v3 layout with 4 code
     bytes per vector instead of ``dims`` int8s). At 100 TB a probe
-    reads ``n_probe/k_coarse`` of the corpus at ``m`` bytes-ish per
+    reads 2 of ``k_coarse`` lists at 4 code bytes per
     vector — the two pruning levers multiply. Empty centroid frame or
-    empty query -> empty result (the float twin's contract)."""
+    empty query -> empty result (the float twin's contract).
+
+    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``."""
     from dgraph_dbpedia_spark.operators.similarity import _probe_single
 
-    q = query.select(F.col(query_col).cast("array<double>").alias("qv"))
+    q = query.select(F.col("q").cast("array<double>").alias("qv"))
     probes = _probe_single(
         coarse_centroids.select(
             "cid", F.col("c").cast("array<double>").alias("c")
         ),
         q.select(F.col("qv")),
-        n_probe,
+        2,
         "pq_ivf_topk_served",
     )
     if not probes:
         return codes.where(F.lit(False)).select(
-            F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     pruned = codes.where(F.col("cid").isin(probes))
     return pq_topk(
@@ -795,11 +779,8 @@ def pq_ivf_topk_served(
         codebooks,
         query,
         dims=dims,
-        m=m,
+        m=4,
         k=k,
-        id_col=id_col,
-        codes_col=codes_col,
-        query_col=query_col,
     )
 
 
@@ -808,9 +789,6 @@ def pq_reconstruction_error_report(
     codebooks: DataFrame,
     dims: int,
     m: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
 ) -> DataFrame:
     """Per-label PQ reconstruction-error audit (r15): the round-6
     cosine loss between each vector and its PQ decode — the
@@ -834,12 +812,14 @@ def pq_reconstruction_error_report(
 
     100 TB shape: encode + decode + error are one projection between
     scan and aggregate; the label agg partial-aggregates. The e6
-    BIGINT mean holds to ~4.5e15 scored rows per label."""
+    BIGINT mean holds to ~4.5e15 scored rows per label.
+
+    Fixed columns: id ``vec_id``, label ``label``, vector ``embedding``."""
     sub = _validate_pq(dims, m, 1)
     base = df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        F.col(label_col).alias("_lab"),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
+        F.col("label").alias("_lab"),
     )
     # ONE bounded collect serves the encode matrices AND the decode
     # literals (ADVICE r15: previously collected twice); the reader
@@ -866,5 +846,5 @@ def pq_reconstruction_error_report(
     )
 
     return _recon_error_report(
-        coded.select("_lab", "_v", vhat.alias("_vhat")), label_col
+        coded.select("_lab", "_v", vhat.alias("_vhat")), "label"
     )

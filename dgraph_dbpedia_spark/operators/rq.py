@@ -117,15 +117,13 @@ def rq_train(
     k_sub: int = 16,
     n_levels: int = 2,
     n_iter: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_decimals: int = 4,
 ) -> DataFrame:
     """Train the ``n_levels`` stage codebooks greedily (the standard
     RQ recipe: stage ``l`` k-means the residuals stage ``l-1`` left).
     Returns ``(lvl, cid, c)`` — ``n_levels * k_sub`` bounded rows,
     cids DENSE in 0..k_sub-1 per stage, components rounded to
-    ``round_decimals`` (bit-reproducible across engines and
+    4 decimals (bit-reproducible across engines and
     partitionings — the ivf_train/pq_train contract).
 
     100 TB shape: each stage is one :func:`..pq.pq_train` ``m=1`` run
@@ -147,10 +145,12 @@ def rq_train(
     training unrunnable at 200k vectors (BENCH_SCALE r12) — while the
     kernel's assignments stay bit-equal to it (pinned against
     :func:`..pq._pq_encode_native`), so trained values and the DuckDB
-    replay match the fold's."""
+    replay match the fold's.
+
+    Fixed columns: id ``vec_id``."""
     _rq_validate(dims, k_sub, n_levels)
     cur = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_rv")
+        F.col("vec_id"), F.col(vec_col).cast("array<double>").alias("_rv")
     )
     out: DataFrame | None = None
     # stage residual checkpoints are only read while the NEXT stage
@@ -165,9 +165,7 @@ def rq_train(
                 m=1,
                 k_sub=k_sub,
                 n_iter=n_iter,
-                id_col=id_col,
                 vec_col="_rv",
-                round_decimals=round_decimals,
             ).select(F.lit(lvl).alias("lvl"), "cid", "c")
             out = cb if out is None else out.unionByName(cb)
             if lvl < n_levels - 1:
@@ -175,7 +173,7 @@ def rq_train(
                 # the cid binds in its OWN select (CollapseProject) and the
                 # winning centroid/residual stay native
                 asg = cur.select(
-                    F.col(id_col),
+                    F.col("vec_id"),
                     F.col("_rv"),
                     _stage_code(cb, dims, F.col("_rv")).alias("_c0"),
                 ).crossJoin(F.broadcast(stage))
@@ -187,7 +185,7 @@ def rq_train(
                 )["c"]
                 cur = scope.checkpoint(
                     asg.select(
-                        F.col(id_col),
+                        F.col("vec_id"),
                         F.zip_with("_rv", win, lambda a, b: a - b).alias("_rv"),
                     )
                 )
@@ -262,7 +260,6 @@ def rq_encode(
     codebooks: DataFrame,
     dims: int,
     n_levels: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Greedy RQ encoding: per stage, the nearest centroid of the
@@ -274,7 +271,9 @@ def rq_encode(
     (:func:`rq_codes_arrow`) — the interpreted full-dim
     ``k_sub``-centroid fold per row per stage is the measured encode
     cost at the 200k/k_sub=256 scale point. Pinned bit-equal to
-    :func:`_rq_encode_native` by pytest."""
+    :func:`_rq_encode_native` by pytest.
+
+    Fixed columns: id ``vec_id``."""
     _rq_validate(dims, k_sub=1, n_levels=n_levels)
     # the reader validates (ONE bounded collect, not
     # validate-then-collect — r12 review)
@@ -282,7 +281,7 @@ def rq_encode(
         _read_codebooks(codebooks, "lvl", n_levels, dims, "stage")
     )
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         enc(F.col(vec_col).cast("array<double>")).alias("codes"),
     )
 
@@ -292,18 +291,18 @@ def _rq_encode_native(
     codebooks: DataFrame,
     dims: int,
     n_levels: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Native reference of :func:`rq_encode` (same contract), kept so
     tests can pin :func:`rq_codes_arrow` against it: one projection
     per stage against ONE broadcast codebook row, residuals carried as
     generated columns between binds (each stage's nearest bound in its
-    own select — the CollapseProject trap)."""
+    own select — the CollapseProject trap).
+
+    Fixed columns: id ``vec_id``, vector ``embedding``."""
     _rq_validate(dims, k_sub=1, n_levels=n_levels)
     _read_codebooks(codebooks, "lvl", n_levels, dims, "stage")
     cur = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_rv")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_rv")
     )
     code_cols: list[str] = []
     for lvl in range(n_levels):
@@ -313,7 +312,7 @@ def _rq_encode_native(
             _nearest_l2(F.col("_rv"), F.col("_cent")).alias("_b"),
         )
         ccol = f"_c{lvl}"
-        sel = [F.col(id_col)] + [F.col(c) for c in code_cols]
+        sel = [F.col("vec_id")] + [F.col(c) for c in code_cols]
         sel.append(F.col("_b")["cid"].alias(ccol))
         if lvl < n_levels - 1:
             sel.append(
@@ -324,7 +323,7 @@ def _rq_encode_native(
         cur = bound.select(*sel)
         code_cols.append(ccol)
     return cur.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.array(*[F.col(c) for c in code_cols]).alias("codes"),
     )
 
@@ -335,10 +334,6 @@ def rq_topk(
     query: DataFrame,
     dims: int,
     k: int = 10,
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
-    query_col: str = "q",
-    round_decimals: int = 4,
 ) -> DataFrame:
     """ADC top-k over an RQ-encoded corpus (2-stage layout): per
     corpus row, the approximate cosine of the ADDITIVE reconstruction
@@ -353,14 +348,16 @@ def rq_topk(
     separate. A code outside the codebook yields NULL sim (the
     foreign-codebook contract); top-k is TakeOrdered (sim desc, id
     asc). Only the 2-stage form is served — deeper chains compose as
-    shortlist + :func:`rq_rerank_topk`'s exact stage anyway."""
+    shortlist + :func:`rq_rerank_topk`'s exact stage anyway.
+
+    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     # shared bounded validation (coverage, density, centroid width):
     # rq_topk serves the 2-stage layout — deeper chains compose as
     # shortlist + exact re-rank anyway
     k_sub = len(_read_codebooks(codebooks, "lvl", 2, dims, "stage")[0])
-    q = query.select(F.col(query_col).cast("array<double>").alias("qv"))
+    q = query.select(F.col("q").cast("array<double>").alias("qv"))
     probe = q.limit(2).collect()
     if len(probe) > 1:
         raise ValueError(
@@ -375,7 +372,7 @@ def rq_topk(
         )
     if not probe:
         return codes_df.where(F.lit(False)).select(
-            F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     # table 1: per (lvl, cid) -> (dq = q.c, cc = |c|^2), flat at
     # position lvl * k_sub + cid; plus |q| — ONE broadcast row
@@ -418,16 +415,16 @@ def rq_topk(
             ).alias("_xs")
         )
     )
-    code0 = F.get(F.col(codes_col), 0)
-    code1 = F.get(F.col(codes_col), 1)
+    code0 = F.get(F.col("codes"), 0)
+    code1 = F.get(F.col("codes"), 1)
     # every lookup bound in ONE select before the sim expression
     # references them (CollapseProject)
     with_lk = (
-        codes_df.select(F.col(id_col), F.col(codes_col))
+        codes_df.select(F.col("vec_id"), F.col("codes"))
         .crossJoin(F.broadcast(tab))
         .crossJoin(F.broadcast(cross))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.get(F.col("_tab"), code0).alias("_t0"),
             F.get(F.col("_tab"), F.lit(k_sub) + code1).alias("_t1"),
             F.get(F.col("_xs"), code0 * k_sub + code1).alias("_x"),
@@ -448,11 +445,11 @@ def rq_topk(
             with_lk["_t0"]["dq"] + with_lk["_t1"]["dq"],
             F.sqrt(recon_sq) * F.col("_qn"),
         ),
-        round_decimals,
+        4,
     )
     return (
-        with_lk.select(F.col(id_col), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
+        with_lk.select(F.col("vec_id"), sim.alias("sim"))
+        .orderBy(F.col("sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -465,15 +462,14 @@ def rq_rerank_topk(
     dims: int,
     k: int = 10,
     shortlist_n: int = 100,
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
-    vec_col: str = "embedding",
-    query_col: str = "q",
 ) -> DataFrame:
     """The two-stage RQ deployment contract: ADC shortlist over the
     additive codes, exact round-4 cosine over the shortlisted ids'
     float vectors — the same :func:`..pq._exact_rerank` stage the PQ
-    paths share (one definition, serve paths cannot diverge)."""
+    paths share (one definition, serve paths cannot diverge).
+
+    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``,
+    vector ``embedding``."""
     _validate_shortlist(shortlist_n, k)
     shortlist = rq_topk(
         codes_df,
@@ -481,12 +477,9 @@ def rq_rerank_topk(
         query,
         dims=dims,
         k=shortlist_n,
-        id_col=id_col,
-        codes_col=codes_col,
-        query_col=query_col,
     )
     return _exact_rerank(
-        shortlist, vectors_df, query, k, id_col, vec_col, query_col
+        shortlist, vectors_df, query, k, "vec_id", "embedding", "q"
     )
 
 
@@ -497,10 +490,6 @@ def rq_ivf_topk_served(
     query: DataFrame,
     dims: int,
     k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    codes_col: str = "codes",
-    query_col: str = "q",
 ) -> DataFrame:
     """The IVF-RQ serve path (the residual-quantization twin of
     :func:`..pq.pq_ivf_topk_served`): coarse IVF probe over the
@@ -513,24 +502,26 @@ def rq_ivf_topk_served(
     encode with :func:`rq_encode`, attach the coarse cid from
     :func:`..similarity.ivf_assign`, write partitioned by ``cid``
     (the served-index v5 ``rq_codes/`` layout). At 100 TB a probe
-    reads ``n_probe/k_coarse`` of the corpus at ``n_levels`` code
+    reads 2 of ``k_coarse`` lists at ``n_levels`` code
     ints per vector — the two pruning levers multiply. Empty
     centroid frame or empty query -> empty result (the float twin's
-    contract)."""
+    contract).
+
+    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``."""
     from dgraph_dbpedia_spark.operators.similarity import _probe_single
 
-    q = query.select(F.col(query_col).cast("array<double>").alias("qv"))
+    q = query.select(F.col("q").cast("array<double>").alias("qv"))
     probes = _probe_single(
         coarse_centroids.select(
             "cid", F.col("c").cast("array<double>").alias("c")
         ),
         q.select(F.col("qv")),
-        n_probe,
+        2,
         "rq_ivf_topk_served",
     )
     if not probes:
         return codes_df.where(F.lit(False)).select(
-            F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     pruned = codes_df.where(F.col("cid").isin(probes))
     return rq_topk(
@@ -539,7 +530,4 @@ def rq_ivf_topk_served(
         query,
         dims=dims,
         k=k,
-        id_col=id_col,
-        codes_col=codes_col,
-        query_col=query_col,
     )

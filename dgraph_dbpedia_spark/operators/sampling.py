@@ -50,13 +50,7 @@ def stratified_sample(
     )
 
 
-def pack_offsets(
-    df,
-    max_tokens: int = 2048,
-    n_shards: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def pack_offsets(df, max_tokens: int = 2048, n_shards: int = 4):
     """Sequence-packing offsets for LLM pretraining: documents are
     hash-assigned to shards, concatenated in deterministic (doc id)
     order within each shard, and the token stream is cut into
@@ -73,7 +67,8 @@ def pack_offsets(
     embarrassingly parallel across shards, and determinism comes from
     the (shard, doc_id) sort, not from input order. The md5-derived
     shard hash is cross-engine checkable.
-    """
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     # same loud guard range_count_join applies to radius: a zero/negative
     # divisor would otherwise yield silent NULL pack/shard ids via
     # `div 0` / `pmod(h, 0)`
@@ -82,10 +77,10 @@ def pack_offsets(
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
 
-    toks = F.size(tokens(F.col(text_col))).alias("n_tokens")
+    toks = F.size(tokens(F.col("text"))).alias("n_tokens")
     base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.pmod(hash64(F.col(id_col).cast("string")), F.lit(n_shards))
+        F.col("doc_id").alias("doc_id"),
+        F.pmod(hash64(F.col("doc_id").cast("string")), F.lit(n_shards))
         .cast("int")
         .alias("shard"),
         toks,
@@ -121,8 +116,6 @@ def pack_efficiency_report(
     df: DataFrame,
     max_tokens: int = 2048,
     n_shards: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Packing-efficiency audit over :func:`pack_offsets` (r15): the
     per-shard numbers a pretraining-data team reads before committing
@@ -147,13 +140,13 @@ def pack_efficiency_report(
     wholesale (one definition — this report can never disagree with
     the offsets it audits). 100 TB shape: pack_offsets' single
     per-shard window shuffle, then a partial-aggregable groupBy whose
-    output is bounded by ``n_shards``."""
+    output is bounded by ``n_shards``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     off = pack_offsets(
         df,
         max_tokens=max_tokens,
         n_shards=n_shards,
-        text_col=text_col,
-        id_col=id_col,
     )
     per = off.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -185,12 +178,7 @@ def pack_efficiency_report(
     )
 
 
-def source_mixture_report(
-    df: DataFrame,
-    group_col: str = "source",
-    alpha: float = 0.5,
-    text_col: str = "text",
-) -> DataFrame:
+def source_mixture_report(df: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Corpus mixture report (r15): per group — document count, exact
     token count, token share, and the alpha-smoothed temperature
     weight ``n_tokens^alpha / sum_g n_tokens^alpha`` (the sampling
@@ -214,14 +202,16 @@ def source_mixture_report(
     100 TB shape: one partial-aggregable groupBy bounded by the group
     count, then bounded single-row crossJoins (the X6 pattern) — the
     corpus is never reshuffled and the group dimension is never
-    collected to the driver."""
+    collected to the driver.
+
+    Fixed columns: group ``source``, text ``text``."""
     from dgraph_dbpedia_spark.functions.hashing import tokens
 
     if float(alpha) <= 0.0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
-    per = df.groupBy(F.col(group_col).alias("__g")).agg(
+    per = df.groupBy(F.col("source").alias("__g")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum(F.size(tokens(F.col(text_col)))), F.lit(0))
+        F.coalesce(F.sum(F.size(tokens(F.col("text")))), F.lit(0))
         .cast("long")
         .alias("n_tokens"),
     )
@@ -244,7 +234,7 @@ def source_mixture_report(
     return (
         w.crossJoin(F.broadcast(scalars))
         .select(
-            F.col("__g").alias(group_col),
+            F.col("__g").alias("source"),
             "n_docs",
             "n_tokens",
             F.round(
@@ -271,12 +261,7 @@ def _unit_coin(id_col: str, seed: int) -> F.Column:
     )
 
 
-def weighted_sample(
-    df: DataFrame,
-    weight_col: str,
-    id_col: str = "doc_id",
-    seed: int = 1,
-) -> DataFrame:
+def weighted_sample(df: DataFrame, weight_col: str, seed: int = 1) -> DataFrame:
     """Deterministic weighted Bernoulli sampling: keep each row with
     probability equal to its ``weight_col`` value (clamped to [0, 1]) —
     the quality-weighted downsampling step of corpus curation ("keep
@@ -287,18 +272,16 @@ def weighted_sample(
 
     Pure narrow filter — no shuffle, fully codegen, trivially
     column-pruned; at 100 TB this is scan-speed.
-    """
+
+    Fixed columns: id ``doc_id``."""
     w = F.least(F.greatest(F.col(weight_col).cast("double"), F.lit(0.0)), F.lit(1.0))
-    return df.where(_unit_coin(id_col, seed) < w)
+    return df.where(_unit_coin("doc_id", seed) < w)
 
 
 def mixture_sample(
     df: DataFrame,
     weights: dict[str, float],
-    domain_col: str = "source",
-    id_col: str = "doc_id",
     default_weight: float = 0.0,
-    seed: int = 1,
 ) -> DataFrame:
     """Deterministic corpus mixing: downsample every domain to its
     target keep-probability — the data-mixture step of pretraining
@@ -309,11 +292,12 @@ def mixture_sample(
     The bounded ``domain -> weight`` map becomes a literal map lookup
     (no join, no shuffle); the coin is :func:`weighted_sample`'s
     cross-engine id hash, so the SAME rows survive on any engine,
-    any partitioning, any run — change ``seed`` for an independent
-    draw. Domains absent from ``weights`` keep ``default_weight``
-    (0.0 = drop unknown domains). Pure narrow filter: scan-speed at
-    100 TB, and the domain/weight filter is codegen'd into the scan
-    stage."""
+    any partitioning, any run (seed 1). Domains absent from
+    ``weights`` keep ``default_weight`` (0.0 = drop unknown domains).
+    Pure narrow filter: scan-speed at 100 TB, and the domain/weight
+    filter is codegen'd into the scan stage.
+
+    Fixed columns: domain ``source``, id ``doc_id``."""
     if not weights:
         raise ValueError("weights must be a non-empty domain -> weight map")
     for d, w in weights.items():
@@ -335,11 +319,11 @@ def mixture_sample(
     # default case, not an error — plain element_at raises under
     # Spark 4's default ANSI mode
     keep_p = F.coalesce(
-        F.try_element_at(m, F.col(domain_col).cast("string")),
+        F.try_element_at(m, F.col("source").cast("string")),
         F.lit(float(default_weight)),
     )
     return weighted_sample(
-        df.withColumn(wc, keep_p), wc, id_col=id_col, seed=seed
+        df.withColumn(wc, keep_p), wc, seed=1
     ).drop(wc)
 
 
@@ -463,7 +447,6 @@ def split_corpus(
     fractions: dict[str, float],
     id_col: str = "doc_id",
     seed: int = 1,
-    split_col: str = "split",
 ) -> DataFrame:
     """Deterministic disjoint corpus split (train/val/test): every row
     lands in exactly one named split, decided by the cross-engine
@@ -476,7 +459,9 @@ def split_corpus(
     the remainder of rows gets a NULL split (an explicit holdout the
     caller can drop or name).
 
-    Pure narrow projection — no shuffle, codegen'd into the scan."""
+    Pure narrow projection — no shuffle, codegen'd into the scan.
+
+    Fixed columns: split ``split``."""
     if not fractions:
         raise ValueError("fractions must be a non-empty split -> fraction map")
     total = 0.0
@@ -509,7 +494,7 @@ def split_corpus(
     # holdout the docstring promises
     return (
         df.withColumn(u_col, _unit_coin(id_col, seed))
-        .withColumn(split_col, expr)
+        .withColumn("split", expr)
         .drop(u_col)
     )
 
@@ -555,10 +540,7 @@ def _dsir_feats(df: DataFrame, text_col: str, id_col: str, buckets: int):
 def dsir_logratio(
     raw: DataFrame,
     target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     buckets: int = 10_000,
-    smoothing: float = 1.0,
 ) -> DataFrame:
     """DSIR-style importance scores (Xie et al., "Data Selection for
     Language Models via Importance Resampling", NeurIPS 2023,
@@ -568,7 +550,7 @@ def dsir_logratio(
 
         log w(x) = sum_f [ ln p_target(f) - ln p_raw(f) ]
 
-    over the document's bigram-feature OCCURRENCES (add-``smoothing``
+    over the document's bigram-feature OCCURRENCES (add-one
     estimates over ``buckets`` hashed features). High scores = looks
     like the target distribution. Returns ``(id, n_feats,
     log_ratio)`` for every raw document — sub-2-token docs carry NULL
@@ -586,13 +568,13 @@ def dsir_logratio(
     the model side) and fold per-doc. Per-doc summation folds the
     SORTED per-feature ratios sequentially (unigram_logprob's
     determinism rule: float addition is non-associative, so the rounded
-    4th decimal must not depend on row order)."""
-    if smoothing <= 0:
-        raise ValueError(f"smoothing must be > 0, got {smoothing}")
+    4th decimal must not depend on row order).
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
-    tf = _dsir_feats(target, text_col, id_col, buckets)
-    rf = _dsir_feats(raw, text_col, id_col, buckets)
+    tf = _dsir_feats(target, "text", "doc_id", buckets)
+    rf = _dsir_feats(raw, "text", "doc_id", buckets)
     with CacheScope() as scope:
         # persisted: each model feeds its totals aggregate AND the merged
         # frame (no cross-branch subplan sharing — unpersisted, the
@@ -620,7 +602,7 @@ def dsir_logratio(
             tm.agg(F.sum("ct").alias("__tt"))
             .crossJoin(rm.agg(F.sum("cr").alias("__tr")))
         )
-        s = float(smoothing)
+        s = 1.0
         merged = (
             tm.join(rm, "b", "full_outer")
             .select(
@@ -639,13 +621,13 @@ def dsir_logratio(
         )
         scored = (
             rf.join(F.broadcast(merged), "b")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_feats"),
                 F.sort_array(F.collect_list("lr")).alias("__lrs"),
             )
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.col("n_feats"),
                 F.round(
                     F.aggregate("__lrs", F.lit(0.0), lambda a, x: a + x), 4
@@ -653,10 +635,10 @@ def dsir_logratio(
             )
         )
         out = (
-            raw.select(F.col(id_col))
-            .join(scored, id_col, "left")
+            raw.select(F.col("doc_id"))
+            .join(scored, "doc_id", "left")
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.coalesce("n_feats", F.lit(0)).alias("n_feats"),
                 F.col("log_ratio"),
             )
@@ -668,11 +650,7 @@ def dsir_sample(
     raw: DataFrame,
     target: DataFrame,
     n: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     buckets: int = 10_000,
-    smoothing: float = 1.0,
-    seed: int = 3,
 ) -> DataFrame:
     """DSIR's resampling step, RNG-free: sample ``n`` raw documents
     WITHOUT replacement with probability proportional to
@@ -690,26 +668,28 @@ def dsir_sample(
 
     Scale shape: scoring as :func:`dsir_logratio` (bounded broadcast
     model), then ONE TakeOrdered bounded by ``n`` — no global sort
-    materialization."""
+    materialization.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if n <= 0:
         raise ValueError(f"n must be positive, got {n}")
     with CacheScope() as scope:
         # keep a reference to the TAGGED frame: the release handles live as
         # a Python attribute on that exact object, and .where() returns a
         # new object without them
-        scored = dsir_logratio(raw, target, text_col, id_col, buckets, smoothing)
+        scored = dsir_logratio(raw, target, buckets)
         scores = scored.where(F.col("log_ratio").isNotNull())
         u = (
-            F.pmod(hash64(F.col(id_col).cast("string"), seed=seed), F.lit(1_000_000))
+            F.pmod(hash64(F.col("doc_id").cast("string"), seed=3), F.lit(1_000_000))
             + F.lit(0.5)
         ) / 1_000_000.0
         gumbel = -F.log(-F.log(u))
         keyed = scores.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.round(F.col("log_ratio") + gumbel, 6).alias("__key"),
         )
-        picked = keyed.orderBy(F.col("__key").desc(), F.col(id_col)).limit(n)
-        out = raw.join(picked.select(id_col), id_col, "left_semi")
+        picked = keyed.orderBy(F.col("__key").desc(), F.col("doc_id")).limit(n)
+        out = raw.join(picked.select("doc_id"), "doc_id", "left_semi")
         # the scoring frame's model caches ride through to the caller
         return scope.hand(out, *persisted_frames(scored))
 
@@ -765,8 +745,6 @@ def cluster_balanced_sample(
     n_per_cluster: int,
     centroids: DataFrame | None = None,
     n_clusters: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 1,
 ) -> DataFrame:
     """Diversity-balanced subsampling over an embedding column: assign
@@ -789,7 +767,9 @@ def cluster_balanced_sample(
     per-cluster rank window on ``cid`` — and the coin is a pure
     function of the id, so the sample is stable under repartitioning,
     engine and run (the :func:`weighted_sample` determinism
-    contract)."""
+    contract).
+
+    Fixed columns: id ``vec_id``, vector ``embedding``."""
     from dgraph_dbpedia_spark.operators.similarity import (
         ivf_assign,
         ivf_seed_centroids,
@@ -800,33 +780,26 @@ def cluster_balanced_sample(
             f"n_per_cluster must be >= 1, got {n_per_cluster}"
         )
     e = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_e")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_e")
     )
     if centroids is None:
         if n_clusters < 1:
             raise ValueError(f"n_clusters must be >= 1, got {n_clusters}")
-        centroids = ivf_seed_centroids(e, n_clusters, id_col, "_e")
-    asg = ivf_assign(e, centroids, id_col, "_e")
-    h = hash64(F.col(id_col).cast("string"), seed=seed)
-    w = Window.partitionBy("cid").orderBy(h.asc(), F.col(id_col).asc())
+        centroids = ivf_seed_centroids(e, n_clusters, "vec_id", "_e")
+    asg = ivf_assign(e, centroids, "vec_id", "_e")
+    h = hash64(F.col("vec_id").cast("string"), seed=seed)
+    w = Window.partitionBy("cid").orderBy(h.asc(), F.col("vec_id").asc())
     return (
-        asg.select(F.col(id_col), F.col("cid"))
+        asg.select(F.col("vec_id"), F.col("cid"))
         .withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= n_per_cluster)
         .drop("__rn")
     )
 
 
-def token_budget_sample(
-    df: DataFrame,
-    budget_tokens: int,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 1,
-) -> DataFrame:
+def token_budget_sample(df: DataFrame, budget_tokens: int, seed: int = 1) -> DataFrame:
     """Token-budgeted per-domain sampling — the unit curation actually
-    budgets in: keep documents from each ``group_col`` domain, in the
+    budgets in: keep documents from each ``source`` domain, in the
     RNG-free id-hash coin order, until the domain's CUMULATIVE token
     count reaches ``budget_tokens`` ("~1B wiki tokens, ~5B web
     tokens" — :func:`mixture_sample` can only express doc-count
@@ -843,7 +816,9 @@ def token_budget_sample(
     narrow projection; the coin is a pure function of the id, so the
     sample is stable under repartitioning, engine and run. A domain
     with hot-key volume beyond a task's sort spill budget wants the
-    same salting note as :func:`stratified_sample`."""
+    same salting note as :func:`stratified_sample`.
+
+    Fixed columns: group ``source``, id ``doc_id``, text ``text``."""
     if budget_tokens < 1:
         raise ValueError(
             f"budget_tokens must be >= 1, got {budget_tokens}"
@@ -854,10 +829,10 @@ def token_budget_sample(
             "token_budget_sample writes column 'n_tokens' which already "
             "exists on the input — rename it first"
         )
-    h = hash64(F.col(id_col).cast("string"), seed=seed)
+    h = hash64(F.col("doc_id").cast("string"), seed=seed)
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(h.asc(), F.col(id_col).asc())
+        Window.partitionBy("source")
+        .orderBy(h.asc(), F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # coalesce-before-size: NULL text must count 0 tokens on EVERY
@@ -868,7 +843,7 @@ def token_budget_sample(
         ntok,
         F.size(
             F.coalesce(
-                tokens(F.col(text_col)),
+                tokens(F.col("text")),
                 F.array().cast("array<string>"),
             )
         ).cast("long"),
@@ -885,8 +860,6 @@ def classifier_training_set(
     df: DataFrame,
     ref: DataFrame,
     n_per_class: int,
-    id_col: str = "doc_id",
-    seed: int = 5,
 ) -> DataFrame:
     """Quality-classifier data prep (the CCNet / fastText recipe,
     Wenzek et al. LREC 2020): label 1 = documents sampled from a
@@ -904,22 +877,24 @@ def classifier_training_set(
     join; broadcast when ``ref`` is small); each class cut is an
     orderBy-limit = TakeOrdered (per-partition partial top-n, then a
     single bounded merge — never a full sort); the union is
-    metadata-only."""
+    metadata-only.
+
+    Fixed columns: id ``doc_id``."""
     if n_per_class < 1:
         raise ValueError(
             f"n_per_class must be >= 1, got {n_per_class}"
         )
-    coin = hash64(F.col(id_col).cast("string"), seed=seed)
+    coin = hash64(F.col("doc_id").cast("string"), seed=5)
 
     def cut(frame: DataFrame, label: int) -> DataFrame:
         return (
-            frame.select(F.col(id_col), coin.alias("__c"))
-            .orderBy(F.col("__c").asc(), F.col(id_col).asc())
+            frame.select(F.col("doc_id"), coin.alias("__c"))
+            .orderBy(F.col("__c").asc(), F.col("doc_id").asc())
             .limit(n_per_class)
-            .select(F.col(id_col), F.lit(label).alias("label"))
+            .select(F.col("doc_id"), F.lit(label).alias("label"))
         )
 
     neg_universe = df.join(
-        ref.select(id_col), id_col, "left_anti"
+        ref.select("doc_id"), "doc_id", "left_anti"
     )
     return cut(ref, 1).unionByName(cut(neg_universe, 0))

@@ -220,9 +220,6 @@ def lsh_bucketed_topk(
     df: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "q",
     n_planes: int = 8,
     dims: int = 64,
     n_probes: int = 1,
@@ -244,31 +241,53 @@ def lsh_bucketed_topk(
     FILTER on the corpus sketch — no join, no second Python stage — and
     the query vector a literal array in the native scoring expression
     (repr round-trips doubles, so the sequential per-element float fold
-    is unchanged)."""
+    is unchanged). A multi-row query frame raises, an empty one returns
+    an empty ``(vec_id, sim)`` frame, and a NULL query vector or a NULL
+    or non-finite component raises.
+
+    Fixed columns: id ``vec_id``, query vector ``q``, vector
+    ``embedding``."""
     cand = df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("e"),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("e"),
         hyperplane_signs_arrow(n_planes, dims)(
-            F.col(vec_col).cast("array<double>")
+            F.col("embedding").cast("array<double>")
         ).alias("bucket"),
     )
-    q_vec = [float(x) for x in query.select(query_col).first()[0]]
+    # the _probe_single discipline: limit(2) bounds the collect before
+    # the one-row check, so a corpus frame passed as the query never
+    # reaches the driver
+    probe = query.select("q").limit(2).collect()
+    if len(probe) > 1:
+        raise ValueError(
+            "lsh_bucketed_topk expects exactly one query vector, got a "
+            "multi-row query frame — issue one call per query, or "
+            "lsh_bucketed_topk_many"
+        )
+    if not probe:
+        return df.where(F.lit(False)).select(
+            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
+        )
+    vec = probe[0][0]
+    # a NaN component would render as an unparseable ``nanD`` literal
+    if vec is None or not all(x is not None and math.isfinite(x) for x in vec):
+        raise ValueError(
+            "lsh_bucketed_topk: the query vector is NULL or has a NULL or "
+            "non-finite component"
+        )
+    q_vec = [float(x) for x in vec]
     buckets = probe_buckets(q_vec, n_planes, dims, n_probes)
     q_lit = F.expr("array(" + ",".join(repr(v) + "D" for v in q_vec) + ")")
     scored = cand.where(F.col("bucket").isin(buckets)).select(
-        F.col(id_col), F.round(cosine(F.col("e"), q_lit), 4).alias("sim")
+        F.col("vec_id"), F.round(cosine(F.col("e"), q_lit), 4).alias("sim")
     )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
 
 
 def lsh_bucketed_topk_many(
     df: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    query_col: str = "q",
     n_planes: int = 8,
     dims: int = 64,
 ) -> DataFrame:
@@ -284,11 +303,14 @@ def lsh_bucketed_topk_many(
     shuffle is bounded by bucket-collision pairs, never |q| x |corpus|;
     the query sketch is broadcast (queries fit on one executor), so the
     only shuffle is the final window's partition-by-qid, sized
-    |candidates|."""
+    |candidates|.
+
+    Fixed columns: id ``vec_id``, query id ``qid``, query vector ``q``,
+    vector ``embedding``."""
     a = queries.select(
-        F.col(qid_col).alias("__vid"), F.col(query_col).alias("__v")
+        F.col("qid").alias("__vid"), F.col("q").alias("__v")
     )
-    b = df.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"))
+    b = df.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v"))
     out = ann_join(
         a,
         b,
@@ -300,7 +322,7 @@ def lsh_bucketed_topk_many(
         broadcast_a=True,
     )
     return out.select(
-        F.col("a").alias(qid_col), F.col("b").alias(id_col), "sim"
+        F.col("a").alias("qid"), F.col("b").alias("vec_id"), "sim"
     )
 
 
@@ -375,7 +397,7 @@ def _collect_centroids(centroids: DataFrame):
     return cids, cmat, cast.schema["cid"].dataType
 
 
-def nearest_centroid_arrow(cids, cmat, cid_type, round_decimals: int = 6):
+def nearest_centroid_arrow(cids, cmat, cid_type):
     """Vectorized production twin of :func:`_nearest_sorted`'s best
     pick: one ``(batch x dims) @ (dims x k)`` numpy product per Arrow
     batch instead of the interpreted n x k higher-order fold — the
@@ -385,7 +407,7 @@ def nearest_centroid_arrow(cids, cmat, cid_type, round_decimals: int = 6):
     is :func:`_ivf_assign_native`.
 
     Returns a pandas UDF ``vec -> struct(cid, nv, sim)`` where ``cid``
-    is the nearest centroid (round-``round_decimals`` HALF_UP cosine
+    is the nearest centroid (round-6 HALF_UP cosine
     desc, cid asc — ties resolved by the cid-ascending centroid order
     from :func:`_collect_centroids`), ``nv`` the row's vector norm and
     ``sim`` the winning rounded cosine. Contract matches the native
@@ -468,7 +490,7 @@ def nearest_centroid_arrow(cids, cmat, cid_type, round_decimals: int = 6):
         with np.errstate(divide="ignore", invalid="ignore"):
             sims = (mat @ C.T) / (nv[:, None] * nc[None, :])
         sims = np.where(
-            np.isfinite(sims), _round_half_up_np(sims, round_decimals), -2.0
+            np.isfinite(sims), _round_half_up_np(sims, 6), -2.0
         )
         best = np.argmax(sims, axis=1)
         if bad_mask.any():
@@ -593,16 +615,14 @@ def pair_cosine_arrow(round_decimals: int = 6, normalized: bool = False):
     return pandas_udf(score, DoubleType())
 
 
-def _pair_cosine_native(
-    ea: str, eb: str, na: str | None, nb: str | None, round_decimals: int = 6
-) -> Column:
+def _pair_cosine_native(ea: str, eb: str, na: str | None, nb: str | None) -> Column:
     """Native reference of :func:`pair_cosine_arrow` over column names:
     ``round(try_divide(dot(ea, eb), na * nb), d)``, or ``round(dot(ea,
     eb), d)`` when ``na``/``nb`` are None (the ``normalized`` form)."""
     if na is None:
-        return F.round(_dot(ea, eb), round_decimals)
+        return F.round(_dot(ea, eb), 6)
     return F.round(
-        F.try_divide(_dot(ea, eb), F.col(na) * F.col(nb)), round_decimals
+        F.try_divide(_dot(ea, eb), F.col(na) * F.col(nb)), 6
     )
 
 
@@ -669,8 +689,6 @@ def ivf_assign(
 def _ivf_assign_native(
     df: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
     norm_col: str | None = None,
     sim_col: str | None = None,
 ) -> DataFrame:
@@ -678,7 +696,9 @@ def _ivf_assign_native(
     tests can pin :func:`nearest_centroid_arrow` against it: the
     centroid set folds to one array-of-structs row
     (:func:`_centroid_row`), broadcast, and the nearest centroid is
-    ``array_sort(transform(...))[0]``."""
+    ``array_sort(transform(...))[0]``.
+
+    Fixed columns: id ``vec_id``, vector ``e``."""
     v = F.col("_v")
     nv = F.col("_nv")
     # F.get (0-based) yields NULL on an empty array; element_at(arr, 1)
@@ -690,7 +710,7 @@ def _ivf_assign_native(
     # reference, not a re-evaluated fold) — callers that need norms
     # downstream (semantic_dedup_pairs) would otherwise pay a second
     # O(dims) aggregate per row
-    sel = [F.col(id_col), F.col(vec_col), best["cid"].alias("cid")]
+    sel = [F.col("vec_id"), F.col("e"), best["cid"].alias("cid")]
     if norm_col is not None:
         sel.append(nv.alias(norm_col))
     if sim_col is not None:
@@ -698,18 +718,14 @@ def _ivf_assign_native(
         # folds the -0.0 a negated zero cosine would leave)
         sel.append((-best["negsim"] + F.lit(0.0)).alias(sim_col))
     return (
-        df.withColumn("_v", F.col(vec_col))
+        df.withColumn("_v", F.col("e"))
         .withColumn("_nv", _norm("_v"))
         .crossJoin(F.broadcast(_centroid_row(centroids)))
         .select(*sel)
     )
 
 
-def ivf_list_skew_report(
-    assigned: DataFrame,
-    id_col: str = "vec_id",
-    list_col: str = "cid",
-) -> DataFrame:
+def ivf_list_skew_report(assigned: DataFrame) -> DataFrame:
     """Inverted-list skew audit (r15): per-list occupancy of an IVF
     (or any bucketed) assignment — the partition-balance check a
     100 TB serving rollout reads BEFORE the skew shows up as one
@@ -731,8 +747,10 @@ def ivf_list_skew_report(
     count, then the two scalars ride ONE broadcast row (the X6
     pattern). Exact integer counts; the two ratios are single
     divisions of exact integers, round-6 — order-independent by
-    construction."""
-    per = assigned.groupBy(F.col(list_col).alias(list_col)).agg(
+    construction.
+
+    Fixed columns: id ``vec_id``, list ``cid``."""
+    per = assigned.groupBy(F.col("cid").alias("cid")).agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
     scalars = per.agg(
@@ -740,7 +758,7 @@ def ivf_list_skew_report(
         F.count(F.lit(1)).cast("long").alias("__n_lists"),
     )
     return per.crossJoin(F.broadcast(scalars)).select(
-        list_col,
+        "cid",
         "n",
         F.round(F.try_divide(F.col("n"), F.col("__total")), 6).alias(
             "share"
@@ -771,10 +789,10 @@ def ivf_seed_centroids(
     )
 
 
-def _probe_cids_py(q_vec, cids, cmat, n_probe: int, round_decimals: int = 6):
+def _probe_cids_py(q_vec, cids, cmat, n_probe: int):
     """Driver-side numpy twin of ``slice(_nearest_sorted(q), 1,
     n_probe)``: the ``n_probe`` nearest centroid ids to ONE query
-    vector (round-``round_decimals`` HALF_UP cosine desc, cid asc;
+    vector (round-6 HALF_UP cosine desc, cid asc;
     non-finite -> -2.0). Bounded work on one vector x k centroids — no
     distributed job."""
     import numpy as np
@@ -788,7 +806,7 @@ def _probe_cids_py(q_vec, cids, cmat, n_probe: int, round_decimals: int = 6):
     with np.errstate(divide="ignore", invalid="ignore"):
         sims = (C @ q) / (nc * nq)
     sims = np.where(
-        np.isfinite(sims), _round_half_up_np(sims, round_decimals), -2.0
+        np.isfinite(sims), _round_half_up_np(sims, 6), -2.0
     )
     order = sorted(range(len(cids)), key=lambda i: (-sims[i], cids[i]))
     return [cids[i] for i in order[:n_probe]]
@@ -798,9 +816,6 @@ def ivf_topk(
     df: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "q",
     n_centroids: int = 16,
     n_probe: int = 2,
     centroids: DataFrame | None = None,
@@ -836,10 +851,13 @@ def ivf_topk(
     becomes a literal filter on the assigned cid and the query a
     literal array in the native re-rank expression, exactly the
     :func:`lsh_bucketed_topk` pattern. A query that cannot be resolved
-    driver-side runs the all-native plan (:func:`_ivf_topk_native`)."""
-    e = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("e"))
+    driver-side runs the all-native plan (:func:`_ivf_topk_native`).
+
+    Fixed columns: id ``vec_id``, query vector ``q``, vector
+    ``embedding``."""
+    e = df.select(F.col("vec_id"), F.col("embedding").cast("array<double>").alias("e"))
     if centroids is None:
-        centroids = ivf_seed_centroids(e, n_centroids, id_col=id_col, vec_col="e")
+        centroids = ivf_seed_centroids(e, n_centroids, id_col="vec_id", vec_col="e")
     else:
         centroids = centroids.select(
             "cid", F.col("c").cast("array<double>").alias("c")
@@ -849,7 +867,7 @@ def ivf_topk(
     # NULL vector, NULL/NaN/inf component — 'nanD' would not even parse
     # as a literal) falls back to the native plan instead of a
     # data-dependent driver raise
-    q_rows = query.select(query_col).limit(2).collect()
+    q_rows = query.select("q").limit(2).collect()
     q_vec = None
     if len(q_rows) == 1 and q_rows[0][0] is not None:
         vec = [None if x is None else float(x) for x in q_rows[0][0]]
@@ -863,13 +881,13 @@ def ivf_topk(
             q_vec = vec
     if q_vec is None:
         return _ivf_topk_native(
-            e, centroids, query, k, id_col, query_col, n_probe
+            e, centroids, query, k, "vec_id", "q", n_probe
         )
     cids, cmat, cid_type = _collect_centroids(centroids)
     probes = _probe_cids_py(q_vec, cids, cmat, n_probe)
     if not probes:
         return e.where(F.lit(False)).select(
-            F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     q_lit = F.expr("array(" + ",".join(repr(v) + "D" for v in q_vec) + ")")
     st = nearest_centroid_arrow(cids, cmat, cid_type)(F.col("e"))
@@ -879,9 +897,9 @@ def ivf_topk(
         # the native cosine runs on only ~n_probe/n_centroids of the
         # rows
         .where(F.col("_a")["cid"].isin(probes))
-        .select(F.col(id_col), F.round(cosine("e", q_lit), 4).alias("sim"))
+        .select(F.col("vec_id"), F.round(cosine("e", q_lit), 4).alias("sim"))
     )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
 
 
 def _ivf_topk_native(
@@ -924,9 +942,7 @@ def ivf_train(
     df: DataFrame,
     n_centroids: int = 8,
     n_iter: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_decimals: int = 4,
 ) -> DataFrame:
     """Lloyd k-means refinement of the deterministic seed centroids —
     the build-time upgrade over :func:`ivf_seed_centroids` (lowest-id
@@ -946,7 +962,7 @@ def ivf_train(
        to an array with an ordered ``collect_list`` over the
        dimension-sized group.
 
-    Components are rounded to ``round_decimals`` each iteration — that
+    Components are rounded to 4 decimals each iteration — that
     makes the trained centroids (and therefore every downstream
     assignment) bit-reproducible across engines and partitionings,
     which is what lets a DuckDB oracle replay the whole training run. A
@@ -955,9 +971,11 @@ def ivf_train(
     centroid frame is eagerly localCheckpoint-ed so the next broadcast
     fold embeds an 8-row local relation, not the previous iteration's
     full corpus-aggregation plan, with superseded checkpoints released
-    deterministically."""
-    e = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("e"))
-    seeds = ivf_seed_centroids(e, n_centroids, id_col=id_col, vec_col="e")
+    deterministically.
+
+    Fixed columns: id ``vec_id``."""
+    e = df.select(F.col("vec_id"), F.col(vec_col).cast("array<double>").alias("e"))
+    seeds = ivf_seed_centroids(e, n_centroids, id_col="vec_id", vec_col="e")
     # the per-iteration centroid collect (ivf_assign) reads the
     # 8-row localCheckpoint just made — a bounded X6 read, not a
     # corpus job
@@ -967,9 +985,9 @@ def ivf_train(
             scope.checkpoint(seeds),
             ["cid"],
             n_iter,
-            round_decimals,
+            4,
             "e",
-            lambda c_: ivf_assign(e, c_, id_col=id_col, vec_col="e"),
+            lambda c_: ivf_assign(e, c_, id_col="vec_id", vec_col="e"),
         )
 
 
@@ -1064,9 +1082,6 @@ def ivf_topk_served(
     centroids: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    query_col: str = "q",
     n_probe: int = 2,
 ) -> DataFrame:
     """Serve-path IVF probe against a MATERIALIZED index: ``assigned``
@@ -1087,8 +1102,10 @@ def ivf_topk_served(
     :func:`ivf_assign`'s NULL-cid contract. The query frame must hold
     exactly ONE vector (the X6 bounded-collect contract); a multi-row
     frame raises rather than silently mixing every query's similarities
-    into one unlabeled top-k."""
-    q = query.select(F.col(query_col).cast("array<double>").alias("q"))
+    into one unlabeled top-k.
+
+    Fixed columns: id ``vec_id``, query vector ``q``, vector ``e``."""
+    q = query.select(F.col("q").cast("array<double>").alias("q"))
     probes = _probe_single(
         centroids,
         q.select(F.col("q").alias("qv")),
@@ -1097,14 +1114,14 @@ def ivf_topk_served(
     )
     if not probes:
         return assigned.where(F.lit(False)).select(
-            F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     scored = (
         assigned.where(F.col("cid").isin(probes))
         .crossJoin(F.broadcast(q))
-        .select(F.col(id_col), F.round(cosine(vec_col, "q"), 4).alias("sim"))
+        .select(F.col("vec_id"), F.round(cosine("e", "q"), 4).alias("sim"))
     )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
 
 
 def _probe_many(
@@ -1155,10 +1172,6 @@ def ivf_topk_served_many(
     centroids: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    qid_col: str = "qid",
-    query_col: str = "q",
     n_probe: int = 2,
     max_queries: int = 100_000,
 ) -> DataFrame:
@@ -1185,37 +1198,40 @@ def ivf_topk_served_many(
     ``max_queries`` bounds the driver-side probe collect: a query frame
     larger than that raises loudly instead of degrading into an
     unbounded collect (split the batch, or fall back to scan-side
-    assignment via :func:`ivf_topk` per shard)."""
+    assignment via :func:`ivf_topk` per shard).
+
+    Fixed columns: id ``vec_id``, query id ``qid``, query vector ``q``,
+    vector ``e``."""
     from pyspark.sql import Window
 
     q = queries.select(
-        F.col(qid_col),
-        F.col(query_col).cast("array<double>").alias("q"),
+        F.col("qid"),
+        F.col("q").cast("array<double>").alias("q"),
     )
-    qp, union_cids = _probe_many(q, centroids, qid_col, n_probe, max_queries)
+    qp, union_cids = _probe_many(q, centroids, "qid", n_probe, max_queries)
     if not union_cids:
         return assigned.where(F.lit(False)).crossJoin(
-            qp.select(qid_col).where(F.lit(False))
+            qp.select("qid").where(F.lit(False))
         ).select(
-            F.col(qid_col), F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("qid"), F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
-    pq = qp.select(F.col(qid_col), F.col("q"), F.explode("_probes").alias("cid"))
+    pq = qp.select(F.col("qid"), F.col("q"), F.explode("_probes").alias("cid"))
     scored = (
         # literal IN: partition/bucket PRUNE at the scan (plan-asserted
         # by pytest), then the bounded (qid, cid, q) frame broadcasts
         assigned.where(F.col("cid").isin(union_cids))
         .join(F.broadcast(pq), "cid")
         .select(
-            F.col(qid_col),
-            F.col(id_col),
-            F.round(cosine(vec_col, "q"), 4).alias("sim"),
+            F.col("qid"),
+            F.col("vec_id"),
+            F.round(cosine("e", "q"), 4).alias("sim"),
         )
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
+    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
-        .select(qid_col, id_col, "sim")
+        .select("qid", "vec_id", "sim")
     )
 
 
@@ -1225,10 +1241,6 @@ def quantized_ivf_topk_served_many(
     scales: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    qvec_col: str = "qe",
-    qid_col: str = "qid",
-    query_col: str = "q",
     n_probe: int = 2,
     max_queries: int = 100_000,
 ) -> DataFrame:
@@ -1245,32 +1257,35 @@ def quantized_ivf_topk_served_many(
     (qid, cid, qq) join, per-qid window top-k) — the probe just reads
     ~5x fewer bytes (BENCH_SCALE.md r10). Queries are quantized with
     the CORPUS ``scales`` (clamped foreign-scales case), their integer
-    norms computed once in the bounded probe frame."""
+    norms computed once in the bounded probe frame.
+
+    Fixed columns: id ``vec_id``, query id ``qid``, query vector ``q``,
+    query vector ``qe``."""
     from pyspark.sql import Window
 
     q = queries.select(
-        F.col(qid_col),
-        F.col(query_col).cast("array<double>").alias("q"),
+        F.col("qid"),
+        F.col("q").cast("array<double>").alias("q"),
     )
-    qp, union_cids = _probe_many(q, centroids, qid_col, n_probe, max_queries)
+    qp, union_cids = _probe_many(q, centroids, "qid", n_probe, max_queries)
     if not union_cids:
         return quantized.where(F.lit(False)).crossJoin(
-            qp.select(qid_col).where(F.lit(False))
+            qp.select("qid").where(F.lit(False))
         ).select(
-            F.col(qid_col), F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("qid"), F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     # quantize each query once in the bounded frame (qid, cid, qq,
     # qnorm) — never per candidate row
     pq = (
         qp.crossJoin(F.broadcast(scales))
         .select(
-            F.col(qid_col),
+            F.col("qid"),
             F.col("_probes"),
             F.zip_with("q", "scales", _q8).alias("qq"),
         )
         .withColumn("qnorm", F.sqrt(_int_dot("qq", "qq")))
         .select(
-            F.col(qid_col),
+            F.col("qid"),
             F.explode("_probes").alias("cid"),
             F.col("qq"),
             F.col("qnorm"),
@@ -1278,45 +1293,41 @@ def quantized_ivf_topk_served_many(
     )
     sim = F.round(
         F.try_divide(
-            _int_dot(qvec_col, "qq"),
-            F.sqrt(_int_dot(qvec_col, qvec_col)) * F.col("qnorm"),
+            _int_dot("qe", "qq"),
+            F.sqrt(_int_dot("qe", "qe")) * F.col("qnorm"),
         ),
         4,
     )
     scored = (
         quantized.where(F.col("cid").isin(union_cids))
         .join(F.broadcast(pq), "cid")
-        .select(F.col(qid_col), F.col(id_col), sim.alias("sim"))
+        .select(F.col("qid"), F.col("vec_id"), sim.alias("sim"))
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
+    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
-        .select(qid_col, id_col, "sim")
+        .select("qid", "vec_id", "sim")
     )
 
 
-def normalize_embeddings(
-    df: DataFrame,
-    dims: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_decimals: int = 6,
-) -> DataFrame:
+def normalize_embeddings(df: DataFrame, dims: int | None = None) -> DataFrame:
     """Embedding prep for serving: optional Matryoshka-style truncation
     to the first ``dims`` components (Kusupati et al., NeurIPS 2022 —
     MRL-trained models pack coarse semantics into the prefix, so a
     truncated-then-renormalized vector is a cheaper index key), then
     L2 normalization. Returns ``(id, e)`` with ``e`` double-typed,
-    components rounded to ``round_decimals`` (cross-engine replay).
+    components rounded to 6 decimals (cross-engine replay).
     Over NORMALIZED vectors cosine degenerates to the plain dot
     product, so a served index built on this output skips the per-row
     norm fold on every probe. Zero-norm vectors come back as NULL
     (there is no direction to keep — downstream try_divide would have
     NULL-ed every score anyway, and a silent zero vector in an index
     pollutes top-k with ties). Pure narrow projection: no shuffle, no
-    UDF, scan-speed at 100 TB."""
-    e = F.col(vec_col).cast("array<double>")
+    UDF, scan-speed at 100 TB.
+
+    Fixed columns: id ``vec_id``, vector ``embedding``."""
+    e = F.col("embedding").cast("array<double>")
     if dims is not None:
         if dims < 1:
             raise ValueError(f"dims must be >= 1, got {dims}")
@@ -1330,13 +1341,13 @@ def normalize_embeddings(
         n > 0,
         F.transform(
             F.col("_e"),
-            lambda x: F.round(x / n, round_decimals) + F.lit(0.0),
+            lambda x: F.round(x / n, 6) + F.lit(0.0),
         ),
     )
     return (
-        df.select(F.col(id_col), e.alias("_e"))
-        .select(F.col(id_col), F.col("_e"), _norm("_e").alias("_n"))
-        .select(F.col(id_col), out.alias("e"))
+        df.select(F.col("vec_id"), e.alias("_e"))
+        .select(F.col("vec_id"), F.col("_e"), _norm("_e").alias("_n"))
+        .select(F.col("vec_id"), out.alias("e"))
     )
 
 
@@ -1368,7 +1379,6 @@ def quantization_scales(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 def quantize_embeddings(
     df: DataFrame,
     scales: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Symmetric int8 scalar quantization: ``q[i] = floor(v[i] /
@@ -1384,21 +1394,18 @@ def quantize_embeddings(
     calibration, a new shard against a frozen index) can — without the
     clamp that's a tinyint overflow, a mid-job crash under Spark 4's
     ANSI default. Pure projection over a broadcast 1-row scales frame:
-    no shuffle, no UDF."""
+    no shuffle, no UDF.
+
+    Fixed columns: id ``vec_id``."""
     return df.crossJoin(F.broadcast(scales)).select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.zip_with(
             F.col(vec_col).cast("array<double>"), F.col("scales"), _q8
         ).alias("qe"),
     )
 
 
-def quantization_error_report(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def quantization_error_report(df: DataFrame) -> DataFrame:
     """Per-label int8 reconstruction-error audit (r15): how much
     cosine geometry the scalar quantization loses, BEFORE anyone
     trusts the int8 serve path on a new corpus — the calibration
@@ -1426,21 +1433,23 @@ def quantization_error_report(
     100 TB shape: the scales ride ONE broadcast row, the error is a
     scan-fused projection, and the report is a partial-aggregable
     groupBy bounded by the label count. The e6 BIGINT sum holds to
-    ~4.5e15 scored rows per label (err <= 2 -> 2e6/row vs int64)."""
-    scales = quantization_scales(df, vec_col)
+    ~4.5e15 scored rows per label (err <= 2 -> 2e6/row vs int64).
+
+    Fixed columns: id ``vec_id``, label ``label``, vector ``embedding``."""
+    scales = quantization_scales(df, "embedding")
     dq = F.zip_with(
         F.col("_v"), F.col("scales"),
         lambda x, s: _q8(x, s).cast("double") * s,
     )
     per = (
         df.select(
-            F.col(label_col).alias("_lab"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
+            F.col("label").alias("_lab"),
+            F.col("embedding").cast("array<double>").alias("_v"),
         )
         .crossJoin(F.broadcast(scales))
         .select("_lab", "_v", dq.alias("_vhat"))
     )
-    return _recon_error_report(per, label_col)
+    return _recon_error_report(per, "label")
 
 
 def _recon_error_report(per: DataFrame, label_col: str) -> DataFrame:
@@ -1497,14 +1506,7 @@ def _int_dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def quantized_cosine_topk(
-    df: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "q",
-) -> DataFrame:
+def quantized_cosine_topk(df: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k over int8-quantized vectors: calibrate
     scales on the corpus, quantize corpus AND query with the same
     scales, rank by integer-dot cosine. Returns ``(id, sim)`` — ``sim``
@@ -1516,13 +1518,16 @@ def quantized_cosine_topk(
     single-scan TakeOrdered as :func:`cosine_topk` — one broadcast row
     carrying (scales, quantized query) and zero shuffles of the corpus.
     For repeated serving, materialize :func:`quantize_embeddings` once
-    and probe that (compose with the IVF serve path)."""
-    scales = quantization_scales(df, vec_col)
+    and probe that (compose with the IVF serve path).
+
+    Fixed columns: id ``vec_id``, query vector ``q``, vector
+    ``embedding``."""
+    scales = quantization_scales(df, "embedding")
     # query norm computed ONCE in the broadcast 1-row frame — inside
     # the per-row projection it would fold the query vector again for
     # every corpus row
     qq = (
-        query.select(F.col(query_col).cast("array<double>").alias("qv"))
+        query.select(F.col("q").cast("array<double>").alias("qv"))
         .crossJoin(F.broadcast(scales))
         .select(F.zip_with("qv", "scales", _q8).alias("qq"), F.col("scales"))
         .select(
@@ -1532,9 +1537,9 @@ def quantized_cosine_topk(
         )
     )
     qe = df.crossJoin(F.broadcast(qq)).select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.zip_with(
-            F.col(vec_col).cast("array<double>"), F.col("scales"), _q8
+            F.col("embedding").cast("array<double>"), F.col("scales"), _q8
         ).alias("qe"),
         F.col("qq"),
         F.col("qnorm"),
@@ -1547,8 +1552,8 @@ def quantized_cosine_topk(
         4,
     )
     return (
-        qe.select(F.col(id_col), sim.alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
+        qe.select(F.col("vec_id"), sim.alias("sim"))
+        .orderBy(F.col("sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -1559,9 +1564,6 @@ def quantized_ivf_topk_served(
     scales: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    qvec_col: str = "qe",
-    query_col: str = "q",
     n_probe: int = 2,
 ) -> DataFrame:
     """Serve-path ANN over a MATERIALIZED int8 index — the composition
@@ -1585,8 +1587,11 @@ def quantized_ivf_topk_served(
     lists only. vs :func:`ivf_topk_served` the probe reads ~8x fewer
     bytes (measured in BENCH_SCALE.md r10); ``sim`` is the QUANTIZED
     cosine (recall vs exact pinned by pytest). Empty centroid frame ->
-    empty result, matching the float twin's contract."""
-    q = query.select(F.col(query_col).cast("array<double>").alias("qv"))
+    empty result, matching the float twin's contract.
+
+    Fixed columns: id ``vec_id``, query vector ``q``, query vector
+    ``qe``."""
+    q = query.select(F.col("q").cast("array<double>").alias("qv"))
     probes = _probe_single(
         centroids.select("cid", F.col("c").cast("array<double>").alias("c")),
         q,
@@ -1595,7 +1600,7 @@ def quantized_ivf_topk_served(
     )
     if not probes:
         return quantized.where(F.lit(False)).select(
-            F.col(id_col), F.lit(None).cast("double").alias("sim")
+            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     # quantize the query with the CORPUS scales (one broadcast 1-row
     # frame carrying qq + its integer norm, computed once — the
@@ -1607,8 +1612,8 @@ def quantized_ivf_topk_served(
     )
     sim = F.round(
         F.try_divide(
-            _int_dot(qvec_col, "qq"),
-            F.sqrt(_int_dot(qvec_col, qvec_col)) * F.col("qnorm"),
+            _int_dot("qe", "qq"),
+            F.sqrt(_int_dot("qe", "qe")) * F.col("qnorm"),
         ),
         4,
     )
@@ -1617,9 +1622,9 @@ def quantized_ivf_topk_served(
         # (plan-asserted by pytest)
         quantized.where(F.col("cid").isin(probes))
         .crossJoin(F.broadcast(qq))
-        .select(F.col(id_col), sim.alias("sim"))
+        .select(F.col("vec_id"), sim.alias("sim"))
     )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
 
 
 def cosine_near_dup_pairs(
@@ -1693,8 +1698,6 @@ def semantic_decontaminate(
     n_planes: int = 8,
     n_bands: int = 7,
     dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Benchmark decontamination by EMBEDDING similarity — the
     semantic sibling of the n-gram :func:`..dedup.decontaminate`:
@@ -1732,7 +1735,9 @@ def semantic_decontaminate(
     UNHINTED: AQE broadcasts it when it is small (the normal case)
     and falls back to a shuffle anti-join when it is not. Candidate
     count is ``n_bands x |corpus| x (benchmark rows per band key)``,
-    never |corpus| x |benchmark|."""
+    never |corpus| x |benchmark|.
+
+    Fixed columns: id ``vec_id``, vector ``embedding``."""
     total = n_planes * n_bands
     if n_planes < 1 or n_bands < 1 or total > 60:
         raise ValueError(
@@ -1769,15 +1774,15 @@ def semantic_decontaminate(
 
     ce = banded(
         corpus.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-            _norm(F.col(vec_col).cast("array<double>")).alias("_n"),
+            F.col("vec_id"),
+            F.col("embedding").cast("array<double>").alias("_v"),
+            _norm(F.col("embedding").cast("array<double>")).alias("_n"),
         )
     )
     be = banded(
         benchmark.select(
-            F.col(vec_col).cast("array<double>").alias("_v"),
-            _norm(F.col(vec_col).cast("array<double>")).alias("_bn"),
+            F.col("embedding").cast("array<double>").alias("_v"),
+            _norm(F.col("embedding").cast("array<double>")).alias("_bn"),
         )
     ).withColumnRenamed("_v", "_bv")
     sim = pair_cosine_arrow(4)(
@@ -1786,10 +1791,10 @@ def semantic_decontaminate(
     hits = (
         ce.join(F.broadcast(be), ["_band", "_key"])
         .where(sim >= F.lit(threshold))
-        .select(id_col)
+        .select("vec_id")
         .distinct()
     )
-    return corpus.join(hits, id_col, "left_anti")
+    return corpus.join(hits, "vec_id", "left_anti")
 
 
 def semantic_dedup_pairs(
@@ -1932,8 +1937,6 @@ def semantic_dedup(
     threshold: float = 0.9,
     centroids: DataFrame | None = None,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     keep: str = "min_id",
 ) -> DataFrame:
     """End-to-end semantic dedup: keep ONE representative per connected
@@ -1958,7 +1961,9 @@ def semantic_dedup(
       nothing extra at scale: the sim is exposed from the SAME
       assignment pass that builds the pairs, and representative
       selection is one partially-aggregable ``min(struct(sim, id))``
-      per component."""
+      per component.
+
+    Fixed columns: id ``vec_id``, vector ``embedding``."""
     from dgraph_dbpedia_spark.operators.dedup import (
         dedup_clusters_star,
         dedup_corpus,
@@ -1973,25 +1978,25 @@ def semantic_dedup(
     # cache as soon as the representative set is pinned
     with CacheScope() as scope:
         sk, pairs = _semantic_sk_pairs(
-            scope, df, threshold, centroids, n_centroids, id_col, vec_col,
+            scope, df, threshold, centroids, n_centroids, "vec_id", "embedding",
             sim_col="_csim" if keep == "low_centroid_sim" else None,
         )
         if keep == "min_id":
-            return dedup_corpus(df, pairs.select("a", "b"), id_col=id_col)
+            return dedup_corpus(df, pairs.select("a", "b"), id_col="vec_id")
         clusters = dedup_clusters_star(
-            df.select(F.col(id_col)), pairs.select("a", "b"), id_col=id_col
+            df.select(F.col("vec_id")), pairs.select("a", "b"), id_col="vec_id"
         )
         # one id per component; localCheckpoint pins the selection
         # (bounded by #components — the same scale class as the star
         # contraction's own checkpoints) so the assignment cache can be
         # dropped before the result is consumed
         reps = scope.checkpoint(
-            clusters.join(sk.select(F.col(id_col), "_csim"), id_col)
+            clusters.join(sk.select(F.col("vec_id"), "_csim"), "vec_id")
             .groupBy("cluster_id")
-            .agg(F.min(F.struct(F.col("_csim"), F.col(id_col))).alias("_m"))
-            .select(F.col("_m")[id_col].alias(id_col))
+            .agg(F.min(F.struct(F.col("_csim"), F.col("vec_id"))).alias("_m"))
+            .select(F.col("_m")["vec_id"].alias("vec_id"))
         )
-        return df.join(scope.keep(reps), id_col, "left_semi")
+        return df.join(scope.keep(reps), "vec_id", "left_semi")
 
 
 def ann_join(
@@ -2095,8 +2100,6 @@ def hard_negatives(
     lo: float = 0.0,
     hi: float = 0.98,
     exclude_same: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
     dims: int = 64,
 ) -> DataFrame:
@@ -2121,15 +2124,17 @@ def hard_negatives(
     window over candidates only); the query side is broadcast (the
     usual regime: queries are a training batch, the corpus is the
     lake), so the bucket join itself is a broadcast and the only
-    shuffle is the final window."""
+    shuffle is the final window.
+
+    Fixed columns: id ``vec_id``, vector ``embedding``."""
     if not lo < hi:
         raise ValueError(f"need lo < hi, got lo={lo} hi={hi}")
     out = ann_join(
         queries,
         corpus,
         k=k,
-        id_col=id_col,
-        vec_col=vec_col,
+        id_col="vec_id",
+        vec_col="embedding",
         n_planes=n_planes,
         dims=dims,
         min_sim=lo,
@@ -2186,9 +2191,6 @@ def ivf_update_report(
     new: DataFrame,
     n_centroids: int = 8,
     split_factor: float = 2.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Index-maintenance audit for an IVF index absorbing a new vector
     batch WITHOUT retraining: assign the incoming vectors to the
@@ -2210,9 +2212,10 @@ def ivf_update_report(
     centroid set is a bounded X6 collect), two map-side-combinable count
     aggregations over cid (k-row outputs), and a k-row spine join —
     the corpus is scanned once per side, nothing corpus-sized
-    shuffles or collects. ``centroids=None`` seeds from ``existing``
-    (:func:`ivf_seed_centroids`'s lowest-id rule); pass the served
-    index's trained centroid frame in production."""
+    shuffles or collects. The centroids are seeded from ``existing``
+    (:func:`ivf_seed_centroids`'s lowest-id rule).
+
+    Fixed columns: id ``vec_id``, vector ``embedding``."""
     from fractions import Fraction
 
     if n_centroids < 1:
@@ -2222,17 +2225,13 @@ def ivf_update_report(
             f"split_factor must be > 0, got {split_factor}"
         )
     fr = Fraction(str(split_factor))
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_seed_centroids(
-            existing, n_centroids, id_col=id_col, vec_col=vec_col
-        )
+    cents = ivf_seed_centroids(
+        existing, n_centroids, id_col="vec_id", vec_col="embedding"
     )
 
     def _sizes(df: DataFrame, out: str) -> DataFrame:
         return (
-            ivf_assign(df, cents, id_col=id_col, vec_col=vec_col)
+            ivf_assign(df, cents, id_col="vec_id", vec_col="embedding")
             .groupBy("cid")
             .agg(F.count(F.lit(1)).alias(out))
         )
@@ -2276,13 +2275,7 @@ def ivf_update_report(
     )
 
 
-def embedding_drift(
-    df: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-    round_decimals: int = 4,
-    mean_decimals: int = 6,
-) -> DataFrame:
+def embedding_drift(df: DataFrame) -> DataFrame:
     """Embedding-space distribution-shift monitor — the vector sibling
     of the token-level ``corpus_divergence``: per group (a crawl
     snapshot, a source domain, a classifier label), the centroid of
@@ -2293,11 +2286,11 @@ def embedding_drift(
     ``(group, n, mean_norm, cos_to_global)`` — ``n`` the group's
     usable-vector count, ``mean_norm`` the centroid's L2 norm (a
     collapsing-embeddings alarm on its own: near-0 means the group's
-    directions cancel), ``cos_to_global`` the round-``round_decimals``
+    directions cancel), ``cos_to_global`` the round-4
     cosine between group and global centroids.
 
     Determinism (oracle-replayable): per-position means are rounded to
-    ``mean_decimals`` with the -0.0 fold (the Lloyd-means rule —
+    6 decimals with the -0.0 fold (the Lloyd-means rule —
     partition-order float drift cannot reach the compared digits), and
     the global centroid derives FROM the bounded per-group sums (one
     corpus pass; the re-aggregation is groups x dims rows). Cosines
@@ -2309,10 +2302,12 @@ def embedding_drift(
     global centroid is a broadcast 1-row crossJoin, X6). Rows with
     NULL/empty vectors count toward nothing; ragged widths contribute
     to the positions they have (mean per (group, pos) divides by that
-    position's own count)."""
+    position's own count).
+
+    Fixed columns: group ``label``, vector ``embedding``."""
     with CacheScope() as scope:
-        per, gm = _group_centroids(scope, df, group_col, vec_col, mean_decimals)
-        rnd = lambda col: F.round(col, mean_decimals) + F.lit(0.0)  # noqa: E731
+        per, gm = _group_centroids(scope, df, "label", "embedding", 6)
+        rnd = lambda col: F.round(col, 6) + F.lit(0.0)  # noqa: E731
         glob = (
             per.groupBy("pos")
             .agg((F.sum("s") / F.sum("c")).alias("m"))
@@ -2333,10 +2328,10 @@ def embedding_drift(
             gm.join(counts, "_g")
             .crossJoin(F.broadcast(glob))
             .select(
-                F.col("_g").alias(group_col),
+                F.col("_g").alias("label"),
                 "n",
-                F.round(_norm("_gm"), round_decimals).alias("mean_norm"),
-                F.round(cosine("_gm", "_glob"), round_decimals).alias(
+                F.round(_norm("_gm"), 4).alias("mean_norm"),
+                F.round(cosine("_gm", "_glob"), 4).alias(
                     "cos_to_global"
                 ),
             )
@@ -2350,11 +2345,10 @@ def jl_project(
     dims: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_decimals: int = 6,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection: map each ``dims``-wide
     vector to ``out_dims`` components ``round(sqrt(3 / out_dims) *
-    (v . p_i), round_decimals)`` against the deterministic pseudo-random
+    (v . p_i), 6)`` against the deterministic pseudo-random
     hyperplanes of :func:`plane_values` (the LSH family — same
     cross-engine md5 derivation, so oracles recompute the matrix
     bit-identically; no RNG state). The ``sqrt(3 / out_dims)`` scale
@@ -2377,7 +2371,7 @@ def jl_project(
     ``dims / out_dims``. The plane matrix rides the PLAN as a foldable
     literal (``out_dims * dims`` doubles — 1k doubles at 64->16; keep
     shapes modest or hoist to a broadcast join at e.g. 768->256).
-    Components round to ``round_decimals`` and fold -0.0 so both
+    Components round to 6 decimals and fold -0.0 so both
     engines serve bit-equal projections."""
     if out_dims < 1:
         raise ValueError(f"out_dims must be >= 1, got {out_dims}")
@@ -2399,7 +2393,7 @@ def jl_project(
                     F.lit(0.0),
                     lambda acc, x: acc + x,
                 ),
-                round_decimals,
+                6,
             )
             + F.lit(0.0)
             for j in range(out_dims)
@@ -2426,9 +2420,6 @@ def jl_topk(
     k: int = 10,
     out_dims: int = 16,
     dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "q",
 ) -> DataFrame:
     """Approximate cosine top-k in the :func:`jl_project` space: project
     corpus and query with the SAME deterministic plane matrix, then
@@ -2442,7 +2433,10 @@ def jl_topk(
     100 TB shape: the corpus-sized work is one narrow projection +
     the ``out_dims``-wide scoring scan — ``dims / out_dims`` fewer
     bytes through the top-k than brute :func:`cosine_topk`; the query
-    projects via the same broadcast literal."""
+    projects via the same broadcast literal.
+
+    Fixed columns: id ``vec_id``, query vector ``q``, vector
+    ``embedding``."""
     # bounded one-row probe, collected ONCE and reused (the mmr_rerank
     # pattern — ADVICE r12): a multi-row query frame would cross-join
     # every corpus row against EVERY query and the single ORDER BY/
@@ -2451,7 +2445,7 @@ def jl_topk(
     # returning an empty result. The probe is the ONE eager job this
     # composition runs — qproj below is built from the collected
     # vector, not a second scan of the query frame.
-    qrows = query.select(F.col(query_col).alias("__qv")).limit(2).collect()
+    qrows = query.select(F.col("q").alias("__qv")).limit(2).collect()
     if (
         len(qrows) != 1
         or qrows[0][0] is None
@@ -2470,7 +2464,7 @@ def jl_topk(
             f"jl_topk expects exactly one query vector, got {got} "
             "— one call per query"
         )
-    proj = jl_project(df, out_dims, dims, id_col=id_col, vec_col=vec_col)
+    proj = jl_project(df, out_dims, dims, id_col="vec_id", vec_col="embedding")
     qdf = df.sparkSession.createDataFrame(
         [(0, [float(x) for x in qrows[0][0]])],
         schema="__qid bigint, __qv array<double>",
@@ -2479,7 +2473,7 @@ def jl_topk(
         qdf, out_dims, dims, id_col="__qid", vec_col="__qv"
     ).select(F.col("e").alias("q"))
     return cosine_topk(
-        proj, qproj, k=k, id_col=id_col, vec_col="e", query_col="q"
+        proj, qproj, k=k, id_col="vec_id", vec_col="e", query_col="q"
     )
 
 
@@ -2490,9 +2484,6 @@ def jl_rerank_topk(
     shortlist_n: int = 100,
     out_dims: int = 16,
     dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_col: str = "q",
 ) -> DataFrame:
     """The two-stage contract :func:`jl_topk` deploys under (the
     :func:`..pq.pq_rerank_topk` shape): the JL-projected space
@@ -2507,7 +2498,10 @@ def jl_rerank_topk(
     ``out_dims``-wide scan; stage 2 broadcast-semi-joins the bounded
     shortlist back into the float table (the `_exact_rerank`
     discipline — no corpus-sized shuffle, the semi-join prunes the
-    float scan to shortlist rows)."""
+    float scan to shortlist rows).
+
+    Fixed columns: id ``vec_id``, query vector ``q``, vector
+    ``embedding``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if shortlist_n < k:
@@ -2520,33 +2514,23 @@ def jl_rerank_topk(
         k=shortlist_n,
         out_dims=out_dims,
         dims=dims,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_col=query_col,
     )
     cand = df.join(
-        F.broadcast(shortlist.select(id_col)), id_col, "left_semi"
+        F.broadcast(shortlist.select("vec_id")), "vec_id", "left_semi"
     )
     return cosine_topk(
-        cand, query, k=k, id_col=id_col, vec_col=vec_col,
-        query_col=query_col,
+        cand, query, k=k, id_col="vec_id", vec_col="embedding",
+        query_col="q",
     )
 
 
-def embedding_outliers(
-    df: DataFrame,
-    group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_decimals: int = 4,
-    mean_decimals: int = 6,
-) -> DataFrame:
+def embedding_outliers(df: DataFrame) -> DataFrame:
     """Per-ROW outlier scoring against the row's own group centroid —
     the row-level companion of :func:`embedding_drift` (SemDeDup /
     SSL-prototype data-cleaning staple: a document whose embedding
     sits far from its cluster/source/label centroid is mislabelled,
     off-topic, or embedding-model garbage). Returns ``(id, group,
-    sim_to_centroid)`` with the round-``round_decimals`` cosine
+    sim_to_centroid)`` with the round-4 cosine
     between the row's vector and its group's centroid; LOW sims are
     the outliers. Consumers threshold or window-rank per group — the
     operator itself adds no corpus-wide sort. EVERY input row comes
@@ -2558,7 +2542,7 @@ def embedding_outliers(
     silently vanishing from the report (r12 review).
 
     Determinism (oracle-replayable): centroids are per-position means
-    rounded to ``mean_decimals`` with the -0.0 fold (the
+    rounded to 6 decimals with the -0.0 fold (the
     :func:`embedding_drift` / Lloyd rule); the per-row cosine is the
     package's sequential fold over the ROUNDED centroid.
 
@@ -2566,20 +2550,22 @@ def embedding_outliers(
     partial-aggregable (group, pos) shuffle bounded by groups x dims
     rows per map partition; the bounded groups x dims centroid frame
     broadcast-joins back, so scoring is a second NARROW corpus pass —
-    no corpus-sized shuffle anywhere."""
+    no corpus-sized shuffle anywhere.
+
+    Fixed columns: group ``label``, id ``vec_id``, vector ``embedding``."""
     with CacheScope() as scope:
-        per, gm = _group_centroids(scope, df, group_col, vec_col, mean_decimals)
+        per, gm = _group_centroids(scope, df, "label", "embedding", 6)
         out = (
             df.select(
-                F.col(id_col),
-                F.col(group_col).alias("_g"),
-                F.col(vec_col).cast("array<double>").alias("_v"),
+                F.col("vec_id"),
+                F.col("label").alias("_g"),
+                F.col("embedding").cast("array<double>").alias("_v"),
             )
             .join(F.broadcast(gm), "_g", "left")
             .select(
-                F.col(id_col),
-                F.col("_g").alias(group_col),
-                F.round(cosine("_v", "_gm"), round_decimals).alias(
+                F.col("vec_id"),
+                F.col("_g").alias("label"),
+                F.round(cosine("_v", "_gm"), 4).alias(
                     "sim_to_centroid"
                 ),
             )
@@ -2786,12 +2772,8 @@ def _knn_block_majority(
 def knn_label_noise_report(
     df: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     candidate_pairs: DataFrame | None = None,
     block_assign: DataFrame | None = None,
-    round_decimals: int = 6,
 ) -> DataFrame:
     """Per-label k-NN label-noise audit (the confident-learning /
     cleanlab screen, Northcutt et al. 2021): each labeled vector's
@@ -2802,7 +2784,7 @@ def knn_label_noise_report(
     with ``noise_rate = round(n_suspect / n, 4)``.
 
     Determinism (oracle-replayable): neighbor rank is the package's
-    standard (round-``round_decimals`` cosine DESC, neighbor id ASC);
+    standard (round-6 cosine DESC, neighbor id ASC);
     the vote is (count DESC, label ASC) — ties always resolve to the
     lowest label. NULL-labeled rows are excluded from BOTH sides
     (they can neither be audited nor vote).
@@ -2822,7 +2804,7 @@ def knn_label_noise_report(
     (one einsum per Arrow batch — the interpreted per-pair fold
     measured 117 s on the 4M exact pairs at the 2k-vector bench
     point, the package's slow-path class):
-    ``round(try_divide(dot, na * nb), round_decimals)`` with norms
+    ``round(try_divide(dot, na * nb), 6)`` with norms
     precomputed per side.
 
     ``block_assign`` (an ``(id, cid)`` frame, mutually exclusive with
@@ -2831,7 +2813,9 @@ def knn_label_noise_report(
     but executed as one :func:`_knn_block_majority` kernel per block
     — vectors cross Arrow once per block instead of twice per pair
     (50k/256-centroid point: 324 s pair lane -> see BENCH_SCALE r14
-    for the block lane), identical results (pinned)."""
+    for the block lane), identical results (pinned).
+
+    Fixed columns: id ``vec_id``, label ``label``, vector ``embedding``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if candidate_pairs is not None and block_assign is not None:
@@ -2839,27 +2823,27 @@ def knn_label_noise_report(
             "candidate_pairs and block_assign are mutually exclusive "
             "candidate structures"
         )
-    lab = df.where(F.col(label_col).isNotNull())
+    lab = df.where(F.col("label").isNotNull())
     if block_assign is not None:
         maj = _knn_block_majority(
-            lab, block_assign, k, id_col, vec_col, label_col,
-            round_decimals,
+            lab, block_assign, k, "vec_id", "embedding", "label",
+            6,
         )
     else:
         a = lab.select(
-            F.col(id_col).alias("_qid"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
-            F.col(label_col).alias("_qlab"),
+            F.col("vec_id").alias("_qid"),
+            F.col("embedding").cast("array<double>").alias("_qv"),
+            F.col("label").alias("_qlab"),
         ).withColumn("_qn", _norm(F.col("_qv")))
         b = lab.select(
-            F.col(id_col).alias("_nid"),
-            F.col(vec_col).cast("array<double>").alias("_nv"),
-            F.col(label_col).alias("_nlab"),
+            F.col("vec_id").alias("_nid"),
+            F.col("embedding").cast("array<double>").alias("_nv"),
+            F.col("label").alias("_nlab"),
         ).withColumn("_nn", _norm(F.col("_nv")))
         maj = _knn_majority(
-            a, b, k, candidate_pairs, round_decimals, carry=["_qlab"],
+            a, b, k, candidate_pairs, 6, carry=["_qlab"],
         )
-    return maj.groupBy(F.col("_qlab").alias(label_col)).agg(
+    return maj.groupBy(F.col("_qlab").alias("label")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(
             F.when(F.col("_nlab") != F.col("_qlab"), 1).otherwise(0)
@@ -2867,7 +2851,7 @@ def knn_label_noise_report(
         .cast("long")
         .alias("n_suspect"),
     ).select(
-        label_col,
+        "label",
         "n",
         "n_suspect",
         F.round(F.col("n_suspect") / F.col("n"), 4).alias("noise_rate"),
@@ -2878,11 +2862,7 @@ def knn_classify(
     unlabeled: DataFrame,
     labeled: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     candidate_pairs: DataFrame | None = None,
-    round_decimals: int = 6,
 ) -> DataFrame:
     """Semi-supervised k-NN labeling: each unlabeled vector takes the
     majority label of its ``k`` nearest LABELED neighbors — the
@@ -2904,23 +2884,25 @@ def knn_classify(
     small-gold-set x corpus case where ONE side is bounded is its
     sweet spot: Catalyst broadcasts the small side); at corpus x
     corpus scale pass ``candidate_pairs`` from a blocked source and
-    the vote runs over n^2 / n_lists work."""
+    the vote runs over n^2 / n_lists work.
+
+    Fixed columns: id ``vec_id``, label ``label``, vector ``embedding``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     a = unlabeled.select(
-        F.col(id_col).alias("_qid"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+        F.col("vec_id").alias("_qid"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
     ).withColumn("_qn", _norm(F.col("_qv")))
-    b = labeled.where(F.col(label_col).isNotNull()).select(
-        F.col(id_col).alias("_nid"),
-        F.col(vec_col).cast("array<double>").alias("_nv"),
-        F.col(label_col).alias("_nlab"),
+    b = labeled.where(F.col("label").isNotNull()).select(
+        F.col("vec_id").alias("_nid"),
+        F.col("embedding").cast("array<double>").alias("_nv"),
+        F.col("label").alias("_nlab"),
     ).withColumn("_nn", _norm(F.col("_nv")))
     maj = _knn_majority(
-        a, b, k, candidate_pairs, round_decimals, carry=[]
+        a, b, k, candidate_pairs, 6, carry=[]
     )
     return maj.select(
-        F.col("_qid").alias(id_col),
+        F.col("_qid").alias("vec_id"),
         F.col("_nlab").alias("predicted_label"),
         F.col("_c").cast("long").alias("n_votes"),
         F.round(F.col("_c") / F.col("_tot"), 4).alias("vote_frac"),

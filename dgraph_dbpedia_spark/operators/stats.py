@@ -66,19 +66,21 @@ def counts_per_group(df: DataFrame, group_col: str, count_name: str) -> DataFram
     return df.groupBy(group_col).agg(F.count(F.lit(1)).alias(count_name))
 
 
-def stats_table_pivot(frames: dict[str, DataFrame], group_col: str = "lang") -> DataFrame:
+def stats_table_pivot(frames: dict[str, DataFrame]) -> DataFrame:
     """Per-group x per-dataset row counts, missing cells 0: the table
-    the reference builds by folding full-outer joins on ``group_col``
+    the reference builds by folding full-outer joins on ``lang``
     over one count frame per dataset (J4), computed as tag + union +
     pivot — one shuffle however many datasets there are. A NULL group
-    is one row, counted across every dataset."""
+    is one row, counted across every dataset.
+
+    Fixed columns: group ``lang``."""
     tagged = [
-        df.select(F.col(group_col), F.lit(name).alias("__dataset"))
+        df.select(F.col("lang"), F.lit(name).alias("__dataset"))
         for name, df in frames.items()
     ]
     unioned = reduce(DataFrame.unionByName, tagged)
     return (
-        unioned.groupBy(group_col)
+        unioned.groupBy("lang")
         .pivot("__dataset", list(frames.keys()))
         .agg(F.count(F.lit(1)))
         .na.fill(0)
@@ -118,9 +120,7 @@ def rollup_group(df: DataFrame, group_col: str, pred, label: str) -> DataFrame:
     return base.unionByName(rolled)
 
 
-def per_lang_stats_tables(
-    frames: dict[str, DataFrame], group_col: str = "lang"
-) -> tuple[DataFrame, DataFrame]:
+def per_lang_stats_tables(frames: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     """The reference flagship's per-language x per-dataset count tables
     (DbpediaDgraphSparkApp.scala:155-179): the per-dataset counts as
     ONE tag + union + pivot (:func:`stats_table_pivot`, equal to the
@@ -133,26 +133,28 @@ def per_lang_stats_tables(
 
     Both inputs to the union come from one cached pivot, so the fact
     frames are scanned once per dataset regardless of how many tables
-    are printed."""
+    are printed.
+
+    Fixed columns: group ``lang``."""
     with CacheScope() as scope:
-        tbl = scope.persist(stats_table_pivot(frames, group_col))
-        num_cols = [c for c in tbl.columns if c != group_col]
-        en_star = tbl.where(F.col(group_col).startswith("en-"))
+        tbl = scope.persist(stats_table_pivot(frames))
+        num_cols = [c for c in tbl.columns if c != "lang"]
+        en_star = tbl.where(F.col("lang").startswith("en-"))
         rolled = (
-            en_star.withColumn(group_col, F.lit("en-*"))
-            .groupBy(group_col)
+            en_star.withColumn("lang", F.lit("en-*"))
+            .groupBy("lang")
             .agg(*[F.sum(c).alias(c) for c in num_cols])
         )
         main = (
-            tbl.where(~F.col(group_col).startswith("en-"))
+            tbl.where(~F.col("lang").startswith("en-"))
             .unionByName(rolled)
-            .orderBy(group_col)
+            .orderBy("lang")
         )
         # both outputs carry the pivot's cache handle so a caller can free
         # it (cachectl.release)
         return (
             scope.hand(main, tbl),
-            scope.hand(en_star.orderBy(group_col), tbl),
+            scope.hand(en_star.orderBy("lang"), tbl),
         )
 
 

@@ -114,8 +114,6 @@ def range_count_join(
     keys: list[str],
     ts_col: str,
     radius: int,
-    probe_id: str = "event_id",
-    count_col: str = "n_in_range",
 ) -> DataFrame:
     """Per probe row: how many ``events`` rows share ``keys`` and lie
     within ``|event.ts - probe.ts| <= radius``. Zero-match probes are
@@ -134,7 +132,8 @@ def range_count_join(
     ``radius`` must be >= 1: radius=0 would make the bucket expression
     a silent NULL (div by zero) and every count 0; simultaneous-event
     counting is a plain equi-join on ``(keys, ts)``, not a range join.
-    """
+
+    Fixed columns: count ``n_in_range``."""
     if radius < 1:
         raise ValueError(
             "radius must be >= 1 (for exact-ts matches use an equi-join "
@@ -142,7 +141,7 @@ def range_count_join(
         )
     bucket = F.expr(f"{ts_col} div {radius}L")
     p = probe.select(
-        F.col(probe_id),
+        F.col("event_id"),
         *[F.col(k) for k in keys],
         F.col(ts_col).alias("__pts"),
         F.explode(
@@ -161,17 +160,14 @@ def range_count_join(
         F.abs(F.col("__ets") - F.col("__pts")) <= F.lit(radius)
     )
     joined = p.join(e, cond, "left")
-    return joined.groupBy(probe_id).agg(
-        F.count("__ets").alias(count_col)
+    return joined.groupBy("event_id").agg(
+        F.count("__ets").alias("n_in_range")
     )
 
 
 def resample_events(
     events: DataFrame,
     interval_sec: int = 3600,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
     fill: str = "zero",
 ) -> DataFrame:
     """Per-key fixed-interval resampling WITH gap fill — the hypertable
@@ -179,7 +175,7 @@ def resample_events(
     aggregate per ``(key, bucket)``, then EMIT EVERY bucket between each
     key's first and last event so downstream consumers (charting,
     anomaly detection, training on regular series) never interpolate
-    over silently-missing rows. Returns ``(user_col, bucket_start,
+    over silently-missing rows. Returns ``(user_id, bucket_start,
     n_events, sum_value)`` with ``bucket_start`` in epoch seconds;
     empty buckets get ``n_events = 0`` and a ``sum_value`` of 0.0
     (``fill='zero'``), the previous bucket's value carried forward
@@ -193,7 +189,9 @@ def resample_events(
     running ``last(ignorenulls)`` window per key, ordered by bucket —
     the asof_join fill-forward trick on the key's own timeline. Bucket
     arithmetic is integer ``div`` on epoch seconds (module-header
-    precision rule)."""
+    precision rule).
+
+    Fixed columns: time ``ts``, user ``user_id``, value ``value``."""
     from dgraph_dbpedia_spark.streaming.events import epoch_seconds
 
     if interval_sec < 1:
@@ -203,34 +201,34 @@ def resample_events(
         raise ValueError(f"fill must be one of {fills}, got {fill!r}")
     agg = (
         events.select(
-            F.col(user_col),
-            epoch_seconds(events, ts_col).alias("__es"),
-            F.col(value_col).alias("__v"),
+            F.col("user_id"),
+            epoch_seconds(events).alias("__es"),
+            F.col("value").alias("__v"),
         )
         .select(
-            F.col(user_col),
+            F.col("user_id"),
             F.expr(f"__es div {interval_sec}").alias("__b"),
             F.col("__v"),
         )
-        .groupBy(user_col, "__b")
+        .groupBy("user_id", "__b")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("__v"), 4).alias("__s"),
         )
     )
     spine = (
-        agg.groupBy(user_col)
+        agg.groupBy("user_id")
         .agg(F.min("__b").alias("__mn"), F.max("__b").alias("__mx"))
         .select(
-            F.col(user_col),
+            F.col("user_id"),
             F.explode(F.sequence(F.col("__mn"), F.col("__mx"))).alias("__b"),
         )
     )
-    out = spine.join(agg, [user_col, "__b"], "left")
+    out = spine.join(agg, ["user_id", "__b"], "left")
     filled = F.coalesce(F.col("__s"), F.lit(0.0))
     if fill == "forward":
         w = (
-            Window.partitionBy(user_col)
+            Window.partitionBy("user_id")
             .orderBy("__b")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
@@ -238,20 +236,14 @@ def resample_events(
     elif fill == "none":
         filled = F.col("__s")
     return out.select(
-        F.col(user_col),
+        F.col("user_id"),
         (F.col("__b") * interval_sec).alias("bucket_start"),
         F.coalesce(F.col("n_events"), F.lit(0)).alias("n_events"),
         filled.alias("sum_value"),
     )
 
 
-def funnel_counts(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel_counts(events: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered funnel analysis: how many users performed step 1, then
     step 2 STRICTLY AFTER their first step 1, then step 3 strictly
     after that, ... Returns one row per step: ``(step, step_name,
@@ -269,17 +261,19 @@ def funnel_counts(
     user). Each anchor frame except the LAST feeds the next
     round AND its own count, so the first k-1 are persisted (the last
     has one consumer) — release via cachectl after materializing.
-    The step counts union k single-row aggregates (tiny)."""
+    The step counts union k single-row aggregates (tiny).
+
+    Fixed columns: time ``ts``, type ``event_type``, user ``user_id``."""
     from dgraph_dbpedia_spark.streaming.events import epoch_seconds
 
     if not steps:
         raise ValueError("steps must be non-empty")
     e = events.select(
-        F.col(user_col),
-        F.col(type_col).alias("__t"),
+        F.col("user_id"),
+        F.col("event_type").alias("__t"),
         F.struct(
-            epoch_seconds(events, ts_col).alias("es"),
-            F.col(type_col).alias("t"),
+            epoch_seconds(events).alias("es"),
+            F.col("event_type").alias("t"),
         ).alias("__k"),
     )
     with CacheScope() as scope:
@@ -289,8 +283,8 @@ def funnel_counts(
         for i, s in enumerate(steps, start=1):
             f = e.where(F.col("__t") == s)
             if prev is not None:
-                f = f.join(prev, user_col).where(F.col("__k") > F.col("__pk"))
-            anchor = f.groupBy(user_col).agg(F.min("__k").alias("__pk"))
+                f = f.join(prev, "user_id").where(F.col("__k") > F.col("__pk"))
+            anchor = f.groupBy("user_id").agg(F.min("__k").alias("__pk"))
             if i < len(steps):
                 # the last step's anchor feeds ONLY its own count — the
                 # conditional-persist rule (persist = >1 consumer)
@@ -309,12 +303,7 @@ def funnel_counts(
         return scope.hand(out, *handles)
 
 
-def retention_cohorts(
-    events: DataFrame,
-    interval_sec: int = 604800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def retention_cohorts(events: DataFrame, interval_sec: int = 604800) -> DataFrame:
     """Cohort retention analysis: users are grouped by the bucket of
     their FIRST activity (the cohort), and for each ``(cohort,
     offset)`` the fraction of that cohort active ``offset`` buckets
@@ -332,24 +321,26 @@ def retention_cohorts(
     counts rows of an already-distinct frame (so count(*) IS
     count-distinct-users, no expensive distinct aggregate); cohort
     sizes re-join on the cohort key (matrix-sized, tiny). Bucket math
-    is integer ``div`` (module-header precision rule)."""
+    is integer ``div`` (module-header precision rule).
+
+    Fixed columns: time ``ts``, user ``user_id``."""
     from dgraph_dbpedia_spark.streaming.events import epoch_seconds
 
     if interval_sec < 1:
         raise ValueError(f"interval_sec must be >= 1, got {interval_sec}")
     acts = (
         events.select(
-            F.col(user_col),
-            epoch_seconds(events, ts_col).alias("__es"),
+            F.col("user_id"),
+            epoch_seconds(events).alias("__es"),
         )
         .select(
-            F.col(user_col), F.expr(f"__es div {interval_sec}").alias("__b")
+            F.col("user_id"), F.expr(f"__es div {interval_sec}").alias("__b")
         )
         .distinct()
     )
-    first = acts.groupBy(user_col).agg(F.min("__b").alias("__c"))
+    first = acts.groupBy("user_id").agg(F.min("__b").alias("__c"))
     matrix = (
-        acts.join(first, user_col)
+        acts.join(first, "user_id")
         .groupBy(
             F.col("__c"), (F.col("__b") - F.col("__c")).alias("offset")
         )

@@ -45,23 +45,20 @@ _ENTITIES = [
 ]
 
 
-def clean_text(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def clean_text(df: DataFrame) -> DataFrame:
     """Boilerplate strip: drop HTML-ish tags, collapse whitespace runs
     to single spaces, trim. Returns ``(id, clean)``.
 
     Pure projection — the 100 TB plan is scan → regexp project, fully
     whole-stage-codegen, no exchange.
-    """
-    c = F.regexp_replace(F.col(text_col), HTML_TAG_RE, " ")
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    c = F.regexp_replace(F.col("text"), HTML_TAG_RE, " ")
     c = F.trim(F.regexp_replace(c, WS_CLASS + "+", " "))
-    return df.select(F.col(id_col), c.alias("clean"))
+    return df.select(F.col("doc_id"), c.alias("clean"))
 
 
-def strip_markup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def strip_markup(df: DataFrame) -> DataFrame:
     """Full markup strip — the HTML-to-text step of a scrape-ingest
     pipeline, one level up from :func:`clean_text`: removes
     ``<script>``/``<style>`` blocks WITH their contents (tag-only
@@ -78,24 +75,20 @@ def strip_markup(
     identical chain, and the plan stays a pure narrow projection —
     scan-speed at 100 TB, no Python, no shuffle. A fidelity-critical
     extraction (tables, boilerplate segmentation) belongs in a real
-    extractor upstream; this is the fast curation-grade path."""
-    c = F.regexp_replace(F.col(text_col), SCRIPT_RE, " ")
+    extractor upstream; this is the fast curation-grade path.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    c = F.regexp_replace(F.col("text"), SCRIPT_RE, " ")
     c = F.regexp_replace(c, STYLE_RE, " ")
     c = F.regexp_replace(c, COMMENT_RE, " ")
     c = F.regexp_replace(c, HTML_TAG_RE, " ")
     for ent, rep in _ENTITIES:
         c = F.replace(c, F.lit(ent), F.lit(rep))
     c = F.trim(F.regexp_replace(c, WS_CLASS + "+", " "))
-    return df.select(F.col(id_col), c.alias(text_col))
+    return df.select(F.col("doc_id"), c.alias("text"))
 
 
-def dedup_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n",
-    sep_regex: str | None = None,
-) -> DataFrame:
+def dedup_lines(df: DataFrame) -> DataFrame:
     """IN-DOCUMENT line dedup (the RefinedWeb/Gopher repetition rule at
     line granularity): within each document, every repeated non-blank
     line keeps only its FIRST occurrence, in original order; blank /
@@ -110,17 +103,18 @@ def dedup_lines(
 
     first-occurrence test is ``array_position`` per element — O(lines²)
     per document, fine for any realistic document and still narrow;
-    ``sep_regex`` overrides the split pattern exactly like
-    paragraph_dedup (``sep`` is regex-escaped otherwise). The split
+    lines split on a newline. The split
     binds as an ATTRIBUTE in its own select before the lambda
     references it — inlined, the full-text split would re-evaluate per
     line (the CollapseProject duplicate-eval trap). "Blank" =
     whitespace-only under the regex ``^\\s*$`` (``trim`` strips only
     ASCII spaces — a tab-indented separator line is still document
-    structure)."""
+    structure).
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     import re as _re
 
-    pattern = sep_regex if sep_regex is not None else _re.escape(sep)
+    pattern = _re.escape("\n")
     lines = F.col("_lines")
     kept = F.filter(
         lines,
@@ -129,27 +123,26 @@ def dedup_lines(
     )
     return (
         df.select(
-            F.col(id_col),
-            F.split(F.col(text_col), pattern).alias("_lines"),
+            F.col("doc_id"),
+            F.split(F.col("text"), pattern).alias("_lines"),
         )
-        .select(F.col(id_col), F.array_join(kept, sep).alias(text_col))
+        .select(F.col("doc_id"), F.array_join(kept, "\n").alias("text"))
     )
 
 
-def pii_redact(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Redact emails / IPv4 addresses / international phone numbers with
     typed placeholder tokens. Returns ``(id, redacted, n_emails,
     n_ipv4)`` — the counts make the redaction auditable (how much PII a
     shard carried) without retaining the values.
-    """
-    text = F.col(text_col)
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    text = F.col("text")
     after_email = F.regexp_replace(text, EMAIL_RE, "<EMAIL>")
     redacted = F.regexp_replace(after_email, IPV4_RE, "<IP>")
     redacted = F.regexp_replace(redacted, PHONE_RE, "<PHONE>")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         redacted.alias("redacted"),
         F.size(F.regexp_extract_all(text, F.lit(EMAIL_RE), 0)).alias("n_emails"),
         # count on the EMAIL-redacted text, matching the sequential
@@ -173,9 +166,7 @@ def _token_ngrams(toks: Column, n: int) -> Column:
     )
 
 
-def repetition_score(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def repetition_score(df: DataFrame) -> DataFrame:
     """Within-document repetition features: type-token ratio and the
     fraction of duplicated token n-grams. Returns
     ``(id, n_tokens, ttr, dup_ngram_ratio)``.
@@ -183,15 +174,16 @@ def repetition_score(
     High dup_ngram_ratio = boilerplate / TOC / generated spam — the
     standard Gopher/RefinedWeb-style repetition filter signals. Pure
     per-row array math; no shuffle at any scale.
-    """
-    df = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    df = df.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
     toks = F.col("__toks")
     # alias the n-gram array in its own projection: referenced three
     # times below, and as an inline expression each reference would
     # re-build the array per row (CollapseProject only inlines CHEAP
     # multi-referenced aliases, so the named column is evaluated once
     # — measured 1.06 -> 0.57 s at sf0.1, identical output)
-    df = df.select(F.col(id_col), toks, _token_ngrams(toks, n).alias("__grams"))
+    df = df.select(F.col("doc_id"), toks, _token_ngrams(toks, 3).alias("__grams"))
     grams = F.col("__grams")
     n_grams = F.size(grams)
     dup_ratio = F.when(
@@ -199,7 +191,7 @@ def repetition_score(
         F.round(1.0 - F.size(F.array_distinct(grams)) / n_grams, 6),
     ).otherwise(F.lit(0.0))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("n_tokens"),
         F.round(
             F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1)), 6
@@ -208,22 +200,16 @@ def repetition_score(
     )
 
 
-def hash_sample(
-    df: DataFrame,
-    rate_num: int = 32,
-    rate_den: int = 256,
-    key_col: str = "doc_id",
-) -> DataFrame:
+def hash_sample(df: DataFrame, rate_num: int = 32) -> DataFrame:
     """Deterministic, engine-independent sampling: keep rows whose
-    ``md5(key)`` first byte falls under ``rate_num/rate_den`` (den must
-    be 256). Unlike ``df.sample()`` the selection is a pure function of
+    ``md5(key)`` first byte falls under ``rate_num/256`` (one md5
+    byte). Unlike ``df.sample()`` the selection is a pure function of
     the key — stable across runs, engines, partitionings, and cluster
     sizes, which is what makes train/eval splits reproducible at 100 TB.
 
     Filter-only plan: no shuffle, pushes to the scan's data filters.
-    """
-    if rate_den != 256:
-        raise ValueError("rate_den must be 256 (one md5 byte)")
+
+    Fixed columns: key ``doc_id``."""
     if not 0 <= rate_num <= 256:
         # out of range silently mis-samples: 256 formats as the 3-char
         # '100', which the 2-char hex comparison treats as ~6%, and a
@@ -232,16 +218,11 @@ def hash_sample(
     if rate_num == 256:
         return df
     threshold = f"{rate_num:02x}"
-    byte_hex = F.substring(F.md5(F.col(key_col).cast("string")), 1, 2)
+    byte_hex = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     return df.where(byte_hex < F.lit(threshold))
 
 
-def compression_ratio(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    level: int = 6,
-) -> DataFrame:
+def compression_ratio(df: DataFrame, level: int = 6) -> DataFrame:
     """zlib (DEFLATE) compression ratio per document — the classic
     redundancy signal of web-corpus curation: templated/boilerplate
     text compresses far below natural prose, and high-entropy noise
@@ -260,7 +241,9 @@ def compression_ratio(
     host-computed VALUES table (__spark_entry__._sql_compression_ratio
     — change this operator's output columns, rounding, or level
     default and that generator must change in lockstep); the pytest
-    pins planted orderings and determinism."""
+    pins planted orderings and determinism.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if not 1 <= int(level) <= 9:
         raise ValueError(f"level must be in [1, 9], got {level}")
     from pyspark.sql.functions import pandas_udf
@@ -282,18 +265,13 @@ def compression_ratio(
         return s.map(one)
 
     return df.select(
-        F.col(id_col),
-        F.octet_length(F.col(text_col)).alias("n_bytes"),
-        _ratio(F.col(text_col)).alias("ratio"),
+        F.col("doc_id"),
+        F.octet_length(F.col("text")).alias("n_bytes"),
+        _ratio(F.col("text")).alias("ratio"),
     )
 
 
-def normalize_text(
-    df: DataFrame,
-    form: str = "NFC",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def normalize_text(df: DataFrame, form: str = "NFC") -> DataFrame:
     """Unicode normalization (NFC / NFKC / NFD / NFKD) — the standard
     first pass of multilingual corpus curation: composed vs decomposed
     accents ("café" in two byte sequences) must hash, dedup, and
@@ -311,7 +289,9 @@ def normalize_text(
     ``nfc_normalize`` (bit-equal on the shared corpus — a genuine
     cross-engine check of a non-SQL kernel); NFKC/NFD/NFKD have no
     DuckDB twin and are pinned by pytest against host-side
-    ``unicodedata.normalize``."""
+    ``unicodedata.normalize``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     forms = ("NFC", "NFKC", "NFD", "NFKD")
     if form not in forms:
         raise ValueError(f"form must be one of {forms}, got {form!r}")
@@ -327,14 +307,11 @@ def normalize_text(
             lambda t: None if t is None else unicodedata.normalize(f, t)
         )
 
-    return df.select(F.col(id_col), _norm(F.col(text_col)).alias(text_col))
+    return df.select(F.col("doc_id"), _norm(F.col("text")).alias("text"))
 
 
 def trim_length_outliers(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     lo: float = 0.01,
     hi: float = 0.99,
 ) -> DataFrame:
@@ -359,12 +336,14 @@ def trim_length_outliers(
     colliding with the reserved dunder names (the shared machinery's
     guard covers the join columns used here too).
 
-    100 TB shape: one shuffle on ``group_col`` for the rank window
+    100 TB shape: one shuffle on ``source`` for the rank window
     over (count, id), a per-group 1-row bounds aggregate, and a
     broadcast join of those bounds back onto a second tokenizing scan
     of the corpus — two cheap projection scans rather than a
     corpus-sized id self-join; the heavy frame never shuffles by
-    id."""
+    id.
+
+    Fixed columns: group ``source``, id ``doc_id``, text ``text``."""
     if not 0.0 < lo <= hi <= 1.0:
         raise ValueError(
             f"need 0 < lo <= hi <= 1, got lo={lo} hi={hi}"
@@ -381,7 +360,7 @@ def trim_length_outliers(
             f"input columns collide with reserved rank-machinery "
             f"names: {sorted(clash)}"
         )
-    ranked = ranked_token_counts(df, group_col, text_col, id_col)
+    ranked = ranked_token_counts(df, "source", "text", "doc_id")
     bounds = ranked.groupBy("__g").agg(
         F.max(
             F.when(F.col("__rn") == nearest_rank_expr(lo), F.col("__nt"))
@@ -391,10 +370,10 @@ def trim_length_outliers(
         ).alias("__hi_nt"),
     )
     return (
-        df.withColumn("__nt", F.size(tokens(F.col(text_col))))
+        df.withColumn("__nt", F.size(tokens(F.col("text"))))
         .join(
             F.broadcast(bounds),
-            F.col(group_col) == F.col("__g"),
+            F.col("source") == F.col("__g"),
             "inner",
         )
         .where(

@@ -33,15 +33,15 @@ STOPWORDS = {
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r\f\x0B]+"
 
 
-def language_id(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Best-guess language by stopword-hit count; deterministic
     tie-break = lexicographic language code. Returns
-    ``(id, lang_guess, hits)``."""
+    ``(id, lang_guess, hits)``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     # materialize tokens once; repeated references to the raw tokenize
     # expression would re-run the split per stopword list
-    df = df.select(F.col(id_col), tokens(F.lower(F.col(text_col))).alias("__toks"))
+    df = df.select(F.col("doc_id"), tokens(F.lower(F.col("text"))).alias("__toks"))
     toks = F.col("__toks")
     scores = [
         (lang, F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))))
@@ -57,20 +57,20 @@ def language_id(
     # doc — CJK, mojibake, id dumps — with the first profile)
     guess = F.when(best_hits > 0, guess)
     return df.select(
-        F.col(id_col), guess.alias("lang_guess"), best_hits.alias("hits")
+        F.col("doc_id"), guess.alias("lang_guess"), best_hits.alias("hits")
     )
 
 
-def quality_score(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality features + a [0,1] composite. Returns
     ``(id, n_chars, n_tokens, mean_token_len, punct_ratio,
-    stopword_ratio, score)``."""
+    stopword_ratio, score)``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     df = df.select(
-        F.col(id_col), F.col(text_col), tokens(F.col(text_col)).alias("__toks")
+        F.col("doc_id"), F.col("text"), tokens(F.col("text")).alias("__toks")
     )
-    text = F.col(text_col)
+    text = F.col("text")
     toks = F.col("__toks")
     n_chars = F.length(text)
     n_tokens = F.size(toks)
@@ -95,7 +95,7 @@ def quality_score(
         4,
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
         mean_tok.alias("mean_token_len"),
@@ -105,29 +105,21 @@ def quality_score(
     )
 
 
-def token_counts(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace and BPE-ish token counts. Returns
-    ``(id, n_ws_tokens, n_bpe_tokens)``."""
+    ``(id, n_ws_tokens, n_bpe_tokens)``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     return df.select(
-        F.col(id_col),
-        F.size(tokens(F.col(text_col))).alias("n_ws_tokens"),
+        F.col("doc_id"),
+        F.size(tokens(F.col("text"))).alias("n_ws_tokens"),
         F.size(
-            F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0)
+            F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH_PATTERN), 0)
         ).alias("n_bpe_tokens"),
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     """BM25 relevance top-k over a document table (Lucene-style
     ``ln(1 + (N - df + 0.5)/(df + 0.5))`` idf) — the keyword-relevance
     scorer a corpus-curation pipeline uses to mine topical subsets.
@@ -143,11 +135,12 @@ def bm25_topk(
     global sort. Cost = two pruned (id, text) passes — one for the
     corpus stats, one for scoring; a production deployment precomputes
     the stats row once per corpus snapshot and scores in a single pass.
-    """
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     terms = sorted({t.lower() for t in query_terms})
     if not terms:
         raise ValueError("query_terms must be non-empty")
-    scored, term_score = _bm25_scored(df, terms, text_col, id_col, k1, b)
+    scored, term_score = _bm25_scored(df, terms, "text", "doc_id", 1.2, 0.75)
     parts = [term_score(i) for i in range(len(terms))]
     score = F.round(sum(parts[1:], parts[0]), 4)
     return (
@@ -210,10 +203,6 @@ def bm25_topk_batch(
     df: DataFrame,
     queries: dict[str, list[str]],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """BM25 top-k for MANY keyword queries in one plan — corpus mining
     runs hundreds of topical probes; issuing them as one job costs one
@@ -228,7 +217,8 @@ def bm25_topk_batch(
     unpivoted with ``stack`` (rows = docs x queries with a hit, after
     the score>0 filter), and the only real shuffle is the per-query
     top-k window over that already-small hit set.
-    """
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if not queries:
         raise ValueError("queries must be non-empty")
     qterms = {
@@ -238,7 +228,7 @@ def bm25_topk_batch(
         raise ValueError("every query needs at least one term")
     union_terms = sorted({w for terms in qterms.values() for w in terms})
     idx = {w: i for i, w in enumerate(union_terms)}
-    scored, term_score = _bm25_scored(df, union_terms, text_col, id_col, k1, b)
+    scored, term_score = _bm25_scored(df, union_terms, "text", "doc_id", 1.2, 0.75)
 
     def query_score(terms: list[str]):
         parts = [term_score(idx[w]) for w in terms]
@@ -274,22 +264,18 @@ def bm25_topk_batch(
     )
 
 
-def fingerprint(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    char_window: int = 16,
-    stride: int = 8,
-) -> DataFrame:
+def fingerprint(df: DataFrame, char_window: int = 16, stride: int = 8) -> DataFrame:
     """Content fingerprint: minimum hash over strided character windows
     (winnowing-style). Equal fingerprints => near-identical prefixes of
     content; robust to small whitespace edits when stride < window.
-    Returns ``(id, fp)``."""
+    Returns ``(id, fp)``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if char_window < 1:
         raise ValueError(f"char_window must be >= 1, got {char_window}")
     if stride < 1:
         raise ValueError(f"stride must be >= 1, got {stride}")
-    text = F.col(text_col)
+    text = F.col("text")
     # explicit floor: engines disagree on double->int cast rounding
     n_windows = F.greatest(
         F.floor((F.length(text) - char_window) / stride).cast("int") + 1, F.lit(1)
@@ -299,17 +285,10 @@ def fingerprint(
         lambda i: text.substr(i * stride + 1, F.lit(char_window)),
     )
     fp = F.array_min(F.transform(windows, lambda w: hash64(w)))
-    return df.select(F.col(id_col), fp.alias("fp"))
+    return df.select(F.col("doc_id"), fp.alias("fp"))
 
 
-def frequent_ngrams(
-    df: DataFrame,
-    n: int = 3,
-    k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_count: int = 2,
-) -> DataFrame:
+def frequent_ngrams(df: DataFrame, k: int = 20) -> DataFrame:
     """Top-k most frequent token n-grams across the corpus — the
     boilerplate-discovery probe that feeds :func:`..dedup.paragraph_dedup`
     / ``max_shingle_freq`` tuning. Returns ``(ngram, n_docs)`` ordered by
@@ -317,23 +296,25 @@ def frequent_ngrams(
 
     Counts DOCUMENT frequency (an n-gram repeated inside one doc counts
     once — the boilerplate signal). Documents shorter than
-    ``n`` tokens contribute ONE whole-text pseudo-n-gram (the package's
+    3 tokens contribute ONE whole-text pseudo-n-gram (the package's
     shingle convention — short boilerplate like a bare "Login" doc
     still surfaces, but note it ranks among the true n-grams).
 
     Scale shape: explode n-grams -> groupBy count -> TakeOrdered. The
     count is partially aggregable, so a stop-phrase present in every
     document combines map-side instead of hot-keying the shuffle, and
-    ``min_count`` drops the long singleton tail before the final top-k
+    2 drops the long singleton tail before the final top-k
     ordering. One shuffle, bounded by distinct-ngram cardinality; the
     full distinct-ngram set is never collected or sorted globally
-    (TakeOrdered keeps k per partition)."""
-    toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
-    n_sh = F.greatest(F.size("toks") - (n - 1), F.lit(1))
+    (TakeOrdered keeps k per partition).
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    toks = df.select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
+    n_sh = F.greatest(F.size("toks") - (3 - 1), F.lit(1))
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), n_sh),
-            lambda i: F.concat_ws(" ", F.slice("toks", i, n)),
+            lambda i: F.concat_ws(" ", F.slice("toks", i, 3)),
         )
     )
     # inline(array(struct)) barrier: exploding a non-foldable computed
@@ -348,20 +329,13 @@ def frequent_ngrams(
     return (
         exploded.groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") >= min_count)
+        .where(F.col("n_docs") >= 2)
         .orderBy(F.col("n_docs").desc(), F.col("ngram"))
         .limit(k)
     )
 
 
-def tfidf_topk_terms(
-    df: DataFrame,
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 1,
-    round_decimals: int = 4,
-) -> DataFrame:
+def tfidf_topk_terms(df: DataFrame, k: int = 10, min_df: int = 1) -> DataFrame:
     """Per-document top-k keyword terms by tf-idf — the classic
     keyword-extraction / topical-tagging probe of corpus mining
     (surface a document's distinguishing vocabulary; feed topical
@@ -370,7 +344,7 @@ def tfidf_topk_terms(
     sklearn-style smooth form ``ln((1 + N) / (1 + df)) + 1`` (never
     zero, never divides by zero) with raw term count as tf. Returns
     ``(id, term, score)`` — per document the ``k`` best terms, score
-    rounded to ``round_decimals``, ties broken by term ascending.
+    rounded to 4 decimals, ties broken by term ascending.
     ``min_df`` drops hapax noise before scoring.
 
     100 TB shape: ONE token explode feeding two partially-aggregable
@@ -383,7 +357,9 @@ def tfidf_topk_terms(
     and the join's left side, so it is persisted (Spark shares no
     subplans across join branches — without the cache the corpus
     explode runs twice); the result carries the release handle
-    (cachectl)."""
+    (cachectl).
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if min_df < 1:
@@ -391,12 +367,12 @@ def tfidf_topk_terms(
     from pyspark.sql import Window
 
     base = df.select(
-        F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+        F.col("doc_id"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("term"),
     )
     with CacheScope() as scope:
         tf = scope.persist(
-            base.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+            base.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
         )
         dfc = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
         if min_df > 1:
@@ -408,14 +384,14 @@ def tfidf_topk_terms(
                 F.log((F.lit(1) + F.col("__n")) / (F.lit(1) + F.col("__df")))
                 + F.lit(1.0)
             ),
-            round_decimals,
+            4,
         )
         scored = (
             tf.join(dfc, "term")
             .crossJoin(F.broadcast(n))
-            .select(F.col(id_col), "term", score.alias("score"))
+            .select(F.col("doc_id"), "term", score.alias("score"))
         )
-        w = Window.partitionBy(id_col).orderBy(
+        w = Window.partitionBy("doc_id").orderBy(
             F.col("score").desc(), F.col("term").asc()
         )
         out = (
@@ -489,11 +465,7 @@ def gopher_quality_filter(
     )
 
 
-def token_bucket_histogram(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def token_bucket_histogram(df: DataFrame) -> DataFrame:
     """Power-of-two token-length histogram (r15): the length
     distribution a packing/context-window decision reads — one row
     per occupied log2 bucket::
@@ -510,16 +482,18 @@ def token_bucket_histogram(
 
     100 TB shape: one partial-aggregable groupBy over a scan-fused
     projection; output bounded by ~64 buckets. No UDF, no second
-    pass."""
-    n = F.size(tokens(F.col(text_col)))
+    pass.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    n = F.size(tokens(F.col("text")))
     # SQL-expr shiftleft: the Python-side F.shiftleft only accepts a
     # literal int bit count, not a column expression
     lo = F.when(F.col("__n") <= 0, F.lit(0).cast("long")).otherwise(
         F.expr("shiftleft(CAST(1 AS BIGINT), length(bin(__n)) - 1)")
     )
     return (
-        df.select(F.col(id_col), n.alias("__n"))
-        .select(F.col(id_col), "__n", lo.alias("bucket_lo"))
+        df.select(F.col("doc_id"), n.alias("__n"))
+        .select(F.col("doc_id"), "__n", lo.alias("bucket_lo"))
         .groupBy("bucket_lo")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -632,12 +606,7 @@ def filter_attrition_report(
     return one.select(F.explode(F.array(*rows)).alias("_r")).select("_r.*")
 
 
-def unigram_logprob(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    smoothing: float = 1.0,
-) -> DataFrame:
+def unigram_logprob(df: DataFrame, smoothing: float = 1.0) -> DataFrame:
     """LM-perplexity quality proxy WITHOUT an external model (the
     CCNet idea, self-trained): fit a unigram model on the corpus
     itself (token -> count, add-k smoothed), then score every document
@@ -666,11 +635,13 @@ def unigram_logprob(
     sequentially (sort_array + aggregate), not F.avg — a plain float
     avg sums in post-shuffle row order, and float addition is
     non-associative, so the rounded 4th decimal could flip between
-    runs or versus the oracle's own summation order."""
+    runs or versus the oracle's own summation order.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if smoothing <= 0:
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     toked = df.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
     )
     with CacheScope() as scope:
         model = scope.persist(toked.groupBy("tok").agg(F.count(F.lit(1)).alias("c")))
@@ -684,13 +655,13 @@ def unigram_logprob(
         scored = (
             toked.join(model, "tok")
             .crossJoin(F.broadcast(scalars))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_tokens"),
                 F.sort_array(F.collect_list(bits)).alias("__bits"),
             )
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.col("n_tokens"),
                 F.round(
                     F.aggregate("__bits", F.lit(0.0), lambda a, x: a + x)
@@ -701,10 +672,10 @@ def unigram_logprob(
         )
         # left join: documents with zero tokens still get a row
         out = (
-            df.select(F.col(id_col))
-            .join(scored, id_col, "left")
+            df.select(F.col("doc_id"))
+            .join(scored, "doc_id", "left")
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
                 F.col("bits_per_token"),
             )
@@ -712,18 +683,11 @@ def unigram_logprob(
         return scope.hand(out, model)
 
 
-def perplexity_buckets(
-    df: DataFrame,
-    n_buckets: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str | None = "lang",
-    smoothing: float = 1.0,
-) -> DataFrame:
+def perplexity_buckets(df: DataFrame, n_buckets: int = 3) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al., LREC 2020 §4.3:
     rank each language's documents by LM perplexity, split into
     head/middle/tail, train on head+middle): documents are scored by
-    :func:`unigram_logprob` surprisal and assigned a per-``group_col``
+    :func:`unigram_logprob` surprisal and assigned a per-``lang``
     quantile bucket 1..``n_buckets`` (1 = lowest bits/token = the
     CCNet "head"). Returns ``(id, group, n_tokens, bits_per_token,
     bucket)``; filter ``bucket < n_buckets`` to drop the tail.
@@ -734,24 +698,26 @@ def perplexity_buckets(
     quantiles, deterministic (ties broken by id), DuckDB-replayable;
     its sort is per-group, so at corpus scale one giant language is a
     hot window partition. The result carries unigram_logprob's model
-    release handle (cachectl.release after materializing)."""
+    release handle (cachectl.release after materializing).
+
+    Fixed columns: group ``lang``, id ``doc_id``, text ``text``."""
     from pyspark.sql import Window
 
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
     with CacheScope() as scope:
-        scored = unigram_logprob(df, text_col, id_col, smoothing)
-        gcols = [group_col] if group_col is not None else []
+        scored = unigram_logprob(df, 1.0)
+        gcols = ["lang"]
         # persisted: base feeds two branches (ranked + nulls union) —
         # unpersisted, the corpus-wide token scoring would re-run per
         # branch (the unigram_logprob docstring's no-cross-branch-sharing
         # rule). Rides the result's release handle.
         base = scope.persist(
-            df.select(F.col(id_col), *[F.col(c) for c in gcols]).join(scored, id_col)
+            df.select(F.col("doc_id"), *[F.col(c) for c in gcols]).join(scored, "doc_id")
         )
         w = Window.partitionBy(
             *[F.col(c) for c in gcols]
-        ).orderBy(F.col("bits_per_token").asc(), F.col(id_col).asc())
+        ).orderBy(F.col("bits_per_token").asc(), F.col("doc_id").asc())
         # NULL bits are excluded from the ntile ranking entirely and
         # pinned to the last bucket: engines disagree on NULL sort
         # position (Spark NULLS FIRST vs DuckDB NULLS LAST on ASC),
@@ -764,15 +730,13 @@ def perplexity_buckets(
             "bucket", F.lit(n_buckets)
         )
         out = ranked.unionByName(nulls).select(
-            F.col(id_col), *gcols, "n_tokens", "bits_per_token", "bucket"
+            F.col("doc_id"), *gcols, "n_tokens", "bits_per_token", "bucket"
         )
         return scope.hand(out, base, *persisted_frames(scored))
 
 
 def bigram_logprob(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     smoothing: float = 1.0,
     lam: float = 0.7,
 ) -> DataFrame:
@@ -805,12 +769,14 @@ def bigram_logprob(
     Determinism: the per-doc mean folds the SORTED per-event bits
     sequentially (unigram_logprob's rule — float addition is
     non-associative, so the rounded 4th decimal must not depend on
-    row order)."""
+    row order).
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if smoothing <= 0:
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     t = F.col("__toks")
     grams = F.when(
         F.size(t) >= 2,
@@ -825,17 +791,17 @@ def bigram_logprob(
     # InferFiltersFromGenerate duplicate the zip_with into a pushed
     # size()>0 filter
     events = (
-        df.select(F.col(id_col), toks.alias("__toks"))
+        df.select(F.col("doc_id"), toks.alias("__toks"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.inline(F.array(F.struct(grams.alias("__grams")))),
         )
-        .select(F.col(id_col), F.explode("__grams").alias("g"))
-        .select(F.col(id_col), F.col("g.u").alias("u"), F.col("g.w").alias("w"))
+        .select(F.col("doc_id"), F.explode("__grams").alias("g"))
+        .select(F.col("doc_id"), F.col("g.u").alias("u"), F.col("g.w").alias("w"))
     )
     with CacheScope() as scope:
         m1 = scope.persist(
-            df.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+            df.select(F.explode(tokens(F.col("text"))).alias("tok"))
             .groupBy("tok")
             .agg(F.count(F.lit(1)).alias("c1"))
         )
@@ -858,13 +824,13 @@ def bigram_logprob(
             # joins are the ambiguous-reference trap)
             .join(m1.select(F.col("tok").alias("w"), "c1"), "w")
             .crossJoin(F.broadcast(scalars))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_bigrams"),
                 F.sort_array(F.collect_list(bits)).alias("__bits"),
             )
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.col("n_bigrams"),
                 F.round(
                     F.aggregate("__bits", F.lit(0.0), lambda a, x: a + x)
@@ -874,10 +840,10 @@ def bigram_logprob(
             )
         )
         out = (
-            df.select(F.col(id_col))
-            .join(scored, id_col, "left")
+            df.select(F.col("doc_id"))
+            .join(scored, "doc_id", "left")
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
                 F.col("bits_per_bigram"),
             )
@@ -885,11 +851,7 @@ def bigram_logprob(
         return scope.hand(out, m1, m2)
 
 
-def corpus_divergence(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_divergence(df_a: DataFrame, df_b: DataFrame) -> DataFrame:
     """Jensen-Shannon divergence between two corpora's unigram token
     distributions — the standard drift/mixture diagnostic of corpus
     curation: compare a candidate data source against the existing
@@ -931,10 +893,12 @@ def corpus_divergence(
     keeps the quantization error (vocab x 1e-12) far below the final
     round(…, 4) while the decimal accumulator cannot overflow: per-term
     magnitude is bounded by ~0.54 (max of |p log2(p/m)| + the q twin),
-    so even a 1e12-token vocab sums to < 1e24 « 1e38."""
+    so even a 1e12-token vocab sums to < 1e24 « 1e38.
+
+    Fixed columns: text ``text``."""
     def counts(df: DataFrame, alias: str) -> DataFrame:
         return (
-            df.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+            df.select(F.explode(tokens(F.col("text"))).alias("tok"))
             .groupBy("tok")
             .agg(F.count(F.lit(1)).alias(alias))
         )
@@ -986,19 +950,12 @@ def corpus_divergence(
         return scope.hand(out, j)
 
 
-def hashed_doc_embeddings(
-    df: DataFrame,
-    dims: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 9,
-    round_decimals: int = 6,
-) -> DataFrame:
+def hashed_doc_embeddings(df: DataFrame, dims: int = 64) -> DataFrame:
     """Model-free document embeddings via the hashing trick
     (Weinberger et al., ICML 2009): every token hashes to one of
     ``dims`` buckets (the cross-engine md5 coin, seeded), the doc's
     vector is its L2-normalized bucket-count histogram, components
-    rounded to ``round_decimals`` with the -0.0 fold. Cosine between
+    rounded to 6 decimals with the -0.0 fold. Cosine between
     two such vectors approximates token-distribution overlap — the
     bridge that lets the whole embedding-side surface (semantic
     dedup, ANN serves, :func:`..similarity.embedding_outliers`,
@@ -1011,21 +968,23 @@ def hashed_doc_embeddings(
     count, re-agg to the doc key (both shuffles bounded by docs x
     dims rows after map-side combine); the dense array materializes
     via a map lookup over ``sequence(0, dims-1)`` — never a
-    dims-wide join. All native expressions; no UDFs."""
+    dims-wide join. All native expressions; no UDFs.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if dims < 1:
         raise ValueError(f"dims must be >= 1, got {dims}")
-    bucket = F.pmod(hash64(F.col("tok"), seed=seed), F.lit(dims))
+    bucket = F.pmod(hash64(F.col("tok"), seed=9), F.lit(dims))
     counts = (
         df.select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
+            F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
         )
-        .select(F.col(id_col), bucket.alias("b"))
-        .groupBy(id_col, "b")
+        .select(F.col("doc_id"), bucket.alias("b"))
+        .groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     # element_at on a MAP is a by-KEY lookup (not the 1-based array
     # form), so the 0..dims-1 sequence probes the bucket keys directly
-    dense = counts.groupBy(id_col).agg(
+    dense = counts.groupBy("doc_id").agg(
         F.map_from_entries(
             F.collect_list(
                 F.struct(F.col("b").cast("int"), F.col("c"))
@@ -1040,9 +999,9 @@ def hashed_doc_embeddings(
     )
     n = F.col("_n")
     out = (
-        dense.select(F.col(id_col), v.alias("_v"))
+        dense.select(F.col("doc_id"), v.alias("_v"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("_v"),
             F.sqrt(
                 F.aggregate(
@@ -1051,25 +1010,22 @@ def hashed_doc_embeddings(
             ).alias("_n"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.when(
                 n > 0,
                 F.transform(
                     F.col("_v"),
-                    lambda x: F.round(x / n, round_decimals)
+                    lambda x: F.round(x / n, 6)
                     + F.lit(0.0),
                 ),
             ).alias("e"),
         )
     )
-    return df.select(F.col(id_col)).join(out, id_col, "left")
+    return df.select(F.col("doc_id")).join(out, "doc_id", "left")
 
 
 def token_percentiles(
     df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     percentiles: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
     """Per-group token-count percentile report — the corpus audit a
@@ -1100,9 +1056,11 @@ def token_percentiles(
     — Spark's window orders NULLS FIRST where the DuckDB oracle
     orders NULLS LAST (r13 review).
 
-    100 TB shape: one shuffle on ``group_col`` plus a per-group sort
+    100 TB shape: one shuffle on ``source`` plus a per-group sort
     (rank window) — correct but sort-bound when one source holds
-    billions of docs."""
+    billions of docs.
+
+    Fixed columns: group ``source``, id ``doc_id``, text ``text``."""
     if not percentiles or any(not 0.0 < p <= 1.0 for p in percentiles):
         raise ValueError(
             f"percentiles must be in (0, 1], got {percentiles}"
@@ -1112,7 +1070,7 @@ def token_percentiles(
         s = f"{p * 100:g}".replace(".", "_")
         return f"p{s}_tokens"
 
-    ranked = ranked_token_counts(df, group_col, text_col, id_col)
+    ranked = ranked_token_counts(df, "source", "text", "doc_id")
     return (
         ranked.groupBy("__g")
         .agg(
@@ -1129,7 +1087,7 @@ def token_percentiles(
                 for p in percentiles
             ],
         )
-        .withColumnRenamed("__g", group_col)
+        .withColumnRenamed("__g", "source")
     )
 
 
@@ -1195,8 +1153,6 @@ VOCAB_GROWTH_FRACTIONS: tuple[tuple[int, int], ...] = (
 
 def vocab_growth(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     fractions: tuple[tuple[int, int], ...] = VOCAB_GROWTH_FRACTIONS,
 ) -> DataFrame:
     """Heaps-law vocabulary-growth audit: distinct-token vocabulary
@@ -1219,7 +1175,9 @@ def vocab_growth(
     conditional counts/sums against the broadcast 1-row bounds frame;
     (2) token first-occurrence ``groupBy(tok).agg(min(id))`` (the
     shuffle, map-side combinable) followed by conditional counts.
-    Nothing sorts, nothing collects."""
+    Nothing sorts, nothing collects.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if not fractions or any(
         n <= 0 or d <= 0 or n > d for n, d in fractions
     ):
@@ -1227,7 +1185,7 @@ def vocab_growth(
             f"fractions must be ratios in (0, 1], got {fractions}"
         )
     bounds = df.agg(
-        F.min(id_col).alias("__lo"), F.max(id_col).alias("__hi")
+        F.min("doc_id").alias("__lo"), F.max("doc_id").alias("__hi")
     )
 
     def cutoff(num: int, den: int) -> Column:
@@ -1240,8 +1198,8 @@ def vocab_growth(
     # pass 1: per-fraction doc counts + token totals (doc-level scan)
     docs = (
         df.select(
-            F.col(id_col),
-            F.size(tokens(F.col(text_col))).alias("__nt"),
+            F.col("doc_id"),
+            F.size(tokens(F.col("text"))).alias("__nt"),
         )
         .crossJoin(F.broadcast(bounds))
         .agg(
@@ -1252,7 +1210,7 @@ def vocab_growth(
             *[
                 F.coalesce(
                     F.sum(
-                        F.when(F.col(id_col) <= cutoff(n, d), 1).otherwise(0)
+                        F.when(F.col("doc_id") <= cutoff(n, d), 1).otherwise(0)
                     ),
                     F.lit(0),
                 ).alias(f"__nd_{n}_{d}")
@@ -1262,7 +1220,7 @@ def vocab_growth(
                 F.coalesce(
                     F.sum(
                         F.when(
-                            F.col(id_col) <= cutoff(n, d), F.col("__nt")
+                            F.col("doc_id") <= cutoff(n, d), F.col("__nt")
                         ).otherwise(0)
                     ),
                     F.lit(0),
@@ -1278,10 +1236,10 @@ def vocab_growth(
     # pass 2: token first occurrence, then per-fraction vocab counts
     first = (
         df.select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__tok")
+            F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("__tok")
         )
         .groupBy("__tok")
-        .agg(F.min(id_col).alias("__first"))
+        .agg(F.min("doc_id").alias("__first"))
         .crossJoin(F.broadcast(bounds))
         .agg(
             *[
@@ -1315,13 +1273,11 @@ def vocab_coverage(
     df: DataFrame,
     ref: DataFrame | None = None,
     vocab_size: int = 1000,
-    group_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Vocabulary-coverage / OOV-rate audit: build the top-
     ``vocab_size`` token vocabulary from ``ref`` (count DESC, token
     ASC tie-break — deterministic at the cut), then report, per
-    ``group_col`` of ``df``, how much of its token mass that
+    ``source`` of ``df``, how much of its token mass that
     vocabulary covers. The standard "will my tokenizer/model built on
     corpus A handle corpus B" diagnostic of a curation pipeline — a
     high OOV source needs vocab growth or transliteration/cleanup
@@ -1337,12 +1293,14 @@ def vocab_coverage(
     from corpus-token rows to distinct keys), then the bounded
     vocabulary (``vocab_size`` rows, orderBy+limit on an already
     token-aggregated frame) broadcast-left-joins onto it; nothing
-    corpus-sized crosses the broadcast."""
+    corpus-sized crosses the broadcast.
+
+    Fixed columns: group ``source``, text ``text``."""
     if vocab_size < 1:
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
     src = ref if ref is not None else df
     vocab = (
-        src.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+        src.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("__c"))
         .orderBy(F.col("__c").desc(), F.col("tok").asc())
@@ -1351,15 +1309,15 @@ def vocab_coverage(
     )
     per_tok = (
         df.select(
-            F.col(group_col),
-            F.explode(tokens(F.col(text_col))).alias("tok"),
+            F.col("source"),
+            F.explode(tokens(F.col("text"))).alias("tok"),
         )
-        .groupBy(group_col, "tok")
+        .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("__n"))
     )
     joined = per_tok.join(F.broadcast(vocab), "tok", "left")
     return (
-        joined.groupBy(group_col)
+        joined.groupBy("source")
         .agg(
             F.sum("__n").alias("n_tokens"),
             F.sum(
@@ -1367,7 +1325,7 @@ def vocab_coverage(
             ).alias("covered"),
         )
         .select(
-            F.col(group_col),
+            F.col("source"),
             F.col("n_tokens"),
             F.col("covered"),
             (F.col("n_tokens") - F.col("covered")).alias("oov"),

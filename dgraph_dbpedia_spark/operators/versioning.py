@@ -24,14 +24,9 @@ from dgraph_dbpedia_spark.functions.hashing import hash64
 __all__ = ["corpus_diff", "corpus_diff_report", "category_shift_report"]
 
 
-def corpus_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Per-document diff of two corpus snapshots: full-outer join on
-    ``id_col`` over content hashes, labelling each id
+    ``doc_id`` over content hashes, labelling each id
 
     - ``added``     — in ``new`` only,
     - ``removed``   — in ``old`` only,
@@ -52,13 +47,15 @@ def corpus_diff(
     ONE id-keyed full-outer shuffle join; no UDFs, no collects. Both
     sides shuffle-partition by the same id key, so a catalog table
     bucketed by id (``bucketBy`` + ``saveAsTable``) makes the join
-    Exchange-free."""
+    Exchange-free.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     def side(df: DataFrame, h: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             # null-flag + coalesce: hash64(NULL) is NULL, and two
             # NULLs must compare EQUAL (eqNullSafe below)
-            hash64(F.col(text_col)).alias(h),
+            hash64(F.col("text")).alias(h),
             F.lit(1).alias(f"_in{h}"),
         )
 
@@ -71,15 +68,10 @@ def corpus_diff(
         .when(F.col("_ho").eqNullSafe(F.col("_hn")), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    return joined.select(F.col("_id").alias(id_col), status.alias("status"))
+    return joined.select(F.col("_id").alias("doc_id"), status.alias("status"))
 
 
-def corpus_diff_report(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_diff_report(old: DataFrame, new: DataFrame) -> DataFrame:
     """One-row release audit over :func:`corpus_diff`: counts per
     status plus churn — ``round((added + changed) / new_total, 4)`` —
     the fraction of the NEW snapshot's id universe that is not
@@ -92,8 +84,10 @@ def corpus_diff_report(
 
     100 TB shape: the diff's one shuffle join, then a
     partial-aggregable global count fold (map-side combine; one row
-    out)."""
-    d = corpus_diff(old, new, id_col=id_col, text_col=text_col)
+    out).
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    d = corpus_diff(old, new)
     cnt = lambda s: F.sum(  # noqa: E731
         F.when(F.col("status") == s, 1).otherwise(0)
     )
@@ -119,13 +113,9 @@ def corpus_diff_report(
     )
 
 
-def category_shift_report(
-    old: DataFrame,
-    new: DataFrame,
-    group_col: str = "source",
-) -> DataFrame:
+def category_shift_report(old: DataFrame, new: DataFrame) -> DataFrame:
     """Metadata-distribution drift between two corpus snapshots: for
-    each ``group_col`` category, the document counts and shares on
+    each ``source`` category, the document counts and shares on
     both sides plus the category's total-variation contribution —
     "did release v4 quietly halve the code share and double the
     forums share?" (the mixture-audit sibling of
@@ -144,11 +134,13 @@ def category_shift_report(
     NULL category present in BOTH snapshots never matches itself, so
     it produced two spine rows (one n_new=0, one n_old=0) and its
     tvd_term was double-counted; ``eqNullSafe`` (oracle: ``IS NOT
-    DISTINCT FROM``) folds it into one row like any other category."""
-    co = old.groupBy(F.col(group_col).alias("__g_old")).agg(
+    DISTINCT FROM``) folds it into one row like any other category.
+
+    Fixed columns: group ``source``."""
+    co = old.groupBy(F.col("source").alias("__g_old")).agg(
         F.count(F.lit(1)).alias("n_old")
     )
-    cn = new.groupBy(F.col(group_col).alias("__g_new")).agg(
+    cn = new.groupBy(F.col("source").alias("__g_new")).agg(
         F.count(F.lit(1)).alias("n_new")
     )
     spine = (
@@ -169,7 +161,7 @@ def category_shift_report(
     return (
         spine.crossJoin(F.broadcast(totals))
         .select(
-            F.col("g").alias(group_col),
+            F.col("g").alias("source"),
             "n_old",
             "n_new",
             F.round(share_old, 6).alias("share_old"),

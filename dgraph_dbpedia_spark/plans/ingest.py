@@ -40,21 +40,20 @@ def load_dataset(
     root: str,
     dataset: str,
     languages: list[str],
-    ext: str = ".ttl",
 ) -> DataFrame:
     """Union of all languages' ttl files for one dataset, with the
     conditional en_uris union (U1+U3,
     DbpediaToParquetSparkApp.scala:73-84)."""
     frames: list[DataFrame] = []
     for lang in languages:
-        path = catalog.dataset_path(root, lang, dataset, ext)
+        path = catalog.dataset_path(root, lang, dataset)
         # Hadoop-FS existence (not os.path): the ingest root is
         # hdfs://-or-s3a:// on a real cluster, where a driver-local
         # check would silently skip every language
         if not fs_exists(spark, path):
             continue
         df = read_ttl(spark, path, lang=lang)
-        en_uris = catalog.dataset_path(root, lang, f"{dataset}_en_uris", ext)
+        en_uris = catalog.dataset_path(root, lang, f"{dataset}_en_uris")
         if "en" in languages and fs_exists(spark, en_uris):
             df = df.unionByName(read_ttl(spark, en_uris, lang=f"en-{lang}"))
         frames.append(df)

@@ -3,7 +3,7 @@ directory names on the driver (S9, DbpediaToParquetSparkApp.scala:113-135).
 
 The reference's layout is ``{base}/{release}/core-i18n/{lang}/
 {dataset}_{lang}.ttl``; we keep the same driver-side discovery pattern
-but generalized to any ``{root}/{lang}/{dataset}_{lang}{ext}`` tree.
+but generalized to any ``{root}/{lang}/{dataset}_{lang}.ttl`` tree.
 """
 
 from __future__ import annotations
@@ -18,16 +18,16 @@ def list_languages(root: str) -> list[str]:
     return sorted(d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d)))
 
 
-def list_datasets(root: str, ext: str = ".ttl") -> list[str]:
-    """Dataset = filename prefix before ``_{lang}{ext}``, across all langs."""
+def list_datasets(root: str) -> list[str]:
+    """Dataset = filename prefix before ``_{lang}.ttl``, across all langs."""
     datasets: set[str] = set()
     for lang in list_languages(root):
-        suffix = f"_{lang}{ext}"
+        suffix = f"_{lang}.ttl"
         for f in os.listdir(os.path.join(root, lang)):
             if f.endswith(suffix):
                 datasets.add(f[: -len(suffix)])
     return sorted(datasets)
 
 
-def dataset_path(root: str, lang: str, dataset: str, ext: str = ".ttl") -> str:
-    return os.path.join(root, lang, f"{dataset}_{lang}{ext}")
+def dataset_path(root: str, lang: str, dataset: str) -> str:
+    return os.path.join(root, lang, f"{dataset}_{lang}.ttl")

@@ -37,19 +37,15 @@ DOCUMENTS_SCHEMA = T.StructType(
 )
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = DOCUMENTS_SCHEMA,
-    corrupt_col: str = "_corrupt",
-) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str) -> DataFrame:
     """Read a JSONL corpus with the scale rules above. The returned
-    frame carries ``corrupt_col`` (NULL for clean rows); use
+    frame has the ``DOCUMENTS_SCHEMA`` columns plus ``_corrupt`` (the
+    raw line of a malformed record, NULL for clean rows); use
     :func:`split_corrupt` to quarantine."""
     # fresh StructType: StructType.add MUTATES the receiver, which
     # would grow the shared module-level schema on every call
     full = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
+        list(DOCUMENTS_SCHEMA.fields) + [T.StructField("_corrupt", T.StringType())]
     )
     return (
         spark.read.schema(full)
@@ -57,14 +53,12 @@ def read_jsonl(
         # explicit, not the implicit default: multiLine=True would be
         # one-task-per-file on TB shards (module-header scale rule)
         .option("multiLine", False)
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", "_corrupt")
         .json(path)
     )
 
 
-def split_corrupt(
-    df: DataFrame, corrupt_col: str = "_corrupt", cache: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def split_corrupt(df: DataFrame, cache: bool = True) -> tuple[DataFrame, DataFrame]:
     """(clean_rows_without_the_audit_column, corrupt_lines) — the
     quarantine split every permissive ingest should end with.
 
@@ -76,13 +70,15 @@ def split_corrupt(
     both halves. Both returned frames carry the release handle
     (cachectl). Set ``cache=False`` when only the clean half will be
     read and the corpus is too large to pin — then query ``bad`` only
-    with at least one data column in the plan."""
+    with at least one data column in the plan.
+
+    Fixed columns: corrupt record ``_corrupt``."""
     from dgraph_dbpedia_spark.operators.cachectl import CacheScope
 
     with CacheScope() as scope:
         handles = [scope.persist(df)] if cache else []
-        clean = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-        bad = df.where(F.col(corrupt_col).isNotNull()).select(corrupt_col)
+        clean = df.where(F.col("_corrupt").isNull()).drop("_corrupt")
+        bad = df.where(F.col("_corrupt").isNotNull()).select("_corrupt")
         return scope.hand(clean, *handles), scope.hand(bad, *handles)
 
 

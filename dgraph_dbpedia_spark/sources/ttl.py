@@ -19,11 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def parse_ttl_lines(
-    lines: DataFrame,
-    value_col: str = "value",
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
+def parse_ttl_lines(lines: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """``value: string`` lines -> ``s, p, o`` triple columns (plus any
     ``keep`` passthrough columns, e.g. a partition-discovered ``lang``
     — this is the ONE definition of the line parse; the RDF read-back
@@ -32,11 +28,11 @@ def parse_ttl_lines(
 
     Native-only pipeline: comment filter (P1), trailing `` .`` strip +
     3-way limited split (P2), projection (P3).
-    """
-    value = F.col(value_col)
+
+    Fixed columns: value ``value``."""
+    value = F.col("value")
     # strip the trailing " ." (2 chars) then split at the first two
-    # spaces. Column-API substring (not an f-string F.expr): a quoted
-    # or reserved-word value_col must not become a SQL parse error
+    # spaces. Column-API substring, not an f-string F.expr
     parts = F.split(
         F.substring(value, F.lit(1), F.length(value) - 2), " ", 3
     )

@@ -32,7 +32,6 @@ def write_partitioned_by(
     n_partitions: int | None = None,
     projection: Sequence[Column] | None = None,
     fmt: str = "parquet",
-    mode: str = "overwrite",
     options: dict[str, str] | None = None,
     path: str | None = None,
     coalesce_to: int | None = None,
@@ -60,7 +59,7 @@ def write_partitioned_by(
     if projection is not None:
         # projection applied after the sort so sort keys need not survive it
         out = out.select(*projection, *[c for c in partition_cols])
-    writer = out.write.mode(mode).partitionBy(*partition_cols)
+    writer = out.write.mode("overwrite").partitionBy(*partition_cols)
     for k, v in (options or {}).items():
         writer = writer.option(k, v)
     writer.format(fmt).save(path)

@@ -55,7 +55,7 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def event_time(df: DataFrame, col: str = "ts") -> F.Column:
+def event_time(df: DataFrame) -> F.Column:
     """TIMESTAMP column for any ts layout. Nanos-epoch longs become
     micros timestamps (pure epoch math). TIMESTAMP_NTZ is rebased to a
     true TIMESTAMP via epoch seconds — ``unix_timestamp`` reads the NTZ
@@ -63,82 +63,74 @@ def event_time(df: DataFrame, col: str = "ts") -> F.Column:
     TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE otherwise). Second
     precision: lossless for the hour-scale windows and the
     seconds-based sessionizer built on top."""
-    dt = dict(df.dtypes).get(col)
+    dt = dict(df.dtypes).get("ts")
     if dt == "bigint":
         # integer `div`, not /1000: epoch nanos (~1.7e18) exceed 2^53,
         # so double division is off by up to 1us and can flip the
         # derived second vs the exact epoch_seconds() below
-        return F.timestamp_micros(F.expr(f"`{col}` div 1000"))
+        return F.timestamp_micros(F.expr("`ts` div 1000"))
     if dt == "timestamp_ntz":
-        return F.timestamp_seconds(F.unix_timestamp(F.col(col)))
-    return F.col(col)
+        return F.timestamp_seconds(F.unix_timestamp(F.col("ts")))
+    return F.col("ts")
 
 
-def epoch_seconds(df: DataFrame, col: str = "ts") -> F.Column:
+def epoch_seconds(df: DataFrame) -> F.Column:
     """Epoch seconds (long, truncated) for either ts layout. Integer
     ``div`` on the nanos path (double division loses precision above
     2^53); ``unix_timestamp`` on the timestamp path — for NTZ it reads
     the wall clock as UTC regardless of session timezone, matching
     DuckDB's ``epoch(ts)``."""
-    if dict(df.dtypes).get(col) == "bigint":
-        return F.expr(f"`{col}` div 1000000000")
-    return F.unix_timestamp(F.col(col))
+    if dict(df.dtypes).get("ts") == "bigint":
+        return F.expr("`ts` div 1000000000")
+    return F.unix_timestamp(F.col("ts"))
 
 
 def read_events_stream(
     spark: SparkSession,
     path: str,
     max_files_per_trigger: int | None = None,
-    schema: T.StructType | None = None,
 ) -> DataFrame:
     """File-source stream over a directory of events parquet files.
     ``max_files_per_trigger`` bounds each micro-batch (1 = one file per
     batch, so watermarks advance between files — the shape a rotating
-    log directory produces). ``schema`` overrides ``EVENTS_SCHEMA`` for
-    non-current layouts (e.g. legacy nanos-long ``ts``); ``event_time``
-    adapts to whichever ts type the schema declares."""
-    reader = spark.readStream.schema(schema or EVENTS_SCHEMA)
+    log directory produces). The stream reads ``EVENTS_SCHEMA``."""
+    reader = spark.readStream.schema(EVENTS_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.parquet(path)
     return stream.withColumn("event_time", event_time(stream))
 
 
-def tumbling_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Per-type counts in tumbling event-time windows. Works on both
-    streaming frames (with watermark-bounded state) and batch frames
-    (watermark is a no-op in batch). Output: (ws, event_type, n)."""
+    streaming frames (state bounded by a 2-hour watermark) and batch
+    frames (the watermark is a no-op in batch). One-hour windows.
+    Output: (ws, event_type, n)."""
     df = events
     if "event_time" not in df.columns:
         df = df.withColumn("event_time", event_time(df))
     if df.isStreaming:
-        df = df.withWatermark("event_time", watermark)
+        df = df.withWatermark("event_time", "2 hours")
     return (
-        df.groupBy(F.window("event_time", window).alias("w"), F.col("event_type"))
+        df.groupBy(F.window("event_time", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n"))
         # unix_timestamp, not a long cast: NTZ windows reject the cast
         .select(F.unix_timestamp(F.col("w.start")).alias("ws"), "event_type", "n")
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window per-type counts; each event lands in
-    window/slide windows. Output: (ws, event_type, n)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding-window per-type counts: one-hour windows every 30
+    minutes, so each event lands in two windows; 2-hour watermark.
+    Output: (ws, event_type, n)."""
     df = events
     if "event_time" not in df.columns:
         df = df.withColumn("event_time", event_time(df))
     if df.isStreaming:
-        df = df.withWatermark("event_time", watermark)
+        df = df.withWatermark("event_time", "2 hours")
     return (
         df.groupBy(
-            F.window("event_time", window, slide).alias("w"), F.col("event_type")
+            F.window("event_time", "1 hour", "30 minutes").alias("w"), F.col("event_type")
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.unix_timestamp(F.col("w.start")).alias("ws"), "event_type", "n")
@@ -251,7 +243,6 @@ def _sessionize_group_fn(gap_seconds: int):
 
 def sessionize_stream(
     events: DataFrame,
-    watermark: str = "1 hour",
     gap_seconds: int = SESSION_GAP_SECONDS,
 ) -> DataFrame:
     """Custom stateful operator: streaming sessionization keyed by user
@@ -262,7 +253,7 @@ def sessionize_stream(
     df = events
     if "event_time" not in df.columns:
         df = df.withColumn("event_time", event_time(df))
-    df = df.withWatermark("event_time", watermark).withColumn(
+    df = df.withWatermark("event_time", "1 hour").withColumn(
         "ts_s", epoch_seconds(events)
     )
     return (
@@ -278,13 +269,9 @@ def sessionize_stream(
     )
 
 
-def dedup_events(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def dedup_events(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Streaming deduplication: keep the first event per key, with state
-    bounded by the watermark horizon (``dropDuplicatesWithinWatermark``
+    bounded by a 2-hour watermark horizon (``dropDuplicatesWithinWatermark``
     — late duplicates beyond the horizon are NOT caught, which is the
     price of bounded state; unbounded ``dropDuplicates`` state would OOM
     a 100 TB stream). On a batch frame the same call degrades to plain
@@ -302,14 +289,12 @@ def dedup_events(
         return df.dropDuplicates(keys)
     if "event_time" not in df.columns:
         df = df.withColumn("event_time", event_time(df))
-    return df.withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
+    return df.withWatermark("event_time", "2 hours").dropDuplicatesWithinWatermark(
         keys
     )
 
 
-def enrich_events(
-    events: DataFrame, dim: DataFrame, on: str, how: str = "left"
-) -> DataFrame:
+def enrich_events(events: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     """Stream-static enrichment join: each micro-batch of the stream
     joins the static dimension as a broadcast hash join (no stream-side
     shuffle, no state store — stream-static inner/left joins are
@@ -317,24 +302,20 @@ def enrich_events(
     the oracle checks). The broadcast is a HARD hint — right for
     genuine dimensions; a dim above the broadcast limit (~8 GB / driver
     memory) fails the build."""
-    return events.join(F.broadcast(dim), on, how)
+    return events.join(F.broadcast(dim), on, "left")
 
 
 def interval_join(
     left_events: DataFrame,
     right_events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "view",
-    lookback_seconds: int = 1800,
-    watermark: str = "2 hours",
     how: str = "inner",
 ) -> DataFrame:
     """Per-user event-time interval join: each LEFT event (e.g. a click)
     matched to every RIGHT event (e.g. a view) by the same user in the
-    preceding ``lookback_seconds`` (inclusive; right at-or-before left)
+    preceding 1800 seconds (inclusive; right at-or-before left)
     — the attribution join of an event pipeline. Works on two streaming
     frames (Spark's watermarked stream-stream join: both sides' state is
-    evicted once the watermark passes the time-range bound) and on batch
+    evicted once the 2-hour watermark passes the time-range bound) and on batch
     frames (watermarks are skipped; the same equi-join on ``user_id``
     plus a range filter, a hash join at any scale — never a cartesian).
 
@@ -349,12 +330,7 @@ def interval_join(
     ``lag_s = left - right`` in truncated epoch seconds, matching the
     batch/oracle ``floor(epoch(ts))`` convention.
     """
-    if lookback_seconds <= 0:
-        raise ValueError(
-            f"lookback_seconds must be > 0, got {lookback_seconds} "
-            "(a negative lookback makes the join condition "
-            "unsatisfiable and silently returns zero rows)"
-        )
+
     def side(df: DataFrame, etype: str, prefix: str) -> DataFrame:
         out = df
         if "event_time" not in out.columns:
@@ -371,15 +347,15 @@ def interval_join(
             ),
         )
         if out.isStreaming:
-            out = out.withWatermark(f"{prefix}_et", watermark)
+            out = out.withWatermark(f"{prefix}_et", "2 hours")
         return out
 
-    l = side(left_events, left_type, "l")
-    r = side(right_events, right_type, "r")
+    l = side(left_events, "click", "l")
+    r = side(right_events, "view", "r")
     cond = (
         (l["l_user_id"] == r["r_user_id"])
         & (r["r_et"] <= l["l_et"])
-        & (r["r_et"] >= l["l_et"] - F.expr(f"INTERVAL {lookback_seconds} SECONDS"))
+        & (r["r_et"] >= l["l_et"] - F.expr("INTERVAL 1800 SECONDS"))
     )
     return l.join(r, cond, how).select(
         "l_event_id",
@@ -390,14 +366,7 @@ def interval_join(
     )
 
 
-def interval_join_outer(
-    left_events: DataFrame,
-    right_events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "view",
-    lookback_seconds: int = 1800,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def interval_join_outer(left_events: DataFrame, right_events: DataFrame) -> DataFrame:
     """Left-outer :func:`interval_join`: every LEFT event appears at
     least once; events with no RIGHT match in the lookback window carry
     NULL ``r_event_id``/``lag_s`` — the "unattributed conversions" view
@@ -407,10 +376,6 @@ def interval_join_outer(
     return interval_join(
         left_events,
         right_events,
-        left_type,
-        right_type,
-        lookback_seconds,
-        watermark,
         how="left_outer",
     )
 
@@ -430,13 +395,7 @@ def run_to_memory(
     q.awaitTermination()
 
 
-def stream_near_dup_batch(
-    batch: DataFrame,
-    state_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def stream_near_dup_batch(batch: DataFrame, state_dir: str) -> DataFrame:
     """Micro-batch NEAR-duplicate filter for document streams — the
     ``foreachBatch`` body of a streaming near-dup pipeline.
 
@@ -451,7 +410,7 @@ def stream_near_dup_batch(
     stateful operator; near-dup uses the supported production pattern:
     foreachBatch with explicit on-disk state.
 
-    Per micro-batch: (1) drop docs within ``max_hamming`` of any
+    Per micro-batch: (1) drop docs within 3 of any
     previously-seen doc — banded (chunk, value) equi-join against the
     state table, never all-pairs; (2) within-batch greedy min-id
     near-dup filter; (3) append survivors' ``(id, simhash)`` to the
@@ -468,7 +427,9 @@ def stream_near_dup_batch(
 
     Scale shape: state grows by survivors only and is read once per
     batch; the cross join is banded; within-batch work is
-    micro-batch-sized."""
+    micro-batch-sized.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     from dgraph_dbpedia_spark.operators.dedup import (
         _simhash_chunks,
         near_dup_filter,
@@ -477,17 +438,12 @@ def stream_near_dup_batch(
     )
     from dgraph_dbpedia_spark.sources.parquet import fs_exists
 
-    if not 0 <= max_hamming <= 3:  # the 4-band pigeonhole bound;
-        # validate before marking any persist
-        raise ValueError(
-            f"max_hamming must be in [0, 3], got {max_hamming}"
-        )
     spark = batch.sparkSession
     # the batch fingerprints feed the state join, both within-batch
     # pair sides (via the anti-join view), and the state append — ONE
     # simhash fold per micro-batch, cached for all four consumers
     with CacheScope() as scope:
-        sh = scope.persist(simhash(batch, text_col, id_col))
+        sh = scope.persist(simhash(batch))
         # no state table yet = the first micro-batch; an EXISTING state
         # that cannot be read fails the batch loudly in the read, or
         # near-dups of registered docs would silently reach both the
@@ -495,7 +451,7 @@ def stream_near_dup_batch(
         if fs_exists(spark, state_dir):
             state = spark.read.parquet(state_dir)
             bb = sh.select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.col("simhash"),
                 F.posexplode(_simhash_chunks(F.col("simhash"))).alias(
                     "chunk", "val"
@@ -513,21 +469,21 @@ def stream_near_dup_batch(
                 bb.join(sb, ["chunk", "val"])
                 .where(
                     F.bit_count(F.col("simhash").bitwiseXOR(F.col("sim_s")))
-                    <= max_hamming
+                    <= 3
                 )
-                .select(F.col(id_col))
+                .select(F.col("doc_id"))
                 .distinct()
             )
-            clean = batch.join(dup_ids, id_col, "left_anti")
-            clean_sh = sh.join(dup_ids, id_col, "left_anti")
+            clean = batch.join(dup_ids, "doc_id", "left_anti")
+            clean_sh = sh.join(dup_ids, "doc_id", "left_anti")
         else:
             clean = batch
             clean_sh = sh
-        pairs = simhash_banded_pairs(clean_sh, id_col, max_hamming)
-        survivors = scope.checkpoint(near_dup_filter(clean, pairs, id_col))
+        pairs = simhash_banded_pairs(clean_sh, 3)
+        survivors = scope.checkpoint(near_dup_filter(clean, pairs))
         (
-            sh.join(survivors.select(F.col(id_col)), id_col, "left_semi")
-            .select(F.col(id_col), F.col("simhash"))
+            sh.join(survivors.select(F.col("doc_id")), "doc_id", "left_semi")
+            .select(F.col("doc_id"), F.col("simhash"))
             .write.mode("append")
             .parquet(state_dir)
         )

@@ -443,7 +443,7 @@ def test_dedup_increment_planted(spark):
         ],
         ["doc_id", "text"],
     )
-    out = dedup_increment(existing, batch, w=3, k=16, bands=8, threshold=0.5)
+    out = dedup_increment(existing, batch, bands=8, threshold=0.5)
     assert out.columns == ["doc_id", "text"]
     assert sorted(r["doc_id"] for r in out.collect()) == [101, 103]
     release(out)
@@ -470,7 +470,7 @@ def test_dedup_increment_killed_doc_does_not_bridge(spark):
         ],
         ["doc_id", "text"],
     )
-    out = dedup_increment(existing, batch, w=3, k=16, bands=16, threshold=0.3)
+    out = dedup_increment(existing, batch, bands=16, threshold=0.3)
     assert sorted(r["doc_id"] for r in out.collect()) == [101]
     release(out)
 
@@ -533,7 +533,7 @@ def test_dedup_composites_release_caches_on_component_failure(
         if composite == "dedup_increment":
             return dedup.dedup_increment(
                 docs.where("doc_id = 3"), docs.where("doc_id < 3"),
-                w=3, k=16, bands=8, threshold=0.5,
+                bands=8, threshold=0.5,
             )
         from dgraph_dbpedia_spark.operators.similarity import semantic_dedup
 
@@ -568,7 +568,7 @@ def test_minhash_join_cross_corpus(spark):
         ],
         ["doc_id", "text"],
     )
-    out = minhash_join(left, right, w=3, k=16, bands=8, threshold=0.3)
+    out = minhash_join(left, right, bands=8, threshold=0.3)
     got = {(r["a"], r["b"]): r["jaccard"] for r in out.collect()}
     assert got[(100, 1)] == 1.0
     assert (100, 2) in got and 0.3 <= got[(100, 2)] < 1.0
@@ -855,7 +855,7 @@ def test_ngram_containment_asymmetric(spark):
         [(1, long_doc), (2, quote), (3, "unrelated text about sailing")],
         ["doc_id", "text"],
     )
-    out = ngram_containment_pairs(df, w=3, threshold=0.9)
+    out = ngram_containment_pairs(df, threshold=0.9)
     assert len(persisted_frames(out)) == 2
     rows = {(r["a"], r["b"]): r for r in out.collect()}
     release(out)
@@ -865,7 +865,7 @@ def test_ngram_containment_asymmetric(spark):
     assert r["containment_b"] == 1.0 and r["containment_a"] < 0.3
 
     # and Jaccard at the same threshold finds nothing
-    j = ngram_jaccard_pairs(df, w=3, threshold=0.9)
+    j = ngram_jaccard_pairs(df, threshold=0.9)
     assert j.count() == 0
     release(j)
 
@@ -930,7 +930,7 @@ def test_ngram_novelty_graded_fraction(spark):
         ["doc_id", "text"],
     )
     out = {
-        r["doc_id"]: r for r in ngram_novelty(docs, ref, w=3).collect()
+        r["doc_id"]: r for r in ngram_novelty(docs, ref).collect()
     }
     assert set(out) == {1, 2, 3, 4}
     assert out[1]["novel_ratio"] == 0.0 and out[1]["n_wgrams"] == 4
@@ -986,7 +986,7 @@ def test_split_leakage_report_hand_computed(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     fractions = {"train": 0.5, "test": 0.25}  # remainder -> holdout
     out = split_leakage_report(
-        docs, fractions, w=3, k=16, bands=4, threshold=0.9
+        docs, fractions, threshold=0.9
     )
     got = {(r["split_a"], r["split_b"]): r for r in out.collect()}
     release(out)
@@ -1024,7 +1024,7 @@ def test_split_leakage_report_no_cross_pairs_empty(spark):
         [(i, text) for i in range(6)], "doc_id long, text string"
     )
     out = split_leakage_report(
-        docs, {"train": 1.0}, w=3, k=16, bands=4, threshold=0.9
+        docs, {"train": 1.0}, threshold=0.9
     )
     assert out.count() == 0
     release(out)

@@ -37,7 +37,7 @@ def test_decode_real_path_is_marked(spark, binary_docs):
 
 
 def test_frame_sample_one_to_many(spark, binary_docs):
-    out = frame_sample(binary_docs, every_n_bytes=64).collect()
+    out = frame_sample(binary_docs).collect()
     per_id = {}
     for r in out:
         per_id.setdefault(r["id"], []).append(r["frame_idx"])

@@ -408,7 +408,7 @@ def test_token_budget_sample_matches_host_model(spark, rows, budget):
     got = sorted(
         r["doc_id"]
         for r in token_budget_sample(
-            df, budget_tokens=budget, group_col="source", seed=1
+            df, budget_tokens=budget, seed=1
         ).collect()
     )
 

@@ -321,7 +321,7 @@ def test_rq_ivf_served_prunes_and_finds_twin(spark, emb, tmp_path):
     q = emb.orderBy("vec_id").limit(1).select(
         F.col("embedding").alias("q")
     )
-    out = rq_ivf_topk_served(served, cb, coarse, q, dims=64, k=5, n_probe=2)
+    out = rq_ivf_topk_served(served, cb, coarse, q, dims=64, k=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert (
         "PartitionFilters: [" in plan

@@ -455,7 +455,7 @@ def test_token_budget_sample_budget_and_determinism(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "source", "text"])
     out = token_budget_sample(
-        df, budget_tokens=35, group_col="source", seed=1
+        df, budget_tokens=35, seed=1
     )
     got = out.collect()
     per = {}
@@ -467,14 +467,14 @@ def test_token_budget_sample_budget_and_determinism(spark):
         assert len(kept) == 4, src
         assert all(r["n_tokens"] == 10 for r in kept)
     again = token_budget_sample(
-        df.repartition(7), budget_tokens=35, group_col="source", seed=1
+        df.repartition(7), budget_tokens=35, seed=1
     ).collect()
     assert sorted(r["doc_id"] for r in again) == sorted(
         r["doc_id"] for r in got
     )
     # a different seed picks a (almost surely) different prefix
     other = token_budget_sample(
-        df, budget_tokens=35, group_col="source", seed=2
+        df, budget_tokens=35, seed=2
     ).collect()
     assert sorted(r["doc_id"] for r in other) != sorted(
         r["doc_id"] for r in got
@@ -599,7 +599,7 @@ def test_source_mixture_report_hand_weights(spark):
     )
     got = {
         r["source"]: r.asDict()
-        for r in source_mixture_report(docs, group_col="source").collect()
+        for r in source_mixture_report(docs).collect()
     }
     assert got["a"]["n_docs"] == 2 and got["a"]["n_tokens"] == 9
     assert got["b"]["n_docs"] == 1 and got["b"]["n_tokens"] == 16
@@ -611,7 +611,7 @@ def test_source_mixture_report_hand_weights(spark):
     again = {
         tuple(r)
         for r in source_mixture_report(
-            docs.repartition(7), group_col="source"
+            docs.repartition(7)
         ).collect()
     }
     assert again == {tuple(r.values()) for r in got.values()}

@@ -48,6 +48,32 @@ def test_lsh_topk_finds_same_bucket_neighbor(spark, vectors, query):
     assert 3 not in ids
 
 
+@pytest.mark.parametrize(
+    "rows, error",
+    [
+        ([], None),
+        ([([1.0, 0.0, 0.0, 0.0],), ([0.0, 1.0, 0.0, 0.0],)], "exactly one query vector"),
+        ([(None,)], "NULL"),
+        ([([1.0, None, 0.0, 0.0],)], "NULL"),
+        ([([1.0, float("nan"), 0.0, 0.0],)], "non-finite"),
+        ([([float("inf"), 0.0, 0.0, 0.0],)], "non-finite"),
+    ],
+    ids=["empty", "multi_row", "null_vector", "null_component", "nan", "inf"],
+)
+def test_lsh_topk_degenerate_query(spark, vectors, rows, error):
+    """The sibling serve paths' contract: an empty query frame returns a
+    typed empty ``(vec_id, sim)`` frame; a multi-row frame, a NULL
+    vector and a NULL or non-finite component raise ``ValueError``."""
+    query = spark.createDataFrame(rows, "q array<double>")
+    if error is None:
+        out = lsh_bucketed_topk(vectors, query, k=3, dims=4, n_planes=4)
+        assert out.collect() == []
+        assert out.dtypes == [("vec_id", "bigint"), ("sim", "double")]
+    else:
+        with pytest.raises(ValueError, match=error):
+            lsh_bucketed_topk(vectors, query, k=3, dims=4, n_planes=4)
+
+
 def test_near_dup_pairs(spark, vectors):
     pairs = {(r["a"], r["b"]): r["sim"] for r in
              cosine_near_dup_pairs(vectors, threshold=0.95, dims=4, n_planes=4).collect()}
@@ -727,7 +753,7 @@ def test_semantic_dedup_accepts_trained_centroids(spark):
         ["vec_id", "embedding"],
     )
     e = emb.selectExpr("vec_id", "cast(embedding as array<double>) AS _e")
-    cent = ivf_train(e, n_centroids=2, n_iter=1, id_col="vec_id", vec_col="_e")
+    cent = ivf_train(e, n_centroids=2, n_iter=1, vec_col="_e")
     out = semantic_dedup(emb, threshold=0.999, centroids=cent)
     assert sorted(r["vec_id"] for r in out.collect()) == [1, 3]
 
@@ -979,7 +1005,7 @@ def test_pair_cosine_arrow_pinned_equal_to_native(spark):
         .where(F.col("a") < F.col("b"))
         .select(
             pair_cosine_arrow(6)("ea", "eb", "na", "nb").alias("sim_a"),
-            _pair_cosine_native("ea", "eb", "na", "nb", 6).alias("sim_n"),
+            _pair_cosine_native("ea", "eb", "na", "nb").alias("sim_n"),
         )
     )
     mism = pairs.where(
@@ -1047,7 +1073,7 @@ def test_pair_cosine_arrow_ragged_contract(spark):
     native = {
         r["id"]: r["sim"]
         for r in df.select(
-            "id", _pair_cosine_native("ea", "eb", "na", "nb", 6).alias("sim")
+            "id", _pair_cosine_native("ea", "eb", "na", "nb").alias("sim")
         ).collect()
     }
     assert arrow == native
@@ -1082,7 +1108,7 @@ def test_semantic_dedup_pairs_normalized_fast_path(spark):
         fast.select("a", "b")
         .join(vec.select(F.col("vec_id").alias("a"), F.col("v").alias("ea")), "a")
         .join(vec.select(F.col("vec_id").alias("b"), F.col("v").alias("eb")), "b")
-        .select("a", "b", _pair_cosine_native("ea", "eb", None, None, 6).alias("sim"))
+        .select("a", "b", _pair_cosine_native("ea", "eb", None, None).alias("sim"))
     )
     fa = {(r["a"], r["b"]): r["sim"] for r in fast.collect()}
     na = {(r["a"], r["b"]): r["sim"] for r in nat.collect()}
@@ -1423,7 +1449,7 @@ def test_embedding_drift_hand_computed(spark):
         ],
         "vec_id long, embedding array<double>, label int",
     )
-    out = embedding_drift(df, group_col="label")
+    out = embedding_drift(df)
     rows = {r["label"]: r for r in out.collect()}
     release(out)
     # group 0 centroid (2, 0); group 1 centroid (0, 3); global (1, 1.5)
@@ -1444,7 +1470,7 @@ def test_embedding_drift_hand_computed(spark):
         )
     )
     r1 = {
-        r["label"]: r for r in embedding_drift(ragged, "label").collect()
+        r["label"]: r for r in embedding_drift(ragged).collect()
     }[1]
     # group-1 centroid now (0, 2, 9): pos-2 mean divides by ITS count
     assert r1["n"] == 3
@@ -1518,7 +1544,7 @@ def test_jl_project_numpy_twin_and_degenerate_rows(spark):
     )
     got = {
         r["vec_id"]: r["e"]
-        for r in jl_project(df, 3, 4, round_decimals=6).collect()
+        for r in jl_project(df, 3, 4).collect()
     }
     P = np.asarray(plane_values(3, 4)).reshape(3, 4)
     s = math.sqrt(3.0 / 3)
@@ -1974,7 +2000,7 @@ def _knn_pair_kernel_mismatches(a, b):
         .where(F.col("_qid") != F.col("_nid"))
         .select(
             pair_cosine_arrow(6)("_qv", "_nv", "_qn", "_nn").alias("arr"),
-            _pair_cosine_native("_qv", "_nv", "_qn", "_nn", 6).alias("nat"),
+            _pair_cosine_native("_qv", "_nv", "_qn", "_nn").alias("nat"),
         )
     )
     return (

@@ -288,10 +288,10 @@ def test_interval_join_stream_matches_batch(
     ls = read_events_stream(spark, multi_file_events_dir, max_files_per_trigger=1)
     rs = read_events_stream(spark, multi_file_events_dir, max_files_per_trigger=1)
     run_to_memory(
-        interval_join(ls, rs, "click", "view", 1800), "ss_interval", "append"
+        interval_join(ls, rs), "ss_interval", "append"
     )
     got = spark.table("ss_interval")
-    want = interval_join(events_batch, events_batch, "click", "view", 1800)
+    want = interval_join(events_batch, events_batch)
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0
 
@@ -313,7 +313,7 @@ def test_interval_join_bounds_inclusive(spark):
     df = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
-    out = interval_join(df, df, "click", "view", 1800)
+    out = interval_join(df, df)
     got = {(r["r_event_id"], r["lag_s"]) for r in out.collect()}
     assert got == {(2, 1800), (3, 0)}
 
@@ -338,10 +338,10 @@ def test_interval_join_outer_batch_keeps_unmatched_left(spark):
     df = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
-    outer = interval_join_outer(df, df, "click", "view", 1800)
+    outer = interval_join_outer(df, df)
     got = {(r["l_event_id"], r["r_event_id"], r["lag_s"]) for r in outer.collect()}
     assert got == {(1, 2, 600), (3, None, None)}
-    inner = interval_join(df, df, "click", "view", 1800)
+    inner = interval_join(df, df)
     assert outer.where(F.col("r_event_id").isNotNull()).exceptAll(inner).count() == 0
 
 
@@ -359,12 +359,12 @@ def test_interval_join_outer_stream_subset_of_batch(
     ls = read_events_stream(spark, multi_file_events_dir, max_files_per_trigger=1)
     rs = read_events_stream(spark, multi_file_events_dir, max_files_per_trigger=1)
     run_to_memory(
-        interval_join_outer(ls, rs, "click", "view", 1800),
+        interval_join_outer(ls, rs),
         "ss_interval_outer",
         "append",
     )
     got = spark.table("ss_interval_outer")
-    want = interval_join_outer(events_batch, events_batch, "click", "view", 1800)
+    want = interval_join_outer(events_batch, events_batch)
     got_matched = got.where(F.col("r_event_id").isNotNull())
     want_matched = want.where(F.col("r_event_id").isNotNull())
     assert got_matched.count() == want_matched.count() > 0
@@ -393,7 +393,7 @@ def test_interval_join_subsecond_floor_semantics(spark):
         rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
     out = {(r["r_event_id"], r["lag_s"]) for r in
-           interval_join(df, df, "click", "view", 1800).collect()}
+           interval_join(df, df).collect()}
     assert out == {(2, 0), (3, 1800)}
 
 

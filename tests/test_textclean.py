@@ -44,7 +44,7 @@ def test_pii_redact(spark, docs):
 
 
 def test_repetition_score(spark, docs):
-    rows = {r["doc_id"]: r for r in repetition_score(docs, n=3).collect()}
+    rows = {r["doc_id"]: r for r in repetition_score(docs).collect()}
     # doc 4: 8 tokens alternating -> 2 distinct -> ttr 0.25; 6 trigrams,
     # only 2 distinct ("aaa bbb aaa", "bbb aaa bbb") -> dup ratio 4/6
     assert rows[4]["ttr"] == 0.25

@@ -225,7 +225,7 @@ def test_frequent_ngrams_doc_frequency_and_determinism(spark):
         (4, "unique words only here"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = [(r["ngram"], r["n_docs"]) for r in frequent_ngrams(docs, n=3, k=5).collect()]
+    got = [(r["ngram"], r["n_docs"]) for r in frequent_ngrams(docs, k=5).collect()]
     assert got[0] == (boiler, 3)
     assert all(c >= 2 for _, c in got)
     # deterministic ordering within equal counts
@@ -243,7 +243,7 @@ def test_frequent_ngrams_no_refolded_filter(spark):
 
     docs = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
     plan = (
-        frequent_ngrams(docs, n=3, k=5)
+        frequent_ngrams(docs, k=5)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -315,7 +315,7 @@ def test_perplexity_buckets_exact(spark):
         (6, "en", ""),  # zero tokens -> NULL bits -> last bucket
     ]
     df = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
-    out = perplexity_buckets(df, n_buckets=3, group_col="lang")
+    out = perplexity_buckets(df, n_buckets=3)
     got = {r["doc_id"]: r for r in out.collect()}
     release(out)
     assert len(got) == 6
@@ -344,7 +344,7 @@ def test_perplexity_buckets_approx_keeps_null_groups(spark):
         (4, "xx", ""),  # group whose only doc has NULL bits
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    out = perplexity_buckets(df, n_buckets=2, group_col="lang")
+    out = perplexity_buckets(df, n_buckets=2)
     got = {r["doc_id"]: r for r in out.collect()}
     release(out)
     assert set(got) == {1, 2, 3, 4}
@@ -493,7 +493,7 @@ def test_hashed_doc_embeddings_numpy_twin(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: r["e"]
-        for r in hashed_doc_embeddings(df, dims=8, seed=9).collect()
+        for r in hashed_doc_embeddings(df, dims=8).collect()
     }
     assert len(got) == 4
     assert got[2] is None and got[3] is None

@@ -119,7 +119,7 @@ def test_category_shift_report_hand_computed(spark):
     )
     got = {
         r["source"]: r
-        for r in category_shift_report(old, new, "source").collect()
+        for r in category_shift_report(old, new).collect()
     }
     assert set(got) == {"a", "b", "c"}
     assert (got["a"]["n_old"], got["a"]["n_new"]) == (4, 6)
@@ -146,7 +146,7 @@ def test_category_shift_report_null_category_single_row(spark):
     new = spark.createDataFrame(
         [(1, "a"), (2, None)], ["doc_id", "source"]
     )
-    rows = category_shift_report(old, new, "source").collect()
+    rows = category_shift_report(old, new).collect()
     null_rows = [r for r in rows if r["source"] is None]
     assert len(null_rows) == 1
     r = null_rows[0]

@@ -1,4 +1,6 @@
-"""Synthetic reference-shaped TTL corpus generator, Spark-native.
+"""Synthetic data for the tools: a reference-shaped TTL corpus
+generator, Spark-native, plus the scale tools' hashed vectors and their
+on-disk size helper.
 
 Builds a ``{root}/{lang}/{dataset}_{lang}.ttl`` tree shaped like the
 reference's core-i18n input (DbpediaToParquetSparkApp.scala:113-135
@@ -16,12 +18,19 @@ scripts, they import it as ``benchgen``.
 Each "file" is a directory of text parts under the ``.ttl`` name; the
 ingest reader (``spark.read.text``) and the driver-side catalog
 (``os.path.exists``) both accept that transparently.
+
+``hashed_vector`` is the ``scale_*`` tools' embedding generator and
+``tree_bytes`` their (and ``pipeline_bench.py``'s) output-size reader.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dgraph_dbpedia_spark.functions.hashing import hash64
 
 LABEL_P = "<http://www.w3.org/2000/01/rdf-schema#label>"
 SUBJECT_P = "<http://purl.org/dc/terms/subject>"
@@ -178,3 +187,29 @@ def generate_ttl_corpus(
         _write(geo, f"{root}/{lang}/geo_coordinates_{lang}.ttl")
         total += (n_subjects + 1) // 2
     return total
+
+
+def hashed_vector(idc: Column, dims: int, seed: int) -> Column:
+    """A ``dims``-wide vector in [-1, 1) per id: component ``d`` is the
+    seeded cross-engine md5 coin of ``"<id>:<d>"``, scaled. The same ids
+    and seed give the same vectors on any engine or partitioning."""
+    return F.array(*[
+        (
+            F.pmod(
+                hash64(F.concat(idc.cast("string"), F.lit(f":{d}")), seed=seed),
+                F.lit(1_000_000),
+            )
+            / 500_000.0
+            - 1.0
+        )
+        for d in range(dims)
+    ])
+
+
+def tree_bytes(root: str) -> int:
+    """Total size of the files under ``root``."""
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(root)
+        for f in fs
+    )

@@ -30,7 +30,7 @@ def bench_pipelines(spark, sf: float) -> dict[str, float]:
     """Ingest and transform wall-clock + triples/s on a generated
     corpus. Corpus generation and the throughput-denominator counts run
     outside the timed windows."""
-    from benchgen import LANGS, generate_ttl_corpus
+    from benchgen import LANGS, generate_ttl_corpus, tree_bytes
     from dgraph_dbpedia_spark.plans.ingest import ingest
     from dgraph_dbpedia_spark.plans.transform import TransformConfig, transform
 
@@ -97,13 +97,6 @@ def bench_pipelines(spark, sf: float) -> dict[str, float]:
                 transform_samples.append(round(took, 3))
         transform_s = min(transform_samples)
         out_triples = sum(df.count() for df in outputs.values())
-
-        def tree_bytes(root: str) -> int:
-            return sum(
-                os.path.getsize(os.path.join(d, f))
-                for d, _, fs in os.walk(root)
-                for f in fs
-            )
 
         parquet_bytes = tree_bytes(f"{work}/parquet")
         rdf_gz_bytes = tree_bytes(f"{work}/rdf")

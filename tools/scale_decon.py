@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from benchgen import hashed_vector
 from dgraph_dbpedia_spark.session import build_session
 
 TIERS = [0.1, 0.2, 0.3, 0.45]  # last tier is the below-threshold control
@@ -44,33 +45,16 @@ def main() -> None:
     spark = build_session(app_name="scale-decon")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from dgraph_dbpedia_spark.functions.hashing import hash64
     from dgraph_dbpedia_spark.operators.similarity import (
         semantic_decontaminate,
     )
 
-    def vec(idc, seed: int):
-        return F.array(*[
-            (
-                F.pmod(
-                    hash64(
-                        F.concat(idc.cast("string"), F.lit(f":{d}")),
-                        seed=seed,
-                    ),
-                    F.lit(1_000_000),
-                )
-                / 500_000.0
-                - 1.0
-            )
-            for d in range(dims)
-        ])
-
     base = spark.range(n).select(
-        F.col("id").alias("vec_id"), vec(F.col("id"), 7).alias("embedding")
+        F.col("id").alias("vec_id"), hashed_vector(F.col("id"), dims, 7).alias("embedding")
     )
     bench = spark.range(n_bench).select(
         (F.col("id") + 10_000_000).alias("vec_id"),
-        vec(F.col("id") + 10_000_000, 11).alias("embedding"),
+        hashed_vector(F.col("id") + 10_000_000, dims, 11).alias("embedding"),
     )
     # planted leaks: benchmark vector i mixed with an independent
     # perturbation at tier t = TIERS[i % len(TIERS)] — cosine to its
@@ -84,8 +68,8 @@ def main() -> None:
             src.select(
                 (F.col("k") + 20_000_000).alias("vec_id"),
                 F.zip_with(
-                    vec(F.col("k") + 10_000_000, 11),
-                    vec(F.col("k") + 30_000_000, 13),
+                    hashed_vector(F.col("k") + 10_000_000, dims, 11),
+                    hashed_vector(F.col("k") + 30_000_000, dims, 13),
                     lambda b, p: b + F.lit(float(t)) * p,
                 ).alias("embedding"),
                 F.lit(ti).alias("tier"),

@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from benchgen import hashed_vector
 from dgraph_dbpedia_spark.session import build_session
 
 
@@ -33,7 +34,6 @@ def main() -> None:
     spark = build_session(app_name="scale-jl")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from dgraph_dbpedia_spark.functions.hashing import hash64
     from dgraph_dbpedia_spark.operators.similarity import (
         cosine_topk,
         jl_project,
@@ -41,23 +41,8 @@ def main() -> None:
         jl_topk,
     )
 
-    def vec(idc):
-        return F.array(*[
-            (
-                F.pmod(
-                    hash64(
-                        F.concat(idc.cast("string"), F.lit(f":{d}")), seed=7
-                    ),
-                    F.lit(1_000_000),
-                )
-                / 500_000.0
-                - 1.0
-            )
-            for d in range(dims)
-        ])
-
     base = spark.range(n).select(
-        F.col("id").alias("vec_id"), vec(F.col("id")).alias("embedding")
+        F.col("id").alias("vec_id"), hashed_vector(F.col("id"), dims, 7).alias("embedding")
     )
     twins = base.where(F.col("vec_id") < n_queries).select(
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"

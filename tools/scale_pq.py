@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from benchgen import hashed_vector, tree_bytes
 from dgraph_dbpedia_spark.session import build_session
 
 
@@ -39,7 +40,6 @@ def main() -> None:
     spark = build_session(app_name="scale-pq")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from dgraph_dbpedia_spark.functions.hashing import hash64
     from dgraph_dbpedia_spark.operators.pq import (
         pq_encode,
         pq_rerank_topk,
@@ -47,23 +47,8 @@ def main() -> None:
         pq_train,
     )
 
-    def vec(idc):
-        return F.array(*[
-            (
-                F.pmod(
-                    hash64(
-                        F.concat(idc.cast("string"), F.lit(f":{d}")), seed=7
-                    ),
-                    F.lit(1_000_000),
-                )
-                / 500_000.0
-                - 1.0
-            )
-            for d in range(dims)
-        ])
-
     base = spark.range(n).select(
-        F.col("id").alias("vec_id"), vec(F.col("id")).alias("embedding")
+        F.col("id").alias("vec_id"), hashed_vector(F.col("id"), dims, 7).alias("embedding")
     )
     # plant one identical twin per future query vector (queries are
     # vec_ids 0..n_queries-1; twins live at +10M)
@@ -86,13 +71,6 @@ def main() -> None:
     encode_s = round(time.perf_counter() - t0, 3)
     codes = spark.read.parquet(f"{work}/codes")
     base.select("vec_id", "embedding").write.parquet(f"{work}/floats")
-
-    def tree_bytes(root: str) -> int:
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for d, _, fs in os.walk(root)
-            for f in fs
-        )
 
     code_bytes = tree_bytes(f"{work}/codes")
     float_bytes = tree_bytes(f"{work}/floats")

@@ -23,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from benchgen import hashed_vector, tree_bytes
 from dgraph_dbpedia_spark.session import build_session
 
 
@@ -34,7 +35,6 @@ def main() -> None:
     spark = build_session(app_name="scale-rq")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from dgraph_dbpedia_spark.functions.hashing import hash64
     from dgraph_dbpedia_spark.operators.rq import (
         rq_encode,
         rq_rerank_topk,
@@ -42,23 +42,8 @@ def main() -> None:
         rq_train,
     )
 
-    def vec(idc):
-        return F.array(*[
-            (
-                F.pmod(
-                    hash64(
-                        F.concat(idc.cast("string"), F.lit(f":{d}")), seed=7
-                    ),
-                    F.lit(1_000_000),
-                )
-                / 500_000.0
-                - 1.0
-            )
-            for d in range(dims)
-        ])
-
     base = spark.range(n).select(
-        F.col("id").alias("vec_id"), vec(F.col("id")).alias("embedding")
+        F.col("id").alias("vec_id"), hashed_vector(F.col("id"), dims, 7).alias("embedding")
     )
     twins = base.where(F.col("vec_id") < n_queries).select(
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
@@ -79,13 +64,6 @@ def main() -> None:
     encode_s = round(time.perf_counter() - t0, 3)
     codes = spark.read.parquet(f"{work}/codes")
     base.select("vec_id", "embedding").write.parquet(f"{work}/floats")
-
-    def tree_bytes(root: str) -> int:
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for d, _, fs in os.walk(root)
-            for f in fs
-        )
 
     code_bytes = tree_bytes(f"{work}/codes")
     float_bytes = tree_bytes(f"{work}/floats")
