@@ -57,12 +57,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _q_topk_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return top_k_per_group(docs, ["lang"], "source", 3, count_col="cnt")
+    return top_k_per_group(docs, "source", 3, count_col="cnt")
 
 
 def _q_topk_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    return filter_to_top_k(docs, ["lang"], "source", 3).select(
+    return filter_to_top_k(docs, "source", 3).select(
         "doc_id", "lang", "source"
     )
 
@@ -262,8 +262,8 @@ def _q_rollup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.stats import counts_per_group, rollup_group
 
     docs = _t(spark, sf_dir, "documents")
-    counts = counts_per_group(docs, "lang", "n")
-    return rollup_group(counts, "lang", lambda c: c.startswith("e"), "e*")
+    counts = counts_per_group(docs)
+    return rollup_group(counts, lambda c: c.startswith("e"), "e*")
 
 
 def _q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -600,7 +600,7 @@ def _q_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
+    pairs = minhash_dedup_pairs(docs, threshold=0.4)
     out = dedup_corpus(docs, pairs).select("doc_id", "lang", "source")
     release(pairs)
     return out
@@ -768,7 +768,7 @@ def _q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
+    pairs = minhash_dedup_pairs(docs, threshold=0.4)
     clusters = dedup_clusters_star(docs.select("doc_id"), pairs)
     release(pairs)
     return dedup_report(clusters)
@@ -923,9 +923,7 @@ def _q_pq_ivf_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     codes, cb, coarse = _served_pq_index(spark, sf_dir)
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
-    return pq_ivf_topk_served(
-        codes, cb, coarse, q, dims=64, k=5
-    )
+    return pq_ivf_topk_served(codes, cb, coarse, q, k=5)
 
 
 def _q_pq_ivf_rerank_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -946,7 +944,6 @@ def _q_pq_ivf_rerank_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         coarse,
         emb.where(F.col("vec_id") > 0),
         q,
-        dims=64,
         k=5,
         shortlist_n=50,
     )
@@ -1476,9 +1473,8 @@ def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_stopwords=1,
         ),
         near_dup_threshold=0.4,
-        w=3, k=16, bands=4,
         decontaminate_w=4,
-        alpha=0.5, seed=2,
+        alpha=0.5,
     )
     return out.select("doc_id", "lang", "source")
 
@@ -1506,12 +1502,11 @@ def _q_pretraining_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_stopwords=1,
         ),
         near_dup_threshold=0.4,
-        w=3, k=16, bands=4,
         decontaminate_w=4,
-        alpha=0.5, seed=2,
+        alpha=0.5,
         chunk_tokens=32, overlap=8,
         fractions={"train": 0.8, "val": 0.1, "test": 0.1},
-        split_seed=1, epoch=3, n_shards=4,
+        n_shards=4,
     )
 
 
@@ -1524,7 +1519,7 @@ def _q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return temperature_sample(
-        docs, group_col="lang", alpha=0.5, seed=2
+        docs, alpha=0.5
     ).select("doc_id", "lang", "source")
 
 
@@ -1622,7 +1617,7 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.dedup import minhash_dedup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
+    return minhash_dedup_pairs(docs, threshold=0.4)
 
 
 def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1651,7 +1646,7 @@ def _q_near_dup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
+    pairs = minhash_dedup_pairs(docs, threshold=0.4)
     return near_dup_filter(docs, pairs).select("doc_id", "lang", "source")
 
 
@@ -2244,9 +2239,7 @@ def _q_rq_ivf_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, rcb = _served_rq_index(spark, sf_dir)
     _, centroids = _served_ivf_index(spark, sf_dir)
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
-    return rq_ivf_topk_served(
-        codes, rcb, centroids, q, dims=64, k=5
-    )
+    return rq_ivf_topk_served(codes, rcb, centroids, q, k=5)
 
 
 def _q_rq_rerank_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2544,7 +2537,7 @@ def _q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    return enrich_events(events, dim, "user_id").groupBy("c_mktsegment").agg(
+    return enrich_events(events, dim).groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
     )
@@ -2637,7 +2630,7 @@ def _q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
+    pairs = minhash_dedup_pairs(docs, threshold=0.4)
     out = dedup_clusters_star(docs, pairs)
     release(pairs)
     return out
@@ -3083,7 +3076,7 @@ def _q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = ngram_jaccard_pairs(
         docs, threshold=0.4, max_shingle_freq=1000
     )
-    cands = minhash_dedup_pairs(docs, w=3, k=16, bands=4, threshold=0.4)
+    cands = minhash_dedup_pairs(docs, threshold=0.4)
     # the two pair frames carry their persisted shingle handles (the
     # _q_ngram_jaccard posture — the suite's clearCache reclaims them;
     # releasing here would force a recompute inside the audit join)
@@ -3395,18 +3388,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # md5-derived hash pipeline (functions/hashing.py) in DuckDB SQL
 
 
-def _sql_hash64(expr: str, seed: int | None = None) -> str:
-    if seed is not None:
-        expr = f"({expr} || '#{seed}')"
-    return f"('0x' || substring(md5({expr}), 1, 15))::BIGINT"
-
-
-# ONE tokenizer definition per engine: the SQL twin comes from
-# functions/hashing.tokens_sql (explicit Java-∩-RE2 whitespace class —
-# bare \s diverges between the engines on U+000B)
+# ONE md5 recipe and ONE tokenizer definition per engine: the SQL twins
+# come from functions/hashing (tokens_sql's explicit Java-∩-RE2
+# whitespace class — bare \s diverges between the engines on U+000B)
 from dgraph_dbpedia_spark.functions.hashing import (  # noqa: E402
+    hash64_sql,
     tokens_sql as _sql_tokens,
 )
+
+
+def _sql_hash64(expr: str, seed: int | None = None) -> str:
+    """:func:`hash64_sql` with the ``#<seed>`` family suffix."""
+    if seed is not None:
+        expr = f"({expr} || '#{seed}')"
+    return hash64_sql(expr)
+
 
 _SQL_TOKS = _sql_tokens("text")
 
@@ -3452,7 +3448,7 @@ def _sql_minhash_base(w: int, k: int, src: str = "documents") -> str:
         th AS (
             SELECT doc_id, {token_hashes_sql(_SQL_TOKS)} AS th FROM {src}),
         sh AS (
-            SELECT doc_id, {rolling_shingle_hashes_sql('th', w)} AS sh
+            SELECT doc_id, {rolling_shingle_hashes_sql(w)} AS sh
             FROM th),
         hbase AS (
             SELECT doc_id, sh,

@@ -4,7 +4,7 @@ lines: first the full detail {"metric": ..., "value": total_sec,
 "unit": "sec", "queries": {name: sec}, "sf": ..., "pipelines": ...},
 then a COMPACT summary (totals + pipelines + 5 slowest queries) as the
 LAST line — the driver keeps only a bounded stdout tail and parses the
-final line, and the 70-query detail line overflows that window.
+final line, and the 169-query detail line overflows that window.
 
 Each query is executed with a `noop`-format write so EVERY output column
 is evaluated — a plain count() lets Catalyst prune the projection and
@@ -307,7 +307,7 @@ def main() -> None:
         print(f"BENCH_DETAIL.json not written: {e}", file=sys.stderr)
     # ...then a COMPACT summary as the LAST line: the driver records a
     # bounded stdout tail (2000 chars) and json-parses the final line;
-    # the detail line with 70 query timings overflows that window and
+    # the detail line with 169 query timings overflows that window and
     # left BENCH_r06/r07 "parsed": null. Totals + pipelines + the five
     # slowest queries fit in ~700 chars with room to spare.
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])

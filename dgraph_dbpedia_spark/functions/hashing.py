@@ -160,6 +160,7 @@ def positional_shingle_hashes_sql(toks_h_expr: str, w: int) -> str:
     )
 
 
-def rolling_shingle_hashes_sql(toks_h_expr: str, w: int) -> str:
-    """DuckDB twin of :func:`rolling_shingle_hashes`."""
-    return f"list_distinct({positional_shingle_hashes_sql(toks_h_expr, w)})"
+def rolling_shingle_hashes_sql(w: int) -> str:
+    """DuckDB twin of :func:`rolling_shingle_hashes` over the token-hash
+    list column ``th``."""
+    return f"list_distinct({positional_shingle_hashes_sql('th', w)})"

@@ -42,8 +42,6 @@ from dgraph_dbpedia_spark.operators.cachectl import CacheScope, persisted_frames
 
 def exact_dedup(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     normalize: bool = False,
     keep_by: str | None = None,
 ) -> DataFrame:
@@ -69,30 +67,32 @@ def exact_dedup(
     metadata). Default stays min-id (oracle- and pipeline-stable).
 
     Scale shape is unchanged either way: one partial-aggregable
-    groupBy on the md5 key."""
-    text = F.col(text_col)
+    groupBy on the md5 key.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    text = F.col("text")
     if normalize:
         from dgraph_dbpedia_spark.functions.hashing import WS_CLASS
 
         text = F.trim(F.regexp_replace(F.lower(text), WS_CLASS + "+", " "))
     if keep_by is None:
-        rep = F.min(id_col).alias(id_col)
+        rep = F.min("doc_id").alias("doc_id")
     else:
         rep = (
             F.min(
                 F.struct(
                     F.col(keep_by).isNull().cast("int").alias("__nul"),
                     F.col(keep_by),
-                    F.col(id_col),
+                    F.col("doc_id"),
                 )
             )
-            .getField(id_col)
-            .alias(id_col)
+            .getField("doc_id")
+            .alias("doc_id")
         )
     return df.groupBy(F.md5(text).alias("fp")).agg(rep)
 
 
-def _hashed_shingled(df: DataFrame, text_col: str, id_col: str, w: int) -> DataFrame:
+def _hashed_shingled(df: DataFrame, id_col: str, w: int) -> DataFrame:
     """Shingle sets as int64 hashes: 8-byte join/intersect keys instead
     of multi-word strings. Distinctness is preserved (60-bit hashes;
     collision probability is negligible at any realistic doc size),
@@ -114,9 +114,11 @@ def _hashed_shingled(df: DataFrame, text_col: str, id_col: str, w: int) -> DataF
     w=13. Behind the barrier ``sh`` is a generated attribute, so the
     inferred filter tests the materialized array instead of re-deriving
     it (and the barrier's own inferred filter constant-folds:
-    size(array(struct)) = 1)."""
+    size(array(struct)) = 1).
+
+    Fixed columns: text ``text``."""
     toks_h = df.select(
-        F.col(id_col), token_hashes(tokens(F.col(text_col))).alias("th")
+        F.col(id_col), token_hashes(tokens(F.col("text"))).alias("th")
     )
     return toks_h.select(
         F.col(id_col),
@@ -155,9 +157,7 @@ def ngram_jaccard_pairs(
 
     Fixed columns: id ``doc_id``, text ``text``."""
     with CacheScope() as scope:
-        counts, persisted = _ngram_pair_counts(
-            scope, df, "text", "doc_id", 3, max_shingle_freq
-        )
+        counts, persisted = _ngram_pair_counts(scope, df, max_shingle_freq)
         out = (
             counts.withColumn(
                 "jaccard",
@@ -175,20 +175,19 @@ def ngram_jaccard_pairs(
 def _ngram_pair_counts(
     scope: CacheScope,
     df: DataFrame,
-    text_col: str,
-    id_col: str,
-    w: int,
     max_shingle_freq: int | None,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """Shared sparse pair-count skeleton of the shingle-overlap family:
     ``(a, b, inter, na, nb)`` for every pair (a < b) sharing at least
-    one (capped) shingle, plus the frames it persisted through
-    ``scope`` (the caller hands them to its result)."""
+    one (capped) 3-token shingle, plus the frames it persisted through
+    ``scope`` (the caller hands them to its result).
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     # persist: the shingled frame feeds four plan branches (two join
     # sides + two size lookups); without it Catalyst recomputes the
     # shingling per branch (no cross-branch subplan sharing, SURVEY §4)
-    sh = scope.persist(_hashed_shingled(df, text_col, id_col, w))
-    exploded = sh.select(F.col(id_col), F.explode("sh").alias("shingle"))
+    sh = scope.persist(_hashed_shingled(df, "doc_id", 3))
+    exploded = sh.select(F.col("doc_id"), F.explode("sh").alias("shingle"))
     if max_shingle_freq is not None:
         # drop degenerate stop-shingles: they blow up the join and carry
         # no discriminative signal
@@ -202,17 +201,17 @@ def _ngram_pair_counts(
     # set sizes from the SAME (possibly capped) universe as the
     # intersection — shingles are distinct per doc, so the exploded row
     # count per id is the set size
-    sizes = exploded.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = exploded.select(F.col(id_col).alias("a"), "shingle")
-    b = exploded.select(F.col(id_col).alias("b"), "shingle")
+    sizes = exploded.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a = exploded.select(F.col("doc_id").alias("a"), "shingle")
+    b = exploded.select(F.col("doc_id").alias("b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .where(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    na = sizes.select(F.col(id_col).alias("a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("b"), F.col("n").alias("nb"))
+    na = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb"))
     counts = inter.join(na, "a").join(nb, "b")
     persisted = [sh] if max_shingle_freq is None else [sh, exploded]
     return counts, persisted
@@ -240,9 +239,7 @@ def ngram_containment_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     ca = F.round(F.col("inter") / F.col("na"), 6)
     cb = F.round(F.col("inter") / F.col("nb"), 6)
     with CacheScope() as scope:
-        counts, persisted = _ngram_pair_counts(
-            scope, df, "text", "doc_id", 3, 1000
-        )
+        counts, persisted = _ngram_pair_counts(scope, df, 1000)
         out = (
             counts.withColumn("containment_a", ca)
             .withColumn("containment_b", cb)
@@ -273,8 +270,8 @@ def minhash_lane_coeffs(k: int) -> list[tuple[int, int]]:
     ]
 
 
-def _minhash_lanes_arrow(k: int):
-    """Vectorized twin of the signature lanes: the k Carter-Wegman
+def _minhash_lanes_arrow():
+    """Vectorized twin of the signature lanes: the 16 Carter-Wegman
     multiply-add-mod passes and the per-lane min run in numpy inside an
     Arrow batch (shingle md5 hashing stays JVM-native upstream).
     Integer arithmetic under 2^62 — bit-identical to the native
@@ -283,7 +280,7 @@ def _minhash_lanes_arrow(k: int):
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
-    coeffs = minhash_lane_coeffs(k)
+    coeffs = minhash_lane_coeffs(16)
     A = np.asarray([a for a, _ in coeffs], dtype=np.int64)[:, None]
     B = np.asarray([b for _, b in coeffs], dtype=np.int64)[:, None]
 
@@ -319,9 +316,7 @@ def minhash_signatures(df: DataFrame) -> DataFrame:
     traversals.
 
     Fixed columns: id ``doc_id``, text ``text``."""
-    return _sigs_from_hashed(
-        _hashed_shingled(df, "text", "doc_id", 3), "doc_id", 16
-    )
+    return _sigs_from_hashed(_hashed_shingled(df, "doc_id", 3))
 
 
 def _signatures_from_hashed(sh: DataFrame, id_col: str, k: int) -> DataFrame:
@@ -346,13 +341,13 @@ def _signatures_from_hashed(sh: DataFrame, id_col: str, k: int) -> DataFrame:
 
 def _lsh_buckets(
     signatures: DataFrame,
-    id_col: str,
     bands: int,
     rows_per_band: int,
 ) -> DataFrame:
-    """Explode a signature frame into its ``(id, band, bucket)`` LSH
-    bucket memberships — the shared banding step of the within-corpus
-    candidate self-join and the cross-corpus increment join."""
+    """Explode a signature frame into its ``(doc_id, band, bucket)``
+    LSH bucket memberships — the shared banding step of the
+    within-corpus candidate self-join and the cross-corpus increment
+    join."""
     band_hashes = F.array(
         *[
             hash64(
@@ -368,25 +363,23 @@ def _lsh_buckets(
         ]
     )
     return signatures.select(
-        F.col(id_col), F.posexplode(band_hashes).alias("band", "bucket")
+        F.col("doc_id"), F.posexplode(band_hashes).alias("band", "bucket")
     )
 
 
 def minhash_lsh_candidates(
     signatures: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
 ) -> DataFrame:
     """LSH banding: documents agreeing on all rows of any band become a
     candidate pair. Returns distinct ``(a, b)`` with a < b.
 
     One explode (doc x bands) + one groupBy-join on (band, bucket-hash):
     shuffle volume = #docs * #bands, never O(n^2).
-    """
-    buckets = _lsh_buckets(signatures, id_col, bands, rows_per_band)
-    a = buckets.select(F.col(id_col).alias("a"), "band", "bucket")
-    b = buckets.select(F.col(id_col).alias("b"), "band", "bucket")
+
+    Fixed: 4 bands of 4 rows; column id ``doc_id``."""
+    buckets = _lsh_buckets(signatures, 4, 4)
+    a = buckets.select(F.col("doc_id").alias("a"), "band", "bucket")
+    b = buckets.select(F.col("doc_id").alias("b"), "band", "bucket")
     return (
         a.join(b, ["band", "bucket"])
         .where(F.col("a") < F.col("b"))
@@ -395,36 +388,33 @@ def minhash_lsh_candidates(
     )
 
 
-def _sigs_from_hashed(sh: DataFrame, id_col: str, k: int) -> DataFrame:
-    """``(id, sig)`` from a hashed-shingle frame through the Arrow lane
-    kernel."""
+def _sigs_from_hashed(sh: DataFrame) -> DataFrame:
+    """``(doc_id, sig)`` from a hashed-shingle frame through the Arrow
+    lane kernel: 16 signature lanes."""
     return sh.select(
-        F.col(id_col), _minhash_lanes_arrow(k)(F.col("sh")).alias("sig")
+        F.col("doc_id"), _minhash_lanes_arrow()(F.col("sh")).alias("sig")
     )
 
 
 def minhash_dedup_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    k: int = 16,
-    bands: int = 4,
     threshold: float = 0.5,
 ) -> DataFrame:
     """MinHash+LSH near-dup pipeline: signatures -> banded candidates ->
     exact-Jaccard verification of candidates only. Returns
-    ``(a, b, jaccard)`` pairs above threshold."""
-    rows_per_band = k // bands
+    ``(a, b, jaccard)`` pairs above threshold.
+
+    Fixed: 3-token shingles, 16 signature lanes in 4 bands of 4 rows;
+    columns id ``doc_id``, text ``text``."""
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     with CacheScope() as scope:
         # ONE shingle-hashing pass feeds signatures AND the verify step
-        sh = scope.persist(_hashed_shingled(df, text_col, id_col, w))
-        sigs = _sigs_from_hashed(sh, id_col, k)
-        cands = minhash_lsh_candidates(sigs, id_col, bands, rows_per_band)
-        sa = sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sh_a"))
-        sb = sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sh_b"))
+        sh = scope.persist(_hashed_shingled(df, "doc_id", 3))
+        sigs = _sigs_from_hashed(sh)
+        cands = minhash_lsh_candidates(sigs)
+        sa = sh.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a"))
+        sb = sh.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b"))
         out = (
             cands.join(sa, "a")
             .join(sb, "b")
@@ -466,10 +456,11 @@ def _simhash_fold_arrow():
     return pandas_udf(fold, LongType())
 
 
-def _token_hashes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """``(id, hs)``: the cross-engine hash of every whitespace token."""
-    hs = F.transform(tokens(F.col(text_col)), lambda t: hash64(t))
-    return df.select(F.col(id_col), hs.alias("hs"))
+def _token_hashes(df: DataFrame) -> DataFrame:
+    """``(doc_id, hs)``: the cross-engine hash of every whitespace token
+    of ``text``."""
+    hs = F.transform(tokens(F.col("text")), lambda t: hash64(t))
+    return df.select(F.col("doc_id"), hs.alias("hs"))
 
 
 def simhash(df: DataFrame) -> DataFrame:
@@ -484,7 +475,7 @@ def simhash(df: DataFrame) -> DataFrame:
     unaffected.
 
     Fixed columns: id ``doc_id``, text ``text``."""
-    return _token_hashes(df, "text", "doc_id").select(
+    return _token_hashes(df).select(
         F.col("doc_id"), _simhash_fold_arrow()(F.col("hs")).alias("simhash")
     )
 
@@ -912,9 +903,6 @@ def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
     w: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: drop every training document that
     shares at least one ``w``-token shingle with the benchmark/eval set
@@ -929,20 +917,17 @@ def decontaminate(
     broadcast-able anti-join removes the flagged ids. No pairwise
     comparison, no corpus self-join; the corpus is scanned once and the
     shuffle carries (id, shingle-hash) pairs only.
-    """
-    flagged = contaminated_ids(
-        docs, benchmark, w, text_col, id_col, bench_text_col
-    )
-    return docs.join(flagged, id_col, "left_anti")
+
+    Fixed columns: id ``doc_id``, text ``text`` (benchmark text
+    ``text``)."""
+    flagged = contaminated_ids(docs, benchmark, w)
+    return docs.join(flagged, "doc_id", "left_anti")
 
 
 def contaminated_ids(
     docs: DataFrame,
     benchmark: DataFrame,
     w: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
 ) -> DataFrame:
     """Ids of documents sharing >=1 ``w``-token shingle with the
     benchmark set (see :func:`decontaminate`). Output: ``(doc_id,)``
@@ -960,11 +945,14 @@ def contaminated_ids(
     shingle set twice (once for the count, once inside the join) —
     deliberately NOT persisted: the recompute is bounded by the eval
     set's size while a persist handle that every caller must remember
-    to release is a leak in a shared session."""
+    to release is a leak in a shared session.
+
+    Fixed columns: id ``doc_id``, text ``text`` (benchmark text
+    ``text``)."""
     bench_sh = (
         _hashed_shingled(
-            benchmark.select(F.lit(0).alias("__bid"), F.col(bench_text_col)),
-            bench_text_col, "__bid", w,
+            benchmark.select(F.lit(0).alias("__bid"), F.col("text")),
+            "__bid", w,
         )
         .select(F.explode("sh").alias("h"))
         .distinct()
@@ -973,10 +961,10 @@ def contaminated_ids(
         right = F.broadcast(bench_sh)
     else:
         right = bench_sh
-    corpus_sh = _hashed_shingled(docs, text_col, id_col, w).select(
-        F.col(id_col), F.explode("sh").alias("h")
+    corpus_sh = _hashed_shingled(docs, "doc_id", w).select(
+        F.col("doc_id"), F.explode("sh").alias("h")
     )
-    return corpus_sh.join(right, "h", "left_semi").select(id_col).distinct()
+    return corpus_sh.join(right, "h", "left_semi").select("doc_id").distinct()
 
 
 def contamination_report(
@@ -1013,13 +1001,13 @@ def contamination_report(
         benchmark.select(
             F.col("doc_id").alias("__bid"), F.col("text")
         ),
-        "text", "__bid", w,
+        "__bid", w,
     ).select(F.col("__bid"), F.explode("sh").alias("h"))
     if bench_sh.count() <= 20_000_000:
         right = F.broadcast(bench_sh)
     else:
         right = bench_sh
-    corpus_sh = _hashed_shingled(docs, "text", "doc_id", w).select(
+    corpus_sh = _hashed_shingled(docs, "doc_id", w).select(
         F.col("doc_id"), F.explode("sh").alias("h")
     )
     return (
@@ -1061,7 +1049,7 @@ def ngram_novelty(docs: DataFrame, reference: DataFrame) -> DataFrame:
     ref_sh = (
         _hashed_shingled(
             reference.select(F.lit(0).alias("__rid"), F.col("text")),
-            "text", "__rid", 3,
+            "__rid", 3,
         )
         .select(F.explode("sh").alias("h"))
         .distinct()
@@ -1071,7 +1059,7 @@ def ngram_novelty(docs: DataFrame, reference: DataFrame) -> DataFrame:
         right = F.broadcast(ref_sh)
     else:
         right = ref_sh
-    corpus_sh = _hashed_shingled(docs, "text", "doc_id", 3).select(
+    corpus_sh = _hashed_shingled(docs, "doc_id", 3).select(
         F.col("doc_id"), F.explode("sh").alias("h")
     )
     return (
@@ -1228,16 +1216,16 @@ def dedup_increment(
     Fixed columns: id ``doc_id``, text ``text``."""
     with CacheScope() as scope:
         rows_per_band = 16 // bands
-        sh_e = scope.persist(_hashed_shingled(existing, "text", "doc_id", 3))
-        sh_b = scope.persist(_hashed_shingled(batch, "text", "doc_id", 3))
+        sh_e = scope.persist(_hashed_shingled(existing, "doc_id", 3))
+        sh_b = scope.persist(_hashed_shingled(batch, "doc_id", 3))
         bk_e = _lsh_buckets(
-            _sigs_from_hashed(sh_e, "doc_id", 16),
-            "doc_id", bands, rows_per_band,
+            _sigs_from_hashed(sh_e),
+            bands, rows_per_band,
         )
         bk_b = scope.persist(
             _lsh_buckets(
-                _sigs_from_hashed(sh_b, "doc_id", 16),
-                "doc_id", bands, rows_per_band,
+                _sigs_from_hashed(sh_b),
+                bands, rows_per_band,
             )
         )
 
@@ -1331,15 +1319,15 @@ def minhash_join(
     Fixed columns: id ``doc_id``, text ``text``."""
     with CacheScope() as scope:
         rows_per_band = 16 // bands
-        sh_l = scope.persist(_hashed_shingled(left, "text", "doc_id", 3))
-        sh_r = scope.persist(_hashed_shingled(right, "text", "doc_id", 3))
+        sh_l = scope.persist(_hashed_shingled(left, "doc_id", 3))
+        sh_r = scope.persist(_hashed_shingled(right, "doc_id", 3))
         bk_l = _lsh_buckets(
-            _sigs_from_hashed(sh_l, "doc_id", 16),
-            "doc_id", bands, rows_per_band,
+            _sigs_from_hashed(sh_l),
+            bands, rows_per_band,
         )
         bk_r = _lsh_buckets(
-            _sigs_from_hashed(sh_r, "doc_id", 16),
-            "doc_id", bands, rows_per_band,
+            _sigs_from_hashed(sh_r),
+            bands, rows_per_band,
         )
         cands = (
             bk_l.select(F.col("doc_id").alias("a"), "band", "bucket")
@@ -1522,7 +1510,7 @@ def winnow_fingerprints(
 
     Fixed columns: id ``doc_id``, text ``text``."""
     return (
-        _winnow_selected(docs, k, w, "text", "doc_id", tie)
+        _winnow_selected(docs, k, w, tie)
         .select(F.col("doc_id"), F.explode("__fps").alias("__s"))
         .select(
             F.col("doc_id"),
@@ -1536,16 +1524,16 @@ def _winnow_selected(
     docs: DataFrame,
     k: int,
     w: int,
-    text_col: str,
-    id_col: str,
     tie: str = "left",
 ) -> DataFrame:
-    """Shared winnowing core: ``(id_col, __fps)`` where ``__fps`` is the
+    """Shared winnowing core: ``(doc_id, __fps)`` where ``__fps`` is the
     distinct array of selected ``struct(h, pos)`` fingerprints — still
     in array land (zero shuffle), one row per input document, behind
     the inline barrier. ``tie='right'`` stores NEGATED positions so the
     same struct-min picks the rightmost tied minimum — callers take
-    ``abs(pos)``."""
+    ``abs(pos)``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     from dgraph_dbpedia_spark.functions.hashing import (
         positional_shingle_hashes,
     )
@@ -1571,16 +1559,16 @@ def _winnow_selected(
         )
     )
     return (
-        docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+        docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
         .select(
-            F.col(id_col), token_hashes(F.col("__toks")).alias("__th")
+            F.col("doc_id"), token_hashes(F.col("__toks")).alias("__th")
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             positional_shingle_hashes(F.col("__th"), k).alias("__ph"),
         )
-        .select(F.col(id_col), pairs.alias("__pairs"))
-        .select(F.col(id_col), F.inline(F.array(F.struct(sel.alias("__fps")))))
+        .select(F.col("doc_id"), pairs.alias("__pairs"))
+        .select(F.col("doc_id"), F.inline(F.array(F.struct(sel.alias("__fps")))))
     )
 
 
@@ -1631,7 +1619,7 @@ def winnow_matches(
             F.transform(F.col("__fps"), lambda s: s["h"]), 0
         )
         return (
-            _winnow_selected(df, k, w, "text", "doc_id")
+            _winnow_selected(df, k, w)
             .select(F.col("doc_id").alias(out), F.array_distinct(sets).alias("__set"))
             .select(F.col(out), F.explode("__set").alias("fp"))
         )
@@ -1712,16 +1700,8 @@ def split_leakage_report(
     from dgraph_dbpedia_spark.operators.sampling import split_corpus
 
     with CacheScope() as scope:
-        pairs = minhash_dedup_pairs(
-            df,
-            text_col="text",
-            id_col="doc_id",
-            w=3,
-            k=16,
-            bands=4,
-            threshold=threshold,
-        )
-        splits = split_corpus(df, fractions, id_col="doc_id", seed=1).select(
+        pairs = minhash_dedup_pairs(df, threshold=threshold)
+        splits = split_corpus(df, fractions).select(
             F.col("doc_id"),
             F.coalesce(F.col("split"), F.lit("holdout")).alias("split"),
         )

@@ -218,7 +218,7 @@ def pq_train(
             )
 
         return _lloyd_refine(
-            scope, seeds, ["j", "cid"], n_iter, 4, "sv", assign
+            scope, seeds, ["j", "cid"], n_iter, "sv", assign
         )
 
 
@@ -625,25 +625,23 @@ def _exact_rerank(
     vectors_df: DataFrame,
     query: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
-    query_col: str,
 ) -> DataFrame:
     """Stage 2 of the two-stage serve contract, shared by
-    :func:`pq_rerank_topk` and :func:`pq_ivf_rerank_topk_served`: the
-    bounded ADC shortlist broadcast-semi-joins back into the float
+    :func:`pq_rerank_topk`, :func:`pq_ivf_rerank_topk_served`,
+    ``rq.rq_rerank_topk`` and ``similarity.jl_rerank_topk``: the
+    bounded shortlist broadcast-semi-joins back into the float
     table and ONLY those rows pay the exact round-4 cosine top-``k``
     (``cosine_topk``'s sim desc / id asc tie rule). One definition so
-    the two 'same contract' serve paths cannot silently diverge."""
+    the 'same contract' serve paths cannot silently diverge.
+
+    Fixed columns: id ``vec_id``, vector ``embedding``, query vector
+    ``q``."""
     from dgraph_dbpedia_spark.operators.similarity import cosine_topk
 
     cand = vectors_df.join(
-        F.broadcast(shortlist.select(id_col)), id_col, "left_semi"
+        F.broadcast(shortlist.select("vec_id")), "vec_id", "left_semi"
     )
-    return cosine_topk(
-        cand, query, k=k, id_col=id_col, vec_col=vec_col,
-        query_col=query_col,
-    )
+    return cosine_topk(cand, query, k=k)
 
 
 def pq_rerank_topk(
@@ -687,9 +685,7 @@ def pq_rerank_topk(
         m=m,
         k=shortlist_n,
     )
-    return _exact_rerank(
-        shortlist, vectors_df, query, k, "vec_id", "embedding", "q"
-    )
+    return _exact_rerank(shortlist, vectors_df, query, k)
 
 
 def pq_ivf_rerank_topk_served(
@@ -698,7 +694,6 @@ def pq_ivf_rerank_topk_served(
     coarse_centroids: DataFrame,
     vectors_df: DataFrame,
     query: DataFrame,
-    dims: int,
     k: int = 10,
     shortlist_n: int = 100,
 ) -> DataFrame:
@@ -718,20 +713,17 @@ def pq_ivf_rerank_topk_served(
     a point read. Empty query/centroids degenerate to an empty result
     through every stage.
 
-    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``,
-    vector ``embedding``."""
+    Fixed: 64-d vectors; columns codes ``codes``, id ``vec_id``, query
+    vector ``q``, vector ``embedding``."""
     _validate_shortlist(shortlist_n, k)
     shortlist = pq_ivf_topk_served(
         codes,
         codebooks,
         coarse_centroids,
         query,
-        dims=dims,
         k=shortlist_n,
     )
-    return _exact_rerank(
-        shortlist, vectors_df, query, k, "vec_id", "embedding", "q"
-    )
+    return _exact_rerank(shortlist, vectors_df, query, k)
 
 
 def pq_ivf_topk_served(
@@ -739,7 +731,6 @@ def pq_ivf_topk_served(
     codebooks: DataFrame,
     coarse_centroids: DataFrame,
     query: DataFrame,
-    dims: int,
     k: int = 10,
 ) -> DataFrame:
     """The full FAISS-style IVF-PQ serve path: coarse IVF probe over
@@ -752,12 +743,13 @@ def pq_ivf_topk_served(
     with :func:`pq_encode`, attach the coarse cid from
     :func:`..similarity.ivf_assign`, write partitioned by ``cid``
     (the ``quantized_ivf_topk_served`` v3 layout with 4 code
-    bytes per vector instead of ``dims`` int8s). At 100 TB a probe
+    bytes per vector instead of 64 int8s). At 100 TB a probe
     reads 2 of ``k_coarse`` lists at 4 code bytes per
     vector — the two pruning levers multiply. Empty centroid frame or
     empty query -> empty result (the float twin's contract).
 
-    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``."""
+    Fixed: 64-d vectors; columns codes ``codes``, id ``vec_id``, query
+    vector ``q``."""
     from dgraph_dbpedia_spark.operators.similarity import _probe_single
 
     q = query.select(F.col("q").cast("array<double>").alias("qv"))
@@ -778,7 +770,7 @@ def pq_ivf_topk_served(
         pruned,
         codebooks,
         query,
-        dims=dims,
+        dims=64,
         m=4,
         k=k,
     )
@@ -845,6 +837,4 @@ def pq_reconstruction_error_report(
         _recon_error_report,
     )
 
-    return _recon_error_report(
-        coded.select("_lab", "_v", vhat.alias("_vhat")), "label"
-    )
+    return _recon_error_report(coded.select("_lab", "_v", vhat.alias("_vhat")))

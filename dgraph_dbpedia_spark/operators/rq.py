@@ -478,9 +478,7 @@ def rq_rerank_topk(
         dims=dims,
         k=shortlist_n,
     )
-    return _exact_rerank(
-        shortlist, vectors_df, query, k, "vec_id", "embedding", "q"
-    )
+    return _exact_rerank(shortlist, vectors_df, query, k)
 
 
 def rq_ivf_topk_served(
@@ -488,7 +486,6 @@ def rq_ivf_topk_served(
     codebooks: DataFrame,
     coarse_centroids: DataFrame,
     query: DataFrame,
-    dims: int,
     k: int = 10,
 ) -> DataFrame:
     """The IVF-RQ serve path (the residual-quantization twin of
@@ -507,7 +504,8 @@ def rq_ivf_topk_served(
     centroid frame or empty query -> empty result (the float twin's
     contract).
 
-    Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``."""
+    Fixed: 64-d vectors; columns codes ``codes``, id ``vec_id``, query
+    vector ``q``."""
     from dgraph_dbpedia_spark.operators.similarity import _probe_single
 
     q = query.select(F.col("q").cast("array<double>").alias("qv"))
@@ -528,6 +526,6 @@ def rq_ivf_topk_served(
         pruned,
         codebooks,
         query,
-        dims=dims,
+        dims=64,
         k=k,
     )

@@ -247,15 +247,15 @@ def source_mixture_report(df: DataFrame, alpha: float = 0.5) -> DataFrame:
     )
 
 
-def _unit_coin(id_col: str, seed: int) -> F.Column:
+def _unit_coin(seed: int) -> F.Column:
     """The cross-engine [0, 1) coin every sampler shares — the 60-bit
-    md5 id hash mapped through mod 1e6. ONE definition: weighted_sample
+    md5 ``doc_id`` hash mapped through mod 1e6. ONE definition: weighted_sample
     (and mixture_sample through it) and split_corpus must never
     desynchronize from each other or from the host-side / DuckDB
     replays that document exactly this formula."""
     return (
         F.pmod(
-            hash64(F.col(id_col).cast("string"), seed=seed), F.lit(1_000_000)
+            hash64(F.col("doc_id").cast("string"), seed=seed), F.lit(1_000_000)
         )
         / 1_000_000.0
     )
@@ -275,7 +275,7 @@ def weighted_sample(df: DataFrame, weight_col: str, seed: int = 1) -> DataFrame:
 
     Fixed columns: id ``doc_id``."""
     w = F.least(F.greatest(F.col(weight_col).cast("double"), F.lit(0.0)), F.lit(1.0))
-    return df.where(_unit_coin("doc_id", seed) < w)
+    return df.where(_unit_coin(seed) < w)
 
 
 def mixture_sample(
@@ -329,10 +329,7 @@ def mixture_sample(
 
 def temperature_sample(
     df: DataFrame,
-    group_col: str = "lang",
     alpha: float = 0.3,
-    id_col: str = "doc_id",
-    seed: int = 2,
 ) -> DataFrame:
     """Temperature-based group rebalancing — the multilingual
     alpha-sampling of mC4 / XLM-R (Conneau et al., ACL 2020 §3.1;
@@ -342,16 +339,18 @@ def temperature_sample(
     Bernoulli keeps: a group ``m`` times larger than the RAREST group
     keeps ``round(m^(alpha-1), 6)`` of its rows (the rarest group
     keeps everything — pure downsampling, no repetition), each row's
-    coin being the shared RNG-free :func:`_unit_coin`, so the same
-    rows survive on any engine / partitioning / run. ``alpha=1`` is a
-    no-op; ``alpha -> 0`` approaches uniform group mass. NULL group
+    coin being the shared RNG-free :func:`_unit_coin` (seed 2), so the
+    same rows survive on any engine / partitioning / run. ``alpha=1`` is
+    a no-op; ``alpha -> 0`` approaches uniform group mass. NULL group
     values form their own group (null-safe join), matching the
     count aggregation.
 
     100 TB shape: one partially-aggregable groupBy whose output is
     bounded by the number of groups, a broadcast rate join, then a
     pure narrow filter codegen'd into the scan — the corpus is never
-    shuffled."""
+    shuffled.
+
+    Fixed columns: group ``lang``, id ``doc_id``."""
     if not 0.0 < float(alpha) <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     g, r = "__g", "__rate"
@@ -359,7 +358,7 @@ def temperature_sample(
         g = "_" + g
     while r in df.columns:
         r = "_" + r
-    counts = df.groupBy(F.col(group_col).alias(g)).agg(
+    counts = df.groupBy(F.col("lang").alias(g)).agg(
         F.count(F.lit(1)).alias("__n")
     )
     n_min = counts.agg(F.min("__n").alias("__nmin"))
@@ -374,8 +373,8 @@ def temperature_sample(
         ).alias(r),
     )
     return (
-        df.join(F.broadcast(rates), df[group_col].eqNullSafe(rates[g]))
-        .where(_unit_coin(id_col, seed) < F.col(r))
+        df.join(F.broadcast(rates), df["lang"].eqNullSafe(rates[g]))
+        .where(_unit_coin(2) < F.col(r))
         .drop(g, r)
     )
 
@@ -384,8 +383,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 128,
     overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sliding-window document chunking — the RAG-indexing /
     context-window twin of :func:`pack_offsets` (which packs ACROSS
@@ -395,13 +392,15 @@ def chunk_documents(
     short, but every window past the first contributes at least one
     token its predecessor did not (a trailing window that is a pure
     suffix of the previous one is NOT emitted — windows start only
-    while ``start + overlap < n_tokens``). Returns ``(id, chunk_idx,
-    n_tokens, chunk_text)``; empty documents produce no chunks.
+    while ``start + overlap < n_tokens``). Returns ``(doc_id,
+    chunk_idx, n_tokens, chunk_text)``; empty documents produce no
+    chunks.
 
     Pure per-row plan: sequence() over window starts + posexplode +
     slice + array_join — no UDF, no shuffle; at 100 TB this is
     scan-speed with output amplification ~1/(1 - overlap/chunk_tokens).
-    """
+
+    Fixed columns: id ``doc_id``, text ``text``."""
     if chunk_tokens < 1:
         raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
     if not 0 <= overlap < chunk_tokens:
@@ -410,7 +409,7 @@ def chunk_documents(
         )
     stride = chunk_tokens - overlap
     toked = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__toks")
+        F.col("doc_id"), tokens(F.col("text")).alias("__toks")
     )
     n = F.size("__toks")
     # sequence() raises on (0, -1) bounds, so the empty-doc case gets
@@ -429,12 +428,12 @@ def chunk_documents(
     chunk = F.slice(F.col("__toks"), F.col("__start") + 1, chunk_tokens)
     return (
         toked.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("__toks"),
             F.posexplode(starts).alias("chunk_idx", "__start"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_idx"),
             F.size(chunk).alias("n_tokens"),
             F.array_join(chunk, " ").alias("chunk_text"),
@@ -445,23 +444,21 @@ def chunk_documents(
 def split_corpus(
     df: DataFrame,
     fractions: dict[str, float],
-    id_col: str = "doc_id",
-    seed: int = 1,
 ) -> DataFrame:
     """Deterministic disjoint corpus split (train/val/test): every row
     lands in exactly one named split, decided by the cross-engine
     id-hash coin against cumulative fraction thresholds in the dict's
     insertion order — so the SAME doc is in the SAME split on any
     engine, any partitioning, any run, and splits never leak into each
-    other across re-runs (the property eval hygiene depends on).
-    ``seed`` re-deals the whole assignment. Fractions must each be in
+    other across re-runs (the property eval hygiene depends on). The
+    coin is seeded 1. Fractions must each be in
     [0, 1] and sum to <= 1 (+1e-9 tolerance); when they sum to less,
     the remainder of rows gets a NULL split (an explicit holdout the
     caller can drop or name).
 
     Pure narrow projection — no shuffle, codegen'd into the scan.
 
-    Fixed columns: split ``split``."""
+    Fixed columns: id ``doc_id``, split ``split``."""
     if not fractions:
         raise ValueError("fractions must be a non-empty split -> fraction map")
     total = 0.0
@@ -493,21 +490,23 @@ def split_corpus(
     # no .otherwise(): rows past the last threshold keep the NULL
     # holdout the docstring promises
     return (
-        df.withColumn(u_col, _unit_coin(id_col, seed))
+        df.withColumn(u_col, _unit_coin(1))
         .withColumn("split", expr)
         .drop(u_col)
     )
 
 
-def _dsir_feats(df: DataFrame, text_col: str, id_col: str, buckets: int):
-    """Hashed-bigram feature ids per document occurrence: ``(id, b)``
+def _dsir_feats(df: DataFrame, buckets: int):
+    """Hashed-bigram feature ids per document occurrence: ``(doc_id, b)``
     with one row per bigram OCCURRENCE (DSIR is a bag-of-features
     model — multiplicity counts). Bigram hash = the cross-engine md5
     hash of ``tok_i + ' ' + tok_{i+1}`` mod ``buckets``. Documents
     with fewer than two tokens emit no rows (guarded — an unguarded
     ``sequence(1, size-1)`` DESCENDS when size < 2 and would fabricate
-    features)."""
-    toks = tokens(F.col(text_col))
+    features).
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    toks = tokens(F.col("text"))
     t = F.col("__toks")
     grams = F.when(
         F.size(t) >= 2,
@@ -528,12 +527,12 @@ def _dsir_feats(df: DataFrame, text_col: str, id_col: str, buckets: int):
     # whole per-bigram md5 fold into a pushed size()>0 filter — the
     # measured 15x trap (functions/hashing._hashed_shingled's note)
     return (
-        df.select(F.col(id_col), toks.alias("__toks"))
+        df.select(F.col("doc_id"), toks.alias("__toks"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.inline(F.array(F.struct(grams.alias("__grams")))),
         )
-        .select(F.col(id_col), F.explode("__grams").alias("b"))
+        .select(F.col("doc_id"), F.explode("__grams").alias("b"))
     )
 
 
@@ -573,8 +572,8 @@ def dsir_logratio(
     Fixed columns: id ``doc_id``, text ``text``."""
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
-    tf = _dsir_feats(target, "text", "doc_id", buckets)
-    rf = _dsir_feats(raw, "text", "doc_id", buckets)
+    tf = _dsir_feats(target, buckets)
+    rf = _dsir_feats(raw, buckets)
     with CacheScope() as scope:
         # persisted: each model feeds its totals aggregate AND the merged
         # frame (no cross-branch subplan sharing — unpersisted, the

@@ -54,18 +54,18 @@ def cosine_topk(
     df: DataFrame,
     query: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_col: str = "q",
 ) -> DataFrame:
     """Exact top-k by cosine against a 1-row query frame (broadcast).
-    Deterministic tie-break on id. Returns ``(id, sim)``."""
-    cand = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("e"))
-    q = query.select(F.col(query_col).cast("array<double>").alias("q"))
+    Deterministic tie-break on id. Returns ``(vec_id, sim)``.
+
+    Fixed columns: id ``vec_id``, query vector ``q``."""
+    cand = df.select(F.col("vec_id"), F.col(vec_col).cast("array<double>").alias("e"))
+    q = query.select(F.col("q").cast("array<double>").alias("q"))
     scored = cand.crossJoin(F.broadcast(q)).select(
-        F.col(id_col), F.round(cosine("e", "q"), 4).alias("sim")
+        F.col("vec_id"), F.round(cosine("e", "q"), 4).alias("sim")
     )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
 
 
 def plane_values(n_planes: int, dims: int) -> list[float]:
@@ -880,9 +880,7 @@ def ivf_topk(
         ):
             q_vec = vec
     if q_vec is None:
-        return _ivf_topk_native(
-            e, centroids, query, k, "vec_id", "q", n_probe
-        )
+        return _ivf_topk_native(e, centroids, query, k, n_probe)
     cids, cmat, cid_type = _collect_centroids(centroids)
     probes = _probe_cids_py(q_vec, cids, cmat, n_probe)
     if not probes:
@@ -907,16 +905,16 @@ def _ivf_topk_native(
     centroids: DataFrame,
     query: DataFrame,
     k: int,
-    id_col: str,
-    query_col: str,
     n_probe: int,
 ) -> DataFrame:
-    """All-native :func:`ivf_topk` plan over the cast ``(id, e)`` frame
+    """All-native :func:`ivf_topk` plan over the cast ``(vec_id, e)`` frame
     and ``(cid, c)`` centroids — the fallback for a query the driver
     cannot resolve to one finite vector: the centroid array, the query
     and its probe list ride ONE broadcast row, so assignment, probe
-    filtering and the exact re-rank fuse into one projection."""
-    q = query.select(F.col(query_col).cast("array<double>").alias("q"))
+    filtering and the exact re-rank fuse into one projection.
+
+    Fixed columns: id ``vec_id``, query vector ``q``."""
+    q = query.select(F.col("q").cast("array<double>").alias("q"))
     # one broadcast row: centroid array + query + its probe-list cids
     probes = F.transform(
         F.slice(_nearest_sorted(F.col("q"), _norm("q")), 1, n_probe),
@@ -933,9 +931,9 @@ def _ivf_topk_native(
         .withColumn("_nv", _norm("_v"))
         .crossJoin(F.broadcast(b))
         .where(F.array_contains(F.col("_probes"), best))
-        .select(F.col(id_col), F.round(cosine("e", "q"), 4).alias("sim"))
+        .select(F.col("vec_id"), F.round(cosine("e", "q"), 4).alias("sim"))
     )
-    return scored.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
 
 
 def ivf_train(
@@ -985,7 +983,6 @@ def ivf_train(
             scope.checkpoint(seeds),
             ["cid"],
             n_iter,
-            4,
             "e",
             lambda c_: ivf_assign(e, c_, id_col="vec_id", vec_col="e"),
         )
@@ -996,7 +993,6 @@ def _lloyd_refine(
     seeds: DataFrame,
     keys: list[str],
     n_iter: int,
-    round_decimals: int,
     vec_col: str,
     assign,
 ) -> DataFrame:
@@ -1008,9 +1004,9 @@ def _lloyd_refine(
     ``scope`` (the seed rule and its validation are the caller's
     contract). ``assign(cent)`` returns a frame carrying ``keys`` and
     ``vec_col``, the vectors each centroid averages. The loop owns the
-    rest: the partially aggregable rounded ``(keys, pos)`` means, the
-    empty-cluster ``coalesce`` (a centroid whose list goes empty keeps
-    its position) and the per-iteration localCheckpoint, each freed
+    rest: the partially aggregable ``(keys, pos)`` means rounded to 4
+    decimals, the empty-cluster ``coalesce`` (a centroid whose list goes
+    empty keeps its position) and the per-iteration localCheckpoint, each freed
     through ``scope`` once the next one exists, so that choreography
     exists exactly once. The last checkpoint backs the returned
     centroids; a raise leaves ``scope`` to free the live one."""
@@ -1028,7 +1024,7 @@ def _lloyd_refine(
                     F.array_sort(F.collect_list(F.struct("pos", "m"))),
                     # + 0.0 folds IEEE negative zero to +0.0 (engines
                     # disagree on round(-0.00001, 4)'s sign bit)
-                    lambda s: F.round(s["m"], round_decimals) + F.lit(0.0),
+                    lambda s: F.round(s["m"], 4) + F.lit(0.0),
                 ).alias("c2")
             )
         )
@@ -1127,7 +1123,6 @@ def ivf_topk_served(
 def _probe_many(
     q: DataFrame,
     centroids: DataFrame,
-    qid_col: str,
     n_probe: int,
     max_queries: int,
 ):
@@ -1153,10 +1148,10 @@ def _probe_many(
     with CacheScope() as scope:
         qp = scope.checkpoint(
             q.crossJoin(F.broadcast(_centroid_row(centroids)))
-            .select(F.col(qid_col), F.col("q"), probes.alias("_probes"))
+            .select(F.col("qid"), F.col("q"), probes.alias("_probes"))
             .limit(max_queries + 1)
         )
-        probe_rows = qp.select(qid_col, "_probes").collect()
+        probe_rows = qp.select("qid", "_probes").collect()
         if len(probe_rows) > max_queries:
             raise ValueError(
                 f"batch probe got more than max_queries={max_queries} "
@@ -1208,7 +1203,7 @@ def ivf_topk_served_many(
         F.col("qid"),
         F.col("q").cast("array<double>").alias("q"),
     )
-    qp, union_cids = _probe_many(q, centroids, "qid", n_probe, max_queries)
+    qp, union_cids = _probe_many(q, centroids, n_probe, max_queries)
     if not union_cids:
         return assigned.where(F.lit(False)).crossJoin(
             qp.select("qid").where(F.lit(False))
@@ -1267,7 +1262,7 @@ def quantized_ivf_topk_served_many(
         F.col("qid"),
         F.col("q").cast("array<double>").alias("q"),
     )
-    qp, union_cids = _probe_many(q, centroids, "qid", n_probe, max_queries)
+    qp, union_cids = _probe_many(q, centroids, n_probe, max_queries)
     if not union_cids:
         return quantized.where(F.lit(False)).crossJoin(
             qp.select("qid").where(F.lit(False))
@@ -1449,10 +1444,10 @@ def quantization_error_report(df: DataFrame) -> DataFrame:
         .crossJoin(F.broadcast(scales))
         .select("_lab", "_v", dq.alias("_vhat"))
     )
-    return _recon_error_report(per, "label")
+    return _recon_error_report(per)
 
 
-def _recon_error_report(per: DataFrame, label_col: str) -> DataFrame:
+def _recon_error_report(per: DataFrame) -> DataFrame:
     """ONE definition of the reconstruction-error fold shared by
     :func:`quantization_error_report` and the PQ twin
     (:func:`..pq.pq_reconstruction_error_report`): given a frame of
@@ -1469,7 +1464,7 @@ def _recon_error_report(per: DataFrame, label_col: str) -> DataFrame:
     err6 = F.round(F.lit(1.0) - cos, 6)
     return (
         per.select("_lab", err6.alias("_err"))
-        .groupBy(F.col("_lab").alias(label_col))
+        .groupBy(F.col("_lab").alias("label"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.count("_err").cast("long").alias("n_scored"),
@@ -2151,7 +2146,7 @@ def hard_negatives(
 
 
 def _group_centroids(
-    scope: CacheScope, df: DataFrame, group_col: str, vec_col: str, mean_decimals: int
+    scope: CacheScope, df: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Shared centroid pipeline for :func:`embedding_drift` and
     :func:`embedding_outliers` (r12 review: ONE definition of the
@@ -2159,12 +2154,12 @@ def _group_centroids(
     ``(per, gm)`` where ``per`` is the partial-aggregable ``(_g, pos,
     s, c)`` frame, persisted through ``scope`` (the caller hands it to
     its result), and ``gm`` the bounded ``(_g, _gm)`` per-group
-    centroid frame with round-``mean_decimals`` -0.0-folded
-    components."""
-    g = F.col(group_col)
+    centroid frame with round-6 -0.0-folded components.
+
+    Fixed columns: group ``label``, vector ``embedding``."""
     ex = df.select(
-        g.alias("_g"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias(
+        F.col("label").alias("_g"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
             "pos", "v"
         ),
     )
@@ -2180,7 +2175,7 @@ def _group_centroids(
                     F.struct("pos", (F.col("s") / F.col("c")).alias("m"))
                 )
             ),
-            lambda st: F.round(st["m"], mean_decimals) + F.lit(0.0),
+            lambda st: F.round(st["m"], 6) + F.lit(0.0),
         ).alias("_gm")
     )
     return per, gm
@@ -2306,7 +2301,7 @@ def embedding_drift(df: DataFrame) -> DataFrame:
 
     Fixed columns: group ``label``, vector ``embedding``."""
     with CacheScope() as scope:
-        per, gm = _group_centroids(scope, df, "label", "embedding", 6)
+        per, gm = _group_centroids(scope, df)
         rnd = lambda col: F.round(col, 6) + F.lit(0.0)  # noqa: E731
         glob = (
             per.groupBy("pos")
@@ -2472,9 +2467,7 @@ def jl_topk(
     qproj = jl_project(
         qdf, out_dims, dims, id_col="__qid", vec_col="__qv"
     ).select(F.col("e").alias("q"))
-    return cosine_topk(
-        proj, qproj, k=k, id_col="vec_id", vec_col="e", query_col="q"
-    )
+    return cosine_topk(proj, qproj, k=k, vec_col="e")
 
 
 def jl_rerank_topk(
@@ -2496,9 +2489,9 @@ def jl_rerank_topk(
 
     100 TB shape: stage 1 is :func:`jl_topk`'s narrow projection +
     ``out_dims``-wide scan; stage 2 broadcast-semi-joins the bounded
-    shortlist back into the float table (the `_exact_rerank`
-    discipline — no corpus-sized shuffle, the semi-join prunes the
-    float scan to shortlist rows).
+    shortlist back into the float table (:func:`..pq._exact_rerank`,
+    the PQ/RQ serve paths' stage 2 — no corpus-sized shuffle, the
+    semi-join prunes the float scan to shortlist rows).
 
     Fixed columns: id ``vec_id``, query vector ``q``, vector
     ``embedding``."""
@@ -2515,13 +2508,9 @@ def jl_rerank_topk(
         out_dims=out_dims,
         dims=dims,
     )
-    cand = df.join(
-        F.broadcast(shortlist.select("vec_id")), "vec_id", "left_semi"
-    )
-    return cosine_topk(
-        cand, query, k=k, id_col="vec_id", vec_col="embedding",
-        query_col="q",
-    )
+    from dgraph_dbpedia_spark.operators.pq import _exact_rerank
+
+    return _exact_rerank(shortlist, df, query, k)
 
 
 def embedding_outliers(df: DataFrame) -> DataFrame:
@@ -2554,7 +2543,7 @@ def embedding_outliers(df: DataFrame) -> DataFrame:
 
     Fixed columns: group ``label``, id ``vec_id``, vector ``embedding``."""
     with CacheScope() as scope:
-        per, gm = _group_centroids(scope, df, "label", "embedding", 6)
+        per, gm = _group_centroids(scope, df)
         out = (
             df.select(
                 F.col("vec_id"),
@@ -2578,14 +2567,13 @@ def _knn_majority(
     b: DataFrame,
     k: int,
     candidate_pairs: DataFrame | None,
-    round_decimals: int,
     carry: list[str],
 ) -> DataFrame:
     """ONE definition of the k-NN vote chain shared by
     :func:`knn_label_noise_report` and :func:`knn_classify` (the
     rank/vote rules cannot silently desynchronize): score the
-    candidate pairs (round-``round_decimals`` cosine through the
-    :func:`pair_cosine_arrow` einsum kernel), keep each query's
+    candidate pairs (round-6 cosine through the :func:`pair_cosine_arrow`
+    einsum kernel), keep each query's
     top-``k`` (sim desc, nid asc; NULL sims excluded — a zero-norm/
     NULL vector must not claim a rank slot, and Spark/DuckDB disagree
     on where NULLs sort under DESC), then the per-query majority vote
@@ -2615,7 +2603,7 @@ def _knn_majority(
             .join(a, "_qid")
             .join(b, "_nid")
         )
-    sim = pair_cosine_arrow(round_decimals)(
+    sim = pair_cosine_arrow(6)(
         F.col("_qv"), F.col("_nv"), F.col("_qn"), F.col("_nn")
     )
     w_rank = Window.partitionBy("_qid").orderBy(
@@ -2659,10 +2647,6 @@ def _knn_block_majority(
     lab: DataFrame,
     block_assign: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    round_decimals: int,
 ) -> DataFrame:
     """Block-kernel twin of :func:`_knn_majority` for the
     SAME-BLOCK candidate structure: instead of expanding every
@@ -2671,12 +2655,12 @@ def _knn_block_majority(
     measured 324 s at the 50k/256-centroid point), group the corpus
     by block and run ONE ``applyInPandas`` kernel per block: one
     ``X @ X.T`` per block over vectors shipped ONCE, then the
-    identical rank (round-``round_decimals`` sim desc, id asc via a
-    stable argsort over id-sorted rows) and vote (count desc, label
+    identical rank (round-6 sim desc, id asc via a stable argsort
+    over id-sorted rows) and vote (count desc, label
     asc via dense ``np.unique`` codes + first-argmax) rules. Norms
     are computed SPARK-SIDE with the native fold and shipped in (the
     pair-lane rule — the kernel never re-associates the norm sum);
-    ``sim = round(dot / (n_i * n_j), d)`` HALF_UP, NULL/zero-norm
+    ``sim = round(dot / (n_i * n_j), 6)`` HALF_UP, NULL/zero-norm
     rows neither vote nor query. Returns the :func:`_knn_majority`
     shape ``(_qid, _qlab, _nlab, _c, _tot)``.
 
@@ -2684,19 +2668,21 @@ def _knn_block_majority(
     tests/test_similarity.py (same matmul-vs-fold damping argument as
     :func:`pair_cosine_arrow`). Restrictions (loud, not silent):
     uniform vector width within a block, and at most
-    ``KNN_MAX_BLOCK_ROWS`` rows per block — both raise."""
+    ``KNN_MAX_BLOCK_ROWS`` rows per block — both raise.
+
+    Fixed columns: id ``vec_id``, label ``label``, vector ``embedding``."""
     joined = lab.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        F.col(label_col).alias("_lab"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
+        F.col("label").alias("_lab"),
     ).withColumn("_n", _norm(F.col("_v"))).join(
         block_assign.select(
-            F.col(id_col).alias("_id"), F.col("cid").alias("_blk")
+            F.col("vec_id").alias("_id"), F.col("cid").alias("_blk")
         ),
         "_id",
     )
-    lab_type = lab.schema[label_col].dataType.simpleString()
-    id_type = lab.schema[id_col].dataType.simpleString()
+    lab_type = lab.schema["label"].dataType.simpleString()
+    id_type = lab.schema["vec_id"].dataType.simpleString()
     out_schema = (
         f"_qid {id_type}, _qlab {lab_type}, _nlab {lab_type}, "
         "_c long, _tot long"
@@ -2736,7 +2722,7 @@ def _knn_block_majority(
             X[i] = vs[i]
         with np.errstate(divide="ignore", invalid="ignore"):
             sims = (X @ X.T) / np.outer(ns, ns)
-        sims = _round_half_up_np(sims, round_decimals)
+        sims = _round_half_up_np(sims, 6)
         sims = np.where(np.isnan(sims), -np.inf, sims)
         sims[:, ~valid] = -np.inf
         sims[~valid, :] = -np.inf
@@ -2825,10 +2811,7 @@ def knn_label_noise_report(
         )
     lab = df.where(F.col("label").isNotNull())
     if block_assign is not None:
-        maj = _knn_block_majority(
-            lab, block_assign, k, "vec_id", "embedding", "label",
-            6,
-        )
+        maj = _knn_block_majority(lab, block_assign, k)
     else:
         a = lab.select(
             F.col("vec_id").alias("_qid"),
@@ -2840,9 +2823,7 @@ def knn_label_noise_report(
             F.col("embedding").cast("array<double>").alias("_nv"),
             F.col("label").alias("_nlab"),
         ).withColumn("_nn", _norm(F.col("_nv")))
-        maj = _knn_majority(
-            a, b, k, candidate_pairs, 6, carry=["_qlab"],
-        )
+        maj = _knn_majority(a, b, k, candidate_pairs, carry=["_qlab"])
     return maj.groupBy(F.col("_qlab").alias("label")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(
@@ -2898,9 +2879,7 @@ def knn_classify(
         F.col("embedding").cast("array<double>").alias("_nv"),
         F.col("label").alias("_nlab"),
     ).withColumn("_nn", _norm(F.col("_nv")))
-    maj = _knn_majority(
-        a, b, k, candidate_pairs, 6, carry=[]
-    )
+    maj = _knn_majority(a, b, k, candidate_pairs, carry=[])
     return maj.select(
         F.col("_qid").alias("vec_id"),
         F.col("_nlab").alias("predicted_label"),

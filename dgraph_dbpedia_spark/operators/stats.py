@@ -60,10 +60,12 @@ def dataset_counts(df: DataFrame) -> dict[str, int]:
     return datasets_counts({"": df})[""]
 
 
-def counts_per_group(df: DataFrame, group_col: str, count_name: str) -> DataFrame:
-    """``groupBy(group).count()`` with a dataset-specific column name so
-    frames can be joined side by side (A3, DbpediaDgraphSparkApp.scala:156)."""
-    return df.groupBy(group_col).agg(F.count(F.lit(1)).alias(count_name))
+def counts_per_group(df: DataFrame) -> DataFrame:
+    """``groupBy(lang).count()`` as ``(lang, n)`` (A3,
+    DbpediaDgraphSparkApp.scala:156).
+
+    Fixed columns: group ``lang``, count ``n``."""
+    return df.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
 
 
 def stats_table_pivot(frames: dict[str, DataFrame]) -> DataFrame:
@@ -87,15 +89,17 @@ def stats_table_pivot(frames: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def rollup_group(df: DataFrame, group_col: str, pred, label: str) -> DataFrame:
+def rollup_group(df: DataFrame, pred, label: str) -> DataFrame:
     """Aggregate all rows matching ``pred`` into a single labelled row and
     append it (A4+U2, DbpediaDgraphSparkApp.scala:163-171) — the
-    reference's ``en-*`` rollup."""
+    reference's ``en-*`` rollup.
+
+    Fixed columns: group ``lang``."""
     dtypes = dict(df.dtypes)
     num_cols = [
         c
         for c, t in df.dtypes
-        if c != group_col
+        if c != "lang"
         and (t in ("bigint", "int", "smallint", "tinyint", "double", "float")
              or t.startswith("decimal"))
     ]
@@ -107,10 +111,10 @@ def rollup_group(df: DataFrame, group_col: str, pred, label: str) -> DataFrame:
     # on the literal label — NOT a global agg — so a predicate matching
     # zero rows appends NOTHING instead of a phantom all-NULL row
     rolled = (
-        df.where(pred(F.col(group_col)))
-        .groupBy(F.lit(label).alias(group_col))
+        df.where(pred(F.col("lang")))
+        .groupBy(F.lit(label).alias("lang"))
         .agg(*[F.sum(c).alias(c) for c in num_cols])
-        .select(group_col, *num_cols)
+        .select("lang", *num_cols)
     )
     rolled_types = dict(rolled.dtypes)
     base = df

@@ -140,7 +140,7 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     terms = sorted({t.lower() for t in query_terms})
     if not terms:
         raise ValueError("query_terms must be non-empty")
-    scored, term_score = _bm25_scored(df, terms, "text", "doc_id", 1.2, 0.75)
+    scored, term_score = _bm25_scored(df, terms)
     parts = [term_score(i) for i in range(len(terms))]
     score = F.round(sum(parts[1:], parts[0]), 4)
     return (
@@ -151,15 +151,18 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10) -> DataFrame:
     )
 
 
-def _bm25_scored(df, union_terms, text_col, id_col, k1, b):
+def _bm25_scored(df, union_terms):
     """Shared BM25 core (single + batch): per-row native tf columns for
     every term, the 1-row broadcast stats aggregate, and a
     ``term_score(i) -> Column`` builder. ONE definition of the formula —
     the single/batch operators and the shared DuckDB oracle stay
-    bit-aligned by construction."""
+    bit-aligned by construction. BM25 ``k1 = 1.2``, ``b = 0.75``.
+
+    Fixed columns: id ``doc_id``, text ``text``."""
+    k1, b = 1.2, 0.75
     base = df.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(F.lower(F.col(text_col))).alias("__toks"),
+        F.col("doc_id").alias("doc_id"),
+        tokens(F.lower(F.col("text"))).alias("__toks"),
     )
     toks = F.col("__toks")
 
@@ -228,7 +231,7 @@ def bm25_topk_batch(
         raise ValueError("every query needs at least one term")
     union_terms = sorted({w for terms in qterms.values() for w in terms})
     idx = {w: i for i, w in enumerate(union_terms)}
-    scored, term_score = _bm25_scored(df, union_terms, "text", "doc_id", 1.2, 0.75)
+    scored, term_score = _bm25_scored(df, union_terms)
 
     def query_score(terms: list[str]):
         parts = [term_score(idx[w]) for w in terms]
@@ -512,13 +515,10 @@ def token_bucket_histogram(df: DataFrame) -> DataFrame:
 
 def filter_attrition_report(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 50,
     max_words: int = 100_000,
     min_mean_word_len: float = 3.0,
     max_mean_word_len: float = 10.0,
-    min_alpha_word_ratio: float = 0.8,
     min_stopwords: int = 2,
 ) -> DataFrame:
     """Per-rule attrition funnel for the Gopher-style quality gate
@@ -546,16 +546,16 @@ def filter_attrition_report(
     per-document booleans (map-side combine reduces every partition
     to a single 13-counter row before the 1-row shuffle); the
     per-rule explode runs on the single aggregated row. No UDF, no
-    second pass over the text."""
+    second pass over the text.
+
+    Fixed: the alpha-word-ratio floor 0.8; columns id ``doc_id``, text
+    ``text``."""
     feats = gopher_quality_filter(
         df,
-        text_col=text_col,
-        id_col=id_col,
         min_words=min_words,
         max_words=max_words,
         min_mean_word_len=min_mean_word_len,
         max_mean_word_len=max_mean_word_len,
-        min_alpha_word_ratio=min_alpha_word_ratio,
         min_stopwords=min_stopwords,
     )
     rules = [
@@ -571,7 +571,7 @@ def filter_attrition_report(
         ),
         (
             "alpha_word_ratio",
-            F.col("alpha_word_ratio") >= F.lit(float(min_alpha_word_ratio)),
+            F.col("alpha_word_ratio") >= F.lit(0.8),
         ),
         ("stopwords", F.col("n_stopwords") >= F.lit(min_stopwords)),
     ]
@@ -1070,7 +1070,7 @@ def token_percentiles(
         s = f"{p * 100:g}".replace(".", "_")
         return f"p{s}_tokens"
 
-    ranked = ranked_token_counts(df, "source", "text", "doc_id")
+    ranked = ranked_token_counts(df)
     return (
         ranked.groupBy("__g")
         .agg(
@@ -1109,9 +1109,7 @@ def nearest_rank_expr(p: float) -> Column:
     return F.expr(f"({num} * __n + {den} - 1) div {den}")
 
 
-def ranked_token_counts(
-    df: DataFrame, group_col: str, text_col: str, id_col: str
-) -> DataFrame:
+def ranked_token_counts(df: DataFrame) -> DataFrame:
     """``(__g, __nt, __rn, __n)`` — per-group token counts ranked by
     ``(count, id)`` with the group size alongside, over NON-NULL
     counts only (a null token count is not length-gradable, and Spark
@@ -1119,7 +1117,9 @@ def ranked_token_counts(
     LAST — admitting them would silently shift every rank). The
     shared exact-rank core of :func:`token_percentiles` and
     :func:`..textclean.trim_length_outliers`. Raises on input columns
-    that collide with the reserved dunder names."""
+    that collide with the reserved dunder names.
+
+    Fixed columns: group ``source``, id ``doc_id``, text ``text``."""
     from pyspark.sql import Window
 
     clash = set(df.columns) & set(_RANK_RESERVED)
@@ -1129,9 +1129,9 @@ def ranked_token_counts(
             f"names: {sorted(clash)}"
         )
     counts = df.select(
-        F.col(group_col).alias("__g"),
-        F.col(id_col).alias("__id"),
-        F.size(tokens(F.col(text_col))).alias("__nt"),
+        F.col("source").alias("__g"),
+        F.col("doc_id").alias("__id"),
+        F.size(tokens(F.col("text"))).alias("__nt"),
     ).where(F.col("__nt").isNotNull())
     w_rank = Window.partitionBy("__g").orderBy("__nt", "__id")
     w_all = Window.partitionBy("__g")

@@ -24,15 +24,16 @@ from pyspark.sql import functions as F
 
 def top_k_per_group(
     df: DataFrame,
-    group_cols: list[str],
     value_col: str,
     k: int,
     count_col: str = "count",
 ) -> DataFrame:
-    """Return ``group_cols + [value_col, count_col]`` for the k most
-    frequent values per group; deterministic tie-break = value asc."""
-    counts = df.groupBy(*group_cols, value_col).agg(F.count(F.lit(1)).alias(count_col))
-    w = Window.partitionBy(*group_cols).orderBy(F.col(count_col).desc(), F.col(value_col).asc())
+    """Return ``(lang, value_col, count_col)`` for the k most frequent
+    values per language; deterministic tie-break = value asc.
+
+    Fixed columns: group ``lang``."""
+    counts = df.groupBy("lang", value_col).agg(F.count(F.lit(1)).alias(count_col))
+    w = Window.partitionBy("lang").orderBy(F.col(count_col).desc(), F.col(value_col).asc())
     return (
         counts.withColumn("__rank", F.row_number().over(w))
         .where(F.col("__rank") <= k)
@@ -42,12 +43,12 @@ def top_k_per_group(
 
 def filter_to_top_k(
     df: DataFrame,
-    group_cols: list[str],
     value_col: str,
     k: int,
 ) -> DataFrame:
-    """Keep only rows whose value is in the group's top-k (J2 semi-join)."""
-    dim = top_k_per_group(df, group_cols, value_col, k).select(
-        *group_cols, value_col
-    )
-    return df.join(F.broadcast(dim), [*group_cols, value_col], "left_semi")
+    """Keep only rows whose value is in their language's top-k (J2
+    semi-join).
+
+    Fixed columns: group ``lang``."""
+    dim = top_k_per_group(df, value_col, k).select("lang", value_col)
+    return df.join(F.broadcast(dim), ["lang", value_col], "left_semi")

@@ -29,24 +29,17 @@ from dgraph_dbpedia_spark.operators.cachectl import CacheScope, persisted_frames
 def curate_corpus(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
     gopher_kwargs: dict | None = None,
     near_dup_threshold: float = 0.5,
-    w: int = 3,
-    k: int = 16,
-    bands: int = 4,
     decontaminate_w: int = 13,
     alpha: float | None = None,
-    seed: int = 2,
 ) -> DataFrame:
     """Run the full curation chain over ``docs``; returns the surviving
     rows with all original columns. ``benchmark`` (optional) enables
     the decontamination stage; ``alpha`` (optional) enables the final
-    per-``lang_col`` temperature resampling. ``gopher_kwargs`` override
-    the quality-gate thresholds; ``w``/``k``/``bands``/
-    ``near_dup_threshold`` parameterize the MinHash stage.
+    per-``lang`` temperature resampling (seed 2). ``gopher_kwargs``
+    override the quality-gate thresholds; ``near_dup_threshold`` is the
+    MinHash stage's (``w=3``, ``k=16``, 4 bands).
 
     Cache scope: the quality-gate id set AND the post-exact-dedup
     corpus are persisted — gk feeds both branches of s2's plan (the
@@ -57,7 +50,9 @@ def curate_corpus(
     :func:`dgraph_dbpedia_spark.operators.cachectl.release` after
     materializing). The MinHash pair frame's own handles are freed as
     soon as the (eager) component step has consumed them; if any stage
-    raises, the cache scope frees every cache the call made."""
+    raises, the cache scope frees every cache the call made.
+
+    Fixed columns: id ``doc_id``, text ``text``, language ``lang``."""
     from dgraph_dbpedia_spark.operators.dedup import (
         decontaminate,
         dedup_corpus,
@@ -76,37 +71,27 @@ def curate_corpus(
         # first materializes (inside s2's own plan, where s2's persist
         # cannot help).
         gk = scope.persist(
-            gopher_quality_filter(
-                docs, text_col=text_col, id_col=id_col, **(gopher_kwargs or {})
-            )
+            gopher_quality_filter(docs, **(gopher_kwargs or {}))
             .where(F.col("keep"))
-            .select(F.col(id_col))
+            .select(F.col("doc_id"))
         )
-        s1 = docs.join(gk, id_col, "left_semi")
+        s1 = docs.join(gk, "doc_id", "left_semi")
 
         # 2. exact dedup — min-id representative per distinct text (one
         # groupBy on the md5 hash), then keep those rows
-        reps = exact_dedup(s1, text_col=text_col, id_col=id_col).select(
-            F.col(id_col)
-        )
-        s2 = scope.persist(s1.join(reps, id_col, "left_semi"))
+        reps = exact_dedup(s1).select(F.col("doc_id"))
+        s2 = scope.persist(s1.join(reps, "doc_id", "left_semi"))
 
         # 3. near-dup dedup — banded MinHash pairs + connected-component
         # min-id survivors over the exact-deduped corpus; the component
         # step runs eagerly, so the pair caches are dead weight after it
-        pairs = minhash_dedup_pairs(
-            s2, text_col=text_col, id_col=id_col, w=w, k=k, bands=bands,
-            threshold=near_dup_threshold,
-        )
-        s3 = dedup_corpus(s2, pairs.select("a", "b"), id_col=id_col)
+        pairs = minhash_dedup_pairs(s2, threshold=near_dup_threshold)
+        s3 = dedup_corpus(s2, pairs.select("a", "b"))
         scope.free(*persisted_frames(pairs))
 
         # 4. benchmark decontamination — w-gram hash semi-join kill
         s4 = (
-            decontaminate(
-                s3, benchmark, w=decontaminate_w, text_col=text_col,
-                id_col=id_col, bench_text_col=text_col,
-            )
+            decontaminate(s3, benchmark, w=decontaminate_w)
             if benchmark is not None
             else s3
         )
@@ -114,9 +99,7 @@ def curate_corpus(
         # 5. temperature resampling — LAST, so rates calibrate on the
         # curated distribution
         s5 = (
-            temperature_sample(
-                s4, group_col=lang_col, alpha=alpha, id_col=id_col, seed=seed
-            )
+            temperature_sample(s4, alpha=alpha)
             if alpha is not None
             else s4
         )
@@ -126,14 +109,9 @@ def curate_corpus(
 def pretraining_prep(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
     chunk_tokens: int = 128,
     overlap: int = 16,
     fractions: dict[str, float] | None = None,
-    split_seed: int = 1,
-    epoch: int = 3,
     n_shards: int = 4,
     **curate_kwargs,
 ) -> DataFrame:
@@ -155,8 +133,8 @@ def pretraining_prep(
       shuffle would tie every chunk of a doc on the same hash and let
       ``row_number`` break the tie nondeterministically).
 
-    Returns ``(id, chunk_idx, n_tokens, split, shard, pos)`` — one row
-    per surviving chunk; ``shard``/``pos`` are the epoch-``epoch``
+    Returns ``(doc_id, chunk_idx, n_tokens, split, shard, pos)`` — one
+    row per surviving chunk; ``shard``/``pos`` are the epoch-3
     delivery order for train rows and NULL for val/test/holdout rows.
     The result carries :func:`curate_corpus`'s persist handles
     (release via ``cachectl.release`` after materializing).
@@ -166,7 +144,10 @@ def pretraining_prep(
     projection) except the final per-shard ordering window — ONE
     shuffle of the train chunks, ``n_shards`` the parallelism dial,
     exactly :func:`~dgraph_dbpedia_spark.operators.sampling.
-    epoch_shuffle`'s documented shape."""
+    epoch_shuffle`'s documented shape.
+
+    Fixed: split seed 1, epoch 3; columns id ``doc_id``, text ``text``,
+    language ``lang``."""
     from dgraph_dbpedia_spark.operators.sampling import (
         chunk_documents,
         epoch_shuffle,
@@ -183,40 +164,19 @@ def pretraining_prep(
     # plan-construction time.)
     _probe = docs.limit(0)
     split_corpus(
-        chunk_documents(
-            _probe,
-            chunk_tokens=chunk_tokens,
-            overlap=overlap,
-            text_col=text_col,
-            id_col=id_col,
-        ),
+        chunk_documents(_probe, chunk_tokens=chunk_tokens, overlap=overlap),
         fractions,
-        id_col=id_col,
-        seed=split_seed,
     )
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     with CacheScope() as scope:
-        curated = curate_corpus(
-            docs,
-            benchmark=benchmark,
-            text_col=text_col,
-            id_col=id_col,
-            lang_col=lang_col,
-            **curate_kwargs,
-        )
+        curated = curate_corpus(docs, benchmark=benchmark, **curate_kwargs)
         chunks = chunk_documents(
-            curated,
-            chunk_tokens=chunk_tokens,
-            overlap=overlap,
-            text_col=text_col,
-            id_col=id_col,
+            curated, chunk_tokens=chunk_tokens, overlap=overlap
         )
-        # doc-keyed split AFTER chunking: the coin hashes id_col, so
+        # doc-keyed split AFTER chunking: the coin hashes doc_id, so
         # all chunks of a doc agree — see the leakage note above
-        tagged = split_corpus(
-            chunks, fractions, id_col=id_col, seed=split_seed
-        )
+        tagged = split_corpus(chunks, fractions)
         ck = "__ck"
         while ck in tagged.columns:
             ck = "_" + ck
@@ -230,13 +190,13 @@ def pretraining_prep(
             tagged.withColumn(
                 ck,
                 F.concat_ws(
-                    "#", F.col(id_col).cast("string"), F.col("chunk_idx")
+                    "#", F.col("doc_id").cast("string"), F.col("chunk_idx")
                 ),
             )
         )
         train = epoch_shuffle(
             keyed.where(F.col("split") == "train"),
-            epoch=epoch,
+            epoch=3,
             n_shards=n_shards,
             id_col=ck,
         )
@@ -248,7 +208,7 @@ def pretraining_prep(
             .withColumn("pos", F.lit(None).cast("int"))
         )
         out = train.unionByName(rest).select(
-            F.col(id_col), "chunk_idx", "n_tokens", "split", "shard",
+            F.col("doc_id"), "chunk_idx", "n_tokens", "split", "shard",
             "pos",
         )
         return scope.hand(out, keyed, *persisted_frames(curated))

@@ -109,10 +109,14 @@ def ingest(
                         read_triples_parquet(spark, parquet_path)
                     )
                 return result
-        except BaseException:
+        except BaseException as err:
             # a failed dataset leaves no table behind (partial, or a
-            # previous run's) that a later transform could read as whole
-            fs_delete(spark, parquet_path)
+            # previous run's) that a later transform could read as whole;
+            # if the delete fails too, the dataset's own error still wins
+            try:
+                fs_delete(spark, parquet_path)
+            except Exception as delete_err:
+                err.add_note(f"deleting {parquet_path} also failed: {delete_err!r}")
             raise
 
     from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait

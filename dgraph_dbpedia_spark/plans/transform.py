@@ -105,7 +105,7 @@ def top_k_infobox(
     with CacheScope() as scope:
         topk = scope.persist(
             top_k_per_group(
-                df.where(~F.col("lang").contains("-")), ["lang"], "p", k
+                df.where(~F.col("lang").contains("-")), "p", k
             ).select("p", "lang")
         )
         return filter_by_topk(df, topk), scope.keep(topk)

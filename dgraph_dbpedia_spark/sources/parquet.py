@@ -10,8 +10,6 @@ Reference behavior (DbpediaDgraphSparkApp.scala:474-489):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,34 +21,22 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     check that stays correct when ``path`` is hdfs:// or s3a:// on a
     real cluster (a bare ``os.path.exists`` only sees the driver's
     local disk and silently reports False for every remote path,
-    turning the S4 fallback into an always-empty read). Local paths go
-    through Hadoop's LocalFileSystem, so behavior on file:// / bare
-    paths is unchanged; any py4j failure falls back to the local
-    check rather than failing the read."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        return bool(fs.exists(hpath))
-    except Exception:
-        return os.path.exists(path)
+    turning the S4 fallback into an always-empty read). Bare and
+    ``file:`` paths go through Hadoop's LocalFileSystem. A filesystem
+    the session cannot reach (no client for the scheme, no
+    credentials) raises: it is not a missing dataset."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(hpath))
 
 
 def fs_delete(spark: SparkSession, path: str) -> None:
     """Recursive delete through the Hadoop FS layer (the overwrite-
-    semantics twin of :func:`fs_exists`); best-effort like the
-    ``rmtree(ignore_errors=True)`` it replaces."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
-    except Exception:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    semantics twin of :func:`fs_exists`). A missing path is a no-op; an
+    unreachable filesystem raises, like :func:`fs_exists`."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.delete(hpath, True)
 
 
 def read_triples_parquet(

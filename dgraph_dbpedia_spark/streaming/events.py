@@ -294,15 +294,17 @@ def dedup_events(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     )
 
 
-def enrich_events(events: DataFrame, dim: DataFrame, on: str) -> DataFrame:
+def enrich_events(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join: each micro-batch of the stream
     joins the static dimension as a broadcast hash join (no stream-side
     shuffle, no state store — stream-static inner/left joins are
     stateless). The identical call works on a batch frame (the twin
     the oracle checks). The broadcast is a HARD hint — right for
     genuine dimensions; a dim above the broadcast limit (~8 GB / driver
-    memory) fails the build."""
-    return events.join(F.broadcast(dim), on, "left")
+    memory) fails the build.
+
+    Fixed columns: join key ``user_id``."""
+    return events.join(F.broadcast(dim), "user_id", "left")
 
 
 def interval_join(

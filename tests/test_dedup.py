@@ -75,9 +75,9 @@ def test_minhash_arrow_pinned_equal_to_native(spark):
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sh = _hashed_shingled(docs, "text", "doc_id", 3)
+    sh = _hashed_shingled(docs, "doc_id", 3)
     nat = _signatures_from_hashed(sh, "doc_id", 16).withColumnRenamed("sig", "n")
-    arr = sh.select("doc_id", _minhash_lanes_arrow(16)(F.col("sh")).alias("a"))
+    arr = sh.select("doc_id", _minhash_lanes_arrow()(F.col("sh")).alias("a"))
     diff = nat.join(arr, "doc_id").where(F.col("n") != F.col("a")).count()
     assert diff == 0 and arr.count() == docs.count()
 
@@ -92,7 +92,7 @@ def test_simhash_arrow_pinned_equal_to_native(spark):
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    hs = _token_hashes(docs, "text", "doc_id")
+    hs = _token_hashes(docs)
     nat = _simhash_fold_native(hs, "doc_id").withColumnRenamed("simhash", "n")
     arr = hs.select("doc_id", _simhash_fold_arrow()(F.col("hs")).alias("a"))
     diff = nat.join(arr, "doc_id").where(F.col("n") != F.col("a")).count()
@@ -282,7 +282,7 @@ def test_rolling_shingle_hash_duckdb_bit_equal(spark):
     for w in (3, 13):
         got = {
             r["doc_id"]: sorted(r["sh"])
-            for r in _hashed_shingled(df, "text", "doc_id", w).collect()
+            for r in _hashed_shingled(df, "doc_id", w).collect()
         }
         con = duckdb.connect()
         con.execute(
@@ -295,7 +295,7 @@ def test_rolling_shingle_hash_duckdb_bit_equal(spark):
             r[0]: r[1]
             for r in con.execute(
                 f"WITH t AS (SELECT doc_id, {th} AS th FROM documents) "
-                f"SELECT doc_id, list_sort({rolling_shingle_hashes_sql('th', w)}) "
+                f"SELECT doc_id, list_sort({rolling_shingle_hashes_sql(w)}) "
                 f"FROM t"
             ).fetchall()
         }
@@ -305,7 +305,7 @@ def test_rolling_shingle_hash_duckdb_bit_equal(spark):
     pair = spark.createDataFrame(
         [("x", "alpha beta gamma"), ("y", "beta alpha gamma")], ["doc_id", "text"]
     )
-    sh = {r["doc_id"]: r["sh"] for r in _hashed_shingled(pair, "text", "doc_id", 3).collect()}
+    sh = {r["doc_id"]: r["sh"] for r in _hashed_shingled(pair, "doc_id", 3).collect()}
     assert sh["x"] != sh["y"]
 
 
@@ -319,7 +319,7 @@ def test_shingle_explode_no_refolded_filter(spark):
     from dgraph_dbpedia_spark.operators.dedup import _hashed_shingled
 
     df = spark.createDataFrame([(1, "a b c d e")], ["doc_id", "text"])
-    exploded = _hashed_shingled(df, "text", "doc_id", 3).select(
+    exploded = _hashed_shingled(df, "doc_id", 3).select(
         "doc_id", F.explode("sh").alias("h")
     )
     plan = exploded._jdf.queryExecution().optimizedPlan().toString()
@@ -528,7 +528,6 @@ def test_dedup_composites_release_caches_on_component_failure(
                     min_stopwords=0,
                 ),
                 near_dup_threshold=0.5,
-                w=3,
             )
         if composite == "dedup_increment":
             return dedup.dedup_increment(

@@ -24,13 +24,13 @@ def _freq_df(spark):
 
 
 def test_top_k_per_group(spark):
-    out = top_k_per_group(_freq_df(spark), ["lang"], "p", 2)
+    out = top_k_per_group(_freq_df(spark), "p", 2)
     got = {(r["lang"], r["p"]): r["count"] for r in out.collect()}
     assert got == {("a", "x"): 3, ("a", "y"): 2, ("b", "m"): 2, ("b", "n"): 2}
 
 
 def test_top_k_tie_break_deterministic(spark):
-    out = top_k_per_group(_freq_df(spark), ["lang"], "p", 1)
+    out = top_k_per_group(_freq_df(spark), "p", 1)
     got = {r["lang"]: r["p"] for r in out.collect()}
     # b has a tie m/n at count 2 -> lexicographic winner m
     assert got == {"a": "x", "b": "m"}
@@ -38,7 +38,7 @@ def test_top_k_tie_break_deterministic(spark):
 
 def test_filter_to_top_k(spark):
     df = _freq_df(spark)
-    out = filter_to_top_k(df, ["lang"], "p", 1)
+    out = filter_to_top_k(df, "p", 1)
     assert out.count() == 3 + 2  # a/x rows + b/m rows
     assert set(r["p"] for r in out.collect()) == {"x", "m"}
 
@@ -131,7 +131,7 @@ def test_rollup_group(spark):
     df = spark.createDataFrame(
         [("en", 10), ("en-de", 5), ("en-vi", 3)], ["lang", "n"]
     )
-    out = rollup_group(df, "lang", lambda c: c.startswith("en-"), "en-*")
+    out = rollup_group(df, lambda c: c.startswith("en-"), "en-*")
     got = {r["lang"]: r["n"] for r in out.collect()}
     assert got["en-*"] == 8 and got["en"] == 10
 
@@ -187,13 +187,13 @@ def test_rollup_group_empty_pred_and_float_columns(spark):
     ).withColumn("score", F.col("score").cast("float"))
 
     rolled = rollup_group(
-        df, "lang", lambda c: c.startswith("en-"), "en-*"
+        df, lambda c: c.startswith("en-"), "en-*"
     )
     rows = {r["lang"]: (r["n"], r["score"]) for r in rolled.collect()}
     assert rows["en-*"] == (5, 4.0)
     assert len(rows) == 4
 
     none = rollup_group(
-        df, "lang", lambda c: c.startswith("zz-"), "zz-*"
+        df, lambda c: c.startswith("zz-"), "zz-*"
     )
     assert none.count() == 3  # nothing appended, no phantom NULL row

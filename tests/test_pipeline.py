@@ -639,6 +639,51 @@ def test_ingest_failed_dataset_leaves_no_table(
         assert not (out / f"{dataset}.parquet").exists(), dataset
 
 
+def test_ingest_failed_dataset_keeps_its_error_when_delete_fails(
+    spark, pipeline_dirs, tmp_path, monkeypatch
+):
+    """The failed dataset's cleanup delete can fail too (an unreachable
+    filesystem); ingest still raises the dataset's own error, with the
+    delete's failure attached as a note."""
+    from dgraph_dbpedia_spark.plans import ingest as ingest_mod
+
+    def read_ttl(spark_, path, *args, **kwargs):
+        raise RuntimeError("injected labels read failure")
+
+    def fs_delete(spark_, path):
+        raise OSError("injected delete failure")
+
+    monkeypatch.setattr(ingest_mod, "read_ttl", read_ttl)
+    monkeypatch.setattr(ingest_mod, "fs_delete", fs_delete)
+    with pytest.raises(RuntimeError, match="injected labels read failure") as info:
+        ingest(spark, str(pipeline_dirs[0]), str(tmp_path / "parquet"),
+               datasets=["labels"], print_stats=False)
+    assert any("injected delete failure" in n for n in info.value.__notes__)
+
+
+@pytest.mark.parametrize("path", [
+    "nosuchfs://bucket/labels.parquet",
+    "nosuchfs:///labels.parquet",
+])
+def test_unreachable_filesystem_is_an_error_not_an_empty_dataset(spark, path):
+    """A path on a filesystem the session has no client for is not a
+    missing dataset: existence checks, deletes and the triple reader
+    raise instead of reading it as empty (which would let transform
+    write empty sinks and exit 0)."""
+    from dgraph_dbpedia_spark.sources.parquet import (
+        fs_delete,
+        fs_exists,
+        read_triples_parquet,
+    )
+
+    with pytest.raises(Exception, match="nosuchfs"):
+        fs_exists(spark, path)
+    with pytest.raises(Exception, match="nosuchfs"):
+        fs_delete(spark, path)
+    with pytest.raises(Exception, match="nosuchfs"):
+        read_triples_parquet(spark, path)
+
+
 def test_curate_corpus_every_stage_fires(spark):
     """End-to-end curation composition: each planted doc exercises one
     stage — gopher kill (too short), exact-dup kill (identical text,
@@ -680,7 +725,6 @@ def test_curate_corpus_every_stage_fires(spark):
             min_stopwords=0,
         ),
         near_dup_threshold=0.5,
-        w=3,
         decontaminate_w=3,
     )
     rows = out.collect()
@@ -697,7 +741,6 @@ def test_curate_corpus_every_stage_fires(spark):
             min_stopwords=0,
         ),
         near_dup_threshold=0.5,
-        w=3,
         alpha=0.5,
     )
     ids2 = sorted(r["doc_id"] for r in out2.collect())
@@ -734,11 +777,9 @@ def test_pretraining_prep_composition_seams(spark):
             min_stopwords=0,
         ),
         near_dup_threshold=0.9,
-        w=3,
         chunk_tokens=16,
         overlap=4,
         fractions={"train": 0.5, "val": 0.5},
-        epoch=3,
         n_shards=2,
     )
     out = pretraining_prep(docs, **kwargs)

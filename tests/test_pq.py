@@ -212,7 +212,7 @@ def test_pq_ivf_served_prunes_and_finds_twin(spark, emb, tmp_path):
         F.col("embedding").alias("q")
     )
     out = pq_ivf_topk_served(
-        served, cb, coarse, q, dims=64, k=3
+        served, cb, coarse, q, k=3
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert (
@@ -304,7 +304,7 @@ def test_pq_ivf_rerank_served_full_path(spark, emb, tmp_path):
     )
     out = pq_ivf_rerank_topk_served(
         served, cb, coarse, corpus, q,
-        dims=64, k=3, shortlist_n=30,
+        k=3, shortlist_n=30,
     )
     # the pruned code-list scan sits in the SHORTLIST subtree — the
     # re-rank's own float scan (no cid column) also reports an empty
@@ -319,7 +319,7 @@ def test_pq_ivf_rerank_served_full_path(spark, emb, tmp_path):
     with pytest.raises(ValueError, match="shortlist_n"):
         pq_ivf_rerank_topk_served(
             served, cb, coarse, corpus, q,
-            dims=64, k=5, shortlist_n=2,
+            k=5, shortlist_n=2,
         )
 
 

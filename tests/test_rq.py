@@ -321,7 +321,7 @@ def test_rq_ivf_served_prunes_and_finds_twin(spark, emb, tmp_path):
     q = emb.orderBy("vec_id").limit(1).select(
         F.col("embedding").alias("q")
     )
-    out = rq_ivf_topk_served(served, cb, coarse, q, dims=64, k=5)
+    out = rq_ivf_topk_served(served, cb, coarse, q, k=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert (
         "PartitionFilters: [" in plan
@@ -354,6 +354,6 @@ def test_rq_ivf_served_empty_centroids_empty_result(spark, emb):
         [], "cid long, c array<double>"
     )
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
-    out = rq_ivf_topk_served(codes, cb, empty_cent, q, dims=64, k=3)
+    out = rq_ivf_topk_served(codes, cb, empty_cent, q, k=3)
     assert out.columns == ["vec_id", "sim"]
     assert out.count() == 0

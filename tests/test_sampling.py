@@ -221,14 +221,14 @@ def test_temperature_sample_rates_and_determinism(spark):
         (1000 + i, "rare") for i in range(10)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "lang"])
-    out = temperature_sample(df, group_col="lang", alpha=0.5, seed=2)
+    out = temperature_sample(df, alpha=0.5)
     got = out.groupBy("lang").count().collect()
     by = {r["lang"]: r["count"] for r in got}
     assert by.get("rare") == 10  # rate 1.0: every rare row survives
     # big keeps (400/10)^(-0.5) ~ 0.1581 -> ~63 of 400; hash-coin
     # realization noise is binomial, allow a generous band
     assert 35 <= by.get("big", 0) <= 95
-    again = temperature_sample(df, group_col="lang", alpha=0.5, seed=2)
+    again = temperature_sample(df, alpha=0.5)
     assert sorted(r["doc_id"] for r in out.collect()) == sorted(
         r["doc_id"] for r in again.collect()
     )
@@ -248,7 +248,7 @@ def test_temperature_sample_null_group_and_no_shuffle_of_corpus(spark):
 
     rows = [(i, "a") for i in range(40)] + [(100 + i, None) for i in range(5)]
     df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = temperature_sample(df, group_col="lang", alpha=0.5, seed=2)
+    out = temperature_sample(df, alpha=0.5)
     by = {r["lang"]: r["count"] for r in out.groupBy("lang").count().collect()}
     assert by.get(None) == 5  # the rare (NULL) group keeps everything
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -424,7 +424,7 @@ def test_cosine_topk_query_col_and_zero_norm(spark):
     query = spark.createDataFrame(
         [(99, [1.0, 0.0])], ["qid", "q"]  # vector NOT the first column
     )
-    got = cosine_topk(emb, query, k=3, query_col="q").collect()
+    got = cosine_topk(emb, query, k=3).collect()
     assert [r["vec_id"] for r in got] == [1, 2, 3]
     assert got[0]["sim"] == 1.0
     assert got[-1]["sim"] is None
@@ -848,7 +848,7 @@ def _ivf_topk_native_plan(vectors, q, k, n_centroids, n_probe):
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     cent = ivf_seed_centroids(e, n_centroids, vec_col="e")
-    return _ivf_topk_native(e, cent, q, k, "vec_id", "q", n_probe)
+    return _ivf_topk_native(e, cent, q, k, n_probe)
 
 
 def test_ivf_topk_arrow_matches_native(spark, vectors, query):

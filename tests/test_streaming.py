@@ -154,12 +154,12 @@ def test_stream_enrich_stateless_broadcast(spark, events_dir, events_batch):
     )
     stream = read_events_stream(spark, events_dir)
     run_to_memory(
-        enrich_events(stream, dim, "user_id").select("event_id", "segment"),
+        enrich_events(stream, dim).select("event_id", "segment"),
         "t_enrich",
         "append",
     )
     got = spark.table("t_enrich")
-    want = enrich_events(events_batch, dim, "user_id").select("event_id", "segment")
+    want = enrich_events(events_batch, dim).select("event_id", "segment")
     assert got.count() == want.count() == events_batch.count()
     assert got.exceptAll(want).count() == 0
     # batch twin plans a broadcast join
@@ -217,12 +217,12 @@ def test_multifile_tumbling_and_enrich_match_batch(
     )
     stream = read_events_stream(spark, multi_file_events_dir, max_files_per_trigger=1)
     run_to_memory(
-        enrich_events(stream, dim, "user_id").select("event_id", "segment"),
+        enrich_events(stream, dim).select("event_id", "segment"),
         "mf_enrich",
         "append",
     )
     got_e = spark.table("mf_enrich")
-    want_e = enrich_events(events_batch, dim, "user_id").select(
+    want_e = enrich_events(events_batch, dim).select(
         "event_id", "segment"
     )
     assert got_e.count() == want_e.count() == events_batch.count()

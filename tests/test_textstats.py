@@ -794,8 +794,7 @@ def test_filter_attrition_report_matches_gate(spark):
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     kw = dict(min_words=10, max_words=200, min_mean_word_len=2.0,
-              max_mean_word_len=12.0, min_alpha_word_ratio=0.8,
-              min_stopwords=2)
+              max_mean_word_len=12.0, min_stopwords=2)
     rep = filter_attrition_report(docs, **kw).collect()
     assert [r["rule_order"] for r in rep] == [1, 2, 3, 4, 5, 6]
     assert [r["rule"] for r in rep] == [

@@ -72,7 +72,7 @@ def main() -> None:
             lambda: filter_attrition_report(
                 docs, min_words=25, max_words=100_000,
                 min_mean_word_len=2.0, max_mean_word_len=12.0,
-                min_alpha_word_ratio=0.8, min_stopwords=0,
+                min_stopwords=0,
             ),
         ),
         (
