@@ -921,7 +921,9 @@ def _q_pq_ivf_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.pq import pq_ivf_topk_served
 
     emb = _t(spark, sf_dir, "embeddings")
-    codes, cb, coarse = _served_pq_index(spark, sf_dir)
+    codes, cb, coarse = _served_index(
+        spark, sf_dir, "pq_codes", "pq_codebooks", "centroids"
+    )
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return pq_ivf_topk_served(codes, cb, coarse, q, k=5)
 
@@ -936,7 +938,9 @@ def _q_pq_ivf_rerank_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.pq import pq_ivf_rerank_topk_served
 
     emb = _t(spark, sf_dir, "embeddings")
-    codes, cb, coarse = _served_pq_index(spark, sf_dir)
+    codes, cb, coarse = _served_index(
+        spark, sf_dir, "pq_codes", "pq_codebooks", "centroids"
+    )
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return pq_ivf_rerank_topk_served(
         codes,
@@ -1782,7 +1786,7 @@ def _q_hybrid_search_rrf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"qa": ["spark", "window", "hash"], "qb": ["merge", "join"]},
         k=5,
     )
-    assigned, centroids = _served_ivf_index(spark, sf_dir)
+    assigned, centroids = _served_index(spark, sf_dir, "assigned", "centroids")
     sem = None
     for qid, qvec in (("qa", 0), ("qb", 1)):
         q = emb.where(F.col("vec_id") == qvec).select(
@@ -1830,7 +1834,7 @@ def _q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned, centroids = _served_ivf_index(spark, sf_dir)
+    assigned, centroids = _served_index(spark, sf_dir, "assigned", "centroids")
     ref = cand = None
     for qid, qvec in (("qa", 0), ("qb", 1)):
         q = emb.where(F.col("vec_id") == qvec).select(
@@ -1876,7 +1880,7 @@ def _q_mmr_rerank_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.similarity import ivf_topk_served
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned, centroids = _served_ivf_index(spark, sf_dir)
+    assigned, centroids = _served_index(spark, sf_dir, "assigned", "centroids")
     q = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q")
     )
@@ -2165,64 +2169,24 @@ def _q_ivf_ann_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.similarity import ivf_topk_served
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned, centroids = _served_ivf_index(spark, sf_dir)
+    assigned, centroids = _served_index(spark, sf_dir, "assigned", "centroids")
     query = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return ivf_topk_served(assigned, centroids, query, k=5, n_probe=2)
 
 
-def _served_ivf_index(spark: SparkSession, sf_dir: str):
-    """(assigned, centroids) frames of the materialized served-IVF
-    index for ``sf_dir``, building it atomically on first use."""
-    emb = _t(spark, sf_dir, "embeddings")
-    e = emb.where(F.col("vec_id") > 0).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+def _served_index(spark: SparkSession, sf_dir: str, *parts: str):
+    """One frame per named part (those :func:`_ivf_index_complete`
+    checks, e.g. ``"assigned", "centroids"``) of the materialized served
+    index for ``sf_dir``, in order, building the whole index atomically
+    on first use over the INDEXED corpus (vec_id > 0), the deployment
+    shape: an index serves the corpus it holds."""
     root = _ivf_index_root(sf_dir)
     if not _ivf_index_complete(root):
+        e = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") > 0).select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("e")
+        )
         _build_ivf_index_atomic(e, root)
-    return spark.read.parquet(f"{root}/assigned"), spark.read.parquet(
-        f"{root}/centroids"
-    )
-
-
-def _served_quantized_index(spark: SparkSession, sf_dir: str):
-    """(quantized, centroids, scales) frames of the int8 half of the
-    served index (v3 layout), building the whole index atomically on
-    first use — shares the build with :func:`_served_ivf_index`."""
-    _served_ivf_index(spark, sf_dir)  # ensures a complete v3 root
-    root = _ivf_index_root(sf_dir)
-    return (
-        spark.read.parquet(f"{root}/quantized"),
-        spark.read.parquet(f"{root}/centroids"),
-        spark.read.parquet(f"{root}/scales"),
-    )
-
-
-def _served_pq_index(spark: SparkSession, sf_dir: str):
-    """(pq_codes, pq_codebooks, centroids) frames of the PQ half of
-    the served index (v4 layout), building the whole index atomically
-    on first use — shares the build with :func:`_served_ivf_index`."""
-    _served_ivf_index(spark, sf_dir)  # ensures a complete v4 root
-    root = _ivf_index_root(sf_dir)
-    return (
-        spark.read.parquet(f"{root}/pq_codes"),
-        spark.read.parquet(f"{root}/pq_codebooks"),
-        spark.read.parquet(f"{root}/centroids"),
-    )
-
-
-def _served_rq_index(spark: SparkSession, sf_dir: str):
-    """(rq_codes, rq_codebooks) frames of the RQ half of the served
-    index (v5 layout), building the whole index atomically on first
-    use — shares the build with :func:`_served_ivf_index`. Codebooks
-    are trained on the INDEXED corpus (vec_id > 0), the deployment
-    shape: an index serves the corpus it holds."""
-    _served_ivf_index(spark, sf_dir)  # ensures a complete v5 root
-    root = _ivf_index_root(sf_dir)
-    return (
-        spark.read.parquet(f"{root}/rq_codes"),
-        spark.read.parquet(f"{root}/rq_codebooks"),
-    )
+    return tuple(spark.read.parquet(f"{root}/{part}") for part in parts)
 
 
 def _q_rq_ivf_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2236,8 +2200,9 @@ def _q_rq_ivf_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.rq import rq_ivf_topk_served
 
     emb = _t(spark, sf_dir, "embeddings")
-    codes, rcb = _served_rq_index(spark, sf_dir)
-    _, centroids = _served_ivf_index(spark, sf_dir)
+    codes, rcb, centroids = _served_index(
+        spark, sf_dir, "rq_codes", "rq_codebooks", "centroids"
+    )
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return rq_ivf_topk_served(codes, rcb, centroids, q, k=5)
 
@@ -2253,7 +2218,7 @@ def _q_rq_rerank_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.rq import rq_rerank_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    codes, rcb = _served_rq_index(spark, sf_dir)
+    codes, rcb = _served_index(spark, sf_dir, "rq_codes", "rq_codebooks")
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return rq_rerank_topk(
         codes.select("vec_id", "codes"),
@@ -2289,7 +2254,7 @@ def _q_knn_label_noise_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned, _ = _served_ivf_index(spark, sf_dir)
+    (assigned,) = _served_index(spark, sf_dir, "assigned")
     return knn_label_noise_report(
         emb, k=5, block_assign=assigned.select("vec_id", "cid")
     )
@@ -2316,7 +2281,7 @@ def _q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.similarity import knn_classify
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned, _ = _served_ivf_index(spark, sf_dir)
+    (assigned,) = _served_index(spark, sf_dir, "assigned")
     asg = assigned.select("vec_id", "cid")
     pairs = (
         asg.where(F.col("vec_id") % 5 == 0)
@@ -2367,7 +2332,7 @@ def _q_rq_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.rq import rq_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    codes, rcb = _served_rq_index(spark, sf_dir)
+    codes, rcb = _served_index(spark, sf_dir, "rq_codes", "rq_codebooks")
     q = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return rq_topk(codes.select("vec_id", "codes"), rcb, q, dims=64, k=5)
 
@@ -2386,7 +2351,9 @@ def _q_quantized_ann_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    quantized, centroids, scales = _served_quantized_index(spark, sf_dir)
+    quantized, centroids, scales = _served_index(
+        spark, sf_dir, "quantized", "centroids", "scales"
+    )
     query = emb.orderBy("vec_id").limit(1).select(F.col("embedding").alias("q"))
     return quantized_ivf_topk_served(
         quantized, centroids, scales, query, k=5, n_probe=2
@@ -2403,7 +2370,7 @@ def _q_ivf_ann_topk_served_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dgraph_dbpedia_spark.operators.similarity import ivf_topk_served_many
 
     emb = _t(spark, sf_dir, "embeddings")
-    assigned, centroids = _served_ivf_index(spark, sf_dir)
+    assigned, centroids = _served_index(spark, sf_dir, "assigned", "centroids")
     qs = emb.orderBy("vec_id").limit(3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("q")
     )
@@ -2424,7 +2391,9 @@ def _q_quantized_ann_topk_served_batch(
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    quantized, centroids, scales = _served_quantized_index(spark, sf_dir)
+    quantized, centroids, scales = _served_index(
+        spark, sf_dir, "quantized", "centroids", "scales"
+    )
     qs = emb.orderBy("vec_id").limit(3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("q")
     )
@@ -3031,7 +3000,7 @@ def _q_ivf_list_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_list_skew_report,
     )
 
-    assigned, _ = _served_ivf_index(spark, sf_dir)
+    (assigned,) = _served_index(spark, sf_dir, "assigned")
     return ivf_list_skew_report(
         assigned.select("vec_id", F.col("cid").cast("long").alias("cid"))
     )
@@ -3849,7 +3818,7 @@ def _sql_pq_topk(
 
     # corpus_train: the served index trains codebooks/centroids on the
     # CORPUS (vec_id > 0) only — the query vector is held out, exactly
-    # like the Spark-side _served_ivf_index build
+    # like the Spark-side _served_index build
     where = " WHERE vec_id > 0" if corpus_train else ""
     ctes = [
         "e AS (SELECT vec_id, embedding::DOUBLE[] AS v "
@@ -5289,16 +5258,14 @@ def oracle_sql() -> dict[str, str]:
         # diff — the operator's full-outer join replayed over the
         # deterministic two-release derivation (drop %7 ids / drop
         # %11 ids + edit %5 texts)
-        "corpus_diff_report": """
+        "corpus_diff_report": f"""
             WITH old AS (
-                SELECT doc_id,
-                       ('0x' || substring(md5(text), 1, 15))::BIGINT AS h
+                SELECT doc_id, {hash64_sql("text")} AS h
                 FROM documents WHERE doc_id % 7 != 0),
             new AS (
-                SELECT doc_id,
-                       ('0x' || substring(md5(
-                           CASE WHEN doc_id % 5 = 0 THEN text || ' v2'
-                                ELSE text END), 1, 15))::BIGINT AS h
+                SELECT doc_id, {hash64_sql(
+                    "CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END"
+                )} AS h
                 FROM documents WHERE doc_id % 11 != 0),
             d AS (
                 SELECT CASE
@@ -6033,25 +6000,24 @@ def oracle_sql() -> dict[str, str]:
               ON e.user_id = p.user_id AND abs(e.ts_s - p.ts_s) <= 600
             GROUP BY p.event_id
         """,
-        "multimodal_decode": """
+        "multimodal_decode": f"""
             SELECT doc_id AS id,
                    octet_length(encode(text)) AS n_bytes,
-                   16 + ('0x' || substring(md5(text), 1, 15))::BIGINT % 4096 AS width,
-                   16 + (('0x' || substring(md5(text), 1, 15))::BIGINT // 4096) % 4096 AS height,
+                   16 + {hash64_sql("text")} % 4096 AS width,
+                   16 + ({hash64_sql("text")} // 4096) % 4096 AS height,
                    'fake/deterministic' AS format
             FROM documents
         """,
         # frame_sample chunks the UTF-8 bytes at a 64-byte stride; the
         # corpus is pure ASCII (asserted in tests), so DuckDB's
         # character-based substring produces the same chunks
-        "frame_sample": """
+        "frame_sample": f"""
             WITH f AS (
                 SELECT doc_id AS id, text,
                        unnest(range(0, greatest(length(text), 1), 64)) AS off
                 FROM documents)
             SELECT id, (off // 64) AS frame_idx,
-                   ('0x' || substring(md5(substring(text, off + 1, 64)), 1, 15))::BIGINT
-                       AS frame_hash
+                   {hash64_sql("substring(text, off + 1, 64)")} AS frame_hash
             FROM f
         """,
         "embed_binary": _sql_embed_binary(),
@@ -7089,7 +7055,7 @@ def oracle_sql() -> dict[str, str]:
     # r14: confident-learning k-NN label-noise screen in its BLOCKED
     # shape — candidate pairs are the served IVF index's same-cid
     # lists (16 lowest-vec_id seeds over the vec_id > 0 corpus, the
-    # _served_ivf_index build rule; assignment = round-6 cosine desc,
+    # _served_index build rule; assignment = round-6 cosine desc,
     # cid asc — the casg CTE the pq/rq served oracles share), then
     # pair cosine round-6 (NULL sims excluded pre-rank: Spark and
     # DuckDB disagree on NULL placement under DESC), rank (sim desc,

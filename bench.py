@@ -165,7 +165,7 @@ def main() -> None:
     # timed serve-path queries, and a missing embeddings table fails
     # the timed loop anyway — the only exceptions a guard could catch
     # are real defects
-    entry_mod._served_ivf_index(spark, sf_dir)
+    entry_mod._served_index(spark, sf_dir)
 
     # warm the shingle/self-join/window codepaths on a 64-doc slice:
     # the first higher-order-fold + pair-join + rank-window in a session

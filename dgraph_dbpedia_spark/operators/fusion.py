@@ -121,7 +121,9 @@ def mmr_rerank(
     over the not-yet-selected candidates — the standard diversity
     re-rank a RAG stack runs so the k retrieved chunks don't all say
     the same thing. Returns ``(rank, id, rel, mmr)`` with ``rank``
-    1..k in selection order.
+    1..k in selection order. The query frame follows
+    :func:`..similarity._one_query`'s contract; an empty one returns
+    an empty result.
 
     Shortlist: by default the exact brute-cosine top-``shortlist_n``
     (round-4 ``rel``, ties id asc — the :func:`..similarity.
@@ -162,6 +164,7 @@ def mmr_rerank(
     Fixed columns: id ``vec_id``, query vector ``q``, vector
     ``embedding``."""
     from dgraph_dbpedia_spark.operators.similarity import (
+        _one_query,
         _round_half_up_np,
         cosine,
     )
@@ -188,12 +191,7 @@ def mmr_rerank(
     )
 
     q = query.select(F.col("q").cast("array<double>").alias("q"))
-    probe = q.limit(2).collect()
-    if len(probe) > 1:
-        raise ValueError(
-            "mmr_rerank expects exactly one query vector, got a "
-            "multi-row query frame"
-        )
+    probe = _one_query(q, "mmr_rerank")
     id_type = df.schema["vec_id"].dataType
     ret = StructType(
         [
@@ -204,7 +202,7 @@ def mmr_rerank(
         ]
     )
     spark = df.sparkSession
-    if not probe:
+    if probe is None:
         return spark.createDataFrame([], ret)
     if candidates is None:
         short = (

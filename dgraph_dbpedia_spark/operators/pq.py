@@ -39,8 +39,12 @@ from pyspark.sql import functions as F
 from dgraph_dbpedia_spark.operators.cachectl import CacheScope
 from dgraph_dbpedia_spark.operators.similarity import (
     _capped_collect,
+    _cosine_topk,
     _dot,
+    _empty_topk,
     _lloyd_refine,
+    _one_query,
+    _served_probe,
 )
 
 
@@ -516,30 +520,20 @@ def pq_topk(
     reads ``m`` bytes-ish per vector instead of ``4 x dims``, and
     pre-filtering it by an IVF cid list (the
     ``quantized_ivf_topk_served`` pattern) partition-prunes before
-    even that.
+    even that. The query frame follows
+    :func:`..similarity._one_query`'s contract.
 
     Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     sub = _validate_pq(dims, m, 1)
     q = query.select(F.col("q").cast("array<double>").alias("qv"))
-    # one-row validation BEFORE anything runs (the _probe_single
-    # discipline): a multi-row query frame would interleave every
-    # query's (j, cid, dq) entries into ONE collect_list table in
-    # task-dependent order — silently mixed, run-to-run
-    # nondeterministic sims instead of a loud error. limit(2) bounds
-    # the check so a corpus frame passed by mistake never reaches the
-    # driver.
-    probe = q.limit(2).collect()
-    if len(probe) > 1:
-        raise ValueError(
-            "pq_topk expects exactly one query vector, got a multi-row "
-            "query frame — issue one call per query"
-        )
-    if not probe:
-        return codes_df.where(F.lit(False)).select(
-            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
-        )
+    # the query contract BEFORE anything runs: a multi-row query frame
+    # would interleave every query's (j, cid, dq) entries into ONE
+    # collect_list table in task-dependent order — silently mixed,
+    # run-to-run nondeterministic sims instead of a loud error
+    if _one_query(q, "pq_topk") is None:
+        return _empty_topk(codes_df)
     # the per-query ADC table as ONE broadcast row, laid out FLAT and
     # SORTED by (j, cid) so entry (j, code) sits at position
     # j * k_sub + code: for every (j, cid), dq = q_j . c and
@@ -636,12 +630,11 @@ def _exact_rerank(
 
     Fixed columns: id ``vec_id``, vector ``embedding``, query vector
     ``q``."""
-    from dgraph_dbpedia_spark.operators.similarity import cosine_topk
-
     cand = vectors_df.join(
         F.broadcast(shortlist.select("vec_id")), "vec_id", "left_semi"
     )
-    return cosine_topk(cand, query, k=k)
+    # stage 1 already read the query: the scoring core, no second read
+    return _cosine_topk(cand, query, k, "embedding")
 
 
 def pq_rerank_topk(
@@ -750,29 +743,13 @@ def pq_ivf_topk_served(
 
     Fixed: 64-d vectors; columns codes ``codes``, id ``vec_id``, query
     vector ``q``."""
-    from dgraph_dbpedia_spark.operators.similarity import _probe_single
-
-    q = query.select(F.col("q").cast("array<double>").alias("qv"))
-    probes = _probe_single(
-        coarse_centroids.select(
-            "cid", F.col("c").cast("array<double>").alias("c")
-        ),
-        q.select(F.col("qv")),
+    return _served_probe(
+        codes,
+        coarse_centroids,
+        query,
         2,
         "pq_ivf_topk_served",
-    )
-    if not probes:
-        return codes.where(F.lit(False)).select(
-            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
-        )
-    pruned = codes.where(F.col("cid").isin(probes))
-    return pq_topk(
-        pruned,
-        codebooks,
-        query,
-        dims=64,
-        m=4,
-        k=k,
+        lambda lists: pq_topk(lists, codebooks, query, dims=64, m=4, k=k),
     )
 
 

@@ -50,7 +50,12 @@ from dgraph_dbpedia_spark.operators.pq import (
     encode_codes_arrow,
     pq_train,
 )
-from dgraph_dbpedia_spark.operators.similarity import _dot
+from dgraph_dbpedia_spark.operators.similarity import (
+    _dot,
+    _empty_topk,
+    _one_query,
+    _served_probe,
+)
 
 
 def _rq_validate(dims: int, k_sub: int, n_levels: int) -> None:
@@ -348,7 +353,9 @@ def rq_topk(
     separate. A code outside the codebook yields NULL sim (the
     foreign-codebook contract); top-k is TakeOrdered (sim desc, id
     asc). Only the 2-stage form is served — deeper chains compose as
-    shortlist + :func:`rq_rerank_topk`'s exact stage anyway.
+    shortlist + :func:`rq_rerank_topk`'s exact stage anyway. The query
+    frame follows :func:`..similarity._one_query`'s contract, and its
+    width must be ``dims``.
 
     Fixed columns: codes ``codes``, id ``vec_id``, query vector ``q``."""
     if k < 1:
@@ -358,21 +365,14 @@ def rq_topk(
     # shortlist + exact re-rank anyway
     k_sub = len(_read_codebooks(codebooks, "lvl", 2, dims, "stage")[0])
     q = query.select(F.col("q").cast("array<double>").alias("qv"))
-    probe = q.limit(2).collect()
-    if len(probe) > 1:
+    row = _one_query(q, "rq_topk")
+    if row is None:
+        return _empty_topk(codes_df)
+    if len(row["qv"]) != dims:
         raise ValueError(
-            "rq_topk expects exactly one query vector, got a multi-row "
-            "query frame — issue one call per query"
-        )
-    if probe and probe[0]["qv"] is not None and len(probe[0]["qv"]) != dims:
-        raise ValueError(
-            f"query width {len(probe[0]['qv'])} != dims {dims} — a "
+            f"query width {len(row['qv'])} != dims {dims} — a "
             "mismatched zip_with dot would NULL-pad into silently "
             "all-NULL sims"
-        )
-    if not probe:
-        return codes_df.where(F.lit(False)).select(
-            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
         )
     # table 1: per (lvl, cid) -> (dq = q.c, cc = |c|^2), flat at
     # position lvl * k_sub + cid; plus |q| — ONE broadcast row
@@ -506,26 +506,11 @@ def rq_ivf_topk_served(
 
     Fixed: 64-d vectors; columns codes ``codes``, id ``vec_id``, query
     vector ``q``."""
-    from dgraph_dbpedia_spark.operators.similarity import _probe_single
-
-    q = query.select(F.col("q").cast("array<double>").alias("qv"))
-    probes = _probe_single(
-        coarse_centroids.select(
-            "cid", F.col("c").cast("array<double>").alias("c")
-        ),
-        q.select(F.col("qv")),
+    return _served_probe(
+        codes_df,
+        coarse_centroids,
+        query,
         2,
         "rq_ivf_topk_served",
-    )
-    if not probes:
-        return codes_df.where(F.lit(False)).select(
-            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
-        )
-    pruned = codes_df.where(F.col("cid").isin(probes))
-    return rq_topk(
-        pruned,
-        codebooks,
-        query,
-        dims=64,
-        k=k,
+        lambda lists: rq_topk(lists, codebooks, query, dims=64, k=k),
     )

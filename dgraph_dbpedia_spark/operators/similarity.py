@@ -50,16 +50,59 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
-def cosine_topk(
-    df: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k by cosine against a 1-row query frame (broadcast).
-    Deterministic tie-break on id. Returns ``(vec_id, sim)``.
+def _one_query(frame: DataFrame, caller: str):
+    """The ONE query contract of the single-query operators: read the
+    projection ``frame`` (its first column the query vector) in one
+    bounded job. Two rows are enough to tell 'one' from 'many', so a
+    corpus frame passed as the query never reaches the driver. A
+    multi-row frame raises (mixing every query into one unlabeled
+    top-k would be silent); an empty frame returns ``None`` (the caller
+    answers with :func:`_empty_topk`); a NULL or zero-length vector or a
+    NULL or non-finite component raises. Returns the row otherwise."""
+    rows = frame.limit(2).collect()
+    if len(rows) > 1:
+        raise ValueError(
+            f"{caller} expects exactly one query vector, got a multi-row "
+            "query frame — issue one call per query, or the batch (_many) "
+            "variant"
+        )
+    if not rows:
+        return None
+    vec = rows[0][0]
+    if vec is None:
+        got = "a NULL query vector"
+    elif len(vec) == 0:
+        got = "a zero-length query vector"
+    elif not all(x is not None and math.isfinite(x) for x in vec):
+        got = "a query vector with a NULL or non-finite component"
+    else:
+        return rows[0]
+    raise ValueError(f"{caller} expects one finite query vector, got {got}")
 
-    Fixed columns: id ``vec_id``, query vector ``q``."""
+
+def _empty_topk(df: DataFrame) -> DataFrame:
+    """The typed empty ``(vec_id, sim)`` answer of a single-query
+    operator whose query frame is empty or probes nothing."""
+    return df.where(F.lit(False)).select(
+        F.col("vec_id"), F.lit(None).cast("double").alias("sim")
+    )
+
+
+def cosine_topk(df: DataFrame, query: DataFrame, k: int = 10) -> DataFrame:
+    """Exact top-k by cosine against a 1-row query frame (broadcast).
+    Deterministic tie-break on id. Returns ``(vec_id, sim)``. The query
+    frame follows :func:`_one_query`'s contract.
+
+    Fixed columns: id ``vec_id``, query vector ``q``, vector
+    ``embedding``."""
+    if _one_query(query.select("q"), "cosine_topk") is None:
+        return _empty_topk(df)
+    return _cosine_topk(df, query, k, "embedding")
+
+
+def _cosine_topk(df: DataFrame, query: DataFrame, k: int, vec_col: str) -> DataFrame:
+    """:func:`cosine_topk`'s scoring plan over a query its caller has
+    already resolved (no read of its own)."""
     cand = df.select(F.col("vec_id"), F.col(vec_col).cast("array<double>").alias("e"))
     q = query.select(F.col("q").cast("array<double>").alias("q"))
     scored = cand.crossJoin(F.broadcast(q)).select(
@@ -241,9 +284,8 @@ def lsh_bucketed_topk(
     FILTER on the corpus sketch — no join, no second Python stage — and
     the query vector a literal array in the native scoring expression
     (repr round-trips doubles, so the sequential per-element float fold
-    is unchanged). A multi-row query frame raises, an empty one returns
-    an empty ``(vec_id, sim)`` frame, and a NULL query vector or a NULL
-    or non-finite component raises.
+    is unchanged). The query frame follows :func:`_one_query`'s
+    contract.
 
     Fixed columns: id ``vec_id``, query vector ``q``, vector
     ``embedding``."""
@@ -254,28 +296,10 @@ def lsh_bucketed_topk(
             F.col("embedding").cast("array<double>")
         ).alias("bucket"),
     )
-    # the _probe_single discipline: limit(2) bounds the collect before
-    # the one-row check, so a corpus frame passed as the query never
-    # reaches the driver
-    probe = query.select("q").limit(2).collect()
-    if len(probe) > 1:
-        raise ValueError(
-            "lsh_bucketed_topk expects exactly one query vector, got a "
-            "multi-row query frame — issue one call per query, or "
-            "lsh_bucketed_topk_many"
-        )
-    if not probe:
-        return df.where(F.lit(False)).select(
-            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
-        )
-    vec = probe[0][0]
-    # a NaN component would render as an unparseable ``nanD`` literal
-    if vec is None or not all(x is not None and math.isfinite(x) for x in vec):
-        raise ValueError(
-            "lsh_bucketed_topk: the query vector is NULL or has a NULL or "
-            "non-finite component"
-        )
-    q_vec = [float(x) for x in vec]
+    row = _one_query(query.select("q"), "lsh_bucketed_topk")
+    if row is None:
+        return _empty_topk(df)
+    q_vec = [float(x) for x in row[0]]
     buckets = probe_buckets(q_vec, n_planes, dims, n_probes)
     q_lit = F.expr("array(" + ",".join(repr(v) + "D" for v in q_vec) + ")")
     scored = cand.where(F.col("bucket").isin(buckets)).select(
@@ -825,13 +849,11 @@ def ivf_topk(
     assignment, query probes its ``n_probe`` nearest lists, exact cosine
     re-rank inside the probed lists only.
 
-    SINGLE corpus pass: the broadcast row carries the centroid array,
-    the query vector AND the query's probe list (top ``n_probe``
-    centroids by csim, computed once in the 1-row subtree), so
-    assignment, probe filtering, and the exact re-rank all fuse into one
-    projection + TakeOrdered over the scan. The only other corpus read
-    is the seed TakeOrdered inside the broadcast subtree (bounded
-    output, map-side top-n). No driver collect anywhere.
+    SINGLE corpus pass: the query vector and the centroids resolve
+    driver-side in two bounded reads, so assignment, probe filtering,
+    and the exact re-rank all fuse into one projection + TakeOrdered
+    over the scan. The only other corpus read is the seed TakeOrdered
+    behind the centroid read (bounded output, map-side top-n).
 
     The scale path vs brute force: the full scan is replaced by reading
     ~n_probe/n_centroids of the data; the inverted lists are an
@@ -850,8 +872,8 @@ def ivf_topk(
     (bounded, 1-row) query resolved driver-side — the probe list
     becomes a literal filter on the assigned cid and the query a
     literal array in the native re-rank expression, exactly the
-    :func:`lsh_bucketed_topk` pattern. A query that cannot be resolved
-    driver-side runs the all-native plan (:func:`_ivf_topk_native`).
+    :func:`lsh_bucketed_topk` pattern. The query frame follows
+    :func:`_one_query`'s contract.
 
     Fixed columns: id ``vec_id``, query vector ``q``, vector
     ``embedding``."""
@@ -862,31 +884,14 @@ def ivf_topk(
         centroids = centroids.select(
             "cid", F.col("c").cast("array<double>").alias("c")
         )
-    # the query resolves driver-side, which only makes sense for ONE
-    # well-formed finite vector: anything else (empty/multi-row frame,
-    # NULL vector, NULL/NaN/inf component — 'nanD' would not even parse
-    # as a literal) falls back to the native plan instead of a
-    # data-dependent driver raise
-    q_rows = query.select("q").limit(2).collect()
-    q_vec = None
-    if len(q_rows) == 1 and q_rows[0][0] is not None:
-        vec = [None if x is None else float(x) for x in q_rows[0][0]]
-        # len > 0: all() over an EMPTY vector is vacuously true, but
-        # the native plan scores an empty query as -2.0 vs every
-        # centroid (probes non-empty, sims NULL) — only the fallback
-        # reproduces that
-        if len(vec) > 0 and all(
-            v is not None and math.isfinite(v) for v in vec
-        ):
-            q_vec = vec
-    if q_vec is None:
-        return _ivf_topk_native(e, centroids, query, k, n_probe)
+    row = _one_query(query.select("q"), "ivf_topk")
+    if row is None:
+        return _empty_topk(e)
+    q_vec = [float(x) for x in row[0]]
     cids, cmat, cid_type = _collect_centroids(centroids)
     probes = _probe_cids_py(q_vec, cids, cmat, n_probe)
     if not probes:
-        return e.where(F.lit(False)).select(
-            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
-        )
+        return _empty_topk(e)
     q_lit = F.expr("array(" + ",".join(repr(v) + "D" for v in q_vec) + ")")
     st = nearest_centroid_arrow(cids, cmat, cid_type)(F.col("e"))
     scored = (
@@ -907,11 +912,11 @@ def _ivf_topk_native(
     k: int,
     n_probe: int,
 ) -> DataFrame:
-    """All-native :func:`ivf_topk` plan over the cast ``(vec_id, e)`` frame
-    and ``(cid, c)`` centroids — the fallback for a query the driver
-    cannot resolve to one finite vector: the centroid array, the query
-    and its probe list ride ONE broadcast row, so assignment, probe
-    filtering and the exact re-rank fuse into one projection.
+    """All-native reference twin of :func:`ivf_topk` over the cast
+    ``(vec_id, e)`` frame and ``(cid, c)`` centroids, kept for the test
+    that pins the production plan against it: the centroid array, the
+    query and its probe list ride ONE broadcast row, so assignment,
+    probe filtering and the exact re-rank fuse into one projection.
 
     Fixed columns: id ``vec_id``, query vector ``q``."""
     q = query.select(F.col("q").cast("array<double>").alias("q"))
@@ -1039,38 +1044,41 @@ def _lloyd_refine(
     return cent
 
 
-def _probe_single(
-    centroids: DataFrame, qv: DataFrame, n_probe: int, caller: str
-) -> list:
-    """Bounded single-query probe selection shared by the serve paths
-    (:func:`ivf_topk_served`, :func:`quantized_ivf_topk_served`): ONE
-    query row's ``n_probe`` nearest cids from the broadcast centroid
-    fold. ``qv`` must carry one double-typed vector column named
-    ``qv``. The ``limit(2)`` bounds the collect BEFORE the one-row
-    validation — a corpus frame passed as the query must never reach
-    the driver before the guard fires (two rows are enough to
-    distinguish 'one' from 'many'). Raises on a multi-row frame;
-    returns ``[]`` for an empty frame or empty centroid set."""
-    probe_rows = (
-        _centroid_row(centroids)
-        .crossJoin(qv)
-        .select(
-            F.transform(
-                F.slice(_nearest_sorted(F.col("qv"), _norm("qv")), 1, n_probe),
-                lambda s: s["cid"],
-            ).alias("_probes")
-        )
-        .limit(2)
-        .collect()
+def _served_probe(
+    index: DataFrame,
+    centroids: DataFrame,
+    query: DataFrame,
+    n_probe: int,
+    caller: str,
+    rerank,
+) -> DataFrame:
+    """The ONE probe-and-prune stage of the served single-query paths
+    (:func:`ivf_topk_served`, :func:`quantized_ivf_topk_served`,
+    ``pq.pq_ivf_topk_served``, ``rq.rq_ivf_topk_served``): score the
+    query against the broadcast fold of the bounded ``(cid, c)``
+    centroids and read its ``n_probe`` nearest cids — with the query
+    vector itself, validated by :func:`_one_query`, in the same bounded
+    job (n_probe ints and one vector, never list data). An empty query
+    frame or centroid set answers :func:`_empty_topk` over ``index``;
+    otherwise ``rerank`` scores the lists a literal ``cid IN (...)``
+    predicate keeps, which against a cid-partitioned/bucketed layout is
+    a partition/bucket PRUNE at the scan."""
+    qv = query.select(F.col("q").cast("array<double>").alias("qv"))
+    probes = F.transform(
+        F.slice(_nearest_sorted(F.col("qv"), _norm("qv")), 1, n_probe),
+        lambda s: s["cid"],
     )
-    if len(probe_rows) > 1:
-        raise ValueError(
-            f"{caller} expects exactly one query vector, got a multi-row "
-            "query frame — batch probing needs one call per query (each "
-            "probes a different set of list partitions), or the _many "
-            "variant"
+    row = _one_query(
+        _centroid_row(
+            centroids.select("cid", F.col("c").cast("array<double>").alias("c"))
         )
-    return list(probe_rows[0]["_probes"]) if probe_rows else []
+        .crossJoin(qv)
+        .select("qv", probes.alias("_probes")),
+        caller,
+    )
+    if row is None or not row["_probes"]:
+        return _empty_topk(index)
+    return rerank(index.where(F.col("cid").isin(list(row["_probes"]))))
 
 
 def ivf_topk_served(
@@ -1084,40 +1092,28 @@ def ivf_topk_served(
     is :func:`ivf_assign` output ``(id, vec, cid)`` written out once —
     partitioned or bucketed by ``cid`` (``bucketBy`` + ``saveAsTable``) —
     and ``centroids`` is the bounded ``(cid, c)`` frame it was built
-    with. Per query: score the query against the centroid fold, collect
-    the ``n_probe`` probe cids (a BOUNDED driver read — n_probe ints
-    from one row, the X6 pattern, NOT a data collect), and filter the
-    lists with a literal ``cid IN (...)`` predicate. The literal is the
-    point: against a cid-partitioned/bucketed layout it becomes a
-    partition/bucket PRUNE at the scan, so a probe reads ~n_probe /
-    n_centroids of the index instead of scanning the corpus — the
-    difference between :func:`ivf_topk` (one full pass per query, right
-    for one-shot jobs) and an index you probe many times.
-
-    Empty centroid frame -> empty result (no crash), matching
-    :func:`ivf_assign`'s NULL-cid contract. The query frame must hold
-    exactly ONE vector (the X6 bounded-collect contract); a multi-row
-    frame raises rather than silently mixing every query's similarities
-    into one unlabeled top-k.
+    with. Per query: :func:`_served_probe` reads the ``n_probe`` probe
+    cids (a BOUNDED driver read — n_probe ints from one row, the X6
+    pattern, NOT a data collect) and prunes the lists with a literal
+    ``cid IN (...)`` predicate, so a probe reads ~n_probe / n_centroids
+    of the index instead of scanning the corpus — the difference
+    between :func:`ivf_topk` (one full pass per query, right for
+    one-shot jobs) and an index you probe many times. Empty centroid
+    frame -> empty result (no crash), matching :func:`ivf_assign`'s
+    NULL-cid contract.
 
     Fixed columns: id ``vec_id``, query vector ``q``, vector ``e``."""
-    q = query.select(F.col("q").cast("array<double>").alias("q"))
-    probes = _probe_single(
-        centroids,
-        q.select(F.col("q").alias("qv")),
-        n_probe,
-        "ivf_topk_served",
-    )
-    if not probes:
-        return assigned.where(F.lit(False)).select(
-            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
+
+    def rerank(lists: DataFrame) -> DataFrame:
+        q = query.select(F.col("q").cast("array<double>").alias("q"))
+        scored = lists.crossJoin(F.broadcast(q)).select(
+            F.col("vec_id"), F.round(cosine("e", "q"), 4).alias("sim")
         )
-    scored = (
-        assigned.where(F.col("cid").isin(probes))
-        .crossJoin(F.broadcast(q))
-        .select(F.col("vec_id"), F.round(cosine("e", "q"), 4).alias("sim"))
+        return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
+
+    return _served_probe(
+        assigned, centroids, query, n_probe, "ivf_topk_served", rerank
     )
-    return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
 
 
 def _probe_many(
@@ -1513,10 +1509,13 @@ def quantized_cosine_topk(df: DataFrame, query: DataFrame, k: int = 10) -> DataF
     single-scan TakeOrdered as :func:`cosine_topk` — one broadcast row
     carrying (scales, quantized query) and zero shuffles of the corpus.
     For repeated serving, materialize :func:`quantize_embeddings` once
-    and probe that (compose with the IVF serve path).
+    and probe that (compose with the IVF serve path). The query frame
+    follows :func:`_one_query`'s contract.
 
     Fixed columns: id ``vec_id``, query vector ``q``, vector
     ``embedding``."""
+    if _one_query(query.select("q"), "quantized_cosine_topk") is None:
+        return _empty_topk(df)
     scales = quantization_scales(df, "embedding")
     # query norm computed ONCE in the broadcast 1-row frame — inside
     # the per-row projection it would fold the query vector again for
@@ -1575,9 +1574,9 @@ def quantized_ivf_topk_served(
     was quantized with (:func:`quantization_scales` — the query is
     quantized with the SAME scales, the clamped foreign-scales case).
 
-    Per query: probe cids from the broadcast centroid fold (a BOUNDED
-    driver read, n_probe ints — the X6 pattern), then ONE literal
-    ``cid IN (...)`` predicate that partition-prunes the int8 lists at
+    Per query: :func:`_served_probe` reads the probe cids (a BOUNDED
+    driver read, n_probe ints — the X6 pattern) and ONE literal
+    ``cid IN (...)`` predicate partition-prunes the int8 lists at
     the scan, then the integer-dot cosine re-rank inside the probed
     lists only. vs :func:`ivf_topk_served` the probe reads ~8x fewer
     bytes (measured in BENCH_SCALE.md r10); ``sim`` is the QUANTIZED
@@ -1586,40 +1585,34 @@ def quantized_ivf_topk_served(
 
     Fixed columns: id ``vec_id``, query vector ``q``, query vector
     ``qe``."""
-    q = query.select(F.col("q").cast("array<double>").alias("qv"))
-    probes = _probe_single(
-        centroids.select("cid", F.col("c").cast("array<double>").alias("c")),
-        q,
-        n_probe,
-        "quantized_ivf_topk_served",
-    )
-    if not probes:
-        return quantized.where(F.lit(False)).select(
-            F.col("vec_id"), F.lit(None).cast("double").alias("sim")
+
+    def rerank(lists: DataFrame) -> DataFrame:
+        # quantize the query with the CORPUS scales (one broadcast 1-row
+        # frame carrying qq + its integer norm, computed once — the
+        # quantized_cosine_topk pattern)
+        qq = (
+            query.select(F.col("q").cast("array<double>").alias("qv"))
+            .crossJoin(F.broadcast(scales))
+            .select(F.zip_with("qv", "scales", _q8).alias("qq"))
+            .select(F.col("qq"), F.sqrt(_int_dot("qq", "qq")).alias("qnorm"))
         )
-    # quantize the query with the CORPUS scales (one broadcast 1-row
-    # frame carrying qq + its integer norm, computed once — the
-    # quantized_cosine_topk pattern)
-    qq = (
-        q.crossJoin(F.broadcast(scales))
-        .select(F.zip_with("qv", "scales", _q8).alias("qq"))
-        .select(F.col("qq"), F.sqrt(_int_dot("qq", "qq")).alias("qnorm"))
+        sim = F.round(
+            F.try_divide(
+                _int_dot("qe", "qq"),
+                F.sqrt(_int_dot("qe", "qe")) * F.col("qnorm"),
+            ),
+            4,
+        )
+        # ``lists`` is the literal-IN pruned int8 scan (plan-asserted
+        # by pytest)
+        scored = lists.crossJoin(F.broadcast(qq)).select(
+            F.col("vec_id"), sim.alias("sim")
+        )
+        return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
+
+    return _served_probe(
+        quantized, centroids, query, n_probe, "quantized_ivf_topk_served", rerank
     )
-    sim = F.round(
-        F.try_divide(
-            _int_dot("qe", "qq"),
-            F.sqrt(_int_dot("qe", "qe")) * F.col("qnorm"),
-        ),
-        4,
-    )
-    scored = (
-        # literal IN: partition/bucket PRUNE at the int8 scan
-        # (plan-asserted by pytest)
-        quantized.where(F.col("cid").isin(probes))
-        .crossJoin(F.broadcast(qq))
-        .select(F.col("vec_id"), sim.alias("sim"))
-    )
-    return scored.orderBy(F.col("sim").desc(), F.col("vec_id")).limit(k)
 
 
 def cosine_near_dup_pairs(
@@ -2423,7 +2416,8 @@ def jl_topk(
     Returns ``(id, sim)`` where ``sim`` is the PROJECTED-space cosine:
     an unbiased-angle shortlist scorer, not the exact similarity — a
     deployment re-ranks the shortlist against the float vectors
-    (:func:`pq.pq_rerank_topk`'s two-stage contract).
+    (:func:`pq.pq_rerank_topk`'s two-stage contract). The query frame
+    follows :func:`_one_query`'s contract.
 
     100 TB shape: the corpus-sized work is one narrow projection +
     the ``out_dims``-wide scoring scan — ``dims / out_dims`` fewer
@@ -2432,42 +2426,21 @@ def jl_topk(
 
     Fixed columns: id ``vec_id``, query vector ``q``, vector
     ``embedding``."""
-    # bounded one-row probe, collected ONCE and reused (the mmr_rerank
-    # pattern — ADVICE r12): a multi-row query frame would cross-join
-    # every corpus row against EVERY query and the single ORDER BY/
-    # LIMIT would mix sims across queries; a 0-row or NULL-vector
-    # query answers nothing and now raises instead of silently
-    # returning an empty result. The probe is the ONE eager job this
-    # composition runs — qproj below is built from the collected
-    # vector, not a second scan of the query frame.
-    qrows = query.select(F.col("q").alias("__qv")).limit(2).collect()
-    if (
-        len(qrows) != 1
-        or qrows[0][0] is None
-        or any(x is None for x in qrows[0][0])
-    ):
-        got = (
-            "a multi-row query frame"
-            if len(qrows) > 1
-            else "an empty query frame"
-            if not qrows
-            else "a NULL query vector"
-            if qrows[0][0] is None
-            else "a query vector with NULL elements"
-        )
-        raise ValueError(
-            f"jl_topk expects exactly one query vector, got {got} "
-            "— one call per query"
-        )
+    # the query row is read ONCE (:func:`_one_query`) and reused: qproj
+    # below is built from the collected vector, not a second scan of
+    # the query frame
+    row = _one_query(query.select(F.col("q").alias("__qv")), "jl_topk")
+    if row is None:
+        return _empty_topk(df)
     proj = jl_project(df, out_dims, dims, id_col="vec_id", vec_col="embedding")
     qdf = df.sparkSession.createDataFrame(
-        [(0, [float(x) for x in qrows[0][0]])],
+        [(0, [float(x) for x in row[0]])],
         schema="__qid bigint, __qv array<double>",
     )
     qproj = jl_project(
         qdf, out_dims, dims, id_col="__qid", vec_col="__qv"
     ).select(F.col("e").alias("q"))
-    return cosine_topk(proj, qproj, k=k, vec_col="e")
+    return _cosine_topk(proj, qproj, k, "e")
 
 
 def jl_rerank_topk(
@@ -2495,12 +2468,14 @@ def jl_rerank_topk(
 
     Fixed columns: id ``vec_id``, query vector ``q``, vector
     ``embedding``."""
+    from dgraph_dbpedia_spark.operators.pq import (
+        _exact_rerank,
+        _validate_shortlist,
+    )
+
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if shortlist_n < k:
-        raise ValueError(
-            f"shortlist_n ({shortlist_n}) must be >= k ({k})"
-        )
+    _validate_shortlist(shortlist_n, k)
     shortlist = jl_topk(
         df,
         query,
@@ -2508,8 +2483,6 @@ def jl_rerank_topk(
         out_dims=out_dims,
         dims=dims,
     )
-    from dgraph_dbpedia_spark.operators.pq import _exact_rerank
-
     return _exact_rerank(shortlist, df, query, k)
 
 

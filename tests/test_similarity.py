@@ -838,7 +838,7 @@ def test_ivf_assign_arrow_empty_and_null_contracts(spark, vectors):
 
 
 def _ivf_topk_native_plan(vectors, q, k, n_centroids, n_probe):
-    """ivf_topk's all-native fallback plan over the seed centroids."""
+    """ivf_topk's all-native reference twin over the seed centroids."""
     from dgraph_dbpedia_spark.operators.similarity import (
         _ivf_topk_native,
         ivf_seed_centroids,
@@ -1263,31 +1263,6 @@ def test_ivf_assign_arrow_tolerates_ragged_vectors(spark):
         for vid, nrm in ((2, 1.0), (3, (1 + 9) ** 0.5), (4, 0.0)):
             assert got[vid]["cid"] == 10 and got[vid]["sim"] == -2.0
             assert abs(got[vid]["nv"] - nrm) < 1e-12
-
-
-def test_ivf_topk_arrow_falls_back_on_degenerate_query(spark, vectors):
-    """ivf_topk resolves the query driver-side, so a NULL vector or a
-    multi-row query frame must FALL BACK to the native plan (identical
-    results to _ivf_topk_native called directly), never raise."""
-    from dgraph_dbpedia_spark.operators.similarity import ivf_topk
-
-    null_q = spark.createDataFrame([(None,)], "q array<double>")
-    empty_vec_q = spark.createDataFrame([([],)], "q array<double>")
-    for q in (
-        null_q,
-        empty_vec_q,  # all() over [] is vacuously true — guarded
-        vectors.limit(0).select(F.col("embedding").alias("q")),  # empty
-        vectors.orderBy("vec_id").limit(2).select(
-            F.col("embedding").alias("q")
-        ),  # multi-row
-    ):
-        nat = _ivf_topk_native_plan(
-            vectors, q, k=3, n_centroids=2, n_probe=1
-        ).collect()
-        arr = ivf_topk(vectors, q, k=3, n_centroids=2, n_probe=1).collect()
-        assert [(r["vec_id"], r["sim"]) for r in nat] == [
-            (r["vec_id"], r["sim"]) for r in arr
-        ]
 
 
 def test_normalize_embeddings_truncation_and_norms(spark):
@@ -1745,16 +1720,12 @@ def test_jl_topk_rejects_multi_row_query(spark):
     two_q = spark.createDataFrame(
         [([1.0, 0.0],), ([0.0, 1.0],)], "q array<double>"
     )
-    # r13 (ADVICE r12): empty and NULL-vector query frames raise like
-    # multi-row ones — previously an empty frame silently returned an
-    # empty result
-    empty_q = two_q.limit(0)
+    # a NULL-vector query frame raises like a multi-row one (the empty
+    # frame's typed empty answer is test_single_query_contract's)
     null_q = spark.createDataFrame([(None,)], "q array<double>")
     for fn in (jl_topk, jl_rerank_topk):
         with _pytest.raises(ValueError, match="exactly one query"):
             fn(df, two_q, k=1, out_dims=2, dims=2)
-        with _pytest.raises(ValueError, match="empty query frame"):
-            fn(df, empty_q, k=1, out_dims=2, dims=2)
         with _pytest.raises(ValueError, match="NULL query vector"):
             fn(df, null_q, k=1, out_dims=2, dims=2)
 
@@ -2225,3 +2196,179 @@ def test_ivf_list_skew_report_hand_numbers(spark):
     assert set(got) == {0, 1}
     assert got[0] == {"cid": 0, "n": 6, "share": 0.75, "load_factor": 1.5}
     assert got[1] == {"cid": 1, "n": 2, "share": 0.25, "load_factor": 0.5}
+
+
+@pytest.fixture(scope="module")
+def ann_index(spark, tmp_path_factory):
+    """A 64-d corpus and every index part the single-query ANN
+    operators read: seed centroids, the assigned and int8 lists, PQ and
+    RQ codebooks and codes (with their coarse cid), written once."""
+    from dgraph_dbpedia_spark.operators.pq import pq_encode, pq_train
+    from dgraph_dbpedia_spark.operators.rq import rq_encode, rq_train
+    from dgraph_dbpedia_spark.operators.similarity import (
+        ivf_assign,
+        ivf_seed_centroids,
+        quantization_scales,
+        quantize_embeddings,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = emb.where(F.col("vec_id") < 40).select("vec_id", "embedding")
+    e = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    root = str(tmp_path_factory.mktemp("ann_index"))
+    cent = ivf_seed_centroids(e, 4, vec_col="e")
+    asg = ivf_assign(e, cent).select("vec_id", "cid")
+    parts = {
+        "emb": emb,
+        "centroids": cent,
+        "assigned": ivf_assign(e, cent),
+        "scales": quantization_scales(e, vec_col="e"),
+        "pq_cb": pq_train(emb, dims=64, m=4, k_sub=4, n_iter=1),
+        "rq_cb": rq_train(emb, dims=64, k_sub=4, n_levels=2, n_iter=0),
+    }
+    for name in ("emb", "centroids", "assigned", "scales", "pq_cb", "rq_cb"):
+        parts[name].write.parquet(f"{root}/{name}")
+        parts[name] = spark.read.parquet(f"{root}/{name}")
+    derived = {
+        "quantized": quantize_embeddings(e, parts["scales"], vec_col="e"),
+        "pq_codes": pq_encode(parts["emb"], parts["pq_cb"], dims=64, m=4),
+        "rq_codes": rq_encode(parts["emb"], parts["rq_cb"], dims=64, n_levels=2),
+    }
+    for name, df in derived.items():
+        df.join(asg, "vec_id").write.parquet(f"{root}/{name}")
+        parts[name] = spark.read.parquet(f"{root}/{name}")
+    return parts
+
+
+def _ops():
+    from dgraph_dbpedia_spark.operators.fusion import mmr_rerank
+    from dgraph_dbpedia_spark.operators.pq import (
+        pq_ivf_rerank_topk_served,
+        pq_ivf_topk_served,
+        pq_rerank_topk,
+        pq_topk,
+    )
+    from dgraph_dbpedia_spark.operators.rq import (
+        rq_ivf_topk_served,
+        rq_rerank_topk,
+        rq_topk,
+    )
+    from dgraph_dbpedia_spark.operators.similarity import (
+        ivf_topk,
+        ivf_topk_served,
+        jl_rerank_topk,
+        jl_topk,
+        quantized_cosine_topk,
+        quantized_ivf_topk_served,
+    )
+
+    return {
+        "cosine_topk": lambda x, q: cosine_topk(x["emb"], q, k=3),
+        "quantized_cosine_topk": lambda x, q: quantized_cosine_topk(
+            x["emb"], q, k=3
+        ),
+        "lsh_bucketed_topk": lambda x, q: lsh_bucketed_topk(
+            x["emb"], q, k=3, n_planes=4, dims=64
+        ),
+        "ivf_topk": lambda x, q: ivf_topk(
+            x["emb"], q, k=3, n_centroids=4, n_probe=1
+        ),
+        "ivf_topk_served": lambda x, q: ivf_topk_served(
+            x["assigned"], x["centroids"], q, k=3
+        ),
+        "quantized_ivf_topk_served": lambda x, q: quantized_ivf_topk_served(
+            x["quantized"], x["centroids"], x["scales"], q, k=3
+        ),
+        "pq_topk": lambda x, q: pq_topk(x["pq_codes"], x["pq_cb"], q, dims=64, k=3),
+        "pq_rerank_topk": lambda x, q: pq_rerank_topk(
+            x["pq_codes"], x["pq_cb"], x["emb"], q, dims=64, k=3, shortlist_n=10
+        ),
+        "pq_ivf_topk_served": lambda x, q: pq_ivf_topk_served(
+            x["pq_codes"], x["pq_cb"], x["centroids"], q, k=3
+        ),
+        "pq_ivf_rerank_topk_served": lambda x, q: pq_ivf_rerank_topk_served(
+            x["pq_codes"], x["pq_cb"], x["centroids"], x["emb"], q, k=3,
+            shortlist_n=10,
+        ),
+        "rq_topk": lambda x, q: rq_topk(x["rq_codes"], x["rq_cb"], q, dims=64, k=3),
+        "rq_rerank_topk": lambda x, q: rq_rerank_topk(
+            x["rq_codes"], x["rq_cb"], x["emb"], q, dims=64, k=3, shortlist_n=10
+        ),
+        "rq_ivf_topk_served": lambda x, q: rq_ivf_topk_served(
+            x["rq_codes"], x["rq_cb"], x["centroids"], q, k=3
+        ),
+        "mmr_rerank": lambda x, q: mmr_rerank(x["emb"], q, k=3, shortlist_n=10),
+        "jl_topk": lambda x, q: jl_topk(x["emb"], q, k=3, out_dims=16, dims=64),
+        "jl_rerank_topk": lambda x, q: jl_rerank_topk(
+            x["emb"], q, k=3, shortlist_n=10, out_dims=16, dims=64
+        ),
+    }
+
+
+# a two-stage operator's query is read by its first stage
+_READER = {
+    "pq_rerank_topk": "pq_topk",
+    "pq_ivf_rerank_topk_served": "pq_ivf_topk_served",
+    "rq_rerank_topk": "rq_topk",
+    "jl_rerank_topk": "jl_topk",
+}
+_UNIT = [1.0] + [0.0] * 63
+_DEGENERATE = {
+    "empty": [],
+    "two_rows": [(_UNIT,), ([0.0, 1.0] + [0.0] * 62,)],
+    "null_vector": [(None,)],
+    "null_component": [([1.0, None] + [0.0] * 62,)],
+    "nan": [([1.0, float("nan")] + [0.0] * 62,)],
+    "inf": [([float("inf")] + [0.0] * 63,)],
+    "zero_length": [([],)],
+}
+
+
+@pytest.mark.parametrize("case", list(_DEGENERATE))
+@pytest.mark.parametrize("op", list(_ops()))
+def test_single_query_contract(spark, ann_index, op, case):
+    """Every single-query operator reads its query frame through the one
+    reader (``similarity._one_query``): an empty frame gives a typed
+    empty result; two rows, a NULL or zero-length vector and a NULL or
+    non-finite component raise a ``ValueError`` naming the operator
+    that read the query."""
+    query = spark.createDataFrame(_DEGENERATE[case], "q array<double>")
+    run = _ops()[op]
+    if case != "empty":
+        with pytest.raises(ValueError, match=_READER.get(op, op)):
+            run(ann_index, query)
+        return
+    out = run(ann_index, query)
+    assert out.collect() == []
+    if op == "mmr_rerank":
+        assert out.columns == ["rank", "vec_id", "rel", "mmr"]
+    else:
+        assert out.dtypes == [("vec_id", "bigint"), ("sim", "double")]
+
+
+def test_only_the_query_reader_collects_a_query_frame():
+    """Spark-free guard: the bounded ``.limit(2).collect()`` query read
+    appears once in the engine and the registry — inside
+    ``similarity._one_query``."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    reader = root / "dgraph_dbpedia_spark" / "operators" / "similarity.py"
+    sources = [*(root / "dgraph_dbpedia_spark").rglob("*.py"), root / "__spark_entry__.py"]
+    bounded_read = re.compile(r"\.limit\(\s*2\s*\)\s*\.collect\(")
+    found = []
+    for path in sorted(sources):
+        text = path.read_text()
+        for m in bounded_read.finditer(text):
+            found.append((path, text.count("\n", 0, m.start()) + 1))
+    body = next(
+        node
+        for node in ast.parse(reader.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "_one_query"
+    )
+    assert len(found) == 1, [f"{p.relative_to(root)}:{n}" for p, n in found]
+    path, line = found[0]
+    assert path == reader and body.lineno <= line <= body.end_lineno
+

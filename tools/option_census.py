@@ -64,6 +64,7 @@ TWINS = {
     f"{PACKAGE}.operators.pq._pq_encode_native": "operators.pq.pq_encode",
     f"{PACKAGE}.operators.rq._rq_encode_native": "operators.rq.rq_encode",
     f"{PACKAGE}.operators.similarity.hyperplane_signs": "operators.similarity.hyperplane_signs_arrow",
+    f"{PACKAGE}.operators.similarity._ivf_topk_native": "operators.similarity.ivf_topk",
     f"{PACKAGE}.operators.dedup._signatures_from_hashed": "operators.dedup._minhash_lanes_arrow",
     f"{PACKAGE}.operators.dedup._simhash_fold_native": "operators.dedup._simhash_fold_arrow",
     f"{PACKAGE}.plans.transform.top_k_infobox": "plans.transform.infobox_dims",
